@@ -17,9 +17,9 @@ case class Payment(currency: String, amountCents: Long, timestamp: Long)
 
 object ExchangeRates {
   /** The five static rates from the reference's in-memory dimension table
-    * (CurrencyExchangeRepo.java:12-20). A 5-row dim: always broadcast-joined,
-    * never shuffled (SURVEY.md §4.2) — at 100 TB of facts this is the
-    * difference between a map-side join and a full shuffle of the fact table.
+    * (CurrencyExchangeRepo.java:12-20). A 5-row dim: compiled into an
+    * in-expression lookup ([[graft.ops.PaymentOps.rateLookup]]), so the
+    * fact side is never shuffled and never joined.
     */
   val rates: Seq[(String, java.math.BigDecimal)] = Seq(
     "GBP" -> new java.math.BigDecimal("1.00"),

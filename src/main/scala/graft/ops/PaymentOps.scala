@@ -30,6 +30,9 @@ object PaymentOps {
     StructField("ts", LongType)
   ))
 
+  /** Type of a looked-up rate, as [[ExchangeRates.ratesDF]] declares it. */
+  private val RateType = DecimalType(18, 6)
+
   /** Deterministically derive a payments feed from the `orders` table so the
     * batch pipeline has a reproducible input the DuckDB oracle can rebuild:
     * currency by orderkey mod 5, amount = totalprice in cents, plus a
@@ -68,45 +71,66 @@ object PaymentOps {
   }
 
   /** F1 — JSON decode with malformed-drop (PaymentsService.java:52-56).
-    * PERMISSIVE `from_json` yields null struct on malformed input; the
-    * filter reproduces the reference's print-and-drop (we drop silently —
-    * the count of drops is observable as input minus output rows).
+    * Output `(k, currency, amount, ts)`. Each record is parsed exactly
+    * once: `from_json` feeds an `inline` generator, and Catalyst does not
+    * push a filter on generator output below the `Generate`, so the
+    * `currency IS NOT NULL` filter cannot grow a second parse of its own.
+    * PERMISSIVE `from_json` turns null and malformed input into an
+    * all-null row, which that filter drops — the reference's
+    * print-and-drop, silently (drops = input rows − output rows).
     */
   def jsonDecode(jsonDF: DataFrame): DataFrame =
-    // Filter on the EXTRACTED currency field only (round 15, guide §4.4
-    // duplication): the previous `p IS NOT NULL AND p.currency IS NOT
-    // NULL` filter pushed below the projection as TWO independent
-    // from_json evaluations (each re-deriving the full input
-    // expression), plus the projection's own — 3+ parses per row.
-    // Row-equivalence: from_json under PERMISSIVE yields an all-null
-    // struct for malformed input and null only for null input, so
-    // `currency IS NOT NULL` accepts exactly the same rows (a null
-    // struct extracts a null field). The pushed filter's parse is
-    // schema-pruned to the one field by OptimizeJsonExprs; survivors
-    // pay one full parse in the projection — 2 total.
     jsonDF
-      .withColumn("p", from_json(col("value"), paymentSchema))
-      .select(col("k"), col("p.currency").as("currency"),
-        col("p.amount").as("amount"), col("p.ts").as("ts"))
+      .select(col("k"), inline(array(from_json(col("value"), paymentSchema))))
       .filter(col("currency").isNotNull)
 
-  /** F2 — currency conversion via broadcast lookup join
-    * (PaymentsService.java:100-103; rates CurrencyExchangeRepo.java:15-19).
-    * The 5-row dimension is broadcast: the fact side never shuffles —
-    * mandatory at 100 TB (a shuffle join on the fact table here is the
-    * canonical scale-killer). Exact decimal multiply ≙ BigDecimal.multiply.
+  /** The static rates dimension (CurrencyExchangeRepo.java:15-24's
+    * HashMap), collected on the driver and turned into a codegen'd
+    * `CASE currency WHEN c THEN CAST(rate AS DECIMAL(18,6)) ... END` over
+    * the `currency` column. Unknown and null currencies get a null rate.
+    * Build it once per dimension and reuse it across frames.
+    * Fails loudly on a null currency or rate, and on a duplicated
+    * currency, which a join would have turned into duplicated payments.
+    */
+  def rateLookup(rates: DataFrame): Column = {
+    val entries = rates.select(col("currency"), col("rate").cast(RateType)).collect()
+      .map(r => (r.getString(0), r.getDecimal(1))).toSeq
+    require(entries.forall { case (c, r) => c != null && r != null },
+      "rates: a currency or rate is null")
+    val dups = entries.groupBy(_._1).collect { case (c, es) if es.size > 1 => c }.toSeq.sorted
+    require(dups.isEmpty,
+      s"rates: duplicated currency ${dups.mkString(", ")}; the lookup needs one rate per currency")
+    entries.map { case (c, r) => (col("currency") === c, lit(r).cast(RateType)) } match {
+      case Seq() => lit(null).cast(RateType)
+      case (hit, v) +: rest => rest.foldLeft(when(hit, v)) { case (acc, (h, x)) => acc.when(h, x) }
+    }
+  }
+
+  /** Adds the looked-up `rate` and drops payments without one: the
+    * semantics of an inner join against the dimension. */
+  private def withRate(payments: DataFrame, rate: Column): DataFrame =
+    payments.withColumn("rate", rate).filter(col("rate").isNotNull)
+
+  /** F2 — currency conversion (PaymentsService.java:100-103) through
+    * [[rateLookup]]: adds `rate` and `converted` (cents, exact decimal
+    * multiply rounded half-up ≙ BigDecimal.multiply) and drops payments
+    * whose currency has no rate. The dimension is collected once per
+    * call; no join, no exchange, the fact side is never shuffled.
     */
   def convert(payments: DataFrame, rates: DataFrame): DataFrame =
-    payments
-      .join(broadcast(rates), "currency")
-      .withColumn("converted",
-        round(col("amount") * col("rate"), 0).cast("long"))
+    convert(payments, rateLookup(rates))
+
+  /** [[convert]] with a prebuilt [[rateLookup]], for callers that apply
+    * one dimension to many frames (the streaming fan-out's batches). */
+  def convert(payments: DataFrame, rate: Column): DataFrame =
+    withRate(payments, rate)
+      .withColumn("converted", round(col("amount") * col("rate"), 0).cast("long"))
 
   /** F2 alternative — the reference's literal semantics: a per-record
     * HashMap lookup (CurrencyExchangeRepo.java:22-24) as a typed Dataset
-    * map over a broadcast variable. Same results as the join form
-    * ([[convert]] — which stays the default: Catalyst SEES a join and can
-    * optimize around it, while a closure is opaque). This is the template
+    * map over a broadcast variable. Same results as [[convert]], which
+    * stays the default: Catalyst sees its CASE lookup and codegens it,
+    * while a closure is opaque. This is the template
     * for genuinely imperative per-row enrichment (model inference, codec
     * calls) where no relational form exists.
     */
@@ -122,7 +146,7 @@ object PaymentOps {
         it.flatMap { case (k, currency, amount, ts) =>
           m.get(currency).map { rate =>
             // BigDecimal multiply + HALF_UP ≙ exact decimal round, matching
-            // the join form's round(amount * rate, 0)
+            // convert's round(amount * rate, 0)
             val conv = new java.math.BigDecimal(amount).multiply(rate)
               .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
             (k, currency, amount, ts, conv)
@@ -147,8 +171,7 @@ object PaymentOps {
     * LOUDLY under ANSI mode rather than drifting.
     */
   def convertDecimal(payments: DataFrame, rates: DataFrame): DataFrame =
-    payments
-      .join(broadcast(rates), "currency")
+    withRate(payments, rateLookup(rates))
       .withColumn("converted_dec",
         (col("amount").cast(DecimalType(12, 0)) * col("rate"))
           .cast(DecimalType(38, 6)))
@@ -165,15 +188,22 @@ object PaymentOps {
     * (no spaces), fields in struct order.
     */
   def jsonEncode(converted: DataFrame): DataFrame =
-    converted.select(
-      col("currency").as("key"),
-      to_json(struct(col("currency"), col("converted").as("amount"),
-        col("ts"))).as("value"))
+    converted.select(encoded: _*)
+
+  /** F4 plus F3's flag: `(key, value, is_suspicious)`, the one frame the
+    * streaming fan-out caches and both of its sinks read. */
+  def jsonEncodeRouted(converted: DataFrame): DataFrame =
+    converted.select(encoded :+ suspicious.as("is_suspicious"): _*)
+
+  private def encoded: Seq[Column] = Seq(
+    col("currency").as("key"),
+    to_json(struct(col("currency"), col("converted").as("amount"),
+      col("ts"))).as("value"))
 
   /** The full batch pipeline: decode → convert → route. Returns the
     * converted stream with an `is_suspicious` flag rather than two separate
-    * outputs — the streaming fan-out (two Kafka sinks from one pass) lives
-    * in graft.streaming.PaymentsPipeline.
+    * outputs — the streaming fan-out (two Kafka sinks from one pass) is
+    * [[graft.streaming.StreamingOps.paymentsFanout]].
     */
   def pipeline(spark: SparkSession, orders: DataFrame): DataFrame = {
     val decoded = jsonDecode(syntheticPaymentsJson(orders))

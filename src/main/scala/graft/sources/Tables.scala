@@ -57,10 +57,19 @@ object Tables {
     * run). Parameterised for other deployments; at 100 TB the whole
     * gate is moot — every table's scan already yields more splits than
     * defaultParallelism, so [[parallelize]] is a no-op there with or
-    * without this floor. */
-  def parallelizeMinBytes: Long =
-    sys.env.get("SPARK_GRAFT_PARALLELIZE_MIN_BYTES").map(_.toLong)
-      .getOrElse(512L * 1024)
+    * without this floor. Read from `SPARK_GRAFT_PARALLELIZE_MIN_BYTES`
+    * once, on first use. */
+  lazy val parallelizeMinBytes: Long =
+    parseMinBytes(sys.env.get("SPARK_GRAFT_PARALLELIZE_MIN_BYTES"))
+
+  /** The byte floor from the raw setting: 512 KiB when unset, else a
+    * non-negative byte count; anything else fails naming the variable. */
+  def parseMinBytes(raw: Option[String]): Long = raw match {
+    case None => 512L * 1024
+    case Some(v) => v.trim.toLongOption.filter(_ >= 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_PARALLELIZE_MIN_BYTES must be a non-negative byte count, got '$v'"))
+  }
 
   /** The test tables are single small parquet files → single-partition
     * scans → every downstream hash/JSON/HOF stage runs on ONE core (a

@@ -32,7 +32,7 @@ object StreamingDemo {
     // O1 — declared topology, reference vocabulary
     val topo = TopologyBuilder.start("SparkStreaming", "payments-demo")
       .withTopic("payments").withDescription("synthetic payments").endNode()
-      .withNode("convert", NodeType.Select).withDescription("rates join").withParent("payments").endNode()
+      .withNode("convert", NodeType.Select).withDescription("rate lookup").withParent("payments").endNode()
       .withTopic("payments_xchg").withParent("convert").endNode()
       .withTopic("suspicious_payments").withParent("convert").endNode()
       .build()

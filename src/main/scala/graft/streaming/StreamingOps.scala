@@ -12,7 +12,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
   * Sources S1-S6 collapse to [[kafkaSource]] (the stock `kafka` format — the
   * reference's `lenses-kafka` fork only added metrics, which our
   * StreamingQueryListener supplies instead, SURVEY §4.3). Sinks K1-K5
-  * collapse to [[kafkaSink]]; K6 is `format("noop")`. The synthetic
+  * collapse to [[kafkaSink]]; K6 (SuspiciousPaymentsService.java:43-45's
+  * empty loop) is plain `format("noop")`. The synthetic
   * generators S7/S8 are deterministic rate-source maps.
   *
   * Transform stages are the SAME batch functions from graft.ops —
@@ -51,10 +52,6 @@ object StreamingOps {
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
       .outputMode(mode)
-
-  /** K6 — discard sink (SuspiciousPaymentsService.java:43-45's empty loop). */
-  def noopSink(df: DataFrame): DataStreamWriter[Row] =
-    df.writeStream.format("noop")
 
   /** S7 — deterministic payments generator over the rate source
     * (PaymentsSimulator.java:25-46: 5 currencies round-robin; amount made
@@ -275,20 +272,29 @@ object StreamingOps {
   /** F1-F4+K1/K2 — the payments pipeline as ONE foreachBatch fan-out
     * (SURVEY §4.4: the reference splits after decode+convert inside one
     * consumer loop, PaymentsService.java:50-59 — two independent queries
-    * would read the source twice). The batch is persisted, written to the
-    * main sink, filtered, written to the suspicious sink, unpersisted.
-    * Sinks are injected so tests (and Kafka/parquet prod paths) share the
-    * exact fan-out logic. At-least-once per sink, matching the reference.
+    * would read the source twice). The rates dimension is collected once,
+    * when the query is built, into [[PaymentOps.rateLookup]]; no batch
+    * runs a join or a broadcast. Each batch is decoded (one parse per
+    * record), converted and encoded, and only the encoded
+    * `(key, value, is_suspicious)` frame is persisted, so the source is
+    * scanned once per batch. The main sink gets `(key, value)` of every
+    * row, the suspicious sink `(key, value)` of the flagged ones; then the
+    * frame is unpersisted. Sinks are injected so tests (and Kafka/parquet
+    * prod paths) share the exact fan-out logic. At-least-once per sink,
+    * matching the reference.
     */
   def paymentsFanout(jsonStream: DataFrame, rates: DataFrame,
                      mainSink: (DataFrame, Long) => Unit,
-                     suspiciousSink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+                     suspiciousSink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
+    val rate = PaymentOps.rateLookup(rates)
     jsonStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val converted = PaymentOps.convert(PaymentOps.jsonDecode(batch), rates)
-      converted.persist()
+      val routed = PaymentOps.jsonEncodeRouted(
+        PaymentOps.convert(PaymentOps.jsonDecode(batch), rate))
+      routed.persist()
       try {
-        mainSink(PaymentOps.jsonEncode(converted), batchId)
-        suspiciousSink(PaymentOps.jsonEncode(converted.filter(PaymentOps.suspicious)), batchId)
-      } finally converted.unpersist()
+        mainSink(routed.select("key", "value"), batchId)
+        suspiciousSink(routed.filter(col("is_suspicious")).select("key", "value"), batchId)
+      } finally routed.unpersist()
     }
+  }
 }

@@ -2,7 +2,9 @@ package graft
 
 import graft.model.ExchangeRates
 import graft.ops.PaymentOps
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{broadcast, col, round}
+import org.apache.spark.sql.types.DecimalType
 import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Test.{check, Parameters}
 
@@ -73,5 +75,71 @@ class PaymentOpsSpec extends SparkSpec {
     }
     val result = check(Parameters.default.withMinSuccessfulTests(10), prop)
     assert(result.passed, result.status.toString)
+  }
+
+  /** The broadcast-join formulation of F2 that the CASE lookup replaced,
+    * kept here only as the oracle: `converted`, `converted_dec` and the
+    * suspicious flag of every payment whose currency joins the rates. */
+  private def joinOracle(payments: DataFrame, rates: DataFrame): DataFrame =
+    payments.join(broadcast(rates), "currency")
+      .withColumn("converted", round(col("amount") * col("rate"), 0).cast("long"))
+      .withColumn("converted_dec",
+        (col("amount").cast(DecimalType(12, 0)) * col("rate")).cast(DecimalType(38, 6)))
+
+  private def rows(df: DataFrame, cols: String*): Seq[Row] =
+    df.select(cols.map(col): _*).collect().toSeq.sortBy(_.getLong(0))
+
+  test("F2 rate lookup matches the broadcast-join oracle row for row (property)") {
+    // amounts on both sides of the 10,000.00 threshold in every currency
+    val boundary = ExchangeRates.rates.flatMap { case (_, r) =>
+      val at = new java.math.BigDecimal(1000000).divide(r, 0, java.math.RoundingMode.FLOOR).longValue
+      (at - 1) to (at + 2)
+    }
+    val amountGen: Gen[Option[Long]] = Gen.frequency(
+      1 -> Gen.const(None),
+      3 -> Gen.oneOf(boundary).map(Some(_)),
+      3 -> Gen.chooseNum(-999999999999L, 999999999999L).map(Some(_)))
+    val currencyGen: Gen[Option[String]] = Gen.frequency(
+      8 -> Gen.oneOf(ExchangeRates.currencies).map(Some(_)),
+      1 -> Gen.oneOf("XXX", "gbp", "").map(Some(_)),
+      1 -> Gen.const(None))
+    val payGen = Gen.zip(currencyGen, amountGen, Gen.chooseNum(0L, 1.7e12.toLong))
+    // the full dimension most of the time, else any subset of it (empty too)
+    val ratesGen = Gen.frequency(
+      3 -> Gen.const(ExchangeRates.rates),
+      1 -> Gen.someOf(ExchangeRates.rates).map(_.toSeq))
+    val prop = Prop.forAll(Gen.nonEmptyListOf(payGen), ratesGen) { (pays, dim) =>
+      val payments = pays.zipWithIndex
+        .map { case ((c, a, t), i) => (i.toLong, c, a, t) }
+        .toDF("k", "currency", "amount", "ts")
+      val rates = dim.toDF("currency", "rate")
+        .select(col("currency"), col("rate").cast(DecimalType(18, 6)).as("rate"))
+      val oracle = joinOracle(payments, rates).withColumn("s", PaymentOps.suspicious)
+      val conv = PaymentOps.convert(payments, rates).withColumn("s", PaymentOps.suspicious)
+      val base = Seq("k", "currency", "amount", "ts")
+      rows(conv, base ++ Seq("rate", "converted", "s"): _*) ==
+        rows(oracle, base ++ Seq("rate", "converted", "s"): _*) &&
+        rows(PaymentOps.convertDecimal(payments, rates), base :+ "converted_dec": _*) ==
+          rows(oracle, base :+ "converted_dec": _*)
+    }
+    val result = check(Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  test("F2 rate lookup rejects a duplicated currency, naming it") {
+    val payments = Seq((1L, "EUR", 100L, 0L)).toDF("k", "currency", "amount", "ts")
+    val rates = ExchangeRates.ratesDF(spark)
+      .union(Seq(("EUR", new java.math.BigDecimal("2.0"))).toDF("currency", "rate")
+        .select(col("currency"), col("rate").cast(DecimalType(18, 6))))
+    // the join would have emitted the EUR payment twice
+    assert(joinOracle(payments, rates).count() == 2)
+    for (f <- Seq[DataFrame => DataFrame](PaymentOps.convert(_, rates),
+                                          PaymentOps.convertDecimal(_, rates))) {
+      val e = intercept[IllegalArgumentException](f(payments))
+      assert(e.getMessage.contains("duplicated currency EUR"), e.getMessage)
+    }
+    // null entries are rejected too, rather than silently matching nothing
+    val nullRate = Seq(("GBP", None: Option[java.math.BigDecimal])).toDF("currency", "rate")
+    intercept[IllegalArgumentException](PaymentOps.convert(payments, nullRate))
   }
 }

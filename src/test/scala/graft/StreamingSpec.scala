@@ -1,16 +1,25 @@
 package graft
 
 import graft.model.ExchangeRates
+import graft.ops.PaymentOps
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, when}
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming semantics via MemoryStream (SURVEY.md §5.4): Update-mode
   * changelog word count mirroring spark/kafka/App.java:74-85, and the
   * foreachBatch payments fan-out mirroring PaymentsService.java:50-59.
   */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("A3 Update-mode word count emits per-trigger changelog deltas") {
@@ -81,5 +90,61 @@ class StreamingSpec extends SparkSpec {
     assert(p.isStreaming && p.columns.toSeq == Seq("currency", "amount", "ts"))
     val t = StreamingOps.textReplay(spark, Seq("line one", "line two"))
     assert(t.isStreaming && t.columns.toSeq == Seq("value"))
+  }
+
+  /** Every physical node of `p`, through AQE stages and into the plans
+    * that built the caches it scans. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] =
+    collect(p) { case n => n }.flatMap {
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case n => Seq(n)
+    }
+
+  private def joinsOrBroadcasts(p: SparkPlan): Seq[SparkPlan] =
+    nodes(p).filter(n => n.isInstanceOf[BaseJoinExec] || n.isInstanceOf[BroadcastExchangeLike])
+
+  test("payments plan shape: one JSON parse, no join or broadcast, one source read per batch") {
+    // a Range source, so the optimizer cannot fold the parse into local data
+    val json = spark.range(3).select(col("id").as("k"),
+      when(col("id") === 0, """{"currency":"GBP","amount":999999,"ts":1}""")
+        .when(col("id") === 1, "garbage").as("value"))
+    val decoded = PaymentOps.jsonDecode(json)
+    val parses = decoded.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+    assert(parses.size == 1, decoded.queryExecution.optimizedPlan.toString)
+    assert(decoded.select("k").as[Long].collect().toSeq == Seq(0L))
+
+    val conv = PaymentOps.convert(decoded, ExchangeRates.ratesDF(spark))
+    assert(conv.collect().length == 1)
+    assert(conv.queryExecution.optimizedPlan.collect { case j: Join => j }.isEmpty)
+    assert(joinsOrBroadcasts(conv.queryExecution.executedPlan).isEmpty,
+      conv.queryExecution.executedPlan.toString)
+
+    implicit val sq = spark.sqlContext
+    val input = MemoryStream[(Long, String)]
+    val sinkPlans = collection.mutable.ArrayBuffer.empty[SparkPlan]
+    def sink(df: DataFrame, id: Long): Unit = sinkPlans.synchronized {
+      df.collect()
+      sinkPlans += df.queryExecution.executedPlan
+    }
+    val query = StreamingOps.paymentsFanout(input.toDF().toDF("k", "value"),
+      ExchangeRates.ratesDF(spark), sink, sink).start()
+    val added = Seq(5, 3, 7)
+    try {
+      for ((n, b) <- added.zipWithIndex) {
+        input.addData((0 until n).map(i => (100L * b + i,
+          s"""{"currency":"${ExchangeRates.currencies(i % 5)}","amount":${i * 400000},"ts":$i}""")))
+        query.processAllAvailable()
+      }
+      val perBatch = query.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq
+      assert(perBatch == added.map(_.toLong), s"numInputRows per batch: $perBatch")
+    } finally query.stop()
+    assert(sinkPlans.size == 2 * added.size)
+    sinkPlans.foreach { p =>
+      assert(joinsOrBroadcasts(p).isEmpty, p.toString)
+      // both sinks read the one cached frame: the encoded output plus the flag
+      val cached = nodes(p).collect { case m: InMemoryTableScanExec => m.relation.output.map(_.name) }
+      assert(cached == Seq(Seq("key", "value", "is_suspicious")), p.toString)
+    }
   }
 }
