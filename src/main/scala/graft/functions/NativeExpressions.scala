@@ -1,10 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ConditionalExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** 60-bit md5 hash shared by the native expressions — EXACTLY
   * `conv(substr(md5(s),1,15),16,10)::long` (= [[Hashing.hash64]] /
@@ -525,6 +531,145 @@ object HashedTfVecKernel {
   }
 }
 
+/** Native payments decode:
+  * `payment_json(value: string, fallback: struct<currency, amount, ts>)`.
+  *
+  * `fallback` is `from_json(value, <wire schema>)`; this expression
+  * returns exactly what it would. A record in the canonical wire form
+  * `{"currency":"<c>","amount":<int>,"ts":<int>}` — `<c>` printable
+  * ASCII without `"` or `\`, `<int>` either `0` or
+  * `-?[1-9][0-9]{0,17}` (so it cannot overflow a long), no whitespace,
+  * nothing after the `}` — is decoded by [[PaymentJsonKernel]] in one
+  * scan, with no tokenizer. Every other input, null included, is handed
+  * to `fallback`, which is evaluated only then. So malformed records,
+  * partial results (`"amount":1.5` gives a null amount and keeps the
+  * row), reordered, extra or duplicate fields, escapes, `-0`, 19+ digit
+  * numbers and non-ASCII keep `from_json`'s PERMISSIVE semantics by
+  * construction.
+  *
+  * A [[ConditionalExpression]] whose only always-evaluated input is
+  * `value`, so subexpression elimination never hoists the fallback parse
+  * out of its branch.
+  */
+case class PaymentJson(value: Expression, fallback: Expression)
+  extends Expression with ConditionalExpression {
+  override def children: Seq[Expression] = Seq(value, fallback)
+  override def dataType: DataType = fallback.dataType
+  override def nullable: Boolean = true
+  override def prettyName: String = "payment_json"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (value.dataType == StringType && fallback.dataType == PaymentJsonKernel.wireType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"payment_json needs (string, ${PaymentJsonKernel.wireType.simpleString}), " +
+        s"got (${value.dataType.simpleString}, ${fallback.dataType.simpleString})")
+
+  override def alwaysEvaluatedInputs: Seq[Expression] = value :: Nil
+  override def withNewAlwaysEvaluatedInputs(inputs: Seq[Expression]): PaymentJson =
+    copy(value = inputs.head)
+  override def branchGroups: Seq[Seq[Expression]] = Nil
+
+  override def eval(input: InternalRow): Any = {
+    val s = value.eval(input)
+    val fast = if (s == null) null else PaymentJsonKernel.decode(s.asInstanceOf[UTF8String])
+    if (fast != null) fast else fallback.eval(input)
+  }
+
+  /** Typed static call into the kernel (see [[SimHash60]]); the
+    * fallback's code is emitted inside the miss branch only. */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = value.genCode(ctx)
+    val f = fallback.genCode(ctx)
+    ev.copy(code = code"""
+      |${v.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  ${v.isNull} ? null : graft.functions.PaymentJsonKernel.decode(${v.value});
+      |boolean ${ev.isNull} = false;
+      |if (${ev.value} == null) {
+      |  ${f.code}
+      |  ${ev.isNull} = ${f.isNull};
+      |  ${ev.value} = ${f.value};
+      |}
+      """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): PaymentJson =
+    copy(value = c(0), fallback = c(1))
+}
+
+/** Static kernel for [[PaymentJson]]: the canonical-form parser. */
+object PaymentJsonKernel {
+  /** The struct `from_json` yields for the payments wire schema. */
+  val wireType: StructType = StructType(Seq(
+    StructField("currency", StringType),
+    StructField("amount", LongType),
+    StructField("ts", LongType)))
+
+  private def ascii(s: String): Array[Byte] = s.getBytes("US-ASCII")
+  private val Open = ascii("{\"currency\":\"")
+  private val Amount = ascii("\",\"amount\":")
+  private val Ts = ascii(",\"ts\":")
+  private val MaxDigits = 18
+
+  /** The decoded `(currency, amount, ts)` row of a canonical record, or
+    * null when `s` is not in the canonical form. */
+  def decode(s: UTF8String): InternalRow = {
+    val n = s.numBytes()
+    val from = literal(s, 0, Open)
+    if (from < 0) return null
+    var p = from
+    while (p < n && currencyByte(s.getByte(p))) p += 1
+    val to = p
+    val amountAt = literal(s, to, Amount)
+    if (amountAt < 0) return null
+    val amountEnd = intEnd(s, amountAt)
+    if (amountEnd < 0) return null
+    val tsAt = literal(s, amountEnd, Ts)
+    if (tsAt < 0) return null
+    val tsEnd = intEnd(s, tsAt)
+    if (tsEnd < 0 || tsEnd != n - 1 || s.getByte(tsEnd) != '}') return null
+    val currency = new Array[Byte](to - from)
+    Platform.copyMemory(s.getBaseObject, s.getBaseOffset + from,
+      currency, Platform.BYTE_ARRAY_OFFSET, to - from)
+    new GenericInternalRow(Array[Any](UTF8String.fromBytes(currency),
+      intValue(s, amountAt, amountEnd), intValue(s, tsAt, tsEnd)))
+  }
+
+  private def currencyByte(b: Byte): Boolean = b >= 0x20 && b <= 0x7e && b != '"' && b != '\\'
+
+  private def digit(b: Byte): Boolean = b >= '0' && b <= '9'
+
+  /** The position after `lit` if `s` holds it at `p`, else -1. */
+  private def literal(s: UTF8String, p: Int, lit: Array[Byte]): Int = {
+    if (p + lit.length > s.numBytes()) return -1
+    var i = 0
+    while (i < lit.length) { if (s.getByte(p + i) != lit(i)) return -1; i += 1 }
+    p + lit.length
+  }
+
+  /** The end of the integer token `0` or `-?[1-9][0-9]{0,17}` at `p`,
+    * else -1. */
+  private def intEnd(s: UTF8String, p0: Int): Int = {
+    val n = s.numBytes()
+    if (p0 < n && s.getByte(p0) == '0') return p0 + 1
+    var p = if (p0 < n && s.getByte(p0) == '-') p0 + 1 else p0
+    val first = p
+    if (p >= n || !digit(s.getByte(p)) || s.getByte(p) == '0') return -1
+    while (p < n && digit(s.getByte(p))) p += 1
+    if (p - first > MaxDigits) -1 else p
+  }
+
+  /** The value of a token [[intEnd]] accepted. */
+  private def intValue(s: UTF8String, from: Int, to: Int): Long = {
+    val neg = s.getByte(from) == '-'
+    var v = 0L
+    var p = if (neg) from + 1 else from
+    while (p < to) { v = v * 10 + (s.getByte(p) - '0'); p += 1 }
+    if (neg) -v else v
+  }
+}
+
 /** Column-level entry points for the native expressions. */
 object native {
   def simhash60(tokens: Column): Column =
@@ -539,6 +684,10 @@ object native {
     ColumnBridge.column(HashedTfVec(ColumnBridge.expression(tokens), dims))
   def dotFoldLong(a: Column, b: Column): Column =
     ColumnBridge.column(DotFoldLong(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** [[PaymentJson]]: `fallback` must be `from_json(value, <wire schema>)`. */
+  def paymentJson(value: Column, fallback: Column): Column =
+    ColumnBridge.column(PaymentJson(ColumnBridge.expression(value), ColumnBridge.expression(fallback)))
 
   /** PQ encode against a frozen codebook `cb(s)(j) = subvector` (the
     * [[graft.ops.PqOps]] driver-side shape). Flattens to the kernel's

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.{native, PaymentJsonKernel}
 import graft.model.ExchangeRates
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,17 +19,16 @@ import org.apache.spark.sql.types._
   *  - :92-93   Jackson encode, Kafka key = currency
   *
   * All four are pure `DataFrame => DataFrame` composable stages built from
-  * codegen'd built-in functions — no UDFs — so predicate pushdown, column
-  * pruning and whole-stage codegen apply end to end.
+  * Catalyst expressions — built-ins plus one native decode kernel, no
+  * UDFs — so predicate pushdown, column pruning and whole-stage codegen
+  * apply end to end.
   */
 object PaymentOps {
 
-  /** Wire schema of a payment JSON document (amount in integer cents). */
-  val paymentSchema: StructType = StructType(Seq(
-    StructField("currency", StringType),
-    StructField("amount", LongType),
-    StructField("ts", LongType)
-  ))
+  /** Wire schema of a payment JSON document (amount in integer cents):
+    * `currency` string, `amount` and `ts` longs — the struct
+    * [[decodePayment]]'s native kernel produces. */
+  val paymentSchema: StructType = PaymentJsonKernel.wireType
 
   /** Type of a looked-up rate, as [[ExchangeRates.ratesDF]] declares it. */
   private val RateType = DecimalType(18, 6)
@@ -71,18 +71,28 @@ object PaymentOps {
   }
 
   /** F1 — JSON decode with malformed-drop (PaymentsService.java:52-56).
-    * Output `(k, currency, amount, ts)`. Each record is parsed exactly
-    * once: `from_json` feeds an `inline` generator, and Catalyst does not
-    * push a filter on generator output below the `Generate`, so the
-    * `currency IS NOT NULL` filter cannot grow a second parse of its own.
-    * PERMISSIVE `from_json` turns null and malformed input into an
-    * all-null row, which that filter drops — the reference's
-    * print-and-drop, silently (drops = input rows − output rows).
+    * Output `(k, currency, amount, ts)`. Each record is decoded once, by
+    * [[decodePayment]]: the native kernel parses the canonical wire form
+    * and hands every other record to `from_json`. The decoded struct
+    * feeds an `inline` generator, and Catalyst does not push a filter on
+    * generator output below the `Generate`, so the `currency IS NOT NULL`
+    * filter cannot grow a second decode of its own. PERMISSIVE
+    * `from_json` turns null and malformed input into an all-null row,
+    * which that filter drops — the reference's print-and-drop, silently
+    * (drops = input rows − output rows).
     */
   def jsonDecode(jsonDF: DataFrame): DataFrame =
     jsonDF
-      .select(col("k"), inline(array(from_json(col("value"), paymentSchema))))
+      .select(col("k"), inline(array(decodePayment(col("value")))))
       .filter(col("currency").isNotNull)
+
+  /** One record's decode, equal to `from_json(value, paymentSchema)` on
+    * every input: [[graft.functions.PaymentJson]]'s fast path for the
+    * canonical form `{"currency":"…","amount":<int>,"ts":<int>}`, with
+    * that very `from_json` as the lazily evaluated fallback for anything
+    * else (null, malformed, reordered, escaped, whitespace, …). */
+  def decodePayment(value: Column): Column =
+    native.paymentJson(value, from_json(value, paymentSchema))
 
   /** The static rates dimension (CurrencyExchangeRepo.java:15-24's
     * HashMap), collected on the driver and turned into a codegen'd
@@ -191,7 +201,7 @@ object PaymentOps {
     converted.select(encoded: _*)
 
   /** F4 plus F3's flag: `(key, value, is_suspicious)`, the one frame the
-    * streaming fan-out caches and both of its sinks read. */
+    * streaming fan-out pins per batch and both of its sinks read. */
   def jsonEncodeRouted(converted: DataFrame): DataFrame =
     converted.select(encoded :+ suspicious.as("is_suspicious"): _*)
 

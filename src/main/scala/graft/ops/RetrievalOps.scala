@@ -351,6 +351,10 @@ object RetrievalOps {
     * query time; df is ADDITIVE across doc-disjoint slices, so an
     * increment is a union + one vocabulary-sized merge — the corpus
     * postings are never rebuilt.
+    *
+    * INVARIANT: df(word) == the number of postings rows for word, and df
+    * has a row for exactly the words postings has. Every constructor here
+    * keeps it; [[writeBm25Index]] relies on it and fails when it is broken.
     */
   final case class Bm25Index(postings: DataFrame, doclens: DataFrame,
                              df: DataFrame)
@@ -396,13 +400,28 @@ object RetrievalOps {
     * constructor maintains ([[bm25BuildIndex]] counts postings rows;
     * [[bm25MergeIndex]] unions doc-disjoint postings and sums df, equal
     * to a recount of the union) — so the written df values are
-    * bit-identical to idx.df's (spec-pinned in RetrievalOpsSpec). */
+    * bit-identical to idx.df's (spec-pinned in RetrievalOpsSpec). The
+    * invariant is checked after the write: the written df's
+    * (rows, Σdf) must equal idx.df's, else an IllegalStateException
+    * names both. */
   def writeBm25Index(idx: Bm25Index, dir: String): Unit = {
     idx.postings.write.mode("overwrite").parquet(dir + "/postings")
     idx.doclens.write.mode("overwrite").parquet(dir + "/doclens")
-    idx.postings.sparkSession.read.parquet(dir + "/postings")
+    val spark = idx.postings.sparkSession
+    spark.read.parquet(dir + "/postings")
       .groupBy("word").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(dir + "/df")
+    val written = dfTotals(spark.read.parquet(dir + "/df"))
+    val expected = dfTotals(idx.df)
+    if (written != expected) throw new IllegalStateException(
+      s"writeBm25Index: the Bm25Index invariant df(word) == postings rows per word " +
+        s"is broken: idx.df has (rows, sum df) = $expected, the postings give $written")
+  }
+
+  /** (rows, Σdf) of a df frame. */
+  private def dfTotals(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)), coalesce(sum("df"), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   def readBm25Index(spark: SparkSession, dir: String): Bm25Index = Bm25Index(

@@ -4,7 +4,9 @@ import graft.model.ExchangeRates
 import graft.ops.PaymentOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.storage.StorageLevel
 
 /** Structured Streaming layer (SURVEY.md §2.1/2.2/§7 B4): the reference's
   * Kafka-sourced dataflows re-expressed as readStream→transform→writeStream.
@@ -274,12 +276,18 @@ object StreamingOps {
     * consumer loop, PaymentsService.java:50-59 — two independent queries
     * would read the source twice). The rates dimension is collected once,
     * when the query is built, into [[PaymentOps.rateLookup]]; no batch
-    * runs a join or a broadcast. Each batch is decoded (one parse per
-    * record), converted and encoded, and only the encoded
-    * `(key, value, is_suspicious)` frame is persisted, so the source is
-    * scanned once per batch. The main sink gets `(key, value)` of every
-    * row, the suspicious sink `(key, value)` of the flagged ones; then the
-    * frame is unpersisted. Sinks are injected so tests (and Kafka/parquet
+    * runs a join or a broadcast. Each batch is decoded (one decode per
+    * record: [[PaymentOps.jsonDecode]]'s native fast path with its exact
+    * `from_json` fallback), converted and encoded, and the encoded
+    * `(key, value, is_suspicious)` rows are pinned: computed once, by the
+    * first sink's job, into a batch-local RDD held at `MEMORY_AND_DISK`
+    * (one row array per partition), which both sinks scan as a DataFrame.
+    * The source is therefore read once per batch. The pin holds at most
+    * one trigger's encoded rows and is released (non-blocking) when the
+    * batch ends, whether or not a sink failed; it goes through no
+    * session-global cache and plans no cached query. The main sink gets
+    * `(key, value)` of every row, the suspicious sink `(key, value)` of
+    * the flagged ones. Sinks are injected so tests (and Kafka/parquet
     * prod paths) share the exact fan-out logic. At-least-once per sink,
     * matching the reference.
     */
@@ -290,11 +298,17 @@ object StreamingOps {
     jsonStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val routed = PaymentOps.jsonEncodeRouted(
         PaymentOps.convert(PaymentOps.jsonDecode(batch), rate))
-      routed.persist()
+      // toRdd reuses its row buffers, so each row is copied into the pin;
+      // a partition is stored as one array, which the block manager sizes
+      // by sampling instead of estimating the size of every row object
+      val pin = routed.queryExecution.toRdd
+        .mapPartitions(rows => Iterator.single(rows.map(_.copy()).toArray))
+        .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        mainSink(routed.select("key", "value"), batchId)
-        suspiciousSink(routed.filter(col("is_suspicious")).select("key", "value"), batchId)
-      } finally routed.unpersist()
+        val pinned = ColumnBridge.rowsFrame(batch.sparkSession, pin.flatMap(_.iterator), routed.schema)
+        mainSink(pinned.select("key", "value"), batchId)
+        suspiciousSink(pinned.filter(col("is_suspicious")).select("key", "value"), batchId)
+      } finally pin.unpersist(blocking = false)
     }
   }
 }

@@ -1,10 +1,12 @@
 package graft
 
+import graft.functions.PaymentJsonKernel
 import graft.model.ExchangeRates
 import graft.ops.PaymentOps
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{broadcast, col, round}
+import org.apache.spark.sql.functions.{array, broadcast, col, from_json, inline, round}
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Test.{check, Parameters}
 
@@ -142,4 +144,113 @@ class PaymentOpsSpec extends SparkSpec {
     val nullRate = Seq(("GBP", None: Option[java.math.BigDecimal])).toDF("currency", "rate")
     intercept[IllegalArgumentException](PaymentOps.convert(payments, nullRate))
   }
+
+  // ---------------------------------------------------------------
+  // F1 decode kernel vs from_json
+  // ---------------------------------------------------------------
+
+  private def canonical(c: String, a: Any, t: Any): String =
+    s"""{"currency":"$c","amount":$a,"ts":$t}"""
+
+  /** Records the kernel must leave to `from_json`, one per way of leaving
+    * the canonical form. */
+  private val adversarial: Seq[String] = Seq(
+    """{ "currency":"GBP","amount":1,"ts":2}""",
+    """{"currency" : "GBP", "amount" : 1, "ts" : 2}""",
+    canonical("GBP", 1, 2) + "\n",
+    "\t" + canonical("GBP", 1, 2),
+    canonical("GBP", 1, 2) + " ",
+    canonical("GBP", 1, 2) + "x",
+    canonical("GBP", 1, 2) + "}",
+    """{"amount":1,"currency":"GBP","ts":2}""",
+    """{"ts":2,"amount":1,"currency":"GBP"}""",
+    """{"currency":"GBP","amount":1}""",
+    """{"amount":1,"ts":2}""",
+    "{}",
+    """{"currency":"GBP","amount":1,"ts":2,"x":1}""",
+    """{"x":"y","currency":"GBP","amount":1,"ts":2}""",
+    """{"currency":"GBP","amount":1,"ts":2,"amount":7}""",
+    """{"currency":"GBP","currency":"EUR","amount":1,"ts":2}""",
+    canonical("GBP", "01", 2), canonical("GBP", "00", 2), canonical("GBP", 1, "-01"),
+    canonical("GBP", "-0", 2), canonical("GBP", 1, "-00"),
+    canonical("GBP", Long.MaxValue, 2), canonical("GBP", Long.MinValue, 2),
+    canonical("GBP", "9223372036854775808", 2), canonical("GBP", 1, "-9223372036854775809"),
+    canonical("GBP", "1234567890123456789", 2), canonical("GBP", "12345678901234567890", 2),
+    canonical("GBP", "-1000000000000000000", 2),
+    canonical("GBP", "1.5", 2), canonical("GBP", "1e3", 2), canonical("GBP", "1E3", 2),
+    canonical("GBP", 1, "-2.0e-1"), canonical("GBP", "1.0", 2), canonical("GBP", "+5", 2),
+    canonical("A\\\"B", 1, 2), canonical("A\\\\B", 1, 2), canonical("\\u0047BP", 1, 2),
+    canonical("G\\/P", 1, 2),
+    canonical("G\u0001P", 1, 2), canonical("G\tP", 1, 2), canonical("G\nP", 1, 2),
+    canonical("G\u007fP", 1, 2),
+    canonical("\u00e9", 1, 2), canonical("\u20ac", 1, 2), canonical("\ud83d\ude00", 1, 2),
+    """{"currençy":"GBP","amount":1,"ts":2}""", """{"Currency":"GBP","amount":1,"ts":2}""",
+    canonical("GBP", "\"123\"", 2), canonical("GBP", 1, "\"5\""),
+    canonical("GBP", "null", 2), """{"currency":null,"amount":1,"ts":2}""",
+    canonical("GBP", 1, 2).dropRight(1), canonical("GBP", 1, 2).take(13),
+    "", " ", "null", "[1,2]", "\"str\"", "123", "not a json payload")
+
+  test("F1 decode kernel: canonical records decode natively, every other form falls back") {
+    val pays = Seq(("GBP", 999999L, 1L), ("", 0L, 0L), ("a b/~!", -5L, 123456789012345678L),
+      ("USD", -999999999999999999L, 999999999999999999L))
+    for ((c, a, t) <- pays) {
+      val r = PaymentJsonKernel.decode(UTF8String.fromString(canonical(c, a, t)))
+      assert(r != null && r.getUTF8String(0).toString == c && r.getLong(1) == a &&
+        r.getLong(2) == t, canonical(c, a, t))
+    }
+    for (v <- adversarial)
+      assert(PaymentJsonKernel.decode(UTF8String.fromString(v)) == null, v)
+  }
+
+  private val printable: Gen[String] = Gen.frequency(
+    3 -> Gen.oneOf(ExchangeRates.currencies),
+    1 -> Gen.listOf(Gen.oneOf((' ' to '~').filter(ch => ch != '"' && ch != '\\'))).map(_.mkString))
+  private val wireInt: Gen[Long] = Gen.frequency(
+    2 -> Gen.chooseNum(-999999999999999999L, 999999999999999999L),
+    2 -> Gen.chooseNum(-1000L, 1000L),
+    1 -> Gen.const(0L))
+  private val recordGen: Gen[Option[String]] = for {
+    c <- printable; a <- wireInt; t <- wireInt
+    v <- Gen.frequency(
+      4 -> Gen.const(Some(canonical(c, a, t))),
+      4 -> Gen.oneOf(adversarial).map(Some(_)),
+      2 -> Gen.oneOf(
+        s"""{"amount":$a,"currency":"$c","ts":$t}""",
+        s"""{"currency":"$c", "amount":$a,"ts":$t}""",
+        s"""{"currency":"$c","amount":$a,"ts":$t,"amount":$t}""",
+        canonical(c, s"0$a", t), canonical(c, s"$a.5", t), canonical(c, s"${a}e1", t),
+        canonical(c, s"\"$a\"", t), canonical(c + "\u00e9", a, t), canonical(c + "\\n", a, t),
+        canonical(c, a, s"$t$t")).map(Some(_)),
+      1 -> Gen.choose(0, 60).map(n => Some(canonical(c, a, t).take(n))),
+      1 -> Gen.const(None))
+  } yield v
+
+  /** Runs `f` with SQL confs set, restoring the previous values. */
+  private def withConfs[T](kv: (String, String)*)(f: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  for ((mode, wholeStage) <- Seq("NO_CODEGEN" -> "false", "CODEGEN_ONLY" -> "true"))
+    test(s"F1 decode kernel equals from_json row for row, $mode (property)") {
+      withConfs("spark.sql.codegen.factoryMode" -> mode,
+                "spark.sql.codegen.wholeStage" -> wholeStage) {
+        val prop = Prop.forAll(Gen.listOfN(200, recordGen)) { values =>
+          // an RDD source, so the optimizer cannot evaluate the projection itself
+          val df = spark.sparkContext.parallelize(values.zipWithIndex.map { case (v, i) => (i.toLong, v) }, 3)
+            .toDF("k", "value")
+          val both = df.select(col("k"), PaymentOps.decodePayment(col("value")).as("kernel"),
+            from_json(col("value"), PaymentOps.paymentSchema).as("oracle"))
+          val mismatches = both.collect().filter(r => r.get(1) != r.get(2))
+          val decoded = PaymentOps.jsonDecode(df)
+          val oracle = df.select(col("k"), inline(array(from_json(col("value"), PaymentOps.paymentSchema))))
+            .filter(col("currency").isNotNull)
+          mismatches.isEmpty &&
+            rows(decoded, "k", "currency", "amount", "ts") == rows(oracle, "k", "currency", "amount", "ts")
+        }
+        val result = check(Parameters.default.withMinSuccessfulTests(8), prop)
+        assert(result.passed, result.status.toString)
+      }
+    }
 }

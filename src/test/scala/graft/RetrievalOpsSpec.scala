@@ -138,6 +138,26 @@ class RetrievalOpsSpec extends SparkSpec {
     }
   }
 
+  test("writeBm25Index fails naming the mismatch on an index whose df " +
+    "breaks the postings-rows invariant") {
+    val built = RetrievalOps.bm25BuildIndex(corpus)
+    // a hand-built index: every df doubled, and a word with no postings
+    val badDf = built.df.select(col("word"), (col("df") * 2).as("df"))
+      .union(Seq(("no-such-word", 1L)).toDF("word", "df"))
+    val bad = RetrievalOps.Bm25Index(built.postings, built.doclens, badDf)
+    val (rows, total) = {
+      val r = built.df.agg(count(lit(1)), sum("df")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("bm25bad").toString
+    try {
+      val e = intercept[IllegalStateException](RetrievalOps.writeBm25Index(bad, dir))
+      assert(e.getMessage.contains(s"idx.df has (rows, sum df) = (${rows + 1},${2 * total + 1})"),
+        e.getMessage)
+      assert(e.getMessage.contains(s"the postings give ($rows,$total)"), e.getMessage)
+    } finally graft.ops.FixtureDirs.rmTree(java.nio.file.Paths.get(dir))
+  }
+
   test("retrievalRecall: hybrid hits are the union shape (>= each channel " +
     "on this corpus) and recall = n_hits / n_queries exactly") {
     // augmented() plants near copies at +100000 for doc_id % 10 == 0;

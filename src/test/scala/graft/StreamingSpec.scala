@@ -1,12 +1,13 @@
 package graft
 
+import graft.functions.PaymentJson
 import graft.model.ExchangeRates
 import graft.ops.PaymentOps
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.catalyst.plans.logical.Join
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{DataSourceScanExec, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
@@ -109,9 +110,13 @@ class StreamingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       when(col("id") === 0, """{"currency":"GBP","amount":999999,"ts":1}""")
         .when(col("id") === 1, "garbage").as("value"))
     val decoded = PaymentOps.jsonDecode(json)
-    val parses = decoded.queryExecution.optimizedPlan
-      .flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+    val exprs = decoded.queryExecution.optimizedPlan.flatMap(_.expressions)
+    val parses = exprs.flatMap(_.collect { case j: JsonToStructs => j })
     assert(parses.size == 1, decoded.queryExecution.optimizedPlan.toString)
+    // exactly one decode kernel, and the parse is its fallback
+    val kernels = exprs.flatMap(_.collect { case k: PaymentJson => k })
+    assert(kernels.size == 1, decoded.queryExecution.optimizedPlan.toString)
+    assert(kernels.head.fallback.collect { case j: JsonToStructs => j }.size == 1)
     assert(decoded.select("k").as[Long].collect().toSeq == Seq(0L))
 
     val conv = PaymentOps.convert(decoded, ExchangeRates.ratesDF(spark))
@@ -142,9 +147,15 @@ class StreamingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(sinkPlans.size == 2 * added.size)
     sinkPlans.foreach { p =>
       assert(joinsOrBroadcasts(p).isEmpty, p.toString)
-      // both sinks read the one cached frame: the encoded output plus the flag
-      val cached = nodes(p).collect { case m: InMemoryTableScanExec => m.relation.output.map(_.name) }
-      assert(cached == Seq(Seq("key", "value", "is_suspicious")), p.toString)
+      // both sinks scan the batch's pinned rows: the encoded output plus
+      // the flag, with no session cache, file scan or JSON decode above them
+      val leaves = nodes(p).filter(_.children.isEmpty)
+      assert(leaves.map(_.getClass) == Seq(classOf[RDDScanExec]), p.toString)
+      assert(leaves.head.output.map(_.name) == Seq("key", "value", "is_suspicious"), p.toString)
+      assert(!nodes(p).exists(n => n.isInstanceOf[InMemoryTableScanExec] ||
+        n.isInstanceOf[DataSourceScanExec]), p.toString)
+      assert(nodes(p).forall(_.expressions.forall(_.collectFirst {
+        case e @ (_: JsonToStructs | _: PaymentJson) => e }.isEmpty)), p.toString)
     }
   }
 }
