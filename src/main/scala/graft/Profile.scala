@@ -1,1695 +1,231 @@
 package graft
 
-import graft.ops._
+import graft.ops.BpeOps
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
-/** Ad-hoc perf profiler: times named sub-stages of the hot queries and
-  * prints the physical plan of the slowest. Run:
-  * SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Profile [stage ...]"
+/** Developer profiler over the query registry: every subcommand reaches
+  * queries only through `SparkEntry.queries(name)(spark, sfDir)`. Run:
+  * SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Profile <subcommand> ..."
   */
 object Profile {
+  val usage: String =
+    """usage: graft.Profile <subcommand>
+      |  explain <q...>          print each query's formatted physical plan
+      |  time <q...> [reps]      time each query reps times (3), cache cleared between reps
+      |  jobstats <q...>         jobs, stages, tasks, task time and shuffle bytes of a warm run
+      |  count-prune             flag registered queries whose plan loses joins under count()
+      |  audit                   scan pruning, joins, exchanges and codegen spans per query
+      |  bpe-merges [n]          bpeTrainAuto's n merges (16) on the documents, as a Scala literal
+      |  ladder <factor> <q...>  time each query against factor x copies of the tables""".stripMargin
+
   def main(args: Array[String]): Unit = {
+    val rest = args.toSeq.drop(1)
+    def isCount(s: String) = s.toIntOption.exists(_ > 0)
+    val valid = args.headOption.exists {
+      case "explain" | "jobstats" => rest.nonEmpty
+      case "time" => rest.nonEmpty && !isCount(rest.head)
+      case "count-prune" | "audit" => rest.isEmpty
+      case "bpe-merges" => rest.forall(isCount) && rest.size <= 1
+      case "ladder" => rest.size >= 2 && isCount(rest.head)
+      case _ => false
+    }
+    if (!valid) { System.err.println(usage); sys.exit(2) }
+
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-
-    def t(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"[profile] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
-    }
-
-    val docs = Tables.documents(spark, sfDir)
-    val corpus = DedupOps.augmented(docs)
-
-    // `Profile pq-encode-ab [nRows]` — paired same-JVM A/B of the wide PQ
-    // encode: (a) the pre-round-14 unrolled m × k DotFold formulation vs
-    // (b) the native fused PqEncode expression, INTERLEAVED reps so
-    // co-tenant noise cancels. Two costs measured separately: the
-    // first-plan time (dominated by janino compile — the unroll's fixed
-    // multi-second floor) and warm per-row throughput on a generated
-    // 64-dim corpus. m=8/k=64 — the production recipe the incremental-ANN
-    // family ships.
-    if (args.headOption.contains("pq-encode-ab")) {
-      val nRows = if (args.length > 1) args(1).toLong else 2000000L
-      val m = 8; val k = 64; val subDim = 8
-      val corpusAb = spark.range(nRows).select(col("id").as("vec_id"),
-        expr("transform(sequence(1, 64), d -> sin(CAST(id * 64 + d AS DOUBLE)))")
-          .cast("array<double>").as("emb")).persist()
-      corpusAb.count()
-      val embTbl = corpusAb.limit(10000)
-        .select(col("vec_id"), col("emb").cast("array<float>").as("embedding"))
-      val cbAb = PqOps.trainCodebook(embTbl, m, k)
-      def unrolled(df: DataFrame): DataFrame =
-        cbAb.indices.foldLeft(df) { (acc, s) =>
-          val xs = slice(col("emb"), s * subDim + 1, subDim)
-          val dists = cbAb(s).map { cw =>
-            val cl = typedlit(cw)
-            (graft.functions.native.dotFold(xs, xs)
-              - lit(2.0) * graft.functions.native.dotFold(xs, cl)) +
-              graft.functions.native.dotFold(cl, cl)
-          }
-          acc.withColumn(s"d_$s", array(dists.toIndexedSeq: _*))
-            .withColumn(s"qerr_$s", array_min(col(s"d_$s")))
-            .withColumn(s"code_$s",
-              (array_position(col(s"d_$s"), col(s"qerr_$s")) - 1).cast("long"))
-            .drop(s"d_$s")
-        }
-      def fused(df: DataFrame): DataFrame = {
-        val extra = (0 until m).flatMap(s => Seq(
-          element_at(col("_pq").getField("qerrs"), s + 1).as(s"qerr_$s"),
-          element_at(col("_pq").getField("codes"), s + 1).as(s"code_$s")))
-        df.withColumn("_pq",
-            graft.functions.native.pqEncode(col("emb"), cbAb, subDim))
-          .select(col("vec_id") +: extra: _*)
-      }
-      def run(df: DataFrame): Long =
-        df.select(sum((0 until m).map(s => col(s"code_$s")).reduce(_ + _))
-          .as("chk")).head().getLong(0)
-      // cold = first plan, compile-inclusive (fresh literal perturbation
-      // would be needed to defeat the codegen cache across reps, so cold
-      // is measured once per formulation, first)
-      t("unrolled_cold")(run(unrolled(corpusAb)))
-      t("fused_cold")(run(fused(corpusAb)))
-      (1 to 3).foreach { i =>
-        t(s"unrolled_warm#$i")(run(unrolled(corpusAb)))
-        t(s"fused_warm#$i")(run(fused(corpusAb)))
-      }
-      corpusAb.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile count-prune` — bench-integrity audit: flag any registered
-    // query whose optimized plan LOSES joins under `count()` (Bench's
-    // action). A left join against an aggregate keyed on the join key
-    // with no payload referenced is a no-op to Catalyst, so a bare count
-    // would time only the surviving prefix of such a query; flagged
-    // queries need a semantic no-op guard referencing the join output
-    // (see SparkEntry's vocab_encode/substring_dedup entries).
-    if (args.headOption.contains("count-prune")) {
-      import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
-      def joins(p: LogicalPlan): Int =
-        p.collectWithSubqueries { case j: Join => j }.size
-      var flagged = 0
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val df = fn(spark, sfDir)
-        val full = joins(df.queryExecution.optimizedPlan)
-        val cnt = joins(df.groupBy().count().queryExecution.optimizedPlan)
-        if (cnt < full) {
-          flagged += 1
-          println(s"[count-prune] $name: joins $full -> $cnt under count()")
-        }
-      }
-      println(s"[count-prune] flagged=$flagged")
-      spark.stop(); return
-    }
-
-    // `Profile explain <query> [...]` — print the formatted physical plan
-    // of one or more registered queries (plan-audit workflow; PLANS.md).
-    if (args.headOption.contains("explain")) {
-      args.drop(1).foreach { name =>
+    try args.head match {
+      case "explain" => rest.foreach { name =>
         println(s"===== $name =====")
         SparkEntry.queries(name)(spark, sfDir).explain("formatted")
       }
-      spark.stop(); return
-    }
+      case "time" =>
+        val (names, reps) =
+          if (rest.size > 1 && isCount(rest.last)) (rest.init, rest.last.toInt)
+          else (rest, 3)
+        time(spark, sfDir, names, reps)
+      case "jobstats" => jobstats(spark, sfDir, rest)
+      case "count-prune" => countPrune(spark, sfDir)
+      case "audit" => audit(spark, sfDir)
+      case "bpe-merges" =>
+        val n = rest.headOption.fold(16)(_.toInt)
+        val merges = BpeOps.bpeTrainAuto(Tables.documents(spark, sfDir), n)
+        println(s"[profile] bpe-merges sfDir=$sfDir n=$n")
+        println(merges.map { case (a, b) =>
+          "(\"" + a + "\", \"" + b + "\")" }.mkString("Seq(", ", ", ")"))
+      case "ladder" =>
+        val (factor, dir) = (rest.head.toInt, java.nio.file.Files.createTempDirectory("graft-ladder"))
+        try {
+          amplify(spark, sfDir, dir.toString, factor)
+          println(s"[profile] ladder factor=$factor dir=$dir")
+          time(spark, dir.toString, rest.tail, 3)
+        } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    } finally spark.stop()
+  }
 
-    // `Profile jobstats <query> [...]` — attribute one registered query's
-    // wall-clock (round 15, guide §1): a SparkListener counts jobs /
-    // stages / tasks and sums executor task time, so wall − Σtask-time/
-    // cores separates scheduling+planning overhead from compute. At
-    // sf0.1 the inputs are sub-MB, so a multi-second query is almost
-    // always OVERHEAD-bound (many jobs / stages / tiny shuffles) — the
-    // same pass count that multiplies real I/O at 100 TB.
-    if (args.headOption.contains("jobstats")) {
-      import org.apache.spark.scheduler._
-      import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-      val jobs = new AtomicInteger; val stages = new AtomicInteger
-      val tasks = new AtomicInteger; val taskMs = new AtomicLong
-      val shufWr = new AtomicLong
-      val stageAgg = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Int, Long, Long)]()
-      val listener = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-          stages.incrementAndGet()
-          val m = s.stageInfo.taskMetrics
-          shufWr.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          stageAgg.put(s.stageInfo.stageId,
-            (s.stageInfo.name.takeWhile(_ != '\n').take(70),
-              m.executorRunTime, s.stageInfo.numTasks,
-              m.executorDeserializeTime, m.jvmGCTime))
-        }
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-          tasks.incrementAndGet()
-          if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
-        }
-      }
-      args.drop(1).foreach { name =>
-        val fn = SparkEntry.queries(name)
-        // rep 1 warms codegen/caches; rep 2 is the measured one (Bench's
-        // median-of-3 is warm-dominated for the same reason)
-        fn(spark, sfDir).count(); spark.catalog.clearCache()
-        jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); shufWr.set(0)
-        spark.sparkContext.addSparkListener(listener)
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        // deterministic listener-bus drain (ADVICE r15: a fixed 500 ms
-        // sleep undercounts on a slow bus and the counters feed the
-        // round's overhead attribution) — same shim scale-freq uses
-        org.apache.spark.sql.graftshim.ColumnBridge
-          .drainListenerBus(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(listener)
-        println(f"[jobstats] $name%-34s wall=$wall%7.2fs jobs=${jobs.get}%3d " +
-          f"stages=${stages.get}%4d tasks=${tasks.get}%5d " +
-          f"taskSum=${taskMs.get / 1e3}%8.2fs shufWr=${shufWr.get / 1e6}%8.2fMB rows=$n")
-        import scala.jdk.CollectionConverters._
-        stageAgg.asScala.toSeq.sortBy(-_._2._2).take(8).foreach {
-          case (sid, (nm, run, nt, deser, gc)) =>
-            println(f"[jobstats]   stage $sid%4d run=${run / 1e3}%7.2fs " +
-              f"deser=${deser / 1e3}%6.2fs gc=${gc / 1e3}%5.2fs tasks=$nt%4d  $nm")
-        }
-        stageAgg.clear()
-      }
-      spark.stop(); return
-    }
-
-    // `Profile prf-breakdown` — time the PRF pipeline's components in
-    // isolation (round 15): bare corpus tokenize+explode+tf, the first
-    // scoring pass, feedback expansion, and the full two-pass PRF, each
-    // twice (cold + warm) so codegen compile cost is separable.
-    if (args.headOption.contains("prf-breakdown")) {
-      val corpusP = docs
-      val qt = RetrievalOps.queryTerms(corpusP, col("doc_id") < 8)
-      def rep(nm: String)(f: => Long): Unit = {
-        t(nm + "_cold")(f); t(nm + "_warm")(f)
-        spark.catalog.clearCache()
-      }
-      rep("explode_tf") {
-        corpusP.select(col("doc_id"), explode(split(col("text"), " ", -1)).as("word"))
-          .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")).count()
-      }
-      rep("qterms_distinct")(qt.select("word").distinct().count())
-      rep("first_pass")(RetrievalOps.bm25RanksForTerms(corpusP, qt, 3).count())
-      rep("first_pass_k5")(RetrievalOps.bm25RanksForTerms(corpusP, qt, 5).count())
-      rep("full_prf")(RetrievalOps.bm25Prf(corpusP, col("doc_id") < 8).count())
-      spark.stop(); return
-    }
-
-    // `Profile quantile-ab` — A/B the two exact boundary regimes of
-    // quantileBins on the registered input (round 15): raw `percentile`
-    // over rows vs the histogram form over (value, count). Identical
-    // boundaries by the documented multiset invariant; this measures
-    // which is cheaper at bench scale.
-    if (args.headOption.contains("quantile-ab")) {
-      val li = Tables.lineitem(spark, sfDir)
-      val cents = li.select(round(col("l_extendedprice") * 100)
-        .cast("long").as("yc"))
-      val ps = (1 until 8).map(k => k.toDouble / 8)
-      def raw(): Long = cents.agg(expr(
-        s"percentile(yc, array(${ps.mkString(", ")}))").as("bs")).count()
-      def hist(): Long = StatsOps.histExactBoundaries(cents, "yc", 8).count()
-      (1 to 3).foreach { i => t(s"raw#$i")(raw()); t(s"hist#$i")(hist()) }
-      t("distinct_yc")(cents.select("yc").distinct().count())
-      spark.stop(); return
-    }
-
-    // `Profile time <query> [reps]` — isolate one registered query's
-    // wall-clock (3 reps default; cache cleared between reps like Bench).
-    if (args.headOption.contains("time")) {
-      val name = args(1)
-      val reps = if (args.length > 2) args(2).toInt else 3
+  /** Times each query `reps` times against `dir`, dropping cached blocks
+    * between reps as Bench does. */
+  def time(spark: SparkSession, dir: String, names: Seq[String], reps: Int): Unit =
+    names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { i =>
-        t(s"$name#$i")(fn(spark, sfDir).count())
+        val t0 = System.nanoTime()
+        val n = fn(spark, dir).count()
+        println(f"[profile] ${s"$name#$i"}%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
         spark.catalog.clearCache()
       }
-      spark.stop(); return
     }
 
-    // Positional-salt document amplifier shared by every scale-* harness:
-    // copy k appends a per-(copy, position) salt token AFTER each original
-    // token (originals are KEPT — copies share their unigram mass with the
-    // base; what is new per copy is every 2+-gram/shingle, which is what
-    // keeps the near-dup RATE constant instead of quadratic). A SHARED
-    // per-copy salt would homogenize token distributions and collapse
-    // unweighted SimHash (measured 153M pairs / 416 s at 10x) — see
-    // PLANS.md "SimHash homogeneity hazard".
-    def amplifyDocs(base: DataFrame, factor: Int): DataFrame =
-      (0 until factor).map { k =>
-        if (k == 0) base.select(col("doc_id"), col("text"))
-        else base.select((col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-          expr(s"concat_ws(' ', transform(split(text, ' '), (t, i) -> concat(t, ' z${k}x', i)))")
-            .as("text"))
-      }.reduce(_ unionAll _)
+  private val dayNs = 24L * 3600 * 1000 * 1000 * 1000
 
-    // ONE amplifier per input table (review-caught copy-paste): every
-    // scale harness measures the same data shape, and a future fix to a
-    // shift/cap lands everywhere at once. lineitem: orderkey-shifted
-    // copies (partkey/suppkey NOT shifted — keys get factor× hotter, the
-    // stress case). events: 40-day ts shifts keep amplified corpora
-    // temporally disjoint (linear interval-join output), key shifts keep
-    // CDC keys disjoint. embeddings: deterministic perturbation copies
-    // (per-copy scale+offset keeps cluster structure, so LSH/IVF bucket
-    // occupancy grows linearly; no factor cap, unlike the ≤32 shift
-    // amplifier the PQ/semantic harnesses use for norm preservation).
-    def amplifyLineitem(base: DataFrame, factor: Int): DataFrame =
-      (0 until factor).map { k =>
-        if (k == 0) base
-        else base.withColumn("l_orderkey", col("l_orderkey") + lit(k * 100000000L))
-      }.reduce(_ unionAll _)
-    val dayNs = 24L * 3600 * 1000 * 1000 * 1000
-    def amplifyEvents(base: DataFrame, factor: Int): DataFrame =
-      (0 until factor).map { k =>
-        if (k == 0) base
-        else base.select((col("event_id") + lit(k * 100000000L)).as("event_id"),
-          (col("ts") + lit(k * 40L * dayNs)).as("ts"),
-          (col("user_id") + lit(k * 1000000L)).as("user_id"),
-          col("event_type"), col("value"), col("props"))
-      }.reduce(_ unionAll _)
-    def amplifyEmbeddings(base: DataFrame, factor: Int): DataFrame =
-      (0 until factor).map { k =>
-        if (k == 0) base
-        else base.select((col("vec_id") + lit(k * 10000000L)).as("vec_id"),
-          expr(s"transform(embedding, x -> float(x * (1.0 + $k * 0.0003) + $k * 0.001))")
-            .as("embedding"),
-          col("label"))
-      }.reduce(_ unionAll _)
-
-    // Selector-regime report for the quantile_bins decade lines — shares
-    // binRegime's defaults, which are the SAME constants quantileBins
-    // defaults to (StatsOps.DefaultRawMaxRows/DefaultHistMaxDistinct),
-    // so the printed regime is the one the timed call engages.
-    def printBinsRegime(liAmp: DataFrame): Unit = {
-      val selRow = liAmp.select(round(col("l_extendedprice") * 100)
-          .cast("long").as("yc"))
-        .agg(count(lit(1)).as("n"), approx_count_distinct(col("yc"), 0.05).as("nd"))
-        .head()
-      println(s"[profile] quantile_bins regime=${StatsOps.binRegime(selRow.getLong(0), selRow.getLong(1))} " +
-        s"rows=${selRow.getLong(0)} distinct_est=${selRow.getLong(1)}")
+  /** `factor` copies of table `name` (copy 0 is `t` itself), every column
+    * of its schema kept. Copy k shifts the keys so copies are disjoint:
+    *  - documents: doc_id + k·10⁷, and a per-(copy, position) salt token
+    *    after every original token, so each copy's 2+-grams and shingles
+    *    are new while its unigrams are shared and the near-dup rate stays
+    *    constant (a salt shared across a copy would homogenize the token
+    *    distribution and collapse SimHash); n_chars is the salted length;
+    *  - events: event_id + k·10⁸, ts + 40·k days (temporally disjoint
+    *    copies), user_id + k·10⁶;
+    *  - embeddings: vec_id + k·10⁷, each component scaled and offset per
+    *    copy (cluster structure kept, so bucket occupancy grows linearly);
+    *  - lineitem and orders: orderkey + k·10⁸ on both, so their join stays
+    *    1:1 within each copy (part, supplier and customer keys get hotter);
+    *  - every other table: `t` once, unchanged.
+    */
+  def amplified(name: String, t: DataFrame, factor: Int): DataFrame = {
+    def copies(copy: Int => DataFrame): DataFrame =
+      (0 until factor).map(k => if (k == 0) t else copy(k)).reduce(_ union _)
+    def shifted(k: Int, steps: (String, Long)*): DataFrame =
+      steps.foldLeft(t) { case (df, (c, step)) => df.withColumn(c, col(c) + lit(k * step)) }
+    name match {
+      case "documents" => copies(k => shifted(k, "doc_id" -> 10000000L)
+        .withColumn("text", expr(
+          s"concat_ws(' ', transform(split(text, ' '), (w, i) -> concat(w, ' z${k}x', i)))"))
+        .withColumn("n_chars", length(col("text")).cast("long")))
+      case "events" => copies(k => shifted(k, "event_id" -> 100000000L, "user_id" -> 1000000L)
+        .withColumn("ts", t.schema("ts").dataType match {
+          case LongType => col("ts") + lit(k * 40L * dayNs)
+          case _ => col("ts") + expr(s"INTERVAL ${k * 40} DAYS")
+        }))
+      case "embeddings" => copies(k => shifted(k, "vec_id" -> 10000000L)
+        .withColumn("embedding", expr(
+          s"transform(embedding, x -> float(x * (1.0 + $k * 0.0003) + $k * 0.001))")))
+      case "lineitem" => copies(k => shifted(k, "l_orderkey" -> 100000000L))
+      case "orders" => copies(k => shifted(k, "o_orderkey" -> 100000000L))
+      case _ => t
     }
-
-    // `Profile scale [factor]` — the "one more decade" check: amplify the
-    // sf0.1 documents corpus `factor`× (each copy's shingle space is
-    // disjoint — a salt token is interleaved after every token, so every
-    // 3-gram contains it and the corpus-wide near-dup RATE stays constant
-    // instead of exploding quadratically with copy count) and time the
-    // heavy dedup operators. A bucketed algorithm must scale ~linearly
-    // here; results recorded in BASELINE.md.
-    if (args.headOption.contains("scale")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val amplified = amplifyDocs(DedupOps.augmented(docs), factor)
-      amplified.persist(); t(s"amplify_${factor}x")(amplified.count())
-      t("exact_dedup")(DedupOps.exactDedup(amplified).count())
-      t("substring_dup")(DedupOps.substringDup(amplified).count())
-      // the clean_len guard stops Catalyst eliminating the reassembly
-      // join under count() (left join vs aggregate on the join key with
-      // no payload referenced is a no-op to the optimizer) — without it
-      // this line times a parquet metadata count, not the operator
-      t("substring_dedup")(
-        DedupOps.substringDedup(amplified).where(col("clean_len") >= 0).count())
-      t("simhash_pairs")(DedupOps.simhashPairs(amplified).count())
-      t("minhash_pairs")(DedupOps.minhashPairs(amplified).count())
-      spark.catalog.clearCache(); amplified.persist()
-      t("ngram_jaccard")(DedupOps.ngramJaccardPairs(amplified).count())
-      spark.catalog.clearCache(); amplified.persist()
-      t("clusters")(DedupOps.nearDupClusters(amplified).count())
-      spark.catalog.clearCache(); amplified.persist()
-      t("canonical")(DedupOps.dedupCanonical(amplified).count())
-      spark.catalog.clearCache(); amplified.persist()
-      t("paragraph_dedup")(DedupOps.paragraphDedup(amplified).count())
-      spark.catalog.clearCache(); amplified.persist()
-      // Incremental shape at scale: the index holds copies 0..factor-2
-      // ((factor-1)/factor of the corpus), the delta is the last copy —
-      // index >> delta, as in production. Index build timed separately:
-      // it is the once-per-slice cost the incremental path amortizes.
-      val idxSide = amplified.filter(col("doc_id") < (factor - 1).toLong * 10000000L)
-      val deltaSide = amplified.filter(col("doc_id") >= (factor - 1).toLong * 10000000L)
-      val sigIdx = DedupOps.signatureIndex(idxSide).persist()
-      t("signature_index")(sigIdx.count())
-      t("dedup_incremental")(DedupOps.dedupIncremental(sigIdx, deltaSide).count())
-      // decontaminate projects (doc_id, lang, source); the amplifier
-      // carries only (doc_id, text) — stub the metadata columns.
-      t("decontaminate")(DedupOps.decontaminate(
-        amplified.withColumn("lang", lit("xx")).withColumn("source", lit("amp")))
-        .count())
-      // frac guard = count-prune no-op (see SparkEntry); keeps the
-      // benchmark mark-join alive under this count
-      t("contamination_score")(DedupOps.contaminationScore(
-        amplified.withColumn("lang", lit("xx")).withColumn("source", lit("amp")))
-        .where(col("frac") >= 0.0).count())
-      spark.stop(); return
-    }
-
-    // `Profile scale-substr [factor]` — stage attribution for the span
-    // removal pipeline at scale (used to locate the 10× hot stage).
-    if (args.headOption.contains("scale-substr")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val amplified = amplifyDocs(DedupOps.augmented(docs), factor)
-      amplified.persist(); t(s"amplify_${factor}x")(amplified.count())
-      val st = DedupOps.substringDedupStages(amplified)
-      st.foreach { case (name, df) => t(name)(df.count()) }
-      t("substring_dedup_full")(
-        DedupOps.substringDedup(amplified).where(col("clean_len") >= 0).count())
-      spark.stop(); return
-    }
-
-    // `Profile scale-ann [factor]` — the similarity-family decade check:
-    // amplify the embeddings corpus with deterministically perturbed
-    // copies (per-copy scale + offset keeps cluster structure, so LSH/IVF
-    // bucket occupancy grows linearly with the corpus) and time candidate
-    // generation + scoring end to end.
-    if (args.headOption.contains("scale-ann")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val amplified = amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor)
-      amplified.persist(); t(s"amplify_${factor}x")(amplified.count())
-      t("cosine_topk")(SimilarityOps.cosineTopK(amplified).count())
-      t("ann_lsh")(SimilarityOps.lshTopK(amplified).count())
-      t("ann_ivf")(SimilarityOps.ivfTopK(amplified).count())
-      t("dedup_embedding_lsh")(SimilarityOps.embeddingNearDupLsh(amplified).count())
-      spark.stop(); return
-    }
-
-    // `Profile scale-pq [factor]` — PQ + LM-scoring decade check.
-    // Embeddings amplify by circular shift (norm-preserving, same as
-    // scale-semantic); documents by positional salt (same as scale).
-    // pqEncode is map-side so it must scale linearly with rows; ADC
-    // scans codes × a CONSTANT broadcast LUT so likewise; IVF-PQ scans
-    // 1/|cells| of that. lm_likelihood's joins carry (doc_id, pos, p)
-    // so the decade cost is the bigram shuffle growing linearly.
-    // The .where guards are the count-prune bench-integrity idiom.
-    if (args.headOption.contains("scale-pq")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      require(factor <= 32, "shift amplifier supports factor <= 32")
-      val base = Tables.embeddings(spark, sfDir)
-      val amplified = (0 until factor).map { k =>
-        if (k == 0) base
-        else base.select((col("vec_id") + lit(k * 10000000L)).as("vec_id"),
-          expr(s"concat(slice(embedding, ${k + 1}, ${64 - k}), slice(embedding, 1, $k))")
-            .as("embedding"),
-          col("label"))
-      }.reduce(_ unionAll _)
-      amplified.persist(); t(s"amplify_${factor}x")(amplified.count())
-      t("embedding_pq")(PqOps.pqEncode(amplified).where(col("qerr") >= 0.0).count())
-      t("ann_pq_adc")(PqOps.annPqAdc(amplified).count())
-      t("ann_ivf_pq")(PqOps.annIvfPq(amplified).count())
-      spark.catalog.clearCache()
-      val damp = amplifyDocs(docs, factor)
-        .withColumn("source", concat(lit("s"), col("doc_id") % 5))
-      damp.persist(); t(s"amplify_docs_${factor}x")(damp.count())
-      t("lm_likelihood")(TextOps.lmLikelihood(damp).where(col("avg_p") >= 0.0).count())
-      t("lm_score_heldout")(TextOps.lmLikelihoodAgainst(
-        damp.filter(col("source") =!= "s0"), damp.filter(col("source") === "s0"))
-        .where(col("avg_p") >= 0.0).count())
-      spark.stop(); return
-    }
-
-    // `Profile scale-semantic [factor]` — the SemDeDup decade check.
-    // Copies are CIRCULAR COMPONENT SHIFTS of the base vectors
-    // (norm-preserving; a shifted random vector is near-orthogonal to
-    // every other copy, so the corpus-wide near-dup rate stays constant
-    // instead of growing quadratically with copy count), and k grows with
-    // the corpus (k = 8 × factor) per the documented SemDeDup operating
-    // discipline — cells stay ~constant-sized, so the within-cell pair
-    // step must scale ~linearly. Factor is capped by the 64 dims (shift
-    // distinctness); ≤ 32 keeps shifts unique per copy.
-    if (args.headOption.contains("scale-semantic")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      require(factor <= 32, "shift amplifier supports factor <= 32")
-      val base = Tables.embeddings(spark, sfDir)
-      val amplified = (0 until factor).map { k =>
-        if (k == 0) base
-        else base.select((col("vec_id") + lit(k * 10000000L)).as("vec_id"),
-          expr(s"concat(slice(embedding, ${k + 1}, ${64 - k}), slice(embedding, 1, $k))")
-            .as("embedding"),
-          col("label"))
-      }.reduce(_ unionAll _)
-      amplified.persist(); t(s"amplify_${factor}x")(amplified.count())
-      val k = 8 * factor
-      t("semantic_clusters")(SemanticOps.semanticClusters(amplified, k).count())
-      spark.catalog.clearCache(); amplified.persist()
-      t("semantic_dedup")(SemanticOps.semanticDedup(amplified, k, minCos = 0.45).count())
-      spark.catalog.clearCache(); amplified.persist()
-      t("semantic_decontaminate_lsh")(
-        SemanticOps.semanticDecontaminateLsh(amplified).count())
-      spark.stop(); return
-    }
-
-    // `Profile scale-curation [factor]` — the DSIR/temperature-mix decade
-    // check. Salted copies keep the original unigrams and add per-copy
-    // salt unigrams, so the hashed-feature space fills toward saturation
-    // but the ratio table stays dims-BOUNDED (≤ 4096 rows at ANY corpus
-    // size) — the broadcast is constant and scoring cost must grow
-    // linearly with tokens. Temperature mixing is one metadata-sized agg
-    // + a map-side gate — the decade cost is the count aggregate alone.
-    // The dsir_weights count() carries the same score_avg count-prune
-    // guard as the registered query: a bare count() lets Catalyst drop
-    // the tdist LEFT join and would time a pruned plan.
-    if (args.headOption.contains("scale-curation")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val damp = amplifyDocs(docs, factor)
-        .withColumn("source", concat(lit("s"), col("doc_id") % 5))
-      damp.persist(); t(s"amplify_docs_${factor}x")(damp.count())
-      val raw = damp.filter(col("source") =!= "s0")
-      val tgt = damp.filter(col("source") === "s0")
-      t("dsir_weights")(SemanticOps.dsirScores(raw, tgt)
-        .where(col("score_avg") >= 0.0).count())
-      t("dsir_select")(SemanticOps.dsirSelect(raw, tgt).count())
-      t("source_temperature_mix")(TextOps.sourceTemperatureMix(
-        damp.withColumn("n_chars", length(col("text")).cast("long"))).count())
-      // classifier decade: model stays (classes × ≤dims) metadata at any
-      // corpus size, so train+classify must both scale linearly
-      val lab = damp.withColumn("lang", concat(lit("l"), col("doc_id") % 3))
-      t("centroid_classify")(SemanticOps.centroidClassify(
-        SemanticOps.centroidTrain(lab.filter(col("doc_id") % 10 =!= 0)),
-        lab.filter(col("doc_id") % 10 === 0)).count())
-      spark.stop(); return
-    }
-
-    // `Profile scale-r7 [factor]` — decade check for the round-7 family:
-    // CDC merge (events changelog amplified by key-shifted copies — both
-    // the window and the full-outer join must scale linearly in the
-    // delta), the JL projection (map-side ⇒ linear), and the
-    // coarse-to-fine funnel (stage-1 candidate work is corpus × nQueries
-    // ⇒ linear in the corpus; stage 2 is shortlist-bounded and must NOT
-    // grow with the corpus).
-    if (args.headOption.contains("scale-r7")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val events = Tables.events(spark, sfDir)
-      val customer = Tables.customer(spark, sfDir)
-      val eventsAmp = amplifyEvents(events, factor)
-      eventsAmp.persist(); t(s"amplify_events_${factor}x")(eventsAmp.count())
-      t("cdc_upsert")(EventOps.cdcUpsert(eventsAmp, customer).count())
-      // SCD2 shares cdc's exchange profile (one user-keyed shuffle,
-      // per-key local sort) — its decade line proves the history
-      // builder inherits it
-      t("scd2_history")(EventOps.scd2History(eventsAmp)
-        .where(col("valid_to_us") > 0L).count())
-      t("interval_join")(
-        JoinOps.sessionOverlapPairs(EventOps.sessionize(eventsAmp)).count())
-      eventsAmp.unpersist()
-      val embAmp = amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor)
-      embAmp.persist(); t(s"amplify_emb_${factor}x")(embAmp.count())
-      t("embedding_project")(SimilarityOps.projectEmbeddings(embAmp).count())
-      t("ann_project_rerank")(SimilarityOps.annProjectRerank(embAmp).count())
-      embAmp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-freq [factor]` — heavy-hitter head-to-head: the MG
-    // sketch→verify path vs the naive distinct-token groupBy top-k, same
-    // corpus, same answer. The naive form's exchange carries EVERY
-    // distinct token; the sketch form's exchanges carry O(m) summaries +
-    // candidate tokens only. Both end in the identical TakeOrdered sink
-    // so neither can be count-pruned. This is the measured basis for
-    // FrequencyOps' scale claim.
-    if (args.headOption.contains("scale-freq")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      // per-op shuffle-write accounting: the 100 TB claim is about
-      // EXCHANGE VOLUME (local[32] has effectively free shuffle
-      // bandwidth, so wall-clock alone can't separate the two shapes)
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-            shuffleBytes.addAndGet(
-              sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        })
-      def tb(name: String)(f: => Long): Unit = {
-        // deterministic drain, not a sleep: the async bus can lag >2 s on
-        // a loaded host and bleed one op's stages into the next op's count
-        org.apache.spark.sql.graftshim.ColumnBridge
-          .drainListenerBus(spark.sparkContext)
-        shuffleBytes.set(0)
-        t(name)(f)
-        org.apache.spark.sql.graftshim.ColumnBridge
-          .drainListenerBus(spark.sparkContext)
-        println(f"[profile] $name%-28s shuffle_write=${shuffleBytes.get()}%,d B")
-      }
-      val damp = amplifyDocs(DedupOps.augmented(docs), factor)
-        .withColumn("source", concat(lit("s"), col("doc_id") % 5))
-      damp.persist(); t(s"amplify_docs_${factor}x")(damp.count())
-      tb("heavy_hitters_sketch")(FrequencyOps.heavyHitters(damp).count())
-      tb("topk_naive_groupby") {
-        val toks = damp
-          .select(explode(split(col("text"), " ", -1)).as("tok"))
-          .filter(length(col("tok")) > 0)
-        toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-          .orderBy(col("cnt").desc, col("tok").asc).limit(20).count()
-      }
-      tb("heavy_hitters_by_source")(
-        FrequencyOps.heavyHittersBySource(damp).count())
-      // the pair where the sketch bound BITES: 3-gram shingles are
-      // nearly all distinct (salted copies make cross-copy shingles
-      // unique), so naive partial aggregation degenerates — its
-      // exchange carries ~every distinct shingle — while the MG
-      // summary stays at partitions × O(m)
-      tb("heavy_ngrams_sketch")(FrequencyOps.heavyNgrams(damp).count())
-      tb("ngrams_naive_groupby") {
-        val grams = damp
-          .withColumn("toks", split(col("text"), " ", -1))
-          .filter(size(col("toks")) >= 3)
-          .select(explode(expr(DedupOps.shingleSql))
-            .as("tok"))
-        grams.groupBy("tok").agg(count(lit(1)).as("cnt"))
-          .orderBy(col("cnt").desc, col("tok").asc).limit(20).count()
-      }
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-profile [factor]` — decade check for the landing-gate
-    // family: the profile/constraint aggregates are single-scan map-side
-    // partials (must be linear), skewReport is one keyed shuffle + a
-    // key-sized summary (linear in rows, NOT in keys²), and the
-    // compaction window grows with the file COUNT only (inventory rows =
-    // nFiles, constant here — its cost must stay flat while the scan
-    // underneath grows).
-    if (args.headOption.contains("scale-profile")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val docsAmp = amplifyDocs(docs, factor)
-      docsAmp.persist(); t(s"amplify_docs_${factor}x")(docsAmp.count())
-      // amplifier carries (doc_id, text) — restore the profiled metadata
-      val docsFull = docsAmp
-        .withColumn("lang", lit("xx")).withColumn("source", lit("amp"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      t("data_profile")(StatsOps.dataProfile(docsFull).count())
-      t("compaction_plan")(
-        LayoutOps.compactionPlan(LayoutOps.fileInventory(docsFull)).count())
-      // release diff vs the line-deduped rewrite: digest join must stay
-      // linear — the shuffle carries (key, digest), never text
-      t("output_diff")(StatsOps.outputDiff(docsFull,
-        DedupOps.lineDedup(docsFull), "doc_id", "text", "text_dedup").count())
-      docsAmp.unpersist()
-      val liAmp = amplifyLineitem(Tables.lineitem(spark, sfDir), factor)
-      liAmp.persist(); t(s"amplify_lineitem_${factor}x")(liAmp.count())
-      t("constraint_check")(StatsOps.constraintCheck(liAmp).count())
-      // l_partkey NOT shifted: keys get factor× hotter — the stress case
-      t("skew_report")(SkewOps.skewReport(liAmp, "l_partkey").count())
-      // regime line: show which boundary derivation the selector engages
-      // at this scale (raw_exact at 1×, hist_exact once rows exceed the
-      // raw reducer bound — the cutover the decade ladder exists to prove)
-      printBinsRegime(liAmp)
-      t("quantile_bins")(StatsOps.quantileBins(liAmp).count())
-      // the abs-guard filter references z, so count() cannot column-prune
-      // the standardization arithmetic (and with it the Σy² moment sums
-      // whose overflow-safety this check exists to exercise); NULL-z rows
-      // (σ=0 groups) drop out of the count, which is fine for a timing
-      t("zscore_normalize")(StatsOps.zscoreNormalize(liAmp)
-        .filter(abs(col("z")) >= 0.0).count())
-      t("constraint_route")(StatsOps.constraintRoute(liAmp).count())
-      liAmp.unpersist()
-      // drift: same-density copies shifted by 40 days keep the bucket
-      // count fixed — cost must be the linear scan + O(buckets) shuffle
-      val evAmp = amplifyEvents(Tables.events(spark, sfDir), factor)
-      evAmp.persist(); t(s"amplify_events_${factor}x")(evAmp.count())
-      t("drift_check")(StatsOps.driftCheck(evAmp).count())
-      evAmp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-100 [factor]` — the CENTURY ladder (VERDICT r7 item
-    // 7): one cheapest representative per operator family, amplifiable to
-    // 100× (the perturbation embedding amplifier has no factor cap,
-    // unlike the ≤32 circular-shift one). Run at 1/10/100 and read the
-    // slopes; every line carries a count-prune-safe guard (or ends in an
-    // aggregation) so count() times the audited arithmetic, not a pruned
-    // plan. quantile_bins additionally prints its selector regime — the
-    // raw_exact → hist_exact cutover is itself a graded behavior.
-    if (args.headOption.contains("scale-100")) {
-      val factor = if (args.length > 1) args(1).toInt else 100
-      // --- documents-fed families ---
-      val damp0 = amplifyDocs(DedupOps.augmented(docs), factor)
-      val damp = damp0
-        .withColumn("lang", lit("xx"))
-        .withColumn("source", concat(lit("s"), col("doc_id") % 5))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      damp.persist(); t(s"amplify_docs_${factor}x")(damp.count())
-      // dedup family: digest-keyed exact dedup — text never shuffles
-      t("exact_dedup")(DedupOps.exactDedup(damp).count())
-      // text-quality family: per-doc battery (map-side; quality_score
-      // guard forces the arithmetic under count())
-      t("text_stats")(TextOps.textStats(damp)
-        .where(col("quality_score") >= 0.0).count())
-      // curation/mixing family: one metadata-sized agg + map-side gate
-      t("source_temperature_mix")(TextOps.sourceTemperatureMix(damp).count())
-      // packing family: one-shuffle prefix-sum bin assignment — plus the
-      // sharded variant head-to-head (the parallelism-cap fix: 5-source
-      // windows vs sources×shards, one pass, shard-encoded ids; pack_id
-      // guard stops count() column-pruning the window arithmetic)
-      t("pack_sequences")(TextOps.packSequences(damp).count())
-      t("pack_shards")(TextOps.packSequencesSharded(damp)
-        .where(col("pack_id") >= 0L).count())
-      // frequency family: MG sketch (O(m)/partition exchange) + exact
-      // verify over broadcast candidates — the limit(k) sink forces the
-      // whole two-pass pipeline to execute (no prune possible: the
-      // top-k rows ARE the output)
-      t("heavy_hitters")(FrequencyOps.heavyHitters(damp).count())
-      damp.unpersist()
-      // --- lineitem-fed families ---
-      val liAmp = amplifyLineitem(Tables.lineitem(spark, sfDir), factor)
-      liAmp.persist(); t(s"amplify_lineitem_${factor}x")(liAmp.count())
-      // landing-gate family: single-scan constraint verdicts
-      t("constraint_check")(StatsOps.constraintCheck(liAmp).count())
-      // stats family + the regime selector proof: raw_exact at 1×,
-      // hist_exact once rows pass the raw bound (600k × factor > 4M
-      // from factor ≈ 7 up)
-      printBinsRegime(liAmp)
-      t("quantile_bins")(StatsOps.quantileBins(liAmp).count())
-      // layout family: map-side curve derivation (hilbert guard forces it)
-      t("hilbert_layout")(LayoutOps.hilbertLayout(liAmp)
-        .where(col("hilbert") >= 0L).count())
-      liAmp.unpersist()
-      // --- events-fed families ---
-      val evAmp = amplifyEvents(Tables.events(spark, sfDir), factor)
-      evAmp.persist(); t(s"amplify_events_${factor}x")(evAmp.count())
-      // drift family (equi-depth): boundary derivation bounded by
-      // distinct cents, assignment map-side, O(buckets) shuffle
-      t("drift_check_quantile")(StatsOps.driftCheckQuantile(evAmp).count())
-      evAmp.unpersist()
-      // --- embeddings-fed families ---
-      val embAmp = amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor)
-      embAmp.persist(); t(s"amplify_emb_${factor}x")(embAmp.count())
-      // similarity family: LSH bucketed top-k (candidates bucket-bounded)
-      t("ann_lsh")(SimilarityOps.lshTopK(embAmp).count())
-      // PQ family: map-side encode (qerr guard forces the code math)
-      t("embedding_pq")(PqOps.pqEncode(embAmp).where(col("qerr") >= 0.0).count())
-      // semantic family: LSH-bucketed decontamination (bounded candidates)
-      t("semantic_decontaminate_lsh")(
-        SemanticOps.semanticDecontaminateLsh(embAmp).count())
-      embAmp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-r9 [factor]` — the round-9 ladder additions (VERDICT
-    // r8 items 3 + 5): the families the century ladder was missing —
-    // multimodal ingest (FILE-count scaling: thousands of fixture files
-    // through the listing+digest path), CDC merge (changelog 100×, fixed
-    // snapshot), the join family (as-of + interval-overlap), one
-    // recall-suite rep — plus the HOT-KEY rep: a 50%-hot join key run
-    // through skew_report → saltedJoin at the report's own
-    // recommended_salt, with the unsalted shuffle-hash join as control.
-    if (args.headOption.contains("scale-r9")) {
-      val factor = if (args.length > 1) args(1).toInt else 100
-      // `scale-r9 <factor> skew` reruns ONLY the hot-key section (it has
-      // its own AQE-on/off matrix and deserves solo arbitration);
-      // `scale-r9 <factor> write` ONLY the clustered-writer section
-      val mode = if (args.length > 2) args(2) else "all"
-      val skewOnly = mode == "skew"
-      // --- clustered WRITE path (the family VERDICT r8 proved hides
-      // bugs): optimizeTableExact over the amplified corpus — planner
-      // sizing + equi-depth curve binning + full text payload encode to
-      // parquet, then the read-back scan. Text doubles per decade (doc
-      // amplifier), so the write is byte-bound like production.
-      if (mode == "write" || mode == "all") {
-        val dAmp = amplifyDocs(docs, factor)
-          .withColumn("n_chars", length(col("text")).cast("long"))
-        dAmp.persist(); t(s"amplify_docs_${factor}x")(dAmp.count())
-        val wdir = MultimodalOps.fixtureDir(sfDir + s"_r9w$factor")
-        val curved = dAmp.select(col("doc_id"), col("text"),
-          LayoutOps.mortonCode(pmod(col("doc_id"), lit(256L)),
-            pmod(col("n_chars"), lit(256L)), 8).as("curve"))
-        t("optimize_write_exact")(LayoutOps.optimizeTableExact(curved,
-          LayoutOps.fileInventory(dAmp), wdir, "curve",
-          targetBytes = 1024L * 1024))
-        t("optimized_readback")(spark.read.parquet(wdir)
-          .where(col("curve") >= 0L).count())
-        dAmp.unpersist()
-        if (mode == "write") { spark.stop(); return }
-      }
-      // --- split-leakage pair (`scale-r9 <f> leak` only): the lexical
-      // audit over the salted amplified corpus (cross-copy shingles are
-      // salt-disjoint, so pairs stay linear in the planted dups), and
-      // the semantic audit over the perturbation-amplified embeddings —
-      // where copies sit at cos ≈ 0.99997 > the 0.999 bar, so the pair
-      // OUTPUT is quadratic in factor BY CONSTRUCTION (the amplified
-      // corpus genuinely contains those near-dups): the embedding
-      // homogeneity hazard, measured — see the SimHash section of
-      // PLANS.md for the lexical precedent.
-      if (mode == "leak") {
-        val dl = amplifyDocs(DedupOps.augmented(docs), factor)
-        dl.persist(); t(s"amplify_leakdocs_${factor}x")(dl.count())
-        t("split_leakage")(DedupOps.splitLeakage(dl).count())
-        // the remedy at the same scale: cluster-atomic assignment over
-        // the identical pair graph (adds the component labeling + one
-        // broadcast map join on top of the audit's pair cost)
-        t("leakage_safe_split")(DedupOps.leakageSafeSplit(dl)
-          .where(length(col("split")) >= 0).count())
-        dl.unpersist()
-        val el = amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor)
-        el.persist(); t(s"amplify_emb_${factor}x")(el.count())
-        t("split_leakage_semantic")(
-          SimilarityOps.splitLeakageSemantic(el).count())
-        // raw verified-pair count — the number that quantifies the
-        // quadratic-output hazard (rows, not the 6 grouped crossings)
-        t("semantic_neardup_pairs")(
-          SimilarityOps.embeddingNearDupLsh(el).count())
-        el.unpersist()
-        spark.stop(); return
-      }
-      if (!skewOnly) {
-      // --- multimodal ingest: file count scales with factor ---
-      // contiguous re-key so writeFixtureTree's doc_id < maxDocId filter
-      // admits every copy: factor × 256 docs ⇒ factor × 288 files (the
-      // /8 dup planting included) through ONE binaryFile listing+digest
-      // pass. The canonical-length guard forces the digest+window
-      // arithmetic under count() (the count-prune column rule).
-      val base256 = docs.filter(col("doc_id") < 256L).select("doc_id", "text")
-      val fileDocs = (0 until factor).map { k =>
-        if (k == 0) base256
-        else base256.select((col("doc_id") + lit(k * 256L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionAll _)
-      val fix = MultimodalOps.fixtureDir(sfDir + s"_r9x$factor")
-      t(s"write_fixture_${factor}x256") {
-        MultimodalOps.writeFixtureTree(fileDocs, fix,
-          maxDocId = 256L * factor); 256L * factor
-      }
-      t("multimodal_manifest")(MultimodalOps.ingestManifest(spark, fix)
-        .where(length(col("canonical")) >= 0).count())
-      }
-      // --- events-fed: CDC merge + join family ---
-      val evAmp = amplifyEvents(Tables.events(spark, sfDir), factor)
-      evAmp.persist(); t(s"amplify_events_${factor}x")(evAmp.count())
-      if (!skewOnly) {
-      // changelog grows factor×; the customer snapshot stays fixed (the
-      // production shape: a bounded dimension absorbing a growing log)
-      t("cdc_upsert")(EventOps.cdcUpsert(evAmp,
-        Tables.customer(spark, sfDir)).count())
-      // as-of join: the registered query's shape over the amplified log
-      val asofL = evAmp.withColumn("ts_us", expr("ts div 1000"))
-        .select("event_id", "user_id", "ts_us", "event_type")
-      val asofR = evAmp.withColumn("ts_us", expr("ts div 1000"))
-        .filter(col("event_type") === "signup")
-        .select("user_id", "ts_us", "event_id", "value")
-      t("asof_join")(JoinOps.asofJoin(asofL, asofR, "user_id", "ts_us",
-        "event_id", Seq("value")).count())
-      // interval-overlap: 40-day copy shifts keep sessions temporally
-      // disjoint across copies, so pair output grows linearly
-      t("interval_join")(JoinOps.sessionOverlapPairs(
-        EventOps.sessionize(evAmp)).count())
-      }
-      // --- hot-key rep (VERDICT r8 item 5): 50% of events on ONE user,
-      // 64 cold users — max/mean ≈ 32, so the report recommends ~33 and
-      // the hot key is 16× a 32-reducer's fair share (visible skew).
-      // saltedJoin at RECOMMENDED_SALT vs the unsalted shuffle-hash
-      // control on the identical inputs; the user_total guard keeps the
-      // join alive under count().
-      val hot = evAmp.select(col("event_id"),
-        when(pmod(col("event_id"), lit(2L)) === 0L, lit(0L))
-          .otherwise(pmod(col("user_id"), lit(64L)) + 1L).as("user_id"))
-      hot.persist(); t(s"hot_events_${factor}x")(hot.count())
-      val rep = SkewOps.skewReport(hot, "user_id").head()
-      val salt = rep.getAs[Long]("recommended_salt")
-      println(s"[profile] skew_report n_keys=${rep.getAs[Long]("n_keys")} " +
-        s"max_per_key=${rep.getAs[Long]("max_per_key")} " +
-        s"skew_factor=${"%.1f".format(rep.getAs[Double]("skew_factor"))} " +
-        s"recommended_salt=$salt")
-      val dim = hot.groupBy("user_id").agg(count(lit(1)).as("user_total"))
-      dim.persist(); dim.count()
-      def unsalted() = hot.join(dim.hint("shuffle_hash"), Seq("user_id"))
-        .where(col("user_total") >= 0L).count()
-      def salted() = SkewOps.saltedJoin(hot, dim, "user_id",
-          col("event_id"), salt.toInt)
-        .where(col("user_total") >= 0L).count()
-      // Matrix: AQE ON (batch default — AQE's skew-join splits the hot
-      // shuffle partition at runtime, so salting should be a wash
-      // here), then AQE OFF — the regime saltedJoin exists for
-      // (streaming micro-batch joins and deterministic plans have no
-      // AQE re-planning), where the hot key's rows land on ONE reducer
-      // unless the plan itself spreads them.
-      t("hot_join_unsalted_aqe")(unsalted())
-      t(s"hot_join_salted_x${salt}_aqe")(salted())
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      t("hot_join_unsalted_noaqe")(unsalted())
-      t(s"hot_join_salted_x${salt}_noaqe")(salted())
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      // OUTPUT-AMPLIFIED pair: the regime where the straggler is real.
-      // With a 1-row-per-key dim the hot reducer only STREAMS its 50%
-      // of the probe side — bandwidth-bound, ≲1 s even at 100× (the
-      // wash measured above). Give the dim multiplicity 8 (the SCD-2 /
-      // per-key-attribute fan-out shape) and the hot reducer must EMIT
-      // 8 × hot-rows — that output amplification is what salting
-      // spreads. AQE off: the streaming-micro-batch regime saltedJoin
-      // is documented for (no runtime re-planning there).
-      val dim8 = dim.withColumn("v",
-        explode(sequence(lit(0), lit(7))))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      t("hot_join_x8_unsalted_noaqe")(
-        hot.join(dim8.hint("shuffle_hash"), Seq("user_id"))
-          .where(col("user_total") >= 0L).count())
-      t(s"hot_join_x8_salted_x${salt}_noaqe")(
-        SkewOps.saltedJoin(hot, dim8, "user_id", col("event_id"), salt.toInt)
-          .where(col("user_total") >= 0L).count())
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      t("hot_join_x8_unsalted_aqe")(
-        hot.join(dim8.hint("shuffle_hash"), Seq("user_id"))
-          .where(col("user_total") >= 0L).count())
-      // DOWNSTREAM-SHUFFLE pair: count-only probes emit rows for free
-      // inside whole-stage codegen (the wash above even at 80M output
-      // rows); a real pipeline MATERIALIZES the joined output into the
-      // next shuffle/write, paying serialization per row — the cost the
-      // hot task concentrates. repartition on a derived key forces
-      // exactly that emit without adding reduce-side work.
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      def shuffled(j: org.apache.spark.sql.DataFrame) = j
-        .repartition(32, pmod(hash(col("event_id") + col("v")), lit(997)))
-        .where(col("user_total") >= 0L).count()
-      t("hot_join_x8_shuf_unsalted")(shuffled(
-        hot.join(dim8.hint("shuffle_hash"), Seq("user_id"))))
-      t(s"hot_join_x8_shuf_salted_x$salt")(shuffled(
-        SkewOps.saltedJoin(hot, dim8, "user_id", col("event_id"), salt.toInt)))
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      dim.unpersist(); hot.unpersist(); evAmp.unpersist()
-      if (!skewOnly) {
-      // --- recall-suite rep: probe-1 LSH vs brute truth, corpus factor× ---
-      val embAmp = amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor)
-      embAmp.persist(); t(s"amplify_emb_${factor}x")(embAmp.count())
-      t("ann_recall")(SimilarityOps.annRecall(embAmp)
-        .where(col("recall_at_k") >= 0.0).count())
-      embAmp.unpersist()
-      }
-      spark.stop(); return
-    }
-
-    // `Profile scale-r11 [factor]` — the round-11 ladder (VERDICT r10
-    // item 6): (a) the REAL-decode family at FILE-count scale — factor ×
-    // 256 BMP fixtures through one binaryFile listing + ImageIO decode +
-    // the 2× resample (decode cost is per-file ⇒ both must be linear);
-    // (b) the capped pair surfaces under a HOMOGENIZED-corpus amplifier —
-    // a flood clique of factor × 2048 byte-identical docs (and identical
-    // vectors) on top of the salted corpus, the regime the hot-bucket
-    // fuse exists for: uncapped, the flood's pair output is quadratic in
-    // factor (C(2048f, 2)); capped, it is pinned at C(1024, 2) while the
-    // linear costs (signatures, the bucket-count pre-pass, the rank over
-    // the flooded keys only) grow with the corpus. The uncapped control
-    // runs at factor ≤ 10 only (at 100× it would emit 2·10¹⁰ pairs — the
-    // cliff the fuse prevents, not a line to record); (c) the r9/r10
-    // latecomers that never got decade lines: k_anonymity,
-    // quality_calibrated (post null-contract fix), cross_source_dups,
-    // heavy_hitters_by_source.
-    if (args.headOption.contains("scale-r11")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      // --- (a) real decode: file-count scaling ---
-      val base256 = docs.filter(col("doc_id") < 256L).select("doc_id", "text")
-      val fileDocs = (0 until factor).map { k =>
-        if (k == 0) base256
-        else base256.select((col("doc_id") + lit(k * 256L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionAll _)
-      val fix = MultimodalOps.fixtureDir(sfDir + s"_r11bmp$factor")
-      t(s"write_bmp_${factor}x256") {
-        MultimodalOps.writeBmpFixtureTree(fileDocs, fix,
-          maxDocId = 256L * factor); 256L * factor
-      }
-      val files = spark.read.format("binaryFile").load(fix)
-      t("multimodal_decode")(MultimodalOps.decodeImages(spark, files)
-        .toDF().where(col("n_px") > 0L).count())
-      t("multimodal_resize_real")(MultimodalOps.resizeDecoded(spark, files)
-        .toDF().where(col("n_px") > 0L).count())
-      // --- (b) capped pair surfaces, homogenized corpus ---
-      val floodText = "the very same homogenized document body repeated " +
-        "verbatim across the whole flood clique of this corpus"
-      val flood = spark.range(factor * 2048L)
-        .select((col("id") + 900000000L).as("doc_id"), lit(floodText).as("text"))
-      val mixed = DedupOps.augmented(docs).unionAll(flood)
-      mixed.persist(); t(s"flooded_docs_${factor}x")(mixed.count())
-      t("minhash_bucket_stats")(DedupOps.minhashBucketStats(mixed).count())
-      t("minhash_pairs_capped")(DedupOps.minhashPairs(mixed).count())
-      if (factor <= 10) {
-        spark.catalog.clearCache(); mixed.persist()
-        t("minhash_pairs_uncapped")(
-          DedupOps.minhashPairs(mixed, maxBucket = Int.MaxValue).count())
-      }
-      spark.catalog.clearCache(); mixed.unpersist()
-      val floodVecs = spark.range(factor * 2048L)
-        .select((col("id") + 900000000L).as("vec_id"),
-          expr("transform(sequence(1, 64), i -> float(0.1))").as("embedding"),
-          lit(0L).as("label"))
-      val mixedEmb = Tables.embeddings(spark, sfDir).unionAll(floodVecs)
-      mixedEmb.persist(); t(s"flooded_emb_${factor}x")(mixedEmb.count())
-      t("embedding_bucket_stats")(
-        SimilarityOps.embeddingBucketStats(mixedEmb).count())
-      t("embedding_lsh_capped")(
-        SimilarityOps.embeddingNearDupLsh(mixedEmb).count())
-      if (factor <= 10) {
-        t("embedding_lsh_uncapped")(SimilarityOps.embeddingNearDupLsh(
-          mixedEmb, maxBucket = Int.MaxValue).count())
-      }
-      mixedEmb.unpersist()
-      // --- (c) latecomers ---
-      val damp = amplifyDocs(docs, factor)
-        .withColumn("lang", concat(lit("l"), col("doc_id") % 3))
-        .withColumn("source", concat(lit("s"), col("doc_id") % 5))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-      damp.persist(); t(s"amplify_docs_${factor}x")(damp.count())
-      t("k_anonymity")(TextOps.kAnonymityGate(damp).count())
-      t("quality_calibrated")(TextOps.qualityCalibrated(damp)
-        .where(col("pct") >= 0.0).count())
-      t("heavy_hitters_by_source")(
-        FrequencyOps.heavyHittersBySource(damp).count())
-      spark.catalog.clearCache(); damp.persist()
-      t("cross_source_dups")(DedupOps.crossSourceDupMatrix(
-        damp.select("doc_id", "text", "source")).count())
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-recall [factor]` — the sampled-recall estimator's
-    // decade proof (VERDICT r10 item 4's measurement half): the
-    // exhaustive harness vs the content-addressed sampled one on the
-    // SAME amplified corpus, with the recall values printed so the
-    // agreement is part of the record. The sampled form's truth side
-    // shrinks quadratically with the sample rate (both endpoints must
-    // land in the sample), which is what lets the evaluation loop run
-    // at corpus scales where the exhaustive form cannot.
-    if (args.headOption.contains("scale-recall")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val amplified = amplifyDocs(DedupOps.augmented(docs), factor)
-      amplified.persist(); t(s"amplify_docs_${factor}x")(amplified.count())
-      def recallLine(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-        t(name) {
-          val r = df.collect().head
-          val i = r.fieldIndex("recall")
-          println(f"[profile] $name%-28s n_truth=${r.getAs[Long]("n_truth")} " +
-            f"n_found=${r.getAs[Long]("n_found")} recall=" +
-            (if (r.isNullAt(i)) "null" else f"${r.getDouble(i)}%.4f"))
-          1L
-        }
-      recallLine("dedup_recall_exhaustive", DedupOps.dedupRecall(amplified))
-      // clearCache drops the pipelines' internal persists AND the
-      // amplified corpus — re-materialize the corpus OUTSIDE the timed
-      // region so each line times the estimator, not the amplifier
-      spark.catalog.clearCache(); amplified.persist(); amplified.count()
-      recallLine("dedup_recall_sampled_128",
-        DedupOps.dedupRecallSampled(amplified))
-      spark.catalog.clearCache(); amplified.persist(); amplified.count()
-      recallLine("dedup_recall_sampled_64",
-        DedupOps.dedupRecallSampled(amplified, sampleBuckets = 64))
-      spark.catalog.clearCache(); amplified.persist(); amplified.count()
-      recallLine("dedup_recall_sampled_32",
-        DedupOps.dedupRecallSampled(amplified, sampleBuckets = 32))
-      amplified.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-spans [factor]` — decade lines for the span-level /
-    // surgical decontamination pair. The amplifier preserves the
-    // %-50 bench/train split (copy shifts are multiples of 50) and the
-    // positional salt keeps cross-copy grams disjoint, so the benchmark
-    // digest broadcast grows linearly and hit mass stays bounded; the
-    // gram-digest scan dominates and must be linear.
-    if (args.headOption.contains("scale-spans")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val damp = amplifyDocs(DedupOps.augmented(docs), factor)
-      damp.persist(); t(s"amplify_docs_${factor}x")(damp.count())
-      t("decontaminate_spans")(DedupOps.decontaminateSpans(damp).count())
-      spark.catalog.clearCache(); damp.persist(); damp.count()
-      // same count-prune guard as the registered query
-      t("decontaminate_surgical")(DedupOps.decontaminateSurgical(damp)
-        .where(length(col("text_clean")) >= 0).count())
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-recall-stages [factor] [buckets]` — stage
-    // attribution inside the sampled-recall estimator (which sub-stage
-    // stops shrinking with the sample rate).
-    if (args.headOption.contains("scale-recall-stages")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val buckets = if (args.length > 2) args(2).toInt else 32
-      val amplified = amplifyDocs(DedupOps.augmented(docs), factor)
-      amplified.persist(); t(s"amplify_docs_${factor}x")(amplified.count())
-      val sampled = amplified.filter(DedupOps.sampleBucketCol("42") < buckets)
-      t("sampled_count")(sampled.count())
-      t("truth_ngram_jaccard")(DedupOps.ngramJaccardPairs(sampled).count())
-      spark.catalog.clearCache(); amplified.persist(); amplified.count()
-      t("found_minhash_pairs")(DedupOps.minhashPairs(sampled).count())
-      spark.catalog.clearCache(); amplified.persist(); amplified.count()
-      t("recall_full")(DedupOps.dedupRecallSampled(amplified,
-        sampleBuckets = buckets).count())
-      amplified.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-r12 [factor]` — decade lines for the round-12
-    // newcomers and the VERDICT r11 item-6 latecomers: PNG + WAV decode
-    // (file-count scaling, the scale-r11 BMP idiom — decode cost is
-    // per-byte, so the line must be flat-per-file), leakage_safe_split
-    // under BOTH label-join regimes, and the incremental ANN query
-    // (delta vs persisted codes; amplifyEmbeddings spreads copies across
-    // buckets, so per-delta candidate counts stay bounded and the line
-    // must be linear).
-    if (args.headOption.contains("scale-r12")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val base256 = docs.filter(col("doc_id") < 256L).select("doc_id", "text")
-      val fileDocs = (0 until factor).map { k =>
-        if (k == 0) base256
-        else base256.select((col("doc_id") + lit(k * 256L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionAll _)
-      val fixPng = MultimodalOps.fixtureDir(sfDir + s"_r12png$factor")
-      t(s"write_png_${factor}x256") {
-        MultimodalOps.writePngFixtureTree(fileDocs, fixPng,
-          maxDocId = 256L * factor); 256L * factor
-      }
-      t("multimodal_decode_png")(MultimodalOps.decodeImages(spark,
-          spark.read.format("binaryFile").load(fixPng),
-          extPattern = "img_(\\d+)\\.png$")
-        .toDF().where(col("n_px") > 0L).count())
-      val fixWav = MultimodalOps.fixtureDir(sfDir + s"_r12wav$factor")
-      t(s"write_wav_${factor}x256") {
-        MultimodalOps.writeWavFixtureTree(fileDocs, fixWav,
-          maxDocId = 256L * factor); 256L * factor
-      }
-      t("multimodal_decode_wav")(MultimodalOps.decodeAudio(spark,
-          spark.read.format("binaryFile").load(fixWav))
-        .toDF().where(col("n_frames") > 0L).count())
-      val fixGif = MultimodalOps.fixtureDir(sfDir + s"_r12gif$factor")
-      t(s"write_gif_${factor}x256") {
-        MultimodalOps.writeGifFixtureTree(fileDocs, fixGif,
-          maxDocId = 256L * factor); 256L * factor
-      }
-      t("multimodal_frames_real")(MultimodalOps.sampleFramesReal(spark,
-          spark.read.format("binaryFile").load(fixGif))
-        .toDF().where(col("sum_gray") >= 0L).count())
-      // --- leakage-safe split, both label regimes ---
-      val damp = amplifyDocs(DedupOps.augmented(docs), factor)
-      damp.persist(); t(s"amplify_docs_${factor}x")(damp.count())
-      t("leakage_safe_split_bcast")(DedupOps.leakageSafeSplit(damp).count())
-      spark.catalog.clearCache(); damp.persist(); damp.count()
-      t("leakage_safe_split_shuffle")(
-        DedupOps.leakageSafeSplit(damp, broadcastMaxLabels = 0L).count())
-      spark.catalog.clearCache(); damp.unpersist()
-      // --- incremental ANN: delta queries the persisted spine ---
-      val embAmp = amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor)
-      embAmp.persist(); t(s"amplify_emb_${factor}x")(embAmp.count())
-      val baseSide = embAmp.filter(PqOps.annSplitIsIndex())
-      val cbInc = PqOps.trainCodebook(baseSide)
-      val spine = PqOps.annIndex(baseSide, cbInc)
-        .persist()
-      t("ann_index_build")(spine.count())
-      t("ann_index_incremental")(PqOps.annIndexIncremental(spine,
-          embAmp.filter(!PqOps.annSplitIsIndex()), cbInc)
-        .where(col("adc_dist").isNull || col("adc_dist") >= -1e100).count())
-      spine.unpersist(); embAmp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-r13 [factor]` — the ANN index MAINTENANCE LOOP
-    // end-to-end (VERDICT r12 item 5): seed spine + 10 file-source
-    // micro-batches through the REAL annIndexLoop (each batch queries
-    // the persisted codes, then appends its own) + one compaction. The
-    // compactSignatureIndex ladder precedent, embedding side. Driven by
-    // a files stream (maxFilesPerTrigger=1), NOT MemoryStream — vectors
-    // never collect to the driver, so the drive itself is scale-shaped.
-    // Checks: total loop time ~linear in factor, per-batch verdicts
-    // complete (= delta count), file count bounded by compaction
-    // (10 appended slices -> numFiles), rows before/after identical
-    // (appends are deterministic, no replay in this drive).
-    if (args.headOption.contains("scale-r13")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val nBatches = 10
-      // --- mu-law decode at file-count scale (the scale-r12 WAV idiom:
-      // decode cost is per-byte, so the line must be flat-per-file) ---
-      val base256 = docs.filter(col("doc_id") < 256L).select("doc_id", "text")
-      val fileDocs = (0 until factor).map { k =>
-        if (k == 0) base256
-        else base256.select((col("doc_id") + lit(k * 256L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionAll _)
-      val fixUl = MultimodalOps.fixtureDir(sfDir + s"_r13ul$factor")
-      t(s"write_ulaw_${factor}x256") {
-        MultimodalOps.writeUlawFixtureTree(fileDocs, fixUl,
-          maxDocId = 256L * factor); 256L * factor
-      }
-      t("multimodal_decode_ulaw")(MultimodalOps.decodeAudioCompanded(spark,
-          spark.read.format("binaryFile").load(fixUl))
-        .toDF().where(col("n_frames") > 0L).count())
-      val fixAl = MultimodalOps.fixtureDir(sfDir + s"_r13al$factor")
-      t(s"write_alaw_${factor}x256") {
-        MultimodalOps.writeAlawFixtureTree(fileDocs, fixAl,
-          maxDocId = 256L * factor); 256L * factor
-      }
-      t("multimodal_decode_alaw")(MultimodalOps.decodeAudioCompanded(spark,
-          spark.read.format("binaryFile").load(fixAl),
-          extPattern = "al_(\\d+)\\.wav$")
-        .toDF().where(col("n_frames") > 0L).count())
-      val embAmp = amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor)
-      embAmp.persist(); t(s"amplify_emb_${factor}x")(embAmp.count())
-      val baseSide = embAmp.filter(PqOps.annSplitIsIndex())
-      val delta = embAmp.filter(!PqOps.annSplitIsIndex())
-        .select(col("vec_id").cast("long"), col("embedding"))
-      val cb = PqOps.trainCodebook(baseSide)
-      val root = java.nio.file.Files.createTempDirectory("graft_r13_annloop")
-      try {
-        val indexDir = root.resolve("index").toString
-        t("ann_index_seed") {
-          PqOps.annIndex(baseSide, cb).write.mode("overwrite").parquet(indexDir)
-          spark.read.parquet(indexDir).count()
-        }
-        val streamDir = root.resolve("stream")
-        java.nio.file.Files.createDirectories(streamDir)
-        t(s"write_${nBatches}_slices") {
-          (0 until nBatches).foreach { k =>
-            val stage = root.resolve(s"stage_$k")
-            delta.filter(pmod(col("vec_id"), lit(nBatches)) === k)
-              .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-            val listing = java.nio.file.Files.list(stage)
-            val part =
-              try listing
-                .filter(p => p.getFileName.toString.endsWith(".parquet"))
-                .findFirst().orElseThrow()
-              finally listing.close()
-            java.nio.file.Files.move(part,
-              streamDir.resolve(f"slice_$k%02d.parquet"))
-            FixtureDirs.rmTree(stage)
-          }
-          delta.count()
-        }
-        var verdictRows = 0L
-        var batches = 0L
-        val stream = spark.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
-        val t0 = System.nanoTime()
-        val q = graft.streaming.StreamingSemantic.annIndexLoop(
-          spark, stream, indexDir, cb) { (batch, _) =>
-          verdictRows += batch.count(); batches += 1
-        }.start()
-        q.processAllAvailable(); q.stop()
-        println(f"[profile] ann_loop_${nBatches}batches       ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$verdictRows (batches=$batches)")
-        def parquetFiles(dir: String): Long = {
-          val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet")).count()
-          finally s.close()
-        }
-        val filesBefore = parquetFiles(indexDir)
-        var beforeAfter = (0L, 0L)
-        t("compact_ann_index") {
-          beforeAfter = graft.streaming.StreamingSemantic
-            .compactAnnIndex(spark, indexDir, numFiles = 8)
-          beforeAfter._2
-        }
-        println(s"[profile] index files $filesBefore -> ${parquetFiles(indexDir)}; " +
-          s"rows ${beforeAfter._1} -> ${beforeAfter._2}")
-      } finally FixtureDirs.rmTree(root)
-      embAmp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-bpe [factor] [nMerges]` — the BPE training regime
-    // price sheet (VERDICT r12 item 2): the driver-side regime
-    // (bpeTrainAuto's under-bound branch: ONE histogram collect + a
-    // plain Scala loop) vs the distributed loop (2 Spark jobs per
-    // merge) at tokenizer-ish merge counts, on the salted amplified
-    // corpus (amplifyDocs' positional salts supply fresh vocabulary, so
-    // the merge supply doesn't exhaust at the fixture's 31 base words).
-    // Also asserts merge-list parity at full depth — the spec's fixture
-    // parity, re-proven at scale.
-    if (args.headOption.contains("scale-bpe")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val nMerges = if (args.length > 2) args(2).toInt else 1000
-      val damp = amplifyDocs(docs, factor).persist()
-      t(s"amplify_docs_${factor}x")(damp.count())
-      t("word_hist_rows")(BpeOps.wordFreq(damp).count())
-      var local: Seq[(String, String)] = Seq.empty
-      t(s"bpe_local_$nMerges") {
-        local = BpeOps.bpeTrainAuto(damp, nMerges); local.length.toLong
-      }
-      var dist: Seq[(String, String)] = Seq.empty
-      t(s"bpe_distributed_$nMerges") {
-        dist = BpeOps.bpeTrain(damp, nMerges); dist.length.toLong
-      }
-      println(s"[profile] merge parity at depth ${local.length}: ${local == dist}")
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile bpe-merges [n]` — print bpeTrainAuto's merge list on the
-    // RAW documents table at sfDir as a Scala literal: the provenance
-    // run for the frozen trained-merge literal the `bpe_train_segment`
-    // oracle embeds (VERDICT r13 item 2).
-    if (args.headOption.contains("bpe-merges")) {
-      val n = if (args.length > 1) args(1).toInt else 16
-      val merges = BpeOps.bpeTrainAuto(docs, n)
-      println(s"[profile] bpe-merges sfDir=$sfDir n=$n")
-      println(merges.map { case (a, b) =>
-        "(\"" + a + "\", \"" + b + "\")" }.mkString("Seq(", ", ", ")"))
-      spark.stop(); return
-    }
-
-    // `Profile bpe-32k [factor]` — the MEASURED 32k-merge price
-    // (VERDICT r13 item 3): bpeTrainAuto at a tokenizer-realistic
-    // nMerges=32768 on the amplified corpus, with the histogram row
-    // count printed against the collect bound so the regime choice is
-    // visible. Local-regime only — the distributed fallback's ~0.14
-    // s/merge job floor prices to ~75 min at this depth from the
-    // depth-1000 sheet; this run pins the DEFAULT regime's number.
-    if (args.headOption.contains("bpe-32k")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val damp = amplifyDocs(docs, factor).persist()
-      t(s"amplify_docs_${factor}x")(damp.count())
-      var hist: Seq[(String, Long)] = Seq.empty
-      t("word_hist_rows") {
-        hist = BpeOps.wordFreq(damp).collect().iterator
-          .map(r => (r.getString(0), r.getLong(1))).toSeq
-        hist.size.toLong
-      }
-      var fast: Seq[(String, String)] = Seq.empty
-      t("bpe_fast_32768") {
-        fast = BpeOps.bpeTrainLocalFast(hist, 32768); fast.length.toLong
-      }
-      // the reference recount loop is O(depth × vocab) — priced to
-      // ~45 min at a 100k vocab, so the parity run caps at the scale
-      // the 300× sheet measured (the spec suite pins parity besides)
-      if (hist.size <= 40000) {
-        var ref: Seq[(String, String)] = Seq.empty
-        t("bpe_reference_32768") {
-          ref = BpeOps.bpeTrainLocal(hist, 32768); ref.length.toLong
-        }
-        println(s"[profile] full-depth parity fast==reference: ${fast == ref}")
-      } else
-        println(s"[profile] reference loop skipped at ${hist.size} words " +
-          "(O(depth x vocab) recount — the cost the fast loop removes)")
-      println(s"[profile] hist_rows=${hist.size} (collect bound 4000000) " +
-        s"merges_produced=${fast.length} (vocab exhausts below 32768 " +
-        "when every word is a single symbol)")
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-cdc [factor] [nSlices]` — the FULL CDC maintenance
-    // loop priced the way the ANN loop was (VERDICT r13 item 7): init
-    // the snapshot from the customer base, fold nSlices changelog
-    // slices through StreamingCdc.mergeBatch (the foreachBatch body —
-    // per-slice MERGE + bounded rewrite + crash-safe swap), audit file
-    // count + final view. The structural question: the per-slice cost
-    // is one snapshot REWRITE (MERGE's irreducible shape without a
-    // table format's delta log) — flat per slice at fixed corpus, so
-    // the loop is nSlices × snapshot-rewrite, linear in both knobs,
-    // never superlinear.
-    if (args.headOption.contains("scale-cdc")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val nSlices = if (args.length > 2) args(2).toInt else 10
-      val ev = amplifyEvents(Tables.events(spark, sfDir), factor).persist()
-      t(s"amplify_events_${factor}x")(ev.count())
-      val base = Tables.customer(spark, sfDir)
-      val root = java.nio.file.Files.createTempDirectory("graft_r14_cdcloop")
-      try {
-        val snapDir = root.resolve("snapshot").toString
-        t("cdc_init_snapshot") {
-          graft.streaming.StreamingCdc.initSnapshot(spark, base, snapDir)
-          spark.read.parquet(snapDir).count()
-        }
-        def parquetFiles(dir: String): Long = {
-          val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-          try s.filter(p => p.getFileName.toString.endsWith(".parquet")).count()
-          finally s.close()
-        }
-        val sliceSecs = (0 until nSlices).map { i =>
-          val s0 = System.nanoTime()
-          graft.streaming.StreamingCdc.mergeBatch(spark,
-            ev.filter(pmod(col("event_id"), lit(nSlices)) === i), snapDir)
-          (System.nanoTime() - s0) / 1e9
-        }
-        println(f"[profile] cdc_${nSlices}slices_total    ${sliceSecs.sum}%8.2f s  " +
-          f"(first=${sliceSecs.head}%.2f last=${sliceSecs.last}%.2f " +
-          f"median=${sliceSecs.sorted.apply(nSlices / 2)}%.2f)")
-        t("cdc_final_view") {
-          graft.streaming.StreamingCdc.currentView(spark, snapDir).count()
-        }
-        println(s"[profile] snapshot files=${parquetFiles(snapDir)} (bound 8/gen)")
-      } finally FixtureDirs.rmTree(root)
-      ev.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-r14 [factor]` — decade lines for the clustered-
-    // geometry ANN family (round 14): the EVALUATION harness
-    // (`annRecallIncrementalClustered`) carries the documented
-    // quadratic exhaustive-truth side (same acceptance as
-    // dedup_recall; run it only to 10×), while the PRODUCTION path it
-    // measures — frozen-codebook encode + bucket-routed multiprobe ADC
-    // — is linear and runs the full ladder. Amplified vec_ids extend
-    // the integer grid naturally (the geometry derives from the id
-    // domain alone; copy shifts spread clusters and fine values).
-    if (args.headOption.contains("scale-r14")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val emb = amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor)
-        .persist()
-      t(s"amplify_emb_${factor}x")(emb.count())
-      if (factor <= 10)
-        t(s"clustered_recall_${factor}x") {
-          SimilarityOps.annRecallIncrementalClustered(emb).count()
-        }
-      else
-        println(s"[profile] clustered_recall skipped at ${factor}x " +
-          "(exhaustive truth side is quadratic BY DESIGN — " +
-          "evaluation harness, not a production query)")
-      val cg = SimilarityOps.clusteredGeometry(emb)
-      val base = cg.filter(PqOps.annSplitIsIndex(64))
-      val delta = cg.filter(!PqOps.annSplitIsIndex(64))
-      val cb = PqOps.trainCodebook(base, 8, 64)
-      t(s"clustered_found_${factor}x") {
-        PqOps.annIndexIncrementalMultiProbe(
-          PqOps.annIndex(base, cb), delta, cb).count()
-      }
-      emb.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-bm25 [factor]` — decade line for BM25 retrieval
-    // (round 14): queries stay FIXED (the first 8 doc ids — the
-    // decontamination shape audits a fixed suspect set against a
-    // growing corpus), the corpus amplifies. Expected linear: the query
-    // vocabulary broadcast-filters the token explode map-side, so tf /
-    // df / scored-pair volume grows with MATCHES, not corpus vocabulary;
-    // the dl join is skinny-long equi. The positional salts amplifyDocs
-    // appends also enter the query vocab (doc_id < 8 includes copy-0
-    // originals only, whose tokens the copies share), keeping the
-    // match rate honest rather than vanishing.
-    if (args.headOption.contains("scale-bm25")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val damp = amplifyDocs(docs, factor).persist()
-      t(s"amplify_docs_${factor}x")(damp.count())
-      t(s"bm25_topk_${factor}x")(TextOps.bm25TopK(damp).count())
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-retrieval [factor]` — decade lines for the hybrid
-    // retrieval family (round 14). Three claims priced separately:
-    //  - hybrid_rrf: sparse channel is the scale-bm25 shape; the dense
-    //    brute-force channel adds one (doc_id, dim) count shuffle and a
-    //    partial-aggregated (q_id, doc_id) dot shuffle bounded by
-    //    queries × docs — linear in the corpus at fixed query count.
-    //  - bm25_index_write: full index build + parquet write — the
-    //    once-per-slice cost, linear by construction.
-    //  - bm25_inc_fold_score: fold a FIXED-size delta (the 1× slice —
-    //    a daily increment does not grow with the archive) into the
-    //    persisted index and score the fixed query set. The fold
-    //    itself is delta+vocab-sized; scoring reads postings (skinny
-    //    columnar) instead of re-exploding corpus text, so the line
-    //    should grow SLOWER than bm25_topk's inline recompute.
-    if (args.headOption.contains("scale-retrieval")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val damp = amplifyDocs(docs, factor).persist()
-      t(s"amplify_docs_${factor}x")(damp.count())
-      t(s"hybrid_rrf_${factor}x") {
-        RetrievalOps.hybridRrf(damp, col("doc_id") < 8).count()
-      }
-      t(s"bm25_prf_${factor}x") {
-        RetrievalOps.bm25Prf(damp, col("doc_id") < 8).count()
-      }
-      t(s"hybrid_rrf_lsh_${factor}x") {
-        RetrievalOps.hybridRrfLsh(damp, col("doc_id") < 8).count()
-      }
-      val root = java.nio.file.Files.createTempDirectory("graft_r14_bm25idx")
-      try {
-        val base = damp.filter(col("doc_id") % 5 =!= 3)
-        val fixedDelta = docs.filter(col("doc_id") % 5 === 3)
-        t(s"bm25_index_write_${factor}x") {
-          RetrievalOps.writeBm25Index(
-            RetrievalOps.bm25BuildIndex(base), root.toString)
-          spark.read.parquet(root.toString + "/postings").count()
-        }
-        val idx = RetrievalOps.readBm25Index(spark, root.toString)
-        t(s"bm25_inc_fold_score_${factor}x") {
-          RetrievalOps.bm25RanksFromIndex(
-            RetrievalOps.bm25MergeIndex(idx,
-              RetrievalOps.bm25BuildIndex(fixedDelta)),
-            RetrievalOps.queryTerms(docs, col("doc_id") < 8)).count()
-        }
-      } finally FixtureDirs.rmTree(root)
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-r15 [factor]` — decade lines for the round-15
-    // retrieval additions. Claims priced:
-    //  - bm25_prf_index: the PRF PRODUCTION shape — score from an
-    //    already-persisted index. Two lines: the once-per-slice index
-    //    build+write (linear; amortized across every audit that reuses
-    //    it) and the per-audit PRF scoring, which reads skinny postings
-    //    instead of re-exploding corpus text twice — must beat the
-    //    inline bm25_prf decade (167.8 s at 100×, recorded r14).
-    //  - retrieval_recall vs its SAMPLED twin at two knob settings
-    //    (128/256 and 32/256): the harness's own scale path — the
-    //    sampled estimator runs the same channels over the co-addressed
-    //    sub-corpus, so its line should track sampleBuckets/256 of the
-    //    exhaustive one.
-    //  - hybrid_rrf_index: annIndex build+write (once per slice) + the
-    //    fused query over the persisted codes.
-    if (args.headOption.contains("scale-r15")) {
-      val factor = if (args.length > 1) args(1).toInt else 10
-      val damp = amplifyDocs(docs, factor).persist()
-      t(s"amplify_docs_${factor}x")(damp.count())
-      val root = java.nio.file.Files.createTempDirectory("graft_r15")
-      try {
-        val idxDir = root.resolve("bm25idx").toString
-        t(s"bm25_idx_build_write_${factor}x") {
-          RetrievalOps.writeBm25Index(RetrievalOps.bm25BuildIndex(damp),
-            idxDir)
-          spark.read.parquet(idxDir + "/postings").count()
-        }
-        val idx = RetrievalOps.readBm25Index(spark, idxDir)
-        t(s"bm25_prf_index_${factor}x") {
-          RetrievalOps.bm25PrfFromIndex(idx,
-            RetrievalOps.queryTerms(damp, col("doc_id") < 8)).count()
-        }
-        t(s"retrieval_recall_${factor}x")(
-          RetrievalOps.retrievalRecall(damp).count())
-        t(s"retrieval_recall_sampled128_${factor}x")(
-          RetrievalOps.retrievalRecallSampled(damp).count())
-        t(s"retrieval_recall_sampled32_${factor}x")(
-          RetrievalOps.retrievalRecallSampled(damp, sampleBuckets = 32)
-            .count())
-        val annDir = root.resolve("annidx").toString
-        t(s"hybrid_rrf_index_${factor}x") {
-          RetrievalOps.hybridRrfIndexPersisted(spark, damp,
-            col("doc_id") < 8, annDir).count()
-        }
-      } finally FixtureDirs.rmTree(root)
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-r15b [factor] [sampleBuckets]` — per-channel
-    // breakdown of the recall harness at scale: times the corpus
-    // materialization, each channel, and the full harness separately so
-    // the sampled twin's cost model is attributed, not guessed.
-    if (args.headOption.contains("scale-r15b")) {
-      val factor = if (args.length > 1) args(1).toInt else 100
-      val buckets = if (args.length > 2) args(2).toInt else 32
-      val damp = amplifyDocs(docs, factor).persist()
-      t(s"amplify_docs_${factor}x")(damp.count())
-      val corpus = DedupOps.augmented(damp)
-        .filter(DedupOps.coSampleBucketCol("42") < buckets)
-      val isQuery = col("doc_id") >= 100000L && col("doc_id") < 100080L
-      t(s"corpus_count_b${buckets}_${factor}x")(corpus.count())
-      t(s"bm25_channel_b${buckets}_${factor}x")(
-        RetrievalOps.bm25Ranks(corpus, isQuery, 10).count())
-      t(s"dense_channel_b${buckets}_${factor}x")(
-        RetrievalOps.denseRanks(corpus, isQuery, 10).count())
-      t(s"recall_harness_b${buckets}_${factor}x")(
-        RetrievalOps.retrievalRecallSampled(damp, sampleBuckets = buckets)
-          .count())
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile scale-r15c [factor] [sampleBuckets]` — stage attribution
-    // INSIDE the BM25 channel on the (sampled) recall corpus: the r15b
-    // breakdown showed a ~110 s component of bm25Ranks that does not
-    // shrink with the sample; this mode reproduces the channel's
-    // intermediate frames and times each.
-    if (args.headOption.contains("scale-r15c")) {
-      val factor = if (args.length > 1) args(1).toInt else 100
-      val buckets = if (args.length > 2) args(2).toInt else 32
-      val damp = amplifyDocs(docs, factor).persist()
-      t(s"amplify_docs_${factor}x")(damp.count())
-      val corpus = DedupOps.augmented(damp)
-        .filter(DedupOps.coSampleBucketCol("42") < buckets)
-      val isQuery = col("doc_id") >= 100000L && col("doc_id") < 100080L
-      val toksCol = split(col("text"), " ", -1)
-      val qterms = RetrievalOps.queryTerms(corpus, isQuery)
-      t(s"qterms_b${buckets}")(qterms.count())
-      val qvocab = qterms.select("word").distinct()
-      t(s"qvocab_b${buckets}")(qvocab.count())
-      val toks = corpus.select(col("doc_id"), explode(toksCol).as("word"))
-        .join(broadcast(qvocab), "word")
-      t(s"toks_b${buckets}")(toks.count())
-      val tf = toks.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      t(s"tf_b${buckets}")(tf.count())
-      val dfT = toks.groupBy("word")
-        .agg(countDistinct(col("doc_id")).as("df"))
-      t(s"df_b${buckets}")(dfT.count())
-      val dl = corpus.select(col("doc_id"),
-        size(toksCol).cast("long").as("dl"))
-      t(s"dl_b${buckets}")(dl.count())
-      t(s"bm25_full_b${buckets}")(
-        RetrievalOps.bm25Ranks(corpus, isQuery, 10).count())
-      damp.unpersist()
-      spark.stop(); return
-    }
-
-    // `Profile recall-inc-sweep` — the incremental-ANN recall/cost knob
-    // sheet: probe-1 recall is chance-level on the near-orthogonal
-    // synthetic corpus (PLANS.md), so quantify BOTH levers a deployment
-    // would turn — bucket coarseness (nPlanes 8/6/4: fewer planes →
-    // bigger buckets → more candidates scored) and probing width
-    // (probe-1 vs hamming-1 multi-probe) — with the MEASURED mean
-    // candidate count per delta vector next to each recall, so the
-    // trade is priced, not asserted. Runs at the registered sf0.01
-    // geometry (m=4, k=16).
-    if (args.headOption.contains("recall-inc-sweep")) {
-      val emb = Tables.embeddings(spark, sfDir)
-      val base = emb.filter(PqOps.annSplitIsIndex())
-      val nDelta = emb.filter(!PqOps.annSplitIsIndex()).count().max(1L)
-      for (planes <- Seq(8, 6, 4)) {
-        val cb = PqOps.trainCodebook(base)
-        val idxBuckets = PqOps.annIndex(base, cb, planes)
-          .groupBy("bucket").agg(count(lit(1)).as("n"))
-        val deltaBuckets = PqOps.annIndex(
-            emb.filter(!PqOps.annSplitIsIndex()), cb, planes)
-          .select(col("bucket").as("d_bucket"))
-        // Outer coalesce guards the EMPTY-delta case (sum over zero rows
-        // is SQL NULL → getLong NPE); the inner one handles unmatched
-        // left-join rows.
-        val cand1 = deltaBuckets.join(idxBuckets,
-            col("d_bucket") === col("bucket"), "left")
-          .agg(coalesce(sum(coalesce(col("n"), lit(0L))), lit(0L)))
-          .head().getLong(0)
-        val candMp = (0 until planes).map { bit =>
-          deltaBuckets.join(idxBuckets,
-              col("d_bucket").bitwiseXOR(lit(1L << bit)) === col("bucket"), "left")
-            .agg(coalesce(sum(coalesce(col("n"), lit(0L))), lit(0L)))
-            .head().getLong(0)
-        }.sum + cand1
-        val r1 = SimilarityOps.annRecallIncremental(emb, nPlanes = planes)
-          .agg(avg("recall_at_k")).head().getDouble(0)
-        val rmp = SimilarityOps.annRecallIncrementalMultiProbe(emb, nPlanes = planes)
-          .agg(avg("recall_at_k")).head().getDouble(0)
-        println(f"[profile] recall_inc planes=$planes " +
-          f"probe1=$r1%.4f (cand/q=${cand1.toDouble / nDelta}%.1f)  " +
-          f"multiprobe=$rmp%.4f (cand/q=${candMp.toDouble / nDelta}%.1f)")
-      }
-      // Codebook-CAPACITY section: routing sweeps above show recall does
-      // NOT track candidate mass — the ADC distance itself is the
-      // bottleneck when m·log2(k) bits can't separate near-orthogonal
-      // vectors. Sweep (m, k) at fixed planes=8.
-      for ((m, k) <- Seq((4, 16), (8, 16), (8, 64), (16, 64))) {
-        val r1 = SimilarityOps.annRecallIncremental(emb, m = m, k = k)
-          .agg(avg("recall_at_k")).head().getDouble(0)
-        val rmp = SimilarityOps.annRecallIncrementalMultiProbe(emb, m = m, k = k)
-          .agg(avg("recall_at_k")).head().getDouble(0)
-        println(f"[profile] recall_inc m=$m k=$k (${m * (32 - Integer.numberOfLeadingZeros(k - 1))}%d code bits) " +
-          f"probe1=$r1%.4f multiprobe=$rmp%.4f")
-      }
-      spark.stop(); return
-    }
-
-    if (args.headOption.contains("codegen-debug")) {
-      val df = spark.range(1000000).groupBy(expr("id % 7").as("k"))
-        .agg(sum("id").as("s"))
-      df.collect()
-      println("=== executedPlan.toString after execution ===")
-      println(df.queryExecution.executedPlan.toString)
-      spark.stop(); return
-    }
-
-    if (args.contains("audit")) {
-      // Plan-health audit: for each registered query, summarize scan
-      // pruning (ReadSchema), join strategies, exchanges, and codegen.
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        // Execute before reading the plan: under AQE the pre-execution
-        // string is the initial plan with no WholeStageCodegen stages, so
-        // codegen coverage (and runtime join demotions) only show in the
-        // final plan.
-        val df = fn(spark, sfDir)
-        // Execute THIS queryExecution (df.count() would wrap the plan in
-        // a new one and leave the audited AQE plan un-finalized).
-        try df.queryExecution.toRdd.foreachPartition(_ => ())
-        catch { case _: Throwable => () }
-        val plan = df.queryExecution.executedPlan.toString
-        val schemas = plan.linesIterator
-          .flatMap(l => "ReadSchema: struct<([^>]*)".r.findFirstMatchIn(l).map(_.group(1)))
-          .map(s => s.split(",").length + " cols: " + s.take(70)).toSeq
-        val joins = "(\\w*(?:Join|Cartesian)\\w*)".r.findAllIn(plan).toSeq
-        val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
-        val wsc = "\\*\\(\\d+\\)".r.findAllIn(plan).map(identity).toSet.size
-        println(s"[audit] $name")
-        schemas.foreach(s => println(s"[audit]   scan  $s"))
-        if (joins.nonEmpty) println(s"[audit]   joins ${joins.groupBy(identity).view.mapValues(_.size).toMap}")
-        println(s"[audit]   exchanges=$exchanges codegenSpans=$wsc")
-      }
-      spark.stop(); return
-    }
-
-    if (args.contains("plan")) {
-      println("=== ngramJaccardPairs plan (join/exchange nodes) ===")
-      DedupOps.ngramJaccardPairs(corpus).queryExecution.executedPlan.toString
-        .linesIterator
-        .filter(l => l.contains("Join") || l.contains("Cartesian") || l.contains("Exchange"))
-        .foreach(l => println(l.take(160)))
-      println("=== payments_convert partitions ===")
-      println("orders partitions: " + Tables.orders(spark, sfDir).rdd.getNumPartitions)
-      println("documents partitions: " + docs.rdd.getNumPartitions)
-      spark.stop(); return
-    }
-
-    t("corpus_count")(corpus.count())
-    t("shingles_explode") {
-      corpus.withColumn("toks", split(col("text"), " ", -1))
-        .filter(size(col("toks")) >= 3)
-        .withColumn("shingles", expr(DedupOps.shingleSql))
-        .select(explode(array_distinct(col("shingles")))).count()
-    }
-    t("inv_selfjoin_groupby") {
-      val sh = corpus.withColumn("toks", split(col("text"), " ", -1))
-        .filter(size(col("toks")) >= 3)
-        .withColumn("shingles", expr(DedupOps.shingleSql))
-      val inv = sh.select(col("doc_id"), explode(array_distinct(col("shingles"))).as("shingle"))
-      inv.as("x").join(inv.as("y"),
-          col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
-        .groupBy(col("x.doc_id"), col("y.doc_id")).count().count()
-    }
-    t("inv_selfjoin_again") {
-      val sh = corpus.withColumn("toks", split(col("text"), " ", -1))
-        .filter(size(col("toks")) >= 3)
-        .withColumn("shingles", expr(DedupOps.shingleSql))
-      val inv = sh.select(col("doc_id"), explode(array_distinct(col("shingles"))).as("shingle"))
-      inv.as("x").join(inv.as("y").hint("shuffle_hash"),
-          col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
-        .groupBy(col("x.doc_id"), col("y.doc_id")).count().count()
-    }
-    t("ngram_jaccard_full")(DedupOps.ngramJaccardPairs(corpus).count())
-    t("ngram_jaccard_full_again")(DedupOps.ngramJaccardPairs(corpus).count())
-    t("minhash_pairs_full")(DedupOps.minhashPairs(corpus).count())
-    t("payments_convert") {
-      PaymentOps.convert(
-        PaymentOps.jsonDecode(PaymentOps.syntheticPaymentsJson(Tables.orders(spark, sfDir))),
-        graft.model.ExchangeRates.ratesDF(spark)).count()
-    }
-    t("payments_convert_again") {
-      PaymentOps.convert(
-        PaymentOps.jsonDecode(PaymentOps.syntheticPaymentsJson(Tables.orders(spark, sfDir))),
-        graft.model.ExchangeRates.ratesDF(spark)).count()
-    }
-    spark.stop()
   }
+
+  /** Writes [[amplified]] copies of every table under `sfDir` to `out`. */
+  def amplify(spark: SparkSession, sfDir: String, out: String, factor: Int): Unit =
+    Tables.loadSpecs.keys.foreach { name =>
+      amplified(name, Tables.table(spark, sfDir, name), factor)
+        .write.parquet(s"$out/$name.parquet")
+    }
+
+  /** Splits each query's warm wall-clock into jobs, stages, tasks, summed
+    * task time and shuffle bytes, plus its 8 longest stages: wall −
+    * Σtask-time/cores is scheduling and planning overhead. Rep 1 warms
+    * codegen and caches; rep 2 is measured. */
+  private def jobstats(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    import org.apache.spark.scheduler._
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import scala.jdk.CollectionConverters._
+    val jobs = new AtomicInteger; val stages = new AtomicInteger
+    val tasks = new AtomicInteger; val taskMs = new AtomicLong
+    val shufWr = new AtomicLong
+    val stageAgg = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Int, Long, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        val m = s.stageInfo.taskMetrics
+        shufWr.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        stageAgg.put(s.stageInfo.stageId,
+          (s.stageInfo.name.takeWhile(_ != '\n').take(70),
+            m.executorRunTime, s.stageInfo.numTasks,
+            m.executorDeserializeTime, m.jvmGCTime))
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
+      }
+    }
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      fn(spark, sfDir).count(); spark.catalog.clearCache()
+      jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); shufWr.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      val t0 = System.nanoTime()
+      val n = fn(spark, sfDir).count()
+      val wall = (System.nanoTime() - t0) / 1e9
+      spark.catalog.clearCache()
+      // drain the listener bus so every event of the run is counted
+      org.apache.spark.sql.graftshim.ColumnBridge
+        .drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+      println(f"[jobstats] $name%-34s wall=$wall%7.2fs jobs=${jobs.get}%3d " +
+        f"stages=${stages.get}%4d tasks=${tasks.get}%5d " +
+        f"taskSum=${taskMs.get / 1e3}%8.2fs shufWr=${shufWr.get / 1e6}%8.2fMB rows=$n")
+      stageAgg.asScala.toSeq.sortBy(-_._2._2).take(8).foreach {
+        case (sid, (nm, run, nt, deser, gc)) =>
+          println(f"[jobstats]   stage $sid%4d run=${run / 1e3}%7.2fs " +
+            f"deser=${deser / 1e3}%6.2fs gc=${gc / 1e3}%5.2fs tasks=$nt%4d  $nm")
+      }
+      stageAgg.clear()
+    }
+  }
+
+  /** Bench-integrity audit: flags every registered query whose optimized
+    * plan loses joins under `count()` (Bench's action). A left join
+    * against an aggregate keyed on the join key with no payload
+    * referenced is a no-op to Catalyst, so a bare count would time only
+    * the surviving prefix; a flagged query needs a no-op guard that
+    * references the join output (see SparkEntry's substring_dedup). */
+  private def countPrune(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    def joins(p: LogicalPlan): Int =
+      p.collectWithSubqueries { case j: Join => j }.size
+    var flagged = 0
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      val full = joins(df.queryExecution.optimizedPlan)
+      val cnt = joins(df.groupBy().count().queryExecution.optimizedPlan)
+      if (cnt < full) {
+        flagged += 1
+        println(s"[count-prune] $name: joins $full -> $cnt under count()")
+      }
+    }
+    println(s"[count-prune] flagged=$flagged")
+  }
+
+  /** Plan-health audit: for each registered query, its scans' read
+    * schemas, join strategies, hash exchanges and codegen spans. */
+  private def audit(spark: SparkSession, sfDir: String): Unit =
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      // Execute this queryExecution before reading its plan: under AQE the
+      // pre-execution plan has no WholeStageCodegen stages, so codegen
+      // coverage and runtime join demotions show only in the final plan
+      // (df.count() would wrap the plan in a new, un-finalized one).
+      val df = fn(spark, sfDir)
+      try df.queryExecution.toRdd.foreachPartition(_ => ())
+      catch { case _: Throwable => () }
+      val plan = df.queryExecution.executedPlan.toString
+      val schemas = plan.linesIterator
+        .flatMap(l => "ReadSchema: struct<([^>]*)".r.findFirstMatchIn(l).map(_.group(1)))
+        .map(s => s"${s.split(",").length} cols: ${s.take(70)}").toSeq
+      val joins = "(\\w*(?:Join|Cartesian)\\w*)".r.findAllIn(plan).toSeq
+      val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
+      val wsc = "\\*\\(\\d+\\)".r.findAllIn(plan).toSet.size
+      println(s"[audit] $name")
+      schemas.foreach(s => println(s"[audit]   scan  $s"))
+      if (joins.nonEmpty) println(s"[audit]   joins ${joins.groupBy(identity).view.mapValues(_.size).toMap}")
+      println(s"[audit]   exchanges=$exchanges codegenSpans=$wsc")
+    }
 }

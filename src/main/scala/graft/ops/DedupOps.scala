@@ -1473,16 +1473,6 @@ object DedupOps {
     * Spark side.
     */
   def substringDedup(documents: DataFrame, k: Int = 20): DataFrame = {
-    val (_, _, _, ivs) = substringDedupInternals(documents, k)
-    substringDedupAssemble(documents, ivs)
-  }
-
-  /** The span-removal pipeline's intermediate frames, exposed for stage
-    * attribution in `Profile scale-substr` (pos → marked → merged → ivs);
-    * [[substringDedup]] composes exactly these.
-    */
-  private[graft] def substringDedupInternals(documents: DataFrame, k: Int = 20)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val pos = documents
       .filter(length(col("text")) >= k)
       .select(col("doc_id"), posexplode(expr(
@@ -1517,12 +1507,6 @@ object DedupOps {
       .groupBy("doc_id", "grp").agg(min("i").as("s"), max("e").as("e"))
     val ivs = merged.groupBy("doc_id")
       .agg(array_sort(collect_list(struct(col("s"), col("e")))).as("ivs"))
-    (pos, marked, merged, ivs)
-  }
-
-  /** Reassembly tail of [[substringDedup]]: fold the merged removal
-    * intervals over the original text with a cursor. */
-  private def substringDedupAssemble(documents: DataFrame, ivs: DataFrame): DataFrame =
     documents.join(ivs, Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("ivs").isNull, col("text")).otherwise(expr(
@@ -1537,13 +1521,6 @@ object DedupOps {
           .as("clean_text"))
       .select(col("doc_id"), length(col("clean_text")).cast("long").as("clean_len"),
         col("clean_text"))
-
-  /** Named stage frames for `Profile scale-substr`. */
-  private[graft] def substringDedupStages(documents: DataFrame, k: Int = 20)
-      : Seq[(String, DataFrame)] = {
-    val (pos, marked, merged, ivs) = substringDedupInternals(documents, k)
-    Seq("stage_pos" -> pos, "stage_marked" -> marked,
-      "stage_merged" -> merged, "stage_ivs" -> ivs)
   }
 
   /** Span-removal oracle — an INDEPENDENT per-character formulation (not a
