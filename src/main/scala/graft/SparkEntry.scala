@@ -536,14 +536,14 @@ object SparkEntry {
       MultimodalOps.writeTiffFixtureTree(D(s, dir), fix)
       MultimodalOps.sampleFramesReal(s,
         s.read.format("binaryFile").load(fix),
-        extPattern = "vid_(\\d+)\\.tif$", format = "tiff").toDF()
+        extPattern = "vid_(\\d+)\\.tif$").toDF()
     }),
     "multimodal_frames_tiff_stride3" -> ((s, dir) => {
       val fix = FixtureDirs.dir("graft_tiff", dir)
       MultimodalOps.writeTiffFixtureTree(D(s, dir), fix)
       MultimodalOps.sampleFramesReal(s,
         s.read.format("binaryFile").load(fix), stride = 3,
-        extPattern = "vid_(\\d+)\\.tif$", format = "tiff").toDF()
+        extPattern = "vid_(\\d+)\\.tif$").toDF()
     }),
     // ---- round-2 additions: LSH ANN, rolling fingerprint, tf-idf ----
     "ann_lsh" -> ((s, dir) => SimilarityOps.lshTopK(Tables.embeddings(s, dir))),

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** A media asset: opaque binary payload + typed metadata — the multimodal
   * column pattern (SURVEY.md §7 B11). Image/audio/video travel as `binary`
@@ -40,11 +41,6 @@ case class DecodedAudio(doc_id: Long, n_channels: Long, sample_rate: Long,
 case class DecodedFrame(doc_id: Long, frame_idx: Long, width: Long,
                         height: Long, sum_gray: Long)
 
-/** One blob's LENIENT decode verdict: `status` is "ok" (stats
-  * populated) or "corrupt" (stats null) — the quarantine row shape, so
-  * one bad byte among billions of files routes to a table instead of
-  * killing the job.
-  */
 /** One image blob's LENIENT decode verdict — the [[LenientAudio]]
   * quarantine row shape for the image ingest path: a truncated or junk
   * blob becomes a "corrupt" row with a diagnostic reason instead of a
@@ -56,6 +52,11 @@ case class LenientImage(doc_id: Long, status: String,
                         sum_b: Option[Long], n_px: Option[Long],
                         reason: Option[String] = None)
 
+/** One blob's LENIENT decode verdict: `status` is "ok" (stats
+  * populated) or "corrupt" (stats null) — the quarantine row shape, so
+  * one bad byte among billions of files routes to a table instead of
+  * killing the job.
+  */
 case class LenientAudio(doc_id: Long, status: String,
                         n_channels: Option[Long], sample_rate: Option[Long],
                         n_frames: Option[Long], sum_ch0: Option[Long],
@@ -67,10 +68,11 @@ case class LenientAudio(doc_id: Long, status: String,
   *
   * [[decodeStub]] is the GENERIC opaque-payload featurizer (length /
   * first byte / additive checksum — the modality-agnostic shape for
-  * codecs the container lacks); since round 10 the IMAGE path decodes
-  * real pixels: [[decodeImages]]/[[resizeDecoded]] run the JDK's
-  * javax.imageio BMP reader executor-side over real files (zero new
-  * dependencies). All the Spark-side plumbing is shared and real:
+  * codecs the container lacks); the real codecs (BMP/PNG/JPEG rasters,
+  * PCM and G.711 WAV clips, GIF/TIFF frame sequences) decode through
+  * the JDK's javax.imageio / javax.sound executor-side, every one over
+  * the same blob prelude ([[decodeBlobs]]). All the Spark-side plumbing
+  * is shared and real:
   * binary payload column, typed case-class Encoders, executor-side
   * per-partition batch processing via mapPartitions (the Scala analogue
   * of mapInPandas — one iterator per partition, so codec/model init
@@ -190,11 +192,11 @@ object MultimodalOps {
       |  FROM documents)""".stripMargin
 
   // --------------------------------------------------------------------
-  // Real binaryFile ingest (VERDICT r7 item 3): the ingest EDGE of a
-  // multimodal pipeline — a directory of media files → Spark's
-  // `binaryFile` source → content-addressed manifest → digest dedup.
-  // Everything upstream of here operated on packed binary COLUMNS; this
-  // is the executed path that turns files on disk into those columns.
+  // Real binaryFile ingest: the ingest EDGE of a multimodal pipeline —
+  // a directory of media files → Spark's `binaryFile` source →
+  // content-addressed manifest → digest dedup. Everything upstream of
+  // here operated on packed binary COLUMNS; this is the executed path
+  // that turns files on disk into those columns.
   // --------------------------------------------------------------------
 
   /** Modality extension for a fixture asset — doc_id % 3 keeps the three
@@ -211,40 +213,49 @@ object MultimodalOps {
     * stand in for opaque media exactly as in [[pack]]), named
     * `doc_<id>.<img|aud|vid>`; every `dupEvery`-th doc additionally gets
     * a byte-identical `dup_<id>.<ext>` copy — the planted exact
-    * duplicates the digest dedup must collapse. The tree is REBUILT from
-    * scratch each call (matching fixture files deleted first), so stale
-    * files from an earlier run/config can never leak into the ingest.
-    * Empty payloads are NOT written: Spark's file-partition planner
-    * skips zero-length files (spec-pinned), so an empty file would be
-    * invisible to the ingest while present in the oracle's
-    * reconstruction — both sides exclude empties explicitly.
-    *
-    * The collect is bounded by maxDocId (≤256 rows of test fixture) —
-    * the documented driver-side-metadata collect class; a production
-    * ingest starts from files that already exist.
+    * duplicates the digest dedup must collapse. Lifecycle as
+    * [[writeTree]]; the payload is raw UTF-8, so no ASCII requirement.
     */
   def writeFixtureTree(documents: DataFrame, dir: String,
-                       maxDocId: Long = 256L, dupEvery: Long = 8L): Unit = {
+                       maxDocId: Long = 256L, dupEvery: Long = 8L): Unit =
+    writeTree(documents, dir, "(doc|dup)_\\d+\\.(img|aud|vid)", maxDocId,
+        ascii = false) { (id, text) =>
+      val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val ext = modalityExt(id)
+      (s"doc_$id.$ext" -> bytes) +:
+        (if (id % dupEvery == 0L) Seq(s"dup_$id.$ext" -> bytes) else Nil)
+    }
+
+  /** The one fixture-tree lifecycle: create `dir`, delete the files
+    * whose names match `pattern` (the tree is REBUILT from scratch each
+    * call, so stale files from an earlier run/config never leak into an
+    * ingest), then write `files(id, text)` — (name, bytes) pairs — for
+    * every document with doc_id < `maxDocId` and non-empty text. Empty
+    * payloads are never written: Spark's file-partition planner skips
+    * zero-length files (spec-pinned), so both sides exclude them. The
+    * collect is bounded by maxDocId (≤256 rows of test fixture) — the
+    * documented driver-side-metadata collect class; a production ingest
+    * starts from files that already exist. `ascii` enforces
+    * [[requireAsciiFixture]] for the trees whose formulas index chars.
+    */
+  private def writeTree(documents: DataFrame, dir: String, pattern: String,
+                        maxDocId: Long, ascii: Boolean = true)
+                       (files: (Long, String) => Seq[(String, Array[Byte])]): Unit = {
     import java.nio.file.{Files, Paths}
     val base = Paths.get(dir)
     Files.createDirectories(base)
-    val fixturePattern = "(doc|dup)_\\d+\\.(img|aud|vid)".r
     val old = Files.list(base)
     try old.forEach { p =>
-      if (fixturePattern.pattern.matcher(p.getFileName.toString).matches())
-        Files.delete(p)
+      if (p.getFileName.toString.matches(pattern)) Files.delete(p)
     } finally old.close()
     documents.filter(col("doc_id") < maxDocId)
       .filter(col("text").isNotNull && length(col("text")) > 0)
       .select(col("doc_id"), col("text")).collect()
       .foreach { r =>
-        val id = r.getLong(0)
-        val bytes = r.getString(1)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val ext = modalityExt(id)
-        Files.write(base.resolve(s"doc_$id.$ext"), bytes)
-        if (id % dupEvery == 0L)
-          Files.write(base.resolve(s"dup_$id.$ext"), bytes)
+        val (id, text) = (r.getLong(0), r.getString(1))
+        if (ascii) requireAsciiFixture(id, text)
+        for ((name, bytes) <- files(id, text))
+          Files.write(base.resolve(name), bytes)
       }
   }
 
@@ -298,11 +309,11 @@ object MultimodalOps {
           .otherwise("video"))
 
   /** The fixture location for a given sf dir — the shared pid-scoped
-    * lifecycle contract, see [[FixtureDirs]] (factored there in round 9
-    * so the `optimize_roundtrip` write-path query reuses it). */
+    * lifecycle contract, see [[FixtureDirs]] (shared with the
+    * `optimize_roundtrip` write-path query). */
   def fixtureDir(sfDir: String): String = FixtureDirs.dir("graft_mm", sfDir)
 
-  /** The multimodal FLAGSHIP composite (VERDICT r13 item 4) — the one
+  /** The multimodal FLAGSHIP composite — the one
     * plan an ingest-day run executes, composing the audited stages the
     * way `corpus_prep` composes the text ones: content-addressed
     * manifest over BOTH asset trees (the opaque media tree with its
@@ -383,52 +394,21 @@ object MultimodalOps {
     * (sign, decoded-value) list — bijective with the code byte (within
     * a sign, (m·8+132)·2^e−132 ranges never overlap; the sign marker
     * separates the +0/−0 codes that both decode to 0), and the header
-    * is a pure function of (chn, code count). Same companding formula
-    * as [[decodeUlawOracle]], kept per-sample instead of aggregated. */
+    * is a pure function of (chn, code count). The samples and their
+    * companding are [[decodeUlawOracle]]'s ([[wavSamplesSql]],
+    * [[ulawRoundTripSql]]), kept per-sample instead of aggregated. */
   def multimodalPrepOracle(maxDocId: Long = 256L, dupEvery: Long = 8L,
                            junkId: Long = 300L, emptyId: Long = 301L): String =
-    s"""WITH sel AS (
-       |  SELECT doc_id, text,
-       |    CASE doc_id % 3 WHEN 0 THEN 'img' WHEN 1 THEN 'aud'
-       |         ELSE 'vid' END AS ext
-       |  FROM documents
-       |  WHERE doc_id < $maxDocId AND text IS NOT NULL AND length(text) > 0),
+    s"""WITH ${opaqueTreeSql(maxDocId, dupEvery)},
        |opq AS (
-       |  SELECT 'doc_' || doc_id || '.' || ext AS file_name,
-       |    CASE ext WHEN 'img' THEN 'image' WHEN 'aud' THEN 'audio'
-       |         ELSE 'video' END AS modality,
-       |    CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
+       |  SELECT file_name, modality, byte_len,
        |    'opq' AS tree, text AS grp, 'opaque' AS verdict
-       |  FROM sel
-       |  UNION ALL
-       |  SELECT 'dup_' || doc_id || '.' || ext,
-       |    CASE ext WHEN 'img' THEN 'image' WHEN 'aud' THEN 'audio'
-       |         ELSE 'video' END,
-       |    CAST(octet_length(encode(text)) AS BIGINT),
-       |    'opq', text, 'opaque'
-       |  FROM sel WHERE doc_id % $dupEvery = 0),
-       |au_raw AS (
-       |  SELECT doc_id, chn, i,
-       |    ((ascii(substr(text, CAST(i % n AS INT) + 1, 1)) * 523
-       |      + (i // chn) * 1031 + (i % chn) * 1733) % 65536) - 32768 AS s
-       |  FROM (
-       |    SELECT doc_id, text, length(text) AS n, 1 + (doc_id % 2) AS chn,
-       |      unnest(range(0, (1 + (length(text) % 29)) * (1 + (doc_id % 2))))
-       |        AS i
-       |    FROM sel)),
+       |  FROM files),
        |au_codes AS (
        |  SELECT doc_id, chn,
-       |    string_agg(CASE WHEN s < 0 THEN '-' ELSE '+' END ||
-       |      (((mag // (8 * p)) % 16) * 8 + 132) * p - 132, ',' ORDER BY i)
-       |      AS codeseq
-       |  FROM (
-       |    SELECT doc_id, chn, i, s, mag,
-       |      CASE WHEN mag >= 16384 THEN 128 WHEN mag >= 8192 THEN 64
-       |           WHEN mag >= 4096 THEN 32 WHEN mag >= 2048 THEN 16
-       |           WHEN mag >= 1024 THEN 8 WHEN mag >= 512 THEN 4
-       |           WHEN mag >= 256 THEN 2 ELSE 1 END AS p
-       |    FROM (SELECT doc_id, chn, i, s, least(abs(s), 32635) + 132 AS mag
-       |          FROM au_raw))
+       |    string_agg(CASE WHEN s < 0 THEN '-' ELSE '+' END || d, ','
+       |      ORDER BY i) AS codeseq
+       |  FROM (${ulawRoundTripSql(wavSamplesSql(maxDocId))})
        |  GROUP BY doc_id, chn),
        |au AS (
        |  SELECT 'ul_' || s.doc_id || '.wav' AS file_name,
@@ -461,37 +441,108 @@ object MultimodalOps {
     * in the round trip breaks the digest column.
     */
   def ingestManifestOracle(maxDocId: Long = 256L, dupEvery: Long = 8L): String =
-    s"""WITH sel AS (
-       |  SELECT doc_id, text,
-       |    CASE doc_id % 3 WHEN 0 THEN 'img' WHEN 1 THEN 'aud'
-       |         ELSE 'vid' END AS ext
-       |  FROM documents
-       |  WHERE doc_id < $maxDocId AND text IS NOT NULL AND length(text) > 0),
-       |files AS (
-       |  SELECT 'doc_' || doc_id || '.' || ext AS file_name, doc_id, text, ext
-       |  FROM sel
-       |  UNION ALL
-       |  SELECT 'dup_' || doc_id || '.' || ext AS file_name, doc_id, text, ext
-       |  FROM sel WHERE doc_id % $dupEvery = 0),
+    s"""WITH ${opaqueTreeSql(maxDocId, dupEvery)},
        |m AS (
-       |  SELECT file_name, doc_id,
-       |    CASE ext WHEN 'img' THEN 'image' WHEN 'aud' THEN 'audio'
-       |         ELSE 'video' END AS modality,
-       |    CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-       |    md5(text) AS digest
+       |  SELECT file_name, doc_id, modality, byte_len, md5(text) AS digest
        |  FROM files),
        |c AS (SELECT digest, min(file_name) AS canonical FROM m GROUP BY 1)
        |SELECT file_name, doc_id, modality, byte_len, digest, canonical,
        |  file_name = canonical AS is_canonical
        |FROM m JOIN c USING (digest)""".stripMargin
 
+  /** [[writeFixtureTree]]'s tree reconstructed as two CTEs: `sel`, the
+    * documents it writes, and `files` — one row per written file
+    * (file_name, doc_id, text, modality, byte_len), the planted `dup_`
+    * copies included. */
+  private def opaqueTreeSql(maxDocId: Long, dupEvery: Long): String =
+    s"""sel AS (
+       |  SELECT doc_id, text,
+       |    CASE doc_id % 3 WHEN 0 THEN 'img' WHEN 1 THEN 'aud'
+       |         ELSE 'vid' END AS ext
+       |  FROM documents
+       |  WHERE doc_id < $maxDocId AND text IS NOT NULL AND length(text) > 0),
+       |files AS (
+       |  SELECT prefix || '_' || doc_id || '.' || ext AS file_name, doc_id, text,
+       |    CASE ext WHEN 'img' THEN 'image' WHEN 'aud' THEN 'audio'
+       |         ELSE 'video' END AS modality,
+       |    CAST(octet_length(encode(text)) AS BIGINT) AS byte_len
+       |  FROM (SELECT 'doc' AS prefix, * FROM sel
+       |        UNION ALL
+       |        SELECT 'dup', * FROM sel WHERE doc_id % $dupEvery = 0))""".stripMargin
+
   // --------------------------------------------------------------------
-  // REAL image decode (VERDICT r9 item 2): the last stub becomes a real
-  // codec path with ZERO new dependencies — deterministic uncompressed
-  // 24-bit BMP fixtures generated from the documents table by pure byte
-  // arithmetic, decoded executor-side through the JDK's javax.imageio
-  // BMP reader in the same typed mapPartitions batch shape as
-  // [[decodeStub]]. Encoder (hand-rolled bytes here) and decoder
+  // The shared decode path (SURVEY.md §7 B11): every real-codec decoder
+  // is the blob prelude below plus one per-blob step — a raster
+  // ([[decodeRaster]]), a clip ([[decodeClip]]) or a frame sequence —
+  // and each lenient twin is its strict step inside the quarantine
+  // catch ([[corruptReason]]).
+  // --------------------------------------------------------------------
+
+  /** The blob prelude: keep the `binaryFile` rows whose path matches
+    * `extPattern` BEFORE the typed conversion (a stray path would
+    * regexp_extract to '' → null doc_id and fail the encoder with an
+    * opaque null-value error instead of a loud per-blob decode error),
+    * take the doc id from the pattern's first group, and run `decode`
+    * on each (doc_id, bytes) executor-side, one iterator per partition
+    * so codec init amortizes across the batch. Blobs ride the scan and
+    * are dropped at decode; only the decoded metadata ever reaches an
+    * exchange. At 100 TB a real codec (libvips/ffmpeg via JNI) drops into
+    * the same iterator.
+    */
+  private def decodeBlobs[T: Encoder](files: DataFrame, extPattern: String)
+                                     (decode: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    import files.sparkSession.implicits._
+    files
+      .filter(col("path").rlike(extPattern))
+      .select(
+        regexp_extract(col("path"), extPattern, 1).cast("long").as("doc_id"),
+        col("content"))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, bytes) => decode(id, bytes) })
+  }
+
+  /** A "corrupt" verdict's reason: exception class + message, so a
+    * SYSTEMIC fault (e.g. a missing codec provider failing every blob
+    * the same way) is distinguishable from per-blob data corruption. */
+  private def corruptReason(e: Throwable): Option[String] =
+    Some(s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(256)}")
+
+  /** Exact per-channel sums over the raster pixels whose x and y are
+    * both multiples of `step`: 1 = every pixel, 2 = the nearest-neighbor
+    * 2× downscale (dims round up). */
+  private def rasterStats(id: Long, img: java.awt.image.BufferedImage,
+                          step: Int): DecodedImage = {
+    val (w, h) = ((img.getWidth + step - 1) / step, (img.getHeight + step - 1) / step)
+    var (sr, sg, sb) = (0L, 0L, 0L)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val rgb = img.getRGB(x * step, y * step)
+        sr += (rgb >> 16) & 0xff
+        sg += (rgb >> 8) & 0xff
+        sb += rgb & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    DecodedImage(id, w.toLong, h.toLong, sr, sg, sb, w.toLong * h)
+  }
+
+  /** One image blob through whichever registered ImageIO reader accepts
+    * it, then [[rasterStats]]; no reader → fails naming the doc. */
+  private def decodeRaster(id: Long, bytes: Array[Byte], step: Int): DecodedImage = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    require(img != null,
+      s"undecodable image for doc $id: no registered reader accepted the blob")
+    rasterStats(id, img, step)
+  }
+
+  // --------------------------------------------------------------------
+  // REAL image decode: deterministic uncompressed 24-bit BMP fixtures
+  // generated from the documents table by pure byte arithmetic, decoded
+  // executor-side through the JDK's javax.imageio reader (zero new
+  // dependencies). Encoder (hand-rolled bytes here) and decoder
   // (ImageIO) are INDEPENDENT implementations of the BMP spec, and the
   // DuckDB oracle recomputes the expected dims + exact channel sums
   // from the generation formula over `documents` — three-way agreement,
@@ -558,163 +609,79 @@ object MultimodalOps {
     buf.array()
   }
 
-  /** Write the BMP fixture tree (`img_<id>.bmp`, doc_id < maxDocId,
-    * non-empty text). Same bounded-collect + rebuild lifecycle as
-    * [[writeFixtureTree]]; no planted dups — digest dedup is the
-    * manifest query's job, this tree exists to be DECODED.
+  /** The fixture raster as an RGB image — the input of the
+    * ImageIO-encoded trees (PNG, JPEG). */
+  private def fixtureRaster(id: Long, text: String): java.awt.image.BufferedImage = {
+    val (w, h) = (bmpWidth(text.length.toLong), bmpHeight(id))
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until h; x <- 0 until w) {
+      val (r, g, b) = bmpPixel(text, w)(x, y)
+      img.setRGB(x, y, (r << 16) | (g << 8) | b)
+    }
+    img
+  }
+
+  /** Write the BMP fixture tree (`img_<id>.bmp`) through [[writeTree]];
+    * no planted dups — digest dedup is the manifest query's job, this
+    * tree exists to be DECODED.
     */
   def writeBmpFixtureTree(documents: DataFrame, dir: String,
-                          maxDocId: Long = 256L): Unit = {
-    import java.nio.file.{Files, Paths}
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val pat = "img_\\d+\\.bmp".r
-    val old = Files.list(base)
-    try old.forEach { p =>
-      if (pat.pattern.matcher(p.getFileName.toString).matches())
-        Files.delete(p)
-    } finally old.close()
-    documents.filter(col("doc_id") < maxDocId)
-      .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("doc_id"), col("text")).collect()
-      .foreach { r =>
-        val (id, text) = (r.getLong(0), r.getString(1))
-        requireAsciiFixture(id, text)
-        val (w, h) = (bmpWidth(text.length.toLong), bmpHeight(id))
-        Files.write(base.resolve(s"img_$id.bmp"),
-          bmpBytes(w, h, bmpPixel(text, w)))
-      }
-  }
+                          maxDocId: Long = 256L): Unit =
+    writeTree(documents, dir, "img_\\d+\\.bmp", maxDocId) { (id, text) =>
+      val w = bmpWidth(text.length.toLong)
+      Seq(s"img_$id.bmp" -> bmpBytes(w, bmpHeight(id), bmpPixel(text, w)))
+    }
 
-  /** Write the SAME rasters as PNG (`img_<id>.png`) — VERDICT r10 item
-    * 7: the decode gate must see a second container format so the
-    * ImageIO read path is proven general, not specialized to the
+  /** Write the SAME rasters as PNG (`img_<id>.png`): a second container
+    * proves the ImageIO read path general, not specialized to the
     * hand-rolled BMP header layout. PNG goes through ImageIO's WRITER
     * (deflate compression, top-down rows, big-endian chunk framing —
-    * none of which the BMP path exercises); the reader then has to undo
-    * a genuinely different encoding, and the DuckDB oracle still
+    * none of which the BMP path exercises); the DuckDB oracle still
     * recomputes the expected sums from the generation formula, blind to
-    * both. Same bounded-collect lifecycle as [[writeBmpFixtureTree]]. */
+    * both. */
   def writePngFixtureTree(documents: DataFrame, dir: String,
-                          maxDocId: Long = 256L): Unit = {
-    import java.nio.file.{Files, Paths}
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val pat = "img_\\d+\\.png".r
-    val old = Files.list(base)
-    try old.forEach { p =>
-      if (pat.pattern.matcher(p.getFileName.toString).matches())
-        Files.delete(p)
-    } finally old.close()
-    documents.filter(col("doc_id") < maxDocId)
-      .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("doc_id"), col("text")).collect()
-      .foreach { r =>
-        val (id, text) = (r.getLong(0), r.getString(1))
-        requireAsciiFixture(id, text)
-        val (w, h) = (bmpWidth(text.length.toLong), bmpHeight(id))
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val (pr, pg, pb) = bmpPixel(text, w)(x, y)
-            img.setRGB(x, y, (pr << 16) | (pg << 8) | pb)
-            x += 1
-          }
-          y += 1
-        }
-        val ok = javax.imageio.ImageIO.write(img, "png",
-          base.resolve(s"img_$id.png").toFile)
-        require(ok, s"no PNG writer available for doc $id")
-      }
+                          maxDocId: Long = 256L): Unit =
+    writeTree(documents, dir, "img_\\d+\\.png", maxDocId) { (id, text) =>
+      Seq(s"img_$id.png" ->
+        imageBytes("png")((writer, _) => writer.write(fixtureRaster(id, text))))
+    }
+
+  /** The bytes ImageIO's `format` writer emits for `write(writer,
+    * defaultParam)`, buffered in memory (no cache file per image). */
+  private def imageBytes(format: String)
+                        (write: (javax.imageio.ImageWriter, javax.imageio.ImageWriteParam) => Unit): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName(format).next()
+    try {
+      writer.setOutput(ios)
+      write(writer, writer.getDefaultWriteParam)
+    } finally {
+      writer.dispose()
+      ios.close()
+    }
+    bos.toByteArray
   }
 
-  /** Decode a `binaryFile` frame of BMPs through javax.imageio,
-    * executor-side, one reader amortized per partition batch — blobs
-    * ride the scan and are dropped at decode; only (doc_id, dims, sums)
-    * metadata ever reaches an exchange. At 100 TB this is the shape a
-    * real codec (libvips/ffmpeg via JNI) drops into: the per-partition
-    * iterator is where codec init amortizes.
+  /** Decode a `binaryFile` frame of images (BMP by default; any format a
+    * registered ImageIO reader accepts) into dims + exact channel sums.
+    * An undecodable blob fails the task, naming the doc.
     */
   def decodeImages(spark: SparkSession, files: DataFrame,
                    extPattern: String = "img_(\\d+)\\.bmp$"): Dataset[DecodedImage] = {
     import spark.implicits._
-    files
-      // ignore files outside the fixture naming scheme BEFORE the typed
-      // conversion — a stray path would regexp_extract to '' → null
-      // doc_id and fail the Dataset encoder with an opaque null-value
-      // error instead of the loud per-file `undecodable` require below
-      .filter(col("path").rlike(extPattern))
-      .select(
-        regexp_extract(col("path"), extPattern, 1).cast("long")
-          .as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          require(img != null, s"undecodable image for doc $id")
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              val rgb = img.getRGB(x, y)
-              sr += (rgb >> 16) & 0xff
-              sg += (rgb >> 8) & 0xff
-              sb += rgb & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          DecodedImage(id, img.getWidth.toLong, img.getHeight.toLong,
-            sr, sg, sb, img.getWidth.toLong * img.getHeight)
-        }
-      }
+    decodeBlobs(files, extPattern)((id, b) => Iterator.single(decodeRaster(id, b, 1)))
   }
 
   /** Nearest-neighbor 2× downscale over REAL decoded rasters (keep
     * pixels with even x AND even y), emitting the resized dims + exact
-    * channel sums — the resize path fed by actual pixels, replacing the
-    * byte-stride stand-in for images. Same decode batch shape; the
-    * resample loop body is where a real resampler drops in.
+    * channel sums — the resize path fed by actual pixels.
     */
   def resizeDecoded(spark: SparkSession, files: DataFrame,
                     extPattern: String = "img_(\\d+)\\.bmp$"): Dataset[DecodedImage] = {
     import spark.implicits._
-    files
-      .filter(col("path").rlike(extPattern)) // same stray-file guard as decodeImages
-      .select(
-        regexp_extract(col("path"), extPattern, 1).cast("long")
-          .as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          require(img != null, s"undecodable image for doc $id")
-          val (nw, nh) = ((img.getWidth + 1) / 2, (img.getHeight + 1) / 2)
-          var (sr, sg, sb) = (0L, 0L, 0L)
-          var y = 0
-          while (y < nh) {
-            var x = 0
-            while (x < nw) {
-              val rgb = img.getRGB(x * 2, y * 2)
-              sr += (rgb >> 16) & 0xff
-              sg += (rgb >> 8) & 0xff
-              sb += rgb & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          DecodedImage(id, nw.toLong, nh.toLong, sr, sg, sb,
-            nw.toLong * nh)
-        }
-      }
+    decodeBlobs(files, extPattern)((id, b) => Iterator.single(decodeRaster(id, b, 2)))
   }
 
   /** The generation formula as SQL: dims + per-pixel channel values
@@ -759,68 +726,33 @@ object MultimodalOps {
        |GROUP BY 1, w, h""".stripMargin
 
   // --------------------------------------------------------------------
-  // LOSSY-codec gate (VERDICT r14 item 4): every previous decode gate is
-  // exactly invertible (BMP/PNG/GIF/TIFF, PCM/G.711), so the oracle
-  // predicts pixel sums EXACTLY. A real crawl ingest is dominated by
-  // JPEG, where decoded pixels are APPROXIMATIONS (DCT + quantization) —
-  // the contract a pipeline can actually pin is a TOLERANCE BAND, and
-  // the registered row makes that band a cross-engine oracle check: the
-  // Spark side decodes real JPEG bytes and compares per-channel MEANS
-  // against the generation formula; the oracle recomputes dims exactly
-  // and asserts the booleans — a decoder that drifts out of band (or a
-  // band set too tight for the codec) goes red, not unnoticed.
+  // LOSSY-codec gate: every other decode gate is exactly invertible
+  // (BMP/PNG/GIF/TIFF, PCM/G.711), so the oracle predicts pixel sums
+  // EXACTLY. A real crawl ingest is dominated by JPEG, where decoded
+  // pixels are APPROXIMATIONS (DCT + quantization) — the contract a
+  // pipeline can actually pin is a TOLERANCE BAND, and the registered row
+  // makes that band a cross-engine oracle check: the Spark side decodes
+  // real JPEG bytes and compares per-channel MEANS against the generation
+  // formula; the oracle recomputes dims exactly and asserts the booleans —
+  // a decoder that drifts out of band (or a band set too tight for the
+  // codec) goes red, not unnoticed.
   // --------------------------------------------------------------------
 
   /** JPEG fixture tree (`img_<id>.jpg`): the SAME deterministic rasters
     * as the BMP/PNG trees, written through ImageIO's JPEG encoder at an
     * EXPLICIT quality — the one container in the image family whose
-    * decode does not round-trip the pixels. Same bounded-collect
-    * lifecycle as [[writeBmpFixtureTree]]. */
+    * decode does not round-trip the pixels. Lifecycle as [[writeTree]]. */
   def writeJpegFixtureTree(documents: DataFrame, dir: String,
                            maxDocId: Long = 256L,
-                           quality: Float = 0.95f): Unit = {
-    import java.nio.file.{Files, Paths}
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val pat = "img_\\d+\\.jpg".r
-    val old = Files.list(base)
-    try old.forEach { p =>
-      if (pat.pattern.matcher(p.getFileName.toString).matches())
-        Files.delete(p)
-    } finally old.close()
-    documents.filter(col("doc_id") < maxDocId)
-      .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("doc_id"), col("text")).collect()
-      .foreach { r =>
-        val (id, text) = (r.getLong(0), r.getString(1))
-        requireAsciiFixture(id, text)
-        val (w, h) = (bmpWidth(text.length.toLong), bmpHeight(id))
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val (pr, pg, pb) = bmpPixel(text, w)(x, y)
-            img.setRGB(x, y, (pr << 16) | (pg << 8) | pb)
-            x += 1
-          }
-          y += 1
-        }
-        val writer =
-          javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-        val out = javax.imageio.ImageIO.createImageOutputStream(
-          base.resolve(s"img_$id.jpg").toFile)
-        try {
-          val param = writer.getDefaultWriteParam
-          param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-          param.setCompressionQuality(quality)
-          writer.setOutput(out)
-          writer.write(null, new javax.imageio.IIOImage(img, null, null),
-            param)
-        } finally { writer.dispose(); out.close() }
-      }
-  }
+                           quality: Float = 0.95f): Unit =
+    writeTree(documents, dir, "img_\\d+\\.jpg", maxDocId) { (id, text) =>
+      Seq(s"img_$id.jpg" -> imageBytes("jpeg") { (writer, param) =>
+        param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+        param.setCompressionQuality(quality)
+        writer.write(null,
+          new javax.imageio.IIOImage(fixtureRaster(id, text), null, null), param)
+      })
+    }
 
   /** The generation formula's expected dims + EXACT channel sums as a
     * distributed Spark derivation over `documents` — the reference side
@@ -900,20 +832,13 @@ object MultimodalOps {
     * status + geometry instead. */
   def decodeJpegQuarantineOracle(maxDocId: Long = 256L, junkId: Long = 300L,
                                  truncId: Long = 301L): String =
-    s"""SELECT doc_id, 'ok' AS status,
-       |  CAST(1 + (length(text) % 13) AS BIGINT) AS width,
-       |  CAST(1 + (doc_id % 7) AS BIGINT) AS height,
-       |  CAST((1 + (length(text) % 13)) * (1 + (doc_id % 7)) AS BIGINT) AS n_px
-       |FROM documents
-       |WHERE doc_id < $maxDocId AND text IS NOT NULL AND length(text) > 0
+    s"""SELECT doc_id, 'ok' AS status, width, height, n_px
+       |FROM (${decodeJpegBandedOracle(maxDocId)})
        |UNION ALL
-       |SELECT $junkId AS doc_id, 'corrupt' AS status,
+       |SELECT v.id AS doc_id, 'corrupt' AS status,
        |  CAST(NULL AS BIGINT) AS width, CAST(NULL AS BIGINT) AS height,
        |  CAST(NULL AS BIGINT) AS n_px
-       |UNION ALL
-       |SELECT $truncId AS doc_id, 'corrupt' AS status,
-       |  CAST(NULL AS BIGINT) AS width, CAST(NULL AS BIGINT) AS height,
-       |  CAST(NULL AS BIGINT) AS n_px""".stripMargin
+       |FROM (VALUES ($junkId), ($truncId)) AS v(id)""".stripMargin
 
   /** Deterministic corrupt image fixtures: one junk blob (not a JPEG at
     * all) and one TRUNCATED JPEG (a valid stream cut after 24 bytes —
@@ -934,67 +859,41 @@ object MultimodalOps {
       buf.toByteArray.take(24))
   }
 
+
   /** LENIENT image decode — [[decodeAudioLenient]]'s quarantine idiom
-    * on the image path: ImageIO refusal (null return or a thrown
-    * parse error, e.g. a truncated JPEG's premature EOF) becomes a
-    * per-blob "corrupt" verdict row with the diagnostic reason; the
-    * catch boundary is the blob, never the task. */
+    * on the image path: [[decodeImages]]' per-blob step, with ImageIO
+    * refusal (no reader, or a thrown parse error, e.g. a truncated
+    * JPEG's premature EOF) becoming a "corrupt" verdict row with the
+    * diagnostic reason; the catch boundary is the blob, never the task. */
   def decodeImagesLenient(spark: SparkSession, files: DataFrame,
                           extPattern: String = "img_(\\d+)\\.jpg$"): Dataset[LenientImage] = {
     import spark.implicits._
-    files
-      .filter(col("path").rlike(extPattern))
-      .select(
-        regexp_extract(col("path"), extPattern, 1).cast("long")
-          .as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          try {
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            require(img != null, s"doc $id: no registered reader accepted " +
-              "the blob")
-            var (sr, sg, sb) = (0L, 0L, 0L)
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                val rgb = img.getRGB(x, y)
-                sr += (rgb >> 16) & 0xff
-                sg += (rgb >> 8) & 0xff
-                sb += rgb & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            LenientImage(id, "ok", Some(img.getWidth.toLong),
-              Some(img.getHeight.toLong), Some(sr), Some(sg), Some(sb),
-              Some(img.getWidth.toLong * img.getHeight))
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              LenientImage(id, "corrupt", None, None, None, None, None,
-                None,
-                Some(s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(256)}"))
-          }
-        }
-      }
+    decodeBlobs(files, extPattern) { (id, bytes) =>
+      Iterator.single(try {
+        val d = decodeRaster(id, bytes, 1)
+        LenientImage(id, "ok", Some(d.width), Some(d.height), Some(d.sum_r),
+          Some(d.sum_g), Some(d.sum_b), Some(d.n_px))
+      } catch {
+        case NonFatal(e) =>
+          LenientImage(id, "corrupt", None, None, None, None, None, None,
+            corruptReason(e))
+      })
+    }
   }
 
   // --------------------------------------------------------------------
-  // REAL audio decode (VERDICT r11 item 1): the `.aud` modality gets the
-  // same treatment images got in r10/r11 — deterministic 16-bit PCM WAV
-  // fixtures generated from the documents table by pure byte arithmetic
-  // (hand-rolled RIFF/WAVE/fmt/data framing — deliberately NOT written
-  // through javax.sound, so the decode test has an independent encoder
-  // on the other side), decoded executor-side through the JDK's
-  // javax.sound.sampled WAV reader (zero new dependencies, headless-
-  // safe: parsing a WAV touches no audio device). The DuckDB oracle
-  // recomputes frame counts + exact per-channel sample sums from the
-  // generation formula over `documents` — three-way agreement, so a
-  // byte misplaced anywhere (header field, frame interleave order,
-  // little-endian sample packing, sign handling) breaks the gate.
+  // REAL audio decode: the `.aud` modality gets the same treatment as the
+  // images — deterministic 16-bit PCM WAV fixtures generated from the
+  // documents table by pure byte arithmetic (hand-rolled
+  // RIFF/WAVE/fmt/data framing — deliberately NOT written through
+  // javax.sound, so the decode test has an independent encoder on the
+  // other side), decoded executor-side through the JDK's
+  // javax.sound.sampled WAV reader (zero new dependencies, headless- safe:
+  // parsing a WAV touches no audio device). The DuckDB oracle recomputes
+  // frame counts + exact per-channel sample sums from the generation
+  // formula over `documents` — three-way agreement, so a byte misplaced
+  // anywhere (header field, frame interleave order, little-endian sample
+  // packing, sign handling) breaks the gate.
   // --------------------------------------------------------------------
 
   /** Fixture clip geometry + sample formula — ONE definition shared by
@@ -1013,232 +912,184 @@ object MultimodalOps {
     ((c * 523 + f * 1031 + ch * 1733) % 65536) - 32768
   }
 
-  /** Hand-rolled canonical 44-byte PCM WAV (RIFF little-endian, fmt
-    * chunk of 16, 16-bit signed samples interleaved by frame). */
-  def wavBytes(channels: Int, sampleRate: Int, frames: Int,
-               sample: (Int, Int) => Int): Array[Byte] = {
-    val dataSize = frames * channels * 2
+
+  /** The one RIFF/WAVE writer: canonical 44-byte header (fmt chunk of
+    * 16 with tag `formatTag`, `bits` per sample, little-endian), then
+    * `sample(f, ch)` interleaved by frame — as a signed short at 16 bits,
+    * as its low byte (a G.711 code) at 8. */
+  private def riffWav(formatTag: Int, bits: Int, channels: Int,
+                      sampleRate: Int, frames: Int,
+                      sample: (Int, Int) => Int): Array[Byte] = {
+    val blockAlign = channels * bits / 8
+    val dataSize = frames * blockAlign
     val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     buf.put('R'.toByte).put('I'.toByte).put('F'.toByte).put('F'.toByte)
       .putInt(36 + dataSize)
       .put('W'.toByte).put('A'.toByte).put('V'.toByte).put('E'.toByte)
     buf.put('f'.toByte).put('m'.toByte).put('t'.toByte).put(' '.toByte)
-      .putInt(16).putShort(1) // PCM
+      .putInt(16).putShort(formatTag.toShort)
       .putShort(channels.toShort).putInt(sampleRate)
-      .putInt(sampleRate * channels * 2) // byte rate
-      .putShort((channels * 2).toShort) // block align
-      .putShort(16) // bits per sample
+      .putInt(sampleRate * blockAlign) // byte rate
+      .putShort(blockAlign.toShort)
+      .putShort(bits.toShort)
     buf.put('d'.toByte).put('a'.toByte).put('t'.toByte).put('a'.toByte)
       .putInt(dataSize)
-    var f = 0
-    while (f < frames) {
-      var ch = 0
-      while (ch < channels) {
-        buf.putShort(sample(f, ch).toShort)
-        ch += 1
-      }
-      f += 1
+    for (f <- 0 until frames; ch <- 0 until channels) {
+      val s = sample(f, ch)
+      if (bits == 16) buf.putShort(s.toShort) else buf.put(s.toByte)
     }
     buf.array()
   }
 
-  /** Write the WAV fixture tree (`aud_<id>.wav`, doc_id < maxDocId,
-    * non-empty text). Same bounded-collect + rebuild lifecycle as
-    * [[writeBmpFixtureTree]]. */
+  /** Hand-rolled canonical 44-byte PCM WAV (fmt tag 1, 16-bit signed
+    * samples interleaved by frame). */
+  def wavBytes(channels: Int, sampleRate: Int, frames: Int,
+               sample: (Int, Int) => Int): Array[Byte] =
+    riffWav(1, 16, channels, sampleRate, frames, sample)
+
+  /** Write the WAV fixture tree (`aud_<id>.wav`) through [[writeTree]]. */
   def writeWavFixtureTree(documents: DataFrame, dir: String,
-                          maxDocId: Long = 256L): Unit = {
-    import java.nio.file.{Files, Paths}
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val pat = "aud_\\d+\\.wav".r
-    val old = Files.list(base)
-    try old.forEach { p =>
-      if (pat.pattern.matcher(p.getFileName.toString).matches())
-        Files.delete(p)
-    } finally old.close()
-    documents.filter(col("doc_id") < maxDocId)
-      .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("doc_id"), col("text")).collect()
-      .foreach { r =>
-        val (id, text) = (r.getLong(0), r.getString(1))
-        requireAsciiFixture(id, text)
-        val chn = wavChannels(id)
-        Files.write(base.resolve(s"aud_$id.wav"),
-          wavBytes(chn, WavSampleRate, wavFrames(text.length.toLong),
-            wavSample(text, chn)))
+                          maxDocId: Long = 256L): Unit =
+    writeWavTree(documents, dir, "aud", maxDocId, wavBytes)
+
+  /** A clip tree `<prefix>_<id>.wav`: the fixture clip geometry and
+    * sample formula through container writer `enc`. */
+  private def writeWavTree(documents: DataFrame, dir: String, prefix: String,
+                           maxDocId: Long,
+                           enc: (Int, Int, Int, (Int, Int) => Int) => Array[Byte]): Unit =
+    writeTree(documents, dir, s"${prefix}_\\d+\\.wav", maxDocId) { (id, text) =>
+      val chn = wavChannels(id)
+      Seq(s"${prefix}_$id.wav" -> enc(chn, WavSampleRate,
+        wavFrames(text.length.toLong), wavSample(text, chn)))
+    }
+
+  /** The one audio decode step: open the WAV container, check it
+    * against the decoder's policy — 16-bit little-endian signed PCM, or
+    * (`companded`) 8-bit G.711 μ/a-law, which the JDK's codec expands to
+    * that PCM (the container's fmt tag decides WHICH expansion) — then
+    * sum every `step`-th frame: 1 = all, 2 = the nearest-neighbor 2×
+    * temporal downsample, reported at half the nominal rate. A clip
+    * without a single frame fails naming the doc: it has no sample
+    * range, and a min/max sentinel row would be garbage. */
+  private def decodeClip(id: Long, bytes: Array[Byte], companded: Boolean,
+                         step: Int): DecodedAudio = {
+    import javax.sound.sampled.{AudioFormat, AudioSystem}
+    import javax.sound.sampled.AudioFormat.Encoding.{ALAW, PCM_SIGNED, ULAW}
+    val raw = AudioSystem.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
+    try {
+      val fmt = raw.getFormat
+      val chn = fmt.getChannels
+      val data =
+        if (companded) {
+          require((fmt.getEncoding == ULAW || fmt.getEncoding == ALAW) &&
+            fmt.getSampleSizeInBits == 8,
+            s"doc $id container is not 8-bit G.711: $fmt")
+          AudioSystem.getAudioInputStream(new AudioFormat(PCM_SIGNED,
+            fmt.getSampleRate, 16, chn, chn * 2, fmt.getSampleRate, false),
+            raw).readAllBytes()
+        } else {
+          require(fmt.getEncoding == PCM_SIGNED &&
+            fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
+            s"doc $id decoded to unexpected format $fmt — the gate is " +
+              "defined over 16-bit little-endian signed PCM")
+          raw.readAllBytes()
+        }
+      val nFrames = data.length / (chn * 2)
+      require(nFrames > 0, s"doc $id has an empty data section")
+      var (s0, s1) = (0L, 0L)
+      var mn = Long.MaxValue
+      var mx = Long.MinValue
+      var f = 0
+      while (f < nFrames) {
+        var ch = 0
+        while (ch < chn) {
+          val off = (f * chn + ch) * 2
+          // little-endian signed 16-bit reassembly — the .toShort
+          // narrowing IS the sign handling under test
+          val v = (((data(off) & 0xff) | (data(off + 1) << 8)).toShort).toLong
+          if (ch == 0) s0 += v else s1 += v
+          if (v < mn) mn = v
+          if (v > mx) mx = v
+          ch += 1
+        }
+        f += step
       }
+      DecodedAudio(id, chn.toLong, fmt.getSampleRate.toLong / step,
+        ((nFrames + step - 1) / step).toLong, s0, s1, mn, mx)
+    } finally raw.close()
   }
 
-  /** Decode a `binaryFile` frame of WAVs through javax.sound.sampled,
-    * executor-side, per-partition batches — same shape as
-    * [[decodeImages]]: blobs ride the scan and are dropped at decode;
-    * only (doc_id, format, sums) metadata ever reaches an exchange. At
-    * 100 TB a real codec (ffmpeg via JNI) drops into the same iterator.
+  /** Decode a `binaryFile` frame of 16-bit PCM WAVs through
+    * javax.sound.sampled into format metadata + exact per-channel sums
+    * and the observed sample range. A blob outside the policy, or
+    * without a frame, fails the task naming the doc.
     */
   def decodeAudio(spark: SparkSession, files: DataFrame,
                   extPattern: String = "aud_(\\d+)\\.wav$"): Dataset[DecodedAudio] = {
     import spark.implicits._
-    files
-      .filter(col("path").rlike(extPattern)) // stray-file guard, as decodeImages
-      .select(
-        regexp_extract(col("path"), extPattern, 1).cast("long")
-          .as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val fmt = ais.getFormat
-            require(fmt.getEncoding ==
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-              fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
-              s"doc $id decoded to unexpected format $fmt — the gate is " +
-                "defined over 16-bit little-endian signed PCM")
-            val chn = fmt.getChannels
-            val frameSize = fmt.getFrameSize
-            val data = ais.readAllBytes()
-            val nFrames = data.length / frameSize
-            var (s0, s1) = (0L, 0L)
-            var mn = Long.MaxValue
-            var mx = Long.MinValue
-            var f = 0
-            while (f < nFrames) {
-              var ch = 0
-              while (ch < chn) {
-                val off = f * frameSize + ch * 2
-                // little-endian signed 16-bit reassembly — the .toShort
-                // narrowing IS the sign handling under test
-                val v = (((data(off) & 0xff) | (data(off + 1) << 8)).toShort).toLong
-                if (ch == 0) s0 += v else s1 += v
-                if (v < mn) mn = v
-                if (v > mx) mx = v
-                ch += 1
-              }
-              f += 1
-            }
-            DecodedAudio(id, chn.toLong, fmt.getSampleRate.toLong,
-              nFrames.toLong, s0, s1, mn, mx)
-          } finally ais.close()
-        }
-      }
+    decodeBlobs(files, extPattern)((id, b) =>
+      Iterator.single(decodeClip(id, b, companded = false, step = 1)))
   }
 
   /** 2× temporal downsample over REAL decoded audio (keep even frames —
     * the nearest-neighbor resampler every pipeline runs before a
-    * heavier codec), emitting the downsampled frame count + exact
-    * per-channel sums — the audio sibling of [[resizeDecoded]]. Same
-    * decode batch shape; a real resampler (windowed sinc) drops into
-    * the loop body.
+    * heavier codec) — the audio sibling of [[resizeDecoded]].
     */
   def resampleAudio(spark: SparkSession, files: DataFrame,
                     extPattern: String = "aud_(\\d+)\\.wav$"): Dataset[DecodedAudio] = {
     import spark.implicits._
-    files
-      .filter(col("path").rlike(extPattern))
-      .select(
-        regexp_extract(col("path"), extPattern, 1).cast("long")
-          .as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val fmt = ais.getFormat
-            require(fmt.getEncoding ==
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-              fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian,
-              s"doc $id decoded to unexpected format $fmt")
-            val chn = fmt.getChannels
-            val frameSize = fmt.getFrameSize
-            val data = ais.readAllBytes()
-            val nFrames = data.length / frameSize
-            val outFrames = (nFrames + 1) / 2
-            var (s0, s1) = (0L, 0L)
-            var mn = Long.MaxValue
-            var mx = Long.MinValue
-            var f = 0
-            while (f < nFrames) {
-              if (f % 2 == 0) {
-                var ch = 0
-                while (ch < chn) {
-                  val off = f * frameSize + ch * 2
-                  val v = (((data(off) & 0xff) | (data(off + 1) << 8)).toShort).toLong
-                  if (ch == 0) s0 += v else s1 += v
-                  if (v < mn) mn = v
-                  if (v > mx) mx = v
-                  ch += 1
-                }
-              }
-              f += 1
-            }
-            DecodedAudio(id, chn.toLong, fmt.getSampleRate.toLong / 2L,
-              outFrames.toLong, s0, s1, mn, mx)
-          } finally ais.close()
-        }
-      }
+    decodeBlobs(files, extPattern)((id, b) =>
+      Iterator.single(decodeClip(id, b, companded = false, step = 2)))
   }
 
-  /** Oracle for the decoded-audio 2× downsample: same formula filtered
-    * to even frames (i // chn even), halved nominal rate. */
-  def resampleAudioOracle(maxDocId: Long = 256L): String =
-    s"""WITH v AS (
-       |  SELECT doc_id, chn, fr, i % chn AS ch, i // chn AS f,
-       |    ((ascii(substr(text, CAST(i % n AS INT) + 1, 1)) * 523
-       |      + (i // chn) * 1031 + (i % chn) * 1733) % 65536) - 32768 AS s
+  /** The clip generation formula as SQL ([[wavSample]]): one row per
+    * interleaved sample of every fixture clip — i = f·chn + ch, so
+    * f = i // chn, ch = i % chn, and the char index (f·chn + ch) mod n
+    * = i mod n. Shared by every audio oracle, the way [[bmpPixelsSql]]
+    * serves the image ones. */
+  private def wavSamplesSql(maxDocId: Long): String =
+    s"""SELECT doc_id, chn, fr, i, i // chn AS f, i % chn AS ch,
+       |  ((ascii(substr(text, CAST(i % n AS INT) + 1, 1)) * 523
+       |    + (i // chn) * 1031 + (i % chn) * 1733) % 65536) - 32768 AS s
+       |FROM (
+       |  SELECT doc_id, text, n, chn, fr, unnest(range(0, fr * chn)) AS i
        |  FROM (
-       |    SELECT doc_id, text, n, chn, fr, unnest(range(0, fr * chn)) AS i
-       |    FROM (
-       |      SELECT doc_id, text, length(text) AS n,
-       |        1 + (doc_id % 2) AS chn, 1 + (length(text) % 29) AS fr
-       |      FROM documents
-       |      WHERE doc_id < $maxDocId AND text IS NOT NULL
-       |        AND length(text) > 0)))
+       |    SELECT doc_id, text, length(text) AS n,
+       |      1 + (doc_id % 2) AS chn, 1 + (length(text) % 29) AS fr
+       |    FROM documents
+       |    WHERE doc_id < $maxDocId AND text IS NOT NULL
+       |      AND length(text) > 0))""".stripMargin
+
+  /** The audio oracles' stats tail: [[decodeClip]]'s row over samples
+    * `v` (doc_id, chn, fr, f, ch, s), keeping every `step`-th frame. */
+  private def wavStatsSql(v: String, step: Int = 1): String =
+    s"""WITH v AS ($v)
        |SELECT doc_id,
        |  CAST(chn AS BIGINT) AS n_channels,
-       |  CAST(${WavSampleRate / 2} AS BIGINT) AS sample_rate,
-       |  CAST((fr + 1) // 2 AS BIGINT) AS n_frames,
+       |  CAST(${WavSampleRate / step} AS BIGINT) AS sample_rate,
+       |  CAST((fr + ${step - 1}) // $step AS BIGINT) AS n_frames,
        |  CAST(sum(CASE WHEN ch = 0 THEN s ELSE 0 END) AS BIGINT) AS sum_ch0,
        |  CAST(sum(CASE WHEN ch = 1 THEN s ELSE 0 END) AS BIGINT) AS sum_ch1,
        |  CAST(min(s) AS BIGINT) AS min_sample,
        |  CAST(max(s) AS BIGINT) AS max_sample
-       |FROM v WHERE f % 2 = 0
+       |FROM v WHERE f % $step = 0
        |GROUP BY doc_id, chn, fr""".stripMargin
 
   /** Oracle: expected format + exact per-channel sums + observed sample
     * range from the generation formula — agreement means
     * wavBytes → javax.sound decode round-tripped every sample of every
-    * clip. Interleave index i = f·chn + ch, so f = i // chn,
-    * ch = i % chn, and the char index (f·chn + ch) mod n = i mod n. */
+    * clip. */
   def decodeAudioOracle(maxDocId: Long = 256L): String =
-    s"""WITH v AS (
-       |  SELECT doc_id, chn, fr, i % chn AS ch,
-       |    ((ascii(substr(text, CAST(i % n AS INT) + 1, 1)) * 523
-       |      + (i // chn) * 1031 + (i % chn) * 1733) % 65536) - 32768 AS s
-       |  FROM (
-       |    SELECT doc_id, text, n, chn, fr, unnest(range(0, fr * chn)) AS i
-       |    FROM (
-       |      SELECT doc_id, text, length(text) AS n,
-       |        1 + (doc_id % 2) AS chn, 1 + (length(text) % 29) AS fr
-       |      FROM documents
-       |      WHERE doc_id < $maxDocId AND text IS NOT NULL
-       |        AND length(text) > 0)))
-       |SELECT doc_id,
-       |  CAST(chn AS BIGINT) AS n_channels,
-       |  CAST($WavSampleRate AS BIGINT) AS sample_rate,
-       |  CAST(fr AS BIGINT) AS n_frames,
-       |  CAST(sum(CASE WHEN ch = 0 THEN s ELSE 0 END) AS BIGINT) AS sum_ch0,
-       |  CAST(sum(CASE WHEN ch = 1 THEN s ELSE 0 END) AS BIGINT) AS sum_ch1,
-       |  CAST(min(s) AS BIGINT) AS min_sample,
-       |  CAST(max(s) AS BIGINT) AS max_sample
-       |FROM v GROUP BY doc_id, chn, fr""".stripMargin
+    wavStatsSql(wavSamplesSql(maxDocId))
+
+  /** Oracle for the decoded-audio 2× downsample: same formula filtered
+    * to even frames, halved nominal rate. */
+  def resampleAudioOracle(maxDocId: Long = 256L): String =
+    wavStatsSql(wavSamplesSql(maxDocId), step = 2)
 
   // --------------------------------------------------------------------
-  // SECOND audio container (round 13, VERDICT r12 item 3): G.711 μ-law
+  // SECOND audio container: G.711 μ-law
   // WAV — the COMPANDED sibling of the PCM gate, proving the audio
   // oracle is container-independent the way PNG proved it for BMP. The
   // fixture writer companding is HAND-ROLLED (ITU-T G.711, public spec:
@@ -1280,179 +1131,58 @@ object MultimodalOps {
     if ((u & 0x80) != 0) -mag else mag
   }
 
-  /** Hand-rolled μ-law WAV container: RIFF with fmt tag 7
-    * (WAVE_FORMAT_MULAW), 8 bits/sample, one code byte per sample,
-    * frames interleaved by channel — the companded twin of [[wavBytes]].
-    */
+
+  /** Hand-rolled μ-law WAV container: fmt tag 7 (WAVE_FORMAT_MULAW),
+    * 8 bits/sample, one [[ulawEncode]] code byte per sample — the
+    * companded twin of [[wavBytes]]. */
   def ulawWavBytes(channels: Int, sampleRate: Int, frames: Int,
-                   sample: (Int, Int) => Int): Array[Byte] = {
-    val dataSize = frames * channels
-    val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put('R'.toByte).put('I'.toByte).put('F'.toByte).put('F'.toByte)
-      .putInt(36 + dataSize)
-      .put('W'.toByte).put('A'.toByte).put('V'.toByte).put('E'.toByte)
-    buf.put('f'.toByte).put('m'.toByte).put('t'.toByte).put(' '.toByte)
-      .putInt(16).putShort(7) // WAVE_FORMAT_MULAW
-      .putShort(channels.toShort).putInt(sampleRate)
-      .putInt(sampleRate * channels) // byte rate: 1 code byte per sample
-      .putShort(channels.toShort) // block align
-      .putShort(8) // bits per sample
-    buf.put('d'.toByte).put('a'.toByte).put('t'.toByte).put('a'.toByte)
-      .putInt(dataSize)
-    var f = 0
-    while (f < frames) {
-      var ch = 0
-      while (ch < channels) {
-        buf.put(ulawEncode(sample(f, ch)).toByte)
-        ch += 1
-      }
-      f += 1
-    }
-    buf.array()
-  }
+                   sample: (Int, Int) => Int): Array[Byte] =
+    riffWav(7, 8, channels, sampleRate, frames, (f, ch) => ulawEncode(sample(f, ch)))
 
   /** Write the μ-law fixture tree (`ul_<id>.wav`) — SAME clip geometry
     * and sample formula as [[writeWavFixtureTree]], companded through
-    * [[ulawEncode]]; same bounded-collect lifecycle. */
+    * [[ulawEncode]]. */
   def writeUlawFixtureTree(documents: DataFrame, dir: String,
-                           maxDocId: Long = 256L): Unit = {
-    import java.nio.file.{Files, Paths}
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val pat = "ul_\\d+\\.wav".r
-    val old = Files.list(base)
-    try old.forEach { p =>
-      if (pat.pattern.matcher(p.getFileName.toString).matches())
-        Files.delete(p)
-    } finally old.close()
-    documents.filter(col("doc_id") < maxDocId)
-      .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("doc_id"), col("text")).collect()
-      .foreach { r =>
-        val (id, text) = (r.getLong(0), r.getString(1))
-        requireAsciiFixture(id, text)
-        val chn = wavChannels(id)
-        Files.write(base.resolve(s"ul_$id.wav"),
-          ulawWavBytes(chn, WavSampleRate, wavFrames(text.length.toLong),
-            wavSample(text, chn)))
-      }
-  }
+                           maxDocId: Long = 256L): Unit =
+    writeWavTree(documents, dir, "ul", maxDocId, ulawWavBytes)
 
-  /** Decode a `binaryFile` frame of COMPANDED (μ-law or a-law) WAVs:
-    * the JDK parses the companded container, then
-    * `AudioSystem.getAudioInputStream` converts to 16-bit little-endian
-    * signed PCM — the conversion step every companded-telephony ingest
-    * runs — and the same summing loop as [[decodeAudio]] runs over the
-    * expanded samples. The container's fmt tag decides WHICH G.711
-    * expansion the JDK applies; the decode plumbing is one path. Blobs
-    * ride the scan; only metadata reaches an exchange. */
+  /** Decode a `binaryFile` frame of COMPANDED (μ-law or a-law) WAVs: the
+    * JDK parses the companded container and expands it to 16-bit PCM —
+    * the conversion step every companded-telephony ingest runs — then
+    * [[decodeClip]]'s summing loop runs over the expanded samples. */
   def decodeAudioCompanded(spark: SparkSession, files: DataFrame,
                            extPattern: String = "ul_(\\d+)\\.wav$"): Dataset[DecodedAudio] = {
     import spark.implicits._
-    files
-      .filter(col("path").rlike(extPattern))
-      .select(
-        regexp_extract(col("path"), extPattern, 1).cast("long")
-          .as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          val raw = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val in = raw.getFormat
-            require((in.getEncoding ==
-              javax.sound.sampled.AudioFormat.Encoding.ULAW ||
-              in.getEncoding ==
-                javax.sound.sampled.AudioFormat.Encoding.ALAW) &&
-              in.getSampleSizeInBits == 8,
-              s"doc $id container is not 8-bit G.711: $in")
-            val chn = in.getChannels
-            val pcm = new javax.sound.sampled.AudioFormat(
-              javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-              in.getSampleRate, 16, chn, chn * 2, in.getSampleRate, false)
-            val ais = javax.sound.sampled.AudioSystem
-              .getAudioInputStream(pcm, raw)
-            val frameSize = chn * 2
-            val data = ais.readAllBytes()
-            val nFrames = data.length / frameSize
-            var (s0, s1) = (0L, 0L)
-            var mn = Long.MaxValue
-            var mx = Long.MinValue
-            var f = 0
-            while (f < nFrames) {
-              var ch = 0
-              while (ch < chn) {
-                val off = f * frameSize + ch * 2
-                val v = (((data(off) & 0xff) | (data(off + 1) << 8)).toShort).toLong
-                if (ch == 0) s0 += v else s1 += v
-                if (v < mn) mn = v
-                if (v > mx) mx = v
-                ch += 1
-              }
-              f += 1
-            }
-            DecodedAudio(id, chn.toLong, in.getSampleRate.toLong,
-              nFrames.toLong, s0, s1, mn, mx)
-          } finally raw.close()
-        }
-      }
+    decodeBlobs(files, extPattern)((id, b) =>
+      Iterator.single(decodeClip(id, b, companded = true, step = 1)))
   }
 
+  /** The G.711 μ-law encode→decode ROUND TRIP of column `s` in pure
+    * integer SQL (no float log — the segment is an 8-way integer CASE,
+    * so boundaries are exact): mag = min(|s|, 32635) + 132; p =
+    * 2^segment via the highest-bit CASE; mantissa = (mag / 8p) mod 16;
+    * adds the reconstructed magnitude d = (8·mantissa + 132)·p − 132
+    * (the sign is the caller's: s's). */
+  private def ulawRoundTripSql(samples: String): String =
+    s"""SELECT *, (((mag // (8 * p)) % 16) * 8 + 132) * p - 132 AS d
+       |FROM (
+       |  SELECT *, CASE WHEN mag >= 16384 THEN 128 WHEN mag >= 8192 THEN 64
+       |                 WHEN mag >= 4096 THEN 32 WHEN mag >= 2048 THEN 16
+       |                 WHEN mag >= 1024 THEN 8 WHEN mag >= 512 THEN 4
+       |                 WHEN mag >= 256 THEN 2 ELSE 1 END AS p
+       |  FROM (SELECT *, least(abs(s), 32635) + 132 AS mag
+       |        FROM ($samples)))""".stripMargin
+
   /** Oracle for the companded decode: the SAME generation formula as
-    * [[decodeAudioOracle]], each sample pushed through the G.711
-    * encode→decode ROUND TRIP in pure integer SQL (no float log — the
-    * segment is an 8-way integer CASE, so boundaries are exact):
-    * mag = min(|s|, 32635) + 132; p = 2^segment via the highest-bit
-    * CASE; mantissa = (mag / 8p) mod 16; reconstruction
-    * (8·mantissa + 132)·p − 132, sign reapplied. */
+    * [[decodeAudioOracle]], each sample pushed through the μ-law round
+    * trip, sign reapplied. */
   def decodeUlawOracle(maxDocId: Long = 256L): String =
-    s"""WITH raw AS (
-       |  SELECT doc_id, chn, fr, i % chn AS ch,
-       |    ((ascii(substr(text, CAST(i % n AS INT) + 1, 1)) * 523
-       |      + (i // chn) * 1031 + (i % chn) * 1733) % 65536) - 32768 AS s
-       |  FROM (
-       |    SELECT doc_id, text, n, chn, fr, unnest(range(0, fr * chn)) AS i
-       |    FROM (
-       |      SELECT doc_id, text, length(text) AS n,
-       |        1 + (doc_id % 2) AS chn, 1 + (length(text) % 29) AS fr
-       |      FROM documents
-       |      WHERE doc_id < $maxDocId AND text IS NOT NULL
-       |        AND length(text) > 0))),
-       |seg AS (
-       |  SELECT doc_id, chn, fr, ch, s,
-       |    least(abs(s), 32635) + 132 AS mag
-       |  FROM raw),
-       |v AS (
-       |  SELECT doc_id, chn, fr, ch,
-       |    CASE WHEN s < 0 THEN -d ELSE d END AS s
-       |  FROM (
-       |    SELECT doc_id, chn, fr, ch, s,
-       |      (((mag // (8 * p)) % 16) * 8 + 132) * p - 132 AS d
-       |    FROM (
-       |      SELECT *, CASE WHEN mag >= 16384 THEN 128
-       |                     WHEN mag >= 8192 THEN 64
-       |                     WHEN mag >= 4096 THEN 32
-       |                     WHEN mag >= 2048 THEN 16
-       |                     WHEN mag >= 1024 THEN 8
-       |                     WHEN mag >= 512 THEN 4
-       |                     WHEN mag >= 256 THEN 2
-       |                     ELSE 1 END AS p
-       |      FROM seg)))
-       |SELECT doc_id,
-       |  CAST(chn AS BIGINT) AS n_channels,
-       |  CAST($WavSampleRate AS BIGINT) AS sample_rate,
-       |  CAST(fr AS BIGINT) AS n_frames,
-       |  CAST(sum(CASE WHEN ch = 0 THEN s ELSE 0 END) AS BIGINT) AS sum_ch0,
-       |  CAST(sum(CASE WHEN ch = 1 THEN s ELSE 0 END) AS BIGINT) AS sum_ch1,
-       |  CAST(min(s) AS BIGINT) AS min_sample,
-       |  CAST(max(s) AS BIGINT) AS max_sample
-       |FROM v GROUP BY doc_id, chn, fr""".stripMargin
+    wavStatsSql(
+      s"""SELECT doc_id, chn, fr, f, ch, CASE WHEN s < 0 THEN -d ELSE d END AS s
+         |FROM (${ulawRoundTripSql(wavSamplesSql(maxDocId))})""".stripMargin)
 
   // --------------------------------------------------------------------
-  // THIRD audio container (round 13): G.711 A-LAW — the other half of
+  // THIRD audio container: G.711 A-LAW — the other half of
   // the companding pair. Same three-way gate as μ-law (hand-rolled
   // encoder, fmt tag 6; JDK expansion, probed table-identical to the
   // standard formula on all 256 codes; integer-SQL round-trip oracle),
@@ -1489,61 +1219,18 @@ object MultimodalOps {
     if ((a & 0x80) != 0) t else -t
   }
 
+
   /** Hand-rolled a-law WAV container: fmt tag 6 (WAVE_FORMAT_ALAW),
     * 8 bits/sample — the byte layout twin of [[ulawWavBytes]]. */
   def alawWavBytes(channels: Int, sampleRate: Int, frames: Int,
-                   sample: (Int, Int) => Int): Array[Byte] = {
-    val dataSize = frames * channels
-    val buf = java.nio.ByteBuffer.allocate(44 + dataSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.put('R'.toByte).put('I'.toByte).put('F'.toByte).put('F'.toByte)
-      .putInt(36 + dataSize)
-      .put('W'.toByte).put('A'.toByte).put('V'.toByte).put('E'.toByte)
-    buf.put('f'.toByte).put('m'.toByte).put('t'.toByte).put(' '.toByte)
-      .putInt(16).putShort(6) // WAVE_FORMAT_ALAW
-      .putShort(channels.toShort).putInt(sampleRate)
-      .putInt(sampleRate * channels)
-      .putShort(channels.toShort)
-      .putShort(8)
-    buf.put('d'.toByte).put('a'.toByte).put('t'.toByte).put('a'.toByte)
-      .putInt(dataSize)
-    var f = 0
-    while (f < frames) {
-      var ch = 0
-      while (ch < channels) {
-        buf.put(alawEncode(sample(f, ch)).toByte)
-        ch += 1
-      }
-      f += 1
-    }
-    buf.array()
-  }
+                   sample: (Int, Int) => Int): Array[Byte] =
+    riffWav(6, 8, channels, sampleRate, frames, (f, ch) => alawEncode(sample(f, ch)))
 
   /** Write the a-law fixture tree (`al_<id>.wav`) — same geometry and
     * sample formula, companded through [[alawEncode]]. */
   def writeAlawFixtureTree(documents: DataFrame, dir: String,
-                           maxDocId: Long = 256L): Unit = {
-    import java.nio.file.{Files, Paths}
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val pat = "al_\\d+\\.wav".r
-    val old = Files.list(base)
-    try old.forEach { p =>
-      if (pat.pattern.matcher(p.getFileName.toString).matches())
-        Files.delete(p)
-    } finally old.close()
-    documents.filter(col("doc_id") < maxDocId)
-      .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("doc_id"), col("text")).collect()
-      .foreach { r =>
-        val (id, text) = (r.getLong(0), r.getString(1))
-        requireAsciiFixture(id, text)
-        val chn = wavChannels(id)
-        Files.write(base.resolve(s"al_$id.wav"),
-          alawWavBytes(chn, WavSampleRate, wavFrames(text.length.toLong),
-            wavSample(text, chn)))
-      }
-  }
+                           maxDocId: Long = 256L): Unit =
+    writeWavTree(documents, dir, "al", maxDocId, alawWavBytes)
 
   /** Oracle for the a-law decode: generation formula → a-law
     * encode→decode round trip in pure integer SQL. Segment 0 is the
@@ -1553,50 +1240,21 @@ object MultimodalOps {
     * the INPUT's sign (a-law's bit-7-positive convention folds away in
     * the round trip), with x = 0 reconstructing to +8. */
   def decodeAlawOracle(maxDocId: Long = 256L): String =
-    s"""WITH raw AS (
-       |  SELECT doc_id, chn, fr, i % chn AS ch,
-       |    ((ascii(substr(text, CAST(i % n AS INT) + 1, 1)) * 523
-       |      + (i // chn) * 1031 + (i % chn) * 1733) % 65536) - 32768 AS s
-       |  FROM (
-       |    SELECT doc_id, text, n, chn, fr, unnest(range(0, fr * chn)) AS i
-       |    FROM (
-       |      SELECT doc_id, text, length(text) AS n,
-       |        1 + (doc_id % 2) AS chn, 1 + (length(text) % 29) AS fr
-       |      FROM documents
-       |      WHERE doc_id < $maxDocId AND text IS NOT NULL
-       |        AND length(text) > 0))),
-       |seg AS (
-       |  SELECT doc_id, chn, fr, ch, s,
-       |    least(abs(s), 32767) AS mag
-       |  FROM raw),
-       |v AS (
-       |  SELECT doc_id, chn, fr, ch,
-       |    CASE WHEN s >= 0 THEN d ELSE -d END AS s
-       |  FROM (
-       |    SELECT doc_id, chn, fr, ch, s,
-       |      CASE WHEN mag < 256 THEN (mag // 16) * 16 + 8
-       |           ELSE (((mag // (16 * p)) % 16) * 16 + 264) * p END AS d
-       |    FROM (
-       |      SELECT *, CASE WHEN mag >= 16384 THEN 64
-       |                     WHEN mag >= 8192 THEN 32
-       |                     WHEN mag >= 4096 THEN 16
-       |                     WHEN mag >= 2048 THEN 8
-       |                     WHEN mag >= 1024 THEN 4
-       |                     WHEN mag >= 512 THEN 2
-       |                     ELSE 1 END AS p
-       |      FROM seg)))
-       |SELECT doc_id,
-       |  CAST(chn AS BIGINT) AS n_channels,
-       |  CAST($WavSampleRate AS BIGINT) AS sample_rate,
-       |  CAST(fr AS BIGINT) AS n_frames,
-       |  CAST(sum(CASE WHEN ch = 0 THEN s ELSE 0 END) AS BIGINT) AS sum_ch0,
-       |  CAST(sum(CASE WHEN ch = 1 THEN s ELSE 0 END) AS BIGINT) AS sum_ch1,
-       |  CAST(min(s) AS BIGINT) AS min_sample,
-       |  CAST(max(s) AS BIGINT) AS max_sample
-       |FROM v GROUP BY doc_id, chn, fr""".stripMargin
+    wavStatsSql(
+      s"""SELECT doc_id, chn, fr, f, ch, CASE WHEN s >= 0 THEN d ELSE -d END AS s
+         |FROM (
+         |  SELECT *, CASE WHEN mag < 256 THEN (mag // 16) * 16 + 8
+         |                 ELSE (((mag // (16 * p)) % 16) * 16 + 264) * p END AS d
+         |  FROM (
+         |    SELECT *, CASE WHEN mag >= 16384 THEN 64 WHEN mag >= 8192 THEN 32
+         |                   WHEN mag >= 4096 THEN 16 WHEN mag >= 2048 THEN 8
+         |                   WHEN mag >= 1024 THEN 4 WHEN mag >= 512 THEN 2
+         |                   ELSE 1 END AS p
+         |    FROM (SELECT *, least(abs(s), 32767) AS mag
+         |          FROM (${wavSamplesSql(maxDocId)}))))""".stripMargin)
 
   // --------------------------------------------------------------------
-  // CORRUPT-BLOB QUARANTINE (round 13): the constraint-quarantine idiom
+  // CORRUPT-BLOB QUARANTINE: the constraint-quarantine idiom
   // (StatsOps.constraintRoute) applied to real codecs. At 100 TB one
   // truncated upload among billions of files MUST route to a quarantine
   // table, not kill the job — decodeAudio/decodeAudioCompanded fail
@@ -1604,9 +1262,8 @@ object MultimodalOps {
   // the lenient twin. Every blob gets exactly one verdict row: "ok"
   // with full stats, or "corrupt" with null stats — corrupt means the
   // JDK refused the container, the payload violates the G.711 policy,
-  // or the data section is empty (zero frames would otherwise emit a
-  // garbage min/max sentinel row — caught by review while building
-  // this path).
+  // or the data section is empty — exactly the blobs on which the
+  // strict decoders throw.
   // --------------------------------------------------------------------
 
   /** Deterministic corrupt fixtures for the quarantine gate: one
@@ -1624,77 +1281,29 @@ object MultimodalOps {
       ulawWavBytes(1, WavSampleRate, 0, (_, _) => 0))
   }
 
-  /** LENIENT companded decode: same per-blob work as
-    * [[decodeAudioCompanded]], but each blob's failure is ITS OWN
-    * verdict row ("corrupt", null stats) instead of a task failure —
-    * the decode is per-blob-independent, so the catch boundary is the
-    * blob, and a single bad byte quarantines one row out of billions.
+
+  /** LENIENT companded decode: [[decodeAudioCompanded]]'s per-blob step,
+    * but each blob's failure is ITS OWN verdict row ("corrupt", null
+    * stats, the [[corruptReason]]) instead of a task failure — the decode
+    * is per-blob-independent, so the catch boundary is the blob, and a
+    * single bad byte quarantines one row out of billions. The oracle
+    * compares on status only (the registered query drops `reason`).
     */
   def decodeAudioLenient(spark: SparkSession, files: DataFrame,
                          extPattern: String = "ul_(\\d+)\\.wav$"): Dataset[LenientAudio] = {
     import spark.implicits._
-    files
-      .filter(col("path").rlike(extPattern))
-      .select(
-        regexp_extract(col("path"), extPattern, 1).cast("long")
-          .as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, bytes) =>
-          try {
-            val raw = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            try {
-              val in = raw.getFormat
-              require((in.getEncoding ==
-                javax.sound.sampled.AudioFormat.Encoding.ULAW ||
-                in.getEncoding ==
-                  javax.sound.sampled.AudioFormat.Encoding.ALAW) &&
-                in.getSampleSizeInBits == 8,
-                s"doc $id container is not 8-bit G.711: $in")
-              val chn = in.getChannels
-              val pcm = new javax.sound.sampled.AudioFormat(
-                javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-                in.getSampleRate, 16, chn, chn * 2, in.getSampleRate, false)
-              val ais = javax.sound.sampled.AudioSystem
-                .getAudioInputStream(pcm, raw)
-              val frameSize = chn * 2
-              val data = ais.readAllBytes()
-              val nFrames = data.length / frameSize
-              require(nFrames > 0, s"doc $id has an empty data section")
-              var (s0, s1) = (0L, 0L)
-              var mn = Long.MaxValue
-              var mx = Long.MinValue
-              var f = 0
-              while (f < nFrames) {
-                var ch = 0
-                while (ch < chn) {
-                  val off = f * frameSize + ch * 2
-                  val v = (((data(off) & 0xff) | (data(off + 1) << 8)).toShort).toLong
-                  if (ch == 0) s0 += v else s1 += v
-                  if (v < mn) mn = v
-                  if (v > mx) mx = v
-                  ch += 1
-                }
-                f += 1
-              }
-              LenientAudio(id, "ok", Some(chn.toLong),
-                Some(in.getSampleRate.toLong), Some(nFrames.toLong),
-                Some(s0), Some(s1), Some(mn), Some(mx))
-            } finally raw.close()
-          } catch {
-            // Carry the exception class + message so a SYSTEMIC fault
-            // (e.g. a missing codec provider failing every blob the same
-            // way) is distinguishable from per-blob data corruption; the
-            // oracle compares on status only (the query drops `reason`).
-            case scala.util.control.NonFatal(e) =>
-              LenientAudio(id, "corrupt", None, None, None, None, None,
-                None, None,
-                Some(s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(256)}"))
-          }
-        }
-      }
+    decodeBlobs(files, extPattern) { (id, bytes) =>
+      Iterator.single(try {
+        val d = decodeClip(id, bytes, companded = true, step = 1)
+        LenientAudio(id, "ok", Some(d.n_channels), Some(d.sample_rate),
+          Some(d.n_frames), Some(d.sum_ch0), Some(d.sum_ch1),
+          Some(d.min_sample), Some(d.max_sample))
+      } catch {
+        case NonFatal(e) =>
+          LenientAudio(id, "corrupt", None, None, None, None, None, None,
+            None, corruptReason(e))
+      })
+    }
   }
 
   /** Oracle: the μ-law round-trip formula rows tagged 'ok' UNION the
@@ -1718,7 +1327,7 @@ object MultimodalOps {
        |FROM (VALUES ($junkId), ($emptyId)) AS v(id)""".stripMargin
 
   // --------------------------------------------------------------------
-  // REAL video-container frame sampling (round 12): the `.vid` modality
+  // REAL video-container frame sampling: the `.vid` modality
   // gets a real MULTI-FRAME decode — animated GIF through the JDK's
   // ImageIO sequence writer/reader (zero new dependencies; a real video
   // codec is a JNI drop-in for the same iterator). Frames are grayscale
@@ -1749,7 +1358,7 @@ object MultimodalOps {
     multiFrameBytes("gif", w, h, nFrames, px)
 
   /** Multi-PAGE TIFF bytes through the SAME sequence-writer core
-    * (VERDICT r13 item 5) — the second multi-frame container. The JDK's
+    * — the second multi-frame container. The JDK's
     * TIFF plugin (ImageIO, JDK 9+) writes the identical indexed-gray
     * rasters as palette-color pages, so the one pixel formula proves
     * frame sampling container-independent the way PNG/a-law did for
@@ -1758,25 +1367,20 @@ object MultimodalOps {
     multiFrameBytes("tiff", w, h, nFrames, px)
 
   private def multiFrameBytes(format: String, w: Int, h: Int, nFrames: Int,
-                              px: (Int, Int) => Int): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName(format).next()
-    try {
-      writer.setOutput(ios)
+                              px: (Int, Int) => Int): Array[Byte] =
+    imageBytes(format) { (writer, param) =>
       // interlacing OFF: the JDK's interlaced GIF write→read round trip
-      // returns rows in a garbled order (spec-caught: a 4×4 ramp came
-      // back with rows 0/2/1/<blank>), so the gate pins the
-      // non-progressive path a pipeline would use anyway (the TIFF
-      // writer has no progressive mode — guard on capability)
-      val param = writer.getDefaultWriteParam
+      // returns rows in a garbled order (a 4×4 ramp came back with rows
+      // 0/2/1/<blank>), so the gate pins the non-progressive path a
+      // pipeline would use anyway (the TIFF writer has no progressive
+      // mode — guard on capability)
       if (param.canWriteProgressive)
         param.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DISABLED)
       writer.prepareWriteSequence(null)
       // an EXPLICIT 256-gray IndexColorModel: the JDK GIF writer encodes
       // an indexed image's own palette losslessly, but QUANTIZES
       // non-indexed inputs (TYPE_BYTE_GRAY included) to a default
-      // palette — spec-caught as a 1447-vs-1970 gray-sum mismatch
+      // palette (a 1447-vs-1970 gray-sum mismatch)
       val grays = Array.tabulate(256)(_.toByte)
       val icm = new java.awt.image.IndexColorModel(8, 256, grays, grays, grays)
       var f = 0
@@ -1794,15 +1398,9 @@ object MultimodalOps {
         f += 1
       }
       writer.endWriteSequence()
-    } finally {
-      writer.dispose()
-      ios.close()
     }
-    bos.toByteArray
-  }
 
-  /** Write the GIF fixture tree (`vid_<id>.gif`). Same bounded-collect
-    * + rebuild lifecycle as [[writeWavFixtureTree]]. */
+  /** Write the GIF fixture tree (`vid_<id>.gif`) through [[writeTree]]. */
   def writeGifFixtureTree(documents: DataFrame, dir: String,
                           maxDocId: Long = 256L): Unit =
     writeFrameFixtureTree(documents, dir, "gif", gifBytes, maxDocId)
@@ -1817,76 +1415,41 @@ object MultimodalOps {
   private def writeFrameFixtureTree(documents: DataFrame, dir: String,
                                     ext: String,
                                     enc: (Int, Int, Int, (Int, Int) => Int) => Array[Byte],
-                                    maxDocId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    val pat = s"vid_\\d+\\.$ext".r
-    val old = Files.list(base)
-    try old.forEach { p =>
-      if (pat.pattern.matcher(p.getFileName.toString).matches())
-        Files.delete(p)
-    } finally old.close()
-    documents.filter(col("doc_id") < maxDocId)
-      .filter(col("text").isNotNull && length(col("text")) > 0)
-      .select(col("doc_id"), col("text")).collect()
-      .foreach { r =>
-        val (id, text) = (r.getLong(0), r.getString(1))
-        requireAsciiFixture(id, text)
-        val (w, h) = (gifWidth(text.length.toLong), gifHeight(id))
-        Files.write(base.resolve(s"vid_$id.$ext"),
-          enc(w, h, gifFrames(id), gifPixel(text, w, h)))
-      }
-  }
+                                    maxDocId: Long): Unit =
+    writeTree(documents, dir, s"vid_\\d+\\.$ext", maxDocId) { (id, text) =>
+      val (w, h) = (gifWidth(text.length.toLong), gifHeight(id))
+      Seq(s"vid_$id.$ext" -> enc(w, h, gifFrames(id), gifPixel(text, w, h)))
+    }
 
   /** Stride-sample REAL container frames: decode ONLY frame indices
-    * 0, stride, 2·stride… of each GIF via ImageIO's multi-image reader
-    * — the production pruning shape ([[sampleFrames]]'s byte-stride
-    * stand-in, now on real frames): skipped frames are never rasterized,
-    * so decode cost is linear in SAMPLED frames. Executor-side
-    * per-partition batches; blobs dropped at decode.
+    * 0, stride, 2·stride… of each multi-frame blob via ImageIO's
+    * multi-image reader — the production pruning shape
+    * ([[sampleFrames]]'s byte-stride stand-in, now on real frames):
+    * skipped frames are never rasterized, so decode cost is linear in
+    * SAMPLED frames. The reader is picked from the stream itself, the way
+    * `ImageIO.read` picks one for single images (GIF and multi-page TIFF
+    * both detect); a blob no reader accepts fails naming the doc.
     */
   def sampleFramesReal(spark: SparkSession, files: DataFrame, stride: Int = 2,
-                       extPattern: String = "vid_(\\d+)\\.gif$",
-                       format: String = "gif"): Dataset[DecodedFrame] = {
+                       extPattern: String = "vid_(\\d+)\\.gif$"): Dataset[DecodedFrame] = {
     import spark.implicits._
-    files
-      .filter(col("path").rlike(extPattern)) // stray-file guard
-      .select(
-        regexp_extract(col("path"), extPattern, 1).cast("long")
-          .as("doc_id"),
-        col("content"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.flatMap { case (id, bytes) =>
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          val reader = javax.imageio.ImageIO
-            .getImageReadersByFormatName(format).next()
-          try {
-            reader.setInput(iis)
-            val n = reader.getNumImages(true)
-            (0 until n by stride).map { f =>
-              val img = reader.read(f)
-              var sum = 0L
-              var y = 0
-              while (y < img.getHeight) {
-                var x = 0
-                while (x < img.getWidth) {
-                  sum += (img.getRGB(x, y) & 0xff).toLong // gray: r=g=b
-                  x += 1
-                }
-                y += 1
-              }
-              DecodedFrame(id, f.toLong, img.getWidth.toLong,
-                img.getHeight.toLong, sum)
-            }
-          } finally {
-            reader.dispose()
-            iis.close()
+    decodeBlobs(files, extPattern) { (id, bytes) =>
+      val iis = javax.imageio.ImageIO.createImageInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      try {
+        val readers = javax.imageio.ImageIO.getImageReaders(iis)
+        require(readers.hasNext,
+          s"undecodable frame container for doc $id: no registered reader accepted the blob")
+        val reader = readers.next()
+        try {
+          reader.setInput(iis)
+          (0 until reader.getNumImages(true) by stride).map { f =>
+            val d = rasterStats(id, reader.read(f), 1)
+            DecodedFrame(id, f.toLong, d.width, d.height, d.sum_b) // gray: r=g=b
           }
-        }
-      }
+        } finally reader.dispose()
+      } finally iis.close()
+    }
   }
 
   /** Oracle: every sampled frame's dims + exact gray sum from the

@@ -140,8 +140,8 @@ class Round10AdditionsSpec extends SparkSpec {
     val docs = Seq((0L, "abcdefg"), (3L, "Z"), (12L, "pixel data here ok"))
       .map { case (i, t) => (i, t, "en", "s") }
       .toDF("doc_id", "text", "lang", "source")
-    val dir = java.nio.file.Files.createTempDirectory("bmp_spec").toString
-    try {
+    withTempDir("bmp_spec") { tmp =>
+      val dir = tmp.toString
       MultimodalOps.writeBmpFixtureTree(docs, dir)
       val got = MultimodalOps.decodeImages(spark,
           spark.read.format("binaryFile").load(dir))
@@ -158,15 +158,15 @@ class Round10AdditionsSpec extends SparkSpec {
           assert(d.sum_g == pts.map(_._2.toLong).sum)
           assert(d.sum_b == pts.map(_._3.toLong).sum)
       }
-    } finally graft.ops.FixtureDirs.rmTree(java.nio.file.Paths.get(dir))
+    }
   }
 
   test("resizeDecoded: 2x nearest-neighbor keeps even (x, y) pixels of the REAL raster") {
     import graft.ops.MultimodalOps
     val docs = Seq((5L, "downscale me with real bytes", "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
-    val dir = java.nio.file.Files.createTempDirectory("bmp_rs").toString
-    try {
+    withTempDir("bmp_rs") { tmp =>
+      val dir = tmp.toString
       MultimodalOps.writeBmpFixtureTree(docs, dir)
       val files = spark.read.format("binaryFile").load(dir)
       val d = MultimodalOps.resizeDecoded(spark, files).collect().head
@@ -182,13 +182,12 @@ class Round10AdditionsSpec extends SparkSpec {
       assert((d.sum_r, d.sum_g, d.sum_b) ==
         ((sampled.map(_._1.toLong).sum, sampled.map(_._2.toLong).sum,
           sampled.map(_._3.toLong).sum)))
-    } finally graft.ops.FixtureDirs.rmTree(java.nio.file.Paths.get(dir))
+    }
   }
 
   test("decodeImages: an undecodable payload fails LOUDLY, not as silent nulls") {
     import graft.ops.MultimodalOps
-    val dir = java.nio.file.Files.createTempDirectory("bmp_bad")
-    try {
+    withTempDir("bmp_bad") { dir =>
       java.nio.file.Files.write(dir.resolve("img_7.bmp"),
         "this is not a bitmap".getBytes)
       val ex = intercept[org.apache.spark.SparkException] {
@@ -197,7 +196,7 @@ class Round10AdditionsSpec extends SparkSpec {
       }
       assert(ex.getMessage.contains("undecodable") ||
         Option(ex.getCause).exists(_.getMessage.contains("undecodable")))
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+    }
   }
 
   test("guaranteed bound is overflow-free (ADVICE r9): div form matches exact BigInt semantics at Long extremes") {

@@ -235,8 +235,8 @@ class Round11AdditionsSpec extends SparkSpec {
     val fixture = Seq((0L, "abcdefg"), (3L, "Z"), (12L, "pixel data here ok"))
     val docs = fixture.map { case (i, t) => (i, t, "en", "s") }
       .toDF("doc_id", "text", "lang", "source")
-    val dir = java.nio.file.Files.createTempDirectory("png_spec").toString
-    try {
+    withTempDir("png_spec") { tmp =>
+      val dir = tmp.toString
       MultimodalOps.writePngFixtureTree(docs, dir)
       val got = MultimodalOps.decodeImages(spark,
           spark.read.format("binaryFile").load(dir),
@@ -253,13 +253,12 @@ class Round11AdditionsSpec extends SparkSpec {
           ((pts.map(_._1.toLong).sum, pts.map(_._2.toLong).sum,
             pts.map(_._3.toLong).sum)), s"doc $id channel sums")
       }
-    } finally graft.ops.FixtureDirs.rmTree(java.nio.file.Paths.get(dir))
+    }
   }
 
   test("decodeImages ignores stray files outside the fixture naming scheme (ADVICE r10)") {
     import graft.ops.MultimodalOps
-    val dir = java.nio.file.Files.createTempDirectory("bmp_stray")
-    try {
+    withTempDir("bmp_stray") { dir =>
       MultimodalOps.writeBmpFixtureTree(
         Seq((1L, "stray guard doc", "en", "s"))
           .toDF("doc_id", "text", "lang", "source"), dir.toString)
@@ -269,20 +268,19 @@ class Round11AdditionsSpec extends SparkSpec {
         spark.read.format("binaryFile").load(dir.toString)).collect()
       assert(rows.map(_.doc_id).toSeq == Seq(1L),
         "exactly the one fixture image must decode; the stray file is skipped")
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+    }
   }
 
   test("fixture writers reject non-ASCII text LOUDLY (ADVICE r10: char vs byte semantics)") {
     import graft.ops.MultimodalOps
-    val dir = java.nio.file.Files.createTempDirectory("bmp_utf8")
-    try {
+    withTempDir("bmp_utf8") { dir =>
       val docs = Seq((2L, "café au lait", "fr", "s"))
         .toDF("doc_id", "text", "lang", "source")
       val ex = intercept[IllegalArgumentException] {
         MultimodalOps.writeBmpFixtureTree(docs, dir.toString)
       }
       assert(ex.getMessage.contains("ASCII"))
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+    }
   }
 
   test("embeddingBucketStats: flooded bucket audited; healthy corpus all-clear; plans carry no window") {

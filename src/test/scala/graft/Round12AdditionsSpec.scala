@@ -12,12 +12,6 @@ import graft.ops.{DedupOps, MultimodalOps, PqOps}
 class Round12AdditionsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withTempDir[T](body: java.nio.file.Path => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wav_spec")
-    try body(dir)
-    finally graft.ops.FixtureDirs.rmTree(dir)
-  }
-
   private def decodeDir(dir: java.nio.file.Path) =
     MultimodalOps.decodeAudio(spark,
       spark.read.format("binaryFile").load(dir.toString)).collect().toSeq
@@ -27,7 +21,7 @@ class Round12AdditionsSpec extends SparkSpec {
     // an unsigned read maps -32768 -> 32768 (sum off by 65536), a
     // byte-swapped read scrambles every value — both break exact sums.
     val samples = Array(-32768, 32767, 0, -1, 1)
-    withTempDir { dir =>
+    withTempDir("graft_wav_spec") { dir =>
       java.nio.file.Files.write(dir.resolve("aud_7.wav"),
         MultimodalOps.wavBytes(1, MultimodalOps.WavSampleRate,
           samples.length, (f, _) => samples(f)))
@@ -45,7 +39,7 @@ class Round12AdditionsSpec extends SparkSpec {
   test("WAV stereo decode separates interleaved channels exactly") {
     // ch0 and ch1 get disjoint value ranges: a swapped or mis-strided
     // interleave read moves mass between the per-channel sums.
-    withTempDir { dir =>
+    withTempDir("graft_wav_spec") { dir =>
       java.nio.file.Files.write(dir.resolve("aud_2.wav"),
         MultimodalOps.wavBytes(2, MultimodalOps.WavSampleRate, 3,
           (f, ch) => if (ch == 0) 100 + f else -(200 + f)))
@@ -61,7 +55,7 @@ class Round12AdditionsSpec extends SparkSpec {
     // gate (DuckDB recomputes it blind in the registered oracle).
     val docs = Seq((0L, "the quick brown fox jumps over the lazy dog"),
       (1L, "pack my box with five dozen liquor jugs")).toDF("doc_id", "text")
-    withTempDir { dir =>
+    withTempDir("graft_wav_spec") { dir =>
       MultimodalOps.writeWavFixtureTree(docs, dir.toString)
       val out = decodeDir(dir).map(d => d.doc_id -> d).toMap
       assert(out.keySet == Set(0L, 1L))
@@ -84,7 +78,7 @@ class Round12AdditionsSpec extends SparkSpec {
 
   test("resampleAudio keeps exactly the even frames (sums, count, range)") {
     val frames = Array(10, -20, 30, -40, 50) // kept: 10, 30, 50
-    withTempDir { dir =>
+    withTempDir("graft_wav_spec") { dir =>
       java.nio.file.Files.write(dir.resolve("aud_4.wav"),
         MultimodalOps.wavBytes(1, MultimodalOps.WavSampleRate,
           frames.length, (f, _) => frames(f)))
@@ -101,7 +95,7 @@ class Round12AdditionsSpec extends SparkSpec {
     val text = "the quick brown fox jumps over the lazy dog tonight again"
     // doc 3: 4 frames (3 % 4 + 1), frames 0 and 2 sampled at stride 2
     val docs = Seq((3L, text)).toDF("doc_id", "text")
-    withTempDir { dir =>
+    withTempDir("graft_wav_spec") { dir =>
       MultimodalOps.writeGifFixtureTree(docs, dir.toString)
       val out = MultimodalOps.sampleFramesReal(spark,
         spark.read.format("binaryFile").load(dir.toString)).collect()

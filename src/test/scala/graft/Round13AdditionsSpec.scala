@@ -107,8 +107,7 @@ class Round13AdditionsSpec extends SparkSpec {
     // doc 3 -> 4 frames (gifFrames), so stride 2 samples {0, 2} and
     // stride 3 samples {0, 3}: a sampler that decoded everything and
     // filtered afterwards could still pass ONE stride by luck, not both
-    val dir = java.nio.file.Files.createTempDirectory("graft_gif_stride")
-    try {
+    withTempDir("graft_gif_stride") { dir =>
       val text = "stride contract fixture text"
       val (w, h) = (MultimodalOps.gifWidth(text.length.toLong), MultimodalOps.gifHeight(3L))
       java.nio.file.Files.write(dir.resolve("vid_3.gif"),
@@ -126,7 +125,7 @@ class Round13AdditionsSpec extends SparkSpec {
       val exp = Seq(0, 3).map(f => f.toLong ->
         (0 until w * h).map(p => MultimodalOps.gifPixel(text, w, h)(f, p).toLong).sum).toMap
       assert(got == exp)
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+    }
   }
 
   // ---- second audio container: G.711 mu-law (VERDICT r12 #3) ----
@@ -185,8 +184,7 @@ class Round13AdditionsSpec extends SparkSpec {
   test("decodeAudioCompanded end-to-end: writer -> JDK expand matches the Scala round-trip recompute") {
     val docs = Seq((0L, "companded fixture zero"), (1L, "stereo interleave one!"),
       (3L, "a"), (5L, "~~~ high codes ~~~")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ulaw_spec")
-    try {
+    withTempDir("graft_ulaw_spec") { dir =>
       MultimodalOps.writeUlawFixtureTree(docs, dir.toString)
       val got = MultimodalOps.decodeAudioCompanded(spark,
           spark.read.format("binaryFile").load(dir.toString))
@@ -207,7 +205,7 @@ class Round13AdditionsSpec extends SparkSpec {
         assert(d.min_sample == all.map(_._2).min)
         assert(d.max_sample == all.map(_._2).max)
       }
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+    }
   }
 
   // ---- third audio container: G.711 a-law ----
@@ -259,8 +257,7 @@ class Round13AdditionsSpec extends SparkSpec {
   test("decodeAudioCompanded dispatches on the container: a-law fixtures expand through the a-law table") {
     val docs = Seq((0L, "alaw zero doc"), (1L, "alaw stereo doc!"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_alaw_spec")
-    try {
+    withTempDir("graft_alaw_spec") { dir =>
       MultimodalOps.writeAlawFixtureTree(docs, dir.toString)
       val got = MultimodalOps.decodeAudioCompanded(spark,
           spark.read.format("binaryFile").load(dir.toString),
@@ -283,16 +280,15 @@ class Round13AdditionsSpec extends SparkSpec {
       // cross-law guard: the same PCM companded by the two laws must NOT
       // expand to identical sums (a decode path that reused one table
       // for both containers would produce exactly that)
-      val ulDir = java.nio.file.Files.createTempDirectory("graft_xlaw")
-      try {
+      withTempDir("graft_xlaw") { ulDir =>
         MultimodalOps.writeUlawFixtureTree(docs, ulDir.toString)
         val ul = MultimodalOps.decodeAudioCompanded(spark,
             spark.read.format("binaryFile").load(ulDir.toString))
           .collect().map(d => d.doc_id -> d.sum_ch0).toMap
         assert((0L to 1L).exists(id => ul(id) != got(id).sum_ch0),
           "mu-law and a-law expansions of the same clips cannot all agree")
-      } finally graft.ops.FixtureDirs.rmTree(ulDir)
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+      }
+    }
   }
 
   // ---- corrupt-blob quarantine (round 13) ----
@@ -300,8 +296,7 @@ class Round13AdditionsSpec extends SparkSpec {
   test("decodeAudioLenient quarantines junk / empty / policy-violating blobs; good blobs keep exact stats") {
     val docs = Seq((0L, "good clip zero"), (1L, "good stereo one!"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_quarantine")
-    try {
+    withTempDir("graft_quarantine") { dir =>
       MultimodalOps.writeUlawFixtureTree(docs, dir.toString)
       MultimodalOps.writeCorruptAudioFixtures(dir.toString)
       // a third failure mode: a VALID container that violates the G.711
@@ -335,7 +330,7 @@ class Round13AdditionsSpec extends SparkSpec {
           d.max_sample.contains(all.map(_._2).max))
         assert(d.reason.isEmpty, "ok rows carry no diagnostic reason")
       }
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+    }
   }
 
   // ---- size-bounded driver-side BPE training regime (VERDICT r12 #2) ----

@@ -153,9 +153,7 @@ class Round14AdditionsSpec extends SparkSpec {
       (0L, "alpha"), (1L, "bravo"), (2L, "same text"), (3L, "charlie"),
       (4L, "delta"), (5L, "same text"), (6L, "echo"), (7L, "foxtrot"),
       (8L, "golf")).toDF("doc_id", "text")
-    val dirMm = java.nio.file.Files.createTempDirectory("graft_prep_mm")
-    val dirAu = java.nio.file.Files.createTempDirectory("graft_prep_au")
-    try {
+    withTempDir("graft_prep_mm") { dirMm => withTempDir("graft_prep_au") { dirAu =>
       MultimodalOps.writeFixtureTree(docs, dirMm.toString)
       MultimodalOps.writeUlawFixtureTree(docs, dirAu.toString)
       MultimodalOps.writeCorruptAudioFixtures(dirAu.toString)
@@ -182,9 +180,7 @@ class Round14AdditionsSpec extends SparkSpec {
       // the dup's bytes count; dedup marks survivors, it doesn't erase)
       assert(got(("image", "opaque"))._3 ==
         2 * "alpha".length + "charlie".length + "echo".length)
-    } finally {
-      graft.ops.FixtureDirs.rmTree(dirMm); graft.ops.FixtureDirs.rmTree(dirAu)
-    }
+    }}
   }
 
   test("multimodalPrep: mu-law code-level collisions dedupe across DIFFERENT texts (the oracle's group key)") {
@@ -199,9 +195,7 @@ class Round14AdditionsSpec extends SparkSpec {
     val t1 = "b" + "x" * 28
     val t2 = "c" + "x" * 28
     val docs = Seq((2L, t1), (4L, t2)).toDF("doc_id", "text")
-    val dirMm = java.nio.file.Files.createTempDirectory("graft_prep_mm2")
-    val dirAu = java.nio.file.Files.createTempDirectory("graft_prep_au2")
-    try {
+    withTempDir("graft_prep_mm2") { dirMm => withTempDir("graft_prep_au2") { dirAu =>
       MultimodalOps.writeFixtureTree(docs, dirMm.toString)
       MultimodalOps.writeUlawFixtureTree(docs, dirAu.toString)
       MultimodalOps.writeCorruptAudioFixtures(dirAu.toString)
@@ -210,49 +204,7 @@ class Round14AdditionsSpec extends SparkSpec {
       assert(ok.length == 1)
       assert(ok(0).getLong(2) == 2 && ok(0).getLong(3) == 1,
         "two 1-frame clips with colliding code bytes must share a digest")
-    } finally {
-      graft.ops.FixtureDirs.rmTree(dirMm); graft.ops.FixtureDirs.rmTree(dirAu)
-    }
-  }
-
-  // ---- streaming quarantine router (the multimodal_prep verdict stage) ----
-
-  test("quarantineStream: per-batch lenient verdicts route ok/corrupt to separate sinks, stateless, with reasons") {
-    import graft.ops.MultimodalOps
-    import graft.streaming.StreamingIngest
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_quar")
-    try {
-      val docs = Seq((0L, "good clip zero"), (1L, "good stereo one!"))
-        .toDF("doc_id", "text")
-      MultimodalOps.writeUlawFixtureTree(docs, dir.toString)
-      val ok = collection.mutable.ArrayBuffer.empty[(Long, Long)]      // (batch, doc)
-      val quar = collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-      val q = StreamingIngest.quarantineStream(spark, dir.toString)(
-        (m, id) => ok ++= m.collect().map(r => (id, r.getLong(0))),
-        (m, id) => quar ++= m.collect().map(r =>
-          (id, r.getLong(0), r.getAs[String]("reason")))).start()
-      try {
-        q.processAllAvailable()
-        assert(ok.map(_._2).toSet == Set(0L, 1L) && quar.isEmpty,
-          s"batch 0 is all-clean: ok=$ok quar=$quar")
-        // a corrupt upload AND a misnamed foreign upload land later:
-        // both must route to quarantine in their OWN batch — the
-        // unmatched file as a loud (-1, 'unmatched') verdict, never a
-        // silent drop — without reprocessing batch 0
-        MultimodalOps.writeCorruptAudioFixtures(dir.toString)
-        java.nio.file.Files.write(dir.resolve("upload.tmp"),
-          "stray bytes".getBytes)
-        q.processAllAvailable()
-        assert(ok.size == 2, "clean files are verdict-ed exactly once")
-        assert(quar.map(_._2).toSet == Set(300L, 301L, -1L))
-        assert(quar.forall(v => v._1 > 0L && v._3 != null && v._3.contains(":")),
-          s"quarantine rows carry (class: message) reasons: $quar")
-        assert(quar.exists(v => v._2 == -1L && v._3.contains("upload.tmp")),
-          s"the unmatched upload must quarantine by name: $quar")
-        assert(q.lastProgress.stateOperators.isEmpty,
-          "per-blob verdicts must carry no streaming state")
-      } finally q.stop()
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+    }}
   }
 
   // ---- multi-page TIFF through the stride gate (VERDICT r13 #5) ----
@@ -260,8 +212,7 @@ class Round14AdditionsSpec extends SparkSpec {
   test("sampleFramesReal on multi-page TIFF: stride prunes at the container; frames agree byte-for-byte with the GIF encoding") {
     import graft.ops.MultimodalOps
     // doc 3 -> 4 frames, same two-stride luck-proofing as the GIF spec
-    val dir = java.nio.file.Files.createTempDirectory("graft_tiff_stride")
-    try {
+    withTempDir("graft_tiff_stride") { dir =>
       val text = "stride contract fixture text"
       val docs = Seq((3L, text)).toDF("doc_id", "text")
       MultimodalOps.writeTiffFixtureTree(docs, dir.toString)
@@ -269,7 +220,7 @@ class Round14AdditionsSpec extends SparkSpec {
       val files = spark.read.format("binaryFile").load(dir.toString)
       def tiff(stride: Int) =
         MultimodalOps.sampleFramesReal(spark, files, stride,
-          extPattern = "vid_(\\d+)\\.tif$", format = "tiff").collect()
+          extPattern = "vid_(\\d+)\\.tif$").collect()
       assert(tiff(2).map(_.frame_idx).sorted.toSeq == Seq(0L, 2L))
       assert(tiff(3).map(_.frame_idx).sorted.toSeq == Seq(0L, 3L))
       // container independence, directly: the TIFF pages decode to the
@@ -283,6 +234,6 @@ class Round14AdditionsSpec extends SparkSpec {
       val exp = Seq(0, 2).map(f => f.toLong ->
         (0 until w * h).map(p => MultimodalOps.gifPixel(text, w, h)(f, p).toLong).sum).toMap
       assert(tif.map { case (k, v) => k -> v._3 } == exp)
-    } finally graft.ops.FixtureDirs.rmTree(dir)
+    }
   }
 }

@@ -150,16 +150,11 @@ class Round15AdditionsSpec extends SparkSpec {
 
   // ---- lossy-codec (JPEG) gate ------------------------------------------
 
-  private def withTmpDir(f: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("jpeg15").toString
-    try f(dir)
-    finally graft.ops.FixtureDirs.rmTree(java.nio.file.Paths.get(dir))
-  }
-
   test("JPEG decode: lossy (sums drift) but per-channel means land well " +
     "inside the pinned band — >=2x margin on the driver corpora") {
     import graft.ops.MultimodalOps
-    for (sf <- Seq("sf0.001", "sf0.1")) withTmpDir { dir =>
+    for (sf <- Seq("sf0.001", "sf0.1")) withTempDir("jpeg15") { tmp =>
+      val dir = tmp.toString
       val docs = graft.sources.Tables.documents(spark, s"/root/testdata/$sf")
       MultimodalOps.writeJpegFixtureTree(docs, dir)
       val dec = MultimodalOps.decodeImages(spark,
@@ -190,7 +185,8 @@ class Round15AdditionsSpec extends SparkSpec {
   test("decodeJpegBanded: dims exact and every band verdict TRUE (the " +
     "registered contract) on sf0.001 and sf0.1 docs") {
     import graft.ops.MultimodalOps
-    for (sf <- Seq("sf0.001", "sf0.1")) withTmpDir { dir =>
+    for (sf <- Seq("sf0.001", "sf0.1")) withTempDir("jpeg15") { tmp =>
+      val dir = tmp.toString
       val docs = graft.sources.Tables.documents(spark, s"/root/testdata/$sf")
       MultimodalOps.writeJpegFixtureTree(docs, dir)
       val out = MultimodalOps.decodeJpegBanded(spark,
@@ -204,7 +200,8 @@ class Round15AdditionsSpec extends SparkSpec {
   test("corrupt JPEG quarantine: junk and truncated blobs route to " +
     "'corrupt' verdict rows with reasons; valid blobs stay 'ok'") {
     import graft.ops.MultimodalOps
-    withTmpDir { dir =>
+    withTempDir("jpeg15") { tmp =>
+      val dir = tmp.toString
       MultimodalOps.writeJpegFixtureTree(sf001Docs.filter(col("doc_id") < 8),
         dir)
       MultimodalOps.writeCorruptJpegFixtures(dir)

@@ -221,48 +221,6 @@ class Round8AdditionsSpec extends SparkSpec {
     assert(tinyRecall == Map(0L -> 1.0, 1L -> 1.0), s"got $tinyRecall")
   }
 
-  test("manifestStream: per-batch manifest rows, frozen-index known flags, state-free") {
-    import graft.streaming.StreamingIngest
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ingest")
-    def md5hex(b: Array[Byte]): String =
-      java.security.MessageDigest.getInstance("MD5").digest(b)
-        .map(x => f"${x & 0xff}%02x").mkString
-    try {
-      val full = (0 until 256).map(_.toByte).toArray
-      java.nio.file.Files.write(dir.resolve("doc_0.img"), full)
-      java.nio.file.Files.write(dir.resolve("doc_1.aud"), "hello".getBytes)
-      // frozen index: the corpus already holds doc_0's exact payload
-      val known = Seq(md5hex(full)).toDF("digest")
-      val got = collection.mutable.ArrayBuffer.empty[(Long, String, String, Boolean)]
-      val q = StreamingIngest.manifestStream(spark, dir.toString, known) { (m, id) =>
-        got ++= m.collect().map(r =>
-          (id, r.getString(0), r.getAs[String]("modality"),
-            r.getAs[Boolean]("is_known")))
-      }.start()
-      try {
-        q.processAllAvailable()
-        val b0 = got.filter(_._1 == 0L).map(v => v._2 -> ((v._3, v._4))).toMap
-        assert(b0 == Map(
-          "doc_0.img" -> (("image", true)),   // exact payload the index holds
-          "doc_1.aud" -> (("audio", false)))) // novel payload
-        // late arrivals: one novel file + one byte-identical copy of the
-        // known payload — the stream must pick them up WITHOUT reprocessing
-        // batch 0's files (file-source checkpoint) and flag by digest
-        java.nio.file.Files.write(dir.resolve("doc_2.vid"), "fresh".getBytes)
-        java.nio.file.Files.write(dir.resolve("dup_0.img"), full)
-        q.processAllAvailable()
-        val later = got.filter(_._1 > 0L).map(v => v._2 -> v._4).toMap
-        assert(later == Map("doc_2.vid" -> false, "dup_0.img" -> true))
-        assert(got.size == 4, s"files must be ingested exactly once: $got")
-        assert(q.lastProgress.stateOperators.isEmpty, "must be state-free")
-      } finally q.stop()
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-  }
-
   test("driftCheckQuantile: NULL values keep their own bucket, like the fixed-width twin") {
     // review-caught: IF(NULL > b, 1, 0) counts 0 per boundary, silently
     // conflating NULLs into bucket 0 — a sensor fault nulling `value`
@@ -305,8 +263,7 @@ class Round8AdditionsSpec extends SparkSpec {
 
   test("binaryFile ingest: arbitrary bytes round-trip exactly through the source") {
     import graft.ops.MultimodalOps
-    val dir = java.nio.file.Files.createTempDirectory("graft_binroundtrip")
-    try {
+    withTempDir("graft_binroundtrip") { dir =>
       // all 256 byte values + an empty file — nothing text-safe about it
       val full = (0 until 256).map(_.toByte).toArray
       val rev = full.reverse
@@ -331,10 +288,6 @@ class Round8AdditionsSpec extends SparkSpec {
           .map(x => f"${x & 0xff}%02x").mkString
       assert(man == Map(
         "doc_0.img" -> md5hex(full), "doc_1.aud" -> md5hex(rev)))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
     }
   }
 
@@ -344,8 +297,8 @@ class Round8AdditionsSpec extends SparkSpec {
       (0L, "alpha bravo"), (1L, "charlie"), (2L, "delta echo fox"),
       (3L, "golf"), (8L, "hotel india"), (9L, "charlie")) // 9 duplicates 1's text
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_mmtree").toString
-    try {
+    withTempDir("graft_mmtree") { tmp =>
+      val dir = tmp.toString
       // stale file from a "previous run" must be swept, non-fixture kept
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, "doc_999.img"),
         "stale".getBytes)
@@ -375,10 +328,6 @@ class Round8AdditionsSpec extends SparkSpec {
       assert(!byName("doc_9.img").getAs[Boolean]("is_canonical"))
       // survivors = one per distinct payload
       assert(man.count(_.getAs[Boolean]("is_canonical")) == 5)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
     }
   }
 }

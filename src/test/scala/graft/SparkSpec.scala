@@ -20,4 +20,11 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Run `body` in a fresh temp directory, removed afterwards. */
+  protected def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally graft.ops.FixtureDirs.rmTree(dir)
+  }
 }

@@ -15,6 +15,10 @@ invisible locally but hash-failed on the driver. Never "fix" this by
 coercing the two sides the same way.
 
 Usage: python3 tools/local_verify.py [--skip-verify] [query ...]
+
+Named queries are the only ones graft.Verify dumps (passed to it as
+SPARK_GRAFT_VERIFY_ONLY) and compared; with no names, the full surface is
+dumped and compared.
 """
 import glob, hashlib, json, math, os, subprocess, sys
 
@@ -23,8 +27,9 @@ OUT = "/tmp/graft_verify"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-def run_verify():
+def run_verify(names):
     env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    if names: env["SPARK_GRAFT_VERIFY_ONLY"] = ",".join(names)
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
         capture_output=True, text=True, cwd="/root/repo", env=env)
@@ -58,7 +63,7 @@ def frame_hash(df, cols):
 
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    if "--skip-verify" not in sys.argv: run_verify()
+    if "--skip-verify" not in sys.argv: run_verify(args)
     import duckdb
     import pyarrow.parquet as pq
     import pyarrow.dataset as pads
