@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The local engine session every main builds: `local[cpus]` with `cpus`
-  * shuffle partitions, UTC session time, graft's SQL extensions, no UI,
-  * WARN logging.
+  * shuffle partitions, UTC session time, graft's SQL extensions (which
+  * also install the local streaming checkpoint manager), no UI, WARN
+  * logging.
   */
 object GraftSession {
 

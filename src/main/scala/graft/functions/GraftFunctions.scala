@@ -1,9 +1,10 @@
 package graft.functions
 
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.graftshim.{ColumnBridge, StreamingBridge}
 
 /** SQL-surface registration of the native expressions, so `spark.sql`
   * users get them too: either per-session via [[GraftFunctions.register]]
@@ -34,7 +35,13 @@ object GraftFunctions {
 
 /** `SparkSessionExtensions` hook: add
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions` and the
-  * functions resolve in plain SQL across all sessions.
+  * functions resolve in plain SQL across all sessions, the
+  * [[EditDistancePrefilter]] rule runs in the optimizer, and streaming
+  * checkpoints on local paths are written by
+  * [[graft.streaming.LocalCheckpointFileManager]] (installed on the
+  * running SparkContext's Hadoop configuration). Spark's own
+  * `spark.sql.streaming.checkpointFileManagerClass`, set as a SQL conf or
+  * with the `spark.hadoop.` prefix, overrides that manager.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -43,5 +50,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name), b))
     }
     ext.injectOptimizerRule(_ => EditDistancePrefilter)
+    StreamingBridge.activeContext.foreach(LocalCheckpointFileManager.install)
   }
 }

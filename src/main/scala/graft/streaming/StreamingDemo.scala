@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.model.ExchangeRates
 import graft.plans.{NodeType, TopologyBuilder, TopologyExtract}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end demo of the streaming + observability stack, mirroring the
@@ -13,12 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4)
     val sink = new ConsoleMetricsSink
 
     // A rate-source query stopped mid-commit can surface the interrupt as

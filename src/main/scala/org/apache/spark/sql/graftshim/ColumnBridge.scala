@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   * [[StreamingBridge]] are the only places the project reaches into
   * Spark-private API: to build and register the native expressions in
   * graft.functions, to wrap already-computed Catalyst rows as a
-  * DataFrame (the payments fan-out's batch pin), and to drain the
-  * listener bus.
+  * DataFrame (the payments fan-out's batch pin), to drain the
+  * listener bus, and to find the active SparkContext.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,4 +18,10 @@ object StreamingBridge {
     case s: StreamExecution => Some(s.logicalPlan)
     case _ => None
   }
+
+  /** The running SparkContext, if any, without creating one
+    * (`SparkContext.getActive` is private[spark]). Session extensions run
+    * after the context starts and before the session exists, so this is
+    * how they reach it. */
+  def activeContext: Option[SparkContext] = SparkContext.getActive
 }

@@ -14,6 +14,8 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the checkpoint manager every graft session gets from GraftExtensions
+    graft.streaming.LocalCheckpointFileManager.install(s.sparkContext)
     s
   }
 }
