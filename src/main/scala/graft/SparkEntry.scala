@@ -1282,27 +1282,15 @@ object SparkEntry {
         |      FROM range(0, 20) t(i))
         |  ON o_totalprice >= lo AND o_totalprice < hi""".stripMargin,
     "source_signatures" ->
-      s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-         |shingled AS (
-         |  SELECT doc_id,
-         |    [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)] AS shingles
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus)
-         |  WHERE len(toks) >= 3),
-         |sigs AS (${DedupOps.minhashSignaturesSql()})
+      s"""${DedupOps.minhashSignaturesCtesOver(DedupOps.documentsShingledCte)}
          |SELECT source, perm, min(minhash) AS minhash
-         |FROM sigs JOIN documents USING (doc_id)
+         |FROM signatures JOIN documents USING (doc_id)
          |GROUP BY 1, 2""".stripMargin,
     "source_overlap" ->
-      s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-         |shingled AS (
-         |  SELECT doc_id,
-         |    [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)] AS shingles
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus)
-         |  WHERE len(toks) >= 3),
-         |sigs AS (${DedupOps.minhashSignaturesSql()}),
+      s"""${DedupOps.minhashSignaturesCtesOver(DedupOps.documentsShingledCte)},
          |gsigs AS (
          |  SELECT source, perm, min(minhash) AS minhash
-         |  FROM sigs JOIN documents USING (doc_id)
+         |  FROM signatures JOIN documents USING (doc_id)
          |  GROUP BY 1, 2)
          |SELECT a.source AS group_a, b.source AS group_b,
          |  CAST(sum(CASE WHEN a.minhash = b.minhash THEN 1 ELSE 0 END) AS BIGINT)

@@ -137,20 +137,56 @@ object DedupOps {
   /** THE word 3-gram shingle expression (over a `toks` array column) —
     * the ONE definition every shingle consumer shares (minhash pipeline,
     * streaming banded dedup, frequency family, profiler baselines), so
-    * the convention cannot silently desynchronize across families
-    * (review-caught: four verbatim copies had accumulated).
+    * the convention cannot desynchronize across families.
     */
   val shingleSql: String =
     "transform(sequence(0, size(toks) - 3), i -> concat_ws(' ', slice(toks, i + 1, 3)))"
 
-  /** Word 3-gram shingles + their per-doc distinct set, computed map-side
-    * with higher-order functions (no explode, no shuffle).
-    */
-  private def withShingles(corpus: DataFrame): DataFrame =
-    corpus
-      .withColumn("toks", split(col("text"), " ", -1))
+  // ---- The MinHash/LSH steps, written once: batch, incremental and
+  // streaming dedup (StreamingDedup) all go through these helpers, so
+  // the shingle convention, the band-key policy and the signature-index
+  // contract each live in exactly one place.
+
+  /** Word 3-gram `shingles` (with the `toks` they come from), computed
+    * map-side with higher-order functions (no explode, no shuffle).
+    * Documents under 3 tokens have no shingle and are dropped. */
+  private[graft] def shingled(df: DataFrame): DataFrame =
+    df.withColumn("toks", split(col("text"), " ", -1))
       .filter(size(col("toks")) >= 3)
       .withColumn("shingles", expr(shingleSql))
+
+  /** Adds `sig`, the `numPerm`-long MinHash signature of `shingles`:
+    * sig[p] = min over shingles of hash64(p || ':' || shingle). */
+  private[graft] def signed(df: DataFrame, numPerm: Int): DataFrame =
+    df.withColumn("sig", graft.functions.native.minhashSig(col("shingles"), numPerm))
+
+  /** LSH banding of a signed frame: one row per document and band —
+    * `idCol`, then `carry`, then `band` (0–3) and `band_key`, the
+    * band's numPerm/4 signature values joined by ','. The streaming
+    * bucket key and the batch band key are this one expression. */
+  private[graft] def bands(df: DataFrame, numPerm: Int, idCol: String,
+                           carry: Seq[Column] = Nil): DataFrame = {
+    // 4 bands of numPerm/4 rows each: a non-multiple would silently drop
+    // the trailing signature slots from every band key (recall loss)
+    require(numPerm % 4 == 0, s"numPerm must be a multiple of 4, got $numPerm")
+    val rows = numPerm / 4
+    val keys = posexplode(expr(
+      s"transform(sequence(0, 3), b -> concat_ws(',', slice(sig, b * $rows + 1, $rows)))"))
+    df.select((col(idCol) +: carry) :+ keys: _*)
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_key"))
+  }
+
+  /** A persisted signature index holds exactly (doc_id, sig): no text,
+    * so nothing can re-shingle the indexed corpus. */
+  private[graft] def requireSignatureIndex(index: DataFrame): Unit =
+    require(index.columns.sorted.sameElements(Array("doc_id", "sig")),
+      s"index must be a signatureIndex (doc_id, sig); got ${index.columns.mkString(",")}")
+
+  /** The MinHash Jaccard estimate: the fraction of the numPerm
+    * permutations on which two signatures agree (a codegen'd integer
+    * equality count, see SigAgree). */
+  private[graft] def agreement(sa: Column, sb: Column, numPerm: Int): Column =
+    graft.functions.native.sigAgree(sa, sb).cast("double") / lit(numPerm.toDouble)
 
   private val shinglesDuck =
     """shingled AS (
@@ -160,6 +196,24 @@ object DedupOps {
       |  WHERE len(toks) >= 3
       |)""".stripMargin
 
+  /** `sigs` (doc_id, sig) over the `shingled` CTE: the DuckDB signature. */
+  private def sigsDuck(numPerm: Int): String =
+    s"""sigs AS (
+       |  SELECT doc_id,
+       |    list_transform(range(0, $numPerm), p ->
+       |      list_min(list_transform(shingles, s ->
+       |        ${Hashing.hash64Duck("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
+       |  FROM shingled)""".stripMargin
+
+  /** `bands` (doc_id, band, band_key) over `sigs`: the DuckDB banding. */
+  private def bandsDuck(numPerm: Int): String = {
+    val rows = numPerm / 4
+    s"""bands AS (
+       |  SELECT doc_id, b AS band,
+       |    array_to_string(sig[b * $rows + 1 : b * $rows + $rows], ',') AS band_key
+       |  FROM sigs, range(0, 4) t(b))""".stripMargin
+  }
+
   /** MinHash signature matrix in long form (doc_id, perm, minhash):
     * minhash_p(doc) = min over shingles of hash64(p || ':' || shingle).
     * Permutations are independent hash families derived by prefixing the
@@ -167,18 +221,20 @@ object DedupOps {
     * divergence between engines. Entirely map-side per document.
     */
   def minhashSignatures(corpus: DataFrame, numPerm: Int = 16): DataFrame =
-    withShingles(corpus)
-      .select(col("doc_id"),
-        posexplode(graft.functions.native.minhashSig(col("shingles"), numPerm)))
+    signed(shingled(corpus), numPerm)
+      .select(col("doc_id"), posexplode(col("sig")))
       .select(col("doc_id"), col("pos").cast("long").as("perm"),
         col("col").as("minhash"))
 
-  /** The signature matrix as DuckDB SQL (given `corpus`/`shingled` CTEs). */
-  def minhashSignaturesSql(numPerm: Int = 16): String =
-    s"""SELECT doc_id, perm,
-       |  list_min(list_transform(shingles, s ->
-       |    ${Hashing.hash64Duck("CAST(perm AS VARCHAR) || ':' || s")})) AS minhash
-       |FROM shingled, range(0, $numPerm) t(perm)""".stripMargin
+  /** The signature matrix as DuckDB CTEs over a corpus+shingled prefix
+    * ([[corpusShingledCteOver]]): `sigs`, then `signatures` (doc_id,
+    * perm, minhash) in long form. */
+  private[graft] def minhashSignaturesCtesOver(prefix: String, numPerm: Int = 16): String =
+    s"""$prefix,
+       |${sigsDuck(numPerm)},
+       |signatures AS (
+       |  SELECT doc_id, perm, sig[perm + 1] AS minhash
+       |  FROM sigs, range(0, $numPerm) t(perm))""".stripMargin
 
   /** B8b — banded-LSH MinHash dedup: 4 bands × 4 rows. Docs sharing any
     * band key become candidates; candidates are verified with exact
@@ -189,28 +245,27 @@ object DedupOps {
   def minhashPairs(corpus: DataFrame, minJaccard: Double = 0.5,
                    cacheLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                    maxBucket: Int = defaultMaxBucket): DataFrame =
-    minhashPairsShingled(withShingles(corpus), minJaccard, cacheLevel, maxBucket)
+    minhashPairsShingled(shingled(corpus), minJaccard, cacheLevel, maxBucket)
 
-  /** Hot-bucket candidate cap (VERDICT r9 item 3). A band bucket of B
-    * docs yields B²/2 candidate pairs — the round-9 ladder measured the
-    * clique blowup when a corpus homogenizes (80 → 1.3M pairs at 100×,
-    * PLANS.md split-leakage). The streaming dedup has carried a
-    * hot-bucket cap + loud sentinel since round 8; this is the batch
-    * twin: per (band, band_key) only the `maxBucket` SMALLEST doc_ids
-    * enter the self-join (deterministic truncation), so a degenerate
-    * bucket costs O(cap²) instead of melting an executor. The default
-    * keeps every healthy fixture bucket intact — the cap is a fuse, not
-    * a sampler. Overflow is LOUD, not silent: [[minhashBucketStats]] is
-    * the registered, oracle-checked audit reporting bucket sizes and
-    * dropped counts under the same cap; run it whenever the pair surface
-    * feeds a correctness-sensitive consumer.
+  /** Hot-bucket candidate cap. A band bucket of B docs yields B²/2
+    * candidate pairs, and a homogenizing corpus turns buckets into
+    * cliques (80 → 1.3M pairs at 100×, PLANS.md split-leakage). Per
+    * (band, band_key) only the `maxBucket` SMALLEST doc_ids enter the
+    * self-join (deterministic truncation), so a degenerate bucket costs
+    * O(cap²) instead of melting an executor; the streaming dedup caps
+    * its buckets the same way. The default keeps every healthy fixture
+    * bucket intact — the cap is a fuse, not a sampler. Overflow is LOUD,
+    * not silent: [[minhashBucketStats]] is the registered, oracle-checked
+    * audit reporting bucket sizes and dropped counts under the same cap;
+    * run it whenever the pair surface feeds a correctness-sensitive
+    * consumer.
     */
   val defaultMaxBucket: Int = 1024
 
   /** [[minhashPairs]] over a PRE-SHINGLED corpus (a `shingles` column as
-    * [[withShingles]] derives it) — lets a composed caller
-    * ([[dedupRecall]]) shingle once for several pipelines (review-2). */
-  private[ops] def minhashPairsShingled(shingled: DataFrame, minJaccard: Double,
+    * [[shingled]] derives it), so a composed caller ([[dedupRecall]])
+    * shingles once for several pipelines. */
+  private[ops] def minhashPairsShingled(shingledCorpus: DataFrame, minJaccard: Double,
                                         cacheLevel: StorageLevel,
                                         maxBucket: Int = defaultMaxBucket): DataFrame = {
     // The shingled+signed corpus is referenced by four plan branches
@@ -224,32 +279,25 @@ object DedupOps {
     // Caller contract: long-lived sessions must drop the cache after
     // consuming the result (Verify/Bench call spark.catalog.clearCache()
     // between queries).
-    // NARROW the cache to exactly what the branches read — (doc_id, sig,
-    // shingle_set); carrying text/toks/raw shingles through persist was
-    // measured to dominate the materialization cost (r11).
-    val sh = shingled
-      .withColumn("sig", graft.functions.native.minhashSig(col("shingles"), 16))
+    // The cache holds exactly what the branches read — (doc_id, sig,
+    // shingle_set); carrying text/toks/raw shingles through persist
+    // dominates the materialization cost.
+    val sh = signed(shingledCorpus, 16)
       .withColumn("shingle_set", array_distinct(col("shingles")))
       .select(col("doc_id"), col("sig"), col("shingle_set"))
       .persist(cacheLevel)
 
-    val bandsAll = sh.select(col("doc_id"), posexplode(expr(
-      "transform(sequence(0, 3), b -> concat_ws(',', slice(sig, b * 4 + 1, 4)))")))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("band_key"))
-
-    // hot-bucket fuse (plan corrected in r11 — VERDICT r10 item 1): cap
-    // each band bucket at maxBucket docs BEFORE the self-join, via
-    // [[BucketCap.capBuckets]]'s overflow-keys-only mechanism. On a
-    // healthy corpus (no bucket over the cap — the normal case) the
-    // bands plan comes back UNCHANGED: no window, no sort-shuffle, the
-    // r9 plan bit-for-bit. Only overflowing keys (detected by a bounded
+    // hot-bucket fuse: cap each band bucket at maxBucket docs BEFORE the
+    // self-join, via [[BucketCap.capBuckets]]'s overflow-keys-only
+    // mechanism. On a healthy corpus (no bucket over the cap — the
+    // normal case) the bands plan comes back UNCHANGED: no window, no
+    // sort-shuffle. Only overflowing keys (detected by a bounded
     // bucket-count pre-pass over the cached corpus) pay the rank, and
-    // truncation keeps the smallest doc_ids (deterministic, same
-    // semantics as before).
-    val bands = BucketCap.capBuckets(bandsAll, Seq("band", "band_key"),
-      "doc_id", maxBucket)
+    // truncation keeps the smallest doc_ids (deterministic).
+    val capped = BucketCap.capBuckets(bands(sh, 16, "doc_id"),
+      Seq("band", "band_key"), "doc_id", maxBucket)
 
-    val cand = bands.as("a").join(bands.as("b"),
+    val cand = capped.as("a").join(capped.as("b"),
         col("a.band") === col("b.band") &&
           col("a.band_key") === col("b.band_key") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -285,13 +333,9 @@ object DedupOps {
     * metadata (never doc rows, and never a single-task global window).
     */
   def minhashBucketStats(corpus: DataFrame, k: Int = 20,
-                         maxBucket: Int = defaultMaxBucket): DataFrame = {
-    val sh = withShingles(corpus)
-      .withColumn("sig", graft.functions.native.minhashSig(col("shingles"), 16))
-    val bands = sh.select(col("doc_id"), posexplode(expr(
-      "transform(sequence(0, 3), b -> concat_ws(',', slice(sig, b * 4 + 1, 4)))")))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("band_key"))
-    bands.groupBy("band", "band_key")
+                         maxBucket: Int = defaultMaxBucket): DataFrame =
+    bands(signed(shingled(corpus), 16), 16, "doc_id")
+      .groupBy("band", "band_key")
       .agg(count(lit(1)).as("bucket_n"))
       .orderBy(col("bucket_n").desc, col("band").asc, col("band_key").asc)
       .limit(k)
@@ -300,23 +344,14 @@ object DedupOps {
         expr("bucket_n * (bucket_n - 1) div 2").as("cand_pairs"),
         greatest(col("bucket_n") - maxBucket, lit(0L)).as("dropped_n"),
         (col("bucket_n") > maxBucket).as("overflowed"))
-  }
 
   /** Same bands derivation as [[minhashPairsOracle]], aggregated to
     * bucket sizes with the same cap arithmetic and top-k tiebreak. */
   def minhashBucketStatsOracle(k: Int = 20,
                                maxBucket: Int = defaultMaxBucket): String =
     s"""$corpusShingledCte,
-       |sigs AS (
-       |  SELECT doc_id,
-       |    list_transform(range(0, 16), p ->
-       |      list_min(list_transform(shingles, s ->
-       |        ${Hashing.hash64Duck("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
-       |  FROM shingled),
-       |bands AS (
-       |  SELECT doc_id, b AS band,
-       |    array_to_string(sig[b * 4 + 1 : b * 4 + 4], ',') AS band_key
-       |  FROM sigs, range(0, 4) t(b)),
+       |${sigsDuck(16)},
+       |${bandsDuck(16)},
        |sized AS (
        |  SELECT band, band_key, CAST(count(*) AS BIGINT) AS bucket_n,
        |    row_number() OVER (ORDER BY count(*) DESC, band ASC, band_key ASC) AS rn
@@ -406,7 +441,7 @@ object DedupOps {
     * regime selector below exists because the label table is PAIR-GRAPH
     * sized, not constant-sized: on a duplicate-flooded corpus (every doc
     * in some clique) it approaches corpus-sized, and an unconditional
-    * broadcast OOMs the driver (VERDICT r10 item 5 / r9 item 5). */
+    * broadcast would OOM the driver. */
   val DefaultBroadcastMaxLabels: Long = 2000000L
 
   /** Size-bounded broadcast regime for cluster-label joins — the
@@ -444,7 +479,7 @@ object DedupOps {
     * mixing weight double-counts it. Input must carry (doc_id, text,
     * source); pairs come from the registered banded-LSH surface
     * ([[minhashPairs]]), and sources are attached in ONE pass over the
-    * corpus-sized id→source map (r11): each pair EXPLODES into its two
+    * corpus-sized id→source map: each pair EXPLODES into its two
     * doc legs, the legs join the map once, and a pair-keyed aggregate
     * folds the two tagged legs back into (src_a, src_b). The previous
     * form ran two per-side equi-joins whose broadcast sides differed
@@ -511,7 +546,7 @@ object DedupOps {
                         maxShingleDf: Int = 64,
                         cacheLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK,
                         maxHashBuildRows: Long = MaxHashBuildRowsPerPartition): DataFrame =
-    ngramJaccardPairsShingled(withShingles(corpus), minJaccard, maxShingleDf,
+    ngramJaccardPairsShingled(shingled(corpus), minJaccard, maxShingleDf,
       cacheLevel, maxHashBuildRows)
 
   /** Per-partition build-row bound for FORCING the shuffle-hash form of
@@ -523,7 +558,7 @@ object DedupOps {
   val MaxHashBuildRowsPerPartition: Long = 250000L
 
   /** Headroom divisor applied to [[MaxHashBuildRowsPerPartition]] while
-    * AQE partition coalescing is enabled (ADVICE r12): coalescing can
+    * AQE partition coalescing is enabled: coalescing can
     * merge several probed shuffle partitions into one task, so the probe
     * below under-measures the worst merged build by the coalesce factor.
     * 4 is a heuristic, not a proof — the advisory partition-size target
@@ -558,7 +593,7 @@ object DedupOps {
     // a broadcast of the inverted index would OOM the executors, and even
     // locally building a 300k-entry map per task loses to a partitioned
     // hash join on the shingle key. BUT a FORCED hash build cannot spill:
-    // the r11 century ladder measured SparkOutOfMemoryError at 100×
+    // the 100× ladder measured SparkOutOfMemoryError
     // (583k docs → ~17M index rows → ~530k-row UnsafeHashedRelation per
     // partition, past one 32-task share of an 8 GB heap). Regime-select
     // the hint by the MEASURED index size — the count materializes the
@@ -568,7 +603,7 @@ object DedupOps {
     val parts = math.max(
       shingled.sparkSession.sessionState.conf.numShufflePartitions, 1)
     // Regime-select on the MEASURED MAX per-shuffle-partition build size,
-    // not the skew-blind average count/parts (ADVICE r11): a shingle-key
+    // not the skew-blind average count/parts: a shingle-key
     // distribution where some partitions carry several times the mean
     // could still force the unspillable hash build past the bound.
     // `pmod(hash(shingle), parts)` IS HashPartitioning's partition-id
@@ -576,13 +611,13 @@ object DedupOps {
     // of every shuffle partition of the PRE-COALESCE map-output layout —
     // exact for that layout, but NOT necessarily for the tasks that run:
     // AQE's partition coalescing (on by default) can merge several small
-    // probed partitions into one task, whose forced build is their SUM
-    // (ADVICE r12). When coalescing is live the decision therefore adds
+    // probed partitions into one task, whose forced build is their SUM.
+    // When coalescing is live the decision therefore adds
     // a headroom factor: the advisory byte target stops a merge after a
     // few partitions of this row shape, and 4x keeps the worst merged
     // build comfortably inside the measured bound. Still one aggregate
     // over the persist all three join branches consume anyway (primes
-    // the cache exactly as the old count() did); the partial aggregation
+    // the cache as a count() would); the partial aggregation
     // bounds the exchange at `parts` rows.
     val maxPartRows = rare
       .groupBy(pmod(hash(col("shingle")), lit(parts)).as("__p"))
@@ -626,7 +661,7 @@ object DedupOps {
     * are excluded (consistent with the other shingle operators).
     */
   def simhashShingles(corpus: DataFrame): DataFrame =
-    withShingles(corpus).select(col("doc_id"),
+    shingled(corpus).select(col("doc_id"),
       graft.functions.native.simhash60(col("shingles")).as("simhash"))
 
   // lazy: corpusShingledCte is declared later in this object
@@ -685,7 +720,7 @@ object DedupOps {
     //    which dwarfs the work for a metadata-sized graph; a bounded
     //    collect of the verified pairs is NOT a corpus collect and is the
     //    same cutover GraphFrames-style pipelines use for small graphs.
-    //    DRIVER-HEAP SIZING (ADVICE r5): the 1M-edge default costs ~40 MB
+    //    DRIVER-HEAP SIZING: the 1M-edge default costs ~40 MB
     //    of Tuple2 array plus ~2×32 MB of LongMap during union-find —
     //    safe on a default 1g driver. Raise it only with driver memory to
     //    match (~100 MB heap per additional 1M edges).
@@ -855,9 +890,9 @@ object DedupOps {
     * onto this prefix, so the labeling can never silently diverge.
     */
   private lazy val clusterCtes: String = {
-    // compose over the shared pairs CTE chain (round 14 — no more string
-    // surgery on the final SELECT; `pairs` carries (doc_a, doc_b,
-    // jaccard) and edges read the id columns)
+    // compose over the shared pairs CTE chain, never by string surgery
+    // on its final SELECT: `pairs` carries (doc_a, doc_b, jaccard) and
+    // edges read the id columns
     val pairsCtes = minhashPairsCtesOver(corpusShingledCte)
       .replaceFirst("(?s)^WITH ", "")
     s"""WITH RECURSIVE $pairsCtes,
@@ -1236,7 +1271,7 @@ object DedupOps {
         // coalesce, not a bare when: a null-text doc has no grams, so its
         // ivs is null and the when-branch would pass the NULL through —
         // and the registered query's length guard would then DROP the row
-        // while the oracle emits it as '' (ADVICE r11). The row-for-row
+        // while the oracle emits it as ''. The row-for-row
         // contract says every training doc survives; null text ≡ ''.
         coalesce(
           when(col("ivs").isNull, col("text")).otherwise(expr(
@@ -1615,16 +1650,8 @@ object DedupOps {
     s"""$corpusShingledCte,
        |exact_keepers AS (
        |  SELECT min(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
-       |sigs AS (
-       |  SELECT doc_id,
-       |    list_transform(range(0, 16), p ->
-       |      list_min(list_transform(shingles, s ->
-       |        ${Hashing.hash64Duck("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
-       |  FROM shingled),
-       |bands AS (
-       |  SELECT doc_id, b AS band,
-       |    array_to_string(sig[b * 4 + 1 : b * 4 + 4], ',') AS band_key
-       |  FROM sigs, range(0, 4) t(b)),
+       |${sigsDuck(16)},
+       |${bandsDuck(16)},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b
@@ -1651,9 +1678,7 @@ object DedupOps {
     * per document.
     */
   def signatureIndex(corpus: DataFrame, numPerm: Int = 16): DataFrame =
-    withShingles(corpus)
-      .select(col("doc_id"),
-        graft.functions.native.minhashSig(col("shingles"), numPerm).as("sig"))
+    signed(shingled(corpus), numPerm).select(col("doc_id"), col("sig"))
 
   /** B8 — INCREMENTAL dedup-against-index: dedup a DELTA slice (today's
     * crawl) against a persisted signature [[signatureIndex]] (the corpus
@@ -1682,25 +1707,17 @@ object DedupOps {
   def dedupIncremental(index: DataFrame, delta: DataFrame,
                        minEst: Double = 0.5, numPerm: Int = 16,
                        cacheLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    require(index.columns.sorted.sameElements(Array("doc_id", "sig")),
-      s"index must be a signatureIndex (doc_id, sig); got ${index.columns.mkString(",")}")
-    require(numPerm % 4 == 0, s"numPerm must be a multiple of 4, got $numPerm")
-    val rows = numPerm / 4
-    def bandsOf(sigs: DataFrame): DataFrame =
-      sigs.select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, 3), b -> concat_ws(',', slice(sig, b * $rows + 1, $rows)))")))
-        .select(col("doc_id"), col("pos").as("band"), col("col").as("band_key"))
-
+    requireSignatureIndex(index)
     // Inputs are persisted for the DURATION OF THIS CALL only: the operator
     // is eager — it materializes its delta-sized output (persisted at
     // `cacheLevel`) and unpersists both inputs before returning, so a
-    // long-lived session never accumulates leaked cached plans (VERDICT r5
-    // item 6). The CALLER owns the returned frame: unpersist() it when done.
+    // long-lived session never accumulates leaked cached plans. The
+    // CALLER owns the returned frame: unpersist() it when done.
     val isig = index.persist(cacheLevel)
     val dsig = signatureIndex(delta, numPerm).persist(cacheLevel)
     try {
-      val ibands = bandsOf(isig)
-      val dbands = bandsOf(dsig)
+      val ibands = bands(isig, numPerm, "doc_id")
+      val dbands = bands(dsig, numPerm, "doc_id")
 
       val candIdx = dbands.as("d").join(ibands.as("i"),
           col("d.band") === col("i.band") && col("d.band_key") === col("i.band_key"))
@@ -1712,13 +1729,10 @@ object DedupOps {
       val cand = candIdx.unionAll(candDelta).distinct()
 
       val allSigs = isig.unionAll(dsig)
-      // codegen'd primitive loop (see SigAgree) — integer equality count,
-      // identical to the zip_with/aggregate HOF form it replaces
-      val nMatch = graft.functions.native.sigAgree(col("sa"), col("sb"))
       val dups = cand
         .join(dsig.select(col("doc_id").as("delta_id"), col("sig").as("sa")), "delta_id")
         .join(allSigs.select(col("doc_id").as("cand_id"), col("sig").as("sb")), "cand_id")
-        .withColumn("est", nMatch.cast("double") / lit(numPerm.toDouble))
+        .withColumn("est", agreement(col("sa"), col("sb"), numPerm))
         .filter(col("est") >= minEst)
         .groupBy("delta_id").agg(min("cand_id").as("dup_of"))
 
@@ -1740,23 +1754,12 @@ object DedupOps {
     * injected copies; identical banding, signature-agreement estimator,
     * min-candidate labeling.
     */
-  def dedupIncrementalOracle(minEst: Double = 0.5, numPerm: Int = 16): String = {
-    val rows = numPerm / 4
+  def dedupIncrementalOracle(minEst: Double = 0.5, numPerm: Int = 16): String =
     s"""$corpusShingledCte,
-       |sigs AS (
-       |  SELECT doc_id,
-       |    list_transform(range(0, $numPerm), p ->
-       |      list_min(list_transform(shingles, s ->
-       |        ${Hashing.hash64Duck("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
-       |  FROM shingled),
-       |ibands AS (
-       |  SELECT doc_id, b AS band,
-       |    array_to_string(sig[b * $rows + 1 : b * $rows + $rows], ',') AS band_key
-       |  FROM sigs, range(0, 4) t(b) WHERE doc_id < 100000),
-       |dbands AS (
-       |  SELECT doc_id, b AS band,
-       |    array_to_string(sig[b * $rows + 1 : b * $rows + $rows], ',') AS band_key
-       |  FROM sigs, range(0, 4) t(b) WHERE doc_id >= 100000),
+       |${sigsDuck(numPerm)},
+       |${bandsDuck(numPerm)},
+       |ibands AS (SELECT * FROM bands WHERE doc_id < 100000),
+       |dbands AS (SELECT * FROM bands WHERE doc_id >= 100000),
        |cand AS (
        |  SELECT d.doc_id AS delta_id, i.doc_id AS cand_id
        |  FROM dbands d JOIN ibands i ON d.band = i.band AND d.band_key = i.band_key
@@ -1778,7 +1781,6 @@ object DedupOps {
        |  dup_of IS NOT NULL AS is_dup
        |FROM (SELECT doc_id FROM corpus WHERE doc_id >= 100000) d
        |LEFT JOIN dups ON d.doc_id = dups.delta_id""".stripMargin
-  }
 
   // ---- DuckDB oracle SQL (kept in lockstep with the Spark ops above) ----
 
@@ -1792,13 +1794,19 @@ object DedupOps {
   /** Shared CTE prefix: corpus + shingled. */
   val corpusShingledCte: String = corpusShingledCteOver(augmentedSql)
 
+  /** Shared CTE prefix over the plain `documents` table (no injected
+    * copies): corpus + shingled. */
+  private[graft] val documentsShingledCte: String =
+    corpusShingledCteOver("corpus AS (SELECT doc_id, text FROM documents)")
+
   val exactDedupSql: String =
     s"""WITH ${augmentedSql}
        |SELECT md5(text) AS fp, min(doc_id) AS keeper_id, count(*) AS n_copies
        |FROM corpus GROUP BY 1""".stripMargin
 
   val minhashSignaturesOracle: String =
-    s"$corpusShingledCte\n${minhashSignaturesSql()}"
+    s"""${minhashSignaturesCtesOver(corpusShingledCte)}
+       |SELECT doc_id, perm, minhash FROM signatures""".stripMargin
 
   private val jaccardDuck =
     """sizes AS (
@@ -1822,16 +1830,8 @@ object DedupOps {
     * the triplet-mining oracle composes negatives on top of it. */
   def minhashPairsCtesOver(prefix: String): String =
     s"""$prefix,
-       |sigs AS (
-       |  SELECT doc_id,
-       |    list_transform(range(0, 16), p ->
-       |      list_min(list_transform(shingles, s ->
-       |        ${Hashing.hash64Duck("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
-       |  FROM shingled),
-       |bands AS (
-       |  SELECT doc_id, b AS band,
-       |    array_to_string(sig[b * 4 + 1 : b * 4 + 4], ',') AS band_key
-       |  FROM sigs, range(0, 4) t(b)),
+       |${sigsDuck(16)},
+       |${bandsDuck(16)},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b
@@ -1950,14 +1950,14 @@ object DedupOps {
     * shared shingle space while its df cap is inactive — the test
     * corpora's regime) does banded-LSH MinHash ([[minhashPairs]])
     * recover? Both pipelines verify with the SAME exact Jaccard over
-    * the SAME `withShingles` derivation, so found ⊆ truth by
+    * the SAME [[shingled]] derivation, so found ⊆ truth by
     * construction and the miss set is precisely the banding's
     * candidate-generation misses — the number that tells an operator
     * whether 4×4 banding suffices at their similarity threshold.
     * One summary row: (n_truth, n_found, recall); the division is the
     * single IEEE op, nullif-guarded for an empty truth set.
     *
-    * DEPLOYMENT CONTRACT (VERDICT r11 item 4): this exhaustive form is
+    * DEPLOYMENT CONTRACT: this exhaustive form is
     * a FIXTURE-SCALE ground-truth check — its truth side is quadratic
     * in pair mass (the term that OOMed the pre-fix 100× ladder and
     * still costs ~225 s at 100× locally). Production evaluation is
@@ -1967,23 +1967,22 @@ object DedupOps {
     * 32/64/128 sweep is driver-tracked in PLANS.md).
     */
   def dedupRecall(corpus: DataFrame, minJaccard: Double = 0.5): DataFrame = {
-    // shingle ONCE for both pipelines (review-2: the composed query
-    // otherwise tokenized+shingled the corpus twice — the dominant
-    // pass); cached under the same caller clearCache contract as the
-    // pipelines' own intermediates
-    // coalesce to cluster parallelism before pinning (round 15): the
-    // augmented corpus unions 3 branches, so unpinned it materializes at
-    // 3× the branch partition count and both pipelines' references pay
-    // 3× the tasks. Narrow (no shuffle), full parallelism kept; safe by
-    // the harness contract — the exhaustive recall corpus is bounded
+    // shingle ONCE for both pipelines (tokenizing and shingling is the
+    // dominant pass); cached under the same caller clearCache contract
+    // as the pipelines' own intermediates.
+    // Coalesce to cluster parallelism before pinning: the augmented
+    // corpus unions 3 branches, so unpinned it materializes at 3× the
+    // branch partition count and both pipelines' references pay 3× the
+    // tasks. Narrow (no shuffle), full parallelism kept; safe by the
+    // harness contract — the exhaustive recall corpus is bounded
     // (dedup_recall_sampled is the scale path).
-    val shingled = withShingles(corpus)
+    val sh = shingled(corpus)
       .coalesce(math.max(1,
         corpus.sparkSession.sparkContext.defaultParallelism))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val truth = ngramJaccardPairsShingled(shingled, minJaccard, 64,
+    val truth = ngramJaccardPairsShingled(sh, minJaccard, 64,
       StorageLevel.MEMORY_AND_DISK).select("doc_a", "doc_b")
-    val found = minhashPairsShingled(shingled, minJaccard,
+    val found = minhashPairsShingled(sh, minJaccard,
       StorageLevel.MEMORY_AND_DISK)
       .select(col("doc_a").as("f_a"), col("doc_b").as("f_b"), lit(1L).as("hit"))
     truth
@@ -1997,8 +1996,8 @@ object DedupOps {
           nullif(col("n_truth").cast("double"), lit(0.0))).as("recall"))
   }
 
-  /** SAMPLED dedup recall — the 100 TB formulation of [[dedupRecall]]
-    * (VERDICT r10 item 4): the exhaustive Jaccard truth side is
+  /** SAMPLED dedup recall — the 100 TB formulation of [[dedupRecall]]:
+    * the exhaustive Jaccard truth side is
     * quadratic-ish in corpus size, so at scale the estimator runs over a
     * content-addressed DOC SAMPLE (seeded md5 bucket < sampleBuckets of
     * 256 — the [[graft.ops.TextOps.stratifiedSample]] shuffle-key idiom:

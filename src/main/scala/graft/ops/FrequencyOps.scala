@@ -67,16 +67,14 @@ object FrequencyOps {
 
   /** Word 3-gram heavy hitters — the corpus's most repeated phrases,
     * the signal a boilerplate hunt starts from (a 3-gram that appears
-    * in half the corpus is a template, not content). Same shingle
-    * convention as the MinHash pipeline (DedupOps.withShingles).
+    * in half the corpus is a template, not content). Same shingles as
+    * the MinHash pipeline (DedupOps.shingled).
     */
   def heavyNgrams(documents: DataFrame, k: Int = 20,
                   capacity: Int = 4096,
                   guaranteedOnly: Boolean = false): DataFrame = {
-    val grams = documents
-      .withColumn("toks", split(col("text"), " ", -1))
-      .filter(size(col("toks")) >= 3)
-      .select(explode(expr(DedupOps.shingleSql)).as("tok"))
+    val grams = DedupOps.shingled(documents)
+      .select(explode(col("shingles")).as("tok"))
     topKExact(grams, k, capacity, guaranteedOnly)
   }
 
@@ -189,13 +187,8 @@ object FrequencyOps {
 
   def heavyNgramsOracle(k: Int = 20, capacity: Int = 4096,
                         guaranteedOnly: Boolean = false): String =
-    s"""WITH toks AS (
-       |  SELECT string_split(text, ' ') AS toks FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 3),
-       |t AS (
-       |  SELECT unnest([array_to_string(toks[i:i+2], ' ')
-       |                 for i in range(1, len(toks) - 1)]) AS tok
-       |  FROM toks),
+    s"""${DedupOps.documentsShingledCte},
+       |t AS (SELECT unnest(shingles) AS tok FROM shingled),
        |n AS (SELECT count(*) AS n FROM t),
        |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
        |r AS (

@@ -64,7 +64,7 @@ object PqOps {
   /** Fail fast on a geometry the 64-dim layout can't honor — a silent
     * `64 / m` truncation would drop trailing dimensions from every
     * subspace (recall loss nobody sees), the same class of hazard as
-    * the streaming-dedup `numPerm % 4` guard.
+    * the `numPerm % 4` guard of the MinHash banding ([[DedupOps.bands]]).
     */
   private def requireGeometry(m: Int, k: Int): Unit = {
     require(m > 0 && 64 % m == 0, s"m must divide the 64 dims, got $m")

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-safe directory publish for on-disk snapshots (the CDC snapshot,
   * the streaming-dedup signature index). The naive delete(live) +
@@ -24,6 +24,7 @@ import org.apache.spark.sql.SparkSession
   * Every window leaves at least one complete generation on disk. A real
   * deployment gets this from the table format's commit protocol
   * (Delta/Iceberg); this is the minimal filesystem equivalent.
+  * [[compact]] runs the whole protocol for an append-only parquet index.
   */
 object SnapshotSwap {
   private def fs(spark: SparkSession, p: Path) =
@@ -82,5 +83,27 @@ object SnapshotSwap {
       f.delete(next, true)
       false
     }
+  }
+
+  /** Compact the parquet index at `dir` into `numFiles` files: repair an
+    * interrupted publish, check that the index holds exactly `columns`
+    * (in any order), keep `keep(index)` — the caller's retention filter
+    * and `distinct()` — write it to [[nextPath]] and [[publish]] it. A
+    * crash at any point leaves a complete index generation. Run only
+    * while nothing appends to the index: an append landing between the
+    * read and the publish would be dropped by the swap. Returns (rows
+    * before, rows after).
+    */
+  private[graft] def compact(spark: SparkSession, dir: String, columns: Seq[String],
+                             numFiles: Int)(keep: DataFrame => DataFrame): (Long, Long) = {
+    recover(spark, dir)
+    val idx = spark.read.parquet(dir)
+    require(idx.columns.sorted.sameElements(columns.sorted),
+      s"index must be (${columns.mkString(", ")}); got ${idx.columns.mkString(",")}")
+    val before = idx.count()
+    keep(idx).repartition(numFiles).write.mode("overwrite").parquet(nextPath(dir))
+    val after = spark.read.parquet(nextPath(dir)).count()
+    publish(spark, dir)
+    (before, after)
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.{DedupOps, TextOps}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -18,7 +19,7 @@ case class BandedDoc(band: Int, band_key: String, doc_id: Long,
   * document arrived at a band bucket already at `maxBucket` capacity and
   * was neither compared nor retained. Overflow docs may therefore carry
   * undetected duplicates; the sentinel makes the miss queryable at the
-  * sink instead of silent (ADVICE r5). Filter `est >= 0` for matches.
+  * sink instead of silent. Filter `est >= 0` for matches.
   */
 case class DupMatch(doc_id: Long, dup_of: Long, est: Double)
 
@@ -57,30 +58,18 @@ private case class BandBucket(docs: List[(Long, Seq[Long])])
 object StreamingDedup {
 
   /** Map-side banding projection: text → shingles → MinHash signature →
-    * 4 band buckets. Identical key derivation to the batch
-    * `dedupIncremental`/`minhashPairs` banding (concat_ws over signature
-    * slices), so a streaming bucket key equals the batch band key for
-    * the same text. Stateless — safe before the stateful operator.
-    * Documents shorter than 3 tokens carry no shingles and are dropped,
-    * matching the batch `withShingles` guard.
+    * 4 band buckets, through the batch helpers ([[DedupOps.shingled]],
+    * [[DedupOps.signed]], [[DedupOps.bands]]), so a streaming bucket key
+    * equals the batch band key for the same text. Stateless — safe
+    * before the stateful operator. Documents shorter than 3 tokens carry
+    * no shingles and are dropped.
     */
   def bandedSignatures(spark: SparkSession, stream: DataFrame,
                        numPerm: Int = 16, tsCol: String = "ts"): Dataset[BandedDoc] = {
     import spark.implicits._
-    // 4 bands of numPerm/4 rows each: a non-multiple would silently drop
-    // the trailing signature slots from every band key (recall loss).
-    require(numPerm % 4 == 0, s"numPerm must be a multiple of 4, got $numPerm")
-    val rows = numPerm / 4
-    stream
-      .withColumn("toks", split(col("text"), " ", -1))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("shingles", expr(graft.ops.DedupOps.shingleSql))
-      .withColumn("sig", graft.functions.native.minhashSig(col("shingles"), numPerm))
-      .select(col("doc_id").cast("long"), col("sig"), col(tsCol).as("ts"),
-        posexplode(expr(
-          s"transform(sequence(0, 3), b -> concat_ws(',', slice(sig, b * $rows + 1, $rows)))")))
-      .select(col("pos").cast("int").as("band"), col("col").as("band_key"),
-        col("doc_id"), col("sig"), col("ts"))
+    DedupOps.bands(DedupOps.signed(DedupOps.shingled(stream), numPerm), numPerm,
+        "doc_id", Seq(col("sig"), col(tsCol).as("ts")))
+      .withColumn("doc_id", col("doc_id").cast("long"))
       .as[BandedDoc]
   }
 
@@ -162,22 +151,13 @@ object StreamingDedup {
                               stream: DataFrame, minEst: Double = 0.5,
                               numPerm: Int = 16,
                               tsCol: String = "ts"): DataFrame = {
-    require(index.columns.sorted.sameElements(Array("doc_id", "sig")),
-      s"index must be a signatureIndex (doc_id, sig); got ${index.columns.mkString(",")}")
-    require(numPerm % 4 == 0, s"numPerm must be a multiple of 4, got $numPerm")
-    val rows = numPerm / 4
-    val bandExpr =
-      s"transform(sequence(0, 3), b -> concat_ws(',', slice(sig, b * $rows + 1, $rows)))"
-    val ibands = index
-      .select(col("doc_id").as("idx_id"), col("sig").as("idx_sig"),
-        posexplode(expr(bandExpr)))
-      .select(col("pos").as("band"), col("col").as("band_key"),
-        col("idx_id"), col("idx_sig"))
+    DedupOps.requireSignatureIndex(index)
+    val ibands = DedupOps.bands(index.withColumnRenamed("doc_id", "idx_id"),
+        numPerm, "idx_id", Seq(col("sig").as("idx_sig")))
       .persist()
     val sbands = bandedSignatures(spark, stream, numPerm, tsCol).toDF()
-    val nMatch = graft.functions.native.sigAgree(col("sig"), col("idx_sig"))
     sbands.join(ibands, Seq("band", "band_key"))
-      .withColumn("est", nMatch.cast("double") / lit(numPerm.toDouble))
+      .withColumn("est", DedupOps.agreement(col("sig"), col("idx_sig"), numPerm))
       .filter(col("est") >= minEst)
       .select(col("doc_id"), col("idx_id").as("dup_of"), col("est"))
   }
@@ -208,29 +188,21 @@ object StreamingDedup {
   def assignSplitsBatch(batch: DataFrame, index: DataFrame,
                         refSplits: DataFrame, minEst: Double = 0.5,
                         numPerm: Int = 16): DataFrame = {
-    require(index.columns.sorted.sameElements(Array("doc_id", "sig")),
-      s"index must be a signatureIndex (doc_id, sig); got ${index.columns.mkString(",")}")
+    DedupOps.requireSignatureIndex(index)
     require(refSplits.columns.sorted.sameElements(Array("doc_id", "split")),
       s"refSplits must be (doc_id, split); got ${refSplits.columns.mkString(",")}")
-    require(numPerm % 4 == 0, s"numPerm must be a multiple of 4, got $numPerm")
-    val rows = numPerm / 4
-    val bandExpr =
-      s"transform(sequence(0, 3), b -> concat_ws(',', slice(sig, b * $rows + 1, $rows)))"
-    def bandsOf(sigs: DataFrame, idName: String): DataFrame =
-      sigs.select(col("doc_id").as(idName), posexplode(expr(bandExpr)))
-        .select(col(idName), col("pos").as("band"), col("col").as("band_key"))
     // persisted for the duration of the call only (the dedupIncremental
     // contract): three plan branches reference the delta signatures
-    val dsig = graft.ops.DedupOps.signatureIndex(batch, numPerm).persist()
+    val dsig = DedupOps.signatureIndex(batch, numPerm).persist()
     try {
-      val cand = bandsOf(dsig, "doc_id")
-        .join(bandsOf(index, "idx_id"), Seq("band", "band_key"))
+      val cand = DedupOps.bands(dsig, numPerm, "doc_id")
+        .join(DedupOps.bands(index.withColumnRenamed("doc_id", "idx_id"), numPerm, "idx_id"),
+          Seq("band", "band_key"))
         .select("doc_id", "idx_id").distinct()
-      val nMatch = graft.functions.native.sigAgree(col("sa"), col("sb"))
       val inherited = cand
         .join(dsig.select(col("doc_id"), col("sig").as("sa")), "doc_id")
         .join(index.select(col("doc_id").as("idx_id"), col("sig").as("sb")), "idx_id")
-        .withColumn("est", nMatch.cast("double") / lit(numPerm.toDouble))
+        .withColumn("est", DedupOps.agreement(col("sa"), col("sb"), numPerm))
         .filter(col("est") >= minEst)
         .join(refSplits.select(col("doc_id").as("idx_id"),
           col("split").as("ref_split")), "idx_id")
@@ -243,8 +215,7 @@ object StreamingDedup {
         .join(inherited, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("ref_split"),
-            graft.ops.TextOps.splitLabel(
-              graft.ops.TextOps.splitBucket(col("doc_id")))).as("split"),
+            TextOps.splitLabel(TextOps.splitBucket(col("doc_id")))).as("split"),
           col("ref_split").isNotNull.as("inherited"))
       val localOut = out.persist()
       localOut.count()
@@ -279,7 +250,7 @@ object StreamingDedup {
 
   /** The full production incremental-dedup LOOP: per micro-batch, dedup
     * the arriving documents against the persisted signature index
-    * (batch [[graft.ops.DedupOps.dedupIncremental]] — band candidates +
+    * (batch [[DedupOps.dedupIncremental]] — band candidates +
     * signature agreement, intra-batch duplicates included), deliver the
     * batch's (doc_id, dup_of, is_dup) verdicts to `sink`, and APPEND the
     * survivors' signatures to the index — so tomorrow's batch dedups
@@ -302,28 +273,27 @@ object StreamingDedup {
       val docs = batch.select(col("doc_id").cast("long"), col("text"))
       val index = spark.read.parquet(indexDir)
       // dedupIncremental materializes + persists its OUTPUT and unpersists
-      // its own intermediates (round-6 contract) — this loop owns only the
-      // returned handle, so no session-wide clearCache is needed (which
-      // used to evict unrelated concurrent queries' caches every trigger).
-      val verdicts = graft.ops.DedupOps
-        .dedupIncremental(index, docs, minEst, numPerm)
+      // its own intermediates — this loop owns only the returned handle,
+      // so no session-wide clearCache is needed (one would evict
+      // unrelated concurrent queries' caches every trigger).
+      val verdicts = DedupOps.dedupIncremental(index, docs, minEst, numPerm)
       try {
         sink(verdicts, batchId)
         val survivors = docs.join(
           verdicts.filter(!col("is_dup")).select("doc_id"), "doc_id")
-        graft.ops.DedupOps.signatureIndex(survivors, numPerm)
+        DedupOps.signatureIndex(survivors, numPerm)
           .write.mode("append").parquet(indexDir)
       } finally verdicts.unpersist()
     }
 
-  /** Periodic COMPACTION for the [[incrementalIndexLoop]] signature index
-    * (VERDICT r6 item 6): the loop appends one signature-sized parquet
-    * slice per trigger forever, so an unmaintained index degrades into
+  /** Periodic COMPACTION for the [[incrementalIndexLoop]] signature
+    * index: the loop appends one signature-sized parquet slice per
+    * trigger forever, so an unmaintained index degrades into
     * thousands of tiny files and — under at-least-once replay — carries
     * bit-identical re-appended rows. Compaction rewrites it as
     * `numFiles` large files with exact `distinct()` collapsing the
     * replay duplicates: signatures are DETERMINISTIC functions of text
-    * ([[graft.ops.DedupOps.signatureIndex]]), so a re-delivered batch
+    * ([[DedupOps.signatureIndex]]), so a re-delivered batch
     * re-appends byte-identical (doc_id, sig) rows and distinct removes
     * precisely those; two DIFFERENT sigs for one doc_id cannot be
     * produced by the loop.
@@ -351,23 +321,9 @@ object StreamingDedup {
     */
   def compactSignatureIndex(spark: SparkSession, indexDir: String,
                             numFiles: Int = 8,
-                            dropBefore: Option[Long] = None): (Long, Long) = {
-    graft.sources.SnapshotSwap.recover(spark, indexDir)
-    val idx = spark.read.parquet(indexDir)
-    require(idx.columns.sorted.sameElements(Array("doc_id", "sig")),
-      s"index must be a signatureIndex (doc_id, sig); got ${idx.columns.mkString(",")}")
-    val before = idx.count()
-    val kept = dropBefore.fold(idx)(h => idx.filter(col("doc_id") >= h)).distinct()
-    // crash-safe publish (review: the old delete-then-rename swap had a
-    // window where the LIVE index was gone; SnapshotSwap's retire/swap
-    // with _SUCCESS-gated recovery leaves a complete generation in
-    // every window)
-    val tmp = graft.sources.SnapshotSwap.nextPath(indexDir)
-    kept.repartition(numFiles).write.mode("overwrite").parquet(tmp)
-    val after = spark.read.parquet(tmp).count()
-    graft.sources.SnapshotSwap.publish(spark, indexDir)
-    (before, after)
-  }
+                            dropBefore: Option[Long] = None): (Long, Long) =
+    graft.sources.SnapshotSwap.compact(spark, indexDir, Seq("doc_id", "sig"), numFiles)(
+      idx => dropBefore.fold(idx)(h => idx.filter(col("doc_id") >= h)).distinct())
 
   /** End-to-end streaming MinHash near-dup dedup: documents
     * (doc_id, text, `tsCol`) → watermark → band buckets → stateful match.
@@ -378,7 +334,6 @@ object StreamingDedup {
                          stateTtlMs: Long = 10L * 60 * 1000,
                          maxBucket: Int = 10000,
                          tsCol: String = "ts"): Dataset[DupMatch] = {
-    require(numPerm % 4 == 0, s"numPerm must be a multiple of 4, got $numPerm")
     val banded = bandedSignatures(
       spark, stream.withWatermark(tsCol, watermarkDelay), numPerm, tsCol)
     dedupAgainstState(spark, banded, minEst, numPerm, stateTtlMs, maxBucket)

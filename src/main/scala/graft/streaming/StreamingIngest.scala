@@ -168,7 +168,7 @@ object StreamingIngest {
     * replayed history). One digest-column shuffle — never payload
     * bytes.
     *
-    * CONCURRENCY CONTRACT (review-caught): run only while the loop is
+    * CONCURRENCY CONTRACT: run only while the loop is
     * QUIESCENT — the query stopped, or from the driver between
     * triggers. The rewrite snapshots the index at its read; a digest
     * appended by a live trigger between that read and `publish` would
@@ -180,16 +180,6 @@ object StreamingIngest {
     * lexical twin [[StreamingDedup.compactSignatureIndex]] carries the
     * same contract. Returns (rows before, rows after). */
   def compactDigestIndex(spark: SparkSession, indexDir: String,
-                         numFiles: Int = 8): (Long, Long) = {
-    graft.sources.SnapshotSwap.recover(spark, indexDir)
-    val idx = spark.read.parquet(indexDir)
-    require(idx.columns.sameElements(Array("digest")),
-      s"index must be a digest index (digest); got ${idx.columns.mkString(",")}")
-    val before = idx.count()
-    val tmp = graft.sources.SnapshotSwap.nextPath(indexDir)
-    idx.distinct().repartition(numFiles).write.mode("overwrite").parquet(tmp)
-    val after = spark.read.parquet(tmp).count()
-    graft.sources.SnapshotSwap.publish(spark, indexDir)
-    (before, after)
-  }
+                         numFiles: Int = 8): (Long, Long) =
+    graft.sources.SnapshotSwap.compact(spark, indexDir, Seq("digest"), numFiles)(_.distinct())
 }

@@ -207,17 +207,7 @@ object StreamingSemantic {
     */
   def compactAnnIndex(spark: SparkSession, indexDir: String,
                       numFiles: Int = 8,
-                      dropBefore: Option[Long] = None): (Long, Long) = {
-    graft.sources.SnapshotSwap.recover(spark, indexDir)
-    val idx = spark.read.parquet(indexDir)
-    require(idx.columns.sorted.sameElements(Array("bucket", "codes", "vec_id")),
-      s"index must be an annIndex (vec_id, bucket, codes); got ${idx.columns.mkString(",")}")
-    val before = idx.count()
-    val kept = dropBefore.fold(idx)(h => idx.filter(col("vec_id") >= h)).distinct()
-    val tmp = graft.sources.SnapshotSwap.nextPath(indexDir)
-    kept.repartition(numFiles).write.mode("overwrite").parquet(tmp)
-    val after = spark.read.parquet(tmp).count()
-    graft.sources.SnapshotSwap.publish(spark, indexDir)
-    (before, after)
-  }
+                      dropBefore: Option[Long] = None): (Long, Long) =
+    graft.sources.SnapshotSwap.compact(spark, indexDir, Seq("vec_id", "bucket", "codes"), numFiles)(
+      idx => dropBefore.fold(idx)(h => idx.filter(col("vec_id") >= h)).distinct())
 }

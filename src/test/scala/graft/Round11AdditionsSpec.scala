@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{BucketCap, DedupOps, SimilarityOps}
 
-/** Round 11: the VERDICT r10 fix list — the hot-bucket cap's plan
-  * corrected to overflow-keys-only (healthy path keeps the r9 plan:
-  * no window over bands), the cap's loud half registered and exercised
-  * on a genuinely flooded fixture, and the embedding LSH pair surface
-  * brought under the same (shared) fuse.
+/** The shared hot-bucket cap (`BucketCap.capBuckets`, overflow keys
+  * only), the embedding LSH pair surface under the same fuse, and the
+  * recall, broadcast-regime, decontamination and image-decoding checks
+  * filed with them. The MinHash pair surface's cap and audit tests live
+  * in `DedupOpsSpec`.
   */
 class Round11AdditionsSpec extends SparkSpec {
   import spark.implicits._
@@ -19,61 +19,10 @@ class Round11AdditionsSpec extends SparkSpec {
     (0L until 40L).map(i => (i, s"alpha bravo charlie delta_$i echo_$i fox_$i"))
       .toDF("doc_id", "text")
 
-  /** Flooded corpus: 8 byte-identical docs (ids 0-7 share every band
-    * bucket — the homogenized-corpus clique) + 2 unrelated docs. */
-  private def floodedDocs =
-    ((0L until 8L).map(i => (i, "the very same document body repeated verbatim")) ++
-      Seq((20L, "an unrelated first control document here"),
-        (21L, "another unrelated second control document here")))
-      .toDF("doc_id", "text")
-
   test("capBuckets healthy path: the input plan is returned UNCHANGED (reference-identical)") {
     val df = healthyDocs.withColumn("bucket", col("doc_id") % 5)
     val out = BucketCap.capBuckets(df, Seq("bucket"), "doc_id", maxBucket = 64)
     assert(out eq df, "no overflowing bucket must mean zero plan delta")
-  }
-
-  test("minhashPairs healthy plan contains NO window over bands (VERDICT r10 #1)") {
-    val wins = DedupOps.minhashPairs(healthyDocs)
-      .queryExecution.optimizedPlan.collect { case w: LWindow => w }
-    assert(wins.isEmpty,
-      s"healthy pair surface must not pay the rank window: $wins")
-  }
-
-  test("minhashBucketStats: healthy corpus proves the cap never bit") {
-    val rows = DedupOps.minhashBucketStats(healthyDocs, k = 10)
-      .select("bucket_n", "dropped_n", "overflowed")
-      .as[(Long, Long, Boolean)].collect()
-    assert(rows.nonEmpty)
-    assert(rows.forall { case (_, dropped, over) => dropped == 0L && !over })
-  }
-
-  test("minhashBucketStats: flooded bucket fires overflowed/dropped_n under the cap") {
-    val top = DedupOps.minhashBucketStats(floodedDocs, k = 4, maxBucket = 4)
-      .select("band", "bucket_n", "cand_pairs", "dropped_n", "overflowed")
-      .as[(Long, Long, Long, Long, Boolean)].collect().toSeq
-    // the 8-doc clique floods one bucket in each of the 4 bands
-    assert(top.map(_._1).sorted == Seq(0L, 1L, 2L, 3L))
-    top.foreach { case (_, n, cand, dropped, over) =>
-      assert(n == 8L && cand == 28L && dropped == 4L && over)
-    }
-  }
-
-  test("minhashPairs under the cap drops exactly the audited docs; default cap is a fuse, not a sampler") {
-    // cap 4: each band bucket keeps the 4 smallest doc_ids -> pairs are
-    // exactly the C(4,2)=6 clique pairs among ids {0,1,2,3}
-    val capped = DedupOps.minhashPairs(floodedDocs, maxBucket = 4)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val expected = (for {
-      a <- 0L until 4L; b <- (a + 1) until 4L
-    } yield (a, b)).toSet
-    assert(capped == expected, s"capped pair set: $capped")
-    // default cap (1024) leaves the flooded clique INTACT: all 28 pairs
-    val uncapped = DedupOps.minhashPairs(floodedDocs)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(uncapped == (for {
-      a <- 0L until 8L; b <- (a + 1) until 8L
-    } yield (a, b)).toSet)
   }
 
   test("capBuckets: a pathologically homogenized corpus fails LOUDLY past maxHotKeys") {

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Round-6 additions: ExactSubstr span removal, decimal-exact payments,
-  * up-sampling source mix, pack span manifests, and the dedupIncremental
-  * cache-ownership contract.
+  * up-sampling source mix and pack span manifests.
   */
 class Round6AdditionsSpec extends SparkSpec {
   import spark.implicits._
@@ -257,44 +256,6 @@ class Round6AdditionsSpec extends SparkSpec {
       assert(got == batch)
       assert(query.lastProgress.stateOperators.isEmpty, "must be stateless")
     } finally query.stop()
-  }
-
-  // ---- dedupIncremental cache ownership ----
-
-  test("dedupIncremental leaves no cached plans behind beyond its returned handle") {
-    val sc = spark.sparkContext
-    spark.catalog.clearCache() // isolate from other suites sharing the JVM
-    val before = sc.getPersistentRDDs.keySet
-    val index = DedupOps.signatureIndex(Seq(
-      (1L, "one two three four five six seven eight nine ten"),
-      (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-      .toDF("doc_id", "text"))
-    val delta = Seq(
-      (10L, "one two three four five six seven eight nine ten"),
-      (11L, "an entirely fresh document unlike anything in the index"))
-      .toDF("doc_id", "text")
-    val out = DedupOps.dedupIncremental(index, delta)
-    val verdicts = out.collect().map(r => (r.getLong(0), r.getBoolean(2))).toMap
-    assert(verdicts == Map(10L -> true, 11L -> false))
-    // after the call: only the operator's OWN output may be cached
-    val mid = sc.getPersistentRDDs.keySet -- before
-    assert(mid.size <= 1, s"inputs leaked: ${mid.size} new cached RDDs")
-    out.unpersist(blocking = true)
-    val after = sc.getPersistentRDDs.keySet -- before
-    assert(after.isEmpty, s"cached RDDs remain after unpersist: $after")
-  }
-
-  // ---- fail-fast numPerm guards ----
-
-  test("banding entry points reject numPerm not divisible by 4") {
-    val df = Seq((1L, "a b c d e")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      graft.streaming.StreamingDedup.bandedSignatures(spark, df.withColumn("ts", current_timestamp()), numPerm = 18)
-    }
-    intercept[IllegalArgumentException] {
-      DedupOps.dedupIncremental(
-        DedupOps.signatureIndex(df, numPerm = 18), df, numPerm = 18)
-    }
   }
 
   // ---- corpusShuffle: deterministic sharded training order ----

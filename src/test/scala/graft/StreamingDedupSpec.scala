@@ -64,6 +64,30 @@ class StreamingDedupSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("a streaming bucket key equals the batch band key of signatureIndex for the same text (numPerm 16 and 32)") {
+    implicit val sq = spark.sqlContext
+    val corpus = DedupOps.augmented(Tables.documents(spark, "/root/testdata/sf0.001"))
+    val rows = corpus.collect().map(r => (r.getLong(0), r.getString(1), t0)).toSeq
+    Seq(16, 32).foreach { numPerm =>
+      val input = MemoryStream[(Long, String, Timestamp)]
+      val name = s"stream_band_keys_$numPerm"
+      val query = StreamingDedup.bandedSignatures(spark, streamOf(input), numPerm)
+        .writeStream.format("memory").queryName(name).start()
+      try {
+        input.addData(rows: _*)
+        query.processAllAvailable()
+        val streamed = spark.table(name).select("doc_id", "band", "band_key")
+          .as[(Long, Int, String)].collect().toSet
+        val batch = DedupOps.bands(DedupOps.signatureIndex(corpus, numPerm), numPerm, "doc_id")
+          .select("doc_id", "band", "band_key").as[(Long, Int, String)].collect().toSet
+        assert(streamed.nonEmpty)
+        assert(streamed == batch, s"numPerm $numPerm: stream-only ${(streamed -- batch).take(3)}, " +
+          s"batch-only ${(batch -- streamed).take(3)}")
+        assert(streamed.head._3.split(',').length == numPerm / 4)
+      } finally query.stop()
+    }
+  }
+
   test("exact duplicates match across micro-batches with est 1.0") {
     implicit val sq = spark.sqlContext
     val text = "the quick brown fox jumps over the lazy dog today"
