@@ -1,13 +1,40 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** The local engine session every main builds: `local[cpus]` with `cpus`
   * shuffle partitions, UTC session time, graft's SQL extensions (which
-  * also install the local streaming checkpoint manager), no UI, WARN
-  * logging.
+  * also install the local streaming checkpoint manager and the session
+  * [[defaults]]), no UI, WARN logging.
   */
 object GraftSession {
+
+  /** graft's session defaults. [[graft.functions.GraftExtensions]]
+    * installs them on the running context's conf, and the test session
+    * sets them as builder confs. Each is a default only: an explicit
+    * setting (builder `.config`, `--conf` or `-Dspark.…`) wins.
+    *  - `spark.sql.artifact.isolation.enabled=false`: every query's tasks
+    *    run in the executor's default session. With Spark's default
+    *    (`true`) each streaming query's cloned session gets its own
+    *    executor class loader, so the code generator's cache, keyed by
+    *    class loader, misses and the first micro-batch of every query
+    *    recompiles every generated class. The trade-off: artifacts added
+    *    with `SparkSession.addArtifact` are visible to every session on
+    *    the context. graft adds none.
+    *  - `spark.sql.legacy.parquet.nanosAsLong=true`: an `events.parquet`
+    *    written with TIMESTAMP(NANOS), which Spark's reader rejects by
+    *    default, reads as raw epoch nanos (see
+    *    [[graft.sources.Tables.events]]).
+    */
+  val defaults: Map[String, String] = Map(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** Set every key of [[defaults]] that `conf` leaves unset; no-op on
+    * `None` (no running context). */
+  def installDefaults(conf: Option[SparkConf]): Unit =
+    conf.foreach(c => defaults.foreach { case (k, v) => c.setIfMissing(k, v) })
 
   /** `SPARK_GRAFT_CPUS`, parsed once on first use. */
   lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.GraftSession
 import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -42,6 +43,16 @@ object GraftFunctions {
   * running SparkContext's Hadoop configuration). Spark's own
   * `spark.sql.streaming.checkpointFileManagerClass`, set as a SQL conf or
   * with the `spark.hadoop.` prefix, overrides that manager.
+  *
+  * It also sets [[graft.GraftSession.defaults]] on the running context's
+  * conf, for each key not already set there; the first session on the
+  * context snapshots that conf, so its queries and every session cloned
+  * from it start with them. An explicit setting (builder `.config`,
+  * `--conf` or `-Dspark.…`) wins. One of them turns Spark's per-session
+  * artifact isolation off, so every query's tasks share the executor's
+  * default session and its compiled code: artifacts added with
+  * `SparkSession.addArtifact` then become visible to every session on the
+  * context.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -50,6 +61,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name), b))
     }
     ext.injectOptimizerRule(_ => EditDistancePrefilter)
+    GraftSession.installDefaults(StreamingBridge.activeConf)
     StreamingBridge.activeContext.foreach(LocalCheckpointFileManager.install)
   }
 }

@@ -38,14 +38,12 @@ object Tables {
     "documents"  -> LoadSpec("doc_id", alwaysParallel = true),
     "embeddings" -> LoadSpec("vec_id", alwaysParallel = true))
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
-    // reader rejects by default; read nanos as Long (we never consume the
-    // raw ts column — event-time logic derives times explicitly).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Load one table; changes no session conf. A TIMESTAMP(NANOS) column
+    * reads as a raw-nanos Long under graft's session default
+    * `spark.sql.legacy.parquet.nanosAsLong` ([[graft.GraftSession.defaults]]). */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     parallelize(spark.read.parquet(s"$sfDir/$name.parquet"),
       loadSpecs.get(name))
-  }
 
   /** Byte floor under which the load repartition is SKIPPED. The floor
     * is in PLANNER-ESTIMATED bytes, not raw file length: [[parallelize]]

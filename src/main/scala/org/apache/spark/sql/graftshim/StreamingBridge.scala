@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -24,4 +24,10 @@ object StreamingBridge {
     * after the context starts and before the session exists, so this is
     * how they reach it. */
   def activeContext: Option[SparkContext] = SparkContext.getActive
+
+  /** The running SparkContext's own conf, if any, to set defaults on
+    * (`SparkContext.conf` is private[spark]; `getConf` returns a copy).
+    * The first session built on a context snapshots this conf into its
+    * `SharedState`, after the session extensions have run. */
+  def activeConf: Option[SparkConf] = activeContext.map(_.conf)
 }

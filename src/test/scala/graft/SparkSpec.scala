@@ -6,7 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM, forked by sbt). */
 object TestSpark {
   lazy val spark: SparkSession = {
+    // graft's session defaults as builder confs; the extension itself is
+    // left out, so no spec gets its optimizer rule unasked
     val s = SparkSession.builder()
+      .config(GraftSession.defaults)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)
