@@ -2,6 +2,7 @@ package graft
 
 import graft.model.ExchangeRates
 import graft.ops._
+import graft.oracle._
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -933,8 +934,6 @@ object SparkEntry {
     })
   )
 
-  private val rates = ExchangeRates.ratesSql
-
   /** Shared rates map for the up-sampling mix query: src1 tripled-ish
     * (2.5 → 2 copies + a content-addressed half get a 3rd), src2 doubled,
     * src3 quartered, everything else kept at 1.0. Query and oracle both
@@ -942,366 +941,251 @@ object SparkEntry {
     */
   private val upsampleRates = Map("src1" -> 2.5, "src2" -> 2.0, "src3" -> 0.25)
 
-  /** The synthetic payments JSON feed as a DuckDB CTE (identical strings to
-    * PaymentOps.syntheticPaymentsJson), then parsed back with json_extract —
-    * the oracle exercises the same encode→decode loop as the Spark path.
-    */
-  private val paymentsDecodedCte =
-    s"""WITH synth AS (${PaymentOps.syntheticPaymentsJsonSql}),
-       |decoded AS (
-       |  SELECT k,
-       |    json_extract_string(value, '$$.currency') AS currency,
-       |    CAST(json_extract(value, '$$.amount') AS BIGINT) AS amount,
-       |    CAST(json_extract(value, '$$.ts') AS BIGINT) AS ts
-       |  FROM synth WHERE json_valid(value)
-       |)""".stripMargin
-
-  private val paymentsConvertedCte =
-    s"""$paymentsDecodedCte,
-       |converted AS (
-       |  SELECT k, d.currency, amount, ts,
-       |    CAST(round(amount * rate, 0) AS BIGINT) AS converted
-       |  FROM decoded d JOIN $rates ON d.currency = rates.currency
-       |)""".stripMargin
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables (bare table names; driver provides views).
     */
   def oracleSql: Map[String, String] = Map(
-    "wordcount_regex" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split_regex(lower(text), '\W+')) AS word
-        |      FROM documents)
-        |WHERE word <> '' GROUP BY word""".stripMargin,
-    "wordcount_space" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |GROUP BY word""".stripMargin,
-    "tokenize_space" ->
-      "SELECT unnest(string_split(text, ' ')) AS value FROM documents",
-    "payments_decode" ->
-      s"$paymentsDecodedCte SELECT * FROM decoded",
-    "payments_convert" ->
-      s"$paymentsConvertedCte SELECT * FROM converted",
-    "payments_suspicious" ->
-      s"$paymentsConvertedCte SELECT * FROM converted WHERE converted < 1000000",
+    "wordcount_regex" -> TextOracles.wordcountRegexOracle,
+    "wordcount_space" -> TextOracles.wordcountSpaceOracle,
+    "tokenize_space" -> TextOracles.tokenizeSpaceOracle,
+    "payments_decode" -> PaymentOracles.decodeOracle,
+    "payments_convert" -> PaymentOracles.convertOracle,
+    "payments_suspicious" -> PaymentOracles.suspiciousOracle,
     // mapside variant computes the same values as the join form
-    "payments_convert_mapside" ->
-      s"$paymentsConvertedCte SELECT * FROM converted",
-    "payments_convert_decimal" ->
-      s"""$paymentsDecodedCte
-         |SELECT k, d.currency, amount, ts,
-         |  CAST(CAST(CAST(amount AS DECIMAL(12,0)) * rate AS DECIMAL(38,6))
-         |    AS VARCHAR) AS converted_dec
-         |FROM decoded d JOIN $rates ON d.currency = rates.currency""".stripMargin,
-    "payments_encode" ->
-      s"""$paymentsConvertedCte
-         |SELECT currency AS key,
-         |  '{"currency":"' || currency || '","amount":' || CAST(converted AS VARCHAR) ||
-         |  ',"ts":' || CAST(ts AS VARCHAR) || '}' AS value
-         |FROM converted""".stripMargin,
-    "payments_pipeline" ->
-      s"""$paymentsConvertedCte
-         |SELECT k, currency, amount, ts, converted,
-         |  converted < 1000000 AS is_suspicious
-         |FROM converted""".stripMargin,
-    "cast_project" ->
-      "SELECT CAST(event_id AS VARCHAR) AS key, props AS value FROM events",
+    "payments_convert_mapside" -> PaymentOracles.convertOracle,
+    "payments_convert_decimal" -> PaymentOracles.convertDecimalOracle,
+    "payments_encode" -> PaymentOracles.encodeOracle,
+    "payments_pipeline" -> PaymentOracles.pipelineOracle,
+    "cast_project" -> EventOracles.castProjectOracle,
     "text_stats" -> textStatsSql,
-    "lang_id" ->
-      """WITH tokens AS (
-        |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word
-        |  FROM documents),
-        |profile AS (
-        |  SELECT lang AS p_lang, word, count(*) AS w_cnt
-        |  FROM tokens WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT t.doc_id, p.p_lang, CAST(sum(p.w_cnt) AS BIGINT) AS score
-        |  FROM tokens t JOIN profile p ON t.word = p.word
-        |  WHERE t.doc_id % 2 = 1 GROUP BY 1, 2)
-        |SELECT doc_id, p_lang AS pred_lang, score
-        |FROM (SELECT *, row_number() OVER
-        |        (PARTITION BY doc_id ORDER BY score DESC, p_lang ASC) AS rn
-        |      FROM scored)
-        |WHERE rn = 1""".stripMargin,
-    "token_counts" ->
-      """SELECT doc_id,
-        |  len(string_split(text, ' ')) AS ws_tokens,
-        |  CAST(list_reduce(list_transform(string_split(text, ' '),
-        |    w -> CAST(ceil(CAST(length(w) AS DOUBLE) / 4.0) AS BIGINT)),
-        |    (a, b) -> a + b) AS BIGINT) AS subword_est
-        |FROM documents""".stripMargin,
-    "heavy_hitters" -> FrequencyOps.heavyHittersOracle(guaranteedOnly = true),
-    "heavy_ngrams" -> FrequencyOps.heavyNgramsOracle(guaranteedOnly = true),
+    "lang_id" -> TextOracles.langIdOracle,
+    "token_counts" -> TextOracles.tokenCountsOracle,
+    "heavy_hitters" -> TextOracles.heavyHittersOracle(guaranteedOnly = true),
+    "heavy_ngrams" -> TextOracles.heavyNgramsOracle(guaranteedOnly = true),
     "heavy_hitters_by_source" ->
-      FrequencyOps.heavyHittersBySourceOracle(guaranteedOnly = true),
-    "bpe_pairs" -> BpeOps.bpePairCountsOracle(),
-    "bpe_segment" -> BpeOps.bpeSegmentOracle(),
-    "bpe_train_segment" -> BpeOps.bpeTrainSegmentOracle(),
-    "fingerprints" ->
-      "SELECT doc_id, substr(md5(lower(text)), 1, 16) AS fp FROM documents",
-    "dedup_events_exact" ->
-      """SELECT user_id, event_type, min(event_id) AS first_event_id,
-        |  count(*) AS n_events
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "events_json" ->
-      "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events",
-    "events_json_agg" ->
-      """SELECT event_type,
-        |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-    "dedup_docs_exact" -> DedupOps.exactDedupSql,
-    "minhash_signatures" -> DedupOps.minhashSignaturesOracle,
-    "dedup_minhash" -> DedupOps.minhashPairsOracle,
-    "minhash_bucket_stats" -> DedupOps.minhashBucketStatsOracle(),
-    "split_leakage" -> DedupOps.splitLeakageOracle,
-    "leakage_safe_split" -> DedupOps.leakageSafeSplitOracle,
-    "cross_source_dups" -> DedupOps.crossSourceDupMatrixOracle,
-    "dedup_ngram_jaccard" -> DedupOps.ngramJaccardOracle,
-    "dedup_recall" -> DedupOps.dedupRecallOracle(),
-    "dedup_recall_sampled" -> DedupOps.dedupRecallSampledOracle(),
-    "simhash" -> DedupOps.simhashOracle,
-    "dedup_simhash" -> DedupOps.simhashPairsOracle,
-    "dedup_prefix_editdist" -> DedupOps.editDistPairsOracle(),
-    "cosine_topk" -> SimilarityOps.cosineTopKOracle,
-    "ann_ivf" -> SimilarityOps.ivfTopKOracle,
-    "dedup_embedding" -> SimilarityOps.embeddingNearDupOracle,
-    "dedup_embedding_lsh" -> SimilarityOps.embeddingNearDupLshOracle(),
-    "embedding_bucket_stats" -> SimilarityOps.embeddingBucketStatsOracle(),
-    "split_leakage_semantic" -> SimilarityOps.splitLeakageSemanticOracle(),
-    "embedding_quantize" -> SimilarityOps.quantizeEmbeddingsOracle,
-    "embedding_project" -> SimilarityOps.projectEmbeddingsOracle(),
-    "ann_project_rerank" -> SimilarityOps.annProjectRerankOracle(),
-    "embedding_pipeline" -> SimilarityOps.embeddingPipelineOracle(),
-    "ann_index_incremental" -> PqOps.annIndexIncrementalOracle(),
-    "embedding_pq" -> PqOps.pqEncodeOracle(),
-    "ann_pq_adc" -> PqOps.annPqAdcOracle(),
-    "ann_ivf_pq" -> PqOps.annIvfPqOracle(),
-    "ann_ivf_pq_residual" -> PqOps.annIvfPqResidualOracle(),
-    "semantic_clusters" -> SemanticOps.semanticClustersOracle(),
-    "semantic_dedup" -> SemanticOps.semanticDedupOracle(k = 32, minCos = 0.45),
-    "cluster_cap_sample" -> SemanticOps.clusterCapSampleOracle(k = 32),
-    "line_dedup" -> DedupOps.lineDedupOracle(),
-    "centroid_classify" -> SemanticOps.centroidClassifyOracle(),
-    "centroid_confusion" -> SemanticOps.centroidConfusionOracle(),
-    "semantic_decontaminate" -> SemanticOps.semanticDecontaminateOracle(),
-    "semantic_decontaminate_lsh" -> SemanticOps.semanticDecontaminateLshOracle(),
-    "decontaminate_recall" -> SemanticOps.decontaminateRecallOracle(),
-    "hashed_tf" -> SemanticOps.hashedTfOracle(),
-    "zorder_layout" -> LayoutOps.zorderLayoutOracle(),
-    "compaction_plan" -> LayoutOps.compactionPlanOracle(),
-    "optimize_roundtrip" -> LayoutOps.optimizeRoundtripOracle(),
-    "compaction_roundtrip" -> LayoutOps.compactionRoundtripOracle(),
-    "hilbert_layout" -> LayoutOps.hilbertLayoutOracle(),
-    "zorder3_layout" -> LayoutOps.zorder3LayoutOracle(),
-    "hilbert3_layout" -> LayoutOps.hilbert3LayoutOracle(),
-    "q1_pricing_summary" -> RelationalOps.pricingSummaryOracle,
-    "orders_by_nation" -> RelationalOps.ordersByNationOracle,
-    "top_orders_per_priority" -> RelationalOps.topOrdersPerPriorityOracle,
-    "q5_local_supplier" -> RelationalOps.localSupplierRevenueOracle,
-    "q18_big_orders" -> RelationalOps.bigOrdersOracle,
-    "q6_revenue_change" -> RelationalOps.revenueChangeOracle,
-    "q3_shipping_priority" -> RelationalOps.shippingPriorityOracle,
-    "q4_priority_returns" -> RelationalOps.prioritiesWithReturnsOracle,
-    "q21_waiting_supplier" -> RelationalOps.waitingSuppliersOracle,
-    "q2_min_cost_supplier" -> RelationalOps.minCostSupplierOracle,
-    "q11_important_balance" -> RelationalOps.importantNationBalanceOracle,
-    "q12_priority_lines" -> RelationalOps.priorityLineClassesOracle,
-    "q20_promo_suppliers" -> RelationalOps.promoSuppliersOracle,
-    "q9_product_profit" -> RelationalOps.productProfitOracle,
-    "window_tumbling" -> EventOps.tumblingCountsOracle,
-    "window_sliding" -> EventOps.slidingCountsOracle,
-    "anti_join" -> RelationalOps.customersWithoutOrdersOracle,
-    "rollup_pricing" -> RelationalOps.pricingRollupOracle,
-    "cube_pricing" -> RelationalOps.pricingCubeOracle,
-    "grouping_sets_pricing" -> RelationalOps.pricingGroupingSetsOracle,
-    "pivot_returnflag" -> RelationalOps.returnFlagPivotOracle,
-    "running_totals" -> RelationalOps.runningTotalsOracle,
-    "rolling_revenue" -> RelationalOps.rollingRevenueOracle,
-    "window_analytics" -> RelationalOps.windowAnalyticsOracle,
-    "q16_supplier_count" -> RelationalOps.supplierCountByBrandOracle,
-    "q7_volume_shipping" -> RelationalOps.volumeShippingOracle,
-    "q8_market_share" -> RelationalOps.marketShareOracle(),
-    "q22_sales_opportunity" -> RelationalOps.salesOpportunityOracle,
-    "q13_order_distribution" -> RelationalOps.orderCountDistributionOracle,
-    "q14_promo_revenue" -> RelationalOps.promoRevenueOracle,
-    "q15_top_supplier" -> RelationalOps.topSupplierOracle,
-    "q19_discount_revenue" -> RelationalOps.discountedRevenueOracle,
-    "q17_small_qty_revenue" -> RelationalOps.smallQuantityRevenueOracle,
-    "vocab_encode" -> TextOps.vocabEncodeOracle(),
-    "vocab_encode_32k" -> TextOps.vocabEncodeOracle(32768),
-    "unigram_scores" -> TextOps.unigramScoresOracle(),
-    "chunk_docs" -> TextOps.chunkDocumentsOracle(),
-    "corpus_prep" -> TextOps.corpusPrepOracle(),
-    "curation_report" -> TextOps.curationReportOracle,
-    "bigram_lm" -> TextOps.bigramLmOracle,
-    "lm_likelihood" -> TextOps.lmLikelihoodOracle,
-    "lm_score_heldout" -> TextOps.lmLikelihoodAgainstOracle,
-    "except_users" -> EventOps.churnedUsersOracle,
-    "intersect_users" -> EventOps.retainedUsersOracle,
-    "q10_top_return_customers" -> RelationalOps.topReturnCustomersOracle,
-    "ann_lsh_multiprobe" -> SimilarityOps.lshTopKMultiProbeOracle(),
-    "ann_lsh_multitable" -> SimilarityOps.lshTopKMultiTableOracle(),
-    "ann_ivf_nprobe" -> SimilarityOps.ivfTopKProbedOracle(),
-    "multimodal_features" -> MultimodalOps.featuresOracle,
-    "multimodal_frames" -> MultimodalOps.sampleFramesOracle,
-    "multimodal_resize" -> MultimodalOps.resizeOracle,
-    "multimodal_manifest" -> MultimodalOps.ingestManifestOracle(),
-    "multimodal_decode" -> MultimodalOps.decodeImagesOracle(),
-    "multimodal_decode_png" -> MultimodalOps.decodeImagesOracle(),
-    "multimodal_decode_jpeg" -> MultimodalOps.decodeJpegBandedOracle(),
+      TextOracles.heavyHittersBySourceOracle(guaranteedOnly = true),
+    "bpe_pairs" -> TextOracles.bpePairCountsOracle(),
+    "bpe_segment" -> TextOracles.bpeSegmentOracle(),
+    "bpe_train_segment" -> TextOracles.bpeTrainSegmentOracle(),
+    "fingerprints" -> TextOracles.fingerprintsOracle,
+    "dedup_events_exact" -> EventOracles.dedupEventsExactOracle,
+    "events_json" -> EventOracles.eventsJsonOracle,
+    "events_json_agg" -> EventOracles.eventsJsonAggOracle,
+    "dedup_docs_exact" -> DedupOracles.exactDedupSql,
+    "minhash_signatures" -> DedupOracles.minhashSignaturesOracle,
+    "dedup_minhash" -> DedupOracles.minhashPairsOracle,
+    "minhash_bucket_stats" -> DedupOracles.minhashBucketStatsOracle(),
+    "split_leakage" -> DedupOracles.splitLeakageOracle,
+    "leakage_safe_split" -> DedupOracles.leakageSafeSplitOracle,
+    "cross_source_dups" -> DedupOracles.crossSourceDupMatrixOracle,
+    "dedup_ngram_jaccard" -> DedupOracles.ngramJaccardOracle,
+    "dedup_recall" -> DedupOracles.dedupRecallOracle(),
+    "dedup_recall_sampled" -> DedupOracles.dedupRecallSampledOracle(),
+    "simhash" -> DedupOracles.simhashOracle,
+    "dedup_simhash" -> DedupOracles.simhashPairsOracle,
+    "dedup_prefix_editdist" -> DedupOracles.editDistPairsOracle(),
+    "cosine_topk" -> SimilarityOracles.cosineTopKOracle,
+    "ann_ivf" -> SimilarityOracles.ivfTopKOracle,
+    "dedup_embedding" -> SimilarityOracles.embeddingNearDupOracle,
+    "dedup_embedding_lsh" -> SimilarityOracles.embeddingNearDupLshOracle(),
+    "embedding_bucket_stats" -> SimilarityOracles.embeddingBucketStatsOracle(),
+    "split_leakage_semantic" -> SimilarityOracles.splitLeakageSemanticOracle(),
+    "embedding_quantize" -> SimilarityOracles.quantizeEmbeddingsOracle,
+    "embedding_project" -> SimilarityOracles.projectEmbeddingsOracle(),
+    "ann_project_rerank" -> SimilarityOracles.annProjectRerankOracle(),
+    "embedding_pipeline" -> SimilarityOracles.embeddingPipelineOracle(),
+    "ann_index_incremental" -> SimilarityOracles.annIndexIncrementalOracle(),
+    "embedding_pq" -> SimilarityOracles.pqEncodeOracle(),
+    "ann_pq_adc" -> SimilarityOracles.annPqAdcOracle(),
+    "ann_ivf_pq" -> SimilarityOracles.annIvfPqOracle(),
+    "ann_ivf_pq_residual" -> SimilarityOracles.annIvfPqResidualOracle(),
+    "semantic_clusters" -> SemanticOracles.semanticClustersOracle(),
+    "semantic_dedup" -> SemanticOracles.semanticDedupOracle(k = 32, minCos = 0.45),
+    "cluster_cap_sample" -> SemanticOracles.clusterCapSampleOracle(k = 32),
+    "line_dedup" -> DedupOracles.lineDedupOracle(),
+    "centroid_classify" -> SemanticOracles.centroidClassifyOracle(),
+    "centroid_confusion" -> SemanticOracles.centroidConfusionOracle(),
+    "semantic_decontaminate" -> SemanticOracles.semanticDecontaminateOracle(),
+    "semantic_decontaminate_lsh" -> SemanticOracles.semanticDecontaminateLshOracle(),
+    "decontaminate_recall" -> SemanticOracles.decontaminateRecallOracle(),
+    "hashed_tf" -> SemanticOracles.hashedTfOracle(),
+    "zorder_layout" -> LayoutOracles.zorderLayoutOracle(),
+    "compaction_plan" -> LayoutOracles.compactionPlanOracle(),
+    "optimize_roundtrip" -> LayoutOracles.optimizeRoundtripOracle(),
+    "compaction_roundtrip" -> LayoutOracles.compactionRoundtripOracle(),
+    "hilbert_layout" -> LayoutOracles.hilbertLayoutOracle(),
+    "zorder3_layout" -> LayoutOracles.zorder3LayoutOracle(),
+    "hilbert3_layout" -> LayoutOracles.hilbert3LayoutOracle(),
+    "q1_pricing_summary" -> RelationalOracles.pricingSummaryOracle,
+    "orders_by_nation" -> RelationalOracles.ordersByNationOracle,
+    "top_orders_per_priority" -> RelationalOracles.topOrdersPerPriorityOracle,
+    "q5_local_supplier" -> RelationalOracles.localSupplierRevenueOracle,
+    "q18_big_orders" -> RelationalOracles.bigOrdersOracle,
+    "q6_revenue_change" -> RelationalOracles.revenueChangeOracle,
+    "q3_shipping_priority" -> RelationalOracles.shippingPriorityOracle,
+    "q4_priority_returns" -> RelationalOracles.prioritiesWithReturnsOracle,
+    "q21_waiting_supplier" -> RelationalOracles.waitingSuppliersOracle,
+    "q2_min_cost_supplier" -> RelationalOracles.minCostSupplierOracle,
+    "q11_important_balance" -> RelationalOracles.importantNationBalanceOracle,
+    "q12_priority_lines" -> RelationalOracles.priorityLineClassesOracle,
+    "q20_promo_suppliers" -> RelationalOracles.promoSuppliersOracle,
+    "q9_product_profit" -> RelationalOracles.productProfitOracle,
+    "window_tumbling" -> EventOracles.tumblingCountsOracle,
+    "window_sliding" -> EventOracles.slidingCountsOracle,
+    "anti_join" -> RelationalOracles.customersWithoutOrdersOracle,
+    "rollup_pricing" -> RelationalOracles.pricingRollupOracle,
+    "cube_pricing" -> RelationalOracles.pricingCubeOracle,
+    "grouping_sets_pricing" -> RelationalOracles.pricingGroupingSetsOracle,
+    "pivot_returnflag" -> RelationalOracles.returnFlagPivotOracle,
+    "running_totals" -> RelationalOracles.runningTotalsOracle,
+    "rolling_revenue" -> RelationalOracles.rollingRevenueOracle,
+    "window_analytics" -> RelationalOracles.windowAnalyticsOracle,
+    "q16_supplier_count" -> RelationalOracles.supplierCountByBrandOracle,
+    "q7_volume_shipping" -> RelationalOracles.volumeShippingOracle,
+    "q8_market_share" -> RelationalOracles.marketShareOracle(),
+    "q22_sales_opportunity" -> RelationalOracles.salesOpportunityOracle,
+    "q13_order_distribution" -> RelationalOracles.orderCountDistributionOracle,
+    "q14_promo_revenue" -> RelationalOracles.promoRevenueOracle,
+    "q15_top_supplier" -> RelationalOracles.topSupplierOracle,
+    "q19_discount_revenue" -> RelationalOracles.discountedRevenueOracle,
+    "q17_small_qty_revenue" -> RelationalOracles.smallQuantityRevenueOracle,
+    "vocab_encode" -> TextOracles.vocabEncodeOracle(),
+    "vocab_encode_32k" -> TextOracles.vocabEncodeOracle(32768),
+    "unigram_scores" -> TextOracles.unigramScoresOracle(),
+    "chunk_docs" -> TextOracles.chunkDocumentsOracle(),
+    "corpus_prep" -> TextOracles.corpusPrepOracle(),
+    "curation_report" -> TextOracles.curationReportOracle,
+    "bigram_lm" -> TextOracles.bigramLmOracle,
+    "lm_likelihood" -> TextOracles.lmLikelihoodOracle,
+    "lm_score_heldout" -> TextOracles.lmLikelihoodAgainstOracle,
+    "except_users" -> EventOracles.churnedUsersOracle,
+    "intersect_users" -> EventOracles.retainedUsersOracle,
+    "q10_top_return_customers" -> RelationalOracles.topReturnCustomersOracle,
+    "ann_lsh_multiprobe" -> SimilarityOracles.lshTopKMultiProbeOracle(),
+    "ann_lsh_multitable" -> SimilarityOracles.lshTopKMultiTableOracle(),
+    "ann_ivf_nprobe" -> SimilarityOracles.ivfTopKProbedOracle(),
+    "multimodal_features" -> MultimodalOracles.featuresOracle,
+    "multimodal_frames" -> MultimodalOracles.sampleFramesOracle,
+    "multimodal_resize" -> MultimodalOracles.resizeOracle,
+    "multimodal_manifest" -> MultimodalOracles.ingestManifestOracle(),
+    "multimodal_decode" -> MultimodalOracles.decodeImagesOracle(),
+    "multimodal_decode_png" -> MultimodalOracles.decodeImagesOracle(),
+    "multimodal_decode_jpeg" -> MultimodalOracles.decodeJpegBandedOracle(),
     "multimodal_decode_jpeg_quarantine" ->
-      MultimodalOps.decodeJpegQuarantineOracle(),
-    "multimodal_decode_wav" -> MultimodalOps.decodeAudioOracle(),
-    "multimodal_resample_wav" -> MultimodalOps.resampleAudioOracle(),
-    "multimodal_decode_ulaw" -> MultimodalOps.decodeUlawOracle(),
-    "multimodal_decode_alaw" -> MultimodalOps.decodeAlawOracle(),
-    "multimodal_decode_quarantine" -> MultimodalOps.decodeLenientOracle(),
-    "multimodal_prep" -> MultimodalOps.multimodalPrepOracle(),
-    "multimodal_frames_real" -> MultimodalOps.sampleFramesRealOracle(),
-    "multimodal_frames_stride3" -> MultimodalOps.sampleFramesRealOracle(stride = 3),
-    "multimodal_frames_tiff" -> MultimodalOps.sampleFramesRealOracle(),
-    "multimodal_frames_tiff_stride3" -> MultimodalOps.sampleFramesRealOracle(stride = 3),
-    "multimodal_resize_real" -> MultimodalOps.resizeDecodedOracle(),
-    "ann_lsh" -> SimilarityOps.lshTopKOracle(),
-    "ann_recall" -> SimilarityOps.annRecallOracle(),
-    "ann_recall_multiprobe" -> SimilarityOps.annRecallMultiProbeOracle(),
-    "ann_recall_ivfpq" -> SimilarityOps.annRecallIvfPqOracle(),
-    "ann_recall_funnel" -> SimilarityOps.annRecallFunnelOracle(),
-    "ann_recall_multitable" -> SimilarityOps.annRecallMultiTableOracle(),
-    "ann_recall_incremental" -> SimilarityOps.annRecallIncrementalOracle(),
-    "ann_recall_incremental_mp" -> SimilarityOps.annRecallIncrementalMultiProbeOracle(),
-    "ann_recall_incremental_clustered" -> SimilarityOps.annRecallIncrementalClusteredOracle(),
-    "ann_index_incremental_mp" -> PqOps.annIndexIncrementalMultiProbeOracle(),
-    "winnow_fingerprints" ->
-      s"SELECT doc_id, ${graft.functions.Winnow60.duckSql("text")} AS wfp FROM documents",
-    "tfidf_top" -> TextOps.tfIdfTopOracle,
-    "bm25_topk" -> TextOps.bm25TopKOracle(),
-    "hybrid_rrf" -> RetrievalOps.hybridRrfOracle(),
+      MultimodalOracles.decodeJpegQuarantineOracle(),
+    "multimodal_decode_wav" -> MultimodalOracles.decodeAudioOracle(),
+    "multimodal_resample_wav" -> MultimodalOracles.resampleAudioOracle(),
+    "multimodal_decode_ulaw" -> MultimodalOracles.decodeUlawOracle(),
+    "multimodal_decode_alaw" -> MultimodalOracles.decodeAlawOracle(),
+    "multimodal_decode_quarantine" -> MultimodalOracles.decodeLenientOracle(),
+    "multimodal_prep" -> MultimodalOracles.multimodalPrepOracle(),
+    "multimodal_frames_real" -> MultimodalOracles.sampleFramesRealOracle(),
+    "multimodal_frames_stride3" -> MultimodalOracles.sampleFramesRealOracle(stride = 3),
+    "multimodal_frames_tiff" -> MultimodalOracles.sampleFramesRealOracle(),
+    "multimodal_frames_tiff_stride3" -> MultimodalOracles.sampleFramesRealOracle(stride = 3),
+    "multimodal_resize_real" -> MultimodalOracles.resizeDecodedOracle(),
+    "ann_lsh" -> SimilarityOracles.lshTopKOracle(),
+    "ann_recall" -> SimilarityOracles.annRecallOracle(),
+    "ann_recall_multiprobe" -> SimilarityOracles.annRecallMultiProbeOracle(),
+    "ann_recall_ivfpq" -> SimilarityOracles.annRecallIvfPqOracle(),
+    "ann_recall_funnel" -> SimilarityOracles.annRecallFunnelOracle(),
+    "ann_recall_multitable" -> SimilarityOracles.annRecallMultiTableOracle(),
+    "ann_recall_incremental" -> SimilarityOracles.annRecallIncrementalOracle(),
+    "ann_recall_incremental_mp" -> SimilarityOracles.annRecallIncrementalMultiProbeOracle(),
+    "ann_recall_incremental_clustered" -> SimilarityOracles.annRecallIncrementalClusteredOracle(),
+    "ann_index_incremental_mp" -> SimilarityOracles.annIndexIncrementalMultiProbeOracle(),
+    "winnow_fingerprints" -> DedupOracles.winnowFingerprintsOracle,
+    "tfidf_top" -> TextOracles.tfIdfTopOracle,
+    "bm25_topk" -> TextOracles.bm25TopKOracle(),
+    "hybrid_rrf" -> RetrievalOracles.hybridRrfOracle(),
     // incremental == rebuild: the oracle is literally the full-corpus
     // bm25_topk SQL at the same (nQueries=8, k=5)
-    "bm25_incremental" -> TextOps.bm25TopKOracle(),
-    "hybrid_rrf_lsh" -> RetrievalOps.hybridRrfLshOracle(),
-    "triplet_mining" -> SemanticOps.tripletMiningOracle(),
-    "bm25_prf" -> RetrievalOps.bm25PrfOracle(),
-    "retrieval_recall" -> RetrievalOps.retrievalRecallOracle(),
-    "retrieval_recall_lsh" -> RetrievalOps.retrievalRecallOracle(lsh = true),
-    "retrieval_recall_sampled" -> RetrievalOps.retrievalRecallSampledOracle(),
+    "bm25_incremental" -> TextOracles.bm25TopKOracle(),
+    "hybrid_rrf_lsh" -> RetrievalOracles.hybridRrfLshOracle(),
+    "triplet_mining" -> SemanticOracles.tripletMiningOracle(),
+    "bm25_prf" -> RetrievalOracles.bm25PrfOracle(),
+    "retrieval_recall" -> RetrievalOracles.retrievalRecallOracle(),
+    "retrieval_recall_lsh" -> RetrievalOracles.retrievalRecallOracle(lsh = true),
+    "retrieval_recall_sampled" -> RetrievalOracles.retrievalRecallSampledOracle(),
     // SAME SQL as bm25_prf — the registered bit-parity contract of the
     // index-backed PRF formulation
-    "bm25_prf_index" -> RetrievalOps.bm25PrfOracle(),
-    "hybrid_rrf_index" -> RetrievalOps.hybridRrfIndexOracle(),
-    "retrieval_recall_annindex" -> RetrievalOps.retrievalRecallAnnIndexOracle(),
-    "triplet_coverage" -> SemanticOps.tripletCoverageOracle(),
-    "sessionize" -> EventOps.sessionizeOracle,
-    "quality_filter" -> TextOps.qualityFilterOracle(textStatsSql),
-    "quality_percentile" -> TextOps.qualityPercentileFilterOracle(textStatsSql),
-    "quality_calibrated" -> TextOps.qualityCalibratedOracle(),
-    "salted_join" ->
-      """SELECT event_id, e.event_type, type_total
-        |FROM events e JOIN (SELECT event_type, count(*) AS type_total
-        |                    FROM events GROUP BY 1) d
-        |  ON e.event_type = d.event_type""".stripMargin,
-    "dedup_pipeline" -> DedupOps.dedupPipelineOracle,
-    "paragraph_dedup" -> DedupOps.paragraphDedupOracle(),
-    "boilerplate_strip" -> DedupOps.boilerplateStripOracle(),
-    "gopher_gate" -> TextOps.gopherGateOracle(textStatsSql),
-    "decontaminate" -> DedupOps.decontaminateOracle(),
-    "decontaminate_spans" -> DedupOps.decontaminateSpansOracle(),
-    "decontaminate_surgical" -> DedupOps.decontaminateSurgicalOracle(),
+    "bm25_prf_index" -> RetrievalOracles.bm25PrfOracle(),
+    "hybrid_rrf_index" -> RetrievalOracles.hybridRrfIndexOracle(),
+    "retrieval_recall_annindex" -> RetrievalOracles.retrievalRecallAnnIndexOracle(),
+    "triplet_coverage" -> SemanticOracles.tripletCoverageOracle(),
+    "sessionize" -> EventOracles.sessionizeOracle,
+    "quality_filter" -> TextOracles.qualityFilterOracle(textStatsSql),
+    "quality_percentile" -> TextOracles.qualityPercentileFilterOracle(textStatsSql),
+    "quality_calibrated" -> TextOracles.qualityCalibratedOracle(),
+    "salted_join" -> EventOracles.saltedJoinOracle,
+    "dedup_pipeline" -> DedupOracles.dedupPipelineOracle,
+    "paragraph_dedup" -> DedupOracles.paragraphDedupOracle(),
+    "boilerplate_strip" -> DedupOracles.boilerplateStripOracle(),
+    "gopher_gate" -> TextOracles.gopherGateOracle(textStatsSql),
+    "decontaminate" -> DedupOracles.decontaminateOracle(),
+    "decontaminate_spans" -> DedupOracles.decontaminateSpansOracle(),
+    "decontaminate_surgical" -> DedupOracles.decontaminateSurgicalOracle(),
     // bloom prefilter + exact confirm ≡ exact decontamination (no false
     // negatives in a Bloom filter), so the oracle is shared verbatim
-    "bloom_decontaminate" -> DedupOps.decontaminateOracle(),
-    "contamination_score" -> DedupOps.contaminationScoreOracle(),
-    "substring_dup" -> DedupOps.substringDupOracle(),
-    "substring_dedup" -> DedupOps.substringDedupOracle(),
-    "stats_corr" -> StatsOps.statsCorrOracle,
-    "median_quantiles" -> StatsOps.quantilesOracle,
-    "outlier_screen" -> StatsOps.outliersOracle(),
-    "quantile_bins" -> StatsOps.quantileBinsOracle(),
-    "zscore_normalize" -> StatsOps.zscoreNormalizeOracle,
-    "data_profile" -> StatsOps.dataProfileOracle(),
-    "constraint_check" -> StatsOps.constraintCheckOracle(),
-    "constraint_route" -> StatsOps.constraintRouteOracle(),
-    "skew_report" -> SkewOps.skewReportOracle(),
-    "drift_check" -> StatsOps.driftCheckOracle(),
-    "drift_check_quantile" -> StatsOps.driftCheckQuantileOracle(),
-    "output_diff" -> StatsOps.outputDiffBoilerplateOracle(
-      DedupOps.augmentedSql, DedupOps.boilerplateStripOracle()),
-    "simhash_shingles" -> DedupOps.simhashShinglesOracle,
-    "doc_repetition" -> TextOps.docRepetitionOracle,
-    "pii_scrub" -> TextOps.piiScrubOracle,
-    "k_anonymity" -> TextOps.kAnonymityGateOracle(),
-    "source_mix" -> TextOps.sourceMixOracle,
-    "source_mix_upsample" -> TextOps.sourceMixUpsampleOracle(upsampleRates),
-    "source_temperature_mix" -> TextOps.sourceTemperatureMixOracle(),
-    "dsir_weights" -> SemanticOps.dsirScoresOracle(),
-    "dsir_select" -> SemanticOps.dsirSelectOracle(),
-    "dsir_ratios" -> SemanticOps.dsirRatiosOracle(),
-    "pack_sequences" -> TextOps.packSequencesOracle(),
-    "pack_shards" -> TextOps.packSequencesShardedOracle(),
-    "pack_shards_dense" -> TextOps.packShardsDenseOracle(),
-    "pack_spans" -> TextOps.packSpansOracle(),
-    "pack_split" -> TextOps.packSplitOracle(),
-    "corpus_shuffle" -> TextOps.corpusShuffleOracle(),
-    "token_budget_mix" -> TextOps.tokenBudgetMixOracle(),
-    "quality_budget_mix" -> TextOps.qualityBudgetMixOracle(),
-    "stratified_sample" -> TextOps.stratifiedSampleOracle(),
-    "value_histogram" -> TextOps.valueHistogramOracle(),
-    "hash_split" -> TextOps.hashSplitOracle,
-    "dedup_clusters" -> DedupOps.nearDupClustersOracle,
-    "dedup_cluster_sizes" -> DedupOps.clusterSizeHistogramOracle,
-    "dedup_canonical" -> DedupOps.dedupCanonicalOracle,
-    "dedup_incremental" -> DedupOps.dedupIncrementalOracle(),
+    "bloom_decontaminate" -> DedupOracles.decontaminateOracle(),
+    "contamination_score" -> DedupOracles.contaminationScoreOracle(),
+    "substring_dup" -> DedupOracles.substringDupOracle(),
+    "substring_dedup" -> DedupOracles.substringDedupOracle(),
+    "stats_corr" -> StatsOracles.statsCorrOracle,
+    "median_quantiles" -> StatsOracles.quantilesOracle,
+    "outlier_screen" -> StatsOracles.outliersOracle(),
+    "quantile_bins" -> StatsOracles.quantileBinsOracle(),
+    "zscore_normalize" -> StatsOracles.zscoreNormalizeOracle,
+    "data_profile" -> StatsOracles.dataProfileOracle(),
+    "constraint_check" -> StatsOracles.constraintCheckOracle(),
+    "constraint_route" -> StatsOracles.constraintRouteOracle(),
+    "skew_report" -> StatsOracles.skewReportOracle(),
+    "drift_check" -> StatsOracles.driftCheckOracle(),
+    "drift_check_quantile" -> StatsOracles.driftCheckQuantileOracle(),
+    "output_diff" -> StatsOracles.outputDiffBoilerplateOracle(
+      DedupOracles.augmentedSql, DedupOracles.boilerplateStripOracle()),
+    "simhash_shingles" -> DedupOracles.simhashShinglesOracle,
+    "doc_repetition" -> TextOracles.docRepetitionOracle,
+    "pii_scrub" -> TextOracles.piiScrubOracle,
+    "k_anonymity" -> TextOracles.kAnonymityGateOracle(),
+    "source_mix" -> TextOracles.sourceMixOracle,
+    "source_mix_upsample" -> TextOracles.sourceMixUpsampleOracle(upsampleRates),
+    "source_temperature_mix" -> TextOracles.sourceTemperatureMixOracle(),
+    "dsir_weights" -> SemanticOracles.dsirScoresOracle(),
+    "dsir_select" -> SemanticOracles.dsirSelectOracle(),
+    "dsir_ratios" -> SemanticOracles.dsirRatiosOracle(),
+    "pack_sequences" -> TextOracles.packSequencesOracle(),
+    "pack_shards" -> TextOracles.packSequencesShardedOracle(),
+    "pack_shards_dense" -> TextOracles.packShardsDenseOracle(),
+    "pack_spans" -> TextOracles.packSpansOracle(),
+    "pack_split" -> TextOracles.packSplitOracle(),
+    "corpus_shuffle" -> TextOracles.corpusShuffleOracle(),
+    "token_budget_mix" -> TextOracles.tokenBudgetMixOracle(),
+    "quality_budget_mix" -> TextOracles.qualityBudgetMixOracle(),
+    "stratified_sample" -> TextOracles.stratifiedSampleOracle(),
+    "value_histogram" -> TextOracles.valueHistogramOracle(),
+    "hash_split" -> TextOracles.hashSplitOracle,
+    "dedup_clusters" -> DedupOracles.nearDupClustersOracle,
+    "dedup_cluster_sizes" -> DedupOracles.clusterSizeHistogramOracle,
+    "dedup_canonical" -> DedupOracles.dedupCanonicalOracle,
+    "dedup_incremental" -> DedupOracles.dedupIncrementalOracle(),
     // Oracle uses DuckDB's NATIVE ASOF JOIN — an independent
     // implementation validating our union+window composition.
-    "funnel_conversion" -> EventOps.funnelConversionOracle(),
-    "funnel_steps" -> EventOps.funnelStepsOracle(),
-    "retention_cohorts" -> EventOps.retentionCohortsOracle,
-    "cdc_upsert" -> EventOps.cdcUpsertOracle,
-    "scd2_history" -> EventOps.scd2HistoryOracle,
-    "cdc_upsert_incremental" -> EventOps.cdcUpsertOracle,
-    "asof_join" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type, value
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, ts_us, arg_max(value, event_id) AS value
-        |  FROM e WHERE event_type = 'signup' GROUP BY 1, 2)
-        |SELECT e.event_id, e.user_id, e.ts_us, e.event_type,
-        |       r.value AS asof_value
-        |FROM e ASOF LEFT JOIN r
-        |  ON e.user_id = r.user_id AND e.ts_us >= r.ts_us""".stripMargin,
+    "funnel_conversion" -> EventOracles.funnelConversionOracle(),
+    "funnel_steps" -> EventOracles.funnelStepsOracle(),
+    "retention_cohorts" -> EventOracles.retentionCohortsOracle,
+    "cdc_upsert" -> EventOracles.cdcUpsertOracle,
+    "scd2_history" -> EventOracles.scd2HistoryOracle,
+    "cdc_upsert_incremental" -> EventOracles.cdcUpsertOracle,
+    "asof_join" -> EventOracles.asofJoinOracle,
     "interval_join" ->
-      JoinOps.sessionOverlapPairsOracle(EventOps.sessionizeOracle),
-    "range_join" ->
-      """SELECT o_orderkey, o_totalprice, tier
-        |FROM orders
-        |JOIN (SELECT i AS tier, i * 25000.0 AS lo, (i + 1) * 25000.0 AS hi
-        |      FROM range(0, 20) t(i))
-        |  ON o_totalprice >= lo AND o_totalprice < hi""".stripMargin,
-    "source_signatures" ->
-      s"""${DedupOps.minhashSignaturesCtesOver(DedupOps.documentsShingledCte)}
-         |SELECT source, perm, min(minhash) AS minhash
-         |FROM signatures JOIN documents USING (doc_id)
-         |GROUP BY 1, 2""".stripMargin,
-    "source_overlap" ->
-      s"""${DedupOps.minhashSignaturesCtesOver(DedupOps.documentsShingledCte)},
-         |gsigs AS (
-         |  SELECT source, perm, min(minhash) AS minhash
-         |  FROM signatures JOIN documents USING (doc_id)
-         |  GROUP BY 1, 2)
-         |SELECT a.source AS group_a, b.source AS group_b,
-         |  CAST(sum(CASE WHEN a.minhash = b.minhash THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_match,
-         |  CAST(CAST(sum(CASE WHEN a.minhash = b.minhash THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS DOUBLE) / 16.0 AS jaccard_est
-         |FROM gsigs a JOIN gsigs b ON a.perm = b.perm AND a.source < b.source
-         |GROUP BY 1, 2""".stripMargin
+      EventOracles.sessionOverlapPairsOracle(EventOracles.sessionizeOracle),
+    "range_join" -> RelationalOracles.rangeJoinOracle,
+    "source_signatures" -> DedupOracles.sourceSignaturesOracle,
+    "source_overlap" -> DedupOracles.sourceOverlapOracle,
   )
 
-  // ONE score-formula string (TextOps.textStatsSql) shared by every
+  // ONE score-formula string (TextOracles.textStatsSql) shared by every
   // quality oracle, so the formula cannot fork between gates
-  private val textStatsSql: String = TextOps.textStatsSql()
+  private val textStatsSql: String = TextOracles.textStatsSql()
 }

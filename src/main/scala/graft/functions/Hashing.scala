@@ -23,10 +23,6 @@ object Hashing {
   def hash64Expr(e: String): String =
     s"CAST(conv(substr(md5($e), 1, 15), 16, 10) AS BIGINT)"
 
-  /** Same hash as a DuckDB SQL fragment — keep in lockstep with hash64. */
-  def hash64Duck(e: String): String =
-    s"('0x' || substr(md5($e), 1, 15))::BIGINT"
-
   /** Same hash computed JVM-side (for plan-time constants like LSH
     * hyperplane coefficients): first 15 hex chars of md5 as a Long.
     */

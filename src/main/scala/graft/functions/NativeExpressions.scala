@@ -38,7 +38,7 @@ private object Hash60 {
   *
   * Semantically identical to the nested-HOF formulation (each token's
   * 60-bit hash votes ±1 per bit; bit set iff votes > 0 — see
-  * DedupOps.simhashOracle), but one pass per row: the HOF version is
+  * DedupOracles.simhashOracle), but one pass per row: the HOF version is
   * interpreted AND CollapseProject inlines the token-hash array into the
   * per-bit inner aggregate, recomputing every md5 60× (measured 68 s at
   * sf0.1 vs ~1 s native). Null tokens vote -1 on every bit, matching

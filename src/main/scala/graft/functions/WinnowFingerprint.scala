@@ -118,22 +118,4 @@ object Winnow60 {
   def winnow60(text: Column, window: Int = DefaultWindow): Column =
     ColumnBridge.column(Winnow60(ColumnBridge.expression(text), window))
 
-  /** The same fingerprint as DuckDB SQL (naive per-window fold — the
-    * oracle doesn't need to be fast, only equal). Bytes of the UTF-8
-    * encoding are extracted as hex pairs of `hex(encode(text))`, so the
-    * oracle hashes the same byte stream as the JVM side for ANY text.
-    */
-  def duckSql(textExpr: String, window: Int = DefaultWindow): String =
-    s"""CASE WHEN octet_length(encode($textExpr)) <= $window THEN
-       |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |    list_transform(range(1, octet_length(encode($textExpr)) + 1),
-       |      j -> CAST(('0x' || substr(hex(encode($textExpr)), CAST(2 * j - 1 AS INT), 2)) AS BIGINT))),
-       |    (h, c) -> (h * 257 + c) % 2147483647)
-       |ELSE
-       |  list_min(list_transform(range(0, octet_length(encode($textExpr)) - $window + 1), i ->
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(range(1, $window + 1),
-       |        j -> CAST(('0x' || substr(hex(encode($textExpr)), CAST(2 * (i + j) - 1 AS INT), 2)) AS BIGINT))),
-       |      (h, c) -> (h * 257 + c) % 2147483647)))
-       |END""".stripMargin
 }

@@ -39,8 +39,4 @@ object ExchangeRates {
       .select(col("currency"), col("rate").cast("decimal(18,6)").as("rate"))
   }
 
-  /** Same dimension as inline SQL for the DuckDB oracle. */
-  def ratesSql: String =
-    rates.map { case (c, r) => s"('$c', CAST(${r.toPlainString} AS DECIMAL(18,6)))" }
-      .mkString("(VALUES ", ", ", ") AS rates(currency, rate)")
 }

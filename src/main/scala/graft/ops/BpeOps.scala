@@ -46,19 +46,6 @@ object BpeOps {
       .orderBy(col("cnt").desc, col("pair").asc)
       .limit(topK)
 
-  def bpePairCountsOracle(topK: Int = 200): String =
-    s"""WITH words AS (
-       |  SELECT w AS word, count(*) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-       |  WHERE len(w) > 0 GROUP BY 1),
-       |pairs AS (
-       |  SELECT substr(word, CAST(i AS INT), 2) AS pair,
-       |         CAST(sum(freq) AS BIGINT) AS cnt
-       |  FROM words, unnest(range(1, len(word))) AS t(i)
-       |  WHERE len(word) >= 2
-       |  GROUP BY 1)
-       |SELECT pair, cnt FROM pairs ORDER BY cnt DESC, pair ASC LIMIT $topK""".stripMargin
-
   /** Greedy left-to-right non-overlapping merge of the adjacent pair
     * (a, b) in a symbol array — one `aggregate` fold per word, map-side.
     * Built from Column lambdas (not an interpolated expr string), so
@@ -464,58 +451,4 @@ object BpeOps {
     ("a", "t"), ("l", "u"), ("a", "r"), ("p", "ar"), ("j", "o"), ("jo", "in"),
     ("a", "s"), ("as", "h"), ("h", "ash"), ("r", "ow"))
 
-  def bpeTrainSegmentOracle(): String = bpeSegmentOracle(trainedMergesSf0p01)
-
-  /** Oracle generated FROM THE SAME frozen merge sequence (the
-    * hilbert-oracle idiom: structurally incapable of diverging from the
-    * Scala loop) but via an INDEPENDENT formulation: each word's symbol
-    * list is encoded as a U+001F-joined string and each merge (a, b) is
-    * one `replace(s, 'a'||chr(31)||'b', 'ab')` — SQL replace scans
-    * left-to-right non-overlapping, which is exactly [[mergePair]]'s
-    * greedy fold semantics, so agreement cross-checks the fold against a
-    * second implementation rather than mirroring it textually.
-    * Single-quotes in merge symbols are SQL-escaped (doubled).
-    */
-  /** The replace-chain must not match ACROSS symbol boundaries: a bare
-    * `a||sep||b` pattern also fires when `b` is a proper PREFIX of the
-    * following symbol (merge ('c','o') on syms [s, c, or, e] would
-    * rewrite to [s, cor, e] while [[mergePair]] correctly leaves the
-    * word untouched — caught by review; the original corpus passed only
-    * because its 31 words contain no such collision). Fix: wrap the
-    * string in separators and match `sep||a||sep||b||sep`, replacing
-    * with `sep||ab||sep` — both symbols are then delimited on BOTH
-    * sides. Adjacent occurrences share a separator, so one replace pass
-    * skips every other member of an adjacency chain; for a != b the
-    * survivors are isolated between pass-1 rewrites and a SECOND pass
-    * merges them all (for a == b the pairing itself is ambiguous under
-    * string replace — rejected loudly below; [[mergePair]] remains the
-    * semantics of record).
-    */
-  def bpeSegmentOracle(merges: Seq[(String, String)] = frozenMerges): String = {
-    require(merges.forall { case (a, b) => a != b },
-      "bpeSegmentOracle: the replace-chain formulation cannot express " +
-        "greedy pairing for a merge with identical sides (a == b)")
-    def esc(s: String) = s.replace("'", "''")
-    val chain = merges.zipWithIndex.map { case ((a, b), k) =>
-      val pat = s"chr(31) || '${esc(a)}' || chr(31) || '${esc(b)}' || chr(31)"
-      val rep = s"chr(31) || '${esc(a + b)}' || chr(31)"
-      s"""m${k + 1} AS (SELECT word, freq,
-         |  replace(replace(s, $pat, $rep), $pat, $rep) AS s
-         |  FROM m$k)""".stripMargin
-    }
-    s"""WITH w AS (
-       |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-       |  WHERE len(w) > 0 GROUP BY 1),
-       |m0 AS (
-       |  SELECT word, freq,
-       |    chr(31) || array_to_string(list_transform(range(1, len(word) + 1),
-       |      i -> substr(word, CAST(i AS INT), 1)), chr(31)) || chr(31) AS s
-       |  FROM w WHERE strpos(word, chr(31)) = 0),
-       |${chain.mkString(",\n")}
-       |SELECT word, freq,
-       |  CAST(len(string_split(trim(s, chr(31)), chr(31))) AS BIGINT) AS n_syms,
-       |  trim(s, chr(31)) AS segmented
-       |FROM m${merges.length}""".stripMargin
-  }
 }

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.functions.Hashing
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -44,56 +43,7 @@ object DedupOps {
     base.unionAll(near).unionAll(exact)
   }
 
-  /** The [[augmented]] corpus body as DuckDB SQL (keep in lockstep) —
-    * factored so the plain and SAMPLED corpus CTEs compose it by
-    * construction, never by string surgery. */
-  private val augmentedBodySql: String =
-    """  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000 AS doc_id,
-      |         substr(text, strpos(text, ' ') + 1) AS text
-      |  FROM documents WHERE doc_id % 10 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000 AS doc_id, text
-      |  FROM documents WHERE doc_id % 15 = 0""".stripMargin
-
-  /** The same corpus as a DuckDB CTE (keep in lockstep with [[augmented]]). */
-  val augmentedSql: String =
-    s"corpus AS (\n$augmentedBodySql\n)"
-
-  /** [[augmentedSql]] restricted to the content-addressed doc sample of
-    * [[sampleBucketCol]]: seeded md5 bucket (0–255) < sampleBuckets. The
-    * final CTE is still named `corpus`, so every oracle built over the
-    * plain prefix composes unchanged over the sampled one. */
-  def sampledAugmentedSql(sampleBuckets: Int, seed: String): String =
-    s"""corpus_all AS (
-       |$augmentedBodySql
-       |),
-       |corpus AS (
-       |  SELECT * FROM corpus_all
-       |  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':r$seed'), 1, 2))::BIGINT < $sampleBuckets
-       |)""".stripMargin
-
-  /** CO-ADDRESSED sampled corpus: the bucket is hashed from the BASE id
-    * (`doc_id % 100000`), so an original and its planted near/exact
-    * copies sample TOGETHER — the form an evaluation needs when the
-    * estimand pairs a query with a specific truth document (retrieval
-    * recall: dropping a query's truth while keeping the query would
-    * turn corpus sampling into forced misses; co-addressing keeps each
-    * surviving query's truth in the sampled corpus by construction,
-    * exactly as every surviving truth pair of [[dedupRecallSampled]]
-    * keeps both endpoints). Final CTE still `corpus`, so every oracle
-    * over the plain prefix composes unchanged. */
-  def coSampledAugmentedSql(sampleBuckets: Int, seed: String): String =
-    s"""corpus_all AS (
-       |$augmentedBodySql
-       |),
-       |corpus AS (
-       |  SELECT * FROM corpus_all
-       |  WHERE ('0x' || substr(md5(CAST(doc_id % 100000 AS VARCHAR) || ':r$seed'), 1, 2))::BIGINT < $sampleBuckets
-       |)""".stripMargin
-
-  /** Spark twin of [[coSampledAugmentedSql]]'s predicate column (0–255
+  /** Spark twin of [[DedupOracles.coSampledAugmentedSql]]'s predicate column (0–255
     * bucket of the seeded md5 over the BASE id). */
   def coSampleBucketCol(seed: String): Column =
     conv(substring(md5(concat((col("doc_id") % 100000).cast("string"),
@@ -115,17 +65,6 @@ object DedupOps {
       .select((col("doc_id") + 200000).as("doc_id"), col("text"), col("source"))
     base.unionAll(near).unionAll(exact)
   }
-
-  /** The doc_id → source map of [[augmentedSourced]] as a DuckDB CTE
-    * body (keep in lockstep). */
-  val sourcedMapSql: String =
-    """  SELECT doc_id, source FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000 AS doc_id, source || '_mirror' AS source
-      |  FROM documents WHERE doc_id % 10 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000 AS doc_id, source
-      |  FROM documents WHERE doc_id % 15 = 0""".stripMargin
 
   /** B8a — exact dedup: group on the md5 digest of the content, keep the
     * smallest doc_id. One shuffle on 16-byte keys with map-side partials.
@@ -188,32 +127,6 @@ object DedupOps {
   private[graft] def agreement(sa: Column, sb: Column, numPerm: Int): Column =
     graft.functions.native.sigAgree(sa, sb).cast("double") / lit(numPerm.toDouble)
 
-  private val shinglesDuck =
-    """shingled AS (
-      |  SELECT doc_id,
-      |    [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)] AS shingles
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus)
-      |  WHERE len(toks) >= 3
-      |)""".stripMargin
-
-  /** `sigs` (doc_id, sig) over the `shingled` CTE: the DuckDB signature. */
-  private def sigsDuck(numPerm: Int): String =
-    s"""sigs AS (
-       |  SELECT doc_id,
-       |    list_transform(range(0, $numPerm), p ->
-       |      list_min(list_transform(shingles, s ->
-       |        ${Hashing.hash64Duck("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
-       |  FROM shingled)""".stripMargin
-
-  /** `bands` (doc_id, band, band_key) over `sigs`: the DuckDB banding. */
-  private def bandsDuck(numPerm: Int): String = {
-    val rows = numPerm / 4
-    s"""bands AS (
-       |  SELECT doc_id, b AS band,
-       |    array_to_string(sig[b * $rows + 1 : b * $rows + $rows], ',') AS band_key
-       |  FROM sigs, range(0, 4) t(b))""".stripMargin
-  }
-
   /** MinHash signature matrix in long form (doc_id, perm, minhash):
     * minhash_p(doc) = min over shingles of hash64(p || ':' || shingle).
     * Permutations are independent hash families derived by prefixing the
@@ -225,16 +138,6 @@ object DedupOps {
       .select(col("doc_id"), posexplode(col("sig")))
       .select(col("doc_id"), col("pos").cast("long").as("perm"),
         col("col").as("minhash"))
-
-  /** The signature matrix as DuckDB CTEs over a corpus+shingled prefix
-    * ([[corpusShingledCteOver]]): `sigs`, then `signatures` (doc_id,
-    * perm, minhash) in long form. */
-  private[graft] def minhashSignaturesCtesOver(prefix: String, numPerm: Int = 16): String =
-    s"""$prefix,
-       |${sigsDuck(numPerm)},
-       |signatures AS (
-       |  SELECT doc_id, perm, sig[perm + 1] AS minhash
-       |  FROM sigs, range(0, $numPerm) t(perm))""".stripMargin
 
   /** B8b — banded-LSH MinHash dedup: 4 bands × 4 rows. Docs sharing any
     * band key become candidates; candidates are verified with exact
@@ -345,23 +248,6 @@ object DedupOps {
         greatest(col("bucket_n") - maxBucket, lit(0L)).as("dropped_n"),
         (col("bucket_n") > maxBucket).as("overflowed"))
 
-  /** Same bands derivation as [[minhashPairsOracle]], aggregated to
-    * bucket sizes with the same cap arithmetic and top-k tiebreak. */
-  def minhashBucketStatsOracle(k: Int = 20,
-                               maxBucket: Int = defaultMaxBucket): String =
-    s"""$corpusShingledCte,
-       |${sigsDuck(16)},
-       |${bandsDuck(16)},
-       |sized AS (
-       |  SELECT band, band_key, CAST(count(*) AS BIGINT) AS bucket_n,
-       |    row_number() OVER (ORDER BY count(*) DESC, band ASC, band_key ASC) AS rn
-       |  FROM bands GROUP BY 1, 2)
-       |SELECT band, band_key, bucket_n,
-       |  CAST(bucket_n * (bucket_n - 1) // 2 AS BIGINT) AS cand_pairs,
-       |  CAST(greatest(bucket_n - $maxBucket, 0) AS BIGINT) AS dropped_n,
-       |  bucket_n > $maxBucket AS overflowed
-       |FROM sized WHERE rn <= $k""".stripMargin
-
   /** SPLIT-LEAKAGE audit — the split-integrity gate a training pipeline
     * runs before shipping data: near-dup pairs whose two documents land
     * in DIFFERENT train/valid/test splits (a test doc with a train
@@ -387,24 +273,6 @@ object DedupOps {
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).cast("long").as("n_pairs"),
         max("jaccard").as("max_jaccard"))
-
-  /** [[minhashPairsOracle]] embedded verbatim (nested-WITH idiom), pair
-    * sides labeled by [[TextOps.splitLabelDuck]] — both the pair
-    * derivation and the split rule stay single-sourced. A `def`, not a
-    * `val`: it references [[minhashPairsOracle]], declared later in
-    * this object (a val here would capture null at init). */
-  def splitLeakageOracle: String =
-    s"""WITH pairs AS (
-       |  SELECT doc_a, doc_b, jaccard FROM (
-       |$minhashPairsOracle
-       |  ) mp),
-       |lab AS (
-       |  SELECT ${TextOps.splitLabelDuck("doc_a")} AS split_a,
-       |    ${TextOps.splitLabelDuck("doc_b")} AS split_b, jaccard
-       |  FROM pairs)
-       |SELECT split_a, split_b, CAST(count(*) AS BIGINT) AS n_pairs,
-       |  max(jaccard) AS max_jaccard
-       |FROM lab WHERE split_a <> split_b GROUP BY 1, 2""".stripMargin
 
   /** LEAKAGE-SAFE SPLIT — the remedy the [[splitLeakage]] audit
     * motivates: assign train/valid/test CLUSTER-atomically instead of
@@ -459,17 +327,6 @@ object DedupOps {
     if (cl.count() <= broadcastMaxLabels) broadcast(cl) else cl
   }
 
-  /** [[clusterCtes]] (the shared pair-graph → component labeling chain)
-    * + the same left-join/coalesce/split rule — every piece of the
-    * assignment is single-sourced with the audit and cluster oracles. */
-  def leakageSafeSplitOracle: String =
-    s"""$clusterCtes,
-       |assigned AS (
-       |  SELECT d.doc_id, COALESCE(c.label, d.doc_id) AS sk
-       |  FROM corpus d LEFT JOIN clusters c ON d.doc_id = c.doc_id)
-       |SELECT doc_id, ${TextOps.splitLabelDuck("sk")} AS split
-       |FROM assigned""".stripMargin
-
   /** CROSS-SOURCE CONTAMINATION MATRIX — per unordered source pair, how
     * many verified near-dup pairs connect the two sources and the worst
     * Jaccard among them. The curation diagnostic that catches mirror
@@ -503,26 +360,6 @@ object DedupOps {
       .agg(count(lit(1)).cast("long").as("n_pairs"),
         max("jaccard").as("max_jaccard"))
   }
-
-  /** [[minhashPairsOracle]] verbatim (valid over the sourced corpus —
-    * same (doc_id, text) rows) + [[sourcedMapSql]] + the same
-    * least/greatest cell key. */
-  def crossSourceDupMatrixOracle: String =
-    s"""WITH srcpairs AS (
-       |  SELECT doc_a, doc_b, jaccard FROM (
-       |$minhashPairsOracle
-       |  ) mp),
-       |smap AS (
-       |$sourcedMapSql),
-       |cells AS (
-       |  SELECT least(a.source, b.source) AS source_x,
-       |    greatest(a.source, b.source) AS source_y, p.jaccard
-       |  FROM srcpairs p
-       |  JOIN smap a ON p.doc_a = a.doc_id
-       |  JOIN smap b ON p.doc_b = b.doc_id)
-       |SELECT source_x, source_y, CAST(count(*) AS BIGINT) AS n_pairs,
-       |  max(jaccard) AS max_jaccard
-       |FROM cells GROUP BY 1, 2""".stripMargin
 
   /** B8d — inverted-index n-gram Jaccard dedup: candidates are pairs
     * sharing ≥1 shingle (count-aggregated, arrays never shuffled), then
@@ -663,20 +500,6 @@ object DedupOps {
   def simhashShingles(corpus: DataFrame): DataFrame =
     shingled(corpus).select(col("doc_id"),
       graft.functions.native.simhash60(col("shingles")).as("simhash"))
-
-  // lazy: corpusShingledCte is declared later in this object
-  lazy val simhashShinglesOracle: String =
-    s"""$corpusShingledCte,
-       |tok AS (
-       |  SELECT doc_id, ${Hashing.hash64Duck("unnest(shingles)")} AS h
-       |  FROM shingled),
-       |votes AS (
-       |  SELECT doc_id, b,
-       |    sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM tok, range(0, 60) t(b) GROUP BY 1, 2)
-       |SELECT doc_id,
-       |  CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-       |FROM votes GROUP BY 1""".stripMargin
 
   /** B8c — SimHash near-dup pairs: equality join on 15-bit chunks
     * (pigeonhole guarantees recall for hamming ≤ 3), verify with popcount
@@ -880,39 +703,6 @@ object DedupOps {
       .groupBy("u").agg(min("l").as("l"))
   }
 
-  /** Clusters oracle: same pair graph, components via a recursive CTE
-    * (label-set propagation, min at the end) — an independent fixpoint
-    * formulation of connectivity, not a mirror of the Spark iteration.
-    */
-  /** Shared cluster-labeling CTE chain (pair candidates → verified pairs
-    * → symmetric edges → recursive label propagation → `clusters`):
-    * [[nearDupClustersOracle]] and [[dedupCanonicalOracle]] both compose
-    * onto this prefix, so the labeling can never silently diverge.
-    */
-  private lazy val clusterCtes: String = {
-    // compose over the shared pairs CTE chain, never by string surgery
-    // on its final SELECT: `pairs` carries (doc_a, doc_b, jaccard) and
-    // edges read the id columns
-    val pairsCtes = minhashPairsCtesOver(corpusShingledCte)
-      .replaceFirst("(?s)^WITH ", "")
-    s"""WITH RECURSIVE $pairsCtes,
-       |edges AS (
-       |  SELECT doc_a AS a, doc_b AS b FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS a, doc_a AS b FROM pairs),
-       |lbl(doc, l) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT e.b, lbl.l FROM lbl JOIN edges e ON lbl.doc = e.a),
-       |clusters AS (
-       |  SELECT doc AS doc_id, CAST(min(l) AS BIGINT) AS label
-       |  FROM lbl GROUP BY doc)""".stripMargin
-  }
-
-  lazy val nearDupClustersOracle: String =
-    s"""$clusterCtes
-       |SELECT doc_id, label FROM clusters""".stripMargin
-
   /** Dedup AUDIT histogram over [[nearDupClusters]] — the operational
     * readout a dedup pipeline publishes after each run: for each
     * near-dup cluster size, how many clusters have it and how many
@@ -928,30 +718,6 @@ object DedupOps {
       .groupBy("size").agg(
         count(lit(1)).as("n_clusters"),
         (count(lit(1)) * col("size")).as("n_docs"))
-
-  lazy val clusterSizeHistogramOracle: String =
-    s"""$clusterCtes,
-       |sized AS (
-       |  SELECT label, CAST(count(*) AS BIGINT) AS size
-       |  FROM clusters GROUP BY label)
-       |SELECT size, CAST(count(*) AS BIGINT) AS n_clusters,
-       |  CAST(count(*) * size AS BIGINT) AS n_docs
-       |FROM sized GROUP BY size""".stripMargin
-
-  lazy val dedupCanonicalOracle: String =
-    s"""$clusterCtes,
-       |sized AS (
-       |  SELECT c.label, c.doc_id, CAST(length(a.text) AS BIGINT) AS len
-       |  FROM clusters c JOIN corpus a ON c.doc_id = a.doc_id),
-       |ranked AS (
-       |  SELECT label, doc_id, len,
-       |    count(*) OVER (PARTITION BY label) AS cluster_size,
-       |    row_number() OVER (PARTITION BY label
-       |      ORDER BY len DESC, doc_id ASC) AS rn
-       |  FROM sized)
-       |SELECT label, doc_id AS rep_doc_id,
-       |  CAST(cluster_size AS BIGINT) AS cluster_size, len AS rep_len
-       |FROM ranked WHERE rn = 1""".stripMargin
 
   /** B8j — inter-document PARAGRAPH dedup (the CCNet/RefinedWeb pipeline
     * stage): segment every document, keep only the globally FIRST
@@ -969,7 +735,7 @@ object DedupOps {
   def paragraphDedup(documents: DataFrame, sep: String = ". "): DataFrame = {
     // `sep` is a LITERAL separator (regex-quoted for the split, passed
     // verbatim to the reassembly), so segmentation and reassembly can
-    // never diverge; [[paragraphDedupOracle]] derives from the same value.
+    // never diverge; [[DedupOracles.paragraphDedupOracle]] derives from the same value.
     val base = documents.select(col("doc_id"),
       filter(split(col("text"), java.util.regex.Pattern.quote(sep), -1),
         s => length(s) > 0).as("segs"))
@@ -990,32 +756,6 @@ object DedupOps {
           expr("transform(array_sort(collect_list(struct(pos, seg))), x -> x.seg)"))
           .as("text_dedup"))
       .select(col("doc_id"), col("text_dedup"), col("n_kept"), col("n_total"))
-  }
-
-  /** Paragraph-dedup oracle: same literal segmentation, same global
-    * first-occurrence rank, string_agg reassembly ordered by position —
-    * both sides derive the separator from the same `sep` value.
-    * The positional unnest is bounded by the measured max segment count.
-    */
-  def paragraphDedupOracle(sep: String = ". "): String = {
-    val q = sep.replace("'", "''")
-    s"""WITH arrs AS (
-      |  SELECT doc_id, list_filter(string_split(text, '$q'), s -> len(s) > 0) AS arr
-      |  FROM documents),
-      |segs AS (
-      |  SELECT doc_id, CAST(len(arr) AS BIGINT) AS n_total, i AS pos, arr[i] AS seg
-      |  FROM arrs, (SELECT unnest(range(1,
-      |         (SELECT CAST(max(len(arr)) AS BIGINT) + 1 FROM arrs))) AS i) t
-      |  WHERE len(arr) > 0 AND i <= len(arr)),
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY md5(seg) ORDER BY doc_id, pos) AS rn
-      |  FROM segs)
-      |SELECT doc_id,
-      |  string_agg(seg, '$q' ORDER BY pos) AS text_dedup,
-      |  count(*) AS n_kept,
-      |  n_total
-      |FROM ranked WHERE rn = 1
-      |GROUP BY doc_id, n_total""".stripMargin
   }
 
   /** WITHIN-document segment dedup (the per-document half of CCNet's
@@ -1048,28 +788,6 @@ object DedupOps {
       .select(col("doc_id"),
         concat_ws(sep, expr("transform(kept, x -> x.seg)")).as("text_dedup"),
         size(col("kept")).cast("long").as("n_kept"), col("n_total"))
-
-  /** Same literal-separator derivation contract as [[paragraphDedupOracle]];
-    * the keep rule mirrors as `list_position(arr, seg) = pos` (both
-    * 1-based first-occurrence indices).
-    */
-  def lineDedupOracle(sep: String = ". "): String = {
-    val q = sep.replace("'", "''")
-    s"""WITH arrs AS (
-       |  SELECT doc_id, list_filter(string_split(text, '$q'), s -> len(s) > 0) AS arr
-       |  FROM documents),
-       |segs AS (
-       |  SELECT doc_id, arr, CAST(len(arr) AS BIGINT) AS n_total, i AS pos, arr[i] AS seg
-       |  FROM arrs, (SELECT unnest(range(1,
-       |         (SELECT CAST(max(len(arr)) AS BIGINT) + 1 FROM arrs))) AS i) t
-       |  WHERE len(arr) > 0 AND i <= len(arr))
-       |SELECT doc_id,
-       |  string_agg(seg, '$q' ORDER BY pos) AS text_dedup,
-       |  count(*) AS n_kept,
-       |  n_total
-       |FROM segs WHERE list_position(arr, seg) = pos
-       |GROUP BY doc_id, n_total""".stripMargin
-  }
 
   /** B8p-strip — BOILERPLATE removal by corpus document frequency (the
     * CCNet/RefinedWeb line-dedup step): drop every segment that appears
@@ -1145,32 +863,6 @@ object DedupOps {
       .select(col("doc_id"), col("n_total"),
         posexplode(col("segs")).as(Seq("pos", "seg")))
       .withColumn("h", md5(col("seg")))
-
-  /** Boilerplate-strip oracle over the [[augmentedSql]] corpus: same
-    * literal segmentation, same digest-keyed DF threshold, string_agg
-    * reassembly ordered by position — separator and threshold both
-    * derive from the same values as the Spark side. */
-  def boilerplateStripOracle(sep: String = ". ", maxDf: Long = 1L): String = {
-    val q = sep.replace("'", "''")
-    s"""WITH $augmentedSql,
-      |arrs AS (
-      |  SELECT doc_id, list_filter(string_split(text, '$q'), s -> len(s) > 0) AS arr
-      |  FROM corpus),
-      |segs AS (
-      |  SELECT doc_id, CAST(len(arr) AS BIGINT) AS n_total, i AS pos, arr[i] AS seg
-      |  FROM arrs, (SELECT unnest(range(1,
-      |         (SELECT CAST(max(len(arr)) AS BIGINT) + 1 FROM arrs))) AS i) t
-      |  WHERE len(arr) > 0 AND i <= len(arr)),
-      |rare AS (
-      |  SELECT md5(seg) AS h FROM segs
-      |  GROUP BY 1 HAVING count(DISTINCT doc_id) <= $maxDf)
-      |SELECT doc_id,
-      |  string_agg(seg, '$q' ORDER BY pos) AS text_clean,
-      |  count(*) AS n_kept,
-      |  n_total
-      |FROM segs WHERE md5(seg) IN (SELECT h FROM rare)
-      |GROUP BY doc_id, n_total""".stripMargin
-  }
 
   /** B8k — benchmark DECONTAMINATION (the GPT-3/PaLM training-data
     * hygiene step): drop every training document sharing at least one
@@ -1281,63 +973,6 @@ object DedupOps {
           lit("")).as("text_clean"))
   }
 
-  /** Positional gram CTE twin of [[gramCtes]] (positions KEPT — spans
-    * need them) + the same interval-merge arithmetic as the Spark side. */
-  private def gramPosCtes(n: Int): String =
-    s"""WITH gpos AS (
-       |  SELECT doc_id, CAST(i AS BIGINT) AS i,
-       |    md5(array_to_string(toks[i:i+${n - 1}], ' ')) AS g
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |       (SELECT unnest(range(1,
-       |          (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) FROM documents)))
-       |        AS i) t
-       |  WHERE len(toks) >= $n AND i <= len(toks) - ${n - 1}),
-       |bench AS (SELECT DISTINCT g FROM gpos WHERE doc_id % 50 = 0),
-       |hits AS (
-       |  SELECT doc_id, i, i + ${n - 1} AS e FROM gpos
-       |  WHERE doc_id % 50 <> 0 AND g IN (SELECT g FROM bench)),
-       |marked AS (
-       |  SELECT doc_id, i, e,
-       |    CASE WHEN i > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY i
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1) + 1
-       |      THEN 1 ELSE 0 END AS newgrp
-       |  FROM hits),
-       |grouped AS (
-       |  SELECT doc_id, i, e,
-       |    sum(newgrp) OVER (PARTITION BY doc_id ORDER BY i
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-       |  FROM marked),
-       |spans AS (
-       |  SELECT doc_id, min(i) AS span_start, max(e) AS span_end
-       |  FROM grouped GROUP BY doc_id, grp)""".stripMargin
-
-  def decontaminateSpansOracle(n: Int = 8): String =
-    s"""${gramPosCtes(n)}
-       |SELECT doc_id, span_start, span_end,
-       |  span_end - span_start + 1 AS span_toks
-       |FROM spans""".stripMargin
-
-  def decontaminateSurgicalOracle(n: Int = 8): String =
-    s"""${gramPosCtes(n)},
-       |tok AS (
-       |  SELECT doc_id, CAST(i AS BIGINT) AS i, toks[i] AS t
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-       |        WHERE doc_id % 50 <> 0),
-       |       (SELECT unnest(range(1,
-       |          (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) FROM documents) + 1))
-       |        AS i) r
-       |  WHERE i <= len(toks)),
-       |kept AS (
-       |  SELECT tok.doc_id, i, t FROM tok
-       |  WHERE NOT EXISTS (SELECT 1 FROM spans s
-       |    WHERE s.doc_id = tok.doc_id AND i BETWEEN s.span_start AND s.span_end)),
-       |joined AS (
-       |  SELECT doc_id, string_agg(t, ' ' ORDER BY i) AS text_clean
-       |  FROM kept GROUP BY doc_id)
-       |SELECT d.doc_id, coalesce(j.text_clean, '') AS text_clean
-       |FROM (SELECT doc_id FROM documents WHERE doc_id % 50 <> 0) d
-       |LEFT JOIN joined j USING (doc_id)""".stripMargin
-
   /** B8k-frac — FRACTIONAL contamination scoring: [[decontaminate]] is
     * the binary gate; this is the metric pipelines actually report (and
     * threshold more finely than any-overlap): per training document, the
@@ -1359,38 +994,6 @@ object DedupOps {
         sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .withColumn("frac", col("n_hit").cast("double") / col("n_grams"))
   }
-
-  /** Shared gram-digest CTE prefix (`grams` distinct per doc + `bench`):
-    * [[decontaminateOracle]] and [[contaminationScoreOracle]] compose
-    * onto it — lockstep with [[gramDigests]]. */
-  private def gramCtes(n: Int): String =
-    s"""WITH grams AS (
-       |  SELECT DISTINCT doc_id, md5(array_to_string(toks[i:i+${n - 1}], ' ')) AS g
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |       (SELECT unnest(range(1,
-       |          (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) FROM documents)))
-       |        AS i) t
-       |  WHERE len(toks) >= $n AND i <= len(toks) - ${n - 1}),
-       |bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 50 = 0)""".stripMargin
-
-  def decontaminateOracle(n: Int = 8): String =
-    s"""${gramCtes(n)},
-       |contaminated AS (
-       |  SELECT DISTINCT doc_id FROM grams
-       |  WHERE doc_id % 50 <> 0 AND g IN (SELECT g FROM bench))
-       |SELECT doc_id, lang, source FROM documents
-       |WHERE doc_id % 50 <> 0
-       |  AND doc_id NOT IN (SELECT doc_id FROM contaminated)""".stripMargin
-
-  def contaminationScoreOracle(n: Int = 8): String =
-    s"""${gramCtes(n)}
-       |SELECT doc_id, count(*) AS n_grams,
-       |  CAST(sum(CASE WHEN g IN (SELECT g FROM bench) THEN 1 ELSE 0 END)
-       |    AS BIGINT) AS n_hit,
-       |  CAST(sum(CASE WHEN g IN (SELECT g FROM bench) THEN 1 ELSE 0 END)
-       |    AS DOUBLE) / count(*) AS frac
-       |FROM grams WHERE doc_id % 50 <> 0
-       |GROUP BY doc_id""".stripMargin
 
   /** B8k-bloom — bloom-prefiltered decontamination: byte-identical output
     * to [[decontaminate]] (the oracle is shared), but the plan is the one
@@ -1463,24 +1066,6 @@ object DedupOps {
       .withColumn("dup_frac",
         col("dup_grams").cast("double") / col("n_grams").cast("double"))
   }
-
-  /** Same formulation in DuckDB: bounded positional unnest, identical
-    * grouping, one IEEE division on exactly-counted integers. */
-  def substringDupOracle(k: Int = 20): String =
-    s"""WITH pos AS (
-       |  SELECT doc_id, md5(substr(text, i, $k)) AS g
-       |  FROM documents, (SELECT unnest(range(1,
-       |         (SELECT CAST(max(length(text)) AS BIGINT) - ${k - 1} + 1 FROM documents)))
-       |       AS i) t
-       |  WHERE length(text) >= $k AND i <= length(text) - ${k - 1}),
-       |local AS (SELECT doc_id, g, count(*) AS m FROM pos GROUP BY 1, 2),
-       |tot AS (SELECT *, sum(m) OVER (PARTITION BY g) AS c FROM local)
-       |SELECT doc_id,
-       |  CAST(sum(m) AS BIGINT) AS n_grams,
-       |  CAST(sum(CASE WHEN c > 1 THEN m ELSE 0 END) AS BIGINT) AS dup_grams,
-       |  CAST(CAST(sum(CASE WHEN c > 1 THEN m ELSE 0 END) AS BIGINT) AS DOUBLE)
-       |    / CAST(CAST(sum(m) AS BIGINT) AS DOUBLE) AS dup_frac
-       |FROM tot GROUP BY doc_id""".stripMargin
 
   /** B8s — ExactSubstr span REMOVAL (the transformation [[substringDup]]
     * gates; Lee et al. 2022 §4.1): delete every duplicated k-char gram
@@ -1558,42 +1143,6 @@ object DedupOps {
         col("clean_text"))
   }
 
-  /** Span-removal oracle — an INDEPENDENT per-character formulation (not a
-    * mirror of the interval fold): a char survives iff no duplicated gram
-    * occurrence in the same document covers it; survivors are re-joined by
-    * position with string_agg. Clearly correct; efficiency irrelevant at
-    * oracle scale.
-    */
-  def substringDedupOracle(k: Int = 20): String =
-    s"""WITH pos AS (
-       |  SELECT doc_id, i, md5(substr(text, i, $k)) AS g
-       |  FROM documents, (SELECT unnest(range(1,
-       |         (SELECT CAST(max(length(text)) AS BIGINT) - ${k - 1} + 1 FROM documents)))
-       |       AS i) t
-       |  WHERE length(text) >= $k AND i <= length(text) - ${k - 1}),
-       |marked AS (
-       |  SELECT doc_id, i FROM (
-       |    SELECT doc_id, i,
-       |      row_number() OVER (PARTITION BY g ORDER BY doc_id, i) AS rn
-       |    FROM pos)
-       |  WHERE rn > 1),
-       |chars AS (
-       |  SELECT d.doc_id, d.text, c
-       |  FROM documents d, (SELECT unnest(range(1,
-       |         (SELECT CAST(max(length(text)) AS BIGINT) + 1 FROM documents))) AS c) t
-       |  WHERE c <= length(d.text)),
-       |kept AS (
-       |  SELECT ch.doc_id, ch.text, ch.c FROM chars ch
-       |  WHERE NOT EXISTS (SELECT 1 FROM marked m
-       |    WHERE m.doc_id = ch.doc_id AND m.i <= ch.c AND ch.c <= m.i + ${k - 1}))
-       |SELECT d.doc_id,
-       |  CAST(length(coalesce(kt.clean_text, '')) AS BIGINT) AS clean_len,
-       |  coalesce(kt.clean_text, '') AS clean_text
-       |FROM documents d
-       |LEFT JOIN (
-       |  SELECT doc_id, string_agg(substr(text, c, 1), '' ORDER BY c) AS clean_text
-       |  FROM kept GROUP BY doc_id) kt ON d.doc_id = kt.doc_id""".stripMargin
-
   /** Group-level MinHash sketch: the signature of a SET of documents is
     * the elementwise min of the member signatures (min is associative —
     * equal to hashing the union of their shingles). Pure built-ins:
@@ -1645,28 +1194,6 @@ object DedupOps {
       .select(col("doc_b").as("doc_id")).distinct()
     exactKeepers.join(fuzzyDrops, Seq("doc_id"), "left_anti")
   }
-
-  lazy val dedupPipelineOracle: String =
-    s"""$corpusShingledCte,
-       |exact_keepers AS (
-       |  SELECT min(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
-       |${sigsDuck(16)},
-       |${bandsDuck(16)},
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-       |sets AS (SELECT doc_id, list_distinct(shingles) AS ss FROM shingled),
-       |fuzzy_drops AS (
-       |  SELECT DISTINCT doc_b AS doc_id FROM (
-       |    SELECT cand.doc_a, cand.doc_b,
-       |      CAST(len(list_intersect(a.ss, b.ss)) AS DOUBLE) /
-       |        (len(a.ss) + len(b.ss) - len(list_intersect(a.ss, b.ss))) AS jaccard
-       |    FROM cand JOIN sets a ON cand.doc_a = a.doc_id
-       |              JOIN sets b ON cand.doc_b = b.doc_id)
-       |  WHERE jaccard >= 0.9)
-       |SELECT doc_id FROM exact_keepers
-       |WHERE doc_id NOT IN (SELECT doc_id FROM fuzzy_drops)""".stripMargin
 
   /** The persisted dedup INDEX for a corpus slice: one row per document,
     * (doc_id, sig ARRAY<BIGINT>) — the full MinHash signature. This is
@@ -1749,165 +1276,6 @@ object DedupOps {
     }
   }
 
-  /** Incremental-dedup oracle over the same partitioned corpus: index =
-    * the base documents (doc_id < 100000 in [[augmented]]), delta = the
-    * injected copies; identical banding, signature-agreement estimator,
-    * min-candidate labeling.
-    */
-  def dedupIncrementalOracle(minEst: Double = 0.5, numPerm: Int = 16): String =
-    s"""$corpusShingledCte,
-       |${sigsDuck(numPerm)},
-       |${bandsDuck(numPerm)},
-       |ibands AS (SELECT * FROM bands WHERE doc_id < 100000),
-       |dbands AS (SELECT * FROM bands WHERE doc_id >= 100000),
-       |cand AS (
-       |  SELECT d.doc_id AS delta_id, i.doc_id AS cand_id
-       |  FROM dbands d JOIN ibands i ON d.band = i.band AND d.band_key = i.band_key
-       |  UNION
-       |  SELECT a.doc_id AS delta_id, b.doc_id AS cand_id
-       |  FROM dbands a JOIN dbands b
-       |    ON a.band = b.band AND a.band_key = b.band_key AND b.doc_id < a.doc_id),
-       |est AS (
-       |  SELECT delta_id, cand_id,
-       |    CAST(len(list_filter(range(1, ${numPerm + 1}),
-       |      i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / $numPerm.0 AS est
-       |  FROM cand
-       |  JOIN sigs sa ON cand.delta_id = sa.doc_id
-       |  JOIN sigs sb ON cand.cand_id = sb.doc_id),
-       |dups AS (
-       |  SELECT delta_id, min(cand_id) AS dup_of
-       |  FROM est WHERE est >= $minEst GROUP BY 1)
-       |SELECT d.doc_id, coalesce(dup_of, -1) AS dup_of,
-       |  dup_of IS NOT NULL AS is_dup
-       |FROM (SELECT doc_id FROM corpus WHERE doc_id >= 100000) d
-       |LEFT JOIN dups ON d.doc_id = dups.delta_id""".stripMargin
-
-  // ---- DuckDB oracle SQL (kept in lockstep with the Spark ops above) ----
-
-  /** Shared CTE prefix (corpus + shingled) over ANY corpus-producing CTE
-    * chain whose final CTE is named `corpus` — the composition point the
-    * sampled-recall oracle uses to re-derive every pair oracle over the
-    * sampled corpus without touching their SQL. */
-  def corpusShingledCteOver(corpusCtes: String): String =
-    s"WITH $corpusCtes,\n$shinglesDuck"
-
-  /** Shared CTE prefix: corpus + shingled. */
-  val corpusShingledCte: String = corpusShingledCteOver(augmentedSql)
-
-  /** Shared CTE prefix over the plain `documents` table (no injected
-    * copies): corpus + shingled. */
-  private[graft] val documentsShingledCte: String =
-    corpusShingledCteOver("corpus AS (SELECT doc_id, text FROM documents)")
-
-  val exactDedupSql: String =
-    s"""WITH ${augmentedSql}
-       |SELECT md5(text) AS fp, min(doc_id) AS keeper_id, count(*) AS n_copies
-       |FROM corpus GROUP BY 1""".stripMargin
-
-  val minhashSignaturesOracle: String =
-    s"""${minhashSignaturesCtesOver(corpusShingledCte)}
-       |SELECT doc_id, perm, minhash FROM signatures""".stripMargin
-
-  private val jaccardDuck =
-    """sizes AS (
-      |  SELECT doc_id, CAST(len(list_distinct(shingles)) AS BIGINT) AS n_sh
-      |  FROM shingled),
-      |inv AS (
-      |  SELECT doc_id, unnest(list_distinct(shingles)) AS shingle FROM shingled),
-      |common AS (
-      |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS n_common
-      |  FROM inv x JOIN inv y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      |  GROUP BY 1, 2),
-      |jac AS (
-      |  SELECT doc_a, doc_b,
-      |    CAST(n_common AS DOUBLE) / (a.n_sh + b.n_sh - n_common) AS jaccard
-      |  FROM common
-      |  JOIN sizes a ON common.doc_a = a.doc_id
-      |  JOIN sizes b ON common.doc_b = b.doc_id)""".stripMargin
-
-  /** The banded-LSH pair derivation as a reusable CTE chain ending in a
-    * `pairs` CTE — [[minhashPairsOracleOver]] selects from it directly;
-    * the triplet-mining oracle composes negatives on top of it. */
-  def minhashPairsCtesOver(prefix: String): String =
-    s"""$prefix,
-       |${sigsDuck(16)},
-       |${bandsDuck(16)},
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-       |$jaccardDuck,
-       |pairs AS (
-       |  SELECT jac.doc_a, jac.doc_b, jaccard
-       |  FROM jac JOIN cand ON jac.doc_a = cand.doc_a AND jac.doc_b = cand.doc_b
-       |  WHERE jaccard >= 0.5)""".stripMargin
-
-  /** [[minhashPairsOracle]] parameterized over its corpus+shingled CTE
-    * prefix ([[corpusShingledCteOver]]) — the sampled-recall oracle
-    * composes the same SQL over the sampled corpus. */
-  def minhashPairsOracleOver(prefix: String): String =
-    s"""${minhashPairsCtesOver(prefix)}
-       |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin
-
-  val minhashPairsOracle: String = minhashPairsOracleOver(corpusShingledCte)
-
-  /** [[ngramJaccardOracle]] parameterized over its CTE prefix (same
-    * composition point as [[minhashPairsOracleOver]]). */
-  def ngramJaccardOracleOver(prefix: String): String =
-    s"""$prefix,
-       |$jaccardDuck
-       |SELECT doc_a, doc_b, jaccard FROM jac WHERE jaccard >= 0.5""".stripMargin
-
-  val ngramJaccardOracle: String = ngramJaccardOracleOver(corpusShingledCte)
-
-  /** Explode-form simhash oracle — same votes/bits as [[simhash]], written
-    * as plain unnest+groupBy SQL (clearly correct; efficiency irrelevant
-    * for the oracle).
-    */
-  val simhashOracle: String =
-    s"""WITH ${augmentedSql},
-       |tok AS (
-       |  SELECT doc_id, ${Hashing.hash64Duck("unnest(string_split(text, ' '))")} AS h
-       |  FROM corpus),
-       |votes AS (
-       |  SELECT doc_id, b,
-       |    sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM tok, range(0, 60) t(b) GROUP BY 1, 2)
-       |SELECT doc_id,
-       |  CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-       |FROM votes GROUP BY 1""".stripMargin
-
-  /** Shared candidate CTE chain (corpus → simhash → chunk join → `pairs`):
-    * [[simhashPairsOracle]] and [[editDistPairsOracle]] both compose onto
-    * this prefix, so the candidate generation can never silently diverge
-    * between the two oracles.
-    */
-  private val simhashCandidateCtes: String =
-    s"""WITH ${augmentedSql},
-       |tok AS (
-       |  SELECT doc_id, ${Hashing.hash64Duck("unnest(string_split(text, ' '))")} AS h
-       |  FROM corpus),
-       |votes AS (
-       |  SELECT doc_id, b,
-       |    sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM tok, range(0, 60) t(b) GROUP BY 1, 2),
-       |sigs AS (
-       |  SELECT doc_id,
-       |    CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-       |  FROM votes GROUP BY 1),
-       |chunks AS (
-       |  SELECT doc_id, simhash, i AS chunk_id, (simhash >> (i * 15)) & 32767 AS chunk
-       |  FROM sigs, range(0, 4) t(i)),
-       |pairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |    CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk_id = b.chunk_id AND a.chunk = b.chunk AND a.doc_id < b.doc_id)""".stripMargin
-
-  val simhashPairsOracle: String =
-    s"""$simhashCandidateCtes
-       |SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3""".stripMargin
-
   /** B8 — edit-distance verification of SimHash candidates: unit-cost
     * Levenshtein over a fixed prefix, the second-opinion check a dedup
     * pipeline runs where token-level similarity can false-positive
@@ -1930,19 +1298,6 @@ object DedupOps {
         levenshtein(col("pa"), col("pb")).cast("long").as("prefix_editdist"))
       .filter(col("prefix_editdist") <= maxDist)
   }
-
-  /** [[simhashCandidateCtes]] plus the edit-distance verification — the
-    * candidate CTE chain is shared by construction, not string surgery. */
-  def editDistPairsOracle(maxDist: Int = 20, prefixLen: Int = 40): String =
-    s"""$simhashCandidateCtes
-       |SELECT doc_a, doc_b, hamming,
-       |  CAST(levenshtein(ta.prefix, tb.prefix) AS BIGINT) AS prefix_editdist
-       |FROM (SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3) cand
-       |JOIN (SELECT doc_id, substr(text, 1, $prefixLen) AS prefix FROM corpus) ta
-       |  ON doc_a = ta.doc_id
-       |JOIN (SELECT doc_id, substr(text, 1, $prefixLen) AS prefix FROM corpus) tb
-       |  ON doc_b = tb.doc_id
-       |WHERE levenshtein(ta.prefix, tb.prefix) <= $maxDist""".stripMargin
 
   /** Measured DEDUP RECALL — the [[graft.ops.SimilarityOps.annRecall]]
     * sibling for the lexical pipeline: how many of the TRUE
@@ -2020,40 +1375,9 @@ object DedupOps {
 
   /** The content-addressed sample bucket (0–255) of a doc — seeded md5
     * over the id, in lockstep with the DuckDB predicate inside
-    * [[sampledAugmentedSql]]. */
+    * [[DedupOracles.sampledAugmentedSql]]. */
   def sampleBucketCol(seed: String): Column =
     conv(substring(md5(concat(col("doc_id").cast("string"), lit(s":r$seed"))),
       1, 2), 16, 10).cast("long")
 
-  /** Both pair oracles embedded verbatim as nested-WITH CTE subqueries
-    * (the annRecall/outputDiff idiom), joined and counted by the same
-    * arithmetic — parameterized over the corpus prefix and lead columns
-    * so the plain and sampled recall oracles are ONE derivation. */
-  private def recallOracleOver(prefix: String, leadCols: String): String =
-    s"""WITH truth AS (
-       |SELECT doc_a, doc_b FROM (
-       |${ngramJaccardOracleOver(prefix)}
-       |) tq),
-       |found AS (
-       |SELECT doc_a, doc_b FROM (
-       |${minhashPairsOracleOver(prefix)}
-       |) fq),
-       |agg AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n_truth,
-       |    CAST(COALESCE(sum(CASE WHEN f.doc_a IS NOT NULL THEN 1 ELSE 0 END),
-       |      0) AS BIGINT) AS n_found
-       |  FROM truth t LEFT JOIN found f
-       |    ON t.doc_a = f.doc_a AND t.doc_b = f.doc_b)
-       |SELECT ${leadCols}n_truth, n_found,
-       |  CAST(n_found AS DOUBLE) / NULLIF(CAST(n_truth AS DOUBLE), 0.0)
-       |    AS recall
-       |FROM agg""".stripMargin
-
-  def dedupRecallOracle(): String = recallOracleOver(corpusShingledCte, "")
-
-  def dedupRecallSampledOracle(sampleBuckets: Int = 128,
-                               seed: String = "42"): String =
-    recallOracleOver(
-      corpusShingledCteOver(sampledAugmentedSql(sampleBuckets, seed)),
-      s"CAST($sampleBuckets AS BIGINT) AS sample_buckets, ")
 }

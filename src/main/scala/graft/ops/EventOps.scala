@@ -63,23 +63,6 @@ object EventOps {
         min("ts_us").as("start_us"), max("ts_us").as("end_us"))
   }
 
-  val sessionizeOracle: String =
-    """WITH e AS (
-      |  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-      |flagged AS (
-      |  SELECT user_id, event_id, ts_us,
-      |    CASE WHEN lag(ts_us) OVER w IS NULL
-      |           OR ts_us - lag(ts_us) OVER w > 3600000000 THEN 1 ELSE 0 END AS new_session
-      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-      |sessions AS (
-      |  SELECT user_id, ts_us,
-      |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-      |  FROM flagged)
-      |SELECT user_id, session_idx, count(*) AS n_events,
-      |  min(ts_us) AS start_us, max(ts_us) AS end_us
-      |FROM sessions GROUP BY 1, 2""".stripMargin
-
   /** Sketch surface — approximate distinct users per event type via
     * Spark's native HyperLogLog++ (`approx_count_distinct`). Sketches are
     * THE cardinality tool at 100 TB (exact distinct = full shuffle of the
@@ -128,25 +111,6 @@ object EventOps {
       .select(unix_micros(col("window.start")).as("window_start_us"),
         col("event_type"), col("n_events"))
 
-  /** Oracle: epoch-aligned floor division in micros — an independent
-    * integer-arithmetic formulation of the same window assignment.
-    */
-  val tumblingCountsOracle: String =
-    """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
-      |  event_type, count(*) AS n_events,
-      |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-      |FROM events GROUP BY 1, 2""".stripMargin
-
-  /** Sliding oracle: each event contributes to the 2 slide-aligned
-    * windows covering it (i = 0 is the window starting at its own slide
-    * bucket, i = 1 the one 30m earlier).
-    */
-  val slidingCountsOracle: String =
-    """SELECT ((epoch_us(ts) // 1800000000) - i) * 1800000000 AS window_start_us,
-      |  event_type, count(*) AS n_events
-      |FROM events CROSS JOIN (SELECT unnest([0, 1]) AS i)
-      |GROUP BY 1, 2""".stripMargin
-
   /** Set difference — users active in the first half of the window but
     * silent in the second (churn). `except` is a real relational
     * operator, not client-side set math: Spark plans distinct + LEFT
@@ -177,20 +141,6 @@ object EventOps {
     val (first, second) = behaviorKeys(events)
     first.intersect(second)
   }
-
-  private val behaviorKeysSql =
-    """SELECT user_id, event_type, CAST(floor(value) AS BIGINT) AS value_band
-      |FROM events WHERE epoch_us(ts)""".stripMargin
-
-  val churnedUsersOracle: String =
-    s"""$behaviorKeysSql < 1705363200000000
-       |EXCEPT
-       |$behaviorKeysSql >= 1705363200000000""".stripMargin
-
-  val retainedUsersOracle: String =
-    s"""$behaviorKeysSql < 1705363200000000
-       |INTERSECT
-       |$behaviorKeysSql >= 1705363200000000""".stripMargin
 
   /** B11 — aggregate over the extracted JSON property. Integer sums only
     * (double sums are partition-order dependent and would break the
@@ -226,21 +176,6 @@ object EventOps {
           col("ts_us") - col("asof_v_ts") <= windowUs, 1L).otherwise(0L)
           .as("converted"))
   }
-
-  def funnelConversionOracle(windowUs: Long = 3600L * 1000 * 1000): String =
-    s"""WITH e AS (
-      |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type
-      |  FROM events),
-      |v AS (
-      |  SELECT user_id, ts_us, max(ts_us) AS v_ts
-      |  FROM e WHERE event_type = 'view' GROUP BY 1, 2)
-      |SELECT p.event_id, p.user_id, p.ts_us,
-      |  v.v_ts AS last_view_us,
-      |  CAST(CASE WHEN v.v_ts IS NOT NULL
-      |    AND p.ts_us - v.v_ts <= $windowUs THEN 1 ELSE 0 END AS BIGINT)
-      |    AS converted
-      |FROM (SELECT * FROM e WHERE event_type = 'purchase') p
-      |ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts_us >= v.ts_us""".stripMargin
 
   /** CDC changelog apply — the lakehouse MERGE shape. The events stream is
     * read as a changelog keyed by `user_id`: `event_type = 'error'` is a
@@ -358,26 +293,6 @@ object EventOps {
     snapshot.filter(col("last_op").isNull || col("last_op") =!= "delete")
       .select("key", "c_name", "acctbal", "last_op")
 
-  val cdcUpsertOracle: String =
-    """WITH latest AS (
-      |  SELECT user_id AS chg_key,
-      |    CASE WHEN event_type = 'error' THEN 'delete' ELSE 'upsert' END
-      |      AS last_op,
-      |    value AS new_bal
-      |  FROM (
-      |    SELECT *, row_number() OVER
-      |      (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id DESC)
-      |      AS rn
-      |    FROM events)
-      |  WHERE rn = 1)
-      |SELECT COALESCE(c.c_custkey, l.chg_key) AS key,
-      |  c.c_name,
-      |  CASE WHEN l.last_op = 'upsert' THEN l.new_bal ELSE c.c_acctbal END
-      |    AS acctbal,
-      |  l.last_op
-      |FROM customer c FULL OUTER JOIN latest l ON c.c_custkey = l.chg_key
-      |WHERE l.last_op IS NULL OR l.last_op <> 'delete'""".stripMargin
-
   /** SCD TYPE-2 history — the versioned complement of [[cdcUpsert]]'s
     * latest-snapshot: every upsert in the changelog becomes a dimension
     * VERSION with a validity interval [valid_from_us, valid_to_us), the
@@ -415,17 +330,6 @@ object EventOps {
         col("ts_us").as("valid_from_us"), col("valid_to_us"),
         (col("valid_to_us") === Long.MaxValue).as("is_current"))
   }
-
-  val scd2HistoryOracle: String =
-    """WITH v AS (
-      |  SELECT user_id, event_id, value, event_type, epoch_us(ts) AS ts_us,
-      |    COALESCE(lead(epoch_us(ts)) OVER (
-      |      PARTITION BY user_id ORDER BY epoch_us(ts), event_id),
-      |      9223372036854775807) AS valid_to_us
-      |  FROM events)
-      |SELECT user_id, value AS bal, ts_us AS valid_from_us, valid_to_us,
-      |  valid_to_us = 9223372036854775807 AS is_current
-      |FROM v WHERE event_type <> 'error'""".stripMargin
 
   /** Multi-step ordered funnel — the k-step generalization of
     * [[funnelConversion]]'s 2-step as-of: for each user, the GREEDY
@@ -467,35 +371,6 @@ object EventOps {
         .otherwise(0L))
   }
 
-  def funnelStepsOracle(steps: Seq[String] = Seq("signup", "click", "purchase"),
-                        windowUs: Long = 24L * 3600 * 1000 * 1000): String = {
-    def esc(s: String) = s.replace("'", "''")
-    val first =
-      s"""s1 AS (
-         |  SELECT user_id, min(ts_us) AS t1 FROM e
-         |  WHERE event_type = '${esc(steps.head)}' GROUP BY 1)""".stripMargin
-    val chain = steps.zipWithIndex.tail.map { case (step, i) =>
-      s"""s${i + 1} AS (
-         |  SELECT e.user_id, min(e.ts_us) AS t${i + 1}
-         |  FROM e JOIN s$i ON e.user_id = s$i.user_id
-         |  WHERE e.event_type = '${esc(step)}' AND e.ts_us > s$i.t$i
-         |  GROUP BY 1)""".stripMargin
-    }
-    val joins = (2 to steps.length)
-      .map(i => s"LEFT JOIN s$i ON s1.user_id = s$i.user_id").mkString("\n")
-    val cols = (1 to steps.length).map(i => s"t$i").mkString(", ")
-    val last = s"t${steps.length}"
-    val ctes = (first +: chain).mkString(",\n")
-    s"""WITH e AS (
-       |  SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-       |$ctes
-       |SELECT s1.user_id, $cols,
-       |  CAST(CASE WHEN $last IS NOT NULL AND $last - t1 <= $windowUs
-       |       THEN 1 ELSE 0 END AS BIGINT) AS converted
-       |FROM s1
-       |$joins""".stripMargin
-  }
-
   /** Retention cohorts: users grouped by first-activity week, distinct
     * active users per (cohort, week offset). Pure integer epoch-week
     * arithmetic (no calendar functions — exact on every engine). Two
@@ -514,13 +389,4 @@ object EventOps {
       .agg(countDistinct("user_id").as("n_users"))
   }
 
-  val retentionCohortsOracle: String =
-    """WITH weeks AS (
-      |  SELECT user_id, epoch_us(ts) // 604800000000 AS week FROM events),
-      |cohorts AS (
-      |  SELECT user_id, min(week) AS cohort_week FROM weeks GROUP BY 1)
-      |SELECT cohort_week, week - cohort_week AS week_offset,
-      |  count(DISTINCT w.user_id) AS n_users
-      |FROM weeks w JOIN cohorts c ON w.user_id = c.user_id
-      |GROUP BY 1, 2""".stripMargin
 }

@@ -149,52 +149,4 @@ object FrequencyOps {
     if (guaranteedOnly) ranked.filter(col("guaranteed")) else ranked
   }
 
-  def heavyHittersBySourceOracle(k: Int = 5, capacity: Int = 1024,
-                                 guaranteedOnly: Boolean = false): String = {
-    s"""WITH t AS (
-       |  SELECT source, tok FROM (
-       |    SELECT source, unnest(string_split(text, ' ')) AS tok
-       |    FROM documents)
-       |  WHERE len(tok) > 0),
-       |n AS (SELECT source, count(*) AS n FROM t GROUP BY 1),
-       |c AS (SELECT source, tok, count(*) AS cnt FROM t GROUP BY 1, 2),
-       |r AS (SELECT source, tok, cnt, row_number() OVER (
-       |        PARTITION BY source ORDER BY cnt DESC, tok ASC) AS rn
-       |      FROM c)
-       |SELECT r.source, tok, cnt, cnt > n.n // ${capacity + 1} AS guaranteed
-       |FROM r JOIN n USING (source)
-       |WHERE rn <= $k${if (guaranteedOnly) s" AND cnt > n.n // ${capacity + 1}" else ""}""".stripMargin
-  }
-
-  /** DuckDB twin: exact top-k with the same tiebreak and the same
-    * guarantee arithmetic (the oracle computes the flag from the exact
-    * total, which equals the operator's N by construction).
-    */
-  def heavyHittersOracle(k: Int = 20, capacity: Int = 4096,
-                         guaranteedOnly: Boolean = false): String =
-    s"""WITH t AS (
-       |  SELECT tok FROM (
-       |    SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-       |  WHERE len(tok) > 0),
-       |n AS (SELECT count(*) AS n FROM t),
-       |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
-       |r AS (
-       |  SELECT tok, cnt, cnt > n // ${capacity + 1} AS guaranteed
-       |  FROM c, n
-       |  ORDER BY cnt DESC, tok ASC
-       |  LIMIT $k)
-       |SELECT tok, cnt, guaranteed FROM r${if (guaranteedOnly) " WHERE guaranteed" else ""}""".stripMargin
-
-  def heavyNgramsOracle(k: Int = 20, capacity: Int = 4096,
-                        guaranteedOnly: Boolean = false): String =
-    s"""${DedupOps.documentsShingledCte},
-       |t AS (SELECT unnest(shingles) AS tok FROM shingled),
-       |n AS (SELECT count(*) AS n FROM t),
-       |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
-       |r AS (
-       |  SELECT tok, cnt, cnt > n // ${capacity + 1} AS guaranteed
-       |  FROM c, n
-       |  ORDER BY cnt DESC, tok ASC
-       |  LIMIT $k)
-       |SELECT tok, cnt, guaranteed FROM r${if (guaranteedOnly) " WHERE guaranteed" else ""}""".stripMargin
 }

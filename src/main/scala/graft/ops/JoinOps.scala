@@ -128,16 +128,4 @@ object JoinOps {
           .as("overlap_us"))
   }
 
-  /** Oracle: the NAIVE inequality-join formulation over the same
-    * sessionize CTE — independent of the cell/dedup machinery.
-    */
-  def sessionOverlapPairsOracle(sessionizeOracle: String): String =
-    s"""WITH s AS ($sessionizeOracle)
-       |SELECT a.user_id AS a_user, a.session_idx AS a_session,
-       |  b.user_id AS b_user, b.session_idx AS b_session,
-       |  least(a.end_us, b.end_us) - greatest(a.start_us, b.start_us)
-       |    AS overlap_us
-       |FROM s a JOIN s b
-       |  ON a.user_id < b.user_id
-       | AND a.start_us <= b.end_us AND b.start_us <= a.end_us""".stripMargin
 }

@@ -57,19 +57,6 @@ object PaymentOps {
         .otherwise(json).as("value"))
   }
 
-  /** Same synthetic feed for the DuckDB oracle (identical strings). */
-  def syntheticPaymentsJsonSql: String = {
-    val currencies = ExchangeRates.currencies
-      .map(c => s"'$c'").mkString("[", ", ", "]")
-    s"""SELECT o_orderkey AS k,
-       |  CASE WHEN o_orderkey % 97 = 0 THEN 'not a json payload'
-       |       ELSE '{"currency":"' || ($currencies)[CAST(o_orderkey % 5 + 1 AS INT)] ||
-       |            '","amount":' || CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT) AS VARCHAR) ||
-       |            ',"ts":' || CAST(epoch_ms(o_orderdate) AS VARCHAR) || '}'
-       |  END AS value
-       |FROM orders""".stripMargin
-  }
-
   /** F1 — JSON decode with malformed-drop (PaymentsService.java:52-56).
     * Output `(k, currency, amount, ts)`. Each record is decoded once, by
     * [[decodePayment]]: the native kernel parses the canonical wire form

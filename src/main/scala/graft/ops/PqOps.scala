@@ -144,28 +144,6 @@ object PqOps {
   def pqEncode(embeddings: DataFrame, m: Int = 4, k: Int = 16): DataFrame =
     pqEncodeWith(embeddings, trainCodebook(embeddings, m, k))
 
-  def pqEncodeOracle(m: Int = 4, k: Int = 16): String = {
-    val subDim = 64 / m
-    def dotR(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, ${subDim + 1}), i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)])), (acc, x) -> acc + x)""".stripMargin
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-       |subs AS (
-       |  SELECT vec_id, s, emb[CAST(s * $subDim + 1 AS INT):CAST(s * $subDim + $subDim AS INT)] AS xs
-       |  FROM base, (SELECT unnest(range(0, $m)) AS s)),
-       |cb AS (SELECT s, vec_id AS code, xs AS cs FROM subs WHERE vec_id < $k),
-       |dists AS (
-       |  SELECT d.vec_id, d.s, c.code,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS dist
-       |  FROM subs d JOIN cb c ON d.s = c.s)
-       |SELECT vec_id, CAST(s AS BIGINT) AS sub, CAST(code AS BIGINT) AS code,
-       |  dist AS qerr
-       |FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |                                   ORDER BY dist ASC, code ASC) AS rn
-       |      FROM dists)
-       |WHERE rn = 1""".stripMargin
-  }
-
   /** ADC top-k: approximate inner-product neighbors from CODES alone.
     * Each of the nQueries query vectors (collected — bounded, like the
     * IVF query set) is turned into an m × k lookup table of
@@ -302,46 +280,6 @@ object PqOps {
       .select("q_id", "vec_id", "score", "rank")
   }
 
-  def annIvfPqOracle(m: Int = 4, k: Int = 16,
-                     nQueries: Int = 10, topK: Int = 5): String = {
-    val subDim = 64 / m
-    def dotR(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, ${subDim + 1}), i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)])), (acc, x) -> acc + x)""".stripMargin
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
-       |subs AS (
-       |  SELECT vec_id, label, s, emb[CAST(s * $subDim + 1 AS INT):CAST(s * $subDim + $subDim AS INT)] AS xs
-       |  FROM base, (SELECT unnest(range(0, $m)) AS s)),
-       |cb AS (SELECT s, vec_id AS code, xs AS cs FROM subs WHERE vec_id < $k),
-       |dists AS (
-       |  SELECT d.vec_id, d.label, d.s, c.code,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS dist
-       |  FROM subs d JOIN cb c ON d.s = c.s),
-       |codes AS (
-       |  SELECT vec_id, label, s, code
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |                                     ORDER BY dist ASC, code ASC) AS rn
-       |        FROM dists)
-       |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS q_id, label AS q_label, s, xs AS qs
-       |      FROM subs WHERE vec_id < $nQueries),
-       |terms AS (
-       |  SELECT q.q_id, w.vec_id, w.s, ${dotR("q.qs", "c.cs")} AS term
-       |  FROM codes w JOIN q ON q.s = w.s AND q.q_label = w.label
-       |               JOIN cb c ON c.s = w.s AND c.code = w.code
-       |  WHERE w.vec_id <> q.q_id),
-       |scored AS (
-       |  SELECT q_id, vec_id,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY s)),
-       |                (acc, x) -> acc + x) AS score
-       |  FROM terms GROUP BY q_id, vec_id)
-       |SELECT q_id, vec_id, score, CAST(rank AS BIGINT) AS rank
-       |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-       |                                   ORDER BY score DESC, vec_id ASC) AS rank
-       |      FROM scored)
-       |WHERE rank <= $topK""".stripMargin
-  }
-
   /** Residual IVF-PQ — the textbook-faithful layout (Jégou et al. §IV):
     * each vector is encoded as the PQ codes of its RESIDUAL against its
     * cell's representative, which concentrates the quantizer's dynamic
@@ -401,95 +339,6 @@ object PqOps {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= topK)
       .select("q_id", "vec_id", "score", "rank")
-  }
-
-  def annIvfPqResidualOracle(m: Int = 4, k: Int = 16,
-                             nQueries: Int = 10, topK: Int = 5): String = {
-    val subDim = 64 / m
-    def dotR(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, ${subDim + 1}), i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)])), (acc, x) -> acc + x)""".stripMargin
-    s"""WITH base AS (SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings),
-       |anchors AS (
-       |  SELECT label AS a_label, emb AS a_emb
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY label
-       |                                     ORDER BY vec_id ASC) AS rn FROM base)
-       |  WHERE rn = 1),
-       |resid AS (
-       |  SELECT b.vec_id, b.label,
-       |    list_transform(range(1, 65),
-       |      i -> b.emb[CAST(i AS INT)] - a.a_emb[CAST(i AS INT)]) AS emb
-       |  FROM base b JOIN anchors a ON b.label = a.a_label),
-       |subs AS (
-       |  SELECT vec_id, label, s, emb[CAST(s * $subDim + 1 AS INT):CAST(s * $subDim + $subDim AS INT)] AS xs
-       |  FROM resid, (SELECT unnest(range(0, $m)) AS s)),
-       |cb AS (SELECT s, vec_id AS code, xs AS cs FROM subs WHERE vec_id < $k),
-       |dists AS (
-       |  SELECT d.vec_id, d.label, d.s, c.code,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS dist
-       |  FROM subs d JOIN cb c ON d.s = c.s),
-       |codes AS (
-       |  SELECT vec_id, label, s, code
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |                                     ORDER BY dist ASC, code ASC) AS rn
-       |        FROM dists)
-       |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS q_id, label AS q_label, s, xs AS qs
-       |      FROM subs WHERE vec_id < $nQueries),
-       |terms AS (
-       |  SELECT q.q_id, w.vec_id, w.s, ${dotR("q.qs", "c.cs")} AS term
-       |  FROM codes w JOIN q ON q.s = w.s AND q.q_label = w.label
-       |               JOIN cb c ON c.s = w.s AND c.code = w.code
-       |  WHERE w.vec_id <> q.q_id),
-       |scored AS (
-       |  SELECT q_id, vec_id,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY s)),
-       |                (acc, x) -> acc + x) AS score
-       |  FROM terms GROUP BY q_id, vec_id)
-       |SELECT q_id, vec_id, score, CAST(rank AS BIGINT) AS rank
-       |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-       |                                   ORDER BY score DESC, vec_id ASC) AS rank
-       |      FROM scored)
-       |WHERE rank <= $topK""".stripMargin
-  }
-
-  def annPqAdcOracle(m: Int = 4, k: Int = 16,
-                     nQueries: Int = 10, topK: Int = 10): String = {
-    val subDim = 64 / m
-    def dotR(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, ${subDim + 1}), i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)])), (acc, x) -> acc + x)""".stripMargin
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-       |subs AS (
-       |  SELECT vec_id, s, emb[CAST(s * $subDim + 1 AS INT):CAST(s * $subDim + $subDim AS INT)] AS xs
-       |  FROM base, (SELECT unnest(range(0, $m)) AS s)),
-       |cb AS (SELECT s, vec_id AS code, xs AS cs FROM subs WHERE vec_id < $k),
-       |dists AS (
-       |  SELECT d.vec_id, d.s, c.code,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS dist
-       |  FROM subs d JOIN cb c ON d.s = c.s),
-       |codes AS (
-       |  SELECT vec_id, s, code
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |                                     ORDER BY dist ASC, code ASC) AS rn
-       |        FROM dists)
-       |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS q_id, s, xs AS qs FROM subs WHERE vec_id < $nQueries),
-       |terms AS (
-       |  SELECT q.q_id, w.vec_id, w.s, ${dotR("q.qs", "c.cs")} AS term
-       |  FROM codes w JOIN q ON q.s = w.s
-       |               JOIN cb c ON c.s = w.s AND c.code = w.code
-       |  WHERE w.vec_id <> q.q_id),
-       |scored AS (
-       |  SELECT q_id, vec_id,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY s)),
-       |                (acc, x) -> acc + x) AS score
-       |  FROM terms GROUP BY q_id, vec_id)
-       |SELECT q_id, vec_id, score, CAST(rank AS BIGINT) AS rank
-       |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-       |                                   ORDER BY score DESC, vec_id ASC) AS rank
-       |      FROM scored)
-       |WHERE rank <= $topK""".stripMargin
   }
 
   // --------------------------------------------------------------------
@@ -687,83 +536,4 @@ object PqOps {
   def annSplitIsIndex(k: Int = 16): Column =
     col("vec_id") < k || col("vec_id") % 4 =!= 0
 
-  /** The default oracle corpus: the driver's embeddings table as
-    * 64-dim doubles. Geometry-variant recall oracles (the clustered
-    * fixture) swap this CTE body; everything downstream — codebook,
-    * buckets, ADC terms — derives from `base`, so one substitution
-    * re-targets the whole derivation. */
-  private[ops] val defaultEmbBaseSql: String =
-    "SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings"
-
-  /** Oracle: same codebook derivation and code assignment as
-    * [[pqEncodeOracle]] restricted to the index side, same hyperplane
-    * buckets as [[SimilarityOps.duckBucket]], ADC terms per subspace
-    * summed by an ORDERED fold, min-distance pick with the same
-    * tiebreak, and a LEFT join so bucket-orphan delta vectors keep
-    * their (-1, null) row. */
-  def annIndexIncrementalOracle(m: Int = 4, k: Int = 16,
-                                nPlanes: Int = 8): String =
-    annIndexIncrementalOracleCond(m, k, nPlanes, "wb.bucket = db.bucket",
-      defaultEmbBaseSql)
-
-  /** Multi-probe twin: hamming distance ≤ 1 between the candidate's and
-    * the delta's buckets — an INDEPENDENT formulation (xor + popcount)
-    * of the Spark side's probe-array explode, so agreement cross-checks
-    * the expansion rather than mirroring it. */
-  def annIndexIncrementalMultiProbeOracle(m: Int = 4, k: Int = 16,
-                                          nPlanes: Int = 8,
-                                          baseSql: String = defaultEmbBaseSql): String =
-    annIndexIncrementalOracleCond(m, k, nPlanes,
-      "bit_count(xor(wb.bucket, db.bucket)) <= 1", baseSql)
-
-  private def annIndexIncrementalOracleCond(m: Int, k: Int, nPlanes: Int,
-                                            bucketCond: String,
-                                            baseSql: String): String = {
-    val subDim = 64 / m
-    def dotR(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, ${subDim + 1}), i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)])), (acc, x) -> acc + x)""".stripMargin
-    s"""WITH base AS ($baseSql),
-       |subs AS (
-       |  SELECT vec_id, s, emb[CAST(s * $subDim + 1 AS INT):CAST(s * $subDim + $subDim AS INT)] AS xs
-       |  FROM base, (SELECT unnest(range(0, $m)) AS s)),
-       |cb AS (SELECT s, vec_id AS code, xs AS cs FROM subs WHERE vec_id < $k),
-       |idists AS (
-       |  SELECT d.vec_id, d.s, c.code,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS dist
-       |  FROM subs d JOIN cb c ON d.s = c.s
-       |  WHERE d.vec_id < $k OR d.vec_id % 4 <> 0),
-       |icodes AS (
-       |  SELECT vec_id, s, code
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |                                     ORDER BY dist ASC, code ASC) AS rn
-       |        FROM idists)
-       |  WHERE rn = 1),
-       |bucketed AS (
-       |  SELECT vec_id, ${SimilarityOps.duckBucket(nPlanes)} AS bucket FROM base),
-       |terms AS (
-       |  SELECT d.vec_id AS q_id, w.vec_id AS nn_id, w.s,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS term
-       |  FROM subs d
-       |  JOIN bucketed db ON db.vec_id = d.vec_id
-       |  JOIN icodes w ON w.s = d.s
-       |  JOIN bucketed wb ON wb.vec_id = w.vec_id AND $bucketCond
-       |  JOIN cb c ON c.s = w.s AND c.code = w.code
-       |  WHERE d.vec_id >= $k AND d.vec_id % 4 = 0),
-       |scored AS (
-       |  SELECT q_id, nn_id,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY s)),
-       |                (acc, x) -> acc + x) AS adc_dist
-       |  FROM terms GROUP BY q_id, nn_id),
-       |best AS (
-       |  SELECT q_id, nn_id, adc_dist
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-       |                                     ORDER BY adc_dist ASC, nn_id ASC) AS rn
-       |        FROM scored)
-       |  WHERE rn = 1)
-       |SELECT d.vec_id, CAST(coalesce(b.nn_id, -1) AS BIGINT) AS nn_id,
-       |  b.adc_dist
-       |FROM (SELECT vec_id FROM base WHERE vec_id >= $k AND vec_id % 4 = 0) d
-       |LEFT JOIN best b ON b.q_id = d.vec_id""".stripMargin
-  }
 }

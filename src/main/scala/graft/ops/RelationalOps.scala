@@ -289,16 +289,6 @@ object RelationalOps {
         count(lit(1)).over(w).cast("double")).as("rolling_avg"))
   }
 
-  val rollingRevenueOracle: String =
-    """SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS order_date_us,
-      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
-      |    AS rolling_spend,
-      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
-      |    / CAST(count(*) OVER w AS DOUBLE) AS rolling_avg
-      |FROM orders
-      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-      |             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)""".stripMargin
-
   /** The analytic window-function family over per-customer order
     * history: offset functions (lag/lead), distribution functions
     * (percent_rank — exact: (rank-1)/(n-1) on integers, one IEEE
@@ -319,16 +309,6 @@ object RelationalOps {
       ntile(4).over(w).cast("long").as("quartile"),
       percent_rank().over(w).as("pr"))
   }
-
-  val windowAnalyticsOracle: String =
-    """SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS order_date_us,
-      |  lag(o_totalprice, 1) OVER w AS prev_price,
-      |  lead(o_totalprice, 1) OVER w AS next_price,
-      |  first_value(o_totalprice) OVER w AS first_price,
-      |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-      |  percent_rank() OVER w AS pr
-      |FROM orders
-      |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin
 
   /** TPC-H Q16-flavored: DISTINCT aggregation — suppliers per brand.
     * Spark plans count(DISTINCT) as a two-phase aggregate (partial
@@ -365,165 +345,7 @@ object RelationalOps {
          |                    WHERE l2.l_partkey = p_partkey)""".stripMargin)
   }
 
-  val supplierCountByBrandOracle: String =
-    """SELECT p_brand,
-      |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers,
-      |  count(*) AS n_lines
-      |FROM lineitem JOIN part ON l_partkey = p_partkey
-      |GROUP BY 1""".stripMargin
-
-  val smallQuantityRevenueOracle: String =
-    """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
-      |         AS avg_yearly,
-      |       count(*) AS n_lines
-      |FROM lineitem, part
-      |WHERE p_partkey = l_partkey AND p_brand = 'Brand#23'
-      |  AND l_quantity < (SELECT 0.2 * avg(l_quantity)
-      |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""".stripMargin
-
-  val customersWithoutOrdersOracle: String =
-    """SELECT c_custkey, c_name, CAST(c_nationkey AS BIGINT) AS c_nationkey
-      |FROM customer
-      |WHERE NOT EXISTS (SELECT 1 FROM orders
-      |                  WHERE o_custkey = c_custkey AND o_totalprice > 300000)""".stripMargin
-
-  val pricingRollupOracle: String =
-    """SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT) AS lvl
-      |FROM lineitem
-      |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin
-
-  val pricingCubeOracle: String =
-    """SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT) AS lvl
-      |FROM lineitem
-      |GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin
-
-  val pricingGroupingSetsOracle: String =
-    """SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT) AS lvl
-      |FROM lineitem
-      |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus))""".stripMargin
-
-  val returnFlagPivotOracle: String =
-    """SELECT l_linestatus,
-      |  CAST(count(*) FILTER (l_returnflag = 'A') AS BIGINT) AS n_a,
-      |  CAST(count(*) FILTER (l_returnflag = 'N') AS BIGINT) AS n_n,
-      |  CAST(count(*) FILTER (l_returnflag = 'R') AS BIGINT) AS n_r
-      |FROM lineitem GROUP BY 1""".stripMargin
-
-  val runningTotalsOracle: String =
-    """SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS order_date_us,
-      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-      |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-      |    AS running_spend,
-      |  count(*) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS order_seq
-      |FROM orders""".stripMargin
-
-  val revenueChangeOracle: String =
-    """SELECT
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-      |  count(*) AS n_items
-      |FROM lineitem
-      |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-      |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin
-
-  val shippingPriorityOracle: String =
-    """SELECT l_orderkey, epoch_us(o_orderdate) AS order_date_us,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS revenue
-      |FROM customer
-      |JOIN orders ON c_custkey = o_custkey
-      |JOIN lineitem ON l_orderkey = o_orderkey
-      |WHERE c_mktsegment = 'BUILDING'
-      |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-      |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-      |GROUP BY 1, 2
-      |ORDER BY revenue DESC, l_orderkey ASC
-      |LIMIT 10""".stripMargin
-
-  val prioritiesWithReturnsOracle: String =
-    """SELECT o_orderpriority, count(*) AS n_orders
-      |FROM orders
-      |WHERE EXISTS (SELECT 1 FROM lineitem
-      |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-      |GROUP BY 1""".stripMargin
-
-  val topReturnCustomersOracle: String =
-    """WITH rev AS (
-      |  SELECT n_name, c_custkey,
-      |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |         (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |         AS DOUBLE) AS revenue
-      |  FROM customer
-      |  JOIN orders ON c_custkey = o_custkey
-      |  JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
-      |  JOIN nation ON c_nationkey = n_nationkey
-      |  GROUP BY 1, 2)
-      |SELECT n_name, c_custkey, revenue, rank FROM (
-      |  SELECT *, row_number() OVER
-      |    (PARTITION BY n_name ORDER BY revenue DESC, c_custkey ASC) AS rank
-      |  FROM rev)
-      |WHERE rank <= 3""".stripMargin
-
   // ---- DuckDB oracles ----
-
-  val localSupplierRevenueOracle: String =
-    """SELECT n_name,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS revenue
-      |FROM customer
-      |JOIN orders ON c_custkey = o_custkey
-      |JOIN lineitem ON l_orderkey = o_orderkey
-      |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      |JOIN nation ON s_nationkey = n_nationkey
-      |JOIN region ON n_regionkey = r_regionkey
-      |WHERE r_name = 'ASIA'
-      |GROUP BY 1""".stripMargin
-
-  val bigOrdersOracle: String =
-    """SELECT o_orderkey, o_custkey,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-      |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-      |GROUP BY 1, 2
-      |HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300""".stripMargin
-
-  val pricingSummaryOracle: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS sum_disc_price,
-      |  count(*) AS count_order
-      |FROM lineitem
-      |WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-      |GROUP BY 1, 2""".stripMargin
-
-  val ordersByNationOracle: String =
-    """SELECT n_name, count(*) AS n_orders,
-      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-      |FROM orders
-      |JOIN customer ON o_custkey = c_custkey
-      |JOIN nation ON c_nationkey = n_nationkey
-      |GROUP BY 1""".stripMargin
-
-  val topOrdersPerPriorityOracle: String =
-    """SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
-      |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-      |    row_number() OVER (PARTITION BY o_orderpriority
-      |                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-      |  FROM orders)
-      |WHERE rank <= 3""".stripMargin
 
   /** Exact revenue term shared by the Q7/Q14/Q19 family. */
   private def revD: Column =
@@ -552,21 +374,6 @@ object RelationalOps {
       .agg(sum(revD).cast("double").as("revenue"))
   }
 
-  val volumeShippingOracle: String =
-    """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-      |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS revenue
-      |FROM lineitem
-      |JOIN orders ON l_orderkey = o_orderkey
-      |JOIN customer ON o_custkey = c_custkey
-      |JOIN supplier ON l_suppkey = s_suppkey
-      |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-      |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-      |WHERE n1.n_name <> n2.n_name
-      |GROUP BY 1, 2, 3""".stripMargin
-
   /** TPC-H Q9-flavored product profit: per supplier-nation per order
     * year, profit = revenue − cost, with the part filter driving the
     * whole chain (no partsupp table in this schema, so retailprice ×
@@ -591,20 +398,6 @@ object RelationalOps {
       .agg(sum(revD - cost).cast("double").as("profit"))
   }
 
-  val productProfitOracle: String =
-    """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |           (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-      |         - CAST(p_retailprice AS DECIMAL(18,2)) *
-      |           CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS profit
-      |FROM lineitem
-      |JOIN part ON l_partkey = p_partkey
-      |JOIN orders ON l_orderkey = o_orderkey
-      |JOIN supplier ON l_suppkey = s_suppkey
-      |JOIN nation ON s_nationkey = n_nationkey
-      |WHERE p_name LIKE '%widget%'
-      |GROUP BY 1, 2""".stripMargin
-
   /** TPC-H Q13-flavored: distribution of per-customer order counts,
     * orders filtered by an exclusion predicate BEFORE a LEFT join so
     * order-less customers land in the 0 bucket. Double aggregation: the
@@ -619,16 +412,6 @@ object RelationalOps {
       .agg(count(col("o_orderkey")).as("c_count"))
       .groupBy("c_count")
       .agg(count(lit(1)).as("custdist"))
-
-  val orderCountDistributionOracle: String =
-    """SELECT c_count, count(*) AS custdist
-      |FROM (
-      |  SELECT c_custkey, count(o_orderkey) AS c_count
-      |  FROM customer
-      |  LEFT JOIN (SELECT * FROM orders WHERE o_orderpriority NOT LIKE '1%') o
-      |    ON c_custkey = o.o_custkey
-      |  GROUP BY 1)
-      |GROUP BY 1""".stripMargin
 
   /** TPC-H Q14-flavored promo revenue share per ship year: conditional
     * aggregation over one broadcast part join; the share is one fixed
@@ -647,21 +430,6 @@ object RelationalOps {
           .as("promo_share"),
         col("total").cast("double").as("total_revenue"))
 
-  val promoRevenueOracle: String =
-    """SELECT CAST(year(l_shipdate) AS BIGINT) AS l_year,
-      |  (100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
-      |       THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |            (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-      |       ELSE 0 END) AS DOUBLE))
-      |    / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |         (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |         AS DOUBLE) AS promo_share,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS total_revenue
-      |FROM lineitem JOIN part ON l_partkey = p_partkey
-      |GROUP BY 1""".stripMargin
-
   /** TPC-H Q15-flavored top supplier(s): per-supplier revenue, then the
     * suppliers matching the global max. The max side is a 1-row
     * broadcast; equality compares EXACT decimals (a double max could
@@ -676,15 +444,6 @@ object RelationalOps {
       .select(col("s_suppkey"), col("s_name"),
         col("rev_d").cast("double").as("total_revenue"))
   }
-
-  val topSupplierOracle: String =
-    """WITH rev AS (
-      |  SELECT l_suppkey, sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev_d
-      |  FROM lineitem GROUP BY 1)
-      |SELECT s_suppkey, s_name, CAST(rev_d AS DOUBLE) AS total_revenue
-      |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-      |WHERE rev_d = (SELECT max(rev_d) FROM rev)""".stripMargin
 
   /** TPC-H Q8-flavored market share: the share of one supplier nation in
     * total cross-nation revenue per order year. Same join graph as
@@ -710,22 +469,6 @@ object RelationalOps {
           .as("mkt_share"))
   }
 
-  def marketShareOracle(targetNation: String = "NATION_1"): String =
-    s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-       |  CAST(sum(CASE WHEN n1.n_name = '$targetNation'
-       |       THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
-       |            (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-       |       ELSE 0 END) AS DOUBLE)
-       |    / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-       |         (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-       |         AS DOUBLE) AS mkt_share
-       |FROM lineitem
-       |JOIN orders ON l_orderkey = o_orderkey
-       |JOIN customer ON o_custkey = c_custkey
-       |JOIN supplier ON l_suppkey = s_suppkey
-       |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-       |GROUP BY 1""".stripMargin
-
   /** TPC-H Q22-flavored sales opportunity: customers with above-average
     * positive balance and no URGENT orders (every synthetic customer has
     * SOME order, so the literal Q22 predicate would select nothing),
@@ -750,19 +493,6 @@ object RelationalOps {
         sum(col("c_acctbal").cast("decimal(18,2)")).cast("double").as("totacctbal"))
   }
 
-  val salesOpportunityOracle: String =
-    """SELECT n_name, count(*) AS numcust,
-      |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-      |FROM customer
-      |JOIN nation ON c_nationkey = n_nationkey
-      |WHERE CAST(c_acctbal AS DOUBLE) >
-      |    (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-      |            / CAST(count(*) AS DOUBLE)
-      |     FROM customer WHERE c_acctbal > 0)
-      |  AND c_custkey NOT IN
-      |    (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-      |GROUP BY 1""".stripMargin
-
   /** TPC-H Q19-flavored discounted revenue: OR-of-ANDs predicate over
     * brand/size/quantity after a broadcast part join — the disjunction
     * stays inside one codegen'd filter; the common `l_partkey =
@@ -782,20 +512,6 @@ object RelationalOps {
           col("l_quantity").between(20, 30)))
       .agg(sum(revD).cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
-
-  val discountedRevenueOracle: String =
-    """SELECT
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS revenue,
-      |  count(*) AS n_items
-      |FROM lineitem JOIN part ON l_partkey = p_partkey
-      |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-      |       AND l_quantity BETWEEN 1 AND 11)
-      |   OR (p_brand = 'Brand#7' AND p_size BETWEEN 1 AND 25
-      |       AND l_quantity BETWEEN 10 AND 20)
-      |   OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 50
-      |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin
 
   // ---- Catalyst decorrelation shapes (round 5) --------------------------
   // The synthetic schema lacks partsupp/l_shipmode/l_commitdate, so these
@@ -839,24 +555,6 @@ object RelationalOps {
         |LIMIT 20""".stripMargin)
   }
 
-  val waitingSuppliersOracle: String =
-    """SELECT s_name, count(*) AS numwait
-      |FROM supplier, lineitem l1, orders
-      |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-      |  AND o_orderstatus = 'F'
-      |  AND l1.l_shipdate > o_orderdate + INTERVAL 730 DAY
-      |  AND EXISTS (SELECT 1 FROM lineitem l2
-      |              WHERE l2.l_orderkey = l1.l_orderkey
-      |                AND l2.l_suppkey <> l1.l_suppkey)
-      |  AND NOT EXISTS (SELECT 1 FROM lineitem l3, orders o3
-      |                  WHERE l3.l_orderkey = l1.l_orderkey
-      |                    AND l3.l_suppkey <> l1.l_suppkey
-      |                    AND o3.o_orderkey = l3.l_orderkey
-      |                    AND l3.l_shipdate > o3.o_orderdate + INTERVAL 730 DAY)
-      |GROUP BY s_name
-      |ORDER BY numwait DESC, s_name ASC
-      |LIMIT 20""".stripMargin
-
   /** TPC-H Q2-shape: correlated scalar-MIN subquery in WHERE (min
     * lineitem price per part stands in for min supplycost — no partsupp
     * table). Catalyst decorrelates the per-part min into one aggregate
@@ -881,16 +579,6 @@ object RelationalOps {
         |                         WHERE l2.l_partkey = p_partkey)""".stripMargin)
   }
 
-  val minCostSupplierOracle: String =
-    """SELECT p_partkey, p_name, s_suppkey, s_name,
-      |       l_extendedprice AS min_price
-      |FROM part, lineitem, supplier
-      |WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-      |  AND p_size <= 3
-      |  AND l_extendedprice = (SELECT min(l2.l_extendedprice)
-      |                         FROM lineitem l2
-      |                         WHERE l2.l_partkey = p_partkey)""".stripMargin
-
   /** TPC-H Q11-shape: HAVING against an uncorrelated GLOBAL scalar
     * (nations holding > 4% of worldwide supplier balance). The scalar
     * subquery computes once and broadcasts into the having-filter; sums
@@ -912,15 +600,6 @@ object RelationalOps {
         |        FROM graft_q11_supplier)""".stripMargin)
   }
 
-  val importantNationBalanceOracle: String =
-    """SELECT n_name,
-      |  CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-      |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-      |GROUP BY n_name
-      |HAVING sum(CAST(s_acctbal AS DECIMAL(18,2))) >
-      |       (SELECT sum(CAST(s_acctbal AS DECIMAL(18,2))) * 0.04
-      |        FROM supplier)""".stripMargin
-
   /** TPC-H Q12-shape: CASE-conditional aggregation over an orders ⋈
     * lineitem join (l_returnflag stands in for l_shipmode). One
     * shuffle-join, one hash aggregate; the CASEs fold into the aggregate
@@ -941,17 +620,6 @@ object RelationalOps {
         |  AND l_shipdate < TIMESTAMP_NTZ'1998-01-01 00:00:00'
         |GROUP BY l_returnflag""".stripMargin)
   }
-
-  val priorityLineClassesOracle: String =
-    """SELECT l_returnflag,
-      |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-      |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-      |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-      |                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-      |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-      |GROUP BY l_returnflag""".stripMargin
 
   /** TPC-H Q20-shape: nested IN chains (suppliers of heavily-shipped red
     * parts in a nation set). Catalyst turns each IN-subquery into a
@@ -979,16 +647,4 @@ object RelationalOps {
         |                      WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3'))""".stripMargin)
   }
 
-  val promoSuppliersOracle: String =
-    """SELECT s_suppkey, s_name
-      |FROM supplier
-      |WHERE s_suppkey IN (
-      |    SELECT l_suppkey FROM lineitem
-      |    WHERE l_partkey IN (SELECT p_partkey FROM part
-      |                        WHERE p_name LIKE 'red%')
-      |      AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      |    GROUP BY l_suppkey, l_partkey
-      |    HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 90)
-      |  AND s_nationkey IN (SELECT n_nationkey FROM nation
-      |                      WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3'))""".stripMargin
 }

@@ -545,7 +545,7 @@ object RetrievalOps {
     * [[SimilarityOps]]). INTEGER coefficients over the integer TF
     * vectors keep every plane dot an exact integer sum — bucket
     * assignment has no float hazard at all. */
-  private[ops] def denseLshCoefs(planes: Int,
+  private[graft] def denseLshCoefs(planes: Int,
                                  dims: Int): Seq[Seq[Long]] =
     (0 until planes).map(p => (0 until dims).map { d =>
       if ((Hashing.hash64Jvm(s"dlsh:$p:$d") & 1L) == 0L) 1L else -1L
@@ -811,373 +811,5 @@ object RetrievalOps {
       out.count() // materialize while the channel lists are still cached
       out
     } finally { s.unpersist(); d.unpersist(); c.unpersist() }
-  }
-
-  // ---------------------------------------------------------------
-  // DuckDB twins
-  // ---------------------------------------------------------------
-
-  /** Sparse-channel CTE chain (expects a `corpus(doc_id, text)` CTE in
-    * scope); terminal CTE `stop` = (q_id, doc_id, n_terms, score,
-    * rank ≤ kChannel). Same semi-join vocabulary filter, single-IEEE-op
-    * composition, term-ordered left fold and (score DESC, doc_id ASC)
-    * tiebreak as [[bm25Ranks]]. */
-  def sparseCtes(queryPred: String, kChannel: Int): String =
-    sparseChain("", qtermsBody(queryPred), kChannel)
-
-  private def qtermsBody(queryPred: String): String =
-    s"""SELECT DISTINCT doc_id AS q_id, unnest(string_split(text, ' ')) AS word
-       |  FROM corpus WHERE $queryPred""".stripMargin
-
-  /** The sparse chain with a caller-supplied query-term CTE body and a
-    * name suffix, so a second scoring pass (PRF) can coexist with the
-    * first in one statement. */
-  def sparseChain(sfx: String, qtermsSql: String, kChannel: Int): String =
-    s"""qterms$sfx AS (
-       |  $qtermsSql),
-       |toks$sfx AS (
-       |  SELECT doc_id, word FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM corpus)
-       |  WHERE word IN (SELECT word FROM qterms$sfx)),
-       |tf$sfx AS (SELECT doc_id, word, count(*) AS tf FROM toks$sfx GROUP BY 1, 2),
-       |df$sfx AS (SELECT word, count(DISTINCT doc_id) AS df FROM toks$sfx GROUP BY 1),
-       |dl$sfx AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-       |       FROM corpus),
-       |navg$sfx AS (SELECT CAST(count(*) AS BIGINT) AS n,
-       |                CAST(CAST(sum(dl) AS BIGINT) AS DOUBLE) / count(*) AS avgdl
-       |         FROM dl$sfx),
-       |contribs$sfx AS (
-       |  SELECT q.q_id, tf.doc_id, tf.word,
-       |    ((CAST(navg.n - df.df AS DOUBLE) + 0.5) / (CAST(df.df AS DOUBLE) + 0.5))
-       |    * ((CAST(tf.tf AS DOUBLE) * 2.2)
-       |       / (CAST(tf.tf AS DOUBLE)
-       |          + (1.2 * (0.25 + (0.75 * (CAST(dl.dl AS DOUBLE) / navg.avgdl))))))
-       |    AS c
-       |  FROM tf$sfx tf
-       |  JOIN df$sfx df ON tf.word = df.word
-       |  JOIN qterms$sfx q ON tf.word = q.word
-       |  JOIN dl$sfx dl ON tf.doc_id = dl.doc_id
-       |  CROSS JOIN navg$sfx navg
-       |  WHERE tf.doc_id <> q.q_id),
-       |sscored$sfx AS (
-       |  SELECT q_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(c ORDER BY word)),
-       |                (acc, x) -> acc + x) AS score
-       |  FROM contribs$sfx GROUP BY 1, 2),
-       |stop$sfx AS (
-       |  SELECT q_id, doc_id, n_terms, score, rank FROM (
-       |    SELECT q_id, doc_id, n_terms, score,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY score DESC, doc_id ASC) AS BIGINT) AS rank
-       |    FROM sscored$sfx)
-       |  WHERE rank <= $kChannel)""".stripMargin
-
-  /** DuckDB twin of [[bm25Prf]]: first chain at k = m, feedback-doc
-    * re-tokenize, occurrence-ranked non-query expansion terms, second
-    * chain over the expanded term table. */
-  def bm25PrfOracle(nQueries: Int = 8, m: Int = 3, e: Int = 5,
-                    k: Int = 5): String =
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |${sparseChain("", qtermsBody(s"doc_id < $nQueries"), m)},
-       |fbdocs AS (SELECT q_id, doc_id FROM stop),
-       |fbtoks AS (
-       |  SELECT f.q_id, t.word FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM corpus) t
-       |  JOIN fbdocs f ON t.doc_id = f.doc_id),
-       |fbcand AS (SELECT q_id, word, CAST(count(*) AS BIGINT) AS w
-       |           FROM fbtoks GROUP BY 1, 2),
-       |fbnew AS (
-       |  SELECT c.q_id, c.word, c.w FROM fbcand c
-       |  WHERE NOT EXISTS (SELECT 1 FROM qterms q
-       |                    WHERE q.q_id = c.q_id AND q.word = c.word)),
-       |cdf AS (
-       |  SELECT word, count(DISTINCT doc_id) AS cdf FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM corpus)
-       |  WHERE word IN (SELECT word FROM fbnew) GROUP BY 1),
-       |ndocs AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM corpus),
-       |expterms AS (
-       |  SELECT q_id, word FROM (
-       |    SELECT f.q_id, f.word, CAST(row_number() OVER (PARTITION BY f.q_id
-       |      ORDER BY CAST(f.w AS DOUBLE)
-       |        * ((CAST(ndocs.n_docs - cdf.cdf AS DOUBLE) + 0.5)
-       |           / (CAST(cdf.cdf AS DOUBLE) + 0.5)) DESC,
-       |        f.word ASC) AS BIGINT) AS r
-       |    FROM fbnew f JOIN cdf ON f.word = cdf.word CROSS JOIN ndocs)
-       |  WHERE r <= $e),
-       |${sparseChain("2",
-          "SELECT q_id, word FROM qterms UNION ALL SELECT q_id, word FROM expterms",
-          k)}
-       |SELECT q_id, doc_id, n_terms, score, rank FROM stop2""".stripMargin
-
-  /** Dense-channel CTE chain (expects `corpus`); terminal CTE `dtop` =
-    * (q_id, doc_id, cos, rank ≤ kChannel). Mirrors
-    * [[SemanticOps.hashedTfOracle]]'s hash and [[denseRanks]]'s exact
-    * integer dot/norm² with the one-division-two-sqrt cosine. */
-  def denseCtes(queryPred: String, kChannel: Int, dims: Int): String =
-    s"""dtf AS (
-       |  SELECT doc_id, ${Hashing.hash64Duck("w")} % $dims AS dim,
-       |    CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus)
-       |  WHERE len(w) > 0 GROUP BY 1, 2),
-       |qdtf AS (SELECT doc_id AS q_id, dim, tf AS qtf FROM dtf WHERE $queryPred),
-       |n2 AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2
-       |       FROM dtf GROUP BY 1),
-       |ddot AS (
-       |  SELECT q.q_id, t.doc_id, CAST(sum(t.tf * q.qtf) AS BIGINT) AS dot
-       |  FROM dtf t JOIN qdtf q ON t.dim = q.dim
-       |  WHERE t.doc_id <> q.q_id GROUP BY 1, 2),
-       |dscored AS (
-       |  SELECT d.q_id, d.doc_id,
-       |    CAST(d.dot AS DOUBLE)
-       |      / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nd.n2 AS DOUBLE))) AS cos
-       |  FROM ddot d
-       |  JOIN n2 nq ON d.q_id = nq.doc_id
-       |  JOIN n2 nd ON d.doc_id = nd.doc_id),
-       |dtop AS (
-       |  SELECT q_id, doc_id, cos, rank FROM (
-       |    SELECT q_id, doc_id, cos,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY cos DESC, doc_id ASC) AS BIGINT) AS rank
-       |    FROM dscored)
-       |  WHERE rank <= $kChannel)""".stripMargin
-
-  /** Bucket-routed dense-channel CTE chain (expects `corpus`);
-    * terminal CTE `dtop`, same shape as [[denseCtes]] so [[rrfCtes]]
-    * composes unchanged. The ±1 plane coefficients are embedded as a
-    * VALUES table from the SAME [[denseLshCoefs]] the Spark side
-    * compiles in; plane dots and the bucket id are exact integer
-    * arithmetic on both engines. */
-  def denseLshCtes(queryPred: String, kChannel: Int, dims: Int,
-                   planes: Int): String = {
-    val coefRows = denseLshCoefs(planes, dims).zipWithIndex.flatMap {
-      case (cs, p) => cs.zipWithIndex.map { case (c, d) => s"($p, $d, $c)" }
-    }.mkString(", ")
-    s"""dtf AS (
-       |  SELECT doc_id, ${Hashing.hash64Duck("w")} % $dims AS dim,
-       |    CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus)
-       |  WHERE len(w) > 0 GROUP BY 1, 2),
-       |hcoef(plane, dim, coef) AS (VALUES $coefRows),
-       |dbucket AS (
-       |  SELECT doc_id, CAST(sum(CASE WHEN pd > 0 THEN (1::BIGINT << plane)
-       |                               ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM (
-       |    SELECT t.doc_id, h.plane, CAST(sum(t.tf * h.coef) AS BIGINT) AS pd
-       |    FROM dtf t JOIN hcoef h ON t.dim = h.dim GROUP BY 1, 2)
-       |  GROUP BY 1),
-       |qdtf AS (SELECT doc_id AS q_id, dim, tf AS qtf FROM dtf WHERE $queryPred),
-       |n2 AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2
-       |       FROM dtf GROUP BY 1),
-       |ddot AS (
-       |  SELECT q.q_id, t.doc_id, CAST(sum(t.tf * q.qtf) AS BIGINT) AS dot
-       |  FROM dtf t
-       |  JOIN qdtf q ON t.dim = q.dim
-       |  JOIN dbucket bt ON bt.doc_id = t.doc_id
-       |  JOIN dbucket bq ON bq.doc_id = q.q_id AND bq.bucket = bt.bucket
-       |  WHERE t.doc_id <> q.q_id GROUP BY 1, 2),
-       |dscored AS (
-       |  SELECT d.q_id, d.doc_id,
-       |    CAST(d.dot AS DOUBLE)
-       |      / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nd.n2 AS DOUBLE))) AS cos
-       |  FROM ddot d
-       |  JOIN n2 nq ON d.q_id = nq.doc_id
-       |  JOIN n2 nd ON d.doc_id = nd.doc_id),
-       |dtop AS (
-       |  SELECT q_id, doc_id, cos, rank FROM (
-       |    SELECT q_id, doc_id, cos,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY cos DESC, doc_id ASC) AS BIGINT) AS rank
-       |    FROM dscored)
-       |  WHERE rank <= $kChannel)""".stripMargin
-  }
-
-  /** Persisted-index ANN dense-channel CTE chain (expects `corpus`);
-    * terminal CTE `dtop` = (q_id, doc_id, adc_dist, rank ≤ kChannel),
-    * so [[rrfCtes]] composes unchanged. The full [[denseRanksAnnIndex]]
-    * derivation in SQL: hashed-TF 64-dim vectors, seed codebook
-    * (vec_id < kCode, code = seed id — [[PqOps.trainCodebook]]'s
-    * convention), per-subspace argmin code assignment, hyperplane
-    * buckets ([[SimilarityOps.duckBucket]] — identical plane
-    * literals), hamming-≤1 multiprobe candidacy as an INDEPENDENT
-    * xor+popcount formulation of the Spark side's probe-array explode,
-    * ADC terms summed by an ORDERED fold over s, self excluded,
-    * (adc_dist ASC, nn_id ASC) tiebreak. `queryPredVec` is a predicate
-    * over the query-side alias `d` (e.g. "d.vec_id < 8"). */
-  def annDocCtes(queryPredVec: String, kChannel: Int, dims: Int = 64,
-                 m: Int = 4, kCode: Int = 16, nPlanes: Int = 8): String = {
-    val subDim = 64 / m
-    def dotR(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, ${subDim + 1}), i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)])), (acc, x) -> acc + x)""".stripMargin
-    s"""adtf AS (
-       |  SELECT doc_id, ${Hashing.hash64Duck("w")} % $dims AS dim,
-       |    CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus)
-       |  WHERE len(w) > 0 GROUP BY 1, 2),
-       |abase AS (
-       |  SELECT doc_id AS vec_id,
-       |    list_transform(range(0, $dims), d ->
-       |      CAST(coalesce(element_at(mp, d)[1], 0) AS DOUBLE)) AS emb
-       |  FROM (SELECT doc_id, map_from_entries(list({'k': dim, 'v': tf})) AS mp
-       |        FROM adtf GROUP BY 1)),
-       |asubs AS (
-       |  SELECT vec_id, s, emb[CAST(s * $subDim + 1 AS INT):CAST(s * $subDim + $subDim AS INT)] AS xs
-       |  FROM abase, (SELECT unnest(range(0, $m)) AS s)),
-       |acb AS (SELECT s, vec_id AS code, xs AS cs FROM asubs WHERE vec_id < $kCode),
-       |aidists AS (
-       |  SELECT d.vec_id, d.s, c.code,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS dist
-       |  FROM asubs d JOIN acb c ON d.s = c.s),
-       |aicodes AS (
-       |  SELECT vec_id, s, code
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |                                     ORDER BY dist ASC, code ASC) AS rn
-       |        FROM aidists)
-       |  WHERE rn = 1),
-       |abucketed AS (
-       |  SELECT vec_id, ${SimilarityOps.duckBucket(nPlanes)} AS bucket FROM abase),
-       |aterms AS (
-       |  SELECT d.vec_id AS q_id, w.vec_id AS nn_id, w.s,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS term
-       |  FROM asubs d
-       |  JOIN abucketed db ON db.vec_id = d.vec_id
-       |  JOIN aicodes w ON w.s = d.s AND w.vec_id <> d.vec_id
-       |  JOIN abucketed wb ON wb.vec_id = w.vec_id
-       |   AND bit_count(xor(wb.bucket, db.bucket)) <= 1
-       |  JOIN acb c ON c.s = w.s AND c.code = w.code
-       |  WHERE $queryPredVec),
-       |ascored AS (
-       |  SELECT q_id, nn_id,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY s)),
-       |                (acc, x) -> acc + x) AS adc_dist
-       |  FROM aterms GROUP BY 1, 2),
-       |dtop AS (
-       |  SELECT q_id, nn_id AS doc_id, adc_dist, rank FROM (
-       |    SELECT q_id, nn_id, adc_dist,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY adc_dist ASC, nn_id ASC) AS BIGINT) AS rank
-       |    FROM ascored)
-       |  WHERE rank <= $kChannel)""".stripMargin
-  }
-
-  def hybridRrfIndexOracle(nQueries: Int = 8, kChannel: Int = 10,
-                           k: Int = 5, dims: Int = 64, m: Int = 4,
-                           kCode: Int = 16, nPlanes: Int = 8): String =
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |${sparseCtes(s"doc_id < $nQueries", kChannel)},
-       |${annDocCtes(s"d.vec_id < $nQueries", kChannel, dims, m, kCode, nPlanes)},
-       |${rrfCtes(k)}
-       |SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM htop""".stripMargin
-
-  def hybridRrfLshOracle(nQueries: Int = 8, kChannel: Int = 10, k: Int = 5,
-                         dims: Int = 64, planes: Int = 8): String = {
-    val pred = s"doc_id < $nQueries"
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |${sparseCtes(pred, kChannel)},
-       |${denseLshCtes(pred, kChannel, dims, planes)},
-       |${rrfCtes(k)}
-       |SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM htop""".stripMargin
-  }
-
-  /** RRF fusion CTEs over `stop` ⋈ `dtop`; terminal CTE `htop` =
-    * (q_id, doc_id, sparse_rank, dense_rank, rrf, rank ≤ k). */
-  def rrfCtes(k: Int): String =
-    s"""fused AS (
-       |  SELECT COALESCE(s.q_id, d.q_id) AS q_id,
-       |    COALESCE(s.doc_id, d.doc_id) AS doc_id,
-       |    COALESCE(s.rank, CAST(-1 AS BIGINT)) AS sparse_rank,
-       |    COALESCE(d.rank, CAST(-1 AS BIGINT)) AS dense_rank,
-       |    COALESCE(CAST(1.0 AS DOUBLE)
-       |        / (CAST(60.0 AS DOUBLE) + CAST(s.rank AS DOUBLE)),
-       |      CAST(0.0 AS DOUBLE))
-       |    + COALESCE(CAST(1.0 AS DOUBLE)
-       |        / (CAST(60.0 AS DOUBLE) + CAST(d.rank AS DOUBLE)),
-       |      CAST(0.0 AS DOUBLE)) AS rrf
-       |  FROM stop s FULL JOIN dtop d
-       |    ON s.q_id = d.q_id AND s.doc_id = d.doc_id),
-       |htop AS (
-       |  SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM (
-       |    SELECT q_id, doc_id, sparse_rank, dense_rank, rrf,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY rrf DESC, doc_id ASC) AS BIGINT) AS rank
-       |    FROM fused)
-       |  WHERE rank <= $k)""".stripMargin
-
-  def hybridRrfOracle(nQueries: Int = 8, kChannel: Int = 10, k: Int = 5,
-                      dims: Int = 64): String = {
-    val pred = s"doc_id < $nQueries"
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |${sparseCtes(pred, kChannel)},
-       |${denseCtes(pred, kChannel, dims)},
-       |${rrfCtes(k)}
-       |SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM htop""".stripMargin
-  }
-
-  def retrievalRecallOracle(kChannel: Int = 10, k: Int = 5,
-                            dims: Int = 64, lsh: Boolean = false): String =
-    retrievalRecallOracleOver(DedupOps.augmentedSql, "", kChannel, k, dims,
-      lsh)
-
-  /** Sampled twin — the SAME derivation over the co-addressed sampled
-    * corpus CTE (terminal CTE is still `corpus`, so the whole chain
-    * composes unchanged), with the knob as a lead column. */
-  def retrievalRecallSampledOracle(kChannel: Int = 10, k: Int = 5,
-                                   dims: Int = 64, sampleBuckets: Int = 128,
-                                   seed: String = "42",
-                                   lsh: Boolean = false): String =
-    retrievalRecallOracleOver(
-      DedupOps.coSampledAugmentedSql(sampleBuckets, seed),
-      s"CAST($sampleBuckets AS BIGINT) AS sample_buckets, ",
-      kChannel, k, dims, lsh)
-
-  /** Recall oracle over the PRODUCTION dense channel
-    * ([[retrievalRecallAnnIndex]]'s twin): same hits tail, dense CTE
-    * chain = [[annDocCtes]] over the augmented corpus. */
-  def retrievalRecallAnnIndexOracle(kChannel: Int = 10, k: Int = 5,
-                                    dims: Int = 64, m: Int = 4,
-                                    kCode: Int = 16,
-                                    nPlanes: Int = 8): String =
-    retrievalRecallOracleWith(DedupOps.augmentedSql, "",
-      annDocCtes("d.vec_id >= 100000 AND d.vec_id < 100080", kChannel,
-        dims, m, kCode, nPlanes),
-      kChannel, k)
-
-  private def retrievalRecallOracleOver(corpusCte: String, leadCols: String,
-                                        kChannel: Int, k: Int, dims: Int,
-                                        lsh: Boolean): String = {
-    val pred = "doc_id >= 100000 AND doc_id < 100080"
-    retrievalRecallOracleWith(corpusCte, leadCols,
-      if (lsh) denseLshCtes(pred, kChannel, dims, 8)
-      else denseCtes(pred, kChannel, dims),
-      kChannel, k)
-  }
-
-  private def retrievalRecallOracleWith(corpusCte: String, leadCols: String,
-                                        denseCteChain: String,
-                                        kChannel: Int, k: Int): String = {
-    val pred = "doc_id >= 100000 AND doc_id < 100080"
-    s"""WITH $corpusCte,
-       |${sparseCtes(pred, kChannel)},
-       |$denseCteChain,
-       |${rrfCtes(k)},
-       |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries
-       |       FROM corpus WHERE $pred),
-       |shits AS (SELECT CAST(count(*) AS BIGINT) AS n_hits FROM stop
-       |          WHERE rank <= $k AND doc_id = q_id - 100000),
-       |dhits AS (SELECT CAST(count(*) AS BIGINT) AS n_hits FROM dtop
-       |          WHERE rank <= $k AND doc_id = q_id - 100000),
-       |hhits AS (SELECT CAST(count(*) AS BIGINT) AS n_hits FROM htop
-       |          WHERE rank <= $k AND doc_id = q_id - 100000)
-       |SELECT ${leadCols}channel, n_queries, n_hits,
-       |  CAST(n_hits AS DOUBLE) / CAST(n_queries AS DOUBLE) AS recall
-       |FROM (
-       |  SELECT 'sparse' AS channel, nq.n_queries, s.n_hits
-       |  FROM shits s CROSS JOIN nq
-       |  UNION ALL
-       |  SELECT 'dense' AS channel, nq.n_queries, d.n_hits
-       |  FROM dhits d CROSS JOIN nq
-       |  UNION ALL
-       |  SELECT 'hybrid' AS channel, nq.n_queries, h.n_hits
-       |  FROM hhits h CROSS JOIN nq)""".stripMargin
   }
 }

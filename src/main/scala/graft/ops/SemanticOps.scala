@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -94,31 +94,6 @@ object SemanticOps {
   def semanticClusters(embeddings: DataFrame, k: Int = 8): DataFrame =
     labeledCorpus(embeddings, k).select(col("vec_id"), col("cluster"), col("c_score"))
 
-  def semanticClustersOracle(k: Int = 8): String = {
-    val d = SimilarityOps.duckDot _
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |corpus AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${d("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug),
-       |seeds AS (
-       |  SELECT vec_id AS seed_id, emb AS s_emb, norm AS s_norm
-       |  FROM corpus WHERE vec_id < $k)
-       |SELECT vec_id, CAST(seed_id AS BIGINT) AS cluster, score AS c_score
-       |FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY score DESC, seed_id ASC) AS rn
-       |  FROM (
-       |    SELECT c.vec_id, s.seed_id,
-       |      ${d("c.emb", "s.s_emb")} / (c.norm * s.s_norm) AS score
-       |    FROM corpus c, seeds s))
-       |WHERE rn = 1""".stripMargin
-  }
-
   /** SemDeDup survivors: within each cluster, rank members by centroid
     * similarity ASCENDING (farthest first — the paper's keep rule, vec_id
     * tiebreak) and drop every member whose cosine to a HIGHER-priority
@@ -151,44 +126,6 @@ object SemanticOps {
     // at runtime when it is actually small.
     ranked.join(dups, col("vec_id") === col("dup_id"), "left_anti")
       .select(col("vec_id"), col("cluster"), col("c_score"))
-  }
-
-  def semanticDedupOracle(k: Int = 8, minCos: Double = 0.99): String = {
-    val d = SimilarityOps.duckDot _
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |corpus AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${d("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug),
-       |seeds AS (
-       |  SELECT vec_id AS seed_id, emb AS s_emb, norm AS s_norm
-       |  FROM corpus WHERE vec_id < $k),
-       |assigned AS (
-       |  SELECT vec_id, emb, norm, CAST(seed_id AS BIGINT) AS cluster,
-       |         score AS c_score
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                                 ORDER BY score DESC, seed_id ASC) AS rn
-       |    FROM (
-       |      SELECT c.vec_id, c.emb, c.norm, s.seed_id,
-       |        ${d("c.emb", "s.s_emb")} / (c.norm * s.s_norm) AS score
-       |      FROM corpus c, seeds s))
-       |  WHERE rn = 1),
-       |ranked AS (
-       |  SELECT *, row_number() OVER (PARTITION BY cluster
-       |                               ORDER BY c_score ASC, vec_id ASC) AS prio
-       |  FROM assigned),
-       |dups AS (
-       |  SELECT DISTINCT b.vec_id AS dup_id
-       |  FROM ranked a JOIN ranked b
-       |    ON a.cluster = b.cluster AND a.prio < b.prio
-       |  WHERE ${d("a.emb", "b.emb")} / (a.norm * b.norm) >= $minCos)
-       |SELECT vec_id, cluster, c_score FROM ranked
-       |WHERE vec_id NOT IN (SELECT dup_id FROM dups)""".stripMargin
   }
 
   /** Embeddings ∪ planted contamination: an exact copy of every eval-set
@@ -238,36 +175,6 @@ object SemanticOps {
       embeddings.filter(col("vec_id") % evalMod === 0),
       minCos)
 
-  private def duckContaminated(evalMod: Int): String = {
-    val d = SimilarityOps.duckDot _
-    s"""aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 20001 AS vec_id, embedding
-       |  FROM embeddings WHERE vec_id % $evalMod = 0),
-       |corpus AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${d("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug)""".stripMargin
-  }
-
-  /** DuckDB cannot bind a correlated outer column inside a list lambda
-    * (the dot-product fold), so the oracle phrases the anti-join as a
-    * plain join into a `hits` CTE plus NOT IN — semantically identical.
-    */
-  def semanticDecontaminateOracle(minCos: Double = 0.99, evalMod: Int = 50): String = {
-    val d = SimilarityOps.duckDot _
-    s"""WITH ${duckContaminated(evalMod)},
-       |hits AS (
-       |  SELECT DISTINCT t.vec_id
-       |  FROM corpus t JOIN corpus e
-       |    ON t.vec_id % $evalMod <> 0 AND e.vec_id % $evalMod = 0
-       |  WHERE ${d("t.emb", "e.emb")} / (t.norm * e.norm) >= $minCos)
-       |SELECT vec_id FROM corpus
-       |WHERE vec_id % $evalMod <> 0
-       |  AND vec_id NOT IN (SELECT vec_id FROM hits)""".stripMargin
-  }
-
   /** LSH-bucketed semantic decontamination — the scale path: train and
     * eval both bucket on the sign-bit hyperplane signature, the anti-join
     * becomes an equi-join on the bucket with the cosine as a residual
@@ -299,24 +206,6 @@ object SemanticOps {
       embeddings.filter(col("vec_id") % evalMod =!= 0),
       embeddings.filter(col("vec_id") % evalMod === 0),
       minCos, nPlanes)
-
-  def semanticDecontaminateLshOracle(minCos: Double = 0.99, evalMod: Int = 50,
-                                     nPlanes: Int = 8): String = {
-    val d = SimilarityOps.duckDot _
-    s"""WITH ${duckContaminated(evalMod)},
-       |bucketed AS (
-       |  SELECT vec_id, emb, norm, ${SimilarityOps.duckBucket(nPlanes)} AS bucket
-       |  FROM corpus),
-       |hits AS (
-       |  SELECT DISTINCT t.vec_id
-       |  FROM bucketed t JOIN bucketed e
-       |    ON t.vec_id % $evalMod <> 0 AND e.vec_id % $evalMod = 0
-       |      AND e.bucket = t.bucket
-       |  WHERE ${d("t.emb", "e.emb")} / (t.norm * e.norm) >= $minCos)
-       |SELECT vec_id FROM bucketed
-       |WHERE vec_id % $evalMod <> 0
-       |  AND vec_id NOT IN (SELECT vec_id FROM hits)""".stripMargin
-  }
 
   /** Measured DECONTAMINATION RECALL — the third member of the
     * evaluation suite (with [[graft.ops.SimilarityOps.annRecall]] and
@@ -361,38 +250,6 @@ object SemanticOps {
           nullif(col("n_removed_exact").cast("double"), lit(0.0))).as("recall"))
   }
 
-  /** Both survivor oracles nested verbatim; the train-side id set is
-    * re-derived from the same planting rule (originals % evalMod ≠ 0
-    * plus the +20001 planted copies, which land train-side by
-    * construction). */
-  def decontaminateRecallOracle(evalMod: Int = 50): String =
-    s"""WITH train AS (
-       |  SELECT vec_id FROM embeddings WHERE vec_id % $evalMod <> 0
-       |  UNION ALL
-       |  SELECT vec_id + 20001 AS vec_id FROM embeddings
-       |  WHERE vec_id % $evalMod = 0),
-       |ex AS (SELECT vec_id FROM (
-       |${semanticDecontaminateOracle(evalMod = evalMod)}
-       |) q1),
-       |ls AS (SELECT vec_id FROM (
-       |${semanticDecontaminateLshOracle(evalMod = evalMod)}
-       |) q2),
-       |rem_ex AS (
-       |  SELECT vec_id FROM train
-       |  WHERE vec_id NOT IN (SELECT vec_id FROM ex)),
-       |rem_ls AS (
-       |  SELECT vec_id FROM train
-       |  WHERE vec_id NOT IN (SELECT vec_id FROM ls)),
-       |agg AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n_removed_exact,
-       |    CAST(COALESCE(sum(CASE WHEN l.vec_id IS NOT NULL THEN 1 ELSE 0 END),
-       |      0) AS BIGINT) AS n_removed_lsh
-       |  FROM rem_ex e LEFT JOIN rem_ls l ON e.vec_id = l.vec_id)
-       |SELECT n_removed_exact, n_removed_lsh,
-       |  CAST(n_removed_lsh AS DOUBLE)
-       |    / NULLIF(CAST(n_removed_exact AS DOUBLE), 0.0) AS recall
-       |FROM agg""".stripMargin
-
   /** Hashing-trick document embedding, exploded form (Weinberger et al.
     * 2009 feature hashing): token → dimension via the engine's
     * cross-engine 60-bit md5 hash mod `dims`, value = term frequency.
@@ -408,13 +265,6 @@ object SemanticOps {
       .select(col("doc_id"),
         (graft.functions.Hashing.hash64(col("word")) % dims).as("dim"))
       .groupBy("doc_id", "dim").agg(count(lit(1)).as("tf"))
-
-  def hashedTfOracle(dims: Int = 64): String =
-    s"""SELECT doc_id, ${graft.functions.Hashing.hash64Duck("w")} % $dims AS dim,
-       |  CAST(count(*) AS BIGINT) AS tf
-       |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-       |WHERE len(w) > 0
-       |GROUP BY 1, 2""".stripMargin
 
   /** Dense-vector form of [[hashedTf]]: (vec_id, embedding float[dims]),
     * directly consumable by [[semanticClusters]]/[[semanticDedup]] and
@@ -454,39 +304,6 @@ object SemanticOps {
         Window.partitionBy("cluster").orderBy(col("pick"), col("vec_id"))))
       .filter(col("rn") <= cap)
       .select(col("vec_id"), col("cluster"), col("rn").cast("long").as("rn"))
-  }
-
-  def clusterCapSampleOracle(k: Int = 8, cap: Int = 32): String = {
-    val d = SimilarityOps.duckDot _
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |corpus AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${d("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug),
-       |seeds AS (
-       |  SELECT vec_id AS seed_id, emb AS s_emb, norm AS s_norm
-       |  FROM corpus WHERE vec_id < $k),
-       |labeled AS (
-       |  SELECT vec_id, CAST(seed_id AS BIGINT) AS cluster
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                                 ORDER BY score DESC, seed_id ASC) AS rn
-       |    FROM (
-       |      SELECT c.vec_id, s.seed_id,
-       |        ${d("c.emb", "s.s_emb")} / (c.norm * s.s_norm) AS score
-       |      FROM corpus c, seeds s))
-       |  WHERE rn = 1),
-       |picked AS (
-       |  SELECT vec_id, cluster,
-       |    CAST(row_number() OVER (PARTITION BY cluster ORDER BY
-       |      ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 5, 4))::BIGINT,
-       |      vec_id) AS BIGINT) AS rn
-       |  FROM labeled)
-       |SELECT vec_id, cluster, rn FROM picked WHERE rn <= $cap""".stripMargin
   }
 
   // ---------------------------------------------------------------------
@@ -564,52 +381,6 @@ object SemanticOps {
   def centroidConfusion(documents: DataFrame, dims: Int = 4096): DataFrame =
     centroidClassifyHeldout(documents, dims)
       .groupBy("actual", "pred").agg(count(lit(1)).as("n"))
-
-  def centroidConfusionOracle(dims: Int = 4096): String =
-    s"""WITH cls AS (${centroidClassifyOracle(dims)})
-       |SELECT actual, pred, CAST(count(*) AS BIGINT) AS n
-       |FROM cls GROUP BY 1, 2""".stripMargin
-
-  def centroidClassifyOracle(dims: Int = 4096): String = {
-    val h = graft.functions.Hashing.hash64Duck("w")
-    s"""WITH tr AS (
-       |  SELECT lang AS label, $h % $dims AS dim
-       |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS w
-       |        FROM documents WHERE doc_id % 10 <> 0)
-       |  WHERE len(w) > 0),
-       |model AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS w
-       |          FROM tr GROUP BY 1, 2),
-       |norms AS (
-       |  SELECT label, sqrt(list_reduce(
-       |    list_prepend(CAST(0.0 AS DOUBLE),
-       |      list(CAST(w AS DOUBLE) * CAST(w AS DOUBLE) ORDER BY dim)),
-       |    (acc, x) -> acc + x)) AS cnorm
-       |  FROM model GROUP BY label),
-       |ev AS (
-       |  SELECT doc_id, $h % $dims AS dim
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-       |        FROM documents WHERE doc_id % 10 = 0)
-       |  WHERE len(w) > 0),
-       |feats AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS c
-       |          FROM ev GROUP BY 1, 2),
-       |dn AS (SELECT doc_id, CAST(sum(c * c) AS BIGINT) AS n2
-       |       FROM feats GROUP BY 1),
-       |dots AS (
-       |  SELECT f.doc_id, m.label, CAST(sum(f.c * m.w) AS BIGINT) AS dot
-       |  FROM feats f JOIN model m USING (dim) GROUP BY 1, 2),
-       |scoredall AS (
-       |  SELECT d.doc_id, d.label,
-       |    CAST(d.dot AS DOUBLE) /
-       |      (sqrt(CAST(dn.n2 AS DOUBLE)) * n.cnorm) AS score
-       |  FROM dots d JOIN dn USING (doc_id) JOIN norms n USING (label)),
-       |best AS (
-       |  SELECT *, row_number() OVER (PARTITION BY doc_id
-       |                               ORDER BY score DESC, label) AS rn
-       |  FROM scoredall)
-       |SELECT b.doc_id, d.lang AS actual, b.label AS pred, b.score
-       |FROM best b JOIN documents d ON b.doc_id = d.doc_id
-       |WHERE b.rn = 1""".stripMargin
-  }
 
   /** Distributed Lloyd's k-means over the embedding column. Returns the
     * final centroids (k × dims). Per iteration: map-side literal-centroid
@@ -814,63 +585,6 @@ object SemanticOps {
       .orderBy(col("score_avg").desc, col("doc_id"))
       .limit(k)
 
-  private def dsirScoredSql(dims: Int): String =
-    s"""held AS (SELECT min(source) AS src FROM documents),
-       |ttok AS (
-       |  SELECT ${graft.functions.Hashing.hash64Duck("w")} % $dims AS dim
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w
-       |        FROM documents, held WHERE source = held.src)
-       |  WHERE len(w) > 0),
-       |rtok AS (
-       |  SELECT doc_id, ${graft.functions.Hashing.hash64Duck("w")} % $dims AS dim
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-       |        FROM documents, held WHERE source <> held.src)
-       |  WHERE len(w) > 0),
-       |tdist AS (SELECT dim, CAST(count(*) AS BIGINT) AS cnt_t FROM ttok GROUP BY 1),
-       |rdist AS (SELECT dim, CAST(count(*) AS BIGINT) AS cnt_r FROM rtok GROUP BY 1),
-       |tot AS (SELECT coalesce((SELECT CAST(sum(cnt_t) AS BIGINT) FROM tdist), 0) AS n_t,
-       |               coalesce((SELECT CAST(sum(cnt_r) AS BIGINT) FROM rdist), 0) AS n_r),
-       |ratios AS (
-       |  SELECT r.dim,
-       |    CAST(coalesce(t.cnt_t, 0) + 1 AS DOUBLE) * CAST(n_r + $dims AS DOUBLE) /
-       |      (CAST(r.cnt_r + 1 AS DOUBLE) * CAST(n_t + $dims AS DOUBLE)) AS ratio
-       |  FROM rdist r LEFT JOIN tdist t USING (dim), tot),
-       |feats AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS c
-       |          FROM rtok GROUP BY 1, 2),
-       |scored AS (
-       |  SELECT f.doc_id, f.dim, f.c, CAST(f.c AS DOUBLE) * r.ratio AS v
-       |  FROM feats f JOIN ratios r USING (dim)),
-       |docscores AS (
-       |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dims,
-       |    CAST(sum(c) AS BIGINT) AS n_toks,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(v ORDER BY dim)),
-       |                (acc, x) -> acc + x) AS score_sum
-       |  FROM scored GROUP BY doc_id)""".stripMargin
-
-  /** Oracle for the registered `dsir_ratios` query: the frozen model
-    * artifact itself, verified bitwise (ratio > 0 guard at the
-    * registration site is the count-prune no-op — Laplace ratios are
-    * strictly positive). */
-  def dsirRatiosOracle(dims: Int = 4096): String =
-    s"""WITH ${dsirScoredSql(dims)}
-       |SELECT dim, ratio FROM ratios""".stripMargin
-
-  /** Oracle for the registered `dsir_weights` query (target = docs of the
-    * lexicographically first source, raw = the rest — the held-out idiom
-    * shared with `lm_score_heldout`). */
-  def dsirScoresOracle(dims: Int = 4096): String =
-    s"""WITH ${dsirScoredSql(dims)}
-       |SELECT doc_id, n_dims, n_toks, score_sum,
-       |  score_sum / n_toks AS score_avg
-       |FROM docscores""".stripMargin
-
-  def dsirSelectOracle(k: Int = 100, dims: Int = 4096): String =
-    s"""WITH ${dsirScoredSql(dims)}
-       |SELECT doc_id, n_dims, n_toks, score_sum,
-       |  score_sum / n_toks AS score_avg
-       |FROM docscores
-       |ORDER BY score_avg DESC, doc_id LIMIT $k""".stripMargin
-
   /** CONTRASTIVE TRIPLET MINING — training data for an embedding model
     * mined from the corpus itself (the SimCSE/E5-style weak-supervision
     * recipe): every verified near-duplicate pair ([[DedupOps
@@ -992,43 +706,4 @@ object SemanticOps {
         col("cand").as("negative_id"), col("jaccard"))
   }
 
-  /** DuckDB twin of [[tripletMining]] — composes negatives over the
-    * shared banded-pair CTE chain ([[DedupOps.minhashPairsCtesOver]]). */
-  def tripletMiningOracle(buckets: Int = 64): String = {
-    val h = graft.functions.Hashing.hash64Duck _
-    s"""${DedupOps.minhashPairsCtesOver(DedupOps.corpusShingledCte)},
-       |negpool AS (
-       |  SELECT doc_id AS cand,
-       |    ${h("CAST(doc_id AS VARCHAR)")} % $buckets AS bucket
-       |  FROM corpus),
-       |anch AS (
-       |  SELECT doc_a AS anchor_id, doc_b AS positive_id, jaccard,
-       |    ${h("'neg:' || CAST(doc_a AS VARCHAR)")} % $buckets AS tb
-       |  FROM pairs),
-       |negcand AS (
-       |  SELECT a.anchor_id, a.positive_id, a.jaccard, p.cand,
-       |    ${h("CAST(a.anchor_id AS VARCHAR) || ':' || CAST(p.cand AS VARCHAR)")} AS pick
-       |  FROM anch a JOIN negpool p ON a.tb = p.bucket
-       |  WHERE p.cand <> a.anchor_id AND p.cand <> a.positive_id
-       |    AND NOT EXISTS (SELECT 1 FROM pairs x
-       |                    WHERE (x.doc_a = a.anchor_id AND x.doc_b = p.cand)
-       |                       OR (x.doc_a = p.cand AND x.doc_b = a.anchor_id)))
-       |SELECT anchor_id, positive_id, negative_id, jaccard FROM (
-       |  SELECT anchor_id, positive_id, jaccard, cand AS negative_id,
-       |    row_number() OVER (PARTITION BY anchor_id, positive_id
-       |      ORDER BY pick, cand) AS r
-       |  FROM negcand)
-       |WHERE r = 1""".stripMargin
-  }
-
-  /** DuckDB twin of [[tripletCoverage]] — the triplet derivation of
-    * [[tripletMiningOracle]] reduced to counts against the shared pair
-    * CTE. */
-  def tripletCoverageOracle(buckets: Int = 64): String =
-    s"""WITH t AS (${tripletMiningOracle(buckets)}),
-       |p AS (${DedupOps.minhashPairsCtesOver(DedupOps.corpusShingledCte)}
-       |      SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM pairs)
-       |SELECT p.n_pairs, tc.n_triplets, p.n_pairs - tc.n_triplets AS n_dropped
-       |FROM p CROSS JOIN
-       |  (SELECT CAST(count(*) AS BIGINT) AS n_triplets FROM t) tc""".stripMargin
 }

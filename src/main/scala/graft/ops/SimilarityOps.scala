@@ -86,7 +86,7 @@ object SimilarityOps {
   /** The cell ANCHOR convention shared by the probed-IVF search and the
     * ingest composite: each cell's min-vec_id member (deterministic,
     * unlike a mean centroid whose float-summation order could never
-    * hash-match an oracle). One source of truth — [[duckAnchors]] is
+    * hash-match an oracle). One source of truth — [[SimilarityOracles.duckAnchors]] is
     * the SQL twin.
     */
   private def cellAnchors(corpus: DataFrame): DataFrame = {
@@ -96,13 +96,6 @@ object SimilarityOps {
       .select(col("label").as("a_label"), col("emb").as("a_emb"),
         col("norm").as("a_norm"))
   }
-
-  private val duckAnchors: String =
-    """anchors AS (
-      |  SELECT label AS a_label, emb AS a_emb, norm AS a_norm FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-      |    FROM corpus)
-      |  WHERE rn = 1)""".stripMargin
 
   def ivfTopKProbed(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
                     nProbe: Int = 2): DataFrame = {
@@ -124,34 +117,6 @@ object SimilarityOps {
       .filter(col("rank") <= k)
       .select("q_id", "vec_id", "score", "rank")
   }
-
-  def ivfTopKProbedOracle(nQueries: Int = 10, k: Int = 5, nProbe: Int = 2): String =
-    s"""WITH corpus AS (
-       |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-       |    sqrt(${duckDot("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM embeddings),
-       |$duckAnchors,
-       |queries AS (
-       |  SELECT vec_id AS q_id, emb AS q_emb, norm AS q_norm
-       |  FROM corpus WHERE vec_id < $nQueries),
-       |cells AS (
-       |  SELECT q_id, q_emb, q_norm, a_label,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY a_score DESC, a_label ASC)
-       |      AS cell_rank
-       |  FROM (
-       |    SELECT q.*, a.a_label,
-       |      ${duckDot("a.a_emb", "q.q_emb")} / (a.a_norm * q.q_norm) AS a_score
-       |    FROM queries q, anchors a)),
-       |scored AS (
-       |  SELECT p.q_id, c.vec_id,
-       |    ${duckDot("c.emb", "p.q_emb")} / (c.norm * p.q_norm) AS score
-       |  FROM corpus c JOIN cells p
-       |    ON c.label = p.a_label AND c.vec_id <> p.q_id AND p.cell_rank <= $nProbe)
-       |SELECT q_id, vec_id, score, rank FROM (
-       |  SELECT *, row_number() OVER
-       |    (PARTITION BY q_id ORDER BY score DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |WHERE rank <= $k""".stripMargin
 
   /** Deterministic random-hyperplane coefficients for LSH bucketing:
     * coef(p,d) = hash60("p:d") / 2^59 - 1.0 ∈ [-1, 1). Division by a
@@ -260,76 +225,6 @@ object SimilarityOps {
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("q_id", "vec_id", "score", "rank")
-  }
-
-  /** Multi-table oracle: one bucket column per table, candidates where
-    * ANY table's buckets match (the OR form is the natural SQL
-    * equivalent of the per-table union; dedup is implicit).
-    */
-  def lshTopKMultiTableOracle(nQueries: Int = 10, k: Int = 5,
-                              nPlanes: Int = 8, nTables: Int = 2): String = {
-    val bucketCols = (0 until nTables)
-      .map(t => s"${duckBucket(nPlanes, t)} AS b$t").mkString(",\n  ")
-    val anyMatch = (0 until nTables).map(t => s"c.b$t = q.b$t").mkString(" OR ")
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${duckDot("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM embeddings),
-       |bucketed AS (
-       |  SELECT vec_id, emb, norm,
-       |  $bucketCols
-       |  FROM base),
-       |scored AS (
-       |  SELECT q.vec_id AS q_id, c.vec_id,
-       |    ${duckDot("c.emb", "q.emb")} / (c.norm * q.norm) AS score
-       |  FROM bucketed c JOIN bucketed q
-       |    ON q.vec_id < $nQueries AND c.vec_id <> q.vec_id
-       |   AND ($anyMatch))
-       |SELECT q_id, vec_id, score, rank FROM (
-       |  SELECT *, row_number() OVER
-       |    (PARTITION BY q_id ORDER BY score DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |WHERE rank <= $k""".stripMargin
-  }
-
-  /** The [[bucketExpr]] sign-bit bucket as DuckDB SQL over an `emb`
-    * column: identical hyperplane literals (Double.toString round-trips
-    * exactly through DuckDB's parser), identical fold, identical bits.
-    */
-  private[ops] def duckBucket(nPlanes: Int, table: Int = 0): String = {
-    val planes = lshPlanes(nPlanes, table = table)
-    def planeDot(p: Int): String = {
-      val lit = planes(p).map(_.toString).mkString("[", ", ", "]::DOUBLE[]")
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, 65), i -> emb[i] * ($lit)[i])), (acc, x) -> acc + x)""".stripMargin
-    }
-    (0 until nPlanes)
-      .map(p => s"(CASE WHEN ${planeDot(p)} > 0.0 THEN CAST(${1L << p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-      .mkString(" + ")
-  }
-
-  /** Multi-probe oracle: same planes, bucket IN (bucket, bucket^1bit…). */
-  def lshTopKMultiProbeOracle(nQueries: Int = 10, k: Int = 5, nPlanes: Int = 8): String = {
-    val bucket = duckBucket(nPlanes)
-    val probes = ("q.bucket" +: (0 until nPlanes).map(p => s"xor(q.bucket, ${1L << p})"))
-      .mkString(", ")
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${duckDot("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM embeddings),
-       |bucketed AS (
-       |  SELECT vec_id, emb, norm, $bucket AS bucket FROM base),
-       |scored AS (
-       |  SELECT q.vec_id AS q_id, c.vec_id,
-       |    ${duckDot("c.emb", "q.emb")} / (c.norm * q.norm) AS score
-       |  FROM bucketed c JOIN bucketed q
-       |    ON q.vec_id < $nQueries AND c.vec_id <> q.vec_id
-       |   AND c.bucket IN ($probes))
-       |SELECT q_id, vec_id, score, rank FROM (
-       |  SELECT *, row_number() OVER
-       |    (PARTITION BY q_id ORDER BY score DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |WHERE rank <= $k""".stripMargin
   }
 
   /** Embeddings ∪ exact copies (vec_id+10000 for vec_id % 25 = 0) so the
@@ -445,101 +340,7 @@ object SimilarityOps {
       .agg(count(lit(1)).cast("long").as("n_pairs"),
         max("score").as("max_score"))
 
-  /** [[embeddingNearDupLshOracle]] embedded verbatim, sides labeled by
-    * the shared [[TextOps.splitLabelDuck]] — pair derivation and split
-    * rule both single-sourced (the lexical audit's oracle idiom). */
-  def splitLeakageSemanticOracle(nPlanes: Int = 8): String =
-    s"""WITH pairs AS (
-       |  SELECT vec_a, vec_b, score FROM (
-       |${embeddingNearDupLshOracle(nPlanes)}
-       |  ) p),
-       |lab AS (
-       |  SELECT ${TextOps.splitLabelDuck("vec_a")} AS split_a,
-       |    ${TextOps.splitLabelDuck("vec_b")} AS split_b, score
-       |  FROM pairs)
-       |SELECT split_a, split_b, CAST(count(*) AS BIGINT) AS n_pairs,
-       |  max(score) AS max_score
-       |FROM lab WHERE split_a <> split_b GROUP BY 1, 2""".stripMargin
-
   // ---- DuckDB oracles (lockstep with the ops above) ----
-
-  private[ops] def duckDot(a: String, b: String): String =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(range(1, 65), i -> $a[i] * $b[i])), (acc, x) -> acc + x)""".stripMargin
-
-  private val duckCorpus =
-    s"""corpus AS (
-       |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-       |    sqrt(${duckDot("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM embeddings)""".stripMargin
-
-  def cosineTopKOracleAt(nQueries: Int, k: Int): String =
-    s"""WITH $duckCorpus,
-       |scored AS (
-       |  SELECT q.vec_id AS q_id, c.vec_id,
-       |    ${duckDot("c.emb", "q.emb")} / (c.norm * q.norm) AS score
-       |  FROM corpus c JOIN corpus q
-       |    ON q.vec_id < $nQueries AND c.vec_id <> q.vec_id)
-       |SELECT q_id, vec_id, score, rank FROM (
-       |  SELECT *, row_number() OVER
-       |    (PARTITION BY q_id ORDER BY score DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |WHERE rank <= $k""".stripMargin
-
-  val cosineTopKOracle: String = cosineTopKOracleAt(10, 10)
-
-  val ivfTopKOracle: String =
-    s"""WITH $duckCorpus,
-       |scored AS (
-       |  SELECT q.vec_id AS q_id, c.vec_id,
-       |    ${duckDot("c.emb", "q.emb")} / (c.norm * q.norm) AS score
-       |  FROM corpus c JOIN corpus q
-       |    ON q.vec_id < 10 AND c.label = q.label AND c.vec_id <> q.vec_id)
-       |SELECT q_id, vec_id, score, rank FROM (
-       |  SELECT *, row_number() OVER
-       |    (PARTITION BY q_id ORDER BY score DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |WHERE rank <= 5""".stripMargin
-
-  /** LSH oracle: the same hyperplane literals (Double.toString
-    * round-trips exactly through DuckDB's parser), same fold, same
-    * bucket bits.
-    */
-  def lshTopKOracle(nQueries: Int = 10, k: Int = 5, nPlanes: Int = 8): String = {
-    val bucket = duckBucket(nPlanes)
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${duckDot("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM embeddings),
-       |bucketed AS (
-       |  SELECT vec_id, emb, norm, $bucket AS bucket FROM base),
-       |scored AS (
-       |  SELECT q.vec_id AS q_id, c.vec_id,
-       |    ${duckDot("c.emb", "q.emb")} / (c.norm * q.norm) AS score
-       |  FROM bucketed c JOIN bucketed q
-       |    ON q.vec_id < $nQueries AND c.bucket = q.bucket AND c.vec_id <> q.vec_id)
-       |SELECT q_id, vec_id, score, rank FROM (
-       |  SELECT *, row_number() OVER
-       |    (PARTITION BY q_id ORDER BY score DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |WHERE rank <= $k""".stripMargin
-  }
-
-  val embeddingNearDupOracle: String =
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding, label FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding, label
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |corpus AS (
-       |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-       |    sqrt(${duckDot("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug)
-       |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${duckDot("a.emb", "b.emb")} / (a.norm * b.norm) AS score
-       |FROM corpus a JOIN corpus b
-       |  ON a.label = b.label AND a.vec_id < b.vec_id
-       |WHERE ${duckDot("a.emb", "b.emb")} / (a.norm * b.norm) >= 0.999""".stripMargin
 
   /** Scalar int8-range quantization of the embedding column — the vector
     * STORAGE compression step of an ANN system (a 64-dim float vector
@@ -579,19 +380,6 @@ object SimilarityOps {
       .select(col("vec_id"), col("pos").cast("long").as("pos"),
         col("col").as("code"), col("vmin"), col("vmax"))
 
-  val quantizeEmbeddingsOracle: String =
-    """WITH base AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-      |    list_min(embedding::DOUBLE[]) AS vmin,
-      |    list_max(embedding::DOUBLE[]) AS vmax
-      |  FROM embeddings)
-      |SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos,
-      |  CASE WHEN vmax = vmin THEN 0
-      |    ELSE CAST(floor(((emb[CAST(i AS INT)] - vmin) * 255.0) / (vmax - vmin) + 0.5) AS BIGINT)
-      |  END AS code,
-      |  vmin, vmax
-      |FROM base, unnest(range(1, 65)) AS t(i)""".stripMargin
-
   /** Deterministic ±1 Johnson-Lindenstrauss sign matrix: sign(j,d) from
     * the parity of hash64("jl:j:d"). Multiplying by ±1.0 is EXACT in
     * IEEE, so unlike general Gaussian projections the reduced vectors
@@ -625,27 +413,6 @@ object SimilarityOps {
       .select(col("vec_id"), posexplode(projExpr(outDims)))
       .select(col("vec_id"), col("pos").cast("long").as("dim"),
         col("col").as("value"))
-
-  /** Left-fold over the first n dims as DuckDB SQL (duckDot is the n=64
-    * instance; the lambda variable is `li` so callers may alias an outer
-    * `range` as `i` without capture).
-    */
-  private def duckFold(n: Int, a: String, b: String): String =
-    s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(range(1, ${n + 1}), li -> $a[CAST(li AS INT)] * $b[CAST(li AS INT)])), (acc, x) -> acc + x)""".stripMargin
-
-  private def duckSignRow(s: Seq[Double]): String =
-    s.map(_.toString).mkString("[", ", ", "]::DOUBLE[]")
-
-  def projectEmbeddingsOracle(outDims: Int = 16): String = {
-    val comps = jlSigns(outDims)
-      .map(s => duckFold(64, "emb", s"(${duckSignRow(s)})"))
-      .mkString("[", ",\n    ", "]::DOUBLE[]")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-       |proj AS (SELECT vec_id, $comps AS p FROM base)
-       |SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim, p[CAST(i AS INT)] AS value
-       |FROM proj, unnest(range(1, ${outDims + 1})) AS t(i)""".stripMargin
-  }
 
   /** B9 — the coarse-to-fine ANN funnel: stage 1 ranks the WHOLE corpus
     * per query on the [[projectEmbeddings]] vectors only (outDims-wide
@@ -688,39 +455,6 @@ object SimilarityOps {
       .select("q_id", "vec_id", "score", "rank")
   }
 
-  def annProjectRerankOracle(nQueries: Int = 10, k: Int = 5,
-                             outDims: Int = 16, shortlist: Int = 20): String = {
-    val comps = jlSigns(outDims)
-      .map(s => duckFold(64, "emb", s"(${duckSignRow(s)})"))
-      .mkString("[", ",\n    ", "]::DOUBLE[]")
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${duckDot("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM embeddings),
-       |proj AS (
-       |  SELECT vec_id, p, sqrt(${duckFold(16, "p", "p")}) AS pn
-       |  FROM (SELECT vec_id, $comps AS p FROM base)),
-       |short AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q.vec_id AS q_id, c.vec_id,
-       |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-       |        ${duckFold(outDims, "c.p", "q.p")} / (c.pn * q.pn) DESC,
-       |        c.vec_id ASC) AS c_rank
-       |    FROM proj c JOIN proj q
-       |      ON q.vec_id < $nQueries AND c.vec_id <> q.vec_id)
-       |  WHERE c_rank <= $shortlist)
-       |SELECT q_id, vec_id, score, rank FROM (
-       |  SELECT s.q_id, c.vec_id,
-       |    ${duckDot("c.emb", "q.emb")} / (c.norm * q.norm) AS score,
-       |    row_number() OVER (PARTITION BY s.q_id ORDER BY
-       |      ${duckDot("c.emb", "q.emb")} / (c.norm * q.norm) DESC,
-       |      c.vec_id ASC) AS rank
-       |  FROM short s
-       |    JOIN base c ON c.vec_id = s.vec_id
-       |    JOIN base q ON q.vec_id = s.q_id)
-       |WHERE rank <= $k""".stripMargin
-  }
-
   /** B9 FLAGSHIP composite — the vector-side ingest pipeline a 100 TB
     * ANN deployment runs end to end, as ONE declarative plan (the
     * embedding sibling of `corpus_prep`): coarse-quantizer assignment
@@ -755,67 +489,6 @@ object SimilarityOps {
       .join(bucketed, Seq("vec_id"))
       .select("vec_id", "cell", "bucket", "sub", "code", "qerr")
   }
-
-  def embeddingPipelineOracle(nPlanes: Int = 8): String =
-    s"""WITH $duckCorpus,
-       |$duckAnchors,
-       |assigned AS (
-       |  SELECT vec_id, a_label AS cell FROM (
-       |    SELECT c.vec_id, a.a_label,
-       |      row_number() OVER (PARTITION BY c.vec_id ORDER BY
-       |        ${duckDot("c.emb", "a.a_emb")} / (c.norm * a.a_norm) DESC,
-       |        a.a_label ASC) AS cell_rank
-       |    FROM corpus c, anchors a)
-       |  WHERE cell_rank = 1),
-       |bucketed AS (
-       |  SELECT vec_id, ${duckBucket(nPlanes)} AS bucket FROM corpus),
-       |codes AS (${PqOps.pqEncodeOracle()})
-       |SELECT k.vec_id, a.cell, b.bucket, k.sub, k.code, k.qerr
-       |FROM codes k
-       |  JOIN assigned a ON a.vec_id = k.vec_id
-       |  JOIN bucketed b ON b.vec_id = k.vec_id""".stripMargin
-
-  def embeddingNearDupLshOracle(nPlanes: Int = 8): String =
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding, label FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding, label
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |base AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${duckDot("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug),
-       |bucketed AS (
-       |  SELECT vec_id, emb, norm, ${duckBucket(nPlanes)} AS bucket FROM base)
-       |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${duckDot("a.emb", "b.emb")} / (a.norm * b.norm) AS score
-       |FROM bucketed a JOIN bucketed b
-       |  ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-       |WHERE ${duckDot("a.emb", "b.emb")} / (a.norm * b.norm) >= 0.999""".stripMargin
-
-  /** Same aug/bucketing CTEs as [[embeddingNearDupLshOracle]], aggregated
-    * to bucket sizes with the same cap arithmetic and top-k tiebreak as
-    * [[DedupOps.minhashBucketStatsOracle]]. */
-  def embeddingBucketStatsOracle(k: Int = 20, nPlanes: Int = 8,
-                                 maxBucket: Int = DedupOps.defaultMaxBucket): String =
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding, label FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding, label
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |base AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM aug),
-       |bucketed AS (
-       |  SELECT vec_id, ${duckBucket(nPlanes)} AS bucket FROM base),
-       |sized AS (
-       |  SELECT bucket, CAST(count(*) AS BIGINT) AS bucket_n,
-       |    row_number() OVER (ORDER BY count(*) DESC, bucket ASC) AS rn
-       |  FROM bucketed GROUP BY 1)
-       |SELECT bucket, bucket_n,
-       |  CAST(bucket_n * (bucket_n - 1) // 2 AS BIGINT) AS cand_pairs,
-       |  CAST(greatest(bucket_n - $maxBucket, 0) AS BIGINT) AS dropped_n,
-       |  bucket_n > $maxBucket AS overflowed
-       |FROM sized WHERE rn <= $k""".stripMargin
 
   /** Measured ANN RECALL@k — the evaluation operator an ANN deployment
     * tunes its probe/table/cell knobs against: per query, the fraction
@@ -975,7 +648,7 @@ object SimilarityOps {
     * the frozen seed codebook — cover every (cluster, fine) codeword
     * pair in every subspace. Integer-only arithmetic so Spark and
     * DuckDB produce bit-identical doubles and every distance /
-    * tiebreak comparison is exact ([[clusteredGeometrySql]] is the
+    * tiebreak comparison is exact ([[SimilarityOracles.clusteredGeometrySql]] is the
     * verbatim SQL twin). emb[d] = (c+1)·64 + f_{d/8}(vec_id). */
   def clusteredGeometry(embeddings: DataFrame): DataFrame = {
     val i = col("vec_id")
@@ -988,24 +661,6 @@ object SimilarityOps {
     }
     embeddings.select(i, array(dims: _*).as("embedding"))
   }
-
-  /** DuckDB twin of [[clusteredGeometry]] — same integer formula over
-    * range(0, 64), substituted as the `base` CTE of the incremental
-    * oracle derivation. */
-  def clusteredGeometrySql: String =
-    """SELECT vec_id,
-      |  list_transform(range(0, 64), d ->
-      |    CAST((vec_id % 8 + 1) * 64
-      |       + ((vec_id // 8) + (vec_id % 8) * ((d // 8) + 1)
-      |          + (vec_id // 64) * (2 * (d // 8) + 1)) % 8 AS DOUBLE)) AS emb
-      |FROM embeddings""".stripMargin
-
-  def annRecallIncrementalClusteredOracle(m: Int = 8, k: Int = 64,
-                                          nPlanes: Int = 8): String =
-    annRecallIncrementalOracleWith(m, k,
-      PqOps.annIndexIncrementalMultiProbeOracle(m, k, nPlanes,
-        clusteredGeometrySql),
-      clusteredGeometrySql)
 
   private def annRecallIncrementalWith(embeddings: DataFrame, m: Int, k: Int,
                                        nPlanes: Int,
@@ -1044,50 +699,6 @@ object SimilarityOps {
     recallAtK(truth, approx)
   }
 
-  /** Truth = the same exhaustive cross join + min-distance pick in SQL
-    * (ORDERED folds, identical composition and tiebreak); found =
-    * [[graft.ops.PqOps.annIndexIncrementalOracle]] verbatim, re-keyed to
-    * (q_id, vec_id) — its LEFT-join orphan rows carry nn_id = -1, which
-    * matches no truth row: misses, by the same arithmetic. */
-  def annRecallIncrementalOracle(m: Int = 4, k: Int = 16,
-                                 nPlanes: Int = 8): String =
-    annRecallIncrementalOracleWith(m, k,
-      PqOps.annIndexIncrementalOracle(m, k, nPlanes))
-
-  def annRecallIncrementalMultiProbeOracle(m: Int = 4, k: Int = 16,
-                                           nPlanes: Int = 8): String =
-    annRecallIncrementalOracleWith(m, k,
-      PqOps.annIndexIncrementalMultiProbeOracle(m, k, nPlanes))
-
-  private def annRecallIncrementalOracleWith(m: Int, k: Int,
-                                             incrementalSql: String,
-                                             baseSql: String =
-                                               PqOps.defaultEmbBaseSql): String = {
-    def dotR(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, 65), i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)])), (acc, x) -> acc + x)""".stripMargin
-    val truthSql =
-      s"""WITH tbase AS ($baseSql),
-         |tidx AS (SELECT vec_id AS nn_id, emb AS i_emb FROM tbase
-         |         WHERE vec_id < $k OR vec_id % 4 <> 0),
-         |tq AS (SELECT vec_id AS q_id, emb FROM tbase
-         |       WHERE vec_id >= $k AND vec_id % 4 = 0),
-         |tdists AS (
-         |  SELECT tq.q_id, tidx.nn_id,
-         |    (${dotR("tq.emb", "tq.emb")} - 2.0 * ${dotR("tq.emb", "tidx.i_emb")}) + ${dotR("tidx.i_emb", "tidx.i_emb")} AS dist
-         |  FROM tq, tidx)
-         |SELECT q_id, nn_id AS vec_id
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                                   ORDER BY dist ASC, nn_id ASC) AS rn
-         |      FROM tdists)
-         |WHERE rn = 1""".stripMargin
-    val approxSql =
-      s"""SELECT vec_id AS q_id, nn_id AS vec_id FROM (
-         |$incrementalSql
-         |) inc""".stripMargin
-    recallAtKOracle(truthSql, approxSql)
-  }
-
   /** The ONE recall@k computation, shared by all four registered recall
     * queries so a tuned config can never be scored by different
     * arithmetic than the baseline: LEFT join truth→approx on (q_id,
@@ -1107,43 +718,4 @@ object SimilarityOps {
         count(lit(1)).cast("double")).as("recall_at_k"))
   }
 
-  /** Both retrieval oracles embedded verbatim as nested-WITH CTE
-    * subqueries (the outputDiff idiom — one derivation per side, zero
-    * drift), joined and averaged by the same arithmetic. */
-  def annRecallOracle(nQueries: Int = 10, k: Int = 5): String =
-    recallAtKOracle(cosineTopKOracleAt(nQueries, k), lshTopKOracle(nQueries, k))
-
-  def annRecallMultiProbeOracle(nQueries: Int = 10, k: Int = 5): String =
-    recallAtKOracle(cosineTopKOracleAt(nQueries, k),
-      lshTopKMultiProbeOracle(nQueries, k))
-
-  def annRecallIvfPqOracle(nQueries: Int = 10, k: Int = 5): String =
-    recallAtKOracle(cosineTopKOracleAt(nQueries, k),
-      PqOps.annIvfPqOracle(nQueries = nQueries, topK = k))
-
-  def annRecallFunnelOracle(nQueries: Int = 10, k: Int = 5): String =
-    recallAtKOracle(cosineTopKOracleAt(nQueries, k),
-      annProjectRerankOracle(nQueries, k))
-
-  def annRecallMultiTableOracle(nQueries: Int = 10, k: Int = 5): String =
-    recallAtKOracle(cosineTopKOracleAt(nQueries, k),
-      lshTopKMultiTableOracle(nQueries, k))
-
-  /** The ONE recall oracle template — the SQL twin of [[recallAtK]],
-    * parameterized on the two retrieval oracles it nests. */
-  private def recallAtKOracle(truthSql: String, approxSql: String): String =
-    s"""WITH truth AS (
-       |SELECT q_id, vec_id FROM (
-       |$truthSql
-       |) t),
-       |approx AS (
-       |SELECT q_id, vec_id FROM (
-       |$approxSql
-       |) a)
-       |SELECT t.q_id,
-       |  CAST(CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-       |    AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall_at_k
-       |FROM truth t LEFT JOIN approx a
-       |  ON t.q_id = a.q_id AND t.vec_id = a.vec_id
-       |GROUP BY 1""".stripMargin
 }

@@ -72,27 +72,4 @@ object SkewOps {
           .as("recommended_salt"))
   }
 
-  /** Same two-level aggregate in DuckDB; sum(BIGINT)→HUGEINT cast back
-    * before use so both engines see the same int64s. */
-  def skewReportOracle(table: String = "lineitem", key: String = "l_partkey"): String =
-    s"""WITH per AS (
-       |  SELECT $key, count(*) AS per_key FROM $table GROUP BY 1),
-       |a AS (
-       |  SELECT count(*) AS n_keys,
-       |    CAST(COALESCE(sum(per_key), 0) AS BIGINT) AS n_rows,
-       |    min(per_key) AS min_per_key, max(per_key) AS max_per_key
-       |  FROM per)
-       |SELECT '$key' AS key_col,
-       |  CAST(n_keys AS BIGINT) AS n_keys, n_rows,
-       |  CAST(min_per_key AS BIGINT) AS min_per_key,
-       |  CAST(max_per_key AS BIGINT) AS max_per_key,
-       |  CAST(n_rows AS DOUBLE) / NULLIF(CAST(n_keys AS DOUBLE), 0.0)
-       |    AS mean_per_key,
-       |  CAST(max_per_key AS DOUBLE)
-       |    / (CAST(n_rows AS DOUBLE) / NULLIF(CAST(n_keys AS DOUBLE), 0.0))
-       |    AS skew_factor,
-       |  CAST(ceil(CAST(max_per_key AS DOUBLE)
-       |    / (CAST(n_rows AS DOUBLE) / NULLIF(CAST(n_keys AS DOUBLE), 0.0)))
-       |    AS BIGINT) AS recommended_salt
-       |FROM a""".stripMargin
 }

@@ -154,14 +154,6 @@ object TextOps {
   def bm25TopK(documents: DataFrame, nQueries: Int = 8, k: Int = 5): DataFrame =
     RetrievalOps.bm25Ranks(documents, col("doc_id") < nQueries, k)
 
-  /** DuckDB twin of [[bm25TopK]] — same map-side query-vocab filter
-    * (expressed as a semi join), same single-IEEE-op composition, same
-    * term-ordered left fold, same (score DESC, doc_id ASC) tiebreak. */
-  def bm25TopKOracle(nQueries: Int = 8, k: Int = 5): String =
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |${RetrievalOps.sparseCtes(s"doc_id < $nQueries", k)}
-       |SELECT q_id, doc_id, n_terms, score, rank FROM stop""".stripMargin
-
   /** B10 — tf-idf top terms per document. The idf factor is LINEAR
     * (N/df, not log(N/df)): transcendental functions are not guaranteed
     * identically rounded across engines, while (tf*N)/df is one exact
@@ -220,37 +212,6 @@ object TextOps {
         coalesce(col("top_bigram_frac"), lit(0.0)).as("top_bigram_frac"))
   }
 
-  /** Repetition oracle: same segmentation/bigrams, same single-division
-    * IEEE arithmetic (sum cast through BIGINT before DOUBLE — DuckDB
-    * sums BIGINT into HUGEINT).
-    */
-  val docRepetitionOracle: String =
-    """WITH base AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split(text, '. '), s -> len(s) > 0) AS segs,
-      |    string_split(text, ' ') AS toks
-      |  FROM documents),
-      |seg_stats AS (
-      |  SELECT doc_id, CAST(len(segs) AS BIGINT) AS n_segs,
-      |    1.0 - CAST(len(list_distinct(segs)) AS DOUBLE) / CAST(len(segs) AS DOUBLE)
-      |      AS dup_seg_frac
-      |  FROM base WHERE len(segs) > 0),
-      |bigrams AS (
-      |  SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bg
-      |  FROM base, (SELECT unnest(range(1,
-      |         (SELECT CAST(max(len(toks)) AS BIGINT) FROM base))) AS i) t
-      |  WHERE len(toks) >= 2 AND i <= len(toks) - 1),
-      |counts AS (
-      |  SELECT doc_id, bg, count(*) AS c FROM bigrams GROUP BY 1, 2),
-      |top AS (
-      |  SELECT doc_id,
-      |    CAST(max(c) AS DOUBLE) / CAST(CAST(sum(c) AS BIGINT) AS DOUBLE)
-      |      AS top_bigram_frac
-      |  FROM counts GROUP BY 1)
-      |SELECT s.doc_id, s.n_segs, s.dup_seg_frac,
-      |  COALESCE(t.top_bigram_frac, 0.0) AS top_bigram_frac
-      |FROM seg_stats s LEFT JOIN top t ON s.doc_id = t.doc_id""".stripMargin
-
   /** B10 composite — the corpus-cleaning filter a training pipeline runs:
     * keep documents passing quality thresholds (enough tokens, bounded
     * stopword ratio, sane average token length). Pure map-side: the
@@ -264,11 +225,6 @@ object TextOps {
         col("stop_ratio") <= maxStopRatio &&
         col("avg_token_len") <= maxAvgTokenLen)
       .select("doc_id", "n_tokens", "stop_ratio", "quality_score")
-
-  def qualityFilterOracle(statsOracle: String): String =
-    s"""SELECT doc_id, n_tokens, stop_ratio, quality_score
-       |FROM ($statsOracle)
-       |WHERE n_tokens >= 20 AND stop_ratio <= 0.3 AND avg_token_len <= 8.0""".stripMargin
 
   /** ADAPTIVE quality thresholding — keep documents at or above the p-th
     * quantile of the corpus's own quality-score distribution (fixed
@@ -287,33 +243,6 @@ object TextOps {
     scored.crossJoin(broadcast(thr))
       .filter(col("quality_score") >= col("thr"))
       .select(col("doc_id"), col("n_tokens"), col("quality_score"), col("thr"))
-  }
-
-  def qualityPercentileFilterOracle(statsOracle: String, p: Double = 0.5): String =
-    s"""WITH scored AS ($statsOracle),
-       |t AS (SELECT quantile_cont(quality_score, $p) AS thr FROM scored)
-       |SELECT doc_id, n_tokens, quality_score, thr
-       |FROM scored, t WHERE quality_score >= thr""".stripMargin
-
-  /** The [[textStats]] derivation as DuckDB SQL, with optional kept
-    * pass-through columns — ONE string builder so every quality oracle
-    * (global gate, percentile gate, Gopher battery, per-source
-    * calibration) shares the score formula instead of re-spelling it.
-    */
-  def textStatsSql(keep: Seq[String] = Nil): String = {
-    val k = keep.map(c => s"$c, ").mkString
-    s"""SELECT doc_id, ${k}n_tokens, n_chars, n_stop,
-       |  CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens AS avg_token_len,
-       |  CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio,
-       |  least(CAST(1.0 AS DOUBLE), CAST(n_tokens AS DOUBLE) / 100) *
-       |    (CAST(1.0 AS DOUBLE) - CAST(n_stop AS DOUBLE) / n_tokens) AS quality_score
-       |FROM (
-       |  SELECT doc_id, ${k}
-       |    len(string_split(text, ' ')) AS n_tokens,
-       |    length(text) AS n_chars,
-       |    len(list_filter(string_split(text, ' '),
-       |        w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")}))) AS n_stop
-       |  FROM documents)""".stripMargin
   }
 
   /** PER-SOURCE quality calibration — the grouped complement of
@@ -385,20 +314,6 @@ object TextOps {
       .select(col("doc_id"), col("source"), col("quality_score"), col("pct"))
   }
 
-  def qualityCalibratedOracle(p: Double = 0.5): String =
-    s"""WITH scored0 AS (${textStatsSql(Seq("source"))}),
-       |scored AS (SELECT * FROM scored0 WHERE quality_score IS NOT NULL),
-       |r AS (
-       |  SELECT doc_id, source, quality_score,
-       |    row_number() OVER (PARTITION BY source
-       |                       ORDER BY quality_score, doc_id) AS rn,
-       |    count(*) OVER (PARTITION BY source) AS n
-       |  FROM scored)
-       |SELECT doc_id, source, quality_score,
-       |  CAST(rn - 1 AS DOUBLE) / greatest(n - 1, 1) AS pct
-       |FROM r
-       |WHERE CAST(rn - 1 AS DOUBLE) / greatest(n - 1, 1) >= $p""".stripMargin
-
   /** B10-gopher — the Gopher/MassiveText rule battery as ONE gate: length
     * bounds, mean-token-length band, minimum stopword ratio, and the two
     * repetition rules ([[docRepetition]]'s duplicate-segment and
@@ -437,34 +352,6 @@ object TextOps {
         col("f_len") * col("f_avg_len") * col("f_stop") *
           col("f_dup_seg") * col("f_top_bigram"))
 
-  /** Gopher-gate oracle: same stats + repetition CTEs joined on doc_id,
-    * same thresholds (single source of truth via the shared defaults),
-    * flags as CASE→BIGINT, keep as the flag product. */
-  def gopherGateOracle(statsOracle: String,
-                       minTokens: Long = 20L, maxTokens: Long = 100000L,
-                       minAvgLen: Double = 3.0, maxAvgLen: Double = 4.6,
-                       minStopRatio: Double = 0.02,
-                       maxDupSegFrac: Double = 0.3,
-                       maxTopBigramFrac: Double = 0.06): String =
-    s"""WITH stats AS ($statsOracle),
-       |rep AS (SELECT * FROM ($docRepetitionOracle) r),
-       |flags AS (
-       |  SELECT s.doc_id,
-       |    CAST(CASE WHEN s.n_tokens >= $minTokens AND s.n_tokens <= $maxTokens
-       |      THEN 1 ELSE 0 END AS BIGINT) AS f_len,
-       |    CAST(CASE WHEN s.avg_token_len >= $minAvgLen AND s.avg_token_len <= $maxAvgLen
-       |      THEN 1 ELSE 0 END AS BIGINT) AS f_avg_len,
-       |    CAST(CASE WHEN s.stop_ratio >= $minStopRatio
-       |      THEN 1 ELSE 0 END AS BIGINT) AS f_stop,
-       |    CAST(CASE WHEN r.dup_seg_frac <= $maxDupSegFrac
-       |      THEN 1 ELSE 0 END AS BIGINT) AS f_dup_seg,
-       |    CAST(CASE WHEN r.top_bigram_frac <= $maxTopBigramFrac
-       |      THEN 1 ELSE 0 END AS BIGINT) AS f_top_bigram
-       |  FROM stats s JOIN rep r ON s.doc_id = r.doc_id)
-       |SELECT doc_id, f_len, f_avg_len, f_stop, f_dup_seg, f_top_bigram,
-       |  f_len * f_avg_len * f_stop * f_dup_seg * f_top_bigram AS keep
-       |FROM flags""".stripMargin
-
   /** B10 — vocabulary encoding: map tokens to dense integer ids (the
     * step before any tokenized training corpus ships). The vocab is the
     * global top-V tokens by document frequency — orderBy+limit plans
@@ -486,19 +373,6 @@ object TextOps {
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         coalesce(col("token_id"), lit(-1L)).as("token_id"))
   }
-
-  def vocabEncodeOracle(vocabSize: Int = 16): String =
-    s"""WITH toks AS (
-      |  SELECT doc_id, unnest(list_transform(range(1, len(string_split(text,' ')) + 1),
-      |                 i -> {'pos': i - 1, 'tok': string_split(text,' ')[i]})) AS u
-      |  FROM documents),
-      |flat AS (SELECT doc_id, CAST(u.pos AS BIGINT) AS pos, u.tok AS tok FROM toks),
-      |vocab AS (
-      |  SELECT tok, CAST(row_number() OVER (ORDER BY df DESC, tok ASC) - 1 AS BIGINT) AS token_id
-      |  FROM (SELECT tok, count(DISTINCT doc_id) AS df FROM flat GROUP BY 1)
-      |  QUALIFY row_number() OVER (ORDER BY df DESC, tok ASC) <= $vocabSize)
-      |SELECT f.doc_id, f.pos, coalesce(v.token_id, -1) AS token_id
-      |FROM flat f LEFT JOIN vocab v ON f.tok = v.tok""".stripMargin
 
   /** B10 — bigram LM counts: (w1, w2) frequencies plus the conditional
     * probability P(w2|w1) — the n-gram language-model counting stage
@@ -524,20 +398,6 @@ object TextOps {
         col("cnt").cast("double") /
           sum(col("cnt")).over(Window.partitionBy(col("w1"))).cast("double"))
   }
-
-  val bigramLmOracle: String =
-    """WITH toks AS (
-      |  SELECT string_split(text, ' ') AS t FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 2),
-      |ex AS (SELECT t, unnest(range(1, len(t))) AS i FROM toks),
-      |counts AS (
-      |  SELECT t[i] AS w1, t[i + 1] AS w2, count(*) AS cnt
-      |  FROM ex GROUP BY 1, 2)
-      |SELECT w1, w2, CAST(cnt AS BIGINT) AS cnt,
-      |  CAST(CAST(cnt AS BIGINT) AS DOUBLE) /
-      |    CAST(CAST(sum(cnt) OVER (PARTITION BY w1) AS BIGINT) AS DOUBLE)
-      |      AS p_cond
-      |FROM counts""".stripMargin
 
   /** Per-document fluency scoring under the [[bigramLm]] model — the
     * KenLM-filter stage of a training pipeline (CCNet-style: score every
@@ -624,60 +484,6 @@ object TextOps {
         col("min_p"), (col("sum_p") / col("n_bigrams")).as("avg_p"))
   }
 
-  /** Oracle for the registered `lm_score_heldout` query: train on every
-    * source EXCEPT the lexicographically first, score that held-out
-    * source's documents.
-    */
-  val lmLikelihoodAgainstOracle: String =
-    """WITH held AS (SELECT min(source) AS src FROM documents),
-      |trainb AS (
-      |  SELECT string_split(text, ' ') AS t FROM documents, held
-      |  WHERE source <> held.src AND len(string_split(text, ' ')) >= 2),
-      |tex AS (SELECT t, unnest(range(1, len(t))) AS i FROM trainb),
-      |counts AS (SELECT t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2,
-      |                  count(*) AS cnt FROM tex GROUP BY 1, 2),
-      |lm AS (
-      |  SELECT w1, w2,
-      |    CAST(CAST(cnt AS BIGINT) AS DOUBLE) /
-      |      CAST(CAST(sum(cnt) OVER (PARTITION BY w1) AS BIGINT) AS DOUBLE) AS p_cond
-      |  FROM counts),
-      |evalb AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents, held
-      |  WHERE source = held.src AND len(string_split(text, ' ')) >= 2),
-      |eex AS (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM evalb),
-      |bg AS (SELECT doc_id, i AS pos, t[CAST(i AS INT)] AS w1,
-      |              t[CAST(i + 1 AS INT)] AS w2 FROM eex),
-      |j AS (SELECT b.doc_id, b.pos,
-      |             coalesce(l.p_cond, CAST(0.0 AS DOUBLE)) AS p,
-      |             CASE WHEN l.p_cond IS NULL THEN 1 ELSE 0 END AS is_oov
-      |      FROM bg b LEFT JOIN lm l ON b.w1 = l.w1 AND b.w2 = l.w2)
-      |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-      |  CAST(CAST(sum(is_oov) AS BIGINT) AS BIGINT) AS oov,
-      |  min(p) AS min_p,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(p ORDER BY pos)),
-      |              (acc, x) -> acc + x) / count(*) AS avg_p
-      |FROM j GROUP BY doc_id""".stripMargin
-
-  val lmLikelihoodOracle: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 2),
-      |ex AS (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks),
-      |bg AS (SELECT doc_id, i AS pos, t[CAST(i AS INT)] AS w1,
-      |              t[CAST(i + 1 AS INT)] AS w2 FROM ex),
-      |counts AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY 1, 2),
-      |lm AS (
-      |  SELECT w1, w2,
-      |    CAST(CAST(cnt AS BIGINT) AS DOUBLE) /
-      |      CAST(CAST(sum(cnt) OVER (PARTITION BY w1) AS BIGINT) AS DOUBLE) AS p_cond
-      |  FROM counts),
-      |j AS (SELECT b.doc_id, b.pos, l.p_cond
-      |      FROM bg b JOIN lm l ON b.w1 = l.w1 AND b.w2 = l.w2)
-      |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, min(p_cond) AS min_p,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(p_cond ORDER BY pos)),
-      |              (acc, x) -> acc + x) / count(*) AS avg_p
-      |FROM j GROUP BY doc_id""".stripMargin
-
   /** B10 FLAGSHIP composite — the full corpus-prep pipeline a training
     * run executes, end to end in ONE declarative plan: quality gates
     * (map-side filter, prunes before any shuffle) → PII scrub (map-side
@@ -709,40 +515,6 @@ object TextOps {
       .groupBy("source", "split")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
   }
-
-  def corpusPrepOracle(minTokens: Long = 20, maxStopRatio: Double = 0.3,
-                       maxAvgTokenLen: Double = 8.0): String =
-    s"""WITH base AS (
-       |  SELECT doc_id, text, source,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(length(text) AS BIGINT) AS n_chars,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |        w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")}))) AS BIGINT) AS n_stop
-       |  FROM documents),
-       |kept AS (
-       |  SELECT doc_id, source, n_tokens,
-       |    regexp_replace(regexp_replace(text,
-       |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-       |      '([0-9]{1,3}\\.){3}[0-9]{1,3}', '<IP>', 'g') AS text_clean
-       |  FROM base
-       |  WHERE n_tokens >= $minTokens
-       |    AND CAST(n_stop AS DOUBLE) / n_tokens <= $maxStopRatio
-       |    AND CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens <= $maxAvgTokenLen),
-       |deduped AS (
-       |  SELECT doc_id, source, n_tokens FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY md5(text_clean)
-       |                                 ORDER BY doc_id) AS rn
-       |    FROM kept) WHERE rn = 1)
-       |SELECT source,
-       |  CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))::BIGINT < 230
-       |         THEN 'train'
-       |       WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))::BIGINT < 243
-       |         THEN 'valid'
-       |       ELSE 'test' END AS split,
-       |  CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-       |FROM deduped
-       |GROUP BY 1, 2""".stripMargin
 
   /** B10 — per-source curation audit report: the one-stop operational
     * dashboard a corpus pipeline reads before a training run — per
@@ -780,24 +552,6 @@ object TextOps {
         .otherwise(0L)).as("n_quality_pass"))
   }
 
-  def curationReportOracle: String =
-    s"""WITH per_doc AS (
-       |  SELECT source, lang, md5(text) AS fp, n_chars,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |        w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")})))
-       |      AS BIGINT) AS n_stop
-       |  FROM documents)
-       |SELECT source,
-       |  CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(count(DISTINCT fp) AS BIGINT) AS n_distinct,
-       |  CAST(count(*) - count(DISTINCT fp) AS BIGINT) AS n_dup_extra,
-       |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-       |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       |  CAST(sum(CASE WHEN n_tokens >= 20 AND n_stop * 2 <= n_tokens
-       |                THEN 1 ELSE 0 END) AS BIGINT) AS n_quality_pass
-       |FROM per_doc GROUP BY source""".stripMargin
-
   /** B10 — sliding-window document chunking: the step before embedding
     * or long-context packing — each document becomes overlapping
     * `window`-token chunks every `stride` tokens (stride < window ⇒
@@ -826,21 +580,6 @@ object TextOps {
         col("col").as("chunk"))
   }
 
-  def chunkDocumentsOracle(window: Int = 64, stride: Int = 48): String =
-    s"""WITH t AS (
-       |  SELECT doc_id, string_split(text, ' ') AS toks,
-       |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-       |  FROM documents),
-       |ex AS (
-       |  SELECT doc_id, toks, n,
-       |    unnest(range(0, greatest(0, (n - $window + ${stride - 1}) // $stride) + 1)) AS i
-       |  FROM t)
-       |SELECT doc_id, i AS chunk_id, i * $stride AS start_pos,
-       |  CAST(least($window, n - i * $stride) AS BIGINT) AS n_chunk_tokens,
-       |  array_to_string(toks[CAST(i * $stride + 1 AS BIGINT) :
-       |                       CAST(i * $stride + $window AS BIGINT)], ' ') AS chunk
-       |FROM ex""".stripMargin
-
   /** B10 — unigram corpus-statistics scoring: the engine-native stand-in
     * for CCNet's LM-perplexity quality filter. The "model" is the global
     * top-V unigram counts (TakeOrderedAndProject, bounded by vocabSize);
@@ -868,22 +607,6 @@ object TextOps {
         (col("n_oov").cast("double") / col("n_tokens")).as("oov_frac"),
         (col("vocab_mass").cast("double") / col("n_tokens")).as("mean_freq"))
   }
-
-  def unigramScoresOracle(vocabSize: Int = 16): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-       |vocab AS (
-       |  SELECT tok, cnt FROM (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1)
-       |  ORDER BY cnt DESC, tok ASC LIMIT $vocabSize)
-       |SELECT t.doc_id,
-       |  CAST(count(*) AS BIGINT) AS n_tokens,
-       |  CAST(sum(CASE WHEN v.cnt IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-       |  CAST(sum(CASE WHEN v.cnt IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-       |    / count(*) AS oov_frac,
-       |  CAST(CAST(sum(coalesce(v.cnt, 0)) AS BIGINT) AS DOUBLE)
-       |    / count(*) AS mean_freq
-       |FROM toks t LEFT JOIN vocab v ON t.tok = v.tok
-       |GROUP BY t.doc_id""".stripMargin
 
   /** PII scrubbing — the redaction pass every public-corpus pipeline runs
     * before training (emails, IPv4 addresses → typed placeholder tokens),
@@ -918,22 +641,6 @@ object TextOps {
         scrubbed(col("raw")).as("scrubbed"))
   }
 
-  val piiScrubOracle: String =
-    """WITH raw AS (
-      |  SELECT doc_id, source,
-      |    concat(text, ' contact user', doc_id, '@mail.example.com from 10.',
-      |           doc_id % 256, '.0.', doc_id % 200 + 1) AS raw
-      |  FROM documents)
-      |SELECT doc_id, source,
-      |  CAST(len(regexp_extract_all(raw,
-      |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-      |  CAST(len(regexp_extract_all(raw,
-      |    '([0-9]{1,3}\.){3}[0-9]{1,3}')) AS BIGINT) AS n_ips,
-      |  regexp_replace(regexp_replace(raw,
-      |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-      |    '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g') AS scrubbed
-      |FROM raw""".stripMargin
-
   /** K-ANONYMITY release gate — the privacy family's GROUP-size check
     * next to [[piiScrub]]'s content scrub: a document is releasable
     * only if its quasi-identifier combination (here: lang × source ×
@@ -967,14 +674,6 @@ object TextOps {
         when(col("group_n") >= k, lit(0L)).otherwise(col("group_n"))
           .as("suppressed_docs"))
 
-  def kAnonymityGateOracle(k: Int = 10, bandChars: Int = 200): String =
-    s"""SELECT lang, source, n_chars // $bandChars AS len_band,
-       |  count(*) AS group_n,
-       |  count(*) >= $k AS released,
-       |  CASE WHEN count(*) >= $k THEN 0 ELSE count(*) END AS suppressed_docs
-       |FROM documents
-       |GROUP BY 1, 2, 3""".stripMargin
-
   /** Deterministic hash split — the reproducible train/validation/test
     * assignment a pipeline must make identically on every engine, every
     * run, every re-shard (content-addressed, never random()): bucket =
@@ -995,22 +694,6 @@ object TextOps {
       splitBucket(col("doc_id")).as("bucket"))
       .withColumn("split", splitLabel(col("bucket")))
 
-  /** The split bucket/label as DuckDB SQL over an id expression — THE
-    * one derivation ([[hashSplitOracle]] and the split-leakage oracle
-    * both compose it, so the split rule cannot silently diverge
-    * between them). */
-  def splitBucketDuck(id: String): String =
-    s"('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 2))::BIGINT"
-  def splitLabelDuck(id: String): String =
-    s"""CASE WHEN ${splitBucketDuck(id)} < 230 THEN 'train'
-       |       WHEN ${splitBucketDuck(id)} < 243 THEN 'valid'
-       |       ELSE 'test' END""".stripMargin
-
-  val hashSplitOracle: String =
-    s"""SELECT doc_id, source,
-       |  ${splitBucketDuck("doc_id")} AS bucket,
-       |  ${splitLabelDuck("doc_id")} AS split
-       |FROM documents""".stripMargin
 
   /** Sequence packing — the pre-training step that bins documents into
     * fixed token budgets (one "pack" ≈ one training sequence). This is
@@ -1102,56 +785,6 @@ object TextOps {
       .withColumn("dense_id", (dense_rank().over(w) - 1).cast("long"))
   }
 
-  /** Same distinct-then-rank in DuckDB, on the sharded packing oracle. */
-  def packShardsDenseOracle(capacity: Long = 2048, shards: Int = 8): String =
-    s"""WITH packed AS (
-       |${packSequencesShardedOracle(capacity, shards)}
-       |),
-       |packs AS (SELECT DISTINCT source, pack_id FROM packed)
-       |SELECT source, pack_id,
-       |  CAST(dense_rank() OVER (ORDER BY source, pack_id) - 1 AS BIGINT)
-       |    AS dense_id
-       |FROM packs""".stripMargin
-
-  /** Same shard windows, local quota-fill, and shard-encoded ids in
-    * DuckDB. */
-  def packSequencesShardedOracle(capacity: Long = 2048, shards: Int = 8): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, source,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(doc_id % $shards AS BIGINT) AS shard
-       |  FROM documents),
-       |cum AS (
-       |  SELECT doc_id, source, shard, n_tokens,
-       |    CAST(sum(n_tokens) OVER w AS BIGINT) - n_tokens AS cum_excl
-       |  FROM toks
-       |  WINDOW w AS (PARTITION BY source, shard ORDER BY doc_id
-       |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-       |SELECT doc_id, source, shard, n_tokens,
-       |  shard * ${1L << 40} + cum_excl // $capacity AS pack_id,
-       |  cum_excl % $capacity AS pack_offset
-       |FROM cum""".stripMargin
-
-  /** Shared oracle prefix: per-source exclusive token prefix-sums —
-    * [[packSequencesOracle]] and [[packSplitOracle]] both build on this
-    * subquery so the cum_excl derivation cannot diverge. */
-  private val cumExclSql: String =
-    """SELECT doc_id, source,
-      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |    CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT)) OVER w
-      |      AS BIGINT) - CAST(len(string_split(text, ' ')) AS BIGINT)
-      |      AS cum_excl
-      |  FROM documents
-      |  WINDOW w AS (PARTITION BY source ORDER BY doc_id
-      |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin
-
-  def packSequencesOracle(capacity: Long = 2048): String =
-    s"""SELECT doc_id, source, n_tokens,
-       |  cum_excl // $capacity AS pack_id,
-       |  cum_excl % $capacity AS pack_offset
-       |FROM (
-       |  $cumExclSql)""".stripMargin
-
   /** Deterministic source mixing (down-sampling) — the data-mixing step
     * that samples corpus sources toward target weights before training.
     * Each source gets a keep-rate; a document survives iff its
@@ -1193,14 +826,6 @@ object TextOps {
         sum(col("n_chars")).as("chars_kept"))
   }
 
-  val sourceMixOracle: String =
-    """SELECT source, count(*) AS n_kept,
-      |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
-      |FROM documents
-      |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2))::BIGINT <
-      |      (CAST(substr(source, 4) AS BIGINT) % 4 + 1) * 64
-      |GROUP BY 1""".stripMargin
-
   /** Source mixing WITH UP-SAMPLING (VERDICT r5 item 5) — real data
     * mixing replicates scarce sources (rate > 1), not just thins abundant
     * ones. A document yields `floor(rate)` whole copies plus one extra
@@ -1240,32 +865,6 @@ object TextOps {
     upsampledDocs(documents, rates, defaultRate)
       .groupBy("source")
       .agg(count(lit(1)).as("n_kept"), sum(col("n_chars")).as("chars_kept"))
-
-  /** Oracle generated from the SAME rates map (CASE dimension + bounded
-    * range join for replication) so query and oracle cannot diverge. */
-  def sourceMixUpsampleOracle(rates: Map[String, Double],
-                              defaultRate: Double = 1.0): String = {
-    val cases = rates.toSeq.sortBy(_._1)
-      .map { case (s, r) => s"WHEN source = '$s' THEN $r" }.mkString(" ")
-    val maxCopies = math.ceil((rates.values ++ Seq(defaultRate)).max).toLong + 1
-    s"""WITH rated AS (
-       |  SELECT source, n_chars,
-       |    CAST(floor((CASE $cases ELSE $defaultRate END) * 256.0 + 0.5)
-       |      AS BIGINT) AS r256,
-       |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2))::BIGINT AS bucket
-       |  FROM documents),
-       |copies AS (
-       |  SELECT source, n_chars,
-       |    r256 // 256 + CASE WHEN bucket < r256 % 256 THEN 1 ELSE 0 END AS n_copies
-       |  FROM rated),
-       |rep AS (
-       |  SELECT source, n_chars
-       |  FROM copies, (SELECT unnest(range(1, $maxCopies + 1)) AS c) t
-       |  WHERE c <= n_copies)
-       |SELECT source, count(*) AS n_kept,
-       |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
-       |FROM rep GROUP BY 1""".stripMargin
-  }
 
   /** Temperature-based (α = 0.5) source mixing — the multinomial
     * sampling-weight scheme of multilingual/multi-source training-set
@@ -1335,32 +934,6 @@ object TextOps {
     sourceMix(documents.filter(col("source").isNotNull), rates)
   }
 
-  /** Oracle recomputes the α=0.5 rates in SQL: same sqrt, same
-    * lexicographic-ordered fold for the total, same left-associated
-    * (B·√n / tot / n) op order, same 1/256 round-half-up grid. */
-  def sourceTemperatureMixOracle(budgetFrac: Double = 0.5): String =
-    s"""WITH sc AS (SELECT source, CAST(count(*) AS BIGINT) AS n
-       |            FROM documents WHERE source IS NOT NULL GROUP BY 1),
-       |tot AS (SELECT
-       |  CAST((SELECT CAST(sum(n) AS BIGINT) FROM sc) AS DOUBLE) * $budgetFrac AS b,
-       |  (SELECT list_reduce(
-       |     list_prepend(CAST(0.0 AS DOUBLE),
-       |                  list(sqrt(CAST(n AS DOUBLE)) ORDER BY source)),
-       |     (acc, x) -> acc + x) FROM sc) AS sqrt_tot),
-       |rates AS (
-       |  SELECT source,
-       |    least(CAST(1.0 AS DOUBLE),
-       |          b * sqrt(CAST(n AS DOUBLE)) / sqrt_tot / CAST(n AS DOUBLE)) AS rate
-       |  FROM sc, tot),
-       |gated AS (
-       |  SELECT d.source, d.n_chars
-       |  FROM documents d JOIN rates r USING (source)
-       |  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2))::BIGINT <
-       |        CAST(floor(rate * 256.0 + 0.5) AS BIGINT))
-       |SELECT source, count(*) AS n_kept,
-       |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
-       |FROM gated GROUP BY 1""".stripMargin
-
   /** Pack-to-loader manifest (VERDICT r5 item 8): the artifact a training
     * loader actually consumes — one row per pack with its ordered
     * document span list. Built ON TOP of [[packSequences]] (same
@@ -1383,14 +956,6 @@ object TextOps {
         transform(col("spans_arr"), x => concat_ws(":",
           x.getField("doc_id"), x.getField("offset"), x.getField("len"))),
         ","))
-
-  def packSpansOracle(capacity: Long = 2048): String =
-    s"""SELECT source, pack_id, count(*) AS n_docs,
-       |  CAST(sum(n_tokens) AS BIGINT) AS pack_tokens,
-       |  string_agg(doc_id || ':' || pack_offset || ':' || n_tokens,
-       |             ',' ORDER BY pack_offset) AS spans
-       |FROM (${packSequencesOracle(capacity)})
-       |GROUP BY 1, 2""".stripMargin
 
   /** Boundary-SPLITTING sequence packing — the GPT-style loader format
     * where every pack is EXACTLY `capacity` tokens and a document
@@ -1426,23 +991,6 @@ object TextOps {
           - greatest(col("pack_id") * capacity, col("cum_excl"))).as("frag_len"))
   }
 
-  def packSplitOracle(capacity: Long = 2048): String =
-    s"""WITH packed AS (
-       |  $cumExclSql),
-       |frags AS (
-       |  SELECT doc_id, source, n_tokens, cum_excl, p AS pack_id
-       |  FROM packed, (SELECT unnest(range(0,
-       |         (SELECT CAST((max(cum_excl + n_tokens) - 1) // $capacity AS BIGINT) + 1
-       |          FROM packed))) AS p) t
-       |  WHERE p BETWEEN cum_excl // $capacity
-       |            AND (cum_excl + n_tokens - 1) // $capacity)
-       |SELECT doc_id, source, pack_id,
-       |  greatest(0, pack_id * $capacity - cum_excl) AS doc_offset,
-       |  greatest(0, cum_excl - pack_id * $capacity) AS pack_offset,
-       |  least((pack_id + 1) * $capacity, cum_excl + n_tokens)
-       |    - greatest(pack_id * $capacity, cum_excl) AS frag_len
-       |FROM frags""".stripMargin
-
   /** Integer-binned value histogram per event type — the profiling pass
     * a pipeline runs to pick thresholds and spot drift. Bin = floor of
     * one IEEE division (deterministic); shuffle carries (type, bin)
@@ -1455,13 +1003,6 @@ object TextOps {
       .agg(count(lit(1)).as("n"),
         sum((col("value") * 100).cast("decimal(18,0)")).cast("double")
           .divide(lit(100.0)).as("sum_value"))
-
-  def valueHistogramOracle(width: Double = 50.0): String =
-    s"""SELECT event_type,
-       |  CAST(floor(value / $width) AS BIGINT) AS bin, count(*) AS n,
-       |  CAST(sum(CAST(value * 100 AS DECIMAL(18,0))) AS DOUBLE) / 100.0
-       |    AS sum_value
-       |FROM events GROUP BY 1, 2""".stripMargin
 
   /** Deterministic SHARDED corpus shuffle — the global training-order
     * randomization a loader consumes. A naive global
@@ -1487,18 +1028,6 @@ object TextOps {
       .withColumn("pos", row_number().over(w).cast("long"))
       .select(col("shard"), col("pos"), col("doc_id"), col("source"))
   }
-
-  def corpusShuffleOracle(seed: String = "42"): String =
-    s"""SELECT shard,
-       |  CAST(row_number() OVER (PARTITION BY shard
-       |    ORDER BY shuffle_key, doc_id) AS BIGINT) AS pos,
-       |  doc_id, source
-       |FROM (
-       |  SELECT doc_id, source,
-       |    md5(CAST(doc_id AS VARCHAR) || ':$seed') AS shuffle_key,
-       |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':$seed'), 1, 2))::BIGINT
-       |      AS shard
-       |  FROM documents)""".stripMargin
 
   /** Per-source token-budget selection — the epoch-budgeting step that
     * caps each source's contribution at a fixed token count (mixture
@@ -1528,19 +1057,6 @@ object TextOps {
       .select(col("doc_id"), col("source"), col("n_tokens"), col("cum_excl"))
   }
 
-  def tokenBudgetMixOracle(budget: Long = 4096, seed: String = "42"): String =
-    s"""SELECT doc_id, source, n_tokens, cum_excl FROM (
-       |  SELECT doc_id, source,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT)) OVER w
-       |      AS BIGINT) - CAST(len(string_split(text, ' ')) AS BIGINT)
-       |      AS cum_excl
-       |  FROM (SELECT *, md5(CAST(doc_id AS VARCHAR) || ':b$seed') AS mix_key
-       |        FROM documents)
-       |  WINDOW w AS (PARTITION BY source ORDER BY mix_key, doc_id
-       |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-       |WHERE cum_excl < $budget""".stripMargin
-
   /** QUALITY-ordered per-source token-budget selection — fill each
     * source's token budget BEST-QUALITY-FIRST instead of
     * [[tokenBudgetMix]]'s content-addressed uniform order: the curation
@@ -1568,24 +1084,6 @@ object TextOps {
         col("quality_score"), col("cum_excl"))
   }
 
-  def qualityBudgetMixOracle(budget: Long = 4096): String =
-    s"""WITH stats AS (
-       |  SELECT doc_id, source, n_tokens,
-       |    least(CAST(1.0 AS DOUBLE), CAST(n_tokens AS DOUBLE) / 100) *
-       |      (CAST(1.0 AS DOUBLE) - CAST(n_stop AS DOUBLE) / n_tokens) AS quality_score
-       |  FROM (
-       |    SELECT doc_id, source,
-       |      len(string_split(text, ' ')) AS n_tokens,
-       |      len(list_filter(string_split(text, ' '),
-       |          w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")}))) AS n_stop
-       |    FROM documents))
-       |SELECT doc_id, source, n_tokens, quality_score, cum_excl FROM (
-       |  SELECT *, CAST(sum(n_tokens) OVER w AS BIGINT) - n_tokens AS cum_excl
-       |  FROM stats
-       |  WINDOW w AS (PARTITION BY source ORDER BY quality_score DESC, doc_id
-       |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-       |WHERE cum_excl < $budget""".stripMargin
-
   /** Exact-k STRATIFIED sample — k documents per source, the eval-set /
     * inspection-sample construction step (`sample(fraction)` gives a
     * binomial count that varies per run and can return 0 for small
@@ -1609,26 +1107,4 @@ object TextOps {
       .select(col("source"), col("rank"), col("doc_id"), col("n_chars"))
   }
 
-  def stratifiedSampleOracle(k: Int = 20, seed: String = "42"): String =
-    s"""SELECT source, rank, doc_id, n_chars FROM (
-       |  SELECT source, doc_id, n_chars,
-       |    CAST(row_number() OVER (PARTITION BY source
-       |      ORDER BY md5(CAST(doc_id AS VARCHAR) || ':s$seed'), doc_id)
-       |      AS BIGINT) AS rank
-       |  FROM documents)
-       |WHERE rank <= $k""".stripMargin
-
-  val tfIdfTopOracle: String =
-    """WITH tokens AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-      |tf AS (SELECT doc_id, word, count(*) AS tf FROM tokens GROUP BY 1, 2),
-      |df AS (SELECT word, count(DISTINCT doc_id) AS df FROM tokens GROUP BY 1),
-      |n AS (SELECT count(*) AS n_docs FROM documents)
-      |SELECT doc_id, word, tf, df, score, rank FROM (
-      |  SELECT tf.doc_id, tf.word, tf.tf, df.df,
-      |    CAST(tf.tf * n.n_docs AS DOUBLE) / df.df AS score,
-      |    row_number() OVER (PARTITION BY tf.doc_id
-      |      ORDER BY CAST(tf.tf * n.n_docs AS DOUBLE) / df.df DESC, tf.word ASC) AS rank
-      |  FROM tf JOIN df ON tf.word = df.word CROSS JOIN n)
-      |WHERE rank <= 3""".stripMargin
 }

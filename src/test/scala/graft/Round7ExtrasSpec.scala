@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{EventOps, JoinOps, SimilarityOps, TextOps}
+import graft.oracle.TextOracles
 import org.apache.spark.sql.functions._
 
 /** Round-7 surface extensions: CDC changelog apply (lakehouse MERGE),
@@ -240,7 +241,7 @@ class Round7ExtrasSpec extends SparkSpec {
       "('c','o') must not merge across the [c][or] symbol boundary")
     // the replace-chain oracle cannot express a==b pairing — loud reject
     val e = intercept[IllegalArgumentException] {
-      BpeOps.bpeSegmentOracle(Seq(("x", "x")))
+      TextOracles.bpeSegmentOracle(Seq(("x", "x")))
     }
     assert(e.getMessage.contains("identical sides"))
   }
