@@ -15,7 +15,7 @@ object DedupOracles {
     * encoding are extracted as hex pairs of `hex(encode(text))`, so the
     * oracle hashes the same byte stream as the JVM side for ANY text.
     */
-  def duckSql(textExpr: String, window: Int = DefaultWindow): String =
+  def winnow60(textExpr: String, window: Int = DefaultWindow): String =
     s"""CASE WHEN octet_length(encode($textExpr)) <= $window THEN
        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
        |    list_transform(range(1, octet_length(encode($textExpr)) + 1),
@@ -89,7 +89,7 @@ object DedupOracles {
       |  SELECT doc_id + 200000 AS doc_id, source
       |  FROM documents WHERE doc_id % 15 = 0""".stripMargin
 
-  private val shinglesDuck =
+  private val shingledCte =
     """shingled AS (
       |  SELECT doc_id,
       |    [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)] AS shingles
@@ -98,16 +98,16 @@ object DedupOracles {
       |)""".stripMargin
 
   /** `sigs` (doc_id, sig) over the `shingled` CTE: the DuckDB signature. */
-  private def sigsDuck(numPerm: Int): String =
+  private def sigsCte(numPerm: Int): String =
     s"""sigs AS (
        |  SELECT doc_id,
        |    list_transform(range(0, $numPerm), p ->
        |      list_min(list_transform(shingles, s ->
-       |        ${DuckSql.hash64Duck("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
+       |        ${DuckSql.hash64("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
        |  FROM shingled)""".stripMargin
 
   /** `bands` (doc_id, band, band_key) over `sigs`: the DuckDB banding. */
-  private def bandsDuck(numPerm: Int): String = {
+  private def bandsCte(numPerm: Int): String = {
     val rows = numPerm / 4
     s"""bands AS (
        |  SELECT doc_id, b AS band,
@@ -120,7 +120,7 @@ object DedupOracles {
     * perm, minhash) in long form. */
   private[graft] def minhashSignaturesCtesOver(prefix: String, numPerm: Int = 16): String =
     s"""$prefix,
-       |${sigsDuck(numPerm)},
+       |${sigsCte(numPerm)},
        |signatures AS (
        |  SELECT doc_id, perm, sig[perm + 1] AS minhash
        |  FROM sigs, range(0, $numPerm) t(perm))""".stripMargin
@@ -130,8 +130,8 @@ object DedupOracles {
   def minhashBucketStatsOracle(k: Int = 20,
                                maxBucket: Int = defaultMaxBucket): String =
     s"""$corpusShingledCte,
-       |${sigsDuck(16)},
-       |${bandsDuck(16)},
+       |${sigsCte(16)},
+       |${bandsCte(16)},
        |sized AS (
        |  SELECT band, band_key, CAST(count(*) AS BIGINT) AS bucket_n,
        |    row_number() OVER (ORDER BY count(*) DESC, band ASC, band_key ASC) AS rn
@@ -143,7 +143,7 @@ object DedupOracles {
        |FROM sized WHERE rn <= $k""".stripMargin
 
   /** [[minhashPairsOracle]] embedded verbatim (nested-WITH idiom), pair
-    * sides labeled by [[TextOracles.splitLabelDuck]] — both the pair
+    * sides labeled by [[TextOracles.splitLabel]] — both the pair
     * derivation and the split rule stay single-sourced. A `def`, not a
     * `val`: it references [[minhashPairsOracle]], declared later in
     * this object (a val here would capture null at init). */
@@ -153,8 +153,8 @@ object DedupOracles {
        |$minhashPairsOracle
        |  ) mp),
        |lab AS (
-       |  SELECT ${TextOracles.splitLabelDuck("doc_a")} AS split_a,
-       |    ${TextOracles.splitLabelDuck("doc_b")} AS split_b, jaccard
+       |  SELECT ${TextOracles.splitLabel("doc_a")} AS split_a,
+       |    ${TextOracles.splitLabel("doc_b")} AS split_b, jaccard
        |  FROM pairs)
        |SELECT split_a, split_b, CAST(count(*) AS BIGINT) AS n_pairs,
        |  max(jaccard) AS max_jaccard
@@ -168,7 +168,7 @@ object DedupOracles {
        |assigned AS (
        |  SELECT d.doc_id, COALESCE(c.label, d.doc_id) AS sk
        |  FROM corpus d LEFT JOIN clusters c ON d.doc_id = c.doc_id)
-       |SELECT doc_id, ${TextOracles.splitLabelDuck("sk")} AS split
+       |SELECT doc_id, ${TextOracles.splitLabel("sk")} AS split
        |FROM assigned""".stripMargin
 
   /** [[minhashPairsOracle]] verbatim (valid over the sourced corpus —
@@ -195,7 +195,7 @@ object DedupOracles {
   lazy val simhashShinglesOracle: String =
     s"""$corpusShingledCte,
        |tok AS (
-       |  SELECT doc_id, ${DuckSql.hash64Duck("unnest(shingles)")} AS h
+       |  SELECT doc_id, ${DuckSql.hash64("unnest(shingles)")} AS h
        |  FROM shingled),
        |votes AS (
        |  SELECT doc_id, b,
@@ -483,8 +483,8 @@ object DedupOracles {
     s"""$corpusShingledCte,
        |exact_keepers AS (
        |  SELECT min(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
-       |${sigsDuck(16)},
-       |${bandsDuck(16)},
+       |${sigsCte(16)},
+       |${bandsCte(16)},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b
@@ -508,8 +508,8 @@ object DedupOracles {
     */
   def dedupIncrementalOracle(minEst: Double = 0.5, numPerm: Int = 16): String =
     s"""$corpusShingledCte,
-       |${sigsDuck(numPerm)},
-       |${bandsDuck(numPerm)},
+       |${sigsCte(numPerm)},
+       |${bandsCte(numPerm)},
        |ibands AS (SELECT * FROM bands WHERE doc_id < 100000),
        |dbands AS (SELECT * FROM bands WHERE doc_id >= 100000),
        |cand AS (
@@ -539,7 +539,7 @@ object DedupOracles {
     * sampled-recall oracle uses to re-derive every pair oracle over the
     * sampled corpus without touching their SQL. */
   def corpusShingledCteOver(corpusCtes: String): String =
-    s"WITH $corpusCtes,\n$shinglesDuck"
+    s"WITH $corpusCtes,\n$shingledCte"
 
   /** Shared CTE prefix: corpus + shingled. */
   val corpusShingledCte: String = corpusShingledCteOver(augmentedSql)
@@ -558,7 +558,7 @@ object DedupOracles {
     s"""${minhashSignaturesCtesOver(corpusShingledCte)}
        |SELECT doc_id, perm, minhash FROM signatures""".stripMargin
 
-  private val jaccardDuck =
+  private val jaccardCtes =
     """sizes AS (
       |  SELECT doc_id, CAST(len(list_distinct(shingles)) AS BIGINT) AS n_sh
       |  FROM shingled),
@@ -580,13 +580,13 @@ object DedupOracles {
     * the triplet-mining oracle composes negatives on top of it. */
   def minhashPairsCtesOver(prefix: String): String =
     s"""$prefix,
-       |${sigsDuck(16)},
-       |${bandsDuck(16)},
+       |${sigsCte(16)},
+       |${bandsCte(16)},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-       |$jaccardDuck,
+       |$jaccardCtes,
        |pairs AS (
        |  SELECT jac.doc_a, jac.doc_b, jaccard
        |  FROM jac JOIN cand ON jac.doc_a = cand.doc_a AND jac.doc_b = cand.doc_b
@@ -605,7 +605,7 @@ object DedupOracles {
     * composition point as [[minhashPairsOracleOver]]). */
   def ngramJaccardOracleOver(prefix: String): String =
     s"""$prefix,
-       |$jaccardDuck
+       |$jaccardCtes
        |SELECT doc_a, doc_b, jaccard FROM jac WHERE jaccard >= 0.5""".stripMargin
 
   val ngramJaccardOracle: String = ngramJaccardOracleOver(corpusShingledCte)
@@ -617,7 +617,7 @@ object DedupOracles {
   val simhashOracle: String =
     s"""WITH ${augmentedSql},
        |tok AS (
-       |  SELECT doc_id, ${DuckSql.hash64Duck("unnest(string_split(text, ' '))")} AS h
+       |  SELECT doc_id, ${DuckSql.hash64("unnest(string_split(text, ' '))")} AS h
        |  FROM corpus),
        |votes AS (
        |  SELECT doc_id, b,
@@ -635,7 +635,7 @@ object DedupOracles {
   private val simhashCandidateCtes: String =
     s"""WITH ${augmentedSql},
        |tok AS (
-       |  SELECT doc_id, ${DuckSql.hash64Duck("unnest(string_split(text, ' '))")} AS h
+       |  SELECT doc_id, ${DuckSql.hash64("unnest(string_split(text, ' '))")} AS h
        |  FROM corpus),
        |votes AS (
        |  SELECT doc_id, b,
@@ -704,7 +704,7 @@ object DedupOracles {
       s"CAST($sampleBuckets AS BIGINT) AS sample_buckets, ")
 
   val winnowFingerprintsOracle: String =
-    s"SELECT doc_id, ${duckSql("text")} AS wfp FROM documents"
+    s"SELECT doc_id, ${winnow60("text")} AS wfp FROM documents"
 
   val sourceSignaturesOracle: String =
     s"""${minhashSignaturesCtesOver(documentsShingledCte)}

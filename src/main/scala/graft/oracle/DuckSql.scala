@@ -3,7 +3,42 @@ package graft.oracle
 /** DuckDB forms shared by every oracle family. */
 object DuckSql {
 
-  /** Same hash as a DuckDB SQL fragment — keep in lockstep with hash64. */
-  def hash64Duck(e: String): String =
+  /** `Hashing.hash64`: the first 15 hex digits of md5 as a BIGINT. */
+  def hash64(e: String): String =
     s"('0x' || substr(md5($e), 1, 15))::BIGINT"
+
+  /** The space tokens of `text`, as `TextOps.tokenizeSpace` splits them. */
+  def words(text: String = "text"): String = s"string_split($text, ' ')"
+
+  /** A strict left fold from 0.0 over a DOUBLE list: the one IEEE sum
+    * order both engines share (an unordered SUM() depends on the
+    * partitioning). */
+  def foldSum(list: String): String =
+    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $list), (acc, x) -> acc + x)"
+
+  /** Aggregate: `x` summed over the group in `by` order (see [[foldSum]]). */
+  def orderedSum(x: String, by: String): String = foldSum(s"list($x ORDER BY $by)")
+
+  /** The dot product of the first `n` entries of two DOUBLE lists,
+    * folded in index order. The lambda variable is `li`, so callers may
+    * name an outer column `i`. */
+  def dot(a: String, b: String, n: Int = 64): String =
+    foldSum(s"list_transform(range(1, ${n + 1}), li -> $a[CAST(li AS INT)] * $b[CAST(li AS INT)])")
+
+  /** ‖a − b‖² composed as (a·a − 2·a·b) + b·b, the Spark side's order. */
+  def sqDist(a: String, b: String, n: Int): String =
+    s"(${dot(a, a, n)} - 2.0 * ${dot(a, b, n)}) + ${dot(b, b, n)}"
+
+  /** `cols` of the rows of `from` whose `row_number()` within `partition`
+    * (none: the whole input) in `order` is at most `k`; the rank is
+    * visible to `cols` as `rank`. */
+  def topK(cols: String, from: String, partition: String, order: String,
+           k: Int, rank: String = "rn"): String = {
+    val over = if (partition.isEmpty) s"ORDER BY $order"
+               else s"PARTITION BY $partition ORDER BY $order"
+    s"""SELECT $cols FROM (
+       |  SELECT *, row_number() OVER ($over) AS $rank
+       |  FROM $from)
+       |WHERE $rank <= $k""".stripMargin
+  }
 }

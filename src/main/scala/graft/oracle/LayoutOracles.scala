@@ -5,26 +5,26 @@ package graft.oracle
   */
 object LayoutOracles {
 
-  private def duckMorton(a: String, b: String, bits: Int): String =
+  private def morton(a: String, b: String, bits: Int): String =
     (0 until bits).map { i =>
       s"((($a >> $i) & 1) << ${2 * i}) + ((($b >> $i) & 1) << ${2 * i + 1})"
     }.mkString(" + ")
 
   def zorderLayoutOracle(blockBits: Int = 10): String =
     s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-       |  CAST(${duckMorton("l_partkey", "l_suppkey", 16)} AS BIGINT) AS morton,
-       |  CAST((${duckMorton("l_partkey", "l_suppkey", 16)}) >> $blockBits AS BIGINT)
+       |  CAST(${morton("l_partkey", "l_suppkey", 16)} AS BIGINT) AS morton,
+       |  CAST((${morton("l_partkey", "l_suppkey", 16)}) >> $blockBits AS BIGINT)
        |    AS block
        |FROM lineitem""".stripMargin
 
-  private def duckMortonN(cols: Seq[String], bits: Int): String = {
+  private def mortonN(cols: Seq[String], bits: Int): String = {
     val d = cols.size
     (for { (c, j) <- cols.zipWithIndex; i <- 0 until bits }
       yield s"((($c >> $i) & 1) << ${d * i + j})").mkString(" + ")
   }
 
   def zorder3LayoutOracle(blockBits: Int = 38): String = {
-    val m = duckMortonN(Seq("l_partkey", "l_suppkey", "l_linenumber"), 16)
+    val m = mortonN(Seq("l_partkey", "l_suppkey", "l_linenumber"), 16)
     s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
        |  CAST($m AS BIGINT) AS morton,
        |  CAST(($m) >> $blockBits AS BIGINT) AS block
@@ -148,7 +148,7 @@ object LayoutOracles {
   def optimizeRoundtripOracle(targetBytes: Long = 32 * 1024,
                               nFiles: Int = 97): String =
     s"""WITH c AS (
-       |  SELECT CAST(${duckMorton("(doc_id % 256)", "(n_chars % 256)", 8)}
+       |  SELECT CAST(${morton("(doc_id % 256)", "(n_chars % 256)", 8)}
        |    AS BIGINT) AS curve
        |  FROM documents WHERE n_chars IS NOT NULL),
        |plan AS (

@@ -1,6 +1,7 @@
 package graft.oracle
 
 import graft.ops.RetrievalOps.denseLshCoefs
+import graft.oracle.DuckSql.{orderedSum, topK, words}
 
 /** DuckDB oracles of the retrieval family (`RetrievalOps`): the sparse
   * (BM25), dense and LSH channels as CTE chains, reciprocal-rank fusion,
@@ -17,8 +18,7 @@ object RetrievalOracles {
     sparseChain("", qtermsBody(queryPred), kChannel)
 
   private def qtermsBody(queryPred: String): String =
-    s"""SELECT DISTINCT doc_id AS q_id, unnest(string_split(text, ' ')) AS word
-       |  FROM corpus WHERE $queryPred""".stripMargin
+    s"SELECT DISTINCT doc_id AS q_id, unnest(${words()}) AS word FROM corpus WHERE $queryPred"
 
   /** The sparse chain with a caller-supplied query-term CTE body and a
     * name suffix, so a second scoring pass (PRF) can coexist with the
@@ -27,13 +27,11 @@ object RetrievalOracles {
     s"""qterms$sfx AS (
        |  $qtermsSql),
        |toks$sfx AS (
-       |  SELECT doc_id, word FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM corpus)
+       |  SELECT doc_id, word FROM ($corpusTokens)
        |  WHERE word IN (SELECT word FROM qterms$sfx)),
        |tf$sfx AS (SELECT doc_id, word, count(*) AS tf FROM toks$sfx GROUP BY 1, 2),
        |df$sfx AS (SELECT word, count(DISTINCT doc_id) AS df FROM toks$sfx GROUP BY 1),
-       |dl$sfx AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-       |       FROM corpus),
+       |dl$sfx AS (SELECT doc_id, CAST(len(${words()}) AS BIGINT) AS dl FROM corpus),
        |navg$sfx AS (SELECT CAST(count(*) AS BIGINT) AS n,
        |                CAST(CAST(sum(dl) AS BIGINT) AS DOUBLE) / count(*) AS avgdl
        |         FROM dl$sfx),
@@ -52,28 +50,35 @@ object RetrievalOracles {
        |  WHERE tf.doc_id <> q.q_id),
        |sscored$sfx AS (
        |  SELECT q_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(c ORDER BY word)),
-       |                (acc, x) -> acc + x) AS score
+       |    ${orderedSum("c", "word")} AS score
        |  FROM contribs$sfx GROUP BY 1, 2),
        |stop$sfx AS (
-       |  SELECT q_id, doc_id, n_terms, score, rank FROM (
-       |    SELECT q_id, doc_id, n_terms, score,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY score DESC, doc_id ASC) AS BIGINT) AS rank
-       |    FROM sscored$sfx)
-       |  WHERE rank <= $kChannel)""".stripMargin
+       |${channelTop("n_terms, score", s"sscored$sfx", "score DESC, doc_id ASC", kChannel)})""".stripMargin
+
+  /** `(doc_id, word)`: the space tokens of every `corpus` document. */
+  private val corpusTokens: String =
+    s"SELECT doc_id, unnest(${words()}) AS word FROM corpus"
+
+  /** A channel's ranked list: each query's top `k` of `from`, as
+    * `(q_id, doc_id, cols, rank)`. */
+  private def channelTop(cols: String, from: String, order: String, k: Int): String =
+    topK(s"q_id, doc_id, $cols, rank", from, "q_id", order, k, "rank")
 
   /** DuckDB twin of [[RetrievalOps.bm25Prf]]: first chain at k = m, feedback-doc
     * re-tokenize, occurrence-ranked non-query expansion terms, second
     * chain over the expanded term table. */
   def bm25PrfOracle(nQueries: Int = 8, m: Int = 3, e: Int = 5,
-                    k: Int = 5): String =
+                    k: Int = 5): String = {
+    val weighted =
+      """(SELECT f.q_id, f.word, CAST(f.w AS DOUBLE)
+        |    * ((CAST(ndocs.n_docs - cdf.cdf AS DOUBLE) + 0.5)
+        |       / (CAST(cdf.cdf AS DOUBLE) + 0.5)) AS weight
+        |  FROM fbnew f JOIN cdf ON f.word = cdf.word CROSS JOIN ndocs)""".stripMargin
     s"""WITH corpus AS (SELECT doc_id, text FROM documents),
        |${sparseChain("", qtermsBody(s"doc_id < $nQueries"), m)},
        |fbdocs AS (SELECT q_id, doc_id FROM stop),
        |fbtoks AS (
-       |  SELECT f.q_id, t.word FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM corpus) t
+       |  SELECT f.q_id, t.word FROM ($corpusTokens) t
        |  JOIN fbdocs f ON t.doc_id = f.doc_id),
        |fbcand AS (SELECT q_id, word, CAST(count(*) AS BIGINT) AS w
        |           FROM fbtoks GROUP BY 1, 2),
@@ -82,89 +87,54 @@ object RetrievalOracles {
        |  WHERE NOT EXISTS (SELECT 1 FROM qterms q
        |                    WHERE q.q_id = c.q_id AND q.word = c.word)),
        |cdf AS (
-       |  SELECT word, count(DISTINCT doc_id) AS cdf FROM (
-       |    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM corpus)
+       |  SELECT word, count(DISTINCT doc_id) AS cdf FROM ($corpusTokens)
        |  WHERE word IN (SELECT word FROM fbnew) GROUP BY 1),
        |ndocs AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM corpus),
        |expterms AS (
-       |  SELECT q_id, word FROM (
-       |    SELECT f.q_id, f.word, CAST(row_number() OVER (PARTITION BY f.q_id
-       |      ORDER BY CAST(f.w AS DOUBLE)
-       |        * ((CAST(ndocs.n_docs - cdf.cdf AS DOUBLE) + 0.5)
-       |           / (CAST(cdf.cdf AS DOUBLE) + 0.5)) DESC,
-       |        f.word ASC) AS BIGINT) AS r
-       |    FROM fbnew f JOIN cdf ON f.word = cdf.word CROSS JOIN ndocs)
-       |  WHERE r <= $e),
+       |${topK("q_id, word", weighted, "q_id", "weight DESC, word ASC", e, "r")}),
        |${sparseChain("2",
           "SELECT q_id, word FROM qterms UNION ALL SELECT q_id, word FROM expterms",
           k)}
        |SELECT q_id, doc_id, n_terms, score, rank FROM stop2""".stripMargin
+  }
 
   /** Dense-channel CTE chain (expects `corpus`); terminal CTE `dtop` =
     * (q_id, doc_id, cos, rank ≤ kChannel). Mirrors
     * [[SemanticOracles.hashedTfOracle]]'s hash and [[RetrievalOps.denseRanks]]'s exact
-    * integer dot/norm² with the one-division-two-sqrt cosine. */
-  def denseCtes(queryPred: String, kChannel: Int, dims: Int): String =
+    * integer dot/norm² with the one-division-two-sqrt cosine.
+    *
+    * With `planes` > 0 the candidates are bucket-routed
+    * ([[RetrievalOps.denseRanksLsh]]): the ±1 plane coefficients are
+    * embedded as a VALUES table from the SAME [[RetrievalOps.denseLshCoefs]]
+    * the Spark side compiles in, and plane dots and the bucket id are exact
+    * integer arithmetic on both engines. */
+  def denseCtes(queryPred: String, kChannel: Int, dims: Int, planes: Int = 0): String = {
+    val (bucketCtes, bucketJoin) = if (planes == 0) ("", "") else {
+      val coefRows = denseLshCoefs(planes, dims).zipWithIndex.flatMap {
+        case (cs, p) => cs.zipWithIndex.map { case (c, d) => s"($p, $d, $c)" }
+      }.mkString(", ")
+      (s"""hcoef(plane, dim, coef) AS (VALUES $coefRows),
+          |dbucket AS (
+          |  SELECT doc_id, CAST(sum(CASE WHEN pd > 0 THEN (1::BIGINT << plane)
+          |                               ELSE 0 END) AS BIGINT) AS bucket
+          |  FROM (
+          |    SELECT t.doc_id, h.plane, CAST(sum(t.tf * h.coef) AS BIGINT) AS pd
+          |    FROM dtf t JOIN hcoef h ON t.dim = h.dim GROUP BY 1, 2)
+          |  GROUP BY 1),
+          |""".stripMargin,
+       """
+         |  JOIN dbucket bt ON bt.doc_id = t.doc_id
+         |  JOIN dbucket bq ON bq.doc_id = q.q_id AND bq.bucket = bt.bucket""".stripMargin)
+    }
     s"""dtf AS (
-       |  SELECT doc_id, ${DuckSql.hash64Duck("w")} % $dims AS dim,
-       |    CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus)
-       |  WHERE len(w) > 0 GROUP BY 1, 2),
-       |qdtf AS (SELECT doc_id AS q_id, dim, tf AS qtf FROM dtf WHERE $queryPred),
-       |n2 AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2
-       |       FROM dtf GROUP BY 1),
-       |ddot AS (
-       |  SELECT q.q_id, t.doc_id, CAST(sum(t.tf * q.qtf) AS BIGINT) AS dot
-       |  FROM dtf t JOIN qdtf q ON t.dim = q.dim
-       |  WHERE t.doc_id <> q.q_id GROUP BY 1, 2),
-       |dscored AS (
-       |  SELECT d.q_id, d.doc_id,
-       |    CAST(d.dot AS DOUBLE)
-       |      / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nd.n2 AS DOUBLE))) AS cos
-       |  FROM ddot d
-       |  JOIN n2 nq ON d.q_id = nq.doc_id
-       |  JOIN n2 nd ON d.doc_id = nd.doc_id),
-       |dtop AS (
-       |  SELECT q_id, doc_id, cos, rank FROM (
-       |    SELECT q_id, doc_id, cos,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY cos DESC, doc_id ASC) AS BIGINT) AS rank
-       |    FROM dscored)
-       |  WHERE rank <= $kChannel)""".stripMargin
-
-  /** Bucket-routed dense-channel CTE chain (expects `corpus`);
-    * terminal CTE `dtop`, same shape as [[denseCtes]] so [[rrfCtes]]
-    * composes unchanged. The ±1 plane coefficients are embedded as a
-    * VALUES table from the SAME [[RetrievalOps.denseLshCoefs]] the Spark side
-    * compiles in; plane dots and the bucket id are exact integer
-    * arithmetic on both engines. */
-  def denseLshCtes(queryPred: String, kChannel: Int, dims: Int,
-                   planes: Int): String = {
-    val coefRows = denseLshCoefs(planes, dims).zipWithIndex.flatMap {
-      case (cs, p) => cs.zipWithIndex.map { case (c, d) => s"($p, $d, $c)" }
-    }.mkString(", ")
-    s"""dtf AS (
-       |  SELECT doc_id, ${DuckSql.hash64Duck("w")} % $dims AS dim,
-       |    CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus)
-       |  WHERE len(w) > 0 GROUP BY 1, 2),
-       |hcoef(plane, dim, coef) AS (VALUES $coefRows),
-       |dbucket AS (
-       |  SELECT doc_id, CAST(sum(CASE WHEN pd > 0 THEN (1::BIGINT << plane)
-       |                               ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM (
-       |    SELECT t.doc_id, h.plane, CAST(sum(t.tf * h.coef) AS BIGINT) AS pd
-       |    FROM dtf t JOIN hcoef h ON t.dim = h.dim GROUP BY 1, 2)
-       |  GROUP BY 1),
-       |qdtf AS (SELECT doc_id AS q_id, dim, tf AS qtf FROM dtf WHERE $queryPred),
+       |${SemanticOracles.hashedTf("corpus", dims)}),
+       |${bucketCtes}qdtf AS (SELECT doc_id AS q_id, dim, tf AS qtf FROM dtf WHERE $queryPred),
        |n2 AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2
        |       FROM dtf GROUP BY 1),
        |ddot AS (
        |  SELECT q.q_id, t.doc_id, CAST(sum(t.tf * q.qtf) AS BIGINT) AS dot
        |  FROM dtf t
-       |  JOIN qdtf q ON t.dim = q.dim
-       |  JOIN dbucket bt ON bt.doc_id = t.doc_id
-       |  JOIN dbucket bq ON bq.doc_id = q.q_id AND bq.bucket = bt.bucket
+       |  JOIN qdtf q ON t.dim = q.dim$bucketJoin
        |  WHERE t.doc_id <> q.q_id GROUP BY 1, 2),
        |dscored AS (
        |  SELECT d.q_id, d.doc_id,
@@ -174,12 +144,7 @@ object RetrievalOracles {
        |  JOIN n2 nq ON d.q_id = nq.doc_id
        |  JOIN n2 nd ON d.doc_id = nd.doc_id),
        |dtop AS (
-       |  SELECT q_id, doc_id, cos, rank FROM (
-       |    SELECT q_id, doc_id, cos,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY cos DESC, doc_id ASC) AS BIGINT) AS rank
-       |    FROM dscored)
-       |  WHERE rank <= $kChannel)""".stripMargin
+       |${channelTop("cos", "dscored", "cos DESC, doc_id ASC", kChannel)})""".stripMargin
   }
 
   /** Persisted-index ANN dense-channel CTE chain (expects `corpus`);
@@ -188,68 +153,40 @@ object RetrievalOracles {
     * derivation in SQL: hashed-TF 64-dim vectors, seed codebook
     * (vec_id < kCode, code = seed id — [[PqOps.trainCodebook]]'s
     * convention), per-subspace argmin code assignment, hyperplane
-    * buckets ([[SimilarityOracles.duckBucket]] — identical plane
+    * buckets ([[SimilarityOracles.lshBucket]] — identical plane
     * literals), hamming-≤1 multiprobe candidacy as an INDEPENDENT
     * xor+popcount formulation of the Spark side's probe-array explode,
     * ADC terms summed by an ORDERED fold over s, self excluded,
     * (adc_dist ASC, nn_id ASC) tiebreak. `queryPredVec` is a predicate
     * over the query-side alias `d` (e.g. "d.vec_id < 8"). */
   def annDocCtes(queryPredVec: String, kChannel: Int, dims: Int = 64,
-                 m: Int = 4, kCode: Int = 16, nPlanes: Int = 8): String = {
-    val subDim = 64 / m
-    def dotR(a: String, b: String): String =
-      s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |      list_transform(range(1, ${subDim + 1}), i -> $a[CAST(i AS INT)] * $b[CAST(i AS INT)])), (acc, x) -> acc + x)""".stripMargin
+                 m: Int = 4, kCode: Int = 16, nPlanes: Int = 8): String =
     s"""adtf AS (
-       |  SELECT doc_id, ${DuckSql.hash64Duck("w")} % $dims AS dim,
-       |    CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus)
-       |  WHERE len(w) > 0 GROUP BY 1, 2),
+       |${SemanticOracles.hashedTf("corpus", dims)}),
        |abase AS (
        |  SELECT doc_id AS vec_id,
        |    list_transform(range(0, $dims), d ->
        |      CAST(coalesce(element_at(mp, d)[1], 0) AS DOUBLE)) AS emb
        |  FROM (SELECT doc_id, map_from_entries(list({'k': dim, 'v': tf})) AS mp
        |        FROM adtf GROUP BY 1)),
-       |asubs AS (
-       |  SELECT vec_id, s, emb[CAST(s * $subDim + 1 AS INT):CAST(s * $subDim + $subDim AS INT)] AS xs
-       |  FROM abase, (SELECT unnest(range(0, $m)) AS s)),
-       |acb AS (SELECT s, vec_id AS code, xs AS cs FROM asubs WHERE vec_id < $kCode),
-       |aidists AS (
-       |  SELECT d.vec_id, d.s, c.code,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS dist
-       |  FROM asubs d JOIN acb c ON d.s = c.s),
-       |aicodes AS (
-       |  SELECT vec_id, s, code
-       |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, s
-       |                                     ORDER BY dist ASC, code ASC) AS rn
-       |        FROM aidists)
-       |  WHERE rn = 1),
+       |${SimilarityOracles.pqCtes("abase", m, kCode, p = "a")},
        |abucketed AS (
-       |  SELECT vec_id, ${SimilarityOracles.duckBucket(nPlanes)} AS bucket FROM abase),
+       |  SELECT vec_id, ${SimilarityOracles.lshBucket(nPlanes)} AS bucket FROM abase),
        |aterms AS (
        |  SELECT d.vec_id AS q_id, w.vec_id AS nn_id, w.s,
-       |    (${dotR("d.xs", "d.xs")} - 2.0 * ${dotR("d.xs", "c.cs")}) + ${dotR("c.cs", "c.cs")} AS term
+       |    ${DuckSql.sqDist("d.xs", "c.cs", 64 / m)} AS term
        |  FROM asubs d
        |  JOIN abucketed db ON db.vec_id = d.vec_id
-       |  JOIN aicodes w ON w.s = d.s AND w.vec_id <> d.vec_id
+       |  JOIN acodes w ON w.s = d.s AND w.vec_id <> d.vec_id
        |  JOIN abucketed wb ON wb.vec_id = w.vec_id
        |   AND bit_count(xor(wb.bucket, db.bucket)) <= 1
        |  JOIN acb c ON c.s = w.s AND c.code = w.code
        |  WHERE $queryPredVec),
        |ascored AS (
-       |  SELECT q_id, nn_id,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY s)),
-       |                (acc, x) -> acc + x) AS adc_dist
+       |  SELECT q_id, nn_id, ${orderedSum("term", "s")} AS adc_dist
        |  FROM aterms GROUP BY 1, 2),
        |dtop AS (
-       |  SELECT q_id, nn_id AS doc_id, adc_dist, rank FROM (
-       |    SELECT q_id, nn_id, adc_dist,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY adc_dist ASC, nn_id ASC) AS BIGINT) AS rank
-       |    FROM ascored)
-       |  WHERE rank <= $kChannel)""".stripMargin
-  }
+       |${topK("q_id, nn_id AS doc_id, adc_dist, rank", "ascored", "q_id", "adc_dist ASC, nn_id ASC", kChannel, "rank")})""".stripMargin
 
   def hybridRrfIndexOracle(nQueries: Int = 8, kChannel: Int = 10,
                            k: Int = 5, dims: Int = 64, m: Int = 4,
@@ -265,7 +202,7 @@ object RetrievalOracles {
     val pred = s"doc_id < $nQueries"
     s"""WITH corpus AS (SELECT doc_id, text FROM documents),
        |${sparseCtes(pred, kChannel)},
-       |${denseLshCtes(pred, kChannel, dims, planes)},
+       |${denseCtes(pred, kChannel, dims, planes)},
        |${rrfCtes(k)}
        |SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM htop""".stripMargin
   }
@@ -287,12 +224,7 @@ object RetrievalOracles {
        |  FROM stop s FULL JOIN dtop d
        |    ON s.q_id = d.q_id AND s.doc_id = d.doc_id),
        |htop AS (
-       |  SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM (
-       |    SELECT q_id, doc_id, sparse_rank, dense_rank, rrf,
-       |      CAST(row_number() OVER (PARTITION BY q_id
-       |        ORDER BY rrf DESC, doc_id ASC) AS BIGINT) AS rank
-       |    FROM fused)
-       |  WHERE rank <= $k)""".stripMargin
+       |${channelTop("sparse_rank, dense_rank, rrf", "fused", "rrf DESC, doc_id ASC", k)})""".stripMargin
 
   def hybridRrfOracle(nQueries: Int = 8, kChannel: Int = 10, k: Int = 5,
                       dims: Int = 64): String = {
@@ -338,8 +270,7 @@ object RetrievalOracles {
                                         lsh: Boolean): String = {
     val pred = "doc_id >= 100000 AND doc_id < 100080"
     retrievalRecallOracleWith(corpusCte, leadCols,
-      if (lsh) denseLshCtes(pred, kChannel, dims, 8)
-      else denseCtes(pred, kChannel, dims),
+      denseCtes(pred, kChannel, dims, if (lsh) 8 else 0),
       kChannel, k)
   }
 

@@ -1,61 +1,37 @@
 package graft.oracle
 
+import graft.oracle.DuckSql.{dot, hash64, orderedSum, topK, words}
+import graft.oracle.SimilarityOracles.{augmentedEmbeddings, cosine, normed}
+
 /** DuckDB oracles of the semantic family (`SemanticOps`): k-means
   * clusters, semantic dedup and decontamination, centroid classifiers,
   * DSIR importance weights and triplet mining.
   */
 object SemanticOracles {
 
-  def semanticClustersOracle(k: Int = 8): String = {
-    val d = SimilarityOracles.duckDot _
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |corpus AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${d("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug),
-       |seeds AS (
-       |  SELECT vec_id AS seed_id, emb AS s_emb, norm AS s_norm
-       |  FROM corpus WHERE vec_id < $k)
-       |SELECT vec_id, CAST(seed_id AS BIGINT) AS cluster, score AS c_score
-       |FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                               ORDER BY score DESC, seed_id ASC) AS rn
-       |  FROM (
-       |    SELECT c.vec_id, s.seed_id,
-       |      ${d("c.emb", "s.s_emb")} / (c.norm * s.s_norm) AS score
-       |    FROM corpus c, seeds s))
-       |WHERE rn = 1""".stripMargin
-  }
-
-  def semanticDedupOracle(k: Int = 8, minCos: Double = 0.99): String = {
-    val d = SimilarityOracles.duckDot _
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |corpus AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${d("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug),
+  /** The augmented embeddings as `corpus(vec_id, emb, norm)`, the first
+    * `k` as `seeds`, and `assigned`: each vector's most similar seed
+    * (`cluster`, by cosine `c_score`, ties to the lower seed) with `cols`
+    * of the vector carried. */
+  private def seededCtes(k: Int, cols: String): String =
+    s"""WITH ${augmentedEmbeddings("embedding")},
+       |corpus AS (${normed("aug")}),
        |seeds AS (
        |  SELECT vec_id AS seed_id, emb AS s_emb, norm AS s_norm
        |  FROM corpus WHERE vec_id < $k),
        |assigned AS (
-       |  SELECT vec_id, emb, norm, CAST(seed_id AS BIGINT) AS cluster,
-       |         score AS c_score
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                                 ORDER BY score DESC, seed_id ASC) AS rn
-       |    FROM (
-       |      SELECT c.vec_id, c.emb, c.norm, s.seed_id,
-       |        ${d("c.emb", "s.s_emb")} / (c.norm * s.s_norm) AS score
-       |      FROM corpus c, seeds s))
-       |  WHERE rn = 1),
+       |${topK(s"vec_id, ${cols}CAST(seed_id AS BIGINT) AS cluster, score AS c_score",
+              s"""(SELECT c.*, s.seed_id,
+                 |    ${dot("c.emb", "s.s_emb")} / (c.norm * s.s_norm) AS score
+                 |  FROM corpus c, seeds s)""".stripMargin,
+              "vec_id", "score DESC, seed_id ASC", 1)})""".stripMargin
+
+  def semanticClustersOracle(k: Int = 8): String =
+    s"""${seededCtes(k, "")}
+       |SELECT vec_id, cluster, c_score FROM assigned""".stripMargin
+
+  def semanticDedupOracle(k: Int = 8, minCos: Double = 0.99): String =
+    s"""${seededCtes(k, "emb, norm, ")},
        |ranked AS (
        |  SELECT *, row_number() OVER (PARTITION BY cluster
        |                               ORDER BY c_score ASC, vec_id ASC) AS prio
@@ -64,58 +40,50 @@ object SemanticOracles {
        |  SELECT DISTINCT b.vec_id AS dup_id
        |  FROM ranked a JOIN ranked b
        |    ON a.cluster = b.cluster AND a.prio < b.prio
-       |  WHERE ${d("a.emb", "b.emb")} / (a.norm * b.norm) >= $minCos)
+       |  WHERE ${cosine("a", "b")} >= $minCos)
        |SELECT vec_id, cluster, c_score FROM ranked
        |WHERE vec_id NOT IN (SELECT dup_id FROM dups)""".stripMargin
-  }
 
-  private def duckContaminated(evalMod: Int): String = {
-    val d = SimilarityOracles.duckDot _
+  /** `embeddings` plus a planted copy (vec_id + 20001) of every eval
+    * vector (vec_id % evalMod = 0), as `corpus(vec_id, emb, norm)`. */
+  private def contaminatedCtes(evalMod: Int): String =
     s"""aug AS (
        |  SELECT vec_id, embedding FROM embeddings
        |  UNION ALL
        |  SELECT vec_id + 20001 AS vec_id, embedding
        |  FROM embeddings WHERE vec_id % $evalMod = 0),
-       |corpus AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${d("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug)""".stripMargin
-  }
+       |corpus AS (${normed("aug")})""".stripMargin
 
   /** DuckDB cannot bind a correlated outer column inside a list lambda
     * (the dot-product fold), so the oracle phrases the anti-join as a
     * plain join into a `hits` CTE plus NOT IN — semantically identical.
     */
-  def semanticDecontaminateOracle(minCos: Double = 0.99, evalMod: Int = 50): String = {
-    val d = SimilarityOracles.duckDot _
-    s"""WITH ${duckContaminated(evalMod)},
+  def semanticDecontaminateOracle(minCos: Double = 0.99, evalMod: Int = 50): String =
+    s"""WITH ${contaminatedCtes(evalMod)},
        |hits AS (
        |  SELECT DISTINCT t.vec_id
        |  FROM corpus t JOIN corpus e
        |    ON t.vec_id % $evalMod <> 0 AND e.vec_id % $evalMod = 0
-       |  WHERE ${d("t.emb", "e.emb")} / (t.norm * e.norm) >= $minCos)
+       |  WHERE ${cosine("t", "e")} >= $minCos)
        |SELECT vec_id FROM corpus
        |WHERE vec_id % $evalMod <> 0
        |  AND vec_id NOT IN (SELECT vec_id FROM hits)""".stripMargin
-  }
 
   def semanticDecontaminateLshOracle(minCos: Double = 0.99, evalMod: Int = 50,
-                                     nPlanes: Int = 8): String = {
-    val d = SimilarityOracles.duckDot _
-    s"""WITH ${duckContaminated(evalMod)},
+                                     nPlanes: Int = 8): String =
+    s"""WITH ${contaminatedCtes(evalMod)},
        |bucketed AS (
-       |  SELECT vec_id, emb, norm, ${SimilarityOracles.duckBucket(nPlanes)} AS bucket
+       |  SELECT vec_id, emb, norm, ${SimilarityOracles.lshBucket(nPlanes)} AS bucket
        |  FROM corpus),
        |hits AS (
        |  SELECT DISTINCT t.vec_id
        |  FROM bucketed t JOIN bucketed e
        |    ON t.vec_id % $evalMod <> 0 AND e.vec_id % $evalMod = 0
        |      AND e.bucket = t.bucket
-       |  WHERE ${d("t.emb", "e.emb")} / (t.norm * e.norm) >= $minCos)
+       |  WHERE ${cosine("t", "e")} >= $minCos)
        |SELECT vec_id FROM bucketed
        |WHERE vec_id % $evalMod <> 0
        |  AND vec_id NOT IN (SELECT vec_id FROM hits)""".stripMargin
-  }
 
   /** Both survivor oracles nested verbatim; the train-side id set is
     * re-derived from the same planting rule (originals % evalMod ≠ 0
@@ -149,45 +117,19 @@ object SemanticOracles {
        |    / NULLIF(CAST(n_removed_exact AS DOUBLE), 0.0) AS recall
        |FROM agg""".stripMargin
 
-  def hashedTfOracle(dims: Int = 64): String =
-    s"""SELECT doc_id, ${DuckSql.hash64Duck("w")} % $dims AS dim,
-       |  CAST(count(*) AS BIGINT) AS tf
-       |FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-       |WHERE len(w) > 0
-       |GROUP BY 1, 2""".stripMargin
+  /** [[SemanticOps.hashedTf]] over `from(doc_id, text)`: (doc_id, dim, tf),
+    * each non-empty space token hashed into one of `dims` buckets. */
+  private[oracle] def hashedTf(from: String, dims: Int): String =
+    s"""SELECT doc_id, ${hash64("w")} % $dims AS dim, CAST(count(*) AS BIGINT) AS tf
+       |FROM (SELECT doc_id, unnest(${words()}) AS w FROM $from)
+       |WHERE len(w) > 0 GROUP BY 1, 2""".stripMargin
 
-  def clusterCapSampleOracle(k: Int = 8, cap: Int = 32): String = {
-    val d = SimilarityOracles.duckDot _
-    s"""WITH aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 10000 AS vec_id, embedding
-       |  FROM embeddings WHERE vec_id % 25 = 0),
-       |corpus AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-       |    sqrt(${d("(embedding::DOUBLE[])", "(embedding::DOUBLE[])")}) AS norm
-       |  FROM aug),
-       |seeds AS (
-       |  SELECT vec_id AS seed_id, emb AS s_emb, norm AS s_norm
-       |  FROM corpus WHERE vec_id < $k),
-       |labeled AS (
-       |  SELECT vec_id, CAST(seed_id AS BIGINT) AS cluster
-       |  FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id
-       |                                 ORDER BY score DESC, seed_id ASC) AS rn
-       |    FROM (
-       |      SELECT c.vec_id, s.seed_id,
-       |        ${d("c.emb", "s.s_emb")} / (c.norm * s.s_norm) AS score
-       |      FROM corpus c, seeds s))
-       |  WHERE rn = 1),
-       |picked AS (
-       |  SELECT vec_id, cluster,
-       |    CAST(row_number() OVER (PARTITION BY cluster ORDER BY
-       |      ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 5, 4))::BIGINT,
-       |      vec_id) AS BIGINT) AS rn
-       |  FROM labeled)
-       |SELECT vec_id, cluster, rn FROM picked WHERE rn <= $cap""".stripMargin
-  }
+  def hashedTfOracle(dims: Int = 64): String = hashedTf("documents", dims)
+
+  def clusterCapSampleOracle(k: Int = 8, cap: Int = 32): String =
+    s"""${seededCtes(k, "")}
+       |${topK("vec_id, cluster, CAST(rn AS BIGINT) AS rn", "assigned", "cluster",
+              "('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 5, 4))::BIGINT, vec_id", cap)}""".stripMargin
 
   def centroidConfusionOracle(dims: Int = 4096): String =
     s"""WITH cls AS (${centroidClassifyOracle(dims)})
@@ -195,23 +137,20 @@ object SemanticOracles {
        |FROM cls GROUP BY 1, 2""".stripMargin
 
   def centroidClassifyOracle(dims: Int = 4096): String = {
-    val h = DuckSql.hash64Duck("w")
+    val h = hash64("w")
     s"""WITH tr AS (
        |  SELECT lang AS label, $h % $dims AS dim
-       |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS w
+       |  FROM (SELECT lang, unnest(${words()}) AS w
        |        FROM documents WHERE doc_id % 10 <> 0)
        |  WHERE len(w) > 0),
        |model AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS w
        |          FROM tr GROUP BY 1, 2),
        |norms AS (
-       |  SELECT label, sqrt(list_reduce(
-       |    list_prepend(CAST(0.0 AS DOUBLE),
-       |      list(CAST(w AS DOUBLE) * CAST(w AS DOUBLE) ORDER BY dim)),
-       |    (acc, x) -> acc + x)) AS cnorm
+       |  SELECT label, sqrt(${orderedSum("CAST(w AS DOUBLE) * CAST(w AS DOUBLE)", "dim")}) AS cnorm
        |  FROM model GROUP BY label),
        |ev AS (
        |  SELECT doc_id, $h % $dims AS dim
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+       |  FROM (SELECT doc_id, unnest(${words()}) AS w
        |        FROM documents WHERE doc_id % 10 = 0)
        |  WHERE len(w) > 0),
        |feats AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS c
@@ -227,24 +166,21 @@ object SemanticOracles {
        |      (sqrt(CAST(dn.n2 AS DOUBLE)) * n.cnorm) AS score
        |  FROM dots d JOIN dn USING (doc_id) JOIN norms n USING (label)),
        |best AS (
-       |  SELECT *, row_number() OVER (PARTITION BY doc_id
-       |                               ORDER BY score DESC, label) AS rn
-       |  FROM scoredall)
+       |${topK("doc_id, label, score", "scoredall", "doc_id", "score DESC, label", 1)})
        |SELECT b.doc_id, d.lang AS actual, b.label AS pred, b.score
-       |FROM best b JOIN documents d ON b.doc_id = d.doc_id
-       |WHERE b.rn = 1""".stripMargin
+       |FROM best b JOIN documents d ON b.doc_id = d.doc_id""".stripMargin
   }
 
   private def dsirScoredSql(dims: Int): String =
     s"""held AS (SELECT min(source) AS src FROM documents),
        |ttok AS (
-       |  SELECT ${DuckSql.hash64Duck("w")} % $dims AS dim
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w
+       |  SELECT ${hash64("w")} % $dims AS dim
+       |  FROM (SELECT unnest(${words()}) AS w
        |        FROM documents, held WHERE source = held.src)
        |  WHERE len(w) > 0),
        |rtok AS (
-       |  SELECT doc_id, ${DuckSql.hash64Duck("w")} % $dims AS dim
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+       |  SELECT doc_id, ${hash64("w")} % $dims AS dim
+       |  FROM (SELECT doc_id, unnest(${words()}) AS w
        |        FROM documents, held WHERE source <> held.src)
        |  WHERE len(w) > 0),
        |tdist AS (SELECT dim, CAST(count(*) AS BIGINT) AS cnt_t FROM ttok GROUP BY 1),
@@ -264,8 +200,7 @@ object SemanticOracles {
        |docscores AS (
        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dims,
        |    CAST(sum(c) AS BIGINT) AS n_toks,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(v ORDER BY dim)),
-       |                (acc, x) -> acc + x) AS score_sum
+       |    ${orderedSum("v", "dim")} AS score_sum
        |  FROM scored GROUP BY doc_id)""".stripMargin
 
   /** Oracle for the registered `dsir_ratios` query: the frozen model
@@ -295,7 +230,7 @@ object SemanticOracles {
   /** DuckDB twin of [[SemanticOps.tripletMining]] — composes negatives over the
     * shared banded-pair CTE chain ([[DedupOracles.minhashPairsCtesOver]]). */
   def tripletMiningOracle(buckets: Int = 64): String = {
-    val h = DuckSql.hash64Duck _
+    val h = hash64 _
     s"""${DedupOracles.minhashPairsCtesOver(DedupOracles.corpusShingledCte)},
        |negpool AS (
        |  SELECT doc_id AS cand,
@@ -313,12 +248,8 @@ object SemanticOracles {
        |    AND NOT EXISTS (SELECT 1 FROM pairs x
        |                    WHERE (x.doc_a = a.anchor_id AND x.doc_b = p.cand)
        |                       OR (x.doc_a = p.cand AND x.doc_b = a.anchor_id)))
-       |SELECT anchor_id, positive_id, negative_id, jaccard FROM (
-       |  SELECT anchor_id, positive_id, jaccard, cand AS negative_id,
-       |    row_number() OVER (PARTITION BY anchor_id, positive_id
-       |      ORDER BY pick, cand) AS r
-       |  FROM negcand)
-       |WHERE r = 1""".stripMargin
+       |${topK("anchor_id, positive_id, cand AS negative_id, jaccard", "negcand",
+              "anchor_id, positive_id", "pick, cand", 1)}""".stripMargin
   }
 
   /** DuckDB twin of [[SemanticOps.tripletCoverage]] — the triplet derivation of

@@ -431,18 +431,18 @@ object TextOracles {
     * one derivation ([[hashSplitOracle]] and the split-leakage oracle
     * both compose it, so the split rule cannot silently diverge
     * between them). */
-  def splitBucketDuck(id: String): String =
+  def splitBucket(id: String): String =
     s"('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 2))::BIGINT"
 
-  def splitLabelDuck(id: String): String =
-    s"""CASE WHEN ${splitBucketDuck(id)} < 230 THEN 'train'
-       |       WHEN ${splitBucketDuck(id)} < 243 THEN 'valid'
+  def splitLabel(id: String): String =
+    s"""CASE WHEN ${splitBucket(id)} < 230 THEN 'train'
+       |       WHEN ${splitBucket(id)} < 243 THEN 'valid'
        |       ELSE 'test' END""".stripMargin
 
   val hashSplitOracle: String =
     s"""SELECT doc_id, source,
-       |  ${splitBucketDuck("doc_id")} AS bucket,
-       |  ${splitLabelDuck("doc_id")} AS split
+       |  ${splitBucket("doc_id")} AS bucket,
+       |  ${splitLabel("doc_id")} AS split
        |FROM documents""".stripMargin
 
   /** Same distinct-then-rank in DuckDB, on the sharded packing oracle. */
