@@ -2,6 +2,7 @@ package graft.oracle
 
 import graft.functions.Winnow60.DefaultWindow
 import graft.ops.DedupOps.defaultMaxBucket
+import graft.oracle.DuckSql.{hash64, md5Bits, positions, topK, words}
 
 /** DuckDB oracles of the dedup and decontamination family (`DedupOps`,
   * `Winnow60`): exact, MinHash/LSH, SimHash, n-gram, line/paragraph and
@@ -56,7 +57,7 @@ object DedupOracles {
        |),
        |corpus AS (
        |  SELECT * FROM corpus_all
-       |  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':r$seed'), 1, 2))::BIGINT < $sampleBuckets
+       |  WHERE ${md5Bits(s"CAST(doc_id AS VARCHAR) || ':r$seed'", 1, 2)} < $sampleBuckets
        |)""".stripMargin
 
   /** CO-ADDRESSED sampled corpus: the bucket is hashed from the BASE id
@@ -75,7 +76,7 @@ object DedupOracles {
        |),
        |corpus AS (
        |  SELECT * FROM corpus_all
-       |  WHERE ('0x' || substr(md5(CAST(doc_id % 100000 AS VARCHAR) || ':r$seed'), 1, 2))::BIGINT < $sampleBuckets
+       |  WHERE ${md5Bits(s"CAST(doc_id % 100000 AS VARCHAR) || ':r$seed'", 1, 2)} < $sampleBuckets
        |)""".stripMargin
 
   /** The doc_id → source map of [[DedupOps.augmentedSourced]] as a DuckDB CTE
@@ -90,10 +91,10 @@ object DedupOracles {
       |  FROM documents WHERE doc_id % 15 = 0""".stripMargin
 
   private val shingledCte =
-    """shingled AS (
+    s"""shingled AS (
       |  SELECT doc_id,
       |    [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)] AS shingles
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM corpus)
+      |  FROM (SELECT doc_id, ${words()} AS toks FROM corpus)
       |  WHERE len(toks) >= 3
       |)""".stripMargin
 
@@ -103,7 +104,7 @@ object DedupOracles {
        |  SELECT doc_id,
        |    list_transform(range(0, $numPerm), p ->
        |      list_min(list_transform(shingles, s ->
-       |        ${DuckSql.hash64("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
+       |        ${hash64("CAST(p AS VARCHAR) || ':' || s")}))) AS sig
        |  FROM shingled)""".stripMargin
 
   /** `bands` (doc_id, band, band_key) over `sigs`: the DuckDB banding. */
@@ -194,16 +195,24 @@ object DedupOracles {
   // lazy: corpusShingledCte is declared later in this object
   lazy val simhashShinglesOracle: String =
     s"""$corpusShingledCte,
-       |tok AS (
-       |  SELECT doc_id, ${DuckSql.hash64("unnest(shingles)")} AS h
-       |  FROM shingled),
+       |${simhashCtes("unnest(shingles)", "shingled")}
+       |SELECT doc_id, simhash FROM sigs""".stripMargin
+
+  /** [[DedupOps.simhash]] over the `tokens` (an expression) of each `from`
+    * row: `tok` hashes them, `votes` sums each of the 60 bits' ±1 votes
+    * and `sigs` holds (doc_id, simhash). */
+  private def simhashCtes(tokens: String, from: String): String =
+    s"""tok AS (
+       |  SELECT doc_id, ${hash64(tokens)} AS h
+       |  FROM $from),
        |votes AS (
        |  SELECT doc_id, b,
        |    sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM tok, range(0, 60) t(b) GROUP BY 1, 2)
-       |SELECT doc_id,
-       |  CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-       |FROM votes GROUP BY 1""".stripMargin
+       |  FROM tok, range(0, 60) t(b) GROUP BY 1, 2),
+       |sigs AS (
+       |  SELECT doc_id,
+       |    CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
+       |  FROM votes GROUP BY 1)""".stripMargin
 
   /** Clusters oracle: same pair graph, components via a recursive CTE
     * (label-set propagation, min at the end) — an independent fixpoint
@@ -252,15 +261,10 @@ object DedupOracles {
        |sized AS (
        |  SELECT c.label, c.doc_id, CAST(length(a.text) AS BIGINT) AS len
        |  FROM clusters c JOIN corpus a ON c.doc_id = a.doc_id),
-       |ranked AS (
-       |  SELECT label, doc_id, len,
-       |    count(*) OVER (PARTITION BY label) AS cluster_size,
-       |    row_number() OVER (PARTITION BY label
-       |      ORDER BY len DESC, doc_id ASC) AS rn
-       |  FROM sized)
-       |SELECT label, doc_id AS rep_doc_id,
-       |  CAST(cluster_size AS BIGINT) AS cluster_size, len AS rep_len
-       |FROM ranked WHERE rn = 1""".stripMargin
+       |counted AS (
+       |  SELECT *, count(*) OVER (PARTITION BY label) AS cluster_size FROM sized)
+       |${topK("label, doc_id AS rep_doc_id, CAST(cluster_size AS BIGINT) AS cluster_size, len AS rep_len",
+              "counted", "label", "len DESC, doc_id ASC", 1)}""".stripMargin
 
   /** Paragraph-dedup oracle: same literal segmentation, same global
     * first-occurrence rank, string_agg reassembly ordered by position —
@@ -269,14 +273,7 @@ object DedupOracles {
     */
   def paragraphDedupOracle(sep: String = ". "): String = {
     val q = sep.replace("'", "''")
-    s"""WITH arrs AS (
-      |  SELECT doc_id, list_filter(string_split(text, '$q'), s -> len(s) > 0) AS arr
-      |  FROM documents),
-      |segs AS (
-      |  SELECT doc_id, CAST(len(arr) AS BIGINT) AS n_total, i AS pos, arr[i] AS seg
-      |  FROM arrs, (SELECT unnest(range(1,
-      |         (SELECT CAST(max(len(arr)) AS BIGINT) + 1 FROM arrs))) AS i) t
-      |  WHERE len(arr) > 0 AND i <= len(arr)),
+    s"""WITH ${segmentCtes("documents", q)},
       |ranked AS (
       |  SELECT *, row_number() OVER (PARTITION BY md5(seg) ORDER BY doc_id, pos) AS rn
       |  FROM segs)
@@ -294,14 +291,7 @@ object DedupOracles {
     */
   def lineDedupOracle(sep: String = ". "): String = {
     val q = sep.replace("'", "''")
-    s"""WITH arrs AS (
-       |  SELECT doc_id, list_filter(string_split(text, '$q'), s -> len(s) > 0) AS arr
-       |  FROM documents),
-       |segs AS (
-       |  SELECT doc_id, arr, CAST(len(arr) AS BIGINT) AS n_total, i AS pos, arr[i] AS seg
-       |  FROM arrs, (SELECT unnest(range(1,
-       |         (SELECT CAST(max(len(arr)) AS BIGINT) + 1 FROM arrs))) AS i) t
-       |  WHERE len(arr) > 0 AND i <= len(arr))
+    s"""WITH ${segmentCtes("documents", q)}
        |SELECT doc_id,
        |  string_agg(seg, '$q' ORDER BY pos) AS text_dedup,
        |  count(*) AS n_kept,
@@ -317,14 +307,7 @@ object DedupOracles {
   def boilerplateStripOracle(sep: String = ". ", maxDf: Long = 1L): String = {
     val q = sep.replace("'", "''")
     s"""WITH $augmentedSql,
-      |arrs AS (
-      |  SELECT doc_id, list_filter(string_split(text, '$q'), s -> len(s) > 0) AS arr
-      |  FROM corpus),
-      |segs AS (
-      |  SELECT doc_id, CAST(len(arr) AS BIGINT) AS n_total, i AS pos, arr[i] AS seg
-      |  FROM arrs, (SELECT unnest(range(1,
-      |         (SELECT CAST(max(len(arr)) AS BIGINT) + 1 FROM arrs))) AS i) t
-      |  WHERE len(arr) > 0 AND i <= len(arr)),
+      |${segmentCtes("corpus", q)},
       |rare AS (
       |  SELECT md5(seg) AS h FROM segs
       |  GROUP BY 1 HAVING count(DISTINCT doc_id) <= $maxDf)
@@ -336,21 +319,41 @@ object DedupOracles {
       |GROUP BY doc_id, n_total""".stripMargin
   }
 
-  /** Positional gram CTE twin of [[gramCtes]] (positions KEPT — spans
-    * need them) + the same interval-merge arithmetic as the Spark side. */
-  private def gramPosCtes(n: Int): String =
+  /** `segs(doc_id, arr, n_total, pos, seg)`: the non-empty
+    * `q`-separated segments `arr` of each `from(doc_id, text)` document,
+    * one row per segment at its 1-based position. */
+  private def segmentCtes(from: String, q: String): String =
+    s"""arrs AS (
+       |  SELECT doc_id, list_filter(string_split(text, '$q'), s -> len(s) > 0) AS arr
+       |  FROM $from),
+       |segs AS (
+       |  SELECT doc_id, arr, CAST(len(arr) AS BIGINT) AS n_total, i AS pos, arr[i] AS seg
+       |  FROM arrs, ${positions("len(arr)")})""".stripMargin
+
+  /** The benchmark slice that decontamination tests against, and the
+    * rest of the corpus (lockstep with [[DedupOps.decontaminate]]). */
+  private val benchDocs = "doc_id % 50 = 0"
+  private val trainDocs = "doc_id % 50 <> 0"
+
+  /** Word n-gram digests (lockstep with [[DedupOps.gramDigests]]):
+    * `gpos(doc_id, i, g)` at each 1-based start `i`, `grams` distinct
+    * per document, and `bench`, the distinct grams of the benchmark. */
+  private def gramCtes(n: Int): String =
     s"""WITH gpos AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS i,
        |    md5(array_to_string(toks[i:i+${n - 1}], ' ')) AS g
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |       (SELECT unnest(range(1,
-       |          (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) FROM documents)))
-       |        AS i) t
-       |  WHERE len(toks) >= $n AND i <= len(toks) - ${n - 1}),
-       |bench AS (SELECT DISTINCT g FROM gpos WHERE doc_id % 50 = 0),
+       |  FROM (SELECT doc_id, ${words()} AS toks FROM documents),
+       |    ${positions(s"len(toks) - ${n - 1}")}),
+       |grams AS (SELECT DISTINCT doc_id, g FROM gpos),
+       |bench AS (SELECT DISTINCT g FROM grams WHERE $benchDocs)""".stripMargin
+
+  /** [[gramCtes]] plus the benchmark-gram spans of each document, by the
+    * same interval-merge arithmetic as the Spark side. */
+  private def gramPosCtes(n: Int): String =
+    s"""${gramCtes(n)},
        |hits AS (
        |  SELECT doc_id, i, i + ${n - 1} AS e FROM gpos
-       |  WHERE doc_id % 50 <> 0 AND g IN (SELECT g FROM bench)),
+       |  WHERE $trainDocs AND g IN (SELECT g FROM bench)),
        |marked AS (
        |  SELECT doc_id, i, e,
        |    CASE WHEN i > coalesce(max(e) OVER (PARTITION BY doc_id ORDER BY i
@@ -376,12 +379,8 @@ object DedupOracles {
     s"""${gramPosCtes(n)},
        |tok AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS i, toks[i] AS t
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-       |        WHERE doc_id % 50 <> 0),
-       |       (SELECT unnest(range(1,
-       |          (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) FROM documents) + 1))
-       |        AS i) r
-       |  WHERE i <= len(toks)),
+       |  FROM (SELECT doc_id, ${words()} AS toks FROM documents WHERE $trainDocs),
+       |    ${positions("len(toks)")}),
        |kept AS (
        |  SELECT tok.doc_id, i, t FROM tok
        |  WHERE NOT EXISTS (SELECT 1 FROM spans s
@@ -390,30 +389,16 @@ object DedupOracles {
        |  SELECT doc_id, string_agg(t, ' ' ORDER BY i) AS text_clean
        |  FROM kept GROUP BY doc_id)
        |SELECT d.doc_id, coalesce(j.text_clean, '') AS text_clean
-       |FROM (SELECT doc_id FROM documents WHERE doc_id % 50 <> 0) d
+       |FROM (SELECT doc_id FROM documents WHERE $trainDocs) d
        |LEFT JOIN joined j USING (doc_id)""".stripMargin
-
-  /** Shared gram-digest CTE prefix (`grams` distinct per doc + `bench`):
-    * [[decontaminateOracle]] and [[contaminationScoreOracle]] compose
-    * onto it — lockstep with [[DedupOps.gramDigests]]. */
-  private def gramCtes(n: Int): String =
-    s"""WITH grams AS (
-       |  SELECT DISTINCT doc_id, md5(array_to_string(toks[i:i+${n - 1}], ' ')) AS g
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |       (SELECT unnest(range(1,
-       |          (SELECT CAST(max(len(string_split(text, ' '))) AS BIGINT) FROM documents)))
-       |        AS i) t
-       |  WHERE len(toks) >= $n AND i <= len(toks) - ${n - 1}),
-       |bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 50 = 0)""".stripMargin
 
   def decontaminateOracle(n: Int = 8): String =
     s"""${gramCtes(n)},
        |contaminated AS (
        |  SELECT DISTINCT doc_id FROM grams
-       |  WHERE doc_id % 50 <> 0 AND g IN (SELECT g FROM bench))
+       |  WHERE $trainDocs AND g IN (SELECT g FROM bench))
        |SELECT doc_id, lang, source FROM documents
-       |WHERE doc_id % 50 <> 0
-       |  AND doc_id NOT IN (SELECT doc_id FROM contaminated)""".stripMargin
+       |WHERE $trainDocs AND doc_id NOT IN (SELECT doc_id FROM contaminated)""".stripMargin
 
   def contaminationScoreOracle(n: Int = 8): String =
     s"""${gramCtes(n)}
@@ -422,18 +407,20 @@ object DedupOracles {
        |    AS BIGINT) AS n_hit,
        |  CAST(sum(CASE WHEN g IN (SELECT g FROM bench) THEN 1 ELSE 0 END)
        |    AS DOUBLE) / count(*) AS frac
-       |FROM grams WHERE doc_id % 50 <> 0
+       |FROM grams WHERE $trainDocs
        |GROUP BY doc_id""".stripMargin
 
-  /** Same formulation in DuckDB: bounded positional unnest, identical
+  /** `pos(doc_id, i, g)`: the md5 `g` of every `k`-character substring
+    * of each document at its 1-based start `i`. */
+  private def substringCte(k: Int): String =
+    s"""pos AS (
+       |  SELECT doc_id, i, md5(substr(text, i, $k)) AS g
+       |  FROM documents, ${positions(s"length(text) - ${k - 1}")})""".stripMargin
+
+  /** Same formulation in DuckDB: positional substrings, identical
     * grouping, one IEEE division on exactly-counted integers. */
   def substringDupOracle(k: Int = 20): String =
-    s"""WITH pos AS (
-       |  SELECT doc_id, md5(substr(text, i, $k)) AS g
-       |  FROM documents, (SELECT unnest(range(1,
-       |         (SELECT CAST(max(length(text)) AS BIGINT) - ${k - 1} + 1 FROM documents)))
-       |       AS i) t
-       |  WHERE length(text) >= $k AND i <= length(text) - ${k - 1}),
+    s"""WITH ${substringCte(k)},
        |local AS (SELECT doc_id, g, count(*) AS m FROM pos GROUP BY 1, 2),
        |tot AS (SELECT *, sum(m) OVER (PARTITION BY g) AS c FROM local)
        |SELECT doc_id,
@@ -450,12 +437,7 @@ object DedupOracles {
     * oracle scale.
     */
   def substringDedupOracle(k: Int = 20): String =
-    s"""WITH pos AS (
-       |  SELECT doc_id, i, md5(substr(text, i, $k)) AS g
-       |  FROM documents, (SELECT unnest(range(1,
-       |         (SELECT CAST(max(length(text)) AS BIGINT) - ${k - 1} + 1 FROM documents)))
-       |       AS i) t
-       |  WHERE length(text) >= $k AND i <= length(text) - ${k - 1}),
+    s"""WITH ${substringCte(k)},
        |marked AS (
        |  SELECT doc_id, i FROM (
        |    SELECT doc_id, i,
@@ -464,9 +446,7 @@ object DedupOracles {
        |  WHERE rn > 1),
        |chars AS (
        |  SELECT d.doc_id, d.text, c
-       |  FROM documents d, (SELECT unnest(range(1,
-       |         (SELECT CAST(max(length(text)) AS BIGINT) + 1 FROM documents))) AS c) t
-       |  WHERE c <= length(d.text)),
+       |  FROM documents d, ${positions("length(d.text)", "c")}),
        |kept AS (
        |  SELECT ch.doc_id, ch.text, ch.c FROM chars ch
        |  WHERE NOT EXISTS (SELECT 1 FROM marked m
@@ -615,17 +595,9 @@ object DedupOracles {
     * for the oracle).
     */
   val simhashOracle: String =
-    s"""WITH ${augmentedSql},
-       |tok AS (
-       |  SELECT doc_id, ${DuckSql.hash64("unnest(string_split(text, ' '))")} AS h
-       |  FROM corpus),
-       |votes AS (
-       |  SELECT doc_id, b,
-       |    sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM tok, range(0, 60) t(b) GROUP BY 1, 2)
-       |SELECT doc_id,
-       |  CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-       |FROM votes GROUP BY 1""".stripMargin
+    s"""WITH $augmentedSql,
+       |${simhashCtes(s"unnest(${words()})", "corpus")}
+       |SELECT doc_id, simhash FROM sigs""".stripMargin
 
   /** Shared candidate CTE chain (corpus → simhash → chunk join → `pairs`):
     * [[simhashPairsOracle]] and [[editDistPairsOracle]] both compose onto
@@ -633,18 +605,8 @@ object DedupOracles {
     * between the two oracles.
     */
   private val simhashCandidateCtes: String =
-    s"""WITH ${augmentedSql},
-       |tok AS (
-       |  SELECT doc_id, ${DuckSql.hash64("unnest(string_split(text, ' '))")} AS h
-       |  FROM corpus),
-       |votes AS (
-       |  SELECT doc_id, b,
-       |    sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM tok, range(0, 60) t(b) GROUP BY 1, 2),
-       |sigs AS (
-       |  SELECT doc_id,
-       |    CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
-       |  FROM votes GROUP BY 1),
+    s"""WITH $augmentedSql,
+       |${simhashCtes(s"unnest(${words()})", "corpus")},
        |chunks AS (
        |  SELECT doc_id, simhash, i AS chunk_id, (simhash >> (i * 15)) & 32767 AS chunk
        |  FROM sigs, range(0, 4) t(i)),

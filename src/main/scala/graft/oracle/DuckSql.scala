@@ -3,9 +3,15 @@ package graft.oracle
 /** DuckDB forms shared by every oracle family. */
 object DuckSql {
 
+  /** `n` hex digits of md5(`e`) from digit `from` (1-based), as a BIGINT. */
+  def md5Bits(e: String, from: Int, n: Int): String =
+    s"('0x' || substr(md5($e), $from, $n))::BIGINT"
+
   /** `Hashing.hash64`: the first 15 hex digits of md5 as a BIGINT. */
-  def hash64(e: String): String =
-    s"('0x' || substr(md5($e), 1, 15))::BIGINT"
+  def hash64(e: String): String = md5Bits(e, 1, 15)
+
+  /** The 1-based positions 1..`n` as column `i` of a lateral table. */
+  def positions(n: String, i: String = "i"): String = s"unnest(range(1, $n + 1)) AS ix($i)"
 
   /** The space tokens of `text`, as `TextOps.tokenizeSpace` splits them. */
   def words(text: String = "text"): String = s"string_split($text, ' ')"

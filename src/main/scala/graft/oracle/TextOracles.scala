@@ -2,6 +2,7 @@ package graft.oracle
 
 import graft.ops.BpeOps.{frozenMerges, trainedMergesSf0p01}
 import graft.ops.TextOps.stopwords
+import graft.oracle.DuckSql.{md5Bits, orderedSum, positions, topK, words}
 
 /** DuckDB oracles of the text family (`TextOps`, `BpeOps`,
   * `FrequencyOps`): tokenization, quality gates, language models, BPE,
@@ -9,16 +10,43 @@ import graft.ops.TextOps.stopwords
   */
 object TextOracles {
 
+  /** The number of stopwords among the space tokens of `text`. */
+  private val stopCount: String =
+    s"len(list_filter(${words()}, w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")})))"
+
+  /** The space-token count of `text` as `n_tokens`. */
+  private val nTokens: String = s"CAST(len(${words()}) AS BIGINT) AS n_tokens"
+
+  /** `cum_excl`: the `n_tokens` of the rows before this one within
+    * `partition` in `order` — the packing prefix-sum. */
+  private def cumExcl(partition: String, order: String): String =
+    s"""CAST(sum(n_tokens) OVER (PARTITION BY $partition ORDER BY $order
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) - n_tokens AS cum_excl""".stripMargin
+
+  /** `(cols, pos, w1, w2)`: the adjacent space-token pairs of the rows of
+    * `from` that satisfy `where`, at 1-based position `pos`. */
+  private def bigrams(from: String, where: String, cols: String = ""): String =
+    s"""SELECT ${cols}i AS pos, t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2
+       |  FROM (SELECT ${cols}${words()} AS t FROM $from WHERE $where), ${positions("len(t) - 1")}""".stripMargin
+
+  /** The bigram model of `bg(w1, w2)`: lm(w1, w2, cnt, p_cond) with
+    * p_cond = cnt / (the count of w1's bigrams), one IEEE division. */
+  private def lmCte(bg: String): String =
+    s"""lm AS (
+       |  SELECT w1, w2, CAST(cnt AS BIGINT) AS cnt,
+       |    CAST(CAST(cnt AS BIGINT) AS DOUBLE) /
+       |      CAST(CAST(sum(cnt) OVER (PARTITION BY w1) AS BIGINT) AS DOUBLE) AS p_cond
+       |  FROM (SELECT w1, w2, count(*) AS cnt FROM $bg GROUP BY 1, 2))""".stripMargin
+
   def bpePairCountsOracle(topK: Int = 200): String =
     s"""WITH words AS (
        |  SELECT w AS word, count(*) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+       |  FROM (SELECT unnest(${words()}) AS w FROM documents)
        |  WHERE len(w) > 0 GROUP BY 1),
        |pairs AS (
        |  SELECT substr(word, CAST(i AS INT), 2) AS pair,
        |         CAST(sum(freq) AS BIGINT) AS cnt
-       |  FROM words, unnest(range(1, len(word))) AS t(i)
-       |  WHERE len(word) >= 2
+       |  FROM words, ${positions("len(word) - 1")}
        |  GROUP BY 1)
        |SELECT pair, cnt FROM pairs ORDER BY cnt DESC, pair ASC LIMIT $topK""".stripMargin
 
@@ -63,7 +91,7 @@ object TextOracles {
     }
     s"""WITH w AS (
        |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+       |  FROM (SELECT unnest(${words()}) AS w FROM documents)
        |  WHERE len(w) > 0 GROUP BY 1),
        |m0 AS (
        |  SELECT word, freq,
@@ -80,18 +108,13 @@ object TextOracles {
   def heavyHittersBySourceOracle(k: Int = 5, capacity: Int = 1024,
                                  guaranteedOnly: Boolean = false): String = {
     s"""WITH t AS (
-       |  SELECT source, tok FROM (
-       |    SELECT source, unnest(string_split(text, ' ')) AS tok
-       |    FROM documents)
+       |  SELECT source, tok FROM (SELECT source, unnest(${words()}) AS tok FROM documents)
        |  WHERE len(tok) > 0),
        |n AS (SELECT source, count(*) AS n FROM t GROUP BY 1),
        |c AS (SELECT source, tok, count(*) AS cnt FROM t GROUP BY 1, 2),
-       |r AS (SELECT source, tok, cnt, row_number() OVER (
-       |        PARTITION BY source ORDER BY cnt DESC, tok ASC) AS rn
-       |      FROM c)
+       |r AS (${topK("source, tok, cnt", "c", "source", "cnt DESC, tok ASC", k)})
        |SELECT r.source, tok, cnt, cnt > n.n // ${capacity + 1} AS guaranteed
-       |FROM r JOIN n USING (source)
-       |WHERE rn <= $k${if (guaranteedOnly) s" AND cnt > n.n // ${capacity + 1}" else ""}""".stripMargin
+       |FROM r JOIN n USING (source)${if (guaranteedOnly) s" WHERE cnt > n.n // ${capacity + 1}" else ""}""".stripMargin
   }
 
   /** DuckDB twin: exact top-k with the same tiebreak and the same
@@ -101,8 +124,7 @@ object TextOracles {
   def heavyHittersOracle(k: Int = 20, capacity: Int = 4096,
                          guaranteedOnly: Boolean = false): String =
     s"""WITH t AS (
-       |  SELECT tok FROM (
-       |    SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
+       |  SELECT tok FROM (SELECT unnest(${words()}) AS tok FROM documents)
        |  WHERE len(tok) > 0),
        |n AS (SELECT count(*) AS n FROM t),
        |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
@@ -139,10 +161,10 @@ object TextOracles {
     * sums BIGINT into HUGEINT).
     */
   val docRepetitionOracle: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT doc_id,
       |    list_filter(string_split(text, '. '), s -> len(s) > 0) AS segs,
-      |    string_split(text, ' ') AS toks
+      |    ${words()} AS toks
       |  FROM documents),
       |seg_stats AS (
       |  SELECT doc_id, CAST(len(segs) AS BIGINT) AS n_segs,
@@ -151,9 +173,7 @@ object TextOracles {
       |  FROM base WHERE len(segs) > 0),
       |bigrams AS (
       |  SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bg
-      |  FROM base, (SELECT unnest(range(1,
-      |         (SELECT CAST(max(len(toks)) AS BIGINT) FROM base))) AS i) t
-      |  WHERE len(toks) >= 2 AND i <= len(toks) - 1),
+      |  FROM base, ${positions("len(toks) - 1")}),
       |counts AS (
       |  SELECT doc_id, bg, count(*) AS c FROM bigrams GROUP BY 1, 2),
       |top AS (
@@ -189,11 +209,8 @@ object TextOracles {
        |  least(CAST(1.0 AS DOUBLE), CAST(n_tokens AS DOUBLE) / 100) *
        |    (CAST(1.0 AS DOUBLE) - CAST(n_stop AS DOUBLE) / n_tokens) AS quality_score
        |FROM (
-       |  SELECT doc_id, ${k}
-       |    len(string_split(text, ' ')) AS n_tokens,
-       |    length(text) AS n_chars,
-       |    len(list_filter(string_split(text, ' '),
-       |        w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")}))) AS n_stop
+       |  SELECT doc_id, ${k}len(${words()}) AS n_tokens, length(text) AS n_chars,
+       |    $stopCount AS n_stop
        |  FROM documents)""".stripMargin
   }
 
@@ -240,11 +257,9 @@ object TextOracles {
        |FROM flags""".stripMargin
 
   def vocabEncodeOracle(vocabSize: Int = 16): String =
-    s"""WITH toks AS (
-      |  SELECT doc_id, unnest(list_transform(range(1, len(string_split(text,' ')) + 1),
-      |                 i -> {'pos': i - 1, 'tok': string_split(text,' ')[i]})) AS u
-      |  FROM documents),
-      |flat AS (SELECT doc_id, CAST(u.pos AS BIGINT) AS pos, u.tok AS tok FROM toks),
+    s"""WITH flat AS (
+      |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS tok
+      |  FROM (SELECT doc_id, ${words()} AS toks FROM documents), ${positions("len(toks)")}),
       |vocab AS (
       |  SELECT tok, CAST(row_number() OVER (ORDER BY df DESC, tok ASC) - 1 AS BIGINT) AS token_id
       |  FROM (SELECT tok, count(DISTINCT doc_id) AS df FROM flat GROUP BY 1)
@@ -253,42 +268,17 @@ object TextOracles {
       |FROM flat f LEFT JOIN vocab v ON f.tok = v.tok""".stripMargin
 
   val bigramLmOracle: String =
-    """WITH toks AS (
-      |  SELECT string_split(text, ' ') AS t FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 2),
-      |ex AS (SELECT t, unnest(range(1, len(t))) AS i FROM toks),
-      |counts AS (
-      |  SELECT t[i] AS w1, t[i + 1] AS w2, count(*) AS cnt
-      |  FROM ex GROUP BY 1, 2)
-      |SELECT w1, w2, CAST(cnt AS BIGINT) AS cnt,
-      |  CAST(CAST(cnt AS BIGINT) AS DOUBLE) /
-      |    CAST(CAST(sum(cnt) OVER (PARTITION BY w1) AS BIGINT) AS DOUBLE)
-      |      AS p_cond
-      |FROM counts""".stripMargin
+    s"""WITH ${lmCte(s"(${bigrams("documents", "TRUE")})")}
+       |SELECT w1, w2, cnt, p_cond FROM lm""".stripMargin
 
   /** Oracle for the registered `lm_score_heldout` query: train on every
     * source EXCEPT the lexicographically first, score that held-out
     * source's documents.
     */
   val lmLikelihoodAgainstOracle: String =
-    """WITH held AS (SELECT min(source) AS src FROM documents),
-      |trainb AS (
-      |  SELECT string_split(text, ' ') AS t FROM documents, held
-      |  WHERE source <> held.src AND len(string_split(text, ' ')) >= 2),
-      |tex AS (SELECT t, unnest(range(1, len(t))) AS i FROM trainb),
-      |counts AS (SELECT t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2,
-      |                  count(*) AS cnt FROM tex GROUP BY 1, 2),
-      |lm AS (
-      |  SELECT w1, w2,
-      |    CAST(CAST(cnt AS BIGINT) AS DOUBLE) /
-      |      CAST(CAST(sum(cnt) OVER (PARTITION BY w1) AS BIGINT) AS DOUBLE) AS p_cond
-      |  FROM counts),
-      |evalb AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents, held
-      |  WHERE source = held.src AND len(string_split(text, ' ')) >= 2),
-      |eex AS (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM evalb),
-      |bg AS (SELECT doc_id, i AS pos, t[CAST(i AS INT)] AS w1,
-      |              t[CAST(i + 1 AS INT)] AS w2 FROM eex),
+    s"""WITH held AS (SELECT min(source) AS src FROM documents),
+      |${lmCte(s"(${bigrams("documents, held", "source <> held.src")})")},
+      |bg AS (${bigrams("documents, held", "source = held.src", "doc_id, ")}),
       |j AS (SELECT b.doc_id, b.pos,
       |             coalesce(l.p_cond, CAST(0.0 AS DOUBLE)) AS p,
       |             CASE WHEN l.p_cond IS NULL THEN 1 ELSE 0 END AS is_oov
@@ -296,59 +286,31 @@ object TextOracles {
       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
       |  CAST(CAST(sum(is_oov) AS BIGINT) AS BIGINT) AS oov,
       |  min(p) AS min_p,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(p ORDER BY pos)),
-      |              (acc, x) -> acc + x) / count(*) AS avg_p
+      |  ${orderedSum("p", "pos")} / count(*) AS avg_p
       |FROM j GROUP BY doc_id""".stripMargin
 
   val lmLikelihoodOracle: String =
-    """WITH toks AS (
-      |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-      |  WHERE len(string_split(text, ' ')) >= 2),
-      |ex AS (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks),
-      |bg AS (SELECT doc_id, i AS pos, t[CAST(i AS INT)] AS w1,
-      |              t[CAST(i + 1 AS INT)] AS w2 FROM ex),
-      |counts AS (SELECT w1, w2, count(*) AS cnt FROM bg GROUP BY 1, 2),
-      |lm AS (
-      |  SELECT w1, w2,
-      |    CAST(CAST(cnt AS BIGINT) AS DOUBLE) /
-      |      CAST(CAST(sum(cnt) OVER (PARTITION BY w1) AS BIGINT) AS DOUBLE) AS p_cond
-      |  FROM counts),
+    s"""WITH bg AS (${bigrams("documents", "TRUE", "doc_id, ")}),
+      |${lmCte("bg")},
       |j AS (SELECT b.doc_id, b.pos, l.p_cond
       |      FROM bg b JOIN lm l ON b.w1 = l.w1 AND b.w2 = l.w2)
       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, min(p_cond) AS min_p,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(p_cond ORDER BY pos)),
-      |              (acc, x) -> acc + x) / count(*) AS avg_p
+      |  ${orderedSum("p_cond", "pos")} / count(*) AS avg_p
       |FROM j GROUP BY doc_id""".stripMargin
 
   def corpusPrepOracle(minTokens: Long = 20, maxStopRatio: Double = 0.3,
                        maxAvgTokenLen: Double = 8.0): String =
-    s"""WITH base AS (
-       |  SELECT doc_id, text, source,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(length(text) AS BIGINT) AS n_chars,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |        w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")}))) AS BIGINT) AS n_stop
-       |  FROM documents),
+    s"""WITH base AS (${textStatsSql(Seq("text", "source"))}),
        |kept AS (
        |  SELECT doc_id, source, n_tokens,
        |    regexp_replace(regexp_replace(text,
        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
        |      '([0-9]{1,3}\\.){3}[0-9]{1,3}', '<IP>', 'g') AS text_clean
        |  FROM base
-       |  WHERE n_tokens >= $minTokens
-       |    AND CAST(n_stop AS DOUBLE) / n_tokens <= $maxStopRatio
-       |    AND CAST(n_chars - (n_tokens - 1) AS DOUBLE) / n_tokens <= $maxAvgTokenLen),
-       |deduped AS (
-       |  SELECT doc_id, source, n_tokens FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY md5(text_clean)
-       |                                 ORDER BY doc_id) AS rn
-       |    FROM kept) WHERE rn = 1)
-       |SELECT source,
-       |  CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))::BIGINT < 230
-       |         THEN 'train'
-       |       WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2))::BIGINT < 243
-       |         THEN 'valid'
-       |       ELSE 'test' END AS split,
+       |  WHERE n_tokens >= $minTokens AND stop_ratio <= $maxStopRatio
+       |    AND avg_token_len <= $maxAvgTokenLen),
+       |deduped AS (${topK("doc_id, source, n_tokens", "kept", "md5(text_clean)", "doc_id", 1)})
+       |SELECT source, ${splitLabel("doc_id")} AS split,
        |  CAST(count(*) AS BIGINT) AS n_docs,
        |  CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
        |FROM deduped
@@ -356,11 +318,8 @@ object TextOracles {
 
   def curationReportOracle: String =
     s"""WITH per_doc AS (
-       |  SELECT source, lang, md5(text) AS fp, n_chars,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(len(list_filter(string_split(text, ' '),
-       |        w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")})))
-       |      AS BIGINT) AS n_stop
+       |  SELECT source, lang, md5(text) AS fp, n_chars, $nTokens,
+       |    CAST($stopCount AS BIGINT) AS n_stop
        |  FROM documents)
        |SELECT source,
        |  CAST(count(*) AS BIGINT) AS n_docs,
@@ -374,8 +333,7 @@ object TextOracles {
 
   def chunkDocumentsOracle(window: Int = 64, stride: Int = 48): String =
     s"""WITH t AS (
-       |  SELECT doc_id, string_split(text, ' ') AS toks,
-       |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n
+       |  SELECT doc_id, ${words()} AS toks, CAST(len(${words()}) AS BIGINT) AS n
        |  FROM documents),
        |ex AS (
        |  SELECT doc_id, toks, n,
@@ -389,7 +347,7 @@ object TextOracles {
 
   def unigramScoresOracle(vocabSize: Int = 16): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+       |  SELECT doc_id, unnest(${words()}) AS tok FROM documents),
        |vocab AS (
        |  SELECT tok, cnt FROM (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1)
        |  ORDER BY cnt DESC, tok ASC LIMIT $vocabSize)
@@ -431,8 +389,7 @@ object TextOracles {
     * one derivation ([[hashSplitOracle]] and the split-leakage oracle
     * both compose it, so the split rule cannot silently diverge
     * between them). */
-  def splitBucket(id: String): String =
-    s"('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 2))::BIGINT"
+  def splitBucket(id: String): String = md5Bits(s"CAST($id AS VARCHAR)", 1, 2)
 
   def splitLabel(id: String): String =
     s"""CASE WHEN ${splitBucket(id)} < 230 THEN 'train'
@@ -460,16 +417,11 @@ object TextOracles {
     * DuckDB. */
   def packSequencesShardedOracle(capacity: Long = 2048, shards: Int = 8): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, source,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(doc_id % $shards AS BIGINT) AS shard
+       |  SELECT doc_id, source, $nTokens, CAST(doc_id % $shards AS BIGINT) AS shard
        |  FROM documents),
        |cum AS (
-       |  SELECT doc_id, source, shard, n_tokens,
-       |    CAST(sum(n_tokens) OVER w AS BIGINT) - n_tokens AS cum_excl
-       |  FROM toks
-       |  WINDOW w AS (PARTITION BY source, shard ORDER BY doc_id
-       |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+       |  SELECT doc_id, source, shard, n_tokens, ${cumExcl("source, shard", "doc_id")}
+       |  FROM toks)
        |SELECT doc_id, source, shard, n_tokens,
        |  shard * ${1L << 40} + cum_excl // $capacity AS pack_id,
        |  cum_excl % $capacity AS pack_offset
@@ -479,14 +431,8 @@ object TextOracles {
     * [[packSequencesOracle]] and [[packSplitOracle]] both build on this
     * subquery so the cum_excl derivation cannot diverge. */
   private val cumExclSql: String =
-    """SELECT doc_id, source,
-      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-      |    CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT)) OVER w
-      |      AS BIGINT) - CAST(len(string_split(text, ' ')) AS BIGINT)
-      |      AS cum_excl
-      |  FROM documents
-      |  WINDOW w AS (PARTITION BY source ORDER BY doc_id
-      |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin
+    s"""SELECT doc_id, source, n_tokens, ${cumExcl("source", "doc_id")}
+       |  FROM (SELECT doc_id, source, $nTokens FROM documents)""".stripMargin
 
   def packSequencesOracle(capacity: Long = 2048): String =
     s"""SELECT doc_id, source, n_tokens,
@@ -495,11 +441,14 @@ object TextOracles {
        |FROM (
        |  $cumExclSql)""".stripMargin
 
+  /** A document's mixing bucket (0–255): md5 hex digits 3–4 of doc_id. */
+  private val mixBucket: String = md5Bits("CAST(doc_id AS VARCHAR)", 3, 2)
+
   val sourceMixOracle: String =
-    """SELECT source, count(*) AS n_kept,
+    s"""SELECT source, count(*) AS n_kept,
       |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
       |FROM documents
-      |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2))::BIGINT <
+      |WHERE ${mixBucket} <
       |      (CAST(substr(source, 4) AS BIGINT) % 4 + 1) * 64
       |GROUP BY 1""".stripMargin
 
@@ -509,12 +458,11 @@ object TextOracles {
                               defaultRate: Double = 1.0): String = {
     val cases = rates.toSeq.sortBy(_._1)
       .map { case (s, r) => s"WHEN source = '$s' THEN $r" }.mkString(" ")
-    val maxCopies = math.ceil((rates.values ++ Seq(defaultRate)).max).toLong + 1
     s"""WITH rated AS (
        |  SELECT source, n_chars,
        |    CAST(floor((CASE $cases ELSE $defaultRate END) * 256.0 + 0.5)
        |      AS BIGINT) AS r256,
-       |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2))::BIGINT AS bucket
+       |    $mixBucket AS bucket
        |  FROM documents),
        |copies AS (
        |  SELECT source, n_chars,
@@ -522,8 +470,7 @@ object TextOracles {
        |  FROM rated),
        |rep AS (
        |  SELECT source, n_chars
-       |  FROM copies, (SELECT unnest(range(1, $maxCopies + 1)) AS c) t
-       |  WHERE c <= n_copies)
+       |  FROM copies, ${positions("n_copies", "c")})
        |SELECT source, count(*) AS n_kept,
        |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
        |FROM rep GROUP BY 1""".stripMargin
@@ -537,10 +484,7 @@ object TextOracles {
        |            FROM documents WHERE source IS NOT NULL GROUP BY 1),
        |tot AS (SELECT
        |  CAST((SELECT CAST(sum(n) AS BIGINT) FROM sc) AS DOUBLE) * $budgetFrac AS b,
-       |  (SELECT list_reduce(
-       |     list_prepend(CAST(0.0 AS DOUBLE),
-       |                  list(sqrt(CAST(n AS DOUBLE)) ORDER BY source)),
-       |     (acc, x) -> acc + x) FROM sc) AS sqrt_tot),
+       |  (SELECT ${orderedSum("sqrt(CAST(n AS DOUBLE))", "source")} FROM sc) AS sqrt_tot),
        |rates AS (
        |  SELECT source,
        |    least(CAST(1.0 AS DOUBLE),
@@ -549,8 +493,7 @@ object TextOracles {
        |gated AS (
        |  SELECT d.source, d.n_chars
        |  FROM documents d JOIN rates r USING (source)
-       |  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2))::BIGINT <
-       |        CAST(floor(rate * 256.0 + 0.5) AS BIGINT))
+       |  WHERE $mixBucket < CAST(floor(rate * 256.0 + 0.5) AS BIGINT))
        |SELECT source, count(*) AS n_kept,
        |  CAST(sum(n_chars) AS BIGINT) AS chars_kept
        |FROM gated GROUP BY 1""".stripMargin
@@ -568,11 +511,8 @@ object TextOracles {
        |  $cumExclSql),
        |frags AS (
        |  SELECT doc_id, source, n_tokens, cum_excl, p AS pack_id
-       |  FROM packed, (SELECT unnest(range(0,
-       |         (SELECT CAST((max(cum_excl + n_tokens) - 1) // $capacity AS BIGINT) + 1
-       |          FROM packed))) AS p) t
-       |  WHERE p BETWEEN cum_excl // $capacity
-       |            AND (cum_excl + n_tokens - 1) // $capacity)
+       |  FROM packed, unnest(range(cum_excl // $capacity,
+       |                            (cum_excl + n_tokens - 1) // $capacity + 1)) AS ix(p))
        |SELECT doc_id, source, pack_id,
        |  greatest(0, pack_id * $capacity - cum_excl) AS doc_offset,
        |  greatest(0, cum_excl - pack_id * $capacity) AS pack_offset,
@@ -595,63 +535,38 @@ object TextOracles {
        |FROM (
        |  SELECT doc_id, source,
        |    md5(CAST(doc_id AS VARCHAR) || ':$seed') AS shuffle_key,
-       |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':$seed'), 1, 2))::BIGINT
-       |      AS shard
+       |    ${md5Bits(s"CAST(doc_id AS VARCHAR) || ':$seed'", 1, 2)} AS shard
        |  FROM documents)""".stripMargin
 
   def tokenBudgetMixOracle(budget: Long = 4096, seed: String = "42"): String =
     s"""SELECT doc_id, source, n_tokens, cum_excl FROM (
-       |  SELECT doc_id, source,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT)) OVER w
-       |      AS BIGINT) - CAST(len(string_split(text, ' ')) AS BIGINT)
-       |      AS cum_excl
-       |  FROM (SELECT *, md5(CAST(doc_id AS VARCHAR) || ':b$seed') AS mix_key
-       |        FROM documents)
-       |  WINDOW w AS (PARTITION BY source ORDER BY mix_key, doc_id
-       |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+       |  SELECT doc_id, source, n_tokens, ${cumExcl("source", "mix_key, doc_id")}
+       |  FROM (SELECT doc_id, source, $nTokens,
+       |          md5(CAST(doc_id AS VARCHAR) || ':b$seed') AS mix_key
+       |        FROM documents))
        |WHERE cum_excl < $budget""".stripMargin
 
   def qualityBudgetMixOracle(budget: Long = 4096): String =
-    s"""WITH stats AS (
-       |  SELECT doc_id, source, n_tokens,
-       |    least(CAST(1.0 AS DOUBLE), CAST(n_tokens AS DOUBLE) / 100) *
-       |      (CAST(1.0 AS DOUBLE) - CAST(n_stop AS DOUBLE) / n_tokens) AS quality_score
-       |  FROM (
-       |    SELECT doc_id, source,
-       |      len(string_split(text, ' ')) AS n_tokens,
-       |      len(list_filter(string_split(text, ' '),
-       |          w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")}))) AS n_stop
-       |    FROM documents))
-       |SELECT doc_id, source, n_tokens, quality_score, cum_excl FROM (
-       |  SELECT *, CAST(sum(n_tokens) OVER w AS BIGINT) - n_tokens AS cum_excl
-       |  FROM stats
-       |  WINDOW w AS (PARTITION BY source ORDER BY quality_score DESC, doc_id
-       |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+    s"""SELECT doc_id, source, n_tokens, quality_score, cum_excl FROM (
+       |  SELECT *, ${cumExcl("source", "quality_score DESC, doc_id")}
+       |  FROM (${textStatsSql(Seq("source"))}))
        |WHERE cum_excl < $budget""".stripMargin
 
   def stratifiedSampleOracle(k: Int = 20, seed: String = "42"): String =
-    s"""SELECT source, rank, doc_id, n_chars FROM (
-       |  SELECT source, doc_id, n_chars,
-       |    CAST(row_number() OVER (PARTITION BY source
-       |      ORDER BY md5(CAST(doc_id AS VARCHAR) || ':s$seed'), doc_id)
-       |      AS BIGINT) AS rank
-       |  FROM documents)
-       |WHERE rank <= $k""".stripMargin
+    topK("source, rank, doc_id, n_chars", "documents", "source",
+      s"md5(CAST(doc_id AS VARCHAR) || ':s$seed'), doc_id", k, "rank")
 
   val tfIdfTopOracle: String =
-    """WITH tokens AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
+    s"""WITH tokens AS (
+      |  SELECT doc_id, unnest(${words()}) AS word FROM documents),
       |tf AS (SELECT doc_id, word, count(*) AS tf FROM tokens GROUP BY 1, 2),
       |df AS (SELECT word, count(DISTINCT doc_id) AS df FROM tokens GROUP BY 1),
-      |n AS (SELECT count(*) AS n_docs FROM documents)
-      |SELECT doc_id, word, tf, df, score, rank FROM (
+      |n AS (SELECT count(*) AS n_docs FROM documents),
+      |scored AS (
       |  SELECT tf.doc_id, tf.word, tf.tf, df.df,
-      |    CAST(tf.tf * n.n_docs AS DOUBLE) / df.df AS score,
-      |    row_number() OVER (PARTITION BY tf.doc_id
-      |      ORDER BY CAST(tf.tf * n.n_docs AS DOUBLE) / df.df DESC, tf.word ASC) AS rank
+      |    CAST(tf.tf * n.n_docs AS DOUBLE) / df.df AS score
       |  FROM tf JOIN df ON tf.word = df.word CROSS JOIN n)
-      |WHERE rank <= 3""".stripMargin
+      |${topK("doc_id, word, tf, df, score, rank", "scored", "doc_id", "score DESC, word ASC", 3, "rank")}""".stripMargin
 
   val wordcountRegexOracle: String =
     """SELECT word, count(*) AS cnt
@@ -668,9 +583,8 @@ object TextOracles {
     "SELECT unnest(string_split(text, ' ')) AS value FROM documents"
 
   val langIdOracle: String =
-    """WITH tokens AS (
-      |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word
-      |  FROM documents),
+    s"""WITH tokens AS (
+      |  SELECT doc_id, lang, unnest(${words()}) AS word FROM documents),
       |profile AS (
       |  SELECT lang AS p_lang, word, count(*) AS w_cnt
       |  FROM tokens WHERE doc_id % 2 = 0 GROUP BY 1, 2),
@@ -678,16 +592,12 @@ object TextOracles {
       |  SELECT t.doc_id, p.p_lang, CAST(sum(p.w_cnt) AS BIGINT) AS score
       |  FROM tokens t JOIN profile p ON t.word = p.word
       |  WHERE t.doc_id % 2 = 1 GROUP BY 1, 2)
-      |SELECT doc_id, p_lang AS pred_lang, score
-      |FROM (SELECT *, row_number() OVER
-      |        (PARTITION BY doc_id ORDER BY score DESC, p_lang ASC) AS rn
-      |      FROM scored)
-      |WHERE rn = 1""".stripMargin
+      |${topK("doc_id, p_lang AS pred_lang, score", "scored", "doc_id", "score DESC, p_lang ASC", 1)}""".stripMargin
 
   val tokenCountsOracle: String =
-    """SELECT doc_id,
-      |  len(string_split(text, ' ')) AS ws_tokens,
-      |  CAST(list_reduce(list_transform(string_split(text, ' '),
+    s"""SELECT doc_id,
+      |  len(${words()}) AS ws_tokens,
+      |  CAST(list_reduce(list_transform(${words()},
       |    w -> CAST(ceil(CAST(length(w) AS DOUBLE) / 4.0) AS BIGINT)),
       |    (a, b) -> a + b) AS BIGINT) AS subword_est
       |FROM documents""".stripMargin
