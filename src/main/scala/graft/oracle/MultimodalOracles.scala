@@ -8,22 +8,41 @@ import graft.ops.MultimodalOps.WavSampleRate
   */
 object MultimodalOracles {
 
+  /** The documents every fixture writer encodes: non-empty texts with
+    * doc_id < maxDocId. */
+  private def fixtureDocs(maxDocId: Long): String =
+    s"doc_id < $maxDocId AND text IS NOT NULL AND length(text) > 0"
+
+  /** One row per element `i` in [0, `count`) of each fixture document:
+    * its columns, `n` = length(text) and the `dims` the writer derives. */
+  private def fixtureElements(maxDocId: Long, dims: String, count: String,
+                              i: String = "i"): String =
+    s"""SELECT *, unnest(range(0, $count)) AS $i
+       |FROM (
+       |  SELECT doc_id, text, length(text) AS n, $dims
+       |  FROM documents WHERE ${fixtureDocs(maxDocId)})""".stripMargin
+
+  /** A raster's dims: the image writers' formula. */
+  private val imageDims = "1 + (length(text) % 13) AS w, 1 + (doc_id % 7) AS h"
+
+  /** The quarantine verdicts: one 'corrupt' row per id, every `cols`
+    * column a NULL BIGINT. */
+  private def corruptRows(ids: Seq[Long], cols: Seq[String]): String =
+    s"""SELECT v.id AS doc_id, 'corrupt' AS status,
+       |  ${cols.map(c => s"CAST(NULL AS BIGINT) AS $c").mkString(", ")}
+       |FROM (VALUES ${ids.map(id => s"($id)").mkString(", ")}) AS v(id)""".stripMargin
+
   /** Frame-sampling oracle (payload is the text's bytes; ASCII, so
-    * substring-on-text equals substring-on-blob). Range bound derives from
-    * the longest document, not a hard cap; empty docs emit zero frames on
-    * both sides.
+    * substring-on-text equals substring-on-blob): every 4th of each
+    * document's 16-byte frames; empty docs emit zero frames on both sides.
     */
   val sampleFramesOracle: String =
     """SELECT doc_id, frame_idx, hex(encode(frame)) AS frame FROM (
       |  SELECT doc_id,
       |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS BIGINT) AS frame_idx,
       |    substr(text, i * 16 + 1, 16) AS frame
-      |  FROM documents,
-      |       (SELECT unnest(range(0,
-      |          (SELECT CAST(max(octet_length(encode(text))) / 16 AS BIGINT) + 1
-      |           FROM documents))) AS i) t
-      |  WHERE i <= floor((octet_length(encode(text)) - 1) / 16)
-      |    AND i % 4 = 0)""".stripMargin
+      |  FROM documents, unnest(range(0, (octet_length(encode(text)) + 15) // 16)) AS ix(i)
+      |  WHERE i % 4 = 0)""".stripMargin
 
   /** Resize oracle (ASCII text ≙ payload bytes): take every 4th char,
     * re-encode, hex — an independent list-based formulation.
@@ -118,8 +137,7 @@ object MultimodalOracles {
        |  SELECT doc_id, text,
        |    CASE doc_id % 3 WHEN 0 THEN 'img' WHEN 1 THEN 'aud'
        |         ELSE 'vid' END AS ext
-       |  FROM documents
-       |  WHERE doc_id < $maxDocId AND text IS NOT NULL AND length(text) > 0),
+       |  FROM documents WHERE ${fixtureDocs(maxDocId)}),
        |files AS (
        |  SELECT prefix || '_' || doc_id || '.' || ext AS file_name, doc_id, text,
        |    CASE ext WHEN 'img' THEN 'image' WHEN 'aud' THEN 'audio'
@@ -134,14 +152,7 @@ object MultimodalOracles {
   private def bmpPixelsSql(maxDocId: Long): String =
     s"""SELECT doc_id, w, h,
        |  ascii(substr(text, CAST(p % n AS INT) + 1, 1)) AS c, p
-       |FROM (
-       |  SELECT doc_id, text, n, w, h, unnest(range(0, w * h)) AS p
-       |  FROM (
-       |    SELECT doc_id, text, length(text) AS n,
-       |      1 + (length(text) % 13) AS w, 1 + (doc_id % 7) AS h
-       |    FROM documents
-       |    WHERE doc_id < $maxDocId AND text IS NOT NULL
-       |      AND length(text) > 0))""".stripMargin
+       |FROM (${fixtureElements(maxDocId, imageDims, "w * h", "p")})""".stripMargin
 
   /** Oracle: expected dims + exact channel sums from the pixel formula —
     * agreement means write(bytes) → ImageIO decode round-tripped every
@@ -176,14 +187,10 @@ object MultimodalOracles {
     * the verdicts (not the raw lossy sums, which no cross-engine
     * contract can hash) agree. */
   def decodeJpegBandedOracle(maxDocId: Long = 256L): String =
-    s"""SELECT doc_id,
-       |  CAST(1 + (length(text) % 13) AS BIGINT) AS width,
-       |  CAST(1 + (doc_id % 7) AS BIGINT) AS height,
-       |  CAST((1 + (length(text) % 13)) * (1 + (doc_id % 7)) AS BIGINT) AS n_px,
-       |  TRUE AS dims_ok, TRUE AS r_in_band, TRUE AS g_in_band,
-       |  TRUE AS b_in_band
-       |FROM documents
-       |WHERE doc_id < $maxDocId AND text IS NOT NULL AND length(text) > 0""".stripMargin
+    s"""SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+       |  CAST(w * h AS BIGINT) AS n_px,
+       |  TRUE AS dims_ok, TRUE AS r_in_band, TRUE AS g_in_band, TRUE AS b_in_band
+       |FROM (SELECT doc_id, $imageDims FROM documents WHERE ${fixtureDocs(maxDocId)})""".stripMargin
 
   /** Oracle for the registered JPEG quarantine row: the formula's dims
     * tagged 'ok' UNION the two literal corrupt verdicts (null dims) —
@@ -195,10 +202,7 @@ object MultimodalOracles {
     s"""SELECT doc_id, 'ok' AS status, width, height, n_px
        |FROM (${decodeJpegBandedOracle(maxDocId)})
        |UNION ALL
-       |SELECT v.id AS doc_id, 'corrupt' AS status,
-       |  CAST(NULL AS BIGINT) AS width, CAST(NULL AS BIGINT) AS height,
-       |  CAST(NULL AS BIGINT) AS n_px
-       |FROM (VALUES ($junkId), ($truncId)) AS v(id)""".stripMargin
+       |${corruptRows(Seq(junkId, truncId), Seq("width", "height", "n_px"))}""".stripMargin
 
   /** The clip generation formula as SQL ([[MultimodalOps.wavSample]]): one row per
     * interleaved sample of every fixture clip — i = f·chn + ch, so
@@ -209,14 +213,8 @@ object MultimodalOracles {
     s"""SELECT doc_id, chn, fr, i, i // chn AS f, i % chn AS ch,
        |  ((ascii(substr(text, CAST(i % n AS INT) + 1, 1)) * 523
        |    + (i // chn) * 1031 + (i % chn) * 1733) % 65536) - 32768 AS s
-       |FROM (
-       |  SELECT doc_id, text, n, chn, fr, unnest(range(0, fr * chn)) AS i
-       |  FROM (
-       |    SELECT doc_id, text, length(text) AS n,
-       |      1 + (doc_id % 2) AS chn, 1 + (length(text) % 29) AS fr
-       |    FROM documents
-       |    WHERE doc_id < $maxDocId AND text IS NOT NULL
-       |      AND length(text) > 0))""".stripMargin
+       |FROM (${fixtureElements(maxDocId,
+                 "1 + (doc_id % 2) AS chn, 1 + (length(text) % 29) AS fr", "fr * chn")})""".stripMargin
 
   /** The audio oracles' stats tail: [[MultimodalOps.decodeClip]]'s row over samples
     * `v` (doc_id, chn, fr, f, ch, s), keeping every `step`-th frame. */
@@ -294,21 +292,15 @@ object MultimodalOracles {
     * two literal quarantine rows — the corrupt verdicts are part of the
     * CONTRACT, not a side effect. */
   def decodeLenientOracle(maxDocId: Long = 256L, junkId: Long = 300L,
-                          emptyId: Long = 301L): String =
+                          emptyId: Long = 301L): String = {
+    val cols = Seq("n_channels", "sample_rate", "n_frames", "sum_ch0", "sum_ch1",
+      "min_sample", "max_sample")
     s"""WITH good AS (${decodeUlawOracle(maxDocId)})
-       |SELECT doc_id, 'ok' AS status, n_channels, sample_rate, n_frames,
-       |  sum_ch0, sum_ch1, min_sample, max_sample
+       |SELECT doc_id, 'ok' AS status, ${cols.mkString(", ")}
        |FROM good
        |UNION ALL
-       |SELECT v.id AS doc_id, 'corrupt' AS status,
-       |  CAST(NULL AS BIGINT) AS n_channels,
-       |  CAST(NULL AS BIGINT) AS sample_rate,
-       |  CAST(NULL AS BIGINT) AS n_frames,
-       |  CAST(NULL AS BIGINT) AS sum_ch0,
-       |  CAST(NULL AS BIGINT) AS sum_ch1,
-       |  CAST(NULL AS BIGINT) AS min_sample,
-       |  CAST(NULL AS BIGINT) AS max_sample
-       |FROM (VALUES ($junkId), ($emptyId)) AS v(id)""".stripMargin
+       |${corruptRows(Seq(junkId, emptyId), cols)}""".stripMargin
+  }
 
   /** Oracle: every sampled frame's dims + exact gray sum from the
     * generation formula — agreement means the sequence write → multi-
@@ -319,15 +311,9 @@ object MultimodalOracles {
        |  SELECT doc_id, w, h, i // (w * h) AS f,
        |    (ascii(substr(text, CAST(i % n AS INT) + 1, 1)) * 7
        |      + (i // (w * h)) * 13 + (i % (w * h)) * 3) % 256 AS g
-       |  FROM (
-       |    SELECT doc_id, text, n, w, h, unnest(range(0, fr * w * h)) AS i
-       |    FROM (
-       |      SELECT doc_id, text, length(text) AS n,
-       |        1 + (length(text) % 9) AS w, 1 + (doc_id % 5) AS h,
-       |        1 + (doc_id % 4) AS fr
-       |      FROM documents
-       |      WHERE doc_id < $maxDocId AND text IS NOT NULL
-       |        AND length(text) > 0)))
+       |  FROM (${fixtureElements(maxDocId,
+                   "1 + (length(text) % 9) AS w, 1 + (doc_id % 5) AS h, 1 + (doc_id % 4) AS fr",
+                   "fr * w * h")}))
        |SELECT doc_id, CAST(f AS BIGINT) AS frame_idx,
        |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
        |  CAST(sum(g) AS BIGINT) AS sum_gray

@@ -46,22 +46,19 @@ object StatsOracles {
       |    CAST(sum(xc * xc) AS BIGINT) AS sxx,
       |    CAST(sum(yc * yc) AS BIGINT) AS syy,
       |    CAST(sum(xc * yc) AS BIGINT) AS sxy
-      |  FROM cents GROUP BY 1)
+      |  FROM cents GROUP BY 1),
+      |f AS (
+      |  SELECT l_returnflag, n, CAST(n AS DOUBLE) AS fn,
+      |    CAST(sx AS DOUBLE) AS fx, CAST(sy AS DOUBLE) AS fy, CAST(sxx AS DOUBLE) AS fxx,
+      |    CAST(syy AS DOUBLE) AS fyy, CAST(sxy AS DOUBLE) AS fxy
+      |  FROM m)
       |SELECT l_returnflag, n,
-      |  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-      |    / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-      |       * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+      |  (fn * fxy - fx * fy) / (sqrt(fn * fxx - fx * fx) * sqrt(fn * fyy - fy * fy))
       |    AS corr_qty_price,
-      |  ((CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-      |    / CAST(n AS DOUBLE)) / 10000.0 AS covar_pop,
-      |  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-      |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-      |    AS slope,
-      |  ((CAST(sy AS DOUBLE)
-      |     - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-      |        / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-      |       * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)) / 100.0 AS intercept
-      |FROM m""".stripMargin
+      |  ((fxy - fx * fy / fn) / fn) / 10000.0 AS covar_pop,
+      |  (fn * fxy - fx * fy) / (fn * fxx - fx * fx) AS slope,
+      |  ((fy - ((fn * fxy - fx * fy) / (fn * fxx - fx * fx)) * fx) / fn) / 100.0 AS intercept
+      |FROM f""".stripMargin
 
   def outliersOracle(nSigma: Double = 1.5): String =
     s"""WITH cents AS (
@@ -142,23 +139,26 @@ object StatsOracles {
        |  SELECT CAST(floor(value / $width) AS BIGINT) AS bucket,
        |    CASE WHEN epoch_us(ts) <= (SELECT mid FROM b) THEN 1 ELSE 0 END AS is_a
        |  FROM events),
-       |counts AS (
-       |  SELECT bucket, CAST(sum(is_a) AS BIGINT) AS n_a,
-       |    CAST(sum(1 - is_a) AS BIGINT) AS n_b
-       |  FROM sided GROUP BY 1),
-       |tot AS (
-       |  SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
-       |    CAST(sum(n_b) AS BIGINT) AS tot_b FROM counts)
-       |SELECT bucket, n_a, n_b,
-       |  CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0) AS p_a,
-       |  CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0) AS p_b,
-       |  (CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0)
-       |     - CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0))
-       |  * (CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0)
-       |     - CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0))
-       |  / ((CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0)
-       |      + CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0)) / 2.0) AS contrib
-       |FROM counts, tot""".stripMargin
+       |$driftTail""".stripMargin
+
+  /** The χ² drift terms over `sided(bucket, is_a)`: per-bucket counts of
+    * the two halves, their shares p_a/p_b and (p_a − p_b)² / mean. */
+  private val driftTail: String =
+    """counts AS (
+      |  SELECT bucket, CAST(sum(is_a) AS BIGINT) AS n_a,
+      |    CAST(sum(1 - is_a) AS BIGINT) AS n_b
+      |  FROM sided GROUP BY 1),
+      |tot AS (
+      |  SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
+      |    CAST(sum(n_b) AS BIGINT) AS tot_b FROM counts),
+      |p AS (
+      |  SELECT bucket, n_a, n_b,
+      |    CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0) AS p_a,
+      |    CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0) AS p_b
+      |  FROM counts, tot)
+      |SELECT bucket, n_a, n_b, p_a, p_b,
+      |  (p_a - p_b) * (p_a - p_b) / ((p_a + p_b) / 2.0) AS contrib
+      |FROM p""".stripMargin
 
   /** DuckDB twin: quantile_cont over the same integer cents (bitwise
     * equal to the frequency-weighted Spark percentile — identical
@@ -181,24 +181,7 @@ object StatsOracles {
        |         END AS bucket,
        |    CASE WHEN t_us <= (SELECT mid FROM b) THEN 1 ELSE 0 END AS is_a
        |  FROM cents, q),
-       |counts AS (
-       |  SELECT bucket, CAST(sum(is_a) AS BIGINT) AS n_a,
-       |    CAST(sum(1 - is_a) AS BIGINT) AS n_b
-       |  FROM sided GROUP BY 1),
-       |tot AS (
-       |  SELECT CAST(sum(n_a) AS BIGINT) AS tot_a,
-       |    CAST(sum(n_b) AS BIGINT) AS tot_b FROM counts)
-       |SELECT bucket, n_a, n_b,
-       |  CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0) AS p_a,
-       |  CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0) AS p_b,
-       |  (CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0)
-       |     - CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0))
-       |  * (CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0)
-       |     - CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0))
-       |  / ((CAST(n_a AS DOUBLE) / NULLIF(CAST(tot_a AS DOUBLE), 0.0)
-       |      + CAST(n_b AS DOUBLE) / NULLIF(CAST(tot_b AS DOUBLE), 0.0)) / 2.0)
-       |    AS contrib
-       |FROM counts, tot""".stripMargin
+       |$driftTail""".stripMargin
   }
 
   /** Oracle for the registered pair (the dup-injected corpus vs its
