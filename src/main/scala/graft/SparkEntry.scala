@@ -957,7 +957,7 @@ object SparkEntry {
     "payments_encode" -> PaymentOracles.encodeOracle,
     "payments_pipeline" -> PaymentOracles.pipelineOracle,
     "cast_project" -> EventOracles.castProjectOracle,
-    "text_stats" -> textStatsSql,
+    "text_stats" -> TextOracles.textStatsSql(),
     "lang_id" -> TextOracles.langIdOracle,
     "token_counts" -> TextOracles.tokenCountsOracle,
     "heavy_hitters" -> TextOracles.heavyHittersOracle(guaranteedOnly = true),
@@ -1114,14 +1114,14 @@ object SparkEntry {
     "retrieval_recall_annindex" -> RetrievalOracles.retrievalRecallAnnIndexOracle(),
     "triplet_coverage" -> SemanticOracles.tripletCoverageOracle(),
     "sessionize" -> EventOracles.sessionizeOracle,
-    "quality_filter" -> TextOracles.qualityFilterOracle(textStatsSql),
-    "quality_percentile" -> TextOracles.qualityPercentileFilterOracle(textStatsSql),
+    "quality_filter" -> TextOracles.qualityFilterOracle,
+    "quality_percentile" -> TextOracles.qualityPercentileFilterOracle(),
     "quality_calibrated" -> TextOracles.qualityCalibratedOracle(),
     "salted_join" -> EventOracles.saltedJoinOracle,
     "dedup_pipeline" -> DedupOracles.dedupPipelineOracle,
     "paragraph_dedup" -> DedupOracles.paragraphDedupOracle(),
     "boilerplate_strip" -> DedupOracles.boilerplateStripOracle(),
-    "gopher_gate" -> TextOracles.gopherGateOracle(textStatsSql),
+    "gopher_gate" -> TextOracles.gopherGateOracle(),
     "decontaminate" -> DedupOracles.decontaminateOracle(),
     "decontaminate_spans" -> DedupOracles.decontaminateSpansOracle(),
     "decontaminate_surgical" -> DedupOracles.decontaminateSurgicalOracle(),
@@ -1178,14 +1178,9 @@ object SparkEntry {
     "scd2_history" -> EventOracles.scd2HistoryOracle,
     "cdc_upsert_incremental" -> EventOracles.cdcUpsertOracle,
     "asof_join" -> EventOracles.asofJoinOracle,
-    "interval_join" ->
-      EventOracles.sessionOverlapPairsOracle(EventOracles.sessionizeOracle),
+    "interval_join" -> EventOracles.sessionOverlapPairsOracle,
     "range_join" -> RelationalOracles.rangeJoinOracle,
     "source_signatures" -> DedupOracles.sourceSignaturesOracle,
     "source_overlap" -> DedupOracles.sourceOverlapOracle,
   )
-
-  // ONE score-formula string (TextOracles.textStatsSql) shared by every
-  // quality oracle, so the formula cannot fork between gates
-  private val textStatsSql: String = TextOracles.textStatsSql()
 }

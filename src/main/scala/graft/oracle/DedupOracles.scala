@@ -271,52 +271,43 @@ object DedupOracles {
     * both sides derive the separator from the same `sep` value.
     * The positional unnest is bounded by the measured max segment count.
     */
-  def paragraphDedupOracle(sep: String = ". "): String = {
-    val q = sep.replace("'", "''")
-    s"""WITH ${segmentCtes("documents", q)},
-      |ranked AS (
-      |  SELECT *, row_number() OVER (PARTITION BY md5(seg) ORDER BY doc_id, pos) AS rn
-      |  FROM segs)
-      |SELECT doc_id,
-      |  string_agg(seg, '$q' ORDER BY pos) AS text_dedup,
-      |  count(*) AS n_kept,
-      |  n_total
-      |FROM ranked WHERE rn = 1
-      |GROUP BY doc_id, n_total""".stripMargin
-  }
+  def paragraphDedupOracle(sep: String = ". "): String =
+    segmentDedup(sep, "documents", "text_dedup", "ranked WHERE rn = 1",
+      """ranked AS (
+        |  SELECT *, row_number() OVER (PARTITION BY md5(seg) ORDER BY doc_id, pos) AS rn
+        |  FROM segs)""".stripMargin)
 
   /** Same literal-separator derivation contract as [[paragraphDedupOracle]];
     * the keep rule mirrors as `list_position(arr, seg) = pos` (both
     * 1-based first-occurrence indices).
     */
-  def lineDedupOracle(sep: String = ". "): String = {
-    val q = sep.replace("'", "''")
-    s"""WITH ${segmentCtes("documents", q)}
-       |SELECT doc_id,
-       |  string_agg(seg, '$q' ORDER BY pos) AS text_dedup,
-       |  count(*) AS n_kept,
-       |  n_total
-       |FROM segs WHERE list_position(arr, seg) = pos
-       |GROUP BY doc_id, n_total""".stripMargin
-  }
+  def lineDedupOracle(sep: String = ". "): String =
+    segmentDedup(sep, "documents", "text_dedup", "segs WHERE list_position(arr, seg) = pos")
 
   /** Boilerplate-strip oracle over the [[augmentedSql]] corpus: same
     * literal segmentation, same digest-keyed DF threshold, string_agg
     * reassembly ordered by position — separator and threshold both
     * derive from the same values as the Spark side. */
-  def boilerplateStripOracle(sep: String = ". ", maxDf: Long = 1L): String = {
+  def boilerplateStripOracle(sep: String = ". ", maxDf: Long = 1L): String =
+    segmentDedup(sep, "corpus", "text_clean",
+      "segs WHERE md5(seg) IN (SELECT h FROM rare)",
+      s"""rare AS (
+         |  SELECT md5(seg) AS h FROM segs
+         |  GROUP BY 1 HAVING count(DISTINCT doc_id) <= $maxDf)""".stripMargin,
+      corpus = s"$augmentedSql,\n")
+
+  /** The `sep`-segments of each `from` document that `kept` (a FROM
+    * clause over `segs` and the `ctes`) admits, rejoined in order as
+    * `text`, with their count and the document's segment count. `corpus`
+    * defines `from` when it is not a table. */
+  private def segmentDedup(sep: String, from: String, text: String, kept: String,
+                           ctes: String = "", corpus: String = ""): String = {
     val q = sep.replace("'", "''")
-    s"""WITH $augmentedSql,
-      |${segmentCtes("corpus", q)},
-      |rare AS (
-      |  SELECT md5(seg) AS h FROM segs
-      |  GROUP BY 1 HAVING count(DISTINCT doc_id) <= $maxDf)
-      |SELECT doc_id,
-      |  string_agg(seg, '$q' ORDER BY pos) AS text_clean,
-      |  count(*) AS n_kept,
-      |  n_total
-      |FROM segs WHERE md5(seg) IN (SELECT h FROM rare)
-      |GROUP BY doc_id, n_total""".stripMargin
+    s"""WITH $corpus${segmentCtes(from, q)}${if (ctes.isEmpty) "" else s",\n$ctes"}
+       |SELECT doc_id, string_agg(seg, '$q' ORDER BY pos) AS $text,
+       |  count(*) AS n_kept, n_total
+       |FROM $kept
+       |GROUP BY doc_id, n_total""".stripMargin
   }
 
   /** `segs(doc_id, arr, n_total, pos, seg)`: the non-empty

@@ -73,17 +73,10 @@ object EventOracles {
       |ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts_us >= v.ts_us""".stripMargin
 
   val cdcUpsertOracle: String =
-    """WITH latest AS (
-      |  SELECT user_id AS chg_key,
-      |    CASE WHEN event_type = 'error' THEN 'delete' ELSE 'upsert' END
-      |      AS last_op,
-      |    value AS new_bal
-      |  FROM (
-      |    SELECT *, row_number() OVER
-      |      (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id DESC)
-      |      AS rn
-      |    FROM events)
-      |  WHERE rn = 1)
+    s"""WITH latest AS (
+      |${DuckSql.topK("user_id AS chg_key, CASE WHEN event_type = 'error' THEN 'delete' " +
+                     "ELSE 'upsert' END AS last_op, value AS new_bal",
+                     "events", "user_id", "epoch_us(ts) DESC, event_id DESC", 1)})
       |SELECT COALESCE(c.c_custkey, l.chg_key) AS key,
       |  c.c_name,
       |  CASE WHEN l.last_op = 'upsert' THEN l.new_bal ELSE c.c_acctbal END
@@ -145,7 +138,7 @@ object EventOracles {
   /** Oracle: the NAIVE inequality-join formulation over the same
     * sessionize CTE — independent of the cell/dedup machinery.
     */
-  def sessionOverlapPairsOracle(sessionizeOracle: String): String =
+  def sessionOverlapPairsOracle: String =
     s"""WITH s AS ($sessionizeOracle)
        |SELECT a.user_id AS a_user, a.session_idx AS a_session,
        |  b.user_id AS b_user, b.session_idx AS b_session,

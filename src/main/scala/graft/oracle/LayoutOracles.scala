@@ -5,31 +5,29 @@ package graft.oracle
   */
 object LayoutOracles {
 
-  private def morton(a: String, b: String, bits: Int): String =
-    (0 until bits).map { i =>
-      s"((($a >> $i) & 1) << ${2 * i}) + ((($b >> $i) & 1) << ${2 * i + 1})"
-    }.mkString(" + ")
-
-  def zorderLayoutOracle(blockBits: Int = 10): String =
-    s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-       |  CAST(${morton("l_partkey", "l_suppkey", 16)} AS BIGINT) AS morton,
-       |  CAST((${morton("l_partkey", "l_suppkey", 16)}) >> $blockBits AS BIGINT)
-       |    AS block
-       |FROM lineitem""".stripMargin
-
-  private def mortonN(cols: Seq[String], bits: Int): String = {
+  /** The Morton (Z-order) key of `cols`: bit i of column j lands at
+    * bit d·i + j, d = cols.size. */
+  private def morton(cols: Seq[String], bits: Int): String = {
     val d = cols.size
     (for { (c, j) <- cols.zipWithIndex; i <- 0 until bits }
       yield s"((($c >> $i) & 1) << ${d * i + j})").mkString(" + ")
   }
 
-  def zorder3LayoutOracle(blockBits: Int = 38): String = {
-    val m = mortonN(Seq("l_partkey", "l_suppkey", "l_linenumber"), 16)
+  /** The lineitem keys with the 16-bit Morton key of `cols` and its
+    * block (the key shifted right by `blockBits`). */
+  private def zorderLayout(cols: Seq[String], blockBits: Int): String = {
+    val m = morton(cols, 16)
     s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
        |  CAST($m AS BIGINT) AS morton,
        |  CAST(($m) >> $blockBits AS BIGINT) AS block
        |FROM lineitem""".stripMargin
   }
+
+  def zorderLayoutOracle(blockBits: Int = 10): String =
+    zorderLayout(Seq("l_partkey", "l_suppkey"), blockBits)
+
+  def zorder3LayoutOracle(blockBits: Int = 38): String =
+    zorderLayout(Seq("l_partkey", "l_suppkey", "l_linenumber"), blockBits)
 
   /** Oracle generated FROM THE SAME three-phase loop as [[LayoutOps.withHilbertN]]
     * (the hilbert-oracle idiom): one CTE per inverse-undo step — the
@@ -148,7 +146,7 @@ object LayoutOracles {
   def optimizeRoundtripOracle(targetBytes: Long = 32 * 1024,
                               nFiles: Int = 97): String =
     s"""WITH c AS (
-       |  SELECT CAST(${morton("(doc_id % 256)", "(n_chars % 256)", 8)}
+       |  SELECT CAST(${morton(Seq("(doc_id % 256)", "(n_chars % 256)"), 8)}
        |    AS BIGINT) AS curve
        |  FROM documents WHERE n_chars IS NOT NULL),
        |plan AS (

@@ -7,6 +7,18 @@ package graft.oracle
   */
 object RelationalOracles {
 
+  /** The exact sum of a money column: DECIMAL(18,2) terms, one cast to
+    * DOUBLE after aggregation. */
+  private def dsum(c: String): String = s"CAST(sum(CAST($c AS DECIMAL(18,2))) AS DOUBLE)"
+
+  /** The exact revenue term of a lineitem row, price · (1 − discount)
+    * (`RelationalOps.revD`). */
+  private val revD: String =
+    "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
+
+  /** The exact revenue of a group, as DOUBLE. */
+  private val revenue: String = s"CAST(sum($revD) AS DOUBLE)"
+
   val rollingRevenueOracle: String =
     """SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS order_date_us,
       |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
@@ -35,7 +47,7 @@ object RelationalOracles {
       |GROUP BY 1""".stripMargin
 
   val smallQuantityRevenueOracle: String =
-    """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
+    s"""SELECT ${dsum("l_extendedprice")} / 7.0
       |         AS avg_yearly,
       |       count(*) AS n_lines
       |FROM lineitem, part
@@ -49,26 +61,21 @@ object RelationalOracles {
       |WHERE NOT EXISTS (SELECT 1 FROM orders
       |                  WHERE o_custkey = c_custkey AND o_totalprice > 300000)""".stripMargin
 
-  val pricingRollupOracle: String =
-    """SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+  /** Item count and quantity per (flag, status) grouping set of
+    * `groupBy`, with the grouping level `lvl`. */
+  private def pricingGrouped(groupBy: String): String =
+    s"""SELECT l_returnflag, l_linestatus, count(*) AS n_items,
+      |  ${dsum("l_quantity")} AS sum_qty,
       |  CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT) AS lvl
       |FROM lineitem
-      |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin
+      |GROUP BY $groupBy""".stripMargin
 
-  val pricingCubeOracle: String =
-    """SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT) AS lvl
-      |FROM lineitem
-      |GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin
+  val pricingRollupOracle: String = pricingGrouped("ROLLUP (l_returnflag, l_linestatus)")
+
+  val pricingCubeOracle: String = pricingGrouped("CUBE (l_returnflag, l_linestatus)")
 
   val pricingGroupingSetsOracle: String =
-    """SELECT l_returnflag, l_linestatus, count(*) AS n_items,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT) AS lvl
-      |FROM lineitem
-      |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus))""".stripMargin
+    pricingGrouped("GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus))")
 
   val returnFlagPivotOracle: String =
     """SELECT l_linestatus,
@@ -98,10 +105,8 @@ object RelationalOracles {
       |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin
 
   val shippingPriorityOracle: String =
-    """SELECT l_orderkey, epoch_us(o_orderdate) AS order_date_us,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS revenue
+    s"""SELECT l_orderkey, epoch_us(o_orderdate) AS order_date_us,
+      |  $revenue AS revenue
       |FROM customer
       |JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON l_orderkey = o_orderkey
@@ -120,27 +125,20 @@ object RelationalOracles {
       |GROUP BY 1""".stripMargin
 
   val topReturnCustomersOracle: String =
-    """WITH rev AS (
+    s"""WITH rev AS (
       |  SELECT n_name, c_custkey,
-      |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |         (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |         AS DOUBLE) AS revenue
+      |    $revenue AS revenue
       |  FROM customer
       |  JOIN orders ON c_custkey = o_custkey
       |  JOIN lineitem ON l_orderkey = o_orderkey AND l_returnflag = 'R'
       |  JOIN nation ON c_nationkey = n_nationkey
       |  GROUP BY 1, 2)
-      |SELECT n_name, c_custkey, revenue, rank FROM (
-      |  SELECT *, row_number() OVER
-      |    (PARTITION BY n_name ORDER BY revenue DESC, c_custkey ASC) AS rank
-      |  FROM rev)
-      |WHERE rank <= 3""".stripMargin
+      |${DuckSql.topK("n_name, c_custkey, revenue, rank", "rev", "n_name",
+                     "revenue DESC, c_custkey ASC", 3, "rank")}""".stripMargin
 
   val localSupplierRevenueOracle: String =
-    """SELECT n_name,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS revenue
+    s"""SELECT n_name,
+      |  $revenue AS revenue
       |FROM customer
       |JOIN orders ON c_custkey = o_custkey
       |JOIN lineitem ON l_orderkey = o_orderkey
@@ -151,27 +149,25 @@ object RelationalOracles {
       |GROUP BY 1""".stripMargin
 
   val bigOrdersOracle: String =
-    """SELECT o_orderkey, o_custkey,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
+    s"""SELECT o_orderkey, o_custkey,
+      |  ${dsum("l_quantity")} AS total_qty
       |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
       |GROUP BY 1, 2
       |HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300""".stripMargin
 
   val pricingSummaryOracle: String =
-    """SELECT l_returnflag, l_linestatus,
-      |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS sum_disc_price,
+    s"""SELECT l_returnflag, l_linestatus,
+      |  ${dsum("l_quantity")} AS sum_qty,
+      |  ${dsum("l_extendedprice")} AS sum_base_price,
+      |  $revenue AS sum_disc_price,
       |  count(*) AS count_order
       |FROM lineitem
       |WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
       |GROUP BY 1, 2""".stripMargin
 
   val ordersByNationOracle: String =
-    """SELECT n_name, count(*) AS n_orders,
-      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+    s"""SELECT n_name, count(*) AS n_orders,
+      |  ${dsum("o_totalprice")} AS total_price
       |FROM orders
       |JOIN customer ON o_custkey = c_custkey
       |JOIN nation ON c_nationkey = n_nationkey
@@ -186,11 +182,9 @@ object RelationalOracles {
       |WHERE rank <= 3""".stripMargin
 
   val volumeShippingOracle: String =
-    """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+    s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
       |  CAST(year(l_shipdate) AS BIGINT) AS l_year,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS revenue
+      |  $revenue AS revenue
       |FROM lineitem
       |JOIN orders ON l_orderkey = o_orderkey
       |JOIN customer ON o_custkey = c_custkey
@@ -201,9 +195,8 @@ object RelationalOracles {
       |GROUP BY 1, 2, 3""".stripMargin
 
   val productProfitOracle: String =
-    """SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |           (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
+    s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
+      |  CAST(sum($revD
       |         - CAST(p_retailprice AS DECIMAL(18,2)) *
       |           CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS profit
       |FROM lineitem
@@ -225,24 +218,18 @@ object RelationalOracles {
       |GROUP BY 1""".stripMargin
 
   val promoRevenueOracle: String =
-    """SELECT CAST(year(l_shipdate) AS BIGINT) AS l_year,
+    s"""SELECT CAST(year(l_shipdate) AS BIGINT) AS l_year,
       |  (100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
-      |       THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |            (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
+      |       THEN $revD
       |       ELSE 0 END) AS DOUBLE))
-      |    / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |         (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |         AS DOUBLE) AS promo_share,
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS total_revenue
+      |    / $revenue AS promo_share,
+      |  $revenue AS total_revenue
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |GROUP BY 1""".stripMargin
 
   val topSupplierOracle: String =
-    """WITH rev AS (
-      |  SELECT l_suppkey, sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev_d
+    s"""WITH rev AS (
+      |  SELECT l_suppkey, sum($revD) AS rev_d
       |  FROM lineitem GROUP BY 1)
       |SELECT s_suppkey, s_name, CAST(rev_d AS DOUBLE) AS total_revenue
       |FROM rev JOIN supplier ON l_suppkey = s_suppkey
@@ -251,12 +238,9 @@ object RelationalOracles {
   def marketShareOracle(targetNation: String = "NATION_1"): String =
     s"""SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
        |  CAST(sum(CASE WHEN n1.n_name = '$targetNation'
-       |       THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
-       |            (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
+       |       THEN $revD
        |       ELSE 0 END) AS DOUBLE)
-       |    / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-       |         (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-       |         AS DOUBLE) AS mkt_share
+       |    / $revenue AS mkt_share
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey
        |JOIN customer ON o_custkey = c_custkey
@@ -265,12 +249,12 @@ object RelationalOracles {
        |GROUP BY 1""".stripMargin
 
   val salesOpportunityOracle: String =
-    """SELECT n_name, count(*) AS numcust,
-      |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+    s"""SELECT n_name, count(*) AS numcust,
+      |  ${dsum("c_acctbal")} AS totacctbal
       |FROM customer
       |JOIN nation ON c_nationkey = n_nationkey
       |WHERE CAST(c_acctbal AS DOUBLE) >
-      |    (SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+      |    (SELECT ${dsum("c_acctbal")}
       |            / CAST(count(*) AS DOUBLE)
       |     FROM customer WHERE c_acctbal > 0)
       |  AND c_custkey NOT IN
@@ -278,10 +262,8 @@ object RelationalOracles {
       |GROUP BY 1""".stripMargin
 
   val discountedRevenueOracle: String =
-    """SELECT
-      |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
-      |       (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-      |       AS DOUBLE) AS revenue,
+    s"""SELECT
+      |  $revenue AS revenue,
       |  count(*) AS n_items
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
@@ -320,8 +302,8 @@ object RelationalOracles {
       |                         WHERE l2.l_partkey = p_partkey)""".stripMargin
 
   val importantNationBalanceOracle: String =
-    """SELECT n_name,
-      |  CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+    s"""SELECT n_name,
+      |  ${dsum("s_acctbal")} AS total_bal
       |FROM supplier JOIN nation ON s_nationkey = n_nationkey
       |GROUP BY n_name
       |HAVING sum(CAST(s_acctbal AS DECIMAL(18,2))) >

@@ -188,24 +188,29 @@ object RetrievalOracles {
        |dtop AS (
        |${topK("q_id, nn_id AS doc_id, adc_dist, rank", "ascored", "q_id", "adc_dist ASC, nn_id ASC", kChannel, "rank")})""".stripMargin
 
-  def hybridRrfIndexOracle(nQueries: Int = 8, kChannel: Int = 10,
-                           k: Int = 5, dims: Int = 64, m: Int = 4,
-                           kCode: Int = 16, nPlanes: Int = 8): String =
+  /** The hybrid ranking of the first `nQueries` documents: the sparse
+    * channel and `denseChain` (ending in `dtop`) fused by [[rrfCtes]]. */
+  private def hybridOracle(nQueries: Int, kChannel: Int, k: Int,
+                           denseChain: String => String): String =
     s"""WITH corpus AS (SELECT doc_id, text FROM documents),
        |${sparseCtes(s"doc_id < $nQueries", kChannel)},
-       |${annDocCtes(s"d.vec_id < $nQueries", kChannel, dims, m, kCode, nPlanes)},
+       |${denseChain(s"doc_id < $nQueries")},
        |${rrfCtes(k)}
        |SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM htop""".stripMargin
 
+  def hybridRrfOracle(nQueries: Int = 8, kChannel: Int = 10, k: Int = 5,
+                      dims: Int = 64): String =
+    hybridOracle(nQueries, kChannel, k, denseCtes(_, kChannel, dims))
+
   def hybridRrfLshOracle(nQueries: Int = 8, kChannel: Int = 10, k: Int = 5,
-                         dims: Int = 64, planes: Int = 8): String = {
-    val pred = s"doc_id < $nQueries"
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |${sparseCtes(pred, kChannel)},
-       |${denseCtes(pred, kChannel, dims, planes)},
-       |${rrfCtes(k)}
-       |SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM htop""".stripMargin
-  }
+                         dims: Int = 64, planes: Int = 8): String =
+    hybridOracle(nQueries, kChannel, k, denseCtes(_, kChannel, dims, planes))
+
+  def hybridRrfIndexOracle(nQueries: Int = 8, kChannel: Int = 10,
+                           k: Int = 5, dims: Int = 64, m: Int = 4,
+                           kCode: Int = 16, nPlanes: Int = 8): String =
+    hybridOracle(nQueries, kChannel, k,
+      _ => annDocCtes(s"d.vec_id < $nQueries", kChannel, dims, m, kCode, nPlanes))
 
   /** RRF fusion CTEs over `stop` ⋈ `dtop`; terminal CTE `htop` =
     * (q_id, doc_id, sparse_rank, dense_rank, rrf, rank ≤ k). */
@@ -226,20 +231,14 @@ object RetrievalOracles {
        |htop AS (
        |${channelTop("sparse_rank, dense_rank, rrf", "fused", "rrf DESC, doc_id ASC", k)})""".stripMargin
 
-  def hybridRrfOracle(nQueries: Int = 8, kChannel: Int = 10, k: Int = 5,
-                      dims: Int = 64): String = {
-    val pred = s"doc_id < $nQueries"
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |${sparseCtes(pred, kChannel)},
-       |${denseCtes(pred, kChannel, dims)},
-       |${rrfCtes(k)}
-       |SELECT q_id, doc_id, sparse_rank, dense_rank, rrf, rank FROM htop""".stripMargin
-  }
+  /** The recall queries' probes: the planted near-copies of the first 80
+    * documents, each of whose truth is its original (q_id − 100000). */
+  private val recallProbes = "doc_id >= 100000 AND doc_id < 100080"
 
   def retrievalRecallOracle(kChannel: Int = 10, k: Int = 5,
                             dims: Int = 64, lsh: Boolean = false): String =
-    retrievalRecallOracleOver(DedupOracles.augmentedSql, "", kChannel, k, dims,
-      lsh)
+    retrievalRecallOracleWith(DedupOracles.augmentedSql, "",
+      denseCtes(recallProbes, kChannel, dims, if (lsh) 8 else 0), kChannel, k)
 
   /** Sampled twin — the SAME derivation over the co-addressed sampled
     * corpus CTE (terminal CTE is still `corpus`, so the whole chain
@@ -248,10 +247,10 @@ object RetrievalOracles {
                                    dims: Int = 64, sampleBuckets: Int = 128,
                                    seed: String = "42",
                                    lsh: Boolean = false): String =
-    retrievalRecallOracleOver(
+    retrievalRecallOracleWith(
       DedupOracles.coSampledAugmentedSql(sampleBuckets, seed),
       s"CAST($sampleBuckets AS BIGINT) AS sample_buckets, ",
-      kChannel, k, dims, lsh)
+      denseCtes(recallProbes, kChannel, dims, if (lsh) 8 else 0), kChannel, k)
 
   /** Recall oracle over the PRODUCTION dense channel
     * ([[RetrievalOps.retrievalRecallAnnIndex]]'s twin): same hits tail, dense CTE
@@ -265,41 +264,26 @@ object RetrievalOracles {
         dims, m, kCode, nPlanes),
       kChannel, k)
 
-  private def retrievalRecallOracleOver(corpusCte: String, leadCols: String,
-                                        kChannel: Int, k: Int, dims: Int,
-                                        lsh: Boolean): String = {
-    val pred = "doc_id >= 100000 AND doc_id < 100080"
-    retrievalRecallOracleWith(corpusCte, leadCols,
-      denseCtes(pred, kChannel, dims, if (lsh) 8 else 0),
-      kChannel, k)
-  }
-
+  /** Per channel (sparse, dense, hybrid): how many probes rank their
+    * truth within the top `k`, and that count over the probe count. */
   private def retrievalRecallOracleWith(corpusCte: String, leadCols: String,
                                         denseCteChain: String,
                                         kChannel: Int, k: Int): String = {
-    val pred = "doc_id >= 100000 AND doc_id < 100080"
+    val hits = Seq("sparse" -> "stop", "dense" -> "dtop", "hybrid" -> "htop").map {
+      case (channel, top) =>
+        s"""  SELECT '$channel' AS channel, CAST(count(*) AS BIGINT) AS n_hits FROM $top
+           |  WHERE rank <= $k AND doc_id = q_id - 100000""".stripMargin
+    }
     s"""WITH $corpusCte,
-       |${sparseCtes(pred, kChannel)},
+       |${sparseCtes(recallProbes, kChannel)},
        |$denseCteChain,
        |${rrfCtes(k)},
        |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries
-       |       FROM corpus WHERE $pred),
-       |shits AS (SELECT CAST(count(*) AS BIGINT) AS n_hits FROM stop
-       |          WHERE rank <= $k AND doc_id = q_id - 100000),
-       |dhits AS (SELECT CAST(count(*) AS BIGINT) AS n_hits FROM dtop
-       |          WHERE rank <= $k AND doc_id = q_id - 100000),
-       |hhits AS (SELECT CAST(count(*) AS BIGINT) AS n_hits FROM htop
-       |          WHERE rank <= $k AND doc_id = q_id - 100000)
+       |       FROM corpus WHERE $recallProbes),
+       |hits AS (
+       |${hits.mkString("\n  UNION ALL\n")})
        |SELECT ${leadCols}channel, n_queries, n_hits,
        |  CAST(n_hits AS DOUBLE) / CAST(n_queries AS DOUBLE) AS recall
-       |FROM (
-       |  SELECT 'sparse' AS channel, nq.n_queries, s.n_hits
-       |  FROM shits s CROSS JOIN nq
-       |  UNION ALL
-       |  SELECT 'dense' AS channel, nq.n_queries, d.n_hits
-       |  FROM dhits d CROSS JOIN nq
-       |  UNION ALL
-       |  SELECT 'hybrid' AS channel, nq.n_queries, h.n_hits
-       |  FROM hhits h CROSS JOIN nq)""".stripMargin
+       |FROM hits CROSS JOIN nq""".stripMargin
   }
 }

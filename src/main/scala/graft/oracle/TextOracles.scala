@@ -126,7 +126,13 @@ object TextOracles {
     s"""WITH t AS (
        |  SELECT tok FROM (SELECT unnest(${words()}) AS tok FROM documents)
        |  WHERE len(tok) > 0),
-       |n AS (SELECT count(*) AS n FROM t),
+       |${heavyTail(k, capacity, guaranteedOnly)}""".stripMargin
+
+  /** The exact top `k` of the tokens `t(tok)`, ties to the smaller token,
+    * each flagged `guaranteed` when its count exceeds N / (capacity + 1),
+    * the Misra-Gries guarantee (N = the token total). */
+  private def heavyTail(k: Int, capacity: Int, guaranteedOnly: Boolean): String =
+    s"""n AS (SELECT count(*) AS n FROM t),
        |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
        |r AS (
        |  SELECT tok, cnt, cnt > n // ${capacity + 1} AS guaranteed
@@ -139,14 +145,7 @@ object TextOracles {
                         guaranteedOnly: Boolean = false): String =
     s"""${DedupOracles.documentsShingledCte},
        |t AS (SELECT unnest(shingles) AS tok FROM shingled),
-       |n AS (SELECT count(*) AS n FROM t),
-       |c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY 1),
-       |r AS (
-       |  SELECT tok, cnt, cnt > n // ${capacity + 1} AS guaranteed
-       |  FROM c, n
-       |  ORDER BY cnt DESC, tok ASC
-       |  LIMIT $k)
-       |SELECT tok, cnt, guaranteed FROM r${if (guaranteedOnly) " WHERE guaranteed" else ""}""".stripMargin
+       |${heavyTail(k, capacity, guaranteedOnly)}""".stripMargin
 
   /** DuckDB twin of [[TextOps.bm25TopK]] — same map-side query-vocab filter
     * (expressed as a semi join), same single-IEEE-op composition, same
@@ -185,13 +184,13 @@ object TextOracles {
       |  COALESCE(t.top_bigram_frac, 0.0) AS top_bigram_frac
       |FROM seg_stats s LEFT JOIN top t ON s.doc_id = t.doc_id""".stripMargin
 
-  def qualityFilterOracle(statsOracle: String): String =
+  def qualityFilterOracle: String =
     s"""SELECT doc_id, n_tokens, stop_ratio, quality_score
-       |FROM ($statsOracle)
+       |FROM (${textStatsSql()})
        |WHERE n_tokens >= 20 AND stop_ratio <= 0.3 AND avg_token_len <= 8.0""".stripMargin
 
-  def qualityPercentileFilterOracle(statsOracle: String, p: Double = 0.5): String =
-    s"""WITH scored AS ($statsOracle),
+  def qualityPercentileFilterOracle(p: Double = 0.5): String =
+    s"""WITH scored AS (${textStatsSql()}),
        |t AS (SELECT quantile_cont(quality_score, $p) AS thr FROM scored)
        |SELECT doc_id, n_tokens, quality_score, thr
        |FROM scored, t WHERE quality_score >= thr""".stripMargin
@@ -231,13 +230,12 @@ object TextOracles {
   /** Gopher-gate oracle: same stats + repetition CTEs joined on doc_id,
     * same thresholds (single source of truth via the shared defaults),
     * flags as CASE→BIGINT, keep as the flag product. */
-  def gopherGateOracle(statsOracle: String,
-                       minTokens: Long = 20L, maxTokens: Long = 100000L,
+  def gopherGateOracle(minTokens: Long = 20L, maxTokens: Long = 100000L,
                        minAvgLen: Double = 3.0, maxAvgLen: Double = 4.6,
                        minStopRatio: Double = 0.02,
                        maxDupSegFrac: Double = 0.3,
                        maxTopBigramFrac: Double = 0.06): String =
-    s"""WITH stats AS ($statsOracle),
+    s"""WITH stats AS (${textStatsSql()}),
        |rep AS (SELECT * FROM ($docRepetitionOracle) r),
        |flags AS (
        |  SELECT s.doc_id,
