@@ -27,11 +27,7 @@ object Bench {
     try spark.read.parquet(s"$sfDir/region.parquet").count()
     catch { case _: Throwable => () }
 
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Json.{quote => q}
 
     val timings = collection.mutable.LinkedHashMap.empty[String, Double]
     // Per-query per-REP times (VERDICT r11 item 3): the min-of-N

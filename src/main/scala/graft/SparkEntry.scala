@@ -7,11 +7,12 @@ import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every operator from SURVEY.md §2 (and the LLM-pipeline extensions B8-B11)
   * is registered here as a batch query over the driver's parquet test data,
-  * with a matching DuckDB oracle in [[oracleSql]]. Column names are aliased
+  * with a matching DuckDB oracle from [[graft.oracle]] in [[oracleSql]]
+  * (the two sketch queries have none by design). Column names are aliased
   * identically on both sides (the driver's compare sorts columns by name
   * before hashing). Doubles are only ever produced by single deterministic
   * IEEE operations (division / left-fold accumulation), never `round()`,
@@ -92,8 +93,8 @@ object SparkEntry {
     // Misra-Gries sketch (native TypedImperativeAggregate, O(m) summary
     // per partition) -> broadcast candidates -> exact verify pass.
     // guaranteedOnly: the oracle gate covers exactly the rows whose
-    // top-k membership is a theorem (ADVICE r9 — fixture-independent
-    // certification); the flagged best-effort tail is spec-pinned.
+    // top-k membership is a theorem, whatever the fixture; the flagged
+    // best-effort tail is spec-pinned.
     "heavy_hitters" -> ((s, dir) =>
       FrequencyOps.heavyHitters(D(s, dir), guaranteedOnly = true)),
     "heavy_ngrams" -> ((s, dir) =>
@@ -102,10 +103,10 @@ object SparkEntry {
       FrequencyOps.heavyHittersBySource(D(s, dir), guaranteedOnly = true)),
     "bpe_pairs" -> ((s, dir) => BpeOps.bpePairCounts(D(s, dir))),
     "bpe_segment" -> ((s, dir) => BpeOps.bpeSegmentFrozen(D(s, dir))),
-    // train->apply composite (VERDICT r13 item 2): LIVE bpeTrainAuto
-    // merges feed the segmenter; the oracle embeds the frozen sf0.01
-    // provenance sequence, so the gate re-proves training determinism
-    // AND segmentation agreement every round
+    // train->apply composite: LIVE bpeTrainAuto merges feed the
+    // segmenter; the oracle embeds the frozen sf0.01 merge sequence, so
+    // the gate re-proves training determinism AND segmentation agreement
+    // on every run
     "bpe_train_segment" -> ((s, dir) => BpeOps.bpeTrainSegment(D(s, dir))),
     "fingerprints" -> ((s, dir) => TextOps.fingerprints(D(s, dir))),
     // ---- events: dedup + JSON extraction (B8a, B11) ----
@@ -116,7 +117,7 @@ object SparkEntry {
     "dedup_docs_exact" -> ((s, dir) => DedupOps.exactDedup(DedupOps.augmented(D(s, dir)))),
     "minhash_signatures" -> ((s, dir) => DedupOps.minhashSignatures(DedupOps.augmented(D(s, dir)))),
     "dedup_minhash" -> ((s, dir) => DedupOps.minhashPairs(DedupOps.augmented(D(s, dir)))),
-    // the hot-bucket cap's loud half (VERDICT r10 item 2): top-k band
+    // the hot-bucket cap's loud half: top-k band
     // buckets by size with the candidate-pair mass, drop counts and the
     // overflow verdict under the same cap the pair surface applies — on
     // a healthy corpus every row PROVES the cap never bit
@@ -173,7 +174,7 @@ object SparkEntry {
     "ann_project_rerank" -> ((s, dir) => SimilarityOps.annProjectRerank(Tables.embeddings(s, dir))),
     // the vector-side flagship composite (corpus_prep's embedding sibling)
     "embedding_pipeline" -> ((s, dir) => SimilarityOps.embeddingPipeline(Tables.embeddings(s, dir))),
-    // persisted ANN index lifecycle (VERDICT r11 item 5): the index side
+    // persisted ANN index lifecycle: the index side
     // (codebook seeds + 3 of every 4 later vectors) is encoded once into
     // the (vec_id, bucket, codes) spine; the delta then queries it via
     // bucket-routed ADC against the FROZEN codebook — no raw index
@@ -234,9 +235,8 @@ object SparkEntry {
     // The `where` guards on the four curve layouts are semantic no-ops
     // (curve indices of valid coordinates are never negative) that force
     // the curve arithmetic under Bench's count(): without them Catalyst
-    // column-prunes morton/hilbert and the bench times a bare scan — a
-    // gap found in round 8 when the 100× ladder forced evaluation and
-    // exposed the (since-fixed) CollapseProject blowup Bench never saw.
+    // column-prunes morton/hilbert and the bench times a bare scan, which
+    // would hide any cost of the curve arithmetic itself.
     "zorder_layout" -> ((s, dir) => LayoutOps.zorderLayout(Tables.lineitem(s, dir))
       .where(col("morton") >= 0L)),
     // liquid-clustering counterpart: Hilbert curve, no diagonal jumps
@@ -250,7 +250,7 @@ object SparkEntry {
     // inventory (layout hygiene's other half — file COUNT, not row order)
     "compaction_plan" -> ((s, dir) =>
       LayoutOps.compactionPlan(LayoutOps.fileInventory(D(s, dir)))),
-    // WRITE-PATH round trip (VERDICT r8 item 1): optimizeTableExact into
+    // WRITE-PATH round trip: optimizeTableExact into
     // a pid-scoped fixture tree, read the optimized tree back, summarize
     // per physical file — the write side under the driver's hash gate.
     // The min_curve guard is the count-prune no-op (curve keys are never
@@ -300,7 +300,7 @@ object SparkEntry {
       Tables.customer(s, dir), O(s, dir), Tables.lineitem(s, dir))),
     "q4_priority_returns" -> ((s, dir) => RelationalOps.prioritiesWithReturns(
       O(s, dir), Tables.lineitem(s, dir))),
-    // ---- Catalyst decorrelation shapes (round 5; see RelationalOps) ----
+    // ---- Catalyst decorrelation shapes (see RelationalOps) ----
     "q21_waiting_supplier" -> ((s, dir) => RelationalOps.waitingSuppliers(
       s, Tables.supplier(s, dir), Tables.lineitem(s, dir), O(s, dir))),
     "q2_min_cost_supplier" -> ((s, dir) => RelationalOps.minCostSupplier(
@@ -385,7 +385,7 @@ object SparkEntry {
       MultimodalOps.writeFixtureTree(D(s, dir), fix)
       MultimodalOps.ingestManifest(s, fix)
     }),
-    // REAL pixels (round 10): deterministic BMP fixtures generated from
+    // REAL pixels: deterministic BMP fixtures generated from
     // documents by byte arithmetic, decoded executor-side through
     // javax.imageio; the oracle recomputes dims + exact channel sums
     // from the generation formula — encoder, JDK decoder, and DuckDB
@@ -402,7 +402,7 @@ object SparkEntry {
       MultimodalOps.resizeDecoded(s,
         s.read.format("binaryFile").load(fix)).toDF()
     }),
-    // second container format through the SAME decode gate (r11): the
+    // second container format through the SAME decode gate: the
     // rasters re-encoded as PNG by ImageIO's writer (deflate, top-down,
     // chunked — nothing the hand-rolled BMP layout exercises), decoded
     // by the same executor-side path; the oracle is unchanged because
@@ -414,7 +414,7 @@ object SparkEntry {
         s.read.format("binaryFile").load(fix),
         extPattern = "img_(\\d+)\\.png$").toDF()
     }),
-    // the LOSSY-codec gate (r15): the same rasters through ImageIO's
+    // the LOSSY-codec gate: the same rasters through ImageIO's
     // JPEG encoder at quality 0.95 — decoded pixels are approximations,
     // so the contract is dims-exact + per-channel means within a
     // tolerance band; the oracle predicts the dims and expects every
@@ -437,7 +437,7 @@ object SparkEntry {
         s.read.format("binaryFile").load(fix)).toDF()
         .select("doc_id", "status", "width", "height", "n_px")
     }),
-    // REAL audio (round 12): deterministic 16-bit PCM WAV fixtures
+    // REAL audio: deterministic 16-bit PCM WAV fixtures
     // hand-rolled from documents by byte arithmetic, decoded
     // executor-side through javax.sound.sampled; the oracle recomputes
     // frame counts + exact per-channel sample sums + observed range
@@ -458,7 +458,7 @@ object SparkEntry {
       MultimodalOps.resampleAudio(s,
         s.read.format("binaryFile").load(fix)).toDF()
     }),
-    // SECOND audio container (round 13): the same clips companded to
+    // SECOND audio container: the same clips companded to
     // G.711 μ-law (hand-rolled encoder, fmt tag 7), expanded back to
     // 16-bit PCM by javax.sound's codec executor-side; the oracle
     // recomputes the companding round trip from the generation formula
@@ -482,7 +482,7 @@ object SparkEntry {
         s.read.format("binaryFile").load(fix)).toDF()
         .drop("reason") // diagnostic-only; oracle contract is status+stats
     }),
-    // MULTIMODAL FLAGSHIP (VERDICT r13 item 4): manifest over both
+    // MULTIMODAL FLAGSHIP: manifest over both
     // asset trees -> lenient decode verdicts -> digest-dedup survivors
     // -> per-(modality, verdict) accounting, one composed plan (the
     // corpus_prep pattern for the binary families)
@@ -505,7 +505,7 @@ object SparkEntry {
         s.read.format("binaryFile").load(fix),
         extPattern = "al_(\\d+)\\.wav$").toDF()
     }),
-    // REAL multi-frame container (round 12): animated GIF through
+    // REAL multi-frame container: animated GIF through
     // ImageIO's sequence writer/reader — the frame sampler decodes ONLY
     // every 2nd frame index; the oracle recomputes each sampled frame's
     // gray sum from the per-(frame, pixel) formula, blind to the
@@ -516,7 +516,7 @@ object SparkEntry {
       MultimodalOps.sampleFramesReal(s,
         s.read.format("binaryFile").load(fix)).toDF()
     }),
-    // stride=3 variant (VERDICT r12 item 6): pins the PARAMETERIZED
+    // stride=3 variant: pins the PARAMETERIZED
     // stride contract — fixtures carry 1..4 frames, so stride 3 samples
     // frame sets {0} and {0,3} while stride 2 samples {0}/{0,2}: a
     // sampler that decoded every frame and filtered afterwards would
@@ -527,7 +527,7 @@ object SparkEntry {
       MultimodalOps.sampleFramesReal(s,
         s.read.format("binaryFile").load(fix), stride = 3).toDF()
     }),
-    // SECOND multi-frame container (VERDICT r13 item 5): multi-page
+    // SECOND multi-frame container: multi-page
     // TIFF through the same sequence-writer core, pixel formula, and
     // stride gate — the oracle is byte-for-byte the GIF one, so a green
     // row proves frame sampling is container-independent (both strides,
@@ -546,17 +546,17 @@ object SparkEntry {
         s.read.format("binaryFile").load(fix), stride = 3,
         extPattern = "vid_(\\d+)\\.tif$").toDF()
     }),
-    // ---- round-2 additions: LSH ANN, rolling fingerprint, tf-idf ----
+    // ---- LSH ANN, rolling fingerprint, tf-idf ----
     "ann_lsh" -> ((s, dir) => SimilarityOps.lshTopK(Tables.embeddings(s, dir))),
     // measured recall@k of probe-1 LSH vs the exact brute-force top-k —
     // the evaluation loop an ANN deployment tunes its knobs against.
     // The recall guard is the count-prune no-op (recall is never
     // negative): without it Catalyst drops the truth⋈approx hit join
     // under Bench's count() and the bench would time the truth pipeline
-    // alone (`Profile count-prune` caught it).
+    // alone (`Profile count-prune` shows it).
     "ann_recall" -> ((s, dir) => SimilarityOps.annRecall(Tables.embeddings(s, dir))
       .where(col("recall_at_k") >= 0.0)),
-    // tuned-config recalls (VERDICT r8 item 2): same truth side, the
+    // tuned-config recalls: same truth side, the
     // production retrieval paths — multi-probe LSH and the IVF-PQ ADC
     // scan — as driver-tracked numbers next to the probe-1 baseline.
     "ann_recall_multiprobe" -> ((s, dir) =>
@@ -571,8 +571,8 @@ object SparkEntry {
     "ann_recall_multitable" -> ((s, dir) =>
       SimilarityOps.annRecallMultiTable(Tables.embeddings(s, dir))
         .where(col("recall_at_k") >= 0.0)),
-    // recall@1 of the persisted-index incremental path (VERDICT r12
-    // item 1): exact brute-force nearest index vector as truth, the
+    // recall@1 of the persisted-index incremental path: exact
+    // brute-force nearest index vector as truth, the
     // ann_index_incremental probe-1 ADC pick as found; orphan rows
     // (nn_id = -1) count as misses by the shared recallAtK arithmetic
     "ann_recall_incremental" -> ((s, dir) =>
@@ -584,8 +584,8 @@ object SparkEntry {
     "ann_recall_incremental_mp" -> ((s, dir) =>
       SimilarityOps.annRecallIncrementalMultiProbe(Tables.embeddings(s, dir))
         .where(col("recall_at_k") >= 0.0)),
-    // the same persisted-index pipeline on CLUSTERED geometry (VERDICT
-    // r13 item 1): knob-sheet recipe (multiprobe, m=8/k=64) over the
+    // the same persisted-index pipeline on CLUSTERED geometry:
+    // knob-sheet recipe (multiprobe, m=8/k=64) over the
     // integer product-grid fixture — deployment-grade recall where the
     // near-orthogonal rows above measure the worst case
     "ann_recall_incremental_clustered" -> ((s, dir) =>
@@ -648,14 +648,14 @@ object SparkEntry {
     // the brute channel's ceiling
     "retrieval_recall_lsh" -> ((s, dir) =>
       RetrievalOps.retrievalRecall(D(s, dir), lsh = true)),
-    // the 100 TB formulation of the recall harness (VERDICT r14 item
-    // 1): both channels run over a CO-ADDRESSED content sample (query
+    // the 100 TB formulation of the recall harness: both channels run
+    // over a CO-ADDRESSED content sample (query
     // and its truth original share the bucket hash, so surviving
     // queries keep their truth), the knob carried in the output —
     // the dedup_recall_sampled pattern applied to retrieval
     "retrieval_recall_sampled" -> ((s, dir) =>
       RetrievalOps.retrievalRecallSampled(D(s, dir))),
-    // PRF as a PURE INDEX CONSUMER (VERDICT r14 item 2): both scoring
+    // PRF as a PURE INDEX CONSUMER: both scoring
     // passes + feedback weights + expansion idf read the PERSISTED
     // index (written + read back); the oracle is bm25_prf's SQL, so
     // the row IS the bit-parity proof that index-backed PRF ==
@@ -667,8 +667,7 @@ object SparkEntry {
       RetrievalOps.bm25PrfFromIndex(RetrievalOps.readBm25Index(s, fix),
         RetrievalOps.queryTerms(docs, col("doc_id") < 8))
     }),
-    // the fusion the 100 TB deployment actually runs (VERDICT r14 item
-    // 5): dense slot = multiprobe ADC top-k over a PERSISTED annIndex
+    // the fusion the 100 TB deployment actually runs: dense slot = multiprobe ADC top-k over a PERSISTED annIndex
     // of the doc vectors (written + read back), fused with BM25 by the
     // same RRF contract
     "hybrid_rrf_index" -> ((s, dir) =>
@@ -714,13 +713,13 @@ object SparkEntry {
     "gopher_gate" -> ((s, dir) =>
       TextOps.gopherGate(D(s, dir)).where(col("keep") >= 0L)),
     "decontaminate" -> ((s, dir) => DedupOps.decontaminate(D(s, dir))),
-    // span-level localization of the benchmark overlap (r11): the merged
+    // span-level localization of the benchmark overlap: the merged
     // token intervals a surgical pipeline redacts instead of dropping
     // whole documents, and the redaction itself (row-for-row corpus out)
     "decontaminate_spans" -> ((s, dir) => DedupOps.decontaminateSpans(D(s, dir))),
-    // the length guard is the count-prune no-op (caught by `Profile
-    // count-prune`: a bare count() lets Catalyst drop BOTH joins and
-    // would time a pruned plan, not the redaction)
+    // the length guard is the count-prune no-op (`Profile count-prune`
+    // shows why: a bare count() lets Catalyst drop BOTH joins and would
+    // time a pruned plan, not the redaction)
     "decontaminate_surgical" -> ((s, dir) =>
       DedupOps.decontaminateSurgical(D(s, dir))
         .where(length(col("text_clean")) >= 0)),
@@ -759,7 +758,7 @@ object SparkEntry {
     // (sketch estimates are engine-specific — the approx_users
     // precedent), so the driver records the weaker rows-only check;
     // the spec pins it within rsd tolerance of data_profile and exactly
-    // equal on every non-distinct column (VERDICT r7 item 4).
+    // equal on every non-distinct column.
     "data_profile_approx" -> ((s, dir) => StatsOps.dataProfileApprox(D(s, dir))),
     "constraint_check" -> ((s, dir) => StatsOps.constraintCheck(Tables.lineitem(s, dir))),
     // the actionable half: route violating rows to quarantine with the
@@ -773,15 +772,15 @@ object SparkEntry {
     "drift_check" -> ((s, dir) => StatsOps.driftCheck(E(s, dir))),
     // equi-depth twin: bucket grid from the pooled distribution's exact
     // quantiles (the quantile_bins boundary machinery) — equal statistical
-    // power per bucket on heavy-tailed domains (VERDICT r7 item 6)
+    // power per bucket on heavy-tailed domains
     "drift_check_quantile" -> ((s, dir) => StatsOps.driftCheckQuantile(E(s, dir))),
     // release audit: what did the boilerplate-strip stage do to the
     // dup-injected corpus? (digest-compare map-side — text never
     // shuffles). Statuses reflect what the strip actually did at the
     // registered SF: changed + unchanged; 'removed' appears only when a
     // document is 100% boilerplate, which this corpus pair doesn't
-    // produce at sf0.01 (ADVICE r7 — comment matched to the recorded
-    // output, and the spec exercises all four statuses on fixtures).
+    // produce at sf0.01 (the spec exercises all four statuses on
+    // fixtures).
     "output_diff" -> ((s, dir) => {
       val corpus = DedupOps.augmented(D(s, dir))
       StatsOps.outputDiff(corpus, DedupOps.boilerplateStrip(corpus),
@@ -809,7 +808,7 @@ object SparkEntry {
     // Catalyst eliminates the cardinality-preserving tdist LEFT join
     // inside the ratio table under Bench's count() and the bench would
     // time only the raw-distribution half (lm_score_heldout idiom;
-    // `Profile count-prune` caught it).
+    // `Profile count-prune` shows it).
     "dsir_weights" -> ((s, dir) => {
       val d = D(s, dir)
       val held = d.agg(min(col("source"))).head().getString(0)
@@ -843,7 +842,7 @@ object SparkEntry {
       TextOps.packSequencesSharded(Tables.documents(s, dir))
         .where(col("pack_id") >= 0L)),
     // dense renumber of the shard-encoded pack ids as a METADATA query
-    // (VERDICT r8 item 6): dense_rank over distinct (source, pack_id)
+    // dense_rank over distinct (source, pack_id)
     // only — O(packs), proving pack_shards' "dense ids are one metadata
     // dense_rank away" claim under the driver's gate.
     "pack_shards_dense" -> ((s, dir) =>
@@ -890,7 +889,7 @@ object SparkEntry {
     // neither be folded nor pushed): without it Catalyst drops all six
     // user-keyed joins under Bench's count() — s1's cardinality alone
     // determines the row count — and the bench would time only the first
-    // aggregation (`Profile count-prune` caught it).
+    // aggregation (`Profile count-prune` shows it).
     "funnel_steps" -> ((s, dir) => EventOps.funnelSteps(E(s, dir))
       .where(col("t3").isNull ||
         col("t1") + col("t2") + col("t3") >= 0L)),
@@ -941,8 +940,10 @@ object SparkEntry {
     */
   private val upsampleRates = Map("src1" -> 2.5, "src2" -> 2.0, "src3" -> 0.25)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables (bare table names; driver provides views).
+  /** For each key in queries but the sketches, the DuckDB statement that
+    * must return the same rows over the same parquet tables (bare table
+    * names; the driver provides views). The statements are built in
+    * [[graft.oracle]]; this table only names them.
     */
   def oracleSql: Map[String, String] = Map(
     "wordcount_regex" -> TextOracles.wordcountRegexOracle,

@@ -231,18 +231,7 @@ object RetrievalOps {
       val nDocs = nAvg.select(col("n").as("n_docs"))
       val cdf = idx.df
         .join(broadcast(fbCand.select("word").distinct()), "word")
-        .withColumnRenamed("df", "cdf")
-      val expW = Window.partitionBy("q_id")
-        .orderBy(col("esc").desc, col("word").asc)
-      val exp = fbCand
-        .join(broadcast(cdf), "word")
-        .crossJoin(broadcast(nDocs))
-        .withColumn("esc", col("w").cast("double") *
-          (((col("n_docs") - col("cdf")).cast("double") + lit(0.5)) /
-            (col("cdf").cast("double") + lit(0.5))))
-        .withColumn("r", row_number().over(expW))
-        .filter(col("r") <= e)
-        .select("q_id", "word")
+      val exp = expansionTerms(fbCand, cdf, nDocs, e)
       expanded = pinTiny(qterms.unionAll(exp))
       expanded.count()
       val out = pinTiny(bm25RanksFromIndex(idx, expanded, k, nAvg))
@@ -284,10 +273,20 @@ object RetrievalOps {
     // df from tf, as in [[bm25RanksForTerms]]: one shared toks2 pass
     val df2 = tf2.groupBy("word").agg(count(lit(1)).as("df"))
     val nDocs = corpus.agg(count(lit(1)).as("n_docs"))
+    val exp = expansionTerms(fbCand, df2, nDocs, e)
+    scoreAndRank(tf2, df2, corpusNAvg(corpus), qt.unionAll(exp), k)
+  }
+
+  /** The PRF expansion terms of both formulations: each query's top `e`
+    * feedback candidates `fbCand(q_id, word, w)` by w · idf, with the
+    * candidates' document frequencies `df(word, df)` and the corpus size
+    * `nDocs(n_docs)`; ties to the smaller word. */
+  private def expansionTerms(fbCand: DataFrame, df: DataFrame, nDocs: DataFrame,
+                             e: Int): DataFrame = {
     val expW = Window.partitionBy("q_id")
       .orderBy(col("esc").desc, col("word").asc)
-    val exp = fbCand
-      .join(broadcast(df2.withColumnRenamed("df", "cdf")), "word")
+    fbCand
+      .join(broadcast(df.withColumnRenamed("df", "cdf")), "word")
       .crossJoin(broadcast(nDocs))
       .withColumn("esc", col("w").cast("double") *
         (((col("n_docs") - col("cdf")).cast("double") + lit(0.5)) /
@@ -295,7 +294,6 @@ object RetrievalOps {
       .withColumn("r", row_number().over(expW))
       .filter(col("r") <= e)
       .select("q_id", "word")
-    scoreAndRank(tf2, df2, corpusNAvg(corpus), qt.unionAll(exp), k)
   }
 
   /** The scoring tail shared by the inline ([[bm25Ranks]]) and

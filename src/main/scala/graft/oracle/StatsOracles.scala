@@ -207,7 +207,7 @@ object StatsOracles {
        |SELECT status, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1""".stripMargin
   // ^ presence markers (in_a/in_b), NOT key nullness: a NULL-keyed a-side
   //   row is unmatched (NULL keys never join) and must count 'removed' on
-  //   both engines — key-null CASE branches would call it 'added' (review-2)
+  //   both engines — key-null CASE branches would call it 'added'
 
   /** DuckDB twin: quantile_cont over the same integer cents (bitwise
     * equal to Spark's `percentile`, proven by [[StatsOps.quantiles]]), the same
@@ -231,7 +231,7 @@ object StatsOracles {
   /** DuckDB mirror with the SAME extended-domain hardening: the per-row
     * product is computed as HUGEINT (a bare `yc * yc` BIGINT multiply
     * raises a DuckDB overflow at cents > ~3e9 — the sum()'s HUGEINT
-    * promotion happens AFTER the product, review-2), both sums convert
+    * promotion happens AFTER the product), both sums convert
     * HUGEINT → DOUBLE directly (the same correctly-rounded conversion of
     * the same exact integer as Spark's DECIMAL path), and the radicand
     * carries the same greatest(·, 0) clamp. */

@@ -61,17 +61,16 @@ object TextOracles {
     * greedy fold semantics, so agreement cross-checks the fold against a
     * second implementation rather than mirroring it textually.
     * Single-quotes in merge symbols are SQL-escaped (doubled).
-    */
-  /** The replace-chain must not match ACROSS symbol boundaries: a bare
+    *
+    * The replace-chain must not match ACROSS symbol boundaries: a bare
     * `a||sep||b` pattern also fires when `b` is a proper PREFIX of the
     * following symbol (merge ('c','o') on syms [s, c, or, e] would
-    * rewrite to [s, cor, e] while [[BpeOps.mergePair]] correctly leaves the
-    * word untouched — caught by review; the original corpus passed only
-    * because its 31 words contain no such collision). Fix: wrap the
-    * string in separators and match `sep||a||sep||b||sep`, replacing
-    * with `sep||ab||sep` — both symbols are then delimited on BOTH
-    * sides. Adjacent occurrences share a separator, so one replace pass
-    * skips every other member of an adjacency chain; for a != b the
+    * rewrite to [s, cor, e] while [[BpeOps.mergePair]] leaves the word
+    * untouched). So the string is wrapped in separators and the chain
+    * matches `sep||a||sep||b||sep`, replacing with `sep||ab||sep` —
+    * both symbols delimited on BOTH sides. Adjacent occurrences share a
+    * separator, so one replace pass skips every other member of an
+    * adjacency chain; for a != b the
     * survivors are isolated between pass-1 rewrites and a SECOND pass
     * merges them all (for a == b the pairing itself is ambiguous under
     * string replace — rejected loudly below; [[BpeOps.mergePair]] remains the

@@ -29,7 +29,7 @@ case class Node(name: String, nodeType: NodeType.Value,
                 representation: Representation.Value = Representation.Table,
                 parents: Seq[String] = Nil) {
   def toJson: String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    import graft.Json.{quote => q}
     s"""{"name":${q(name)},"type":${q(nodeType.toString.toUpperCase)},""" +
       s""""description":${q(description)},""" +
       s""""representation":${q(representation.toString.toUpperCase)},""" +
@@ -43,7 +43,7 @@ case class Topology(appType: String, appName: String, nodes: Seq[Node]) {
     copy(nodes = nodes.reverse.distinctBy(_.name).reverse)
 
   def toJson: String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    import graft.Json.{quote => q}
     s"""{"appType":${q(appType)},"appName":${q(appName)},""" +
       s""""nodes":[${deduped.nodes.map(_.toJson).mkString(",")}]}"""
   }

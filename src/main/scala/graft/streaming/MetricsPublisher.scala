@@ -93,6 +93,7 @@ final class TopologyMetricsListener(appName: String, sink: MetricsSink,
   extends StreamingQueryListener {
 
   private val lastPublished = new ConcurrentHashMap[java.util.UUID, java.lang.Long]()
+  private val app = graft.Json.quote(appName)
 
   /** O1, closed end-to-end: when a session is supplied, query start
     * auto-publishes the query's extracted topology DAG — the Spark
@@ -103,7 +104,7 @@ final class TopologyMetricsListener(appName: String, sink: MetricsSink,
     * never poison the listener bus, hence the Try.
     */
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
-    sink.publish(s"""{"kind":"queryStarted","app":"$appName","id":"${e.id}","name":"${Option(e.name).getOrElse("")}"}""")
+    sink.publish(s"""{"kind":"queryStarted","app":$app,"id":"${e.id}","name":${graft.Json.quote(Option(e.name).getOrElse(""))}}""")
     for {
       spark <- autoRegisterFrom
       query <- scala.util.Try(Option(spark.streams.get(e.id))).toOption.flatten
@@ -123,14 +124,14 @@ final class TopologyMetricsListener(appName: String, sink: MetricsSink,
       val stateRows = Option(p.stateOperators).filter(_.nonEmpty)
         .map(_.map(_.numRowsTotal).sum).getOrElse(0L)
       sink.publish(
-        s"""{"kind":"metrics","app":"$appName","id":"${p.id}","batchId":${p.batchId},""" +
+        s"""{"kind":"metrics","app":$app,"id":"${p.id}","batchId":${p.batchId},""" +
           s""""numInputRows":${p.numInputRows},"inputRowsPerSecond":${safe(p.inputRowsPerSecond)},""" +
           s""""processedRowsPerSecond":${safe(p.processedRowsPerSecond)},"stateRows":$stateRows}""")
     }
   }
 
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-    sink.publish(s"""{"kind":"queryTerminated","app":"$appName","id":"${e.id}"}""")
+    sink.publish(s"""{"kind":"queryTerminated","app":$app,"id":"${e.id}"}""")
 
   private def safe(d: Double): String =
     if (d.isNaN || d.isInfinite) "0.0" else d.toString

@@ -28,6 +28,7 @@ class TopologyGoldenSpec extends SparkSpec {
       // JSON must round-trip through a strict parser (driver publishes it)
       val json = topo.toJson
       assert(json.startsWith("{") && json.contains("\"nodes\":["))
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
     }
   }
 
