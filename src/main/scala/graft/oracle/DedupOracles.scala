@@ -133,15 +133,19 @@ object DedupOracles {
     s"""$corpusShingledCte,
        |${sigsCte(16)},
        |${bandsCte(16)},
-       |sized AS (
-       |  SELECT band, band_key, CAST(count(*) AS BIGINT) AS bucket_n,
-       |    row_number() OVER (ORDER BY count(*) DESC, band ASC, band_key ASC) AS rn
-       |  FROM bands GROUP BY 1, 2)
-       |SELECT band, band_key, bucket_n,
-       |  CAST(bucket_n * (bucket_n - 1) // 2 AS BIGINT) AS cand_pairs,
-       |  CAST(greatest(bucket_n - $maxBucket, 0) AS BIGINT) AS dropped_n,
-       |  bucket_n > $maxBucket AS overflowed
-       |FROM sized WHERE rn <= $k""".stripMargin
+       |${bucketStats("band, band_key", "bands", k, maxBucket)}""".stripMargin
+
+  /** The `k` largest buckets `keys` of `from` (ties by key), each with
+    * its candidate-pair mass and what the `maxBucket` cap
+    * (`BucketCap`) drops from it. */
+  private[oracle] def bucketStats(keys: String, from: String, k: Int, maxBucket: Int): String =
+    s"""sized AS (
+       |  SELECT $keys, CAST(count(*) AS BIGINT) AS bucket_n FROM $from GROUP BY $keys)
+       |${topK(s"""$keys, bucket_n,
+                  |  CAST(bucket_n * (bucket_n - 1) // 2 AS BIGINT) AS cand_pairs,
+                  |  CAST(greatest(bucket_n - $maxBucket, 0) AS BIGINT) AS dropped_n,
+                  |  bucket_n > $maxBucket AS overflowed""".stripMargin,
+              "sized", "", s"bucket_n DESC, ${keys.split(", ").map(_ + " ASC").mkString(", ")}", k)}""".stripMargin
 
   /** [[minhashPairsOracle]] embedded verbatim (nested-WITH idiom), pair
     * sides labeled by [[TextOracles.splitLabel]] — both the pair
@@ -454,12 +458,7 @@ object DedupOracles {
     s"""$corpusShingledCte,
        |exact_keepers AS (
        |  SELECT min(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
-       |${sigsCte(16)},
-       |${bandsCte(16)},
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
+       |$candidateCtes,
        |sets AS (SELECT doc_id, list_distinct(shingles) AS ss FROM shingled),
        |fuzzy_drops AS (
        |  SELECT DISTINCT doc_b AS doc_id FROM (
@@ -546,17 +545,22 @@ object DedupOracles {
       |  JOIN sizes a ON common.doc_a = a.doc_id
       |  JOIN sizes b ON common.doc_b = b.doc_id)""".stripMargin
 
+  /** `cand(doc_a, doc_b)`: the distinct document pairs that share a
+    * band key of the 16-permutation signatures of `shingled`. */
+  private def candidateCtes: String =
+    s"""${sigsCte(16)},
+       |${bandsCte(16)},
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)""".stripMargin
+
   /** The banded-LSH pair derivation as a reusable CTE chain ending in a
     * `pairs` CTE — [[minhashPairsOracleOver]] selects from it directly;
     * the triplet-mining oracle composes negatives on top of it. */
   def minhashPairsCtesOver(prefix: String): String =
     s"""$prefix,
-       |${sigsCte(16)},
-       |${bandsCte(16)},
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
+       |$candidateCtes,
        |$jaccardCtes,
        |pairs AS (
        |  SELECT jac.doc_a, jac.doc_b, jaccard

@@ -154,16 +154,21 @@ object MultimodalOracles {
        |  ascii(substr(text, CAST(p % n AS INT) + 1, 1)) AS c, p
        |FROM (${fixtureElements(maxDocId, imageDims, "w * h", "p")})""".stripMargin
 
+  /** A raster's exact channel sums and pixel count over `v(c, p)`: the
+    * writers' channel formula of character code c at pixel p. */
+  private val channelSums =
+    """CAST(sum(c) AS BIGINT) AS sum_r,
+      |  CAST(sum((c * 3 + p) % 256) AS BIGINT) AS sum_g,
+      |  CAST(sum((c + p * 7) % 256) AS BIGINT) AS sum_b,
+      |  CAST(count(*) AS BIGINT) AS n_px""".stripMargin
+
   /** Oracle: expected dims + exact channel sums from the pixel formula —
     * agreement means write(bytes) → ImageIO decode round-tripped every
     * pixel of every raster. */
   def decodeImagesOracle(maxDocId: Long = 256L): String =
     s"""WITH v AS (${bmpPixelsSql(maxDocId)})
        |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       |  CAST(sum(c) AS BIGINT) AS sum_r,
-       |  CAST(sum((c * 3 + p) % 256) AS BIGINT) AS sum_g,
-       |  CAST(sum((c + p * 7) % 256) AS BIGINT) AS sum_b,
-       |  CAST(count(*) AS BIGINT) AS n_px
+       |  $channelSums
        |FROM v GROUP BY 1, 2, 3""".stripMargin
 
   /** Oracle for the decoded-raster 2× downscale: same formula filtered
@@ -173,10 +178,7 @@ object MultimodalOracles {
        |SELECT doc_id,
        |  CAST((w + 1) // 2 AS BIGINT) AS width,
        |  CAST((h + 1) // 2 AS BIGINT) AS height,
-       |  CAST(sum(c) AS BIGINT) AS sum_r,
-       |  CAST(sum((c * 3 + p) % 256) AS BIGINT) AS sum_g,
-       |  CAST(sum((c + p * 7) % 256) AS BIGINT) AS sum_b,
-       |  CAST(count(*) AS BIGINT) AS n_px
+       |  $channelSums
        |FROM v
        |WHERE (p % w) % 2 = 0 AND (p // w) % 2 = 0
        |GROUP BY 1, w, h""".stripMargin

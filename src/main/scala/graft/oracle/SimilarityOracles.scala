@@ -371,15 +371,7 @@ object SimilarityOracles {
        |  SELECT vec_id, embedding::DOUBLE[] AS emb FROM aug),
        |bucketed AS (
        |  SELECT vec_id, ${lshBucket(nPlanes)} AS bucket FROM base),
-       |sized AS (
-       |  SELECT bucket, CAST(count(*) AS BIGINT) AS bucket_n,
-       |    row_number() OVER (ORDER BY count(*) DESC, bucket ASC) AS rn
-       |  FROM bucketed GROUP BY 1)
-       |SELECT bucket, bucket_n,
-       |  CAST(bucket_n * (bucket_n - 1) // 2 AS BIGINT) AS cand_pairs,
-       |  CAST(greatest(bucket_n - $maxBucket, 0) AS BIGINT) AS dropped_n,
-       |  bucket_n > $maxBucket AS overflowed
-       |FROM sized WHERE rn <= $k""".stripMargin
+       |${DedupOracles.bucketStats("bucket", "bucketed", k, maxBucket)}""".stripMargin
 
   /** DuckDB twin of [[SimilarityOps.clusteredGeometry]] — same integer formula over
     * range(0, 64), substituted as the `base` CTE of the incremental
