@@ -94,7 +94,7 @@ object DedupOracles {
     s"""shingled AS (
       |  SELECT doc_id,
       |    [array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)] AS shingles
-      |  FROM (SELECT doc_id, ${words()} AS toks FROM corpus)
+      |  FROM (SELECT doc_id, $words AS toks FROM corpus)
       |  WHERE len(toks) >= 3
       |)""".stripMargin
 
@@ -337,7 +337,7 @@ object DedupOracles {
     s"""WITH gpos AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS i,
        |    md5(array_to_string(toks[i:i+${n - 1}], ' ')) AS g
-       |  FROM (SELECT doc_id, ${words()} AS toks FROM documents),
+       |  FROM (SELECT doc_id, $words AS toks FROM documents),
        |    ${positions(s"len(toks) - ${n - 1}")}),
        |grams AS (SELECT DISTINCT doc_id, g FROM gpos),
        |bench AS (SELECT DISTINCT g FROM grams WHERE $benchDocs)""".stripMargin
@@ -374,7 +374,7 @@ object DedupOracles {
     s"""${gramPosCtes(n)},
        |tok AS (
        |  SELECT doc_id, CAST(i AS BIGINT) AS i, toks[i] AS t
-       |  FROM (SELECT doc_id, ${words()} AS toks FROM documents WHERE $trainDocs),
+       |  FROM (SELECT doc_id, $words AS toks FROM documents WHERE $trainDocs),
        |    ${positions("len(toks)")}),
        |kept AS (
        |  SELECT tok.doc_id, i, t FROM tok
@@ -591,7 +591,7 @@ object DedupOracles {
     */
   val simhashOracle: String =
     s"""WITH $augmentedSql,
-       |${simhashCtes(s"unnest(${words()})", "corpus")}
+       |${simhashCtes(s"unnest($words)", "corpus")}
        |SELECT doc_id, simhash FROM sigs""".stripMargin
 
   /** Shared candidate CTE chain (corpus → simhash → chunk join → `pairs`):
@@ -601,7 +601,7 @@ object DedupOracles {
     */
   private val simhashCandidateCtes: String =
     s"""WITH $augmentedSql,
-       |${simhashCtes(s"unnest(${words()})", "corpus")},
+       |${simhashCtes(s"unnest($words)", "corpus")},
        |chunks AS (
        |  SELECT doc_id, simhash, i AS chunk_id, (simhash >> (i * 15)) & 32767 AS chunk
        |  FROM sigs, range(0, 4) t(i)),

@@ -14,7 +14,7 @@ object DuckSql {
   def positions(n: String, i: String = "i"): String = s"unnest(range(1, $n + 1)) AS ix($i)"
 
   /** The space tokens of `text`, as `TextOps.tokenizeSpace` splits them. */
-  def words(text: String = "text"): String = s"string_split($text, ' ')"
+  val words: String = "string_split(text, ' ')"
 
   /** A strict left fold from 0.0 over a DOUBLE list: the one IEEE sum
     * order both engines share (an unordered SUM() depends on the

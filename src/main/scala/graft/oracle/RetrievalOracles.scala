@@ -18,7 +18,7 @@ object RetrievalOracles {
     sparseChain("", qtermsBody(queryPred), kChannel)
 
   private def qtermsBody(queryPred: String): String =
-    s"SELECT DISTINCT doc_id AS q_id, unnest(${words()}) AS word FROM corpus WHERE $queryPred"
+    s"SELECT DISTINCT doc_id AS q_id, unnest($words) AS word FROM corpus WHERE $queryPred"
 
   /** The sparse chain with a caller-supplied query-term CTE body and a
     * name suffix, so a second scoring pass (PRF) can coexist with the
@@ -31,7 +31,7 @@ object RetrievalOracles {
        |  WHERE word IN (SELECT word FROM qterms$sfx)),
        |tf$sfx AS (SELECT doc_id, word, count(*) AS tf FROM toks$sfx GROUP BY 1, 2),
        |df$sfx AS (SELECT word, count(DISTINCT doc_id) AS df FROM toks$sfx GROUP BY 1),
-       |dl$sfx AS (SELECT doc_id, CAST(len(${words()}) AS BIGINT) AS dl FROM corpus),
+       |dl$sfx AS (SELECT doc_id, CAST(len($words) AS BIGINT) AS dl FROM corpus),
        |navg$sfx AS (SELECT CAST(count(*) AS BIGINT) AS n,
        |                CAST(CAST(sum(dl) AS BIGINT) AS DOUBLE) / count(*) AS avgdl
        |         FROM dl$sfx),
@@ -57,7 +57,7 @@ object RetrievalOracles {
 
   /** `(doc_id, word)`: the space tokens of every `corpus` document. */
   private val corpusTokens: String =
-    s"SELECT doc_id, unnest(${words()}) AS word FROM corpus"
+    s"SELECT doc_id, unnest($words) AS word FROM corpus"
 
   /** A channel's ranked list: each query's top `k` of `from`, as
     * `(q_id, doc_id, cols, rank)`. */

@@ -121,7 +121,7 @@ object SemanticOracles {
     * each non-empty space token hashed into one of `dims` buckets. */
   private[oracle] def hashedTf(from: String, dims: Int): String =
     s"""SELECT doc_id, ${hash64("w")} % $dims AS dim, CAST(count(*) AS BIGINT) AS tf
-       |FROM (SELECT doc_id, unnest(${words()}) AS w FROM $from)
+       |FROM (SELECT doc_id, unnest($words) AS w FROM $from)
        |WHERE len(w) > 0 GROUP BY 1, 2""".stripMargin
 
   def hashedTfOracle(dims: Int = 64): String = hashedTf("documents", dims)
@@ -140,7 +140,7 @@ object SemanticOracles {
     val h = hash64("w")
     s"""WITH tr AS (
        |  SELECT lang AS label, $h % $dims AS dim
-       |  FROM (SELECT lang, unnest(${words()}) AS w
+       |  FROM (SELECT lang, unnest($words) AS w
        |        FROM documents WHERE doc_id % 10 <> 0)
        |  WHERE len(w) > 0),
        |model AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS w
@@ -150,7 +150,7 @@ object SemanticOracles {
        |  FROM model GROUP BY label),
        |ev AS (
        |  SELECT doc_id, $h % $dims AS dim
-       |  FROM (SELECT doc_id, unnest(${words()}) AS w
+       |  FROM (SELECT doc_id, unnest($words) AS w
        |        FROM documents WHERE doc_id % 10 = 0)
        |  WHERE len(w) > 0),
        |feats AS (SELECT doc_id, dim, CAST(count(*) AS BIGINT) AS c
@@ -175,12 +175,12 @@ object SemanticOracles {
     s"""held AS (SELECT min(source) AS src FROM documents),
        |ttok AS (
        |  SELECT ${hash64("w")} % $dims AS dim
-       |  FROM (SELECT unnest(${words()}) AS w
+       |  FROM (SELECT unnest($words) AS w
        |        FROM documents, held WHERE source = held.src)
        |  WHERE len(w) > 0),
        |rtok AS (
        |  SELECT doc_id, ${hash64("w")} % $dims AS dim
-       |  FROM (SELECT doc_id, unnest(${words()}) AS w
+       |  FROM (SELECT doc_id, unnest($words) AS w
        |        FROM documents, held WHERE source <> held.src)
        |  WHERE len(w) > 0),
        |tdist AS (SELECT dim, CAST(count(*) AS BIGINT) AS cnt_t FROM ttok GROUP BY 1),

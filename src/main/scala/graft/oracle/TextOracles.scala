@@ -12,10 +12,10 @@ object TextOracles {
 
   /** The number of stopwords among the space tokens of `text`. */
   private val stopCount: String =
-    s"len(list_filter(${words()}, w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")})))"
+    s"len(list_filter($words, w -> w IN (${stopwords.map(w => s"'$w'").mkString(", ")})))"
 
   /** The space-token count of `text` as `n_tokens`. */
-  private val nTokens: String = s"CAST(len(${words()}) AS BIGINT) AS n_tokens"
+  private val nTokens: String = s"CAST(len($words) AS BIGINT) AS n_tokens"
 
   /** `cum_excl`: the `n_tokens` of the rows before this one within
     * `partition` in `order` — the packing prefix-sum. */
@@ -27,7 +27,7 @@ object TextOracles {
     * `from` that satisfy `where`, at 1-based position `pos`. */
   private def bigrams(from: String, where: String, cols: String = ""): String =
     s"""SELECT ${cols}i AS pos, t[CAST(i AS INT)] AS w1, t[CAST(i + 1 AS INT)] AS w2
-       |  FROM (SELECT ${cols}${words()} AS t FROM $from WHERE $where), ${positions("len(t) - 1")}""".stripMargin
+       |  FROM (SELECT ${cols}$words AS t FROM $from WHERE $where), ${positions("len(t) - 1")}""".stripMargin
 
   /** The bigram model of `bg(w1, w2)`: lm(w1, w2, cnt, p_cond) with
     * p_cond = cnt / (the count of w1's bigrams), one IEEE division. */
@@ -41,7 +41,7 @@ object TextOracles {
   def bpePairCountsOracle(topK: Int = 200): String =
     s"""WITH words AS (
        |  SELECT w AS word, count(*) AS freq
-       |  FROM (SELECT unnest(${words()}) AS w FROM documents)
+       |  FROM (SELECT unnest($words) AS w FROM documents)
        |  WHERE len(w) > 0 GROUP BY 1),
        |pairs AS (
        |  SELECT substr(word, CAST(i AS INT), 2) AS pair,
@@ -90,7 +90,7 @@ object TextOracles {
     }
     s"""WITH w AS (
        |  SELECT w AS word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(${words()}) AS w FROM documents)
+       |  FROM (SELECT unnest($words) AS w FROM documents)
        |  WHERE len(w) > 0 GROUP BY 1),
        |m0 AS (
        |  SELECT word, freq,
@@ -107,7 +107,7 @@ object TextOracles {
   def heavyHittersBySourceOracle(k: Int = 5, capacity: Int = 1024,
                                  guaranteedOnly: Boolean = false): String = {
     s"""WITH t AS (
-       |  SELECT source, tok FROM (SELECT source, unnest(${words()}) AS tok FROM documents)
+       |  SELECT source, tok FROM (SELECT source, unnest($words) AS tok FROM documents)
        |  WHERE len(tok) > 0),
        |n AS (SELECT source, count(*) AS n FROM t GROUP BY 1),
        |c AS (SELECT source, tok, count(*) AS cnt FROM t GROUP BY 1, 2),
@@ -123,7 +123,7 @@ object TextOracles {
   def heavyHittersOracle(k: Int = 20, capacity: Int = 4096,
                          guaranteedOnly: Boolean = false): String =
     s"""WITH t AS (
-       |  SELECT tok FROM (SELECT unnest(${words()}) AS tok FROM documents)
+       |  SELECT tok FROM (SELECT unnest($words) AS tok FROM documents)
        |  WHERE len(tok) > 0),
        |${heavyTail(k, capacity, guaranteedOnly)}""".stripMargin
 
@@ -162,7 +162,7 @@ object TextOracles {
     s"""WITH base AS (
       |  SELECT doc_id,
       |    list_filter(string_split(text, '. '), s -> len(s) > 0) AS segs,
-      |    ${words()} AS toks
+      |    $words AS toks
       |  FROM documents),
       |seg_stats AS (
       |  SELECT doc_id, CAST(len(segs) AS BIGINT) AS n_segs,
@@ -207,7 +207,7 @@ object TextOracles {
        |  least(CAST(1.0 AS DOUBLE), CAST(n_tokens AS DOUBLE) / 100) *
        |    (CAST(1.0 AS DOUBLE) - CAST(n_stop AS DOUBLE) / n_tokens) AS quality_score
        |FROM (
-       |  SELECT doc_id, ${k}len(${words()}) AS n_tokens, length(text) AS n_chars,
+       |  SELECT doc_id, ${k}len($words) AS n_tokens, length(text) AS n_chars,
        |    $stopCount AS n_stop
        |  FROM documents)""".stripMargin
   }
@@ -256,7 +256,7 @@ object TextOracles {
   def vocabEncodeOracle(vocabSize: Int = 16): String =
     s"""WITH flat AS (
       |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, toks[i] AS tok
-      |  FROM (SELECT doc_id, ${words()} AS toks FROM documents), ${positions("len(toks)")}),
+      |  FROM (SELECT doc_id, $words AS toks FROM documents), ${positions("len(toks)")}),
       |vocab AS (
       |  SELECT tok, CAST(row_number() OVER (ORDER BY df DESC, tok ASC) - 1 AS BIGINT) AS token_id
       |  FROM (SELECT tok, count(DISTINCT doc_id) AS df FROM flat GROUP BY 1)
@@ -330,7 +330,7 @@ object TextOracles {
 
   def chunkDocumentsOracle(window: Int = 64, stride: Int = 48): String =
     s"""WITH t AS (
-       |  SELECT doc_id, ${words()} AS toks, CAST(len(${words()}) AS BIGINT) AS n
+       |  SELECT doc_id, $words AS toks, CAST(len($words) AS BIGINT) AS n
        |  FROM documents),
        |ex AS (
        |  SELECT doc_id, toks, n,
@@ -344,7 +344,7 @@ object TextOracles {
 
   def unigramScoresOracle(vocabSize: Int = 16): String =
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(${words()}) AS tok FROM documents),
+       |  SELECT doc_id, unnest($words) AS tok FROM documents),
        |vocab AS (
        |  SELECT tok, cnt FROM (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1)
        |  ORDER BY cnt DESC, tok ASC LIMIT $vocabSize)
@@ -555,7 +555,7 @@ object TextOracles {
 
   val tfIdfTopOracle: String =
     s"""WITH tokens AS (
-      |  SELECT doc_id, unnest(${words()}) AS word FROM documents),
+      |  SELECT doc_id, unnest($words) AS word FROM documents),
       |tf AS (SELECT doc_id, word, count(*) AS tf FROM tokens GROUP BY 1, 2),
       |df AS (SELECT word, count(DISTINCT doc_id) AS df FROM tokens GROUP BY 1),
       |n AS (SELECT count(*) AS n_docs FROM documents),
@@ -581,7 +581,7 @@ object TextOracles {
 
   val langIdOracle: String =
     s"""WITH tokens AS (
-      |  SELECT doc_id, lang, unnest(${words()}) AS word FROM documents),
+      |  SELECT doc_id, lang, unnest($words) AS word FROM documents),
       |profile AS (
       |  SELECT lang AS p_lang, word, count(*) AS w_cnt
       |  FROM tokens WHERE doc_id % 2 = 0 GROUP BY 1, 2),
@@ -593,8 +593,8 @@ object TextOracles {
 
   val tokenCountsOracle: String =
     s"""SELECT doc_id,
-      |  len(${words()}) AS ws_tokens,
-      |  CAST(list_reduce(list_transform(${words()},
+      |  len($words) AS ws_tokens,
+      |  CAST(list_reduce(list_transform($words,
       |    w -> CAST(ceil(CAST(length(w) AS DOUBLE) / 4.0) AS BIGINT)),
       |    (a, b) -> a + b) AS BIGINT) AS subword_est
       |FROM documents""".stripMargin
