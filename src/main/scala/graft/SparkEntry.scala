@@ -1143,8 +1143,7 @@ object SparkEntry {
     "skew_report" -> StatsOracles.skewReportOracle(),
     "drift_check" -> StatsOracles.driftCheckOracle(),
     "drift_check_quantile" -> StatsOracles.driftCheckQuantileOracle(),
-    "output_diff" -> StatsOracles.outputDiffBoilerplateOracle(
-      DedupOracles.augmentedSql, DedupOracles.boilerplateStripOracle()),
+    "output_diff" -> StatsOracles.outputDiffBoilerplateOracle,
     "simhash_shingles" -> DedupOracles.simhashShinglesOracle,
     "doc_repetition" -> TextOracles.docRepetitionOracle,
     "pii_scrub" -> TextOracles.piiScrubOracle,

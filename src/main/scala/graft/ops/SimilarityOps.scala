@@ -86,8 +86,8 @@ object SimilarityOps {
   /** The cell ANCHOR convention shared by the probed-IVF search and the
     * ingest composite: each cell's min-vec_id member (deterministic,
     * unlike a mean centroid whose float-summation order could never
-    * hash-match an oracle). One source of truth — [[SimilarityOracles.duckAnchors]] is
-    * the SQL twin.
+    * hash-match an oracle). One source of truth — the `anchors` CTE of
+    * [[graft.oracle.SimilarityOracles]] is the SQL twin.
     */
   private def cellAnchors(corpus: DataFrame): DataFrame = {
     val wCell = Window.partitionBy("label").orderBy(col("vec_id").asc)

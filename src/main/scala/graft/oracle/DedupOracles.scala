@@ -16,7 +16,7 @@ object DedupOracles {
     * encoding are extracted as hex pairs of `hex(encode(text))`, so the
     * oracle hashes the same byte stream as the JVM side for ANY text.
     */
-  def winnow60(textExpr: String, window: Int = DefaultWindow): String =
+  private def winnow60(textExpr: String, window: Int = DefaultWindow): String =
     s"""CASE WHEN octet_length(encode($textExpr)) <= $window THEN
        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
        |    list_transform(range(1, octet_length(encode($textExpr)) + 1),
@@ -44,14 +44,14 @@ object DedupOracles {
       |  FROM documents WHERE doc_id % 15 = 0""".stripMargin
 
   /** The same corpus as a DuckDB CTE (keep in lockstep with [[DedupOps.augmented]]). */
-  val augmentedSql: String =
+  private[oracle] val augmentedSql: String =
     s"corpus AS (\n$augmentedBodySql\n)"
 
   /** [[augmentedSql]] restricted to the content-addressed doc sample of
     * [[DedupOps.sampleBucketCol]]: seeded md5 bucket (0–255) < sampleBuckets. The
     * final CTE is still named `corpus`, so every oracle built over the
     * plain prefix composes unchanged over the sampled one. */
-  def sampledAugmentedSql(sampleBuckets: Int, seed: String): String =
+  private def sampledAugmentedSql(sampleBuckets: Int, seed: String): String =
     s"""corpus_all AS (
        |$augmentedBodySql
        |),
@@ -70,7 +70,7 @@ object DedupOracles {
     * exactly as every surviving truth pair of [[DedupOps.dedupRecallSampled]]
     * keeps both endpoints). Final CTE still `corpus`, so every oracle
     * over the plain prefix composes unchanged. */
-  def coSampledAugmentedSql(sampleBuckets: Int, seed: String): String =
+  private[oracle] def coSampledAugmentedSql(sampleBuckets: Int, seed: String): String =
     s"""corpus_all AS (
        |$augmentedBodySql
        |),
@@ -81,7 +81,7 @@ object DedupOracles {
 
   /** The doc_id → source map of [[DedupOps.augmentedSourced]] as a DuckDB CTE
     * body (keep in lockstep). */
-  val sourcedMapSql: String =
+  private val sourcedMapSql: String =
     """  SELECT doc_id, source FROM documents
       |  UNION ALL
       |  SELECT doc_id + 100000 AS doc_id, source || '_mirror' AS source
@@ -119,7 +119,7 @@ object DedupOracles {
   /** The signature matrix as DuckDB CTEs over a corpus+shingled prefix
     * ([[corpusShingledCteOver]]): `sigs`, then `signatures` (doc_id,
     * perm, minhash) in long form. */
-  private[graft] def minhashSignaturesCtesOver(prefix: String, numPerm: Int = 16): String =
+  private def minhashSignaturesCtesOver(prefix: String, numPerm: Int = 16): String =
     s"""$prefix,
        |${sigsCte(numPerm)},
        |signatures AS (
@@ -508,15 +508,15 @@ object DedupOracles {
     * chain whose final CTE is named `corpus` — the composition point the
     * sampled-recall oracle uses to re-derive every pair oracle over the
     * sampled corpus without touching their SQL. */
-  def corpusShingledCteOver(corpusCtes: String): String =
+  private def corpusShingledCteOver(corpusCtes: String): String =
     s"WITH $corpusCtes,\n$shingledCte"
 
   /** Shared CTE prefix: corpus + shingled. */
-  val corpusShingledCte: String = corpusShingledCteOver(augmentedSql)
+  private[oracle] val corpusShingledCte: String = corpusShingledCteOver(augmentedSql)
 
   /** Shared CTE prefix over the plain `documents` table (no injected
     * copies): corpus + shingled. */
-  private[graft] val documentsShingledCte: String =
+  private[oracle] val documentsShingledCte: String =
     corpusShingledCteOver("corpus AS (SELECT doc_id, text FROM documents)")
 
   val exactDedupSql: String =
@@ -558,7 +558,7 @@ object DedupOracles {
   /** The banded-LSH pair derivation as a reusable CTE chain ending in a
     * `pairs` CTE — [[minhashPairsOracleOver]] selects from it directly;
     * the triplet-mining oracle composes negatives on top of it. */
-  def minhashPairsCtesOver(prefix: String): String =
+  private[oracle] def minhashPairsCtesOver(prefix: String): String =
     s"""$prefix,
        |$candidateCtes,
        |$jaccardCtes,
@@ -570,7 +570,7 @@ object DedupOracles {
   /** [[minhashPairsOracle]] parameterized over its corpus+shingled CTE
     * prefix ([[corpusShingledCteOver]]) — the sampled-recall oracle
     * composes the same SQL over the sampled corpus. */
-  def minhashPairsOracleOver(prefix: String): String =
+  private def minhashPairsOracleOver(prefix: String): String =
     s"""${minhashPairsCtesOver(prefix)}
        |SELECT doc_a, doc_b, jaccard FROM pairs""".stripMargin
 
@@ -578,7 +578,7 @@ object DedupOracles {
 
   /** [[ngramJaccardOracle]] parameterized over its CTE prefix (same
     * composition point as [[minhashPairsOracleOver]]). */
-  def ngramJaccardOracleOver(prefix: String): String =
+  private def ngramJaccardOracleOver(prefix: String): String =
     s"""$prefix,
        |$jaccardCtes
        |SELECT doc_a, doc_b, jaccard FROM jac WHERE jaccard >= 0.5""".stripMargin

@@ -36,8 +36,8 @@ object DuckSql {
     s"(${dot(a, a, n)} - 2.0 * ${dot(a, b, n)}) + ${dot(b, b, n)}"
 
   /** `cols` of the rows of `from` whose `row_number()` within `partition`
-    * (none: the whole input) in `order` is at most `k`; the rank is
-    * visible to `cols` as `rank`. */
+    * (none: the whole input) in `order` is at most `k`; `cols` may read
+    * the rank under the name `rank`. */
   def topK(cols: String, from: String, partition: String, order: String,
            k: Int, rank: String = "rn"): String = {
     val over = if (partition.isEmpty) s"ORDER BY $order"

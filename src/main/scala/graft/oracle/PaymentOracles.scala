@@ -11,14 +11,14 @@ import graft.model.ExchangeRates
 object PaymentOracles {
 
   /** The rates dimension as inline SQL (`rates(currency, rate)`). */
-  val ratesSql: String =
+  private val ratesSql: String =
     ExchangeRates.rates
       .map { case (c, r) => s"('$c', CAST(${r.toPlainString} AS DECIMAL(18,6)))" }
       .mkString("(VALUES ", ", ", ") AS rates(currency, rate)")
 
   /** The synthetic feed `(k, value)`: identical strings to
     * `PaymentOps.syntheticPaymentsJson`. */
-  def syntheticPaymentsJsonSql: String = {
+  private def syntheticPaymentsJsonSql: String = {
     val currencies = ExchangeRates.currencies
       .map(c => s"'$c'").mkString("[", ", ", "]")
     s"""SELECT o_orderkey AS k,

@@ -14,7 +14,7 @@ object RetrievalOracles {
     * rank ≤ kChannel). Same semi-join vocabulary filter, single-IEEE-op
     * composition, term-ordered left fold and (score DESC, doc_id ASC)
     * tiebreak as [[RetrievalOps.bm25Ranks]]. */
-  def sparseCtes(queryPred: String, kChannel: Int): String =
+  private[oracle] def sparseCtes(queryPred: String, kChannel: Int): String =
     sparseChain("", qtermsBody(queryPred), kChannel)
 
   private def qtermsBody(queryPred: String): String =
@@ -23,7 +23,7 @@ object RetrievalOracles {
   /** The sparse chain with a caller-supplied query-term CTE body and a
     * name suffix, so a second scoring pass (PRF) can coexist with the
     * first in one statement. */
-  def sparseChain(sfx: String, qtermsSql: String, kChannel: Int): String =
+  private def sparseChain(sfx: String, qtermsSql: String, kChannel: Int): String =
     s"""qterms$sfx AS (
        |  $qtermsSql),
        |toks$sfx AS (
@@ -108,7 +108,7 @@ object RetrievalOracles {
     * embedded as a VALUES table from the SAME [[RetrievalOps.denseLshCoefs]]
     * the Spark side compiles in, and plane dots and the bucket id are exact
     * integer arithmetic on both engines. */
-  def denseCtes(queryPred: String, kChannel: Int, dims: Int, planes: Int = 0): String = {
+  private def denseCtes(queryPred: String, kChannel: Int, dims: Int, planes: Int = 0): String = {
     val (bucketCtes, bucketJoin) = if (planes == 0) ("", "") else {
       val coefRows = denseLshCoefs(planes, dims).zipWithIndex.flatMap {
         case (cs, p) => cs.zipWithIndex.map { case (c, d) => s"($p, $d, $c)" }
@@ -159,7 +159,7 @@ object RetrievalOracles {
     * ADC terms summed by an ORDERED fold over s, self excluded,
     * (adc_dist ASC, nn_id ASC) tiebreak. `queryPredVec` is a predicate
     * over the query-side alias `d` (e.g. "d.vec_id < 8"). */
-  def annDocCtes(queryPredVec: String, kChannel: Int, dims: Int = 64,
+  private def annDocCtes(queryPredVec: String, kChannel: Int, dims: Int = 64,
                  m: Int = 4, kCode: Int = 16, nPlanes: Int = 8): String =
     s"""adtf AS (
        |${SemanticOracles.hashedTf("corpus", dims)}),
@@ -214,7 +214,7 @@ object RetrievalOracles {
 
   /** RRF fusion CTEs over `stop` ⋈ `dtop`; terminal CTE `htop` =
     * (q_id, doc_id, sparse_rank, dense_rank, rrf, rank ≤ k). */
-  def rrfCtes(k: Int): String =
+  private def rrfCtes(k: Int): String =
     s"""fused AS (
        |  SELECT COALESCE(s.q_id, d.q_id) AS q_id,
        |    COALESCE(s.doc_id, d.doc_id) AS doc_id,

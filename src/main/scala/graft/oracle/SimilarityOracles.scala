@@ -209,7 +209,7 @@ object SimilarityOracles {
        |${ranked(k)}""".stripMargin
   }
 
-  def cosineTopKOracleAt(nQueries: Int, k: Int): String =
+  private def cosineTopKOracleAt(nQueries: Int, k: Int): String =
     cosineTopK(nQueries, k, "TRUE")
 
   val cosineTopKOracle: String = cosineTopKOracleAt(10, 10)
@@ -376,7 +376,7 @@ object SimilarityOracles {
   /** DuckDB twin of [[SimilarityOps.clusteredGeometry]] — same integer formula over
     * range(0, 64), substituted as the `base` CTE of the incremental
     * oracle derivation. */
-  def clusteredGeometrySql: String =
+  private def clusteredGeometrySql: String =
     """SELECT vec_id,
       |  list_transform(range(0, 64), d ->
       |    CAST((vec_id % 8 + 1) * 64

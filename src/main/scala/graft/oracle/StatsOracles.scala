@@ -190,10 +190,10 @@ object StatsOracles {
     * b-side is the ENTIRE [[DedupOracles.boilerplateStripOracle]]
     * text embedded as a nested-WITH CTE subquery — one derivation per
     * side, zero drift. */
-  def outputDiffBoilerplateOracle(augmentedCte: String, stripSql: String): String =
-    s"""WITH $augmentedCte,
+  def outputDiffBoilerplateOracle: String =
+    s"""WITH ${DedupOracles.augmentedSql},
        |b AS (
-       |$stripSql
+       |${DedupOracles.boilerplateStripOracle()}
        |),
        |d AS (
        |  SELECT CASE WHEN in_a IS NULL THEN 'added'

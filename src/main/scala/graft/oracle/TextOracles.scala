@@ -386,9 +386,9 @@ object TextOracles {
     * one derivation ([[hashSplitOracle]] and the split-leakage oracle
     * both compose it, so the split rule cannot silently diverge
     * between them). */
-  def splitBucket(id: String): String = md5Bits(s"CAST($id AS VARCHAR)", 1, 2)
+  private def splitBucket(id: String): String = md5Bits(s"CAST($id AS VARCHAR)", 1, 2)
 
-  def splitLabel(id: String): String =
+  private[oracle] def splitLabel(id: String): String =
     s"""CASE WHEN ${splitBucket(id)} < 230 THEN 'train'
        |       WHEN ${splitBucket(id)} < 243 THEN 'valid'
        |       ELSE 'test' END""".stripMargin
