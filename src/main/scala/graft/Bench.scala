@@ -8,8 +8,21 @@ package graft
   * warmup.
   */
 object Bench {
+
+  /** Reps per query from `SPARK_GRAFT_BENCH_REPS`: 3 when unset, else a
+    * positive integer; anything else fails naming the variable. */
+  def parseReps(raw: Option[String]): Int =
+    GraftSession.positiveInt("SPARK_GRAFT_BENCH_REPS", raw, 3)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // MEDIAN-OF-3 per query: the bench host is co-tenant contended (2-4×
+    // single-run variance observed across rounds; identical plans measured
+    // 1.7 s and 102 s) — one run measures the neighbors, the median of
+    // three measures the engine. Each rep is a full cold run (cache
+    // cleared between reps), so the median is a cold-query time, not a
+    // cache readback.
+    val reps = parseReps(sys.env.get("SPARK_GRAFT_BENCH_REPS"))
     val spark = GraftSession.local(GraftSession.cpus)
 
     // JVM/codegen warmup + Hadoop/parquet reader init (otherwise the first
@@ -38,13 +51,6 @@ object Bench {
     // data touched instead of re-arbitrating co-tenant noise each round.
     val rowCounts = collection.mutable.LinkedHashMap.empty[String, Long]
     val errors = collection.mutable.LinkedHashMap.empty[String, String]
-    // MEDIAN-OF-3 per query: the bench host is co-tenant contended (2-4×
-    // single-run variance observed across rounds; identical plans measured
-    // 1.7 s and 102 s) — one run measures the neighbors, the median of
-    // three measures the engine. Each rep is a full cold run (cache
-    // cleared between reps), so the median is a cold-query time, not a
-    // cache readback.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // Optional comma-separated name filter for targeted re-measurement
     // (regression triage without a 100-query run); absent = all queries.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")

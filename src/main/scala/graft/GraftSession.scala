@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The local engine session every main builds: `local[cpus]` with `cpus`
   * shuffle partitions, UTC session time, graft's SQL extensions (which
-  * also install the local streaming checkpoint manager and the session
-  * [[defaults]]), no UI, WARN logging.
+  * also install the spawn-free local file system
+  * [[graft.sources.NioLocalFileSystem]] and the session [[defaults]]), no
+  * UI, WARN logging.
   */
 object GraftSession {
 
@@ -41,11 +42,14 @@ object GraftSession {
 
   /** The core count from the raw setting: 4 when unset, else a positive
     * integer; anything else fails naming the variable. */
-  def parseCpus(raw: Option[String]): Int = raw match {
-    case None => 4
+  def parseCpus(raw: Option[String]): Int = positiveInt("SPARK_GRAFT_CPUS", raw, 4)
+
+  /** The setting `name` from its raw value: `default` when unset, else a
+    * positive integer; anything else fails naming the variable. */
+  def positiveInt(name: String, raw: Option[String], default: Int): Int = raw match {
+    case None => default
     case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+      throw new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
   }
 
   def local(cpus: Int): SparkSession = {

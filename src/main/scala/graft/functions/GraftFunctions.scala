@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.GraftSession
-import graft.streaming.LocalCheckpointFileManager
+import graft.sources.NioLocalFileSystem
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -37,12 +37,12 @@ object GraftFunctions {
 /** `SparkSessionExtensions` hook: add
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions` and the
   * functions resolve in plain SQL across all sessions, the
-  * [[EditDistancePrefilter]] rule runs in the optimizer, and streaming
-  * checkpoints on local paths are written by
-  * [[graft.streaming.LocalCheckpointFileManager]] (installed on the
-  * running SparkContext's Hadoop configuration). Spark's own
-  * `spark.sql.streaming.checkpointFileManagerClass`, set as a SQL conf or
-  * with the `spark.hadoop.` prefix, overrides that manager.
+  * [[EditDistancePrefilter]] rule runs in the optimizer, and every local
+  * write (parquet, state-store uploads, Spark's own streaming checkpoint
+  * manager) goes through [[graft.sources.NioLocalFileSystem]], which
+  * starts no process (installed on the running SparkContext's Hadoop
+  * configuration; an explicit `spark.hadoop.fs.file.impl` or
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` wins).
   *
   * It also sets [[graft.GraftSession.defaults]] on the running context's
   * conf, for each key not already set there; the first session on the
@@ -62,6 +62,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => EditDistancePrefilter)
     GraftSession.installDefaults(StreamingBridge.activeConf)
-    StreamingBridge.activeContext.foreach(LocalCheckpointFileManager.install)
+    StreamingBridge.activeContext.foreach(NioLocalFileSystem.install)
   }
 }

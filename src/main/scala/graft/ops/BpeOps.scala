@@ -65,8 +65,8 @@ object BpeOps {
     * tokenizer-realistic merge counts (32k) that is ~64k driver-bound
     * job launches, so [[bpeTrainAuto]] is the production entry point:
     * it collects the vocabulary-sized histogram once when it fits under
-    * a size bound and trains driver-side ([[bpeTrainLocal]] — identical
-    * merges by construction), falling back to this loop only when the
+    * a size bound and trains driver-side ([[bpeTrainLocalFast]] — identical
+    * merges, pinned by parity specs), falling back to this loop only when the
     * vocabulary itself is too large to collect (VERDICT r12 item 2; the
     * [[graft.ops.DedupOps.sizedClusterLabels]] regime idiom).
     */
@@ -143,76 +143,16 @@ object BpeOps {
   /** CODE-POINT split, one single-code-point string per symbol —
     * Spark's substring() walks code points, so a UTF-16 charAt split
     * would diverge on supplementary-plane vocabulary. */
-  private def codePointSyms(w: String): Array[String] =
+  private[graft] def codePointSyms(w: String): Array[String] =
     w.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
 
   /** UTF-8-byte comparison — Spark's string sort is UTF8String byte
     * order; String.compareTo (UTF-16 code units) would diverge above
     * the BMP. The ONE tie-break all three training regimes share. */
-  private def utf8Cmp(x: String, y: String): Int =
+  private[graft] def utf8Cmp(x: String, y: String): Int =
     java.util.Arrays.compareUnsigned(
       x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Driver-side merge loop over a COLLECTED word histogram —
-    * merge-for-merge identical to [[bpeTrain]] by construction: same
-    * frequency-weighted adjacent-pair counts, same (count DESC, pair
-    * ASC) tie-break, same greedy rewrite, same early stop. One process,
-    * zero Spark jobs — the regime for every histogram that fits on the
-    * driver (BPE state is vocabulary-sized, never corpus-sized).
-    *
-    * This is the SEMANTICS-OF-RECORD reference: it recounts the full
-    * histogram every merge, O(depth × corpus symbols) — the round-14
-    * price ladder measured that shape at 286.6 s for ~30k merges on a
-    * 30k-word vocabulary. [[bpeTrainLocalFast]] is the production
-    * regime (incremental pair maintenance, identical output, pinned by
-    * parity specs at depth 1000); this loop stays as the oracle the
-    * fast one is judged against.
-    */
-  def bpeTrainLocal(hist: Seq[(String, Long)],
-                    nMerges: Int): Seq[(String, String)] = {
-    // CODE-POINT split + UTF-8-byte tie-break: Spark's substring()
-    // walks code points and its string sort is UTF8String byte order —
-    // a UTF-16 charAt/compareTo local loop would diverge from the
-    // distributed regime on supplementary-plane vocabulary.
-    var words = hist.iterator
-      .map { case (w, f) => (codePointSyms(w), f) }.toArray
-    val merges = collection.mutable.ArrayBuffer.empty[(String, String)]
-    var exhausted = false
-    while (merges.length < nMerges && !exhausted) {
-      val counts = collection.mutable.HashMap.empty[(String, String), Long]
-      var wi = 0
-      while (wi < words.length) {
-        val (syms, f) = words(wi)
-        var i = 0
-        while (i + 1 < syms.length) {
-          val k = (syms(i), syms(i + 1))
-          counts.update(k, counts.getOrElse(k, 0L) + f)
-          i += 1
-        }
-        wi += 1
-      }
-      if (counts.isEmpty) exhausted = true
-      else {
-        // (count DESC, a ASC, b ASC) — bpeTrain's orderBy, exactly
-        val (a, b) = counts.iterator.reduce { (p, q) =>
-          val ((pa, pb), pc) = p; val ((qa, qb), qc) = q
-          val c =
-            if (pc != qc) java.lang.Long.compare(qc, pc)
-            else {
-              val ca = utf8Cmp(pa, qa)
-              if (ca != 0) ca else utf8Cmp(pb, qb)
-            }
-          if (c <= 0) p else q
-        }._1
-        merges += ((a, b))
-        words = words.map { case (syms, f) =>
-          (mergePairLocal(syms, a, b), f)
-        }
-      }
-    }
-    merges.toSeq
-  }
 
   /** INCREMENTAL-pair-maintenance training — the standard tokenizer-
     * trainer structure (named in the round-14 PLANS price sheet, built
@@ -226,7 +166,7 @@ object BpeOps {
     *
     * Argmax uses a lazy-deletion binary heap ordered by the IDENTICAL
     * (count DESC, a UTF-8 ASC, b UTF-8 ASC) tie-break as
-    * [[bpeTrainLocal]]/[[bpeTrain]]: every count change pushes a fresh
+    * [[bpeTrain]] and the specs' reference loop: every count change pushes a fresh
     * snapshot; a popped snapshot is valid only if it matches the live
     * count, so stale entries drain harmlessly. Counts are maintained by
     * exact (decrement old word pairs, increment new word pairs) deltas,

@@ -27,9 +27,6 @@ object IO {
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  def readText(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-
   /** Write in any of the four formats; `partitionBy` enables partition
     * pruning for downstream readers.
     */

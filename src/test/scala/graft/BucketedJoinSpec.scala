@@ -13,7 +13,7 @@ class BucketedJoinSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed co-located join plans zero exchanges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+    val dir = tempDir("graft_bucketed").toString
     val orders = (1L to 1000L).map(k => (k, k % 97, s"P$k")).toDF("o_orderkey", "o_custkey", "o_tag")
     val lines = (1L to 3000L).map(i => (i % 1000 + 1, i, i * 1.5)).toDF("l_orderkey", "l_lineid", "l_amount")
 

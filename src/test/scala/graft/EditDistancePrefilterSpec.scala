@@ -16,8 +16,8 @@ class EditDistancePrefilterSpec extends SparkSpec {
   // optimizer folds the whole Filter eagerly (ConvertToLocalRelation,
   // which runs BEFORE user-provided rules) and there is nothing left to
   // rewrite
-  private lazy val pairs = {
-    val dir = java.nio.file.Files.createTempDirectory("editdist").toString
+  private def pairs = {
+    val dir = tempDir("editdist").toString
     Seq(
       ("kitten", "sitting"),        // dist 3, lengths 6/7
       ("abcdef", "abcdxf"),         // dist 1
@@ -53,7 +53,7 @@ class EditDistancePrefilterSpec extends SparkSpec {
   }
 
   test("guard preserves three-valued logic on NULL inputs") {
-    val dir = java.nio.file.Files.createTempDirectory("editdist_null").toString
+    val dir = tempDir("editdist_null").toString
     Seq((Some("abc"), Some("abd")), (None, Some("x")),
       (Some("y"), None)).toDF("a", "b").write.mode("overwrite").parquet(dir)
     val withNulls = spark.read.parquet(dir)

@@ -12,7 +12,7 @@ class IOSpec extends SparkSpec {
 
   test("round-trip through parquet, csv, json preserves rows") {
     val df = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma")).toDF("id", "name")
-    val base = Files.createTempDirectory("graft_io").toString
+    val base = tempDir("graft_io").toString
     for (fmt <- Seq("parquet", "csv", "json")) {
       IO.write(df, fmt, s"$base/$fmt")
       val back = fmt match {
@@ -27,7 +27,7 @@ class IOSpec extends SparkSpec {
 
   test("partitionBy produces prunable directory layout") {
     val df = Seq((1L, "a", "x"), (2L, "b", "y")).toDF("id", "name", "part")
-    val base = Files.createTempDirectory("graft_iop").toString
+    val base = tempDir("graft_iop").toString
     IO.write(df, "parquet", s"$base/t", partitionBy = Seq("part"))
     assert(new java.io.File(s"$base/t/part=x").exists())
     // partition filter prunes to one directory
@@ -36,7 +36,7 @@ class IOSpec extends SparkSpec {
   }
 
   test("streaming file source feeds the same word-count operators") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     val sc = StructType(Seq(StructField("value", StringType)))
     Files.writeString(java.nio.file.Path.of(s"$dir/batch1.json"),
       """{"value":"a b a"}""" + "\n" + """{"value":"b"}""")

@@ -114,7 +114,7 @@ class LayoutOpsSpec extends SparkSpec {
       (i, x, y)
     }.toDF("id", "kx", "ky")
     val keyed = LayoutOps.withHilbert(rows, col("kx"), col("ky"), bits = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val dir = tempDir("graft_layout").toString
     try {
       LayoutOps.writeClustered(keyed, s"$dir/clustered", "hilbert", numFiles = 16)
       rows.repartition(16).write.mode("overwrite").parquet(s"$dir/plain")
@@ -153,7 +153,7 @@ class LayoutOpsSpec extends SparkSpec {
       (i, x, y)
     }.toDF("id", "kx", "ky")
     val keyed = LayoutOps.withHilbert(rows, col("kx"), col("ky"), bits = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout_skip").toString
+    val dir = tempDir("graft_layout_skip").toString
     try {
       LayoutOps.writeClustered(keyed, s"$dir/clustered", "hilbert", numFiles = 32)
       rows.repartition(32).write.mode("overwrite").parquet(s"$dir/plain")
@@ -215,7 +215,7 @@ class LayoutOpsSpec extends SparkSpec {
     // inventory: 32 equal small files; quota 4 files' worth per bin ⇒ the
     // plan's dense bin count is 8 — the sizing optimizeTable must adopt
     val inventory = (0L until 32L).map(f => (f, 1000L)).toDF("file_id", "size_bytes")
-    val dir = java.nio.file.Files.createTempDirectory("graft_optimize").toString
+    val dir = tempDir("graft_optimize").toString
     try {
       // fragmented control: the same rows scattered over 32 random files
       rows.repartition(32).write.mode("overwrite").parquet(s"$dir/plain")

@@ -13,7 +13,7 @@ class PartitionPruningSpec extends SparkSpec {
   import spark.implicits._
 
   test("partition filter prunes directories, residual filter pushes down") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     (1L to 3000L).map(i => (i, s"t${i % 3}", i % 100, s"p$i"))
       .toDF("event_id", "event_type", "score", "props")
       .write.partitionBy("event_type").parquet(s"$dir/events_p")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{MultimodalOps, PqOps, SimilarityOps}
+import graft.ops.{BpeReference, MultimodalOps, PqOps, SimilarityOps}
 
 /** Round 13: the VERDICT r12 fix list — measured recall for the
   * persisted-index incremental ANN path (probe-1 and the multi-probe
@@ -347,7 +347,7 @@ class Round13AdditionsSpec extends SparkSpec {
     val hist = bpeCorpus.flatMap(_.split(" "))
       .groupBy(identity).map { case (w, ws) => (w, ws.length.toLong) }.toSeq
     // 200 >> the merge supply: both regimes must stop at the same point
-    val local = BpeOps.bpeTrainLocal(hist, 200)
+    val local = BpeReference.bpeTrainLocal(hist, 200)
     val dist = BpeOps.bpeTrain(bpeDocs, 200)
     assert(local == dist)
     assert(local.nonEmpty && local.length < 200, "fixture must exhaust early")
@@ -385,6 +385,6 @@ class Round13AdditionsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val hist = weird.flatMap(_.split(" "))
       .groupBy(identity).map { case (w, ws) => (w, ws.length.toLong) }.toSeq
-    assert(BpeOps.bpeTrainLocal(hist, 8) == BpeOps.bpeTrain(docs, 8))
+    assert(BpeReference.bpeTrainLocal(hist, 8) == BpeOps.bpeTrain(docs, 8))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{PqOps, SimilarityOps}
+import graft.ops.{BpeReference, PqOps, SimilarityOps}
 
 /** Round 14: the VERDICT r13 fix list — clustered-geometry recall for
   * the persisted-index incremental ANN path (the deployment-grade
@@ -104,7 +104,7 @@ class Round14AdditionsSpec extends SparkSpec {
       "newest newest newest newest newest newest")
     val hist = corpus.flatMap(_.split(" "))
       .groupBy(identity).map { case (w, ws) => (w, ws.length.toLong) }.toSeq
-    val ref = BpeOps.bpeTrainLocal(hist, 1000)
+    val ref = BpeReference.bpeTrainLocal(hist, 1000)
     val fast = BpeOps.bpeTrainLocalFast(hist, 1000)
     assert(fast == ref)
     assert(ref.nonEmpty && ref.length < 1000, "fixture must exhaust early")
@@ -124,7 +124,7 @@ class Round14AdditionsSpec extends SparkSpec {
     val hist = words.groupBy(identity)
       .map { case (w, ws) => (w, ws.length.toLong * (1 + w.length % 3)) }.toSeq
     for (depth <- Seq(1, 7, 50, 5000)) {
-      val ref = BpeOps.bpeTrainLocal(hist, depth)
+      val ref = BpeReference.bpeTrainLocal(hist, depth)
       val fast = BpeOps.bpeTrainLocalFast(hist, depth)
       assert(fast == ref, s"divergence at depth $depth")
     }

@@ -243,7 +243,7 @@ class Round4ExtrasSpec extends SparkSpec {
       s.conf.set(SQLConf.RUNTIME_BLOOM_FILTER_CREATION_SIDE_THRESHOLD.key, "1GB")
       s.conf.set(SQLConf.RUNTIME_BLOOM_FILTER_APPLICATION_SIDE_SCAN_SIZE_THRESHOLD.key, "0")
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  // force non-broadcast
-      val dir = java.nio.file.Files.createTempDirectory("bloom").toString
+      val dir = tempDir("bloom").toString
       s.range(0, 100000).select(col("id").as("fk"),
         (col("id") % 97).as("payload")).write.mode("overwrite")
         .parquet(s"$dir/fact")

@@ -57,7 +57,7 @@ class Round5AdditionsSpec extends SparkSpec {
   }
 
   test("dedupIncremental reads the persisted index, not corpus text: one signature derivation, index scan is (doc_id, sig)") {
-    val dir = java.nio.file.Files.createTempDirectory("sigidx").toString
+    val dir = tempDir("sigidx").toString
     val corpus = DedupOps.augmented(Tables.documents(spark, sfDir))
     DedupOps.signatureIndex(corpus.filter(col("doc_id") < 100000))
       .write.mode("overwrite").parquet(dir)

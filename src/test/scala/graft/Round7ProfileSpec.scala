@@ -175,7 +175,7 @@ class Round7ProfileSpec extends SparkSpec {
     val docs = (0L until 200L)
       .map(i => (i, s"doc $i text ${"x" * (i % 37).toInt}", (20 + i % 37)))
       .toDF("doc_id", "text", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tempDir("graft_compact").toString
     val nFiles = 29
     val nBins = LayoutOps.applyCompaction(docs, dir, nFiles = nFiles,
       targetBytes = 1200L)
@@ -199,7 +199,7 @@ class Round7ProfileSpec extends SparkSpec {
     val expected = plan.select("bin").distinct().collect().map(_.getLong(0)).toSet
     assert(binDirs.map(_.getName.stripPrefix("bin=").toLong).toSet == expected)
     // empty landed partition: plans zero bins, writes nothing, no NPE
-    val emptyDir = java.nio.file.Files.createTempDirectory("graft_compact_e").toString
+    val emptyDir = tempDir("graft_compact_e").toString
     assert(LayoutOps.applyCompaction(docs.where(lit(false)), emptyDir) == 0L)
   }
 

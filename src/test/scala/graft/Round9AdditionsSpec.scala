@@ -31,7 +31,7 @@ class Round9AdditionsSpec extends SparkSpec {
   test("writeClusteredExact: deterministic per-row assignment, one file per bin, disjoint monotone spans, lossless") {
     val rows = (0L until 4096L).map(i => (i, (i * 2654435761L) % 65536L))
       .toDF("id", "curve")
-    val dir = java.nio.file.Files.createTempDirectory("graft_wce").toString
+    val dir = tempDir("graft_wce").toString
     try {
       LayoutOps.writeClusteredExact(rows, s"$dir/a", "curve", 8)
       LayoutOps.writeClusteredExact(rows, s"$dir/b", "curve", 8)
@@ -100,7 +100,7 @@ class Round9AdditionsSpec extends SparkSpec {
     val docs = (0L until 300L)
       .map(i => (i, "x" * (50 + (i * 37L % 400L)).toInt, 50L + i * 37L % 400L))
       .toDF("doc_id", "text", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rt").toString
+    val dir = tempDir("graft_rt").toString
     try {
       val got = LayoutOps.optimizeRoundtrip(spark, docs, dir,
           targetBytes = 8192L)
@@ -130,7 +130,7 @@ class Round9AdditionsSpec extends SparkSpec {
   test("optimizeTableExact/optimizeRoundtrip: empty table reports zero planner bins, zero files, empty summary") {
     val empty = Seq.empty[(Long, Long)].toDF("doc_id", "curve")
     val emptyInv = Seq.empty[(Long, Long)].toDF("file_id", "size_bytes")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ote").toString
+    val dir = tempDir("graft_ote").toString
     try {
       assert(LayoutOps.optimizeTableExact(empty, emptyInv, s"$dir/e",
         "curve") == 0L)
@@ -201,7 +201,7 @@ class Round9AdditionsSpec extends SparkSpec {
 
   test("ingestIndexLoop: later batches know earlier batches' novel digests; compaction bounds the index files") {
     import graft.streaming.StreamingIngest
-    val root = java.nio.file.Files.createTempDirectory("graft_ingest_loop")
+    val root = tempDir("graft_ingest_loop")
     val dir = java.nio.file.Files.createDirectory(root.resolve("media"))
     val indexDir = root.resolve("index").toString
     def md5hex(b: Array[Byte]): String =
@@ -320,7 +320,7 @@ class Round9AdditionsSpec extends SparkSpec {
       (i, "x" * (50 + (i * 37L % 400L)).toInt, "en", s"s${i % 3}",
         50L + i * 37L % 400L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmprt").toString
+    val dir = tempDir("graft_cmprt").toString
     try {
       val got = LayoutOps.compactionRoundtrip(spark, docs, dir,
           targetBytes = 8192L)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, forked by sbt). */
@@ -17,8 +18,8 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // the checkpoint manager every graft session gets from GraftExtensions
-    graft.streaming.LocalCheckpointFileManager.install(s.sparkContext)
+    // the local file system every graft session gets from GraftExtensions
+    graft.sources.NioLocalFileSystem.install(s.sparkContext)
     s
   }
 }
@@ -26,10 +27,21 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
-  /** Run `body` in a fresh temp directory, removed afterwards. */
-  protected def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+  private val testDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temp directory, removed when the running test ends. */
+  protected def tempDir(prefix: String): java.nio.file.Path = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try body(dir)
-    finally graft.ops.FixtureDirs.rmTree(dir)
+    testDirs.add(dir)
+    dir
   }
+
+  /** Run `body` in a fresh [[tempDir]]. */
+  protected def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T =
+    body(tempDir(prefix))
+
+  override protected def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally Iterator.continually(testDirs.poll()).takeWhile(_ != null)
+      .foreach(graft.ops.FixtureDirs.rmTree)
 }

@@ -37,8 +37,8 @@ class StreamingCdcSpec extends SparkSpec {
       Option(r.getString(3)))).toSet
 
   test("foreachBatch merge over OUT-OF-ORDER micro-batches equals the one-shot MERGE") {
-    val snapDir = java.nio.file.Files.createTempDirectory("graft_cdc_snap").toString + "/snap"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt").toString
+    val snapDir = tempDir("graft_cdc_snap").toString + "/snap"
+    val ckpt = tempDir("graft_cdc_ckpt").toString
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Long, Long, Long, String, Double)]
     val stream = input.toDF()
@@ -61,7 +61,7 @@ class StreamingCdcSpec extends SparkSpec {
   }
 
   test("late older upsert for a deleted key does NOT resurrect the row") {
-    val snapDir = java.nio.file.Files.createTempDirectory("graft_cdc_ttl").toString + "/snap"
+    val snapDir = tempDir("graft_cdc_ttl").toString + "/snap"
     StreamingCdc.initSnapshot(spark, base, snapDir)
     StreamingCdc.mergeBatch(spark, changesDF(Seq((103L, 2000L * 1000, 3L, "error", 0.0))), snapDir)
     StreamingCdc.mergeBatch(spark, changesDF(Seq((102L, 1000L * 1000, 3L, "purchase", 77.0))), snapDir)
@@ -72,7 +72,7 @@ class StreamingCdcSpec extends SparkSpec {
 
   test("an interrupted publish recovers the COMMITTED generation, never re-initializes") {
     import graft.sources.SnapshotSwap
-    val snapDir = java.nio.file.Files.createTempDirectory("graft_cdc_crash").toString + "/snap"
+    val snapDir = tempDir("graft_cdc_crash").toString + "/snap"
     StreamingCdc.initSnapshot(spark, base, snapDir)
     StreamingCdc.mergeBatch(spark,
       changesDF(Seq((300L, 1000L * 1000, 1L, "click", 77.0))), snapDir)
@@ -97,7 +97,7 @@ class StreamingCdcSpec extends SparkSpec {
   }
 
   test("empty batch is a no-op and the snapshot keeps a bounded file count") {
-    val snapDir = java.nio.file.Files.createTempDirectory("graft_cdc_files").toString + "/snap"
+    val snapDir = tempDir("graft_cdc_files").toString + "/snap"
     StreamingCdc.initSnapshot(spark, base, snapDir, numFiles = 2)
     (0 until 5).foreach { i =>
       StreamingCdc.mergeBatch(spark,

@@ -165,7 +165,7 @@ class StreamingDedupSpec extends SparkSpec {
 
   test("incrementalIndexLoop grows the index with survivors; later batches dedup against them") {
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("incr_idx").toString
+    val dir = tempDir("incr_idx").toString
     val textA = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     // seed the index with one known doc
     DedupOps.signatureIndex(
@@ -196,7 +196,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("compactSignatureIndex: identical verdicts, replay rows collapsed, fewer files, TTL admits expired matches (VERDICT r6 item 6)") {
-    val dir = java.nio.file.Files.createTempDirectory("compact_idx").toString
+    val dir = tempDir("compact_idx").toString
     val base = Seq(
       (1L, "one two three four five six seven eight nine ten"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),

@@ -24,7 +24,7 @@ class StreamingE2ESpec extends SparkSpec {
       to_timestamp(lit("1995-01-01 00:00:00")).as("o_orderdate"))
 
   test("payments pipeline end-to-end over files: source → fanout → sinks → read-back") {
-    val root = java.nio.file.Files.createTempDirectory("graft_e2e").toString
+    val root = tempDir("graft_e2e").toString
     val (inDir, mainDir, suspDir, cp) =
       (s"$root/in", s"$root/main", s"$root/susp", s"$root/cp")
 

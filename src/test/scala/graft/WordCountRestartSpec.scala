@@ -5,20 +5,22 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import graft.streaming.{LocalCheckpointFileManager, StreamingOps}
+import graft.sources.NioLocalFileSystem
+import graft.streaming.StreamingOps
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem}
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** Kill-and-resume of the reference word count (`spark/kafka/App.java`,
-  * Update mode) across checkpoint managers: a run under Spark's own
-  * manager crashes mid-stream, resumes under graft's, crashes again and
-  * resumes under Spark's. Each crash happens in the sink after the
-  * batch's state is committed and before its commit-log entry, so the
-  * resumed run replays that batch over state files the other manager
-  * wrote. The final per-word counts must equal an uninterrupted run's;
-  * every batch id is delivered, and a replayed batch delivers exactly
-  * what its first delivery did.
+  * Update mode) across local file systems: a run over Hadoop's stock one
+  * crashes mid-stream, resumes over graft's, crashes again and resumes
+  * over the stock one. Each crash happens in the sink after the batch's
+  * state is committed and before its commit-log entry, so the resumed run
+  * replays that batch over state files the other file system wrote. The
+  * final per-word counts must equal an uninterrupted run's; every batch
+  * id is delivered, and a replayed batch delivers exactly what its first
+  * delivery did.
   */
 class WordCountRestartSpec extends SparkSpec {
 
@@ -57,12 +59,22 @@ class WordCountRestartSpec extends SparkSpec {
   private def finalCounts(out: ConcurrentLinkedQueue[Delivery]): Map[String, Long] =
     out.asScala.foldLeft(Map.empty[String, Long])(_ ++ _._2)
 
-  private def session(provider: String, stockManager: Boolean): SparkSession = {
+  private def session(provider: String, stockFs: Boolean): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    if (stockManager) s.conf.set(LocalCheckpointFileManager.ConfKey,
-      classOf[FileContextBasedCheckpointFileManager].getName)
+    if (stockFs) {
+      s.conf.set("fs.file.impl", classOf[LocalFileSystem].getName)
+      s.conf.set("fs.file.impl.disable.cache", "true")
+      s.conf.set("fs.AbstractFileSystem.file.impl", classOf[LocalFs].getName)
+    }
     s
+  }
+
+  /** The `FileSystem` and `FileContext` classes `s` writes `dir` with. */
+  private def fileSystems(s: SparkSession, dir: NioPath): Seq[Class[_]] = {
+    val conf = s.sessionState.newHadoopConf()
+    Seq(FileSystem.get(dir.toUri, conf).getClass,
+      FileContext.getFileContext(dir.toUri, conf).getDefaultFileSystem.getClass)
   }
 
   private def killAndResume(provider: String): Unit = withTempDir("graft_wc_restart") { dir =>
@@ -72,26 +84,30 @@ class WordCountRestartSpec extends SparkSpec {
     val whole = Files.createDirectories(dir.resolve("whole"))
     addFiles(whole, 0 until files)
     val uninterrupted = new ConcurrentLinkedQueue[Delivery]()
-    run(session(provider, stockManager = false), whole, dir.resolve("ckpt_whole"),
+    run(session(provider, stockFs = false), whole, dir.resolve("ckpt_whole"),
       uninterrupted, None)
     assert(finalCounts(uninterrupted) === expected)
 
     val input = Files.createDirectories(dir.resolve("in"))
     val ckpt = dir.resolve("ckpt")
     val out = new ConcurrentLinkedQueue[Delivery]()
-    // which manager wrote a commit-log entry shows in its Hadoop sidecar
+    // both file systems write a commit-log entry with its Hadoop sidecar
     def commitSidecars(batches: Range): Seq[Boolean] = batches.map { b =>
       assert(Files.exists(ckpt.resolve(s"commits/$b")))
       Files.exists(ckpt.resolve(s"commits/.$b.crc"))
     }
+    val (stock, graft) = (session(provider, stockFs = true), session(provider, stockFs = false))
+    assert(fileSystems(stock, ckpt) === Seq(classOf[LocalFileSystem], classOf[LocalFs]))
+    assert(fileSystems(graft, ckpt) ===
+      Seq(classOf[NioLocalFileSystem], classOf[NioLocalFileSystem.Fs]))
     addFiles(input, 0 until 4)
-    run(session(provider, stockManager = true), input, ckpt, out, crashAt = Some(2L))
-    assert(commitSidecars(0 to 1).forall(identity), "the first run wrote through Spark's manager")
+    run(stock, input, ckpt, out, crashAt = Some(2L))
+    assert(commitSidecars(0 to 1).forall(identity), "the first run wrote over the stock one")
     addFiles(input, 4 until 7)
-    run(session(provider, stockManager = false), input, ckpt, out, crashAt = Some(5L))
-    assert(!commitSidecars(2 to 4).exists(identity), "the second run wrote through graft's")
+    run(graft, input, ckpt, out, crashAt = Some(5L))
+    assert(commitSidecars(2 to 4).forall(identity), "the second run wrote over graft's")
     addFiles(input, 7 until files)
-    run(session(provider, stockManager = true), input, ckpt, out, crashAt = None)
+    run(stock, input, ckpt, out, crashAt = None)
 
     val byBatch = out.asScala.toSeq.groupBy(_._1)
     assert(byBatch.keySet === (0L until files).toSet, "every batch delivered")
@@ -102,11 +118,11 @@ class WordCountRestartSpec extends SparkSpec {
     assert(finalCounts(out) === finalCounts(uninterrupted))
   }
 
-  test("word count resumes across Spark's and graft's checkpoint managers: HDFS-backed state") {
+  test("word count resumes across Hadoop's and graft's local file systems: HDFS-backed state") {
     killAndResume("org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
   }
 
-  test("word count resumes across Spark's and graft's checkpoint managers: RocksDB state") {
+  test("word count resumes across Hadoop's and graft's local file systems: RocksDB state") {
     killAndResume("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
   }
 }
