@@ -14,6 +14,11 @@ object Bench {
   def parseReps(raw: Option[String]): Int =
     GraftSession.positiveInt("SPARK_GRAFT_BENCH_REPS", raw, 3)
 
+  /** The optional query-name filter `SPARK_GRAFT_BENCH_ONLY` for
+    * targeted re-measurement: unset times every registered query. */
+  def parseOnly(raw: Option[String]): Option[Set[String]] =
+    GraftSession.queryFilter("SPARK_GRAFT_BENCH_ONLY", raw, SparkEntry.queries.keySet)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // MEDIAN-OF-3 per query: the bench host is co-tenant contended (2-4×
@@ -23,6 +28,7 @@ object Bench {
     // cleared between reps), so the median is a cold-query time, not a
     // cache readback.
     val reps = parseReps(sys.env.get("SPARK_GRAFT_BENCH_REPS"))
+    val only = parseOnly(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession.local(GraftSession.cpus)
 
     // JVM/codegen warmup + Hadoop/parquet reader init (otherwise the first
@@ -51,10 +57,6 @@ object Bench {
     // data touched instead of re-arbitrating co-tenant noise each round.
     val rowCounts = collection.mutable.LinkedHashMap.empty[String, Long]
     val errors = collection.mutable.LinkedHashMap.empty[String, String]
-    // Optional comma-separated name filter for targeted re-measurement
-    // (regression triage without a 100-query run); absent = all queries.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
     // Sorted order: stable attribution across rounds (Map iteration order
     // shifts as entries are added, moving the noise-prone early slots).
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -52,6 +52,22 @@ object GraftSession {
       throw new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
   }
 
+  /** The query-name filter `name` from its raw value: `None` (every
+    * query) when unset, else the set of its comma-separated names, empty
+    * items dropped. A name not in `known`, or a value with no name at
+    * all, fails naming the variable and each unknown name, so a typo
+    * never selects zero queries. */
+  def queryFilter(name: String, raw: Option[String],
+                  known: Set[String]): Option[Set[String]] = raw.map { v =>
+    val names = v.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    if (names.isEmpty)
+      throw new IllegalArgumentException(s"$name names no query, got '$v'")
+    val unknown = (names -- known).toSeq.sorted
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"$name names unknown queries: ${unknown.map(u => s"'$u'").mkString(", ")}")
+    names
+  }
+
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -3,8 +3,16 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The optional query-name filter `SPARK_GRAFT_VERIFY_ONLY`, an
+    * iteration aid: dump only the named queries; unset dumps every
+    * registered query. oracle_sql.json is written in full either way. */
+  def parseOnly(raw: Option[String]): Option[Set[String]] =
+    GraftSession.queryFilter("SPARK_GRAFT_VERIFY_ONLY", raw, SparkEntry.queries.keySet)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val only = parseOnly(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
     val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // Recursive delete for FAILED queries: `mode("overwrite")` only
@@ -21,11 +29,6 @@ object Verify {
         finally s.close()
       }
     }
-    // Iteration aid (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): dump only a
-    // comma-separated subset; the driver never sets it, so its runs are
-    // always the full surface. oracle_sql.json is still written in full.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only match {
       case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
       case None => SparkEntry.queries

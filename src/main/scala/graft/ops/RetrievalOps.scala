@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (100 TB), shared across the family:
   *  - the query side is always bounded (suspect set) and BROADCAST:
-  *    BM25 broadcasts the query vocabulary onto the token stream
-  *    (corpus explode filtered map-side), the dense channel broadcasts
-  *    the query TF entries onto the postings (≤ |queries|·dims rows).
+  *    BM25 broadcasts the query vocabulary onto the index postings and
+  *    df ([[Bm25Index]], built in-query or read back), the dense channel
+  *    broadcasts the query vectors onto the document vectors
+  *    (≤ |queries| rows of dims longs).
   *  - channel top-k are per-query windows (WindowGroupLimit partial +
   *    final around the q_id exchange — no input partition forwards
   *    more than k rows per query), so candidate volume never
@@ -50,8 +51,8 @@ object RetrievalOps {
 
   /** Eager-pin helper for METADATA-SIZED frames (feedback ids, channel
     * rank lists, expansion tables — all queries×k-bounded by contract):
-    * repartition(1) before persist (round 15). Cached plans skip AQE
-    * partition coalescing (spark.sql.optimizer.
+    * repartition(1) before persist. Cached plans skip AQE partition
+    * coalescing (spark.sql.optimizer.
     * canChangeCachedPlanOutputPartitioning is false by default), so a
     * pinned frame otherwise materializes at the session's shuffle
     * partition count and EVERY downstream reference pays that many
@@ -76,60 +77,28 @@ object RetrievalOps {
 
   /** Generalized [[TextOps.bm25TopK]]: BM25 top-k of each query
     * document (rows matching `isQuery`, a doc_id predicate) against all
-    * OTHER corpus documents. Identical arithmetic and plan shape — the
-    * query vocabulary is broadcast so the corpus-side explode is
-    * filtered MAP-SIDE before tf/df ever shuffle; see the scale notes
-    * on [[TextOps.bm25TopK]]. Output: (q_id, doc_id, n_terms, score,
-    * rank), rank ≤ k per query.
+    * OTHER corpus documents, scored by [[bm25RanksFromIndex]] over an
+    * in-query [[bm25BuildIndex]] of the corpus. Output: (q_id, doc_id,
+    * n_terms, score, rank), rank ≤ k per query.
     */
   def bm25Ranks(corpus: DataFrame, isQuery: Column, k: Int = 5): DataFrame =
-    bm25RanksForTerms(corpus, queryTerms(corpus, isQuery), k)
+    bm25RanksFromIndex(bm25BuildIndex(corpus), queryTerms(corpus, isQuery), k)
 
-  /** [[bm25Ranks]] against an EXPLICIT (q_id, word) term table — the
-    * entry point query-expansion passes reuse. */
-  def bm25RanksForTerms(corpus: DataFrame, qterms: DataFrame,
-                        k: Int = 5): DataFrame = {
-    val qvocab = qterms.select("word").distinct()
-    // dl is ATTACHED AT THE EXPLODE (round 15, guide §2.4 "remove
-    // shuffles outright"): size(toks) rides along as one extra long per
-    // exploded row and survives the tf aggregation as max(dl) (constant
-    // per doc, so max = the value). The previous formulation joined a
-    // separate corpus-wide (doc_id, dl) frame onto tf inside
-    // scoreAndRank — locally a second scan+repartition+broadcast per
-    // scoring pass, at 100 TB a corpus-sized shuffle join (doclens is
-    // data-sized, not broadcastable). Values are identical, so the
-    // oracle SQL is untouched.
-    val toks = corpus
-      .select(col("doc_id"), size(toksCol).cast("long").as("dl"),
-        explode(toksCol).as("word"))
-      .join(broadcast(qvocab), "word")
-    val tf = toks.groupBy("doc_id", "word")
-      .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-    // df = distinct docs per word = ROWS of tf per word (tf is one row
-    // per (doc, word)) — the same derivation [[bm25BuildIndex]] uses.
-    // Deriving from tf instead of a second countDistinct over toks lets
-    // ReuseExchange serve BOTH consumers from ONE explode+join+agg
-    // (round 15: the duplicated toks evaluation was ~25% of the whole
-    // channel at the 100× ladder), and drops the countDistinct expand.
-    val dfT = tf.groupBy("word").agg(count(lit(1)).as("df"))
-    scoreAndRank(tf, dfT, corpusNAvg(corpus), qterms, k)
-  }
+  /** BM25 with PSEUDO-RELEVANCE FEEDBACK (RM3-lite query expansion),
+    * [[bm25PrfFromIndex]] over an in-query [[bm25BuildIndex]] of the
+    * corpus. The caller owns the returned (tiny, persisted) frame.
+    */
+  def bm25Prf(corpus: DataFrame, isQuery: Column, m: Int = 3, e: Int = 5,
+              k: Int = 5): DataFrame =
+    bm25PrfFromIndex(bm25BuildIndex(corpus), queryTerms(corpus, isQuery), m, e, k)
 
-  /** (n, avgdl) from the corpus in ONE skinny aggregate — count and the
-    * exact integer token-count sum (commutes in any order) with one IEEE
-    * division, bit-identical to the previous dl-frame derivation. */
-  private def corpusNAvg(corpus: DataFrame): DataFrame =
-    corpus.agg(count(lit(1)).as("n"),
-      (sum(size(toksCol).cast("long")).cast("double") / count(lit(1)))
-        .as("avgdl"))
-
-  /** BM25 with PSEUDO-RELEVANCE FEEDBACK (RM3-lite query expansion):
-    * first pass retrieves the top-`m` feedback documents per query;
-    * the `e` best expansion terms across them that are NOT already
-    * query terms join the query; the second pass scores the EXPANDED
-    * term set with the same BM25 arithmetic. The standard recipe when
-    * the query document under-specifies its topic — the lexical
-    * analogue of the dense channel's paraphrase tolerance.
+  /** BM25 with PSEUDO-RELEVANCE FEEDBACK over an index: the first pass
+    * retrieves the top-`m` feedback documents per query; the `e` best
+    * expansion terms across them that are NOT already query terms join
+    * the query; the second pass scores the EXPANDED term set with the
+    * same BM25 arithmetic. The standard recipe when the query document
+    * under-specifies its topic — the lexical analogue of the dense
+    * channel's paraphrase tolerance.
     *
     * Expansion terms are ranked by feedback-frequency × LINEAR idf
     * (one integer count times the house `((N−df)+0.5)/(df+0.5)` — a
@@ -137,101 +106,53 @@ object RetrievalOps {
     * reproducible), (score DESC, word ASC) tiebreak. The idf factor is
     * LOAD-BEARING, not just quality: raw frequency ranking picks the
     * corpus-common (stopword-like) terms of the feedback docs, whose
-    * expanded match set approaches corpus × queries — the first ladder
-    * cut measured 542 s at 100× (5× the plain pass) before the idf
-    * weighting pulled expansion to rare terms and the second pass back
-    * to first-pass cost.
+    * expanded match set approaches corpus × queries, and the second
+    * pass then costs several first passes.
     *
-    * Scale: first pass is [[bm25Ranks]]; feedback docs are queries×m
-    * ids BROADCAST onto the corpus before the explode (only the ≤ 8·m
-    * feedback documents are ever re-tokenized); candidate df is one
-    * corpus pass filtered map-side by the feedback-vocab broadcast;
-    * the second pass is one more [[bm25RanksForTerms]].
-    */
-  def bm25Prf(corpus: DataFrame, isQuery: Column, m: Int = 3, e: Int = 5,
-              k: Int = 5): DataFrame = {
-    // qt is queries×terms-bounded and referenced ~5× across the two
-    // passes (qvocab, scoreAndRank join, anti-join, union vocab, final
-    // term table) — pin it for the call like the feedback ids (round 15)
-    val qt = pinTiny(queryTerms(corpus, isQuery))
-    // The feedback ids are referenced by several downstream branches
-    // (fb tokenization twice, expansion ranking, second-pass vocab);
-    // WITHOUT pinning them, each reference re-executes the ENTIRE
-    // first pass — the second ladder cut measured 657 s at 100× (~4
-    // first passes) vs ~2 passes' worth after this persist. queries×m
-    // rows — metadata-sized. Eager-materialize + unpersist-on-return,
-    // the [[DedupOps.dedupIncremental]] lifecycle contract: the CALLER
-    // owns the returned (tiny, persisted) frame.
-    val fbIds = pinTiny(bm25RanksForTerms(corpus, qt, m)
-      .select(col("q_id"), col("doc_id")))
-    try {
-      fbIds.count()
-      val out = pinTiny(bm25PrfFromFeedback(corpus, qt, fbIds, e, k))
-      out.count() // materialize while the feedback ids are still cached
-      out
-    } finally { fbIds.unpersist(); qt.unpersist() }
-  }
-
-  /** [[bm25Prf]] as a PURE INDEX CONSUMER (VERDICT r14 item 2): both
-    * scoring passes, the feedback-candidate weights, AND the
-    * expansion-term idf ranking read the persisted [[Bm25Index]] —
-    * corpus text is never touched, nothing is ever re-tokenized. The
-    * production PRF shape at 100 TB: the inline [[bm25Prf]] pays two
-    * full corpus explodes (the round-14 ladder prices it at 167.8 s at
-    * 100×, ≈1.6× a single pass); from the index each pass is a
-    * broadcast-vocabulary filter over postings (≈6× cheaper — the
-    * `bm25_incremental` ladder's 17.8 s vs 106.5 s inline, twice).
-    *
-    * BIT-PARITY with [[bm25Prf]] by construction, term by term:
-    *  - feedback weights: inline counts token occurrences of the
-    *    feedback docs (Σ over docs of tf) — here `sum(tf)` over the
-    *    feedback docs' posting rows, the same integers;
-    *  - candidate idf: inline computes df over the union-vocab explode,
-    *    which for any word equals the full-corpus df — here `idx.df`
-    *    IS the full-corpus df; `n_docs` = doclens count = corpus count;
-    *  - both scoring passes share [[scoreAndRank]] via
-    *    [[bm25RanksFromIndex]] (tf/df/dl values identical — parquet
-    *    round-trips longs exactly).
-    * The registered `bm25_prf_index` row pins this: its oracle is the
-    * SAME SQL as `bm25_prf`'s.
+    * Everything reads the index: both scoring passes
+    * ([[bm25RanksFromIndex]]), the feedback weights (`sum(tf)` over the
+    * feedback docs' postings — the token counts of those docs) and the
+    * candidate idf (`idx.df`, `n` from doclens). Corpus text is never
+    * touched, so a persisted index is never re-tokenized. The feedback
+    * ids, the feedback candidates, the expanded term table and the
+    * 1-row (n, avgdl) are pinned for the call ([[pinTiny]]) and released
+    * on return; each is referenced several times and unpinned would
+    * re-run the pass that made it. The caller owns the returned (tiny,
+    * persisted) frame, the [[DedupOps.dedupIncremental]] lifecycle.
     */
   def bm25PrfFromIndex(idx: Bm25Index, qtermsIn: DataFrame, m: Int = 3,
                        e: Int = 5, k: Int = 5): DataFrame = {
-    // qterms pinned for the call — referenced by both passes' vocab
-    // filters, the anti-join and the final term table (round 15)
     val qterms = pinTiny(qtermsIn)
-    // ONE (n, avgdl) derivation for the whole call (round 16, guide
-    // §2.4): both scoring passes and the expansion's n_docs used to
-    // each aggregate the corpus-sized doclens — three full doclens
-    // scans for the same 1-row scalar. Pinned (1 row, the broadcast-
-    // class metadata pinTiny exists for); materialized by the first
-    // pass's count below; unpersisted with the other pins.
+    // one (n, avgdl) for both scoring passes and the expansion's n_docs
     val nAvg = pinTiny(idxNAvg(idx))
-    // queries×m rows — the same pinned-feedback lifecycle as [[bm25Prf]]
     val fbIds = pinTiny(bm25RanksFromIndex(idx, qterms, m, nAvg)
       .select(col("q_id"), col("doc_id")))
-    // queries×feedback-vocab rows. PINNED because the expansion DAG
-    // references it twice (the esc join and the candidate-vocab
-    // broadcast inside cdf) and each evaluation costs a postings scan —
-    // and because the EXPANDED TERM TABLE below is referenced three
-    // times by the second scoring pass (tf filter, df filter,
-    // scoreAndRank's qterms join): unpinned, the 10× ladder measured
-    // 26.5 s (≈ the inline two-explode PRF — six hidden postings scans
-    // re-deriving the expansion), pinned it is the ~2-scoring-passes
-    // cost the index-backed formulation exists for.
+    // queries×feedback-vocab rows, read by the expansion twice (the esc
+    // join and the candidate-vocab broadcast of cdf)
     val fbCand = pinTiny(idx.postings
       .join(broadcast(fbIds), "doc_id")
       .groupBy("q_id", "word").agg(sum("tf").as("w"))
       .join(qterms, Seq("q_id", "word"), "left_anti"))
-    // queries×(query-terms+e) rows — the second pass's term table
+    // queries×(query-terms+e) rows — the second pass's term table, read
+    // three times by it (postings filter, df filter, qterms join)
     var expanded: DataFrame = null
     try {
       fbIds.count()
-      // n_docs == doclens count == nAvg's n (bit-identical long)
       val nDocs = nAvg.select(col("n").as("n_docs"))
       val cdf = idx.df
         .join(broadcast(fbCand.select("word").distinct()), "word")
-      val exp = expansionTerms(fbCand, cdf, nDocs, e)
+      // each query's top `e` candidates by w · idf, ties to the smaller word
+      val expW = Window.partitionBy("q_id")
+        .orderBy(col("esc").desc, col("word").asc)
+      val exp = fbCand
+        .join(broadcast(cdf.withColumnRenamed("df", "cdf")), "word")
+        .crossJoin(broadcast(nDocs))
+        .withColumn("esc", col("w").cast("double") *
+          (((col("n_docs") - col("cdf")).cast("double") + lit(0.5)) /
+            (col("cdf").cast("double") + lit(0.5))))
+        .withColumn("r", row_number().over(expW))
+        .filter(col("r") <= e)
+        .select("q_id", "word")
       expanded = pinTiny(qterms.unionAll(exp))
       expanded.count()
       val out = pinTiny(bm25RanksFromIndex(idx, expanded, k, nAvg))
@@ -244,102 +165,14 @@ object RetrievalOps {
     }
   }
 
-  /** The expansion + second pass given pinned feedback ids (split out
-    * so [[bm25Prf]]'s persist lifecycle wraps exactly the references
-    * that need it). */
-  private def bm25PrfFromFeedback(corpus: DataFrame, qt: DataFrame,
-                                  fbIds: DataFrame, e: Int,
-                                  k: Int): DataFrame = {
-    val fbToks = corpus
-      .join(broadcast(fbIds.select("doc_id").distinct()), "doc_id")
-      .select(col("doc_id"), explode(toksCol).as("word"))
-      .join(broadcast(fbIds), "doc_id")
-    val fbCand = fbToks.groupBy("q_id", "word").agg(count(lit(1)).as("w"))
-      .join(qt, Seq("q_id", "word"), "left_anti")
-    // ONE shared second explode over the UNION vocabulary (query ∪
-    // candidate terms): it serves both the candidate-idf ranking and
-    // the final scoring pass — a dedicated candidate-df pass was a
-    // third full corpus explode for the same df values (first ladder
-    // cut). tf rows of unchosen candidates are dropped by
-    // scoreAndRank's qterms join, so scores are unchanged.
-    val vocab2 = qt.select("word").unionAll(fbCand.select("word")).distinct()
-    // dl attached at the explode, as in [[bm25RanksForTerms]] (round 15)
-    val toks2 = corpus
-      .select(col("doc_id"), size(toksCol).cast("long").as("dl"),
-        explode(toksCol).as("word"))
-      .join(broadcast(vocab2), "word")
-    val tf2 = toks2.groupBy("doc_id", "word")
-      .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-    // df from tf, as in [[bm25RanksForTerms]]: one shared toks2 pass
-    val df2 = tf2.groupBy("word").agg(count(lit(1)).as("df"))
-    val nDocs = corpus.agg(count(lit(1)).as("n_docs"))
-    val exp = expansionTerms(fbCand, df2, nDocs, e)
-    scoreAndRank(tf2, df2, corpusNAvg(corpus), qt.unionAll(exp), k)
-  }
-
-  /** The PRF expansion terms of both formulations: each query's top `e`
-    * feedback candidates `fbCand(q_id, word, w)` by w · idf, with the
-    * candidates' document frequencies `df(word, df)` and the corpus size
-    * `nDocs(n_docs)`; ties to the smaller word. */
-  private def expansionTerms(fbCand: DataFrame, df: DataFrame, nDocs: DataFrame,
-                             e: Int): DataFrame = {
-    val expW = Window.partitionBy("q_id")
-      .orderBy(col("esc").desc, col("word").asc)
-    fbCand
-      .join(broadcast(df.withColumnRenamed("df", "cdf")), "word")
-      .crossJoin(broadcast(nDocs))
-      .withColumn("esc", col("w").cast("double") *
-        (((col("n_docs") - col("cdf")).cast("double") + lit(0.5)) /
-          (col("cdf").cast("double") + lit(0.5))))
-      .withColumn("r", row_number().over(expW))
-      .filter(col("r") <= e)
-      .select("q_id", "word")
-  }
-
-  /** The scoring tail shared by the inline ([[bm25Ranks]]) and
-    * persisted-index ([[bm25RanksFromIndex]]) formulations — ONE
-    * composition, so the two paths are bit-identical by construction:
-    * idf = ((N − df) + 0.5) / (df + 0.5) [linear]; norm = 0.25 +
-    * 0.75·(dl/avgdl); contribution = idf · (tf·2.2)/(tf + 1.2·norm)
-    * [k1 = 1.2, b = 0.75]; per-(query, doc) score = term-lexicographic
-    * strict left fold from 0.0.
-    */
-  private def scoreAndRank(tf: DataFrame, dfT: DataFrame, nAvg: DataFrame,
-                           qterms: DataFrame, k: Int): DataFrame = {
-    // `tf` carries (doc_id, word, tf, dl): inline passes attach dl at
-    // the explode; the index path joins doclens once before calling
-    // (round 15 — the per-pass corpus-wide dl join is gone, guide §2.4).
-    // `nAvg` is the 1-row (n, avgdl) aggregate, broadcast.
-    val idf = ((col("n") - col("df")).cast("double") + lit(0.5)) /
-      (col("df").cast("double") + lit(0.5))
-    val norm = lit(0.25) + (lit(0.75) * (col("dl").cast("double") / col("avgdl")))
-    val contrib = idf *
-      ((col("tf").cast("double") * lit(2.2)) /
-        (col("tf").cast("double") + (lit(1.2) * norm)))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    tf.join(broadcast(dfT), "word")
-      .join(broadcast(qterms), "word")
-      .filter(col("doc_id") =!= col("q_id"))
-      .crossJoin(broadcast(nAvg))
-      .withColumn("c", contrib)
-      .groupBy("q_id", "doc_id")
-      .agg(count(lit(1)).as("n_terms"),
-        expr("""aggregate(transform(array_sort(collect_list(struct(word, c))),
-               |  x -> x.c), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)""".stripMargin)
-          .as("score"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "doc_id", "n_terms", "score", "rank")
-  }
-
   // ---------------------------------------------------------------
   // Persisted inverted index + incremental merge
   // ---------------------------------------------------------------
 
-  /** The persisted BM25 index of a corpus slice — what a production
-    * pipeline writes once per slice so that queries and later
-    * increments never re-tokenize the corpus (the
+  /** The BM25 index of a corpus slice — the one source of BM25 term
+    * statistics. [[bm25Ranks]] and [[bm25Prf]] build it in-query; a
+    * production pipeline writes it once per slice so that queries and
+    * later increments never re-tokenize the corpus (the
     * [[DedupOps.signatureIndex]] / [[PqOps]] persisted-index
     * discipline, applied to lexical retrieval):
     *  - postings: (doc_id, word, tf) — the inverted index;
@@ -387,21 +220,17 @@ object RetrievalOps {
           .as("df"))
 
   /** Persist an index to `dir` with ONE corpus tokenization and NO
-    * data-sized cache (round 16, replacing round 15's
-    * persist(MEMORY_AND_DISK) of the corpus-sized postings frame —
-    * which achieved the single tokenization but roughly doubled the
-    * index build's disk footprint via cache spill at scale, the exact
-    * data-sized-cache pattern the rest of the engine rejects): write
-    * postings first, then derive the df artifact by reading the
-    * just-written postings parquet back. REQUIRES the Bm25Index
-    * invariant df(word) ≡ postings rows per word — which every
-    * constructor maintains ([[bm25BuildIndex]] counts postings rows;
-    * [[bm25MergeIndex]] unions doc-disjoint postings and sums df, equal
-    * to a recount of the union) — so the written df values are
-    * bit-identical to idx.df's (spec-pinned in RetrievalOpsSpec). The
-    * invariant is checked after the write: the written df's
-    * (rows, Σdf) must equal idx.df's, else an IllegalStateException
-    * names both. */
+    * data-sized cache: write postings first, then derive the df artifact
+    * by reading the just-written postings parquet back (persisting the
+    * corpus-sized postings instead would spill a second copy to disk at
+    * scale). REQUIRES the Bm25Index invariant df(word) ≡ postings rows
+    * per word — which every constructor maintains ([[bm25BuildIndex]]
+    * counts postings rows; [[bm25MergeIndex]] unions doc-disjoint
+    * postings and sums df, equal to a recount of the union) — so the
+    * written df values are bit-identical to idx.df's (spec-pinned in
+    * RetrievalOpsSpec). The invariant is checked after the write: the
+    * written df's (rows, Σdf) must equal idx.df's, else an
+    * IllegalStateException names both. */
   def writeBm25Index(idx: Bm25Index, dir: String): Unit = {
     idx.postings.write.mode("overwrite").parquet(dir + "/postings")
     idx.doclens.write.mode("overwrite").parquet(dir + "/doclens")
@@ -427,24 +256,27 @@ object RetrievalOps {
     spark.read.parquet(dir + "/doclens"),
     spark.read.parquet(dir + "/df"))
 
-  /** BM25 top-k from a persisted/merged index, never touching corpus
-    * text: postings and df are filtered by the BROADCAST query
-    * vocabulary (map-side, so only query-term posting rows survive the
-    * scan), then the shared [[scoreAndRank]] tail. For query words the
+  /** BM25 top-k from a built, persisted or merged index, never touching
+    * corpus text: postings and df are filtered by the BROADCAST query
+    * vocabulary, dl is joined once onto the filtered postings, and
+    * (n, avgdl) is the 1-row doclens aggregate. For query words the
     * slice-summed df equals the full-corpus df and per-doc tf rows are
-    * slice-unique, so the result is bit-identical to [[bm25Ranks]] on
-    * the concatenated corpus (spec-pinned; the registered
+    * slice-unique, so a merged index scores bit-identically to one built
+    * over the concatenated corpus (spec-pinned; the registered
     * `bm25_incremental` oracle IS the full-corpus `bm25_topk` SQL).
+    * Arithmetic, the [[TextOps.bm25TopK]] contract: idf = ((N − df) +
+    * 0.5) / (df + 0.5) [linear]; norm = 0.25 + 0.75·(dl/avgdl);
+    * contribution = idf · (tf·2.2)/(tf + 1.2·norm) [k1 = 1.2, b = 0.75];
+    * per-(query, doc) score = term-lexicographic strict left fold from
+    * 0.0; ties rank by doc_id.
     */
   def bm25RanksFromIndex(idx: Bm25Index, qterms: DataFrame,
                          k: Int = 5): DataFrame =
     bm25RanksFromIndex(idx, qterms, k, idxNAvg(idx))
 
-  /** The index's 1-row (n, avgdl) corpus-stats aggregate — split out
-    * (round 16) so a multi-pass consumer ([[bm25PrfFromIndex]]: two
-    * scoring passes + the expansion's n_docs) derives it ONCE from one
-    * doclens scan instead of once per pass. Same expression as before —
-    * exact integer count/sum with one IEEE division. */
+  /** The index's 1-row (n, avgdl) corpus-stats aggregate — exact integer
+    * count/sum with one IEEE division; [[bm25PrfFromIndex]] derives it
+    * once for its two scoring passes and the expansion's n_docs. */
   private def idxNAvg(idx: Bm25Index): DataFrame =
     idx.doclens.agg(count(lit(1)).as("n"),
       (sum("dl").cast("double") / count(lit(1))).as("avgdl"))
@@ -452,15 +284,33 @@ object RetrievalOps {
   private def bm25RanksFromIndex(idx: Bm25Index, qterms: DataFrame,
                                  k: Int, nAvg: DataFrame): DataFrame = {
     val qvocab = qterms.select("word").distinct()
-    // dl joined ONCE onto the vocab-filtered postings (the artifact
-    // keeps doclens separate — the standard inverted-index layout); the
-    // join's left side is already query-bounded, and the corpus-sized
-    // doclens side streams through unshuffled when the planner picks a
-    // broadcast of the filtered postings.
+    // the join's left side is already query-bounded, and the
+    // corpus-sized doclens side streams through unshuffled when the
+    // planner picks a broadcast of the filtered postings
     val tf = idx.postings.join(broadcast(qvocab), "word")
       .join(idx.doclens, "doc_id")
     val dfT = idx.df.join(broadcast(qvocab), "word")
-    scoreAndRank(tf, dfT, nAvg, qterms, k)
+    val idf = ((col("n") - col("df")).cast("double") + lit(0.5)) /
+      (col("df").cast("double") + lit(0.5))
+    val norm = lit(0.25) + (lit(0.75) * (col("dl").cast("double") / col("avgdl")))
+    val contrib = idf *
+      ((col("tf").cast("double") * lit(2.2)) /
+        (col("tf").cast("double") + (lit(1.2) * norm)))
+    val w = Window.partitionBy("q_id")
+      .orderBy(col("score").desc, col("doc_id").asc)
+    tf.join(broadcast(dfT), "word")
+      .join(broadcast(qterms), "word")
+      .filter(col("doc_id") =!= col("q_id"))
+      .crossJoin(broadcast(nAvg))
+      .withColumn("c", contrib)
+      .groupBy("q_id", "doc_id")
+      .agg(count(lit(1)).as("n_terms"),
+        expr("""aggregate(transform(array_sort(collect_list(struct(word, c))),
+               |  x -> x.c), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)""".stripMargin)
+          .as("score"))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select("q_id", "doc_id", "n_terms", "score", "rank")
   }
 
   // ---------------------------------------------------------------
@@ -473,25 +323,21 @@ object RetrievalOps {
     * stay exact). In a persisted deployment this is the document-side
     * vector index.
     *
-    * PRECONDITION (ADVICE r15): `doc_id` must be unique in `corpus`.
-    * The native kernel emits one vector per ROW; the pre-round-15
-    * explode→count→re-group derivation grouped by doc_id and would
-    * have merged token counts across duplicate doc_id rows, so the two
-    * forms (and the hashedTf-derived DuckDB oracles) agree only under
-    * uniqueness. Every registered corpus (documents and its
+    * PRECONDITION: `doc_id` must be unique in `corpus`. The native
+    * kernel emits one vector per ROW, while the hashedTf-derived DuckDB
+    * oracles group by doc_id and would merge token counts across
+    * duplicate doc_id rows, so the two agree only under uniqueness.
+    * Every registered corpus (documents and its
     * [[DedupOps.augmented]] variants) is doc_id-unique by construction;
     * a future non-unique corpus must pre-aggregate text per doc_id
     * first. */
   def denseVectors(corpus: DataFrame, dims: Int = 64): DataFrame =
-    // ONE map-side pass per document (round 15, guide §2.4): the
-    // previous derivation exploded to (doc, token) rows, counted by
-    // (doc, dim) and re-grouped to densify — TWO corpus-wide shuffles
-    // per call (and every dense channel calls this twice: corpus +
-    // query sides). The native kernel builds the same long[dims]
-    // vector row-locally; docs with no valid token yield NULL (they
-    // produced no hashedTf rows before) and are filtered, so the
-    // document set and every vector value are bit-identical — the
-    // hashedTf-derived DuckDB twins are untouched.
+    // ONE map-side pass per document, no shuffle: the native kernel
+    // builds the long[dims] vector row-locally, equal to exploding to
+    // (doc, token) rows and counting by (doc, dim). Docs with no valid
+    // token yield NULL (no hashedTf rows) and are filtered, so the
+    // document set and every vector value equal the hashedTf-derived
+    // DuckDB twins'.
     corpus.select(col("doc_id"),
         graft.functions.native.hashedTfVec(split(col("text"), " ", -1), dims)
           .as("v"))
@@ -512,11 +358,10 @@ object RetrievalOps {
     */
   def denseRanks(corpus: DataFrame, isQuery: Column, k: Int = 5,
                  dims: Int = 64): DataFrame = {
-    // dots/norms through the native codegen'd integer fold (round 15):
-    // the aggregate(zip_with(...)) HOFs interpreted two lambdas and
-    // materialized an intermediate array PER CANDIDATE PAIR in the
-    // queries × corpus loop — the channel's hot path. Exact integer
-    // sums, so the values (and the DuckDB twins) are unchanged.
+    // dots/norms through the native codegen'd integer fold: the
+    // queries × corpus loop is the channel's hot path, and a
+    // higher-order-function fold would interpret lambdas and build an
+    // array per candidate pair. Exact integer sums.
     def n2(v: String) =
       graft.functions.native.dotFoldLong(col(v), col(v))
     val qvecs = denseVectors(corpus.filter(isQuery), dims)
@@ -563,9 +408,8 @@ object RetrievalOps {
     */
   def denseRanksLsh(corpus: DataFrame, isQuery: Column, k: Int = 5,
                     dims: Int = 64, planes: Int = 8): DataFrame = {
-    // native integer folds for norms, plane dots and pair dots — the
-    // same swap as [[denseRanks]] (round 15); plane coefficients become
-    // array<long> literals, values unchanged.
+    // native integer folds for norms, plane dots and pair dots, as in
+    // [[denseRanks]]; plane coefficients are array<long> literals.
     def n2(v: String) =
       graft.functions.native.dotFoldLong(col(v), col(v))
     val bucketCol = denseLshCoefs(planes, dims).zipWithIndex.map {
@@ -711,8 +555,8 @@ object RetrievalOps {
                       k: Int = 5, lsh: Boolean = false): DataFrame =
     retrievalRecallOver(DedupOps.augmented(documents), kChannel, k, lsh)
 
-  /** The 100 TB formulation of [[retrievalRecall]] (VERDICT r14 item
-    * 1, the [[DedupOps.dedupRecallSampled]] pattern): the harness runs
+  /** The 100 TB formulation of [[retrievalRecall]] (the
+    * [[DedupOps.dedupRecallSampled]] pattern): the harness runs
     * over a CO-ADDRESSED content sample — bucket hashed from the BASE
     * id, so each planted query samples together with its truth
     * original ([[DedupOps.coSampleBucketCol]]) — and every downstream
@@ -742,7 +586,7 @@ object RetrievalOps {
     * channel = the persisted-index multiprobe ADC top-k
     * ([[denseRanksAnnIndex]]) instead of the brute-force baseline —
     * the quality number for the fusion `hybrid_rrf_index` actually
-    * ships (VERDICT r14 item 5's second half). Same planted truth,
+    * ships. Same planted truth,
     * same [[rrfFuse]], same hit arithmetic; the registered row sits
     * next to `retrieval_recall` / `retrieval_recall_lsh` so the three
     * dense-channel variants (exhaustive / probe-1 LSH / persisted-
@@ -763,17 +607,18 @@ object RetrievalOps {
     val isQuery = col("doc_id") >= 100000L && col("doc_id") < 100080L
     // Each channel feeds BOTH the fusion and its own hit count — pin
     // the queries×kChannel rank lists so the channel pipelines run
-    // once, not twice (the [[bm25Prf]] / [[DedupOps.dedupIncremental]]
-    // lifecycle: eager-materialize, caller owns the tiny output).
+    // once, not twice (the [[bm25PrfFromIndex]] /
+    // [[DedupOps.dedupIncremental]] lifecycle: eager-materialize, caller
+    // owns the tiny output).
     // `lsh = true` evaluates the SCALE PATH's dense channel
     // ([[denseRanksLsh]], probe-1 bucket routing) on the same planted
     // truth — the registered twin rows price what probe-1 costs in
     // recall next to the brute-force channel's ceiling.
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Pin the EVALUATION corpus itself for the harness's duration
-    // (round 15): between them the two channels + nq evaluate the
-    // corpus expression 6+ times (qterms / toks / dl on the sparse
-    // side, two hashedTf aggregations on the dense side), and the
+    // Pin the EVALUATION corpus itself for the harness's duration:
+    // between them the two channels + nq evaluate the corpus
+    // expression 6+ times (qterms / postings / doclens on the sparse
+    // side, two dense-vector passes on the dense side), and the
     // corpus here is never a raw table — it is the 3-scan augmented
     // union, optionally behind the sampled filter. Caching it is safe
     // by the harness contract: this is evaluation-class code whose
@@ -781,12 +626,13 @@ object RetrievalOps {
     // sampled corpus is knob-bounded); production retrieval paths
     // (hybridRrf*, bm25RanksFromIndex) do NOT cache their corpus.
     // Coalesce the pinned corpus back to cluster parallelism before
-    // caching (round 15): the augmented corpus is a 3-branch union, so
-    // it materializes at 3× the per-branch partition count and every
-    // downstream reference (qterms, toks, nAvg, both dense passes, nq)
-    // paid 3× the tasks to read it. coalesce is narrow (no shuffle) and
-    // keeps full parallelism; safe here by the harness contract — the
-    // evaluation corpus is bounded (the sampled twin IS the scale path).
+    // caching: the augmented corpus is a 3-branch union, so it would
+    // materialize at 3× the per-branch partition count and every
+    // downstream reference (qterms, postings, doclens, both dense
+    // passes, nq) pay 3× the tasks to read it. coalesce is narrow (no
+    // shuffle) and keeps full parallelism; safe here by the harness
+    // contract — the evaluation corpus is bounded (the sampled twin IS
+    // the scale path).
     val dp = math.max(1,
       corpus.sparkSession.sparkContext.defaultParallelism)
     val c = corpus.coalesce(dp).persist(lvl)

@@ -142,14 +142,18 @@ object TextOps {
     *    addition does not commute, so an unordered SUM() could never
     *    hash-match across partitionings.
     *
-    * Scale design (100 TB): the query vocabulary is broadcast onto the
-    * token stream, so the corpus-side explode is filtered MAP-SIDE
-    * before any shuffle — tf, df and the scored pairs are all bounded by
-    * query-term matches, never the corpus vocabulary. Document length
-    * (dl) is a second skinny scan (doc_id + one long); its equi-join to
-    * tf shuffles only matched doc ids. df and (N, avgdl) are broadcast
-    * 1-row/vocab-sized metadata. No global sort: top-k is a per-query
-    * window over ≤ |matches| rows.
+    * Scale design (100 TB): the term statistics come from an in-query
+    * [[RetrievalOps.Bm25Index]], the one BM25 source, which a pipeline
+    * can also persist and merge ([[RetrievalOps.bm25RanksFromIndex]]).
+    * Postings (doc_id, word, tf) are a per-document aggregate, so on a
+    * doc_id-partitioned corpus they need no shuffle; df is a word-keyed
+    * count of postings, partially aggregated map-side. The broadcast
+    * query vocabulary filters postings and df before any join, so the
+    * scored pairs are bounded by query-term matches. Document length
+    * (dl) is a skinny scan (doc_id + one long) joined to the filtered
+    * postings. df and (N, avgdl) are broadcast 1-row/vocab-sized
+    * metadata. No global sort: top-k is a per-query window over
+    * ≤ |matches| rows.
     */
   def bm25TopK(documents: DataFrame, nQueries: Int = 8, k: Int = 5): DataFrame =
     RetrievalOps.bm25Ranks(documents, col("doc_id") < nQueries, k)

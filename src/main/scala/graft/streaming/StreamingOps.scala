@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.ExchangeRates
-import graft.ops.PaymentOps
+import graft.ops.{PaymentOps, TextOps}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
@@ -86,14 +86,11 @@ object StreamingOps {
     * Input: a streaming DataFrame with a string `value` column.
     */
   def wordCountSpace(stream: DataFrame): DataFrame =
-    stream.select(explode(split(col("value"), " ", -1)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
+    TextOps.wordCount(TextOps.tokenizeSpace(stream, col("value")))
 
   /** F6 variant — regex tokenize + lowercase (kstreams/App.java:98-102). */
   def wordCountRegex(stream: DataFrame): DataFrame =
-    stream.select(explode(split(lower(col("value")), "\\W+")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
+    TextOps.wordCount(TextOps.tokenizeRegex(stream, col("value")))
 
   /** Watermarked tumbling-window aggregation — the production form of the
     * reference's unwindowed A3 count: state per (key, window) is evicted
@@ -107,30 +104,20 @@ object StreamingOps {
       .agg(count(lit(1)).as("cnt"))
 
   /** Declarative streaming sessionization: Spark's native session_window
-    * (dynamic gap-merged windows) + watermark — the Catalyst-visible path;
-    * [[StatefulSessionizer]] is the arbitrary-state alternative.
+    * (dynamic gap-merged windows) + watermark. Sessions merge by event
+    * time, so an event that arrives late but inside the watermark joins
+    * the session it falls in, whatever the trigger split. Each session's
+    * window is [first event, last event + gap). The split rule is the
+    * batch rule of [[graft.ops.EventOps.sessionize]]: a new session
+    * starts when the gap between consecutive events is > g. Events
+    * exactly g apart stay in one session, because windows [t, t + g)
+    * that only touch merge (StatefulStreamingSpec pins both boundaries).
     */
   def sessionWindowCounts(stream: DataFrame, eventTimeCol: String, keyCol: String,
                           gap: String, watermarkDelay: String): DataFrame =
     stream.withWatermark(eventTimeCol, watermarkDelay)
       .groupBy(session_window(col(eventTimeCol), gap), col(keyCol))
       .agg(count(lit(1)).as("cnt"))
-
-  /** Stream-stream inner join with watermark-bounded state: each side
-    * buffers only rows within its watermark, and the time-range condition
-    * lets Spark evict (without it, both sides' state grows forever). The
-    * streaming form of the payments enrichment when the dimension itself
-    * is a stream (e.g. live rate updates).
-    */
-  def streamStreamJoin(left: DataFrame, right: DataFrame, keyCol: String,
-                       leftTimeCol: String, rightTimeCol: String,
-                       watermarkDelay: String, joinWindow: String): DataFrame = {
-    val l = left.withWatermark(leftTimeCol, watermarkDelay)
-    val r = right.withWatermark(rightTimeCol, watermarkDelay)
-    l.join(r, l(keyCol) === r(keyCol) &&
-      r(rightTimeCol) >= l(leftTimeCol) - expr(s"INTERVAL $joinWindow") &&
-      r(rightTimeCol) <= l(leftTimeCol))
-  }
 
   /** B8k streaming — decontaminate a LIVE document stream against a
     * static benchmark digest set. Stream-static LEFT ANTI joins are

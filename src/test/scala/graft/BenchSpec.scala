@@ -14,4 +14,24 @@ class BenchSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
   }
+
+  for ((name, parse) <- Seq[(String, Option[String] => Option[Set[String]])](
+      "SPARK_GRAFT_BENCH_ONLY" -> Bench.parseOnly,
+      "SPARK_GRAFT_VERIFY_ONLY" -> Verify.parseOnly)) {
+    test(s"$name: unset selects every query, known names parse with empty items " +
+        "dropped, unknown names or no name fail naming the variable") {
+      assert(parse(None).isEmpty)
+      assert(parse(Some(" bm25_topk,,bm25_prf , ")) == Some(Set("bm25_topk", "bm25_prf")))
+      val e = intercept[IllegalArgumentException](
+        parse(Some("bm25_topk,bm25_tpok,hybrid_rff")))
+      assert(e.getMessage.contains(name), e.getMessage)
+      assert(e.getMessage.contains("'bm25_tpok'") && e.getMessage.contains("'hybrid_rff'"),
+        e.getMessage)
+      assert(!e.getMessage.contains("'bm25_topk'"), e.getMessage)
+      for (empty <- Seq("", " , ")) {
+        val e = intercept[IllegalArgumentException](parse(Some(empty)))
+        assert(e.getMessage.contains(name), e.getMessage)
+      }
+    }
+  }
 }

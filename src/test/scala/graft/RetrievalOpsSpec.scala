@@ -87,6 +87,9 @@ class RetrievalOpsSpec extends SparkSpec {
     assert(math.abs(top(0).getDouble(2) - 1.0) < 1e-12)
   }
 
+  // bm25TopK, bm25Ranks and bm25RanksFromIndex are one path; the
+  // independent references are Bm25Spec's hand-computed scores and the
+  // DuckDB oracles of bm25_topk / bm25_prf
   test("bm25Ranks matches TextOps.bm25TopK (delegation is lossless)") {
     assert(sortedRows(RetrievalOps.bm25Ranks(corpus, col("doc_id") < 3, 4)) ==
       sortedRows(TextOps.bm25TopK(corpus, nQueries = 3, k = 4)))
@@ -106,6 +109,33 @@ class RetrievalOpsSpec extends SparkSpec {
       val incremental = RetrievalOps.bm25RanksFromIndex(merged, qterms, k = 5)
       val rebuilt = RetrievalOps.bm25Ranks(corpus, col("doc_id") < 3, k = 5)
       assert(sortedRows(incremental) == sortedRows(rebuilt))
+    } finally graft.ops.FixtureDirs.rmTree(java.nio.file.Paths.get(dir))
+  }
+
+  // bm25Prf IS bm25PrfFromIndex over an in-query bm25BuildIndex, so this
+  // compares one path with itself; it pins the delegation. The merge
+  // test below is the one that compares two different indexes.
+  test("bm25PrfFromIndex == bm25Prf bit-for-bit (pure index consumer)") {
+    val qt = RetrievalOps.queryTerms(corpus, col("doc_id") < 3)
+    val inline = sortedRows(RetrievalOps.bm25Prf(corpus, col("doc_id") < 3))
+    val fromIdx = sortedRows(RetrievalOps.bm25PrfFromIndex(
+      RetrievalOps.bm25BuildIndex(corpus), qt))
+    assert(inline == fromIdx)
+  }
+
+  test("bm25PrfFromIndex parity survives the parquet round trip and a " +
+    "doc-disjoint incremental merge") {
+    val dir = java.nio.file.Files.createTempDirectory("prfidx").toString
+    try {
+      RetrievalOps.writeBm25Index(
+        RetrievalOps.bm25BuildIndex(corpus.filter(col("doc_id") % 3 =!= 1)),
+        dir)
+      val merged = RetrievalOps.bm25MergeIndex(
+        RetrievalOps.readBm25Index(spark, dir),
+        RetrievalOps.bm25BuildIndex(corpus.filter(col("doc_id") % 3 === 1)))
+      val qt = RetrievalOps.queryTerms(corpus, col("doc_id") < 3)
+      assert(sortedRows(RetrievalOps.bm25PrfFromIndex(merged, qt)) ==
+        sortedRows(RetrievalOps.bm25Prf(corpus, col("doc_id") < 3)))
     } finally graft.ops.FixtureDirs.rmTree(java.nio.file.Paths.get(dir))
   }
 

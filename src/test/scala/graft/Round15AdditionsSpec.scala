@@ -4,9 +4,9 @@ import graft.ops.{DedupOps, PqOps, RetrievalOps, SemanticOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round 15 additions: index-backed PRF bit-parity, the co-addressed
-  * sampled recall harness, the persisted-index ANN dense channel +
-  * fusion, and the triplet-mining coverage ledger. */
+/** The co-addressed sampled recall harness, the persisted-index ANN
+  * dense channel + fusion, JPEG decoding and quarantine, and the
+  * triplet-mining coverage ledger. */
 class Round15AdditionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,32 +27,6 @@ class Round15AdditionsSpec extends SparkSpec {
 
   private def sf001Docs =
     graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-
-  // ---- index-backed PRF -------------------------------------------------
-
-  test("bm25PrfFromIndex == bm25Prf bit-for-bit (pure index consumer)") {
-    val qt = RetrievalOps.queryTerms(corpus, col("doc_id") < 3)
-    val inline = sortedRows(RetrievalOps.bm25Prf(corpus, col("doc_id") < 3))
-    val fromIdx = sortedRows(RetrievalOps.bm25PrfFromIndex(
-      RetrievalOps.bm25BuildIndex(corpus), qt))
-    assert(inline == fromIdx)
-  }
-
-  test("bm25PrfFromIndex parity survives the parquet round trip and a " +
-    "doc-disjoint incremental merge") {
-    val dir = java.nio.file.Files.createTempDirectory("prfidx").toString
-    try {
-      RetrievalOps.writeBm25Index(
-        RetrievalOps.bm25BuildIndex(corpus.filter(col("doc_id") % 3 =!= 1)),
-        dir)
-      val merged = RetrievalOps.bm25MergeIndex(
-        RetrievalOps.readBm25Index(spark, dir),
-        RetrievalOps.bm25BuildIndex(corpus.filter(col("doc_id") % 3 === 1)))
-      val qt = RetrievalOps.queryTerms(corpus, col("doc_id") < 3)
-      assert(sortedRows(RetrievalOps.bm25PrfFromIndex(merged, qt)) ==
-        sortedRows(RetrievalOps.bm25Prf(corpus, col("doc_id") < 3)))
-    } finally graft.ops.FixtureDirs.rmTree(java.nio.file.Paths.get(dir))
-  }
 
   // ---- co-addressed sampled recall --------------------------------------
 

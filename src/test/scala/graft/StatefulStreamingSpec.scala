@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{SessionEvent, StatefulSessionizer, StreamingOps}
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
@@ -45,49 +45,33 @@ class StatefulStreamingSpec extends SparkSpec {
         .map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq
       assert(rows == Seq((1000L, 2L), (60000L, 1L)))
     } finally query.stop()
-  }
 
-  test("stream-stream join matches rates within the join window only") {
-    implicit val sq = spark.sqlContext
-    val payments = MemoryStream[(String, Timestamp, Long)]
-    val rates = MemoryStream[(String, Timestamp, Double)]
-    val joined = StreamingOps.streamStreamJoin(
-      payments.toDF().toDF("currency", "p_ts", "amount"),
-      rates.toDF().toDF("r_currency", "r_ts", "rate")
-        .withColumnRenamed("r_currency", "currency"),
-      "currency", "p_ts", "r_ts", "10 seconds", "5 SECONDS")
-    val query = joined.writeStream.format("memory")
-      .queryName("ss_join").outputMode(OutputMode.Append()).start()
+    // A late event over several triggers: 1000 and 5000, then 3000, then
+    // 60000 ms. EventOps.sessionize's rule on the same events gives one
+    // session (1000, 5000, 3) and then (60000, 60000, 1); the session
+    // window reports [start, last + gap). Keys "w" (across triggers) and
+    // "x" (in one trigger) are the gap boundary: 1000 and 6000 are exactly
+    // one gap apart, and like the batch rule session_window keeps them in
+    // one session (it splits only on a gap > 5 s).
+    val late = MemoryStream[(Timestamp, String)]
+    val lateSessions = StreamingOps.sessionWindowCounts(
+      late.toDF().toDF("ts", "kind"), "ts", "kind", "5 seconds", "10 seconds")
+    val lateQuery = lateSessions.writeStream.format("memory")
+      .queryName("late_sess_counts").outputMode(OutputMode.Complete()).start()
     try {
-      rates.addData(("GBP", new Timestamp(1000), 1.0))
-      payments.addData(
-        ("GBP", new Timestamp(3000), 100L),   // rate 2s earlier: in window
-        ("GBP", new Timestamp(9000), 200L),   // rate 8s earlier: outside 5s window
-        ("USD", new Timestamp(3000), 300L))   // no rate for key
-      query.processAllAvailable()
-      val out = spark.table("ss_join").select("amount").as[Long].collect().toSeq
-      assert(out == Seq(100L))
-    } finally query.stop()
-  }
-
-  test("flatMapGroupsWithState sessionizer closes sessions across triggers") {
-    implicit val sq = spark.sqlContext
-    val input = MemoryStream[SessionEvent]
-    val closed = StatefulSessionizer.sessionize(spark, input.toDS(), gapMs = 5000)
-    val query = closed.writeStream.format("memory")
-      .queryName("closed_sessions").outputMode(OutputMode.Append()).start()
-    try {
-      input.addData(SessionEvent(1, 1000), SessionEvent(1, 2000), SessionEvent(2, 1000))
-      query.processAllAvailable()
-      assert(spark.table("closed_sessions").count() == 0) // both still open
-
-      // 20s later: closes user 1's first session (2 events), opens another
-      input.addData(SessionEvent(1, 20000))
-      query.processAllAvailable()
-      val out = spark.table("closed_sessions").as[ClosedRow].collect().toSeq
-      assert(out == Seq(ClosedRow(1, 1000, 2000, 2)))
-    } finally query.stop()
+      for (batch <- Seq(Seq(1000L -> "u", 5000L -> "u", 1000L -> "w",
+            1000L -> "x", 6000L -> "x"),
+          Seq(3000L -> "u", 6000L -> "w"), Seq(60000L -> "u"))) {
+        late.addData(batch.map { case (t, k) => (new Timestamp(t), k) })
+        lateQuery.processAllAvailable()
+      }
+      val gapMs = 5000L
+      val rows = spark.sql("SELECT kind, session_window.start, session_window.end, cnt " +
+          "FROM late_sess_counts ORDER BY 1, 2").collect()
+        .map(r => (r.getString(0), r.getTimestamp(1).getTime,
+          r.getTimestamp(2).getTime - gapMs, r.getLong(3))).toSeq
+      assert(rows == Seq(("u", 1000L, 5000L, 3L), ("u", 60000L, 60000L, 1L),
+        ("w", 1000L, 6000L, 2L), ("x", 1000L, 6000L, 2L)))
+    } finally lateQuery.stop()
   }
 }
-
-case class ClosedRow(user_id: Long, start_ms: Long, end_ms: Long, n_events: Long)

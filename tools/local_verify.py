@@ -19,9 +19,10 @@ Usage: python3 tools/local_verify.py [--skip-verify] [query ...]
 Named queries are the only ones graft.Verify dumps (passed to it as
 SPARK_GRAFT_VERIFY_ONLY) and compared; with no names, the full surface is
 dumped and compared. A named query that has a Spark dump but no oracle
-(the sketch queries) is reported SKIP, a name with neither is reported
-FAIL as unregistered, and the N/M green line counts only the names that
-have an oracle.
+(the sketch queries) is reported SKIP, and the N/M green line counts only
+the names that have an oracle. A name that is not registered stops
+graft.Verify at start, naming it; with --skip-verify it is reported FAIL
+as unregistered.
 """
 import glob, hashlib, json, math, os, subprocess, sys
 
