@@ -3,9 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ConditionalExpression, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, JsonToStructs, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
@@ -531,71 +530,68 @@ object HashedTfVecKernel {
   }
 }
 
-/** Native payments decode:
-  * `payment_json(value: string, fallback: struct<currency, amount, ts>)`.
+/** Native payments decode: `payment_json(value: string)`, equal to
+  * `from_json(value, <wire schema>)` on every input.
   *
-  * `fallback` is `from_json(value, <wire schema>)`; this expression
-  * returns exactly what it would. A record in the canonical wire form
+  * A record in the canonical wire form
   * `{"currency":"<c>","amount":<int>,"ts":<int>}` — `<c>` printable
   * ASCII without `"` or `\`, `<int>` either `0` or
   * `-?[1-9][0-9]{0,17}` (so it cannot overflow a long), no whitespace,
   * nothing after the `}` — is decoded by [[PaymentJsonKernel]] in one
-  * scan, with no tokenizer. Every other input, null included, is handed
-  * to `fallback`, which is evaluated only then. So malformed records,
-  * partial results (`"amount":1.5` gives a null amount and keeps the
-  * row), reordered, extra or duplicate fields, escapes, `-0`, 19+ digit
-  * numbers and non-ASCII keep `from_json`'s PERMISSIVE semantics by
-  * construction.
+  * scan, with no tokenizer. Every other non-null input goes to
+  * [[fallback]], which is evaluated only then; null gives null. So
+  * malformed records, partial results (`"amount":1.5` gives a null amount
+  * and keeps the row), reordered, extra or duplicate fields, escapes,
+  * `-0`, 19+ digit numbers and non-ASCII keep `from_json`'s PERMISSIVE
+  * semantics by construction.
   *
-  * A [[ConditionalExpression]] whose only always-evaluated input is
-  * `value`, so subexpression elimination never hoists the fallback parse
-  * out of its branch.
+  * The fallback is not a child. `from_json` (`JsonToStructs`) is a
+  * `CodegenFallback`, and whole-stage codegen refuses every operator whose
+  * expressions contain one: as a child it would keep the decode's
+  * `Generate` out of the scan's codegen stage for the sake of records
+  * that are almost never decoded by it. Held outside the tree, it is
+  * called on a miss, with `value`'s string, from both the interpreted
+  * and the generated path; and no optimizer rule can copy or hoist it.
   */
-case class PaymentJson(value: Expression, fallback: Expression)
-  extends Expression with ConditionalExpression {
-  override def children: Seq[Expression] = Seq(value, fallback)
-  override def dataType: DataType = fallback.dataType
+case class PaymentJson(value: Expression) extends UnaryExpression {
+  override def child: Expression = value
+  override def dataType: DataType = PaymentJsonKernel.wireType
   override def nullable: Boolean = true
   override def prettyName: String = "payment_json"
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (value.dataType == StringType && fallback.dataType == PaymentJsonKernel.wireType)
-      TypeCheckResult.TypeCheckSuccess
+    if (value.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"payment_json needs (string, ${PaymentJsonKernel.wireType.simpleString}), " +
-        s"got (${value.dataType.simpleString}, ${fallback.dataType.simpleString})")
+      s"payment_json needs a string, got ${value.dataType.simpleString}")
 
-  override def alwaysEvaluatedInputs: Seq[Expression] = value :: Nil
-  override def withNewAlwaysEvaluatedInputs(inputs: Seq[Expression]): PaymentJson =
-    copy(value = inputs.head)
-  override def branchGroups: Seq[Seq[Expression]] = Nil
+  /** `from_json(value, <wire schema>)` with the default (PERMISSIVE)
+    * options. Its time zone cannot change a result: the wire type has no
+    * temporal field. Built where it runs, once per deserialized copy. */
+  @transient lazy val fallback: JsonToStructs =
+    JsonToStructs(PaymentJsonKernel.wireType, Map.empty, value, Some("UTC"))
 
-  override def eval(input: InternalRow): Any = {
-    val s = value.eval(input)
-    val fast = if (s == null) null else PaymentJsonKernel.decode(s.asInstanceOf[UTF8String])
-    if (fast != null) fast else fallback.eval(input)
+  /** The fallback's decode of a record the kernel refused. */
+  def miss(s: UTF8String): InternalRow = fallback.nullSafeEval(s).asInstanceOf[InternalRow]
+
+  override protected def nullSafeEval(s: Any): Any = {
+    val u = s.asInstanceOf[UTF8String]
+    val fast = PaymentJsonKernel.decode(u)
+    if (fast != null) fast else miss(u)
   }
 
-  /** Typed static call into the kernel (see [[SimHash60]]); the
-    * fallback's code is emitted inside the miss branch only. */
+  /** Typed static call into the kernel (see [[SimHash60]]); a miss calls
+    * [[miss]] on this expression, held as a reference object. */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val v = value.genCode(ctx)
-    val f = fallback.genCode(ctx)
-    ev.copy(code = code"""
-      |${v.code}
-      |${CodeGenerator.javaType(dataType)} ${ev.value} =
-      |  ${v.isNull} ? null : graft.functions.PaymentJsonKernel.decode(${v.value});
-      |boolean ${ev.isNull} = false;
-      |if (${ev.value} == null) {
-      |  ${f.code}
-      |  ${ev.isNull} = ${f.isNull};
-      |  ${ev.value} = ${f.value};
-      |}
-      """.stripMargin)
+    val self = ctx.addReferenceObj("paymentJson", this)
+    nullSafeCodeGen(ctx, ev, s =>
+      s"""${ev.value} = graft.functions.PaymentJsonKernel.decode($s);
+         |if (${ev.value} == null) {
+         |  ${ev.value} = $self.miss($s);
+         |  ${ev.isNull} = ${ev.value} == null;
+         |}""".stripMargin)
   }
 
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): PaymentJson =
-    copy(value = c(0), fallback = c(1))
+  override protected def withNewChildInternal(c: Expression): PaymentJson = copy(value = c)
 }
 
 /** Static kernel for [[PaymentJson]]: the canonical-form parser. */
@@ -685,9 +681,8 @@ object native {
   def dotFoldLong(a: Column, b: Column): Column =
     ColumnBridge.column(DotFoldLong(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** [[PaymentJson]]: `fallback` must be `from_json(value, <wire schema>)`. */
-  def paymentJson(value: Column, fallback: Column): Column =
-    ColumnBridge.column(PaymentJson(ColumnBridge.expression(value), ColumnBridge.expression(fallback)))
+  def paymentJson(value: Column): Column =
+    ColumnBridge.column(PaymentJson(ColumnBridge.expression(value)))
 
   /** PQ encode against a frozen codebook `cb(s)(j) = subvector` (the
     * [[graft.ops.PqOps]] driver-side shape). Flattens to the kernel's

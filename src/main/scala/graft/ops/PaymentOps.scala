@@ -63,10 +63,12 @@ object PaymentOps {
     * and hands every other record to `from_json`. The decoded struct
     * feeds an `inline` generator, and Catalyst does not push a filter on
     * generator output below the `Generate`, so the `currency IS NOT NULL`
-    * filter cannot grow a second decode of its own. PERMISSIVE
-    * `from_json` turns null and malformed input into an all-null row,
-    * which that filter drops — the reference's print-and-drop, silently
-    * (drops = input rows − output rows).
+    * filter cannot grow a second decode of its own. The decode holds no
+    * interpreted-only expression, so the `Generate` runs in the scan's
+    * whole-stage codegen stage. PERMISSIVE `from_json` turns null and
+    * malformed input into an all-null row, which that filter drops — the
+    * reference's print-and-drop, silently (drops = input rows − output
+    * rows).
     */
   def jsonDecode(jsonDF: DataFrame): DataFrame =
     jsonDF
@@ -76,10 +78,10 @@ object PaymentOps {
   /** One record's decode, equal to `from_json(value, paymentSchema)` on
     * every input: [[graft.functions.PaymentJson]]'s fast path for the
     * canonical form `{"currency":"…","amount":<int>,"ts":<int>}`, with
-    * that very `from_json` as the lazily evaluated fallback for anything
-    * else (null, malformed, reordered, escaped, whitespace, …). */
-  def decodePayment(value: Column): Column =
-    native.paymentJson(value, from_json(value, paymentSchema))
+    * that very `from_json` called only for anything else (null,
+    * malformed, reordered, escaped, whitespace, …). The `from_json` is
+    * held by the kernel, not planned as an expression of its own. */
+  def decodePayment(value: Column): Column = native.paymentJson(value)
 
   /** The static rates dimension (CurrencyExchangeRepo.java:15-24's
     * HashMap), collected on the driver and turned into a codegen'd
@@ -115,12 +117,7 @@ object PaymentOps {
     * call; no join, no exchange, the fact side is never shuffled.
     */
   def convert(payments: DataFrame, rates: DataFrame): DataFrame =
-    convert(payments, rateLookup(rates))
-
-  /** [[convert]] with a prebuilt [[rateLookup]], for callers that apply
-    * one dimension to many frames (the streaming fan-out's batches). */
-  def convert(payments: DataFrame, rate: Column): DataFrame =
-    withRate(payments, rate)
+    withRate(payments, rateLookup(rates))
       .withColumn("converted", round(col("amount") * col("rate"), 0).cast("long"))
 
   /** F2 alternative — the reference's literal semantics: a per-record

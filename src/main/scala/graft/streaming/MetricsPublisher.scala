@@ -30,7 +30,7 @@ final class CollectingMetricsSink extends MetricsSink {
   def all: Seq[String] = { import scala.jdk.CollectionConverters._; buf.asScala.toSeq }
 }
 
-/** The deployment sink the reference actually ships (VERDICT r6 item 2):
+/** The deployment sink the reference actually ships:
   * a Kafka producer publishing topology DAGs to `__topology` and metric
   * records to `__topology__metrics` — the reference's two observability
   * topics (kstreams/App.java:64-65; PaymentsServiceApp.java:26-30 sets the

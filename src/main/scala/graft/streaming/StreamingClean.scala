@@ -65,7 +65,7 @@ object StreamingClean {
     * stream; the reference corpus is never rescanned per batch. The
     * `width` column rides WITH the histogram so the stream re-buckets
     * every batch on the same grid by construction — a caller cannot
-    * compare histograms with mismatched widths (review-2). NULL values
+    * compare histograms with mismatched widths. NULL values
     * form their own bucket: an all-NULL batch alarming against a
     * NULL-free reference is a real anomaly, not a false positive. */
   def referenceHistogram(reference: DataFrame, width: Double = 50.0): DataFrame =
@@ -77,7 +77,7 @@ object StreamingClean {
   /** The ONE bucket→probability normalization (count per bucket / total),
     * shared by both reference-histogram builders and the quantile gate's
     * per-batch side — the four call sites cannot diverge on the
-    * normalization (review-caught duplication). Input: one `bucket`
+    * normalization. Input: one `bucket`
     * column; output: (bucket, <pName>). */
   private def bucketProbabilities(bucketed: DataFrame, pName: String): DataFrame = {
     val counts = bucketed.groupBy("bucket").agg(count(lit(1)).as("n"))
@@ -88,7 +88,7 @@ object StreamingClean {
   }
 
   /** The ONE χ²-gate foreachBatch body shared by [[driftGateStream]] and
-    * [[driftGateQuantileStream]] (review-caught duplication): the batch
+    * [[driftGateQuantileStream]], so the two gates cannot diverge: the batch
     * histogram (from the grid-specific `batchHist`) and the frozen
     * reference meet by UNION + one bucket-keyed aggregate (no full-outer
     * join — Spark can't broadcast one), each bucket emits
@@ -120,21 +120,20 @@ object StreamingClean {
     * batch totals are batch-scoped, the reference a bucket-sized frozen
     * frame. The two sides meet by UNION + one bucket-keyed aggregate —
     * not a full-outer join, which Spark cannot broadcast (no full-outer
-    * BroadcastHashJoin, reviewer-caught): both inputs are bucket-sized
+    * BroadcastHashJoin): both inputs are bucket-sized
     * histograms, so the union shuffle is O(buckets) metadata. The bucket
     * width is read off the histogram itself (one frozen value, collected
     * once at stream start), and the contrib term is
     * [[graft.ops.StatsOps.chiSquareContrib]] — batch and streaming gates
     * share one grid and one formula by construction. An EMPTY batch (or
-    * a trigger tail with no rows) emits ZERO rows: no data is not drift
-    * (review-2). */
+    * a trigger tail with no rows) emits ZERO rows: no data is not drift. */
   def driftGateStream(spark: SparkSession, stream: DataFrame,
                       refHist: DataFrame)
                      (sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
     // headOption, not head: an EMPTY reference histogram (empty or
     // all-filtered reference corpus) is a caller error — fail fast with
     // a descriptive message instead of a bare NoSuchElementException
-    // surfacing from deep inside stream setup (ADVICE r7).
+    // surfacing from deep inside stream setup.
     val width = refHist.select("width").limit(1).collect().headOption
       .getOrElse(throw new IllegalArgumentException(
         "driftGateStream: reference histogram is empty — derive it from a " +
@@ -149,8 +148,8 @@ object StreamingClean {
   }
 
   /** EQUI-DEPTH reference histogram for [[driftGateQuantileStream]] —
-    * the quantile-grid twin of [[referenceHistogram]] (VERDICT r7 item
-    * 6): bucket boundaries are the exact quantiles of the reference
+    * the quantile-grid twin of [[referenceHistogram]]: bucket
+    * boundaries are the exact quantiles of the reference
     * corpus's integer cents ([[graft.ops.StatsOps.histExactBoundaries]]
     * — the SAME derivation [[graft.ops.StatsOps.quantileBins]] and
     * [[graft.ops.StatsOps.driftCheckQuantile]] use), so every bucket

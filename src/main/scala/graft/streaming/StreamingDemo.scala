@@ -63,7 +63,7 @@ object StreamingDemo {
     val winRows = spark.table("win_demo").count()
     println(s"[demo] windowed count rows=$winRows " +
       (if (winRows > 0) "PASS" else "FAIL"))
-    // Round-5: stateful streaming near-dup dedup over a replayed text
+    // Stateful streaming near-dup dedup over a replayed text
     // stream — every 3rd line is a verbatim repeat, so the band-bucket
     // state must flag it (DupMatch rows in the memory sink).
     val lines = (0 until 12).map(i =>

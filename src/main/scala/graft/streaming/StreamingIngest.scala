@@ -60,7 +60,7 @@ object StreamingIngest {
     }
   }
 
-  /** The full multimodal ingest LOOP (VERDICT r8 item 4) — the
+  /** The full multimodal ingest LOOP — the
     * index-APPENDING lifecycle twin of
     * [[StreamingDedup.incrementalIndexLoop]], closing the gap the
     * frozen-index [[manifestStream]] deliberately leaves open: per
@@ -76,8 +76,8 @@ object StreamingIngest {
     *
     * The batch manifest is persisted before its two consumers (sink +
     * append) — WITHOUT it the append side would re-run the binaryFile
-    * scan and re-digest every payload byte (the exact double-scan the
-    * batch ingest's review caught); manifest rows are digest+path
+    * scan and re-digest every payload byte, the double scan the batch
+    * ingest guards against too; manifest rows are digest+path
     * metadata, so the cache is file-count-sized. Novel digests are
     * `distinct()`-ed within the batch (two copies arriving together
     * append one index row). Idempotence on replay mirrors the dedup
@@ -115,8 +115,8 @@ object StreamingIngest {
     }
   }
 
-  /** STREAMING quarantine router for the real-codec ingest (round 14 —
-    * the streaming twin of `multimodal_prep`'s verdict stage): per
+  /** STREAMING quarantine router for the real-codec ingest (the
+    * streaming twin of `multimodal_prep`'s verdict stage): per
     * micro-batch, every arriving blob gets exactly ONE lenient decode
     * verdict row; 'ok' rows (exact stats, no reason) flow to the clean
     * sink, everything else routes to the quarantine sink WITH the
@@ -124,7 +124,7 @@ object StreamingIngest {
     * stream can tell one corrupt upload from a systemic decode fault
     * breaking every blob the same way. A file whose PATH does not
     * match `extPattern` (a misnamed or foreign upload) is not silently
-    * dropped (review-caught): it quarantines as an `unmatched` verdict
+    * dropped: it quarantines as an `unmatched` verdict
     * row (doc_id = -1, the orphan convention) carrying the file name
     * in its reason. Stateless by construction (per-blob verdicts need
     * no cross-batch state — the spec pins zero state operators); one

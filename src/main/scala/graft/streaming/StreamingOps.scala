@@ -171,13 +171,13 @@ object StreamingOps {
       .toDF("doc_id", "n_grams", "n_hit", "frac")
   }
 
-  /** B8k-surgical streaming — SURGICAL decontamination of a LIVE stream
-    * (VERDICT r11 item 2): every arriving document re-emitted with its
+  /** B8k-surgical streaming — SURGICAL decontamination of a LIVE stream:
+    * every arriving document re-emitted with its
     * benchmark-covered token spans removed, matching
     * [[graft.ops.DedupOps.decontaminateSurgical]] document-for-document
     * (clean docs verbatim, fully-contaminated docs become '', null text
-    * cleans to '' — the row-for-row contract). CALLER CONTRACT (ADVICE
-    * r12): feed TRAINING documents only — this operator redacts
+    * cleans to '' — the row-for-row contract). CALLER CONTRACT: feed
+    * TRAINING documents only — this operator redacts
     * everything it receives, so the batch parity claim holds for the
     * training stream, not for a stream that still carries benchmark
     * docs. The batch twin's `doc_id % 50` routing is the registered
@@ -261,38 +261,44 @@ object StreamingOps {
   /** F1-F4+K1/K2 — the payments pipeline as ONE foreachBatch fan-out
     * (SURVEY §4.4: the reference splits after decode+convert inside one
     * consumer loop, PaymentsService.java:50-59 — two independent queries
-    * would read the source twice). The rates dimension is collected once,
-    * when the query is built, into [[PaymentOps.rateLookup]]; no batch
-    * runs a join or a broadcast. Each batch is decoded (one decode per
-    * record: [[PaymentOps.jsonDecode]]'s native fast path with its exact
-    * `from_json` fallback), converted and encoded, and the encoded
-    * `(key, value, is_suspicious)` rows are pinned: computed once, by the
-    * first sink's job, into a batch-local RDD held at `MEMORY_AND_DISK`
-    * (one row array per partition), which both sinks scan as a DataFrame.
-    * The source is therefore read once per batch. The pin holds at most
-    * one trigger's encoded rows and is released (non-blocking) when the
-    * batch ends, whether or not a sink failed; it goes through no
-    * session-global cache and plans no cached query. The main sink gets
-    * `(key, value)` of every row, the suspicious sink `(key, value)` of
-    * the flagged ones. Sinks are injected so tests (and Kafka/parquet
-    * prod paths) share the exact fan-out logic. At-least-once per sink,
-    * matching the reference.
+    * would read the source twice).
+    *
+    * Decode, convert and encode are applied to the stream once, when the
+    * query is built: `jsonEncodeRouted(convert(jsonDecode(jsonStream),
+    * rates))`. Spark's incremental execution then plans that
+    * one query each trigger, and the decode's `Generate` runs in the
+    * scan's whole-stage codegen stage; no batch re-analyses or re-codegens
+    * a frame of its own. The rates dimension is collected once, at build
+    * time, into [[PaymentOps.rateLookup]]; no batch runs a join or a
+    * broadcast. Each record is decoded once ([[PaymentOps.jsonDecode]]'s
+    * native fast path with its exact `from_json` fallback).
+    *
+    * Each batch's rows, already encoded as `(key, value, is_suspicious)`,
+    * are pinned: computed once, by the first sink's job, into a
+    * batch-local RDD held at `MEMORY_AND_DISK` (one row array per
+    * partition), which both sinks scan as a DataFrame. The source is
+    * therefore read once per batch. The pin holds at most one trigger's
+    * encoded rows and is released (non-blocking) when the batch ends,
+    * whether or not a sink failed; it goes through no session-global cache
+    * and plans no cached query. The main sink gets `(key, value)` of every
+    * row, the suspicious sink `(key, value)` of the flagged ones. Sinks are
+    * injected so tests (and Kafka/parquet prod paths) share the exact
+    * fan-out logic. At-least-once per sink, matching the reference.
     */
   def paymentsFanout(jsonStream: DataFrame, rates: DataFrame,
                      mainSink: (DataFrame, Long) => Unit,
                      suspiciousSink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val rate = PaymentOps.rateLookup(rates)
-    jsonStream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val routed = PaymentOps.jsonEncodeRouted(
-        PaymentOps.convert(PaymentOps.jsonDecode(batch), rate))
+    val routed = PaymentOps.jsonEncodeRouted(
+      PaymentOps.convert(PaymentOps.jsonDecode(jsonStream), rates))
+    routed.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       // toRdd reuses its row buffers, so each row is copied into the pin;
       // a partition is stored as one array, which the block manager sizes
       // by sampling instead of estimating the size of every row object
-      val pin = routed.queryExecution.toRdd
+      val pin = batch.queryExecution.toRdd
         .mapPartitions(rows => Iterator.single(rows.map(_.copy()).toArray))
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val pinned = ColumnBridge.rowsFrame(batch.sparkSession, pin.flatMap(_.iterator), routed.schema)
+        val pinned = ColumnBridge.rowsFrame(batch.sparkSession, pin.flatMap(_.iterator), batch.schema)
         mainSink(pinned.select("key", "value"), batchId)
         suspiciousSink(pinned.filter(col("is_suspicious")).select("key", "value"), batchId)
       } finally pin.unpersist(blocking = false)

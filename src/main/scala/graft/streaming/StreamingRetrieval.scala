@@ -32,11 +32,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    staging directory, which becomes the `__next` generation in one
   *    filesystem rename. A replayed batch whose marker is already in
   *    the live generation is skipped entirely, so df is never
-  *    double-counted. (Review-caught in round 14: writing the parquet
-  *    directly to `__next` and adding the marker afterwards left a
-  *    window — `_SUCCESS` present, marker not yet — where a batch-0
-  *    crash let [[SnapshotSwap.recover]] promote a complete-but-
-  *    UNMARKED generation, and the replay re-merged the same delta.)
+  *    double-counted. (Writing the parquet directly to `__next` and
+  *    adding the marker afterwards would leave a window — `_SUCCESS`
+  *    present, marker not yet — where a batch-0 crash lets
+  *    [[SnapshotSwap.recover]] promote a complete-but-UNMARKED
+  *    generation, and the replay re-merges the same delta.)
   *
   * Crash windows, all idempotent: crash after the postings/doclens
   * slice writes but before the staging rename → replay overwrites the
@@ -123,8 +123,7 @@ object StreamingRetrieval {
     // lifecycle (df every batch; postings/doclens at compaction), so all
     // three need crash repair before a read — a compaction that died
     // mid-publish leaves postings/doclens retired-but-unswapped, and
-    // without recover every subsequent read fails until manual repair
-    // (round-14 review finding).
+    // without recover every subsequent read fails until manual repair.
     SnapshotSwap.recover(spark, s"$indexDir/df")
     SnapshotSwap.recover(spark, s"$indexDir/postings")
     SnapshotSwap.recover(spark, s"$indexDir/doclens")
@@ -134,8 +133,8 @@ object StreamingRetrieval {
       spark.read.parquet(s"$indexDir/df").select("word", "df"))
   }
 
-  /** STREAMING SERVING twin of the retrieval family (VERDICT r14 item
-    * 8): answer BM25 top-k per micro-batch of QUERY documents against
+  /** STREAMING SERVING twin of the retrieval family: answer BM25
+    * top-k per micro-batch of QUERY documents against
     * the FROZEN persisted index — the [[StreamingText]] lmScoreStream
     * pattern: ZERO streaming state (no watermark, no state store; each
     * batch is an independent scoring pass), so the serving path can

@@ -159,7 +159,7 @@ object StreamingSemantic {
       .select(col("vec_id"), col("embedding"))
   }
 
-  /** The persisted-ANN-index maintenance LOOP (VERDICT r11 item 5) — the
+  /** The persisted-ANN-index maintenance LOOP — the
     * embedding twin of [[StreamingDedup.incrementalIndexLoop]]: per
     * micro-batch, query the arriving vectors against the persisted
     * [[graft.ops.PqOps.annIndex]] spine (bucket-routed ADC against the

@@ -69,7 +69,7 @@ object StreamingText {
     * argmax window would be unbounded streaming state, but each doc_id
     * lives in exactly one micro-batch.
     *
-    * Every ingested doc_id reaches the sink (ADVICE r6): the batch
+    * Every ingested doc_id reaches the sink: the batch
     * classifier's inner join drops docs sharing no hashed dim with any
     * centroid (empty text, all-OOV tokens) — acceptable in batch where
     * the input set is queryable, but an ingest gate that silently

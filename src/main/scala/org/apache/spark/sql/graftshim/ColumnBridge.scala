@@ -39,7 +39,7 @@ object ColumnBridge {
     * (`listenerBus` is private[spark]) — the deterministic drain the
     * profiler's per-op shuffle-byte attribution needs; a fixed sleep can
     * under-wait on a loaded host and bleed one op's stage metrics into
-    * the next (review-caught).
+    * the next.
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()

@@ -7,12 +7,12 @@ import graft.streaming.StreamingOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.catalyst.plans.logical.Join
-import org.apache.spark.sql.execution.{DataSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{DataSourceScanExec, GenerateExec, InputAdapter, RDDScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import org.apache.spark.sql.execution.joins.BaseJoinExec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions.{col, when}
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -104,20 +104,42 @@ class StreamingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def joinsOrBroadcasts(p: SparkPlan): Seq[SparkPlan] =
     nodes(p).filter(n => n.isInstanceOf[BaseJoinExec] || n.isInstanceOf[BroadcastExchangeLike])
 
+  /** Checks one decode per record, `from_json` only as the kernel's
+    * fallback, and every `GenerateExec` inside a whole-stage codegen
+    * stage, on the physical plan `p`. */
+  private def assertDecodeStaged(p: SparkPlan): Unit = {
+    val all = nodes(p)
+    val exprs = all.flatMap(_.expressions)
+    assert(exprs.flatMap(_.collect { case k: PaymentJson => k }).size == 1, p.toString)
+    assert(exprs.forall(_.find(_.isInstanceOf[JsonToStructs]).isEmpty), p.toString)
+    // a stage's own operators: everything below it up to its InputAdapters
+    def own(n: SparkPlan): Seq[SparkPlan] = n match {
+      case _: InputAdapter => Nil
+      case n => n +: n.children.flatMap(own)
+    }
+    val staged = all.collect { case w: WholeStageCodegenExec => own(w.child) }.flatten
+    val gens = all.collect { case g: GenerateExec => g }
+    assert(gens.nonEmpty && gens.forall(g => staged.exists(_ eq g)), p.toString)
+  }
+
   test("payments plan shape: one JSON parse, no join or broadcast, one source read per batch") {
     // a Range source, so the optimizer cannot fold the parse into local data
     val json = spark.range(3).select(col("id").as("k"),
       when(col("id") === 0, """{"currency":"GBP","amount":999999,"ts":1}""")
         .when(col("id") === 1, "garbage").as("value"))
     val decoded = PaymentOps.jsonDecode(json)
+    // one decode per record, and its fallback is from_json(value, paymentSchema),
+    // held by the kernel rather than planned beside it
     val exprs = decoded.queryExecution.optimizedPlan.flatMap(_.expressions)
-    val parses = exprs.flatMap(_.collect { case j: JsonToStructs => j })
-    assert(parses.size == 1, decoded.queryExecution.optimizedPlan.toString)
-    // exactly one decode kernel, and the parse is its fallback
     val kernels = exprs.flatMap(_.collect { case k: PaymentJson => k })
     assert(kernels.size == 1, decoded.queryExecution.optimizedPlan.toString)
-    assert(kernels.head.fallback.collect { case j: JsonToStructs => j }.size == 1)
+    assert(exprs.forall(_.find(_.isInstanceOf[JsonToStructs]).isEmpty),
+      decoded.queryExecution.optimizedPlan.toString)
+    val fallback = kernels.head.fallback
+    assert(fallback.schema == PaymentOps.paymentSchema && fallback.options.isEmpty &&
+      fallback.child == kernels.head.value, fallback.toString)
     assert(decoded.select("k").as[Long].collect().toSeq == Seq(0L))
+    assertDecodeStaged(decoded.queryExecution.executedPlan)
 
     val conv = PaymentOps.convert(decoded, ExchangeRates.ratesDF(spark))
     assert(conv.collect().length == 1)
@@ -140,6 +162,10 @@ class StreamingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         input.addData((0 until n).map(i => (100L * b + i,
           s"""{"currency":"${ExchangeRates.currencies(i % 5)}","amount":${i * 400000},"ts":$i}""")))
         query.processAllAvailable()
+        // the trigger's incremental plan decodes, converts and encodes
+        val incremental = query.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+        assertDecodeStaged(incremental.executedPlan)
+        assert(joinsOrBroadcasts(incremental.executedPlan).isEmpty, incremental.executedPlan.toString)
       }
       val perBatch = query.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq
       assert(perBatch == added.map(_.toLong), s"numInputRows per batch: $perBatch")

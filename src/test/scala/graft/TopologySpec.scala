@@ -1,11 +1,14 @@
 package graft
 
+import graft.model.ExchangeRates
 import graft.ops.TextOps
 import graft.plans._
-import graft.streaming.{CollectingMetricsSink, TopologyMetricsListener, TopologyRegistrar}
+import graft.streaming.{CollectingMetricsSink, StreamingOps, TopologyMetricsListener, TopologyRegistrar}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
+import scala.jdk.CollectionConverters._
 
 /** B5/B6: topology builder semantics (kstreams/App.java:35-58), plan→
   * topology derivation, and the metrics listener cadence (O1/O2).
@@ -101,6 +104,37 @@ class TopologySpec extends SparkSpec {
       assert(topo.nonEmpty, s"no topology payload on query start:\n${sink.all.mkString("\n")}")
       // the extracted DAG reflects the word-count plan: an aggregate node
       assert(topo.head.contains("groupby"), topo.head)
+    } finally {
+      query.stop()
+      spark.streams.removeListener(listener)
+    }
+  }
+
+  test("O1 auto-registration: the payments fan-out publishes its decode/convert/route as a SELECT") {
+    implicit val sq = spark.sqlContext
+    val sink = new CollectingMetricsSink
+    val listener = new TopologyMetricsListener("payments", sink,
+      autoRegisterFrom = Some(spark))
+    spark.streams.addListener(listener)
+    val input = MemoryStream[(Long, String)]
+    val noop = (_: DataFrame, _: Long) => ()
+    val query = StreamingOps.paymentsFanout(input.toDF().toDF("k", "value"),
+      ExchangeRates.ratesDF(spark), noop, noop).queryName("payments_topo").start()
+    try {
+      input.addData((1L, """{"currency":"GBP","amount":999999,"ts":1}"""))
+      query.processAllAvailable()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!sink.all.exists(_.startsWith("""{"kind":"topology"""")) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      val topo = sink.all.filter(_.startsWith("""{"kind":"topology""""))
+      assert(topo.size == 1, s"one topology payload on query start:\n${sink.all.mkString("\n")}")
+      // PaymentsService's decode → convert → route, downstream of the source
+      val nodes = new com.fasterxml.jackson.databind.ObjectMapper().readTree(topo.head)
+        .get("payload").get("nodes").elements().asScala.toSeq
+      def names(t: String) = nodes.filter(_.get("type").asText == t).map(_.get("name").asText).toSet
+      val sources = names("TOPIC")
+      assert(sources.nonEmpty && nodes.exists(n => n.get("type").asText == "SELECT" &&
+        n.get("parents").elements().asScala.exists(p => sources(p.asText))), topo.head)
     } finally {
       query.stop()
       spark.streams.removeListener(listener)
