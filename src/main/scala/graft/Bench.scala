@@ -2,8 +2,8 @@ package graft
 
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * prints ONE JSON line. Failures are reported per query in an `errors`
-  * field (never silently folded into the total — VERDICT r1 item 10) and
-  * excluded from the timed total. A trivial warmup action absorbs
+  * field (never silently folded into the total) and excluded from the
+  * timed total. A trivial warmup action absorbs
   * session/codegen startup so the first query isn't charged ~10s of JVM
   * warmup.
   */
@@ -20,9 +20,9 @@ object Bench {
     GraftSession.queryFilter("SPARK_GRAFT_BENCH_ONLY", raw, SparkEntry.queries.keySet)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = GraftSession.sfDir
     // MEDIAN-OF-3 per query: the bench host is co-tenant contended (2-4×
-    // single-run variance observed across rounds; identical plans measured
+    // single-run variance observed across runs; identical plans measured
     // 1.7 s and 102 s) — one run measures the neighbors, the median of
     // three measures the engine. Each rep is a full cold run (cache
     // cleared between reps), so the median is a cold-query time, not a
@@ -49,15 +49,15 @@ object Bench {
     import Json.{quote => q}
 
     val timings = collection.mutable.LinkedHashMap.empty[String, Double]
-    // Per-query per-REP times (VERDICT r11 item 3): the min-of-N
-    // arbitration across runs was prose-only — every rep is now in the
-    // machine record, so the gate evidence is an artifact, not a claim.
+    // Per-query per-REP times: every rep is in the machine record, so a
+    // min-of-N arbitration across runs is recomputed from the record,
+    // not asserted in prose.
     val repTimes = collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // Per-query OUTPUT rows (VERDICT r4 item 7): regressions normalize by
-    // data touched instead of re-arbitrating co-tenant noise each round.
+    // Per-query OUTPUT rows: regressions normalize by data touched
+    // instead of re-arbitrating co-tenant noise on every run.
     val rowCounts = collection.mutable.LinkedHashMap.empty[String, Long]
     val errors = collection.mutable.LinkedHashMap.empty[String, String]
-    // Sorted order: stable attribution across rounds (Map iteration order
+    // Sorted order: stable attribution across runs (Map iteration order
     // shifts as entries are added, moving the noise-prone early slots).
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -76,14 +76,12 @@ object Bench {
         }
         timings(name) = ts.sorted.apply(reps / 2)
         repTimes(name) = ts.toSeq
-        // Incremental record (VERDICT r5 item 1): one JSON line per query as
-        // its median lands, so a timed-out/killed run still leaves parseable
-        // per-query timings in its output tail instead of losing the whole
-        // round's perf signal (the r5 driver bench died at rc=124 with only
-        // Spark startup noise in the tail). The final summary line below is
-        // unchanged — consumers that only read the last line still work.
-        // `reps_sec` carries every rep (VERDICT r11 item 3) so min-of-N
-        // arbitration is recomputable from any surviving line.
+        // Incremental record: one JSON line per query as its median lands,
+        // so a timed-out or killed run still leaves parseable per-query
+        // timings in its output tail instead of only Spark startup noise.
+        // The final summary line below is unchanged — consumers that only
+        // read the last line still work. `reps_sec` carries every rep so
+        // min-of-N arbitration is recomputable from any surviving line.
         println(s"""{"metric":"query","name":${q(name)},"sec":${timings(name)},"min":${ts.min},"reps_sec":${ts.mkString("[", ",", "]")},"rows":${rowCounts(name)}}""")
       } catch {
         case e: Throwable =>
@@ -99,16 +97,16 @@ object Bench {
     val es = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val total = timings.values.sum
     // surface_hash keys cross-run arbitration: runs are comparable ONLY
-    // when they timed the same query set (the r11 arbitration mixed a
-    // 194- and a 196-query surface and had to footnote it).
+    // when they timed the same query set, and a changed set changes the
+    // hash.
     val surfaceHash = graft.functions.Hashing.md5Hex(
       timings.keys.toSeq.sorted.mkString(","))
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","ts_ms":${System.currentTimeMillis()},"surface_hash":${q(surfaceHash)},"queries":$qs,"queries_reps":$rts,"rows":$rs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"reps":$reps,"sf":"$sfDir"}"""
     println(fullLine)
-    // Cross-run HISTORY (VERDICT r11 item 3): every FULL run appends its
-    // complete record to BENCH_RUNS.jsonl, so the min-of-N-runs
-    // arbitration that justifies the perf gate is machine-readable
-    // across the whole round (tools/bench_arbitrate.py renders it).
+    // Cross-run HISTORY: every FULL run appends its complete record to
+    // BENCH_RUNS.jsonl, so the min-of-N-runs arbitration that justifies
+    // a perf gate is machine-readable across runs
+    // (tools/bench_arbitrate.py renders it).
     // Append-only — a run never erases another run's evidence.
     if (only.isEmpty) try {
       java.nio.file.Files.writeString(
@@ -120,16 +118,15 @@ object Bench {
     } catch { case e: Throwable =>
       println(s"""{"metric":"artifact_error","error":${q(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}""")
     }
-    // COMMITTED ARTIFACT (VERDICT r7 item 1): the driver's stdout-tail
-    // parse has recorded `parsed: null` two rounds running (it reads only
-    // the final captured line, which ends up being sbt's `[success]`), so
-    // the complete summary record — same JSON object as the full stdout
+    // COMMITTED ARTIFACT: a stdout-tail parse reads only the final
+    // captured line, which a wrapper's footer (sbt's `[success]`, say)
+    // can displace, so the complete summary record — same JSON object as the full stdout
     // line above, including the whole per-query map — is ALSO written to
     // repo-root BENCH_SUMMARY.json on every run. Atomic tmp+rename so a
     // concurrent reader never sees a torn file; failures are non-fatal
     // (the bench numbers themselves must never be lost to an EROFS).
     // FULL runs only: a SPARK_GRAFT_BENCH_ONLY arbitration re-run must
-    // not clobber the round's full-surface record with a partial one.
+    // not clobber the full-surface record with a partial one.
     if (only.isEmpty) try {
       val dir = new java.io.File(sys.props.getOrElse("user.dir", "."))
       val tmp = new java.io.File(dir, ".BENCH_SUMMARY.json.tmp")
@@ -148,9 +145,8 @@ object Bench {
       println(s"""{"metric":"artifact_error","error":${q(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}""")
     }
     // FINAL line is COMPACT (<1500 chars) so a tail-window capture always
-    // ends with a parseable record (VERDICT r6 item 1: the 8 KB full summary
-    // above overflowed the driver's 2000-char tail and BENCH_r06 parsed as
-    // null despite rc=0). Same contract shape — metric/value/unit/queries/sf
+    // ends with a parseable record (the full summary above runs to ~8 KB,
+    // past a 2000-char tail window). Same contract shape — metric/value/unit/queries/sf
     // — but `queries` carries only the slowest 5; the full per-query map is
     // in the line above and in the incremental per-query lines.
     val slowest = timings.toSeq.sortBy(-_._2).take(5)

@@ -40,6 +40,10 @@ object GraftSession {
   /** `SPARK_GRAFT_CPUS`, parsed once on first use. */
   lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
 
+  /** `SPARK_GRAFT_SF_DIR`, the data directory the bench and profiler
+    * mains read (sf0.1 when unset), read once on first use. */
+  lazy val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   /** The core count from the raw setting: 4 when unset, else a positive
     * integer; anything else fails naming the variable. */
   def parseCpus(raw: Option[String]): Int = positiveInt("SPARK_GRAFT_CPUS", raw, 4)

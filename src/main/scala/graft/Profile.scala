@@ -34,7 +34,7 @@ object Profile {
     }
     if (!valid) { System.err.println(usage); sys.exit(2) }
 
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = GraftSession.sfDir
     val spark = GraftSession.local(GraftSession.cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()

@@ -144,6 +144,34 @@ object PqOps {
   def pqEncode(embeddings: DataFrame, m: Int = 4, k: Int = 16): DataFrame =
     pqEncodeWith(embeddings, trainCodebook(embeddings, m, k))
 
+  /** Query `q`'s m × k ADC lookup table: entry (s, j) is the strict
+    * left-fold inner product of q's subspace-s slice with codeword j. */
+  private def lookupTable(q: Seq[Double], cb: Array[Array[Seq[Double]]],
+                          subDim: Int): Seq[Seq[Double]] =
+    cb.indices.map { s =>
+      val qs = q.slice(s * subDim, (s + 1) * subDim)
+      cb(s).toSeq.map(cw => qs.zip(cw).map(p => p._1 * p._2).foldLeft(0.0)(_ + _)): Seq[Double]
+    }
+
+  /** The one ADC scorer of the code scans: each (query, candidate) pair
+    * of `pairs` scores Σ_s lut[s][code_s] (strict left fold from 0.0),
+    * and each query keeps its top k by (score DESC, vec_id ASC). Output:
+    * (q_id, vec_id, score, rank). */
+  private def adcRanks(pairs: DataFrame, m: Int, k: Int): DataFrame = {
+    val score = (0 until m).foldLeft(lit(0.0)) { (acc, s) =>
+      acc + element_at(element_at(col("lut"), s + 1), (col(s"code_$s") + 1).cast("int"))
+    }
+    Ranking.topK(pairs.withColumn("score", score), "q_id",
+        Seq(col("score").desc, col("vec_id").asc), k)
+      .select("q_id", "vec_id", "score", "rank")
+  }
+
+  /** The empty [[adcRanks]] frame: a search with no codebook or no
+    * queries ranks nothing. */
+  private def noRanks(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("q_id"), col("vec_id"),
+      lit(0.0).as("score"), lit(0L).as("rank")).limit(0)
+
   /** ADC top-k: approximate inner-product neighbors from CODES alone.
     * Each of the nQueries query vectors (collected — bounded, like the
     * IVF query set) is turned into an m × k lookup table of
@@ -163,29 +191,14 @@ object PqOps {
     val queries = corpus.filter(col("vec_id") < nQueries).orderBy("vec_id")
       .select(col("vec_id"), col("emb")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    if (cb(0).isEmpty || queries.isEmpty)
-      return corpus.select(col("vec_id").as("q_id"), col("vec_id"),
-        lit(0.0).as("score"), lit(0L).as("rank")).limit(0)
+    if (cb(0).isEmpty || queries.isEmpty) return noRanks(corpus)
     // nQueries × m × k doubles — the broadcast ADC tables.
-    val luts: Seq[(Long, Seq[Seq[Double]])] = queries.toSeq.map { case (qid, q) =>
-      (qid, (0 until m).map { s =>
-        val qs = q.slice(s * subDim, (s + 1) * subDim)
-        cb(s).toSeq.map(cw => qs.zip(cw).map(p => p._1 * p._2).foldLeft(0.0)(_ + _)): Seq[Double]
-      }: Seq[Seq[Double]])
-    }
-    val lutDf = luts.toDF("q_id", "lut")
-    val score = (0 until m).foldLeft(lit(0.0)) { (acc, s) =>
-      acc + element_at(element_at(col("lut"), s + 1), (col(s"code_$s") + 1).cast("int"))
-    }
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    encodeWide(corpus, cb, subDim)
+    val lutDf = queries.toSeq.map { case (qid, q) => (qid, lookupTable(q, cb, subDim)) }
+      .toDF("q_id", "lut")
+    adcRanks(encodeWide(corpus, cb, subDim)
       .select(col("vec_id") +: (0 until m).map(s => col(s"code_$s")): _*)
       .crossJoin(broadcast(lutDf))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("score", score)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
-      .select("q_id", "vec_id", "score", "rank")
+      .filter(col("vec_id") =!= col("q_id")), m, topK)
   }
 
   /** Lloyd refinement of the seed codebook — the production training
@@ -236,6 +249,35 @@ object PqOps {
     encodeWide(corpus, cb, subDim).select(avg(total)).head().getDouble(0)
   }
 
+  /** (vec_id, label, emb): the corpus of the cell-pruned code scans. */
+  private def withCellEmb(embeddings: DataFrame): DataFrame =
+    embeddings.withColumn("emb", col("embedding").cast("array<double>"))
+      .select(col("vec_id"), col("label"), col("emb"))
+
+  /** The ≤ nQueries query vectors (vec_id < nQueries) with their cells,
+    * collected — bounded, like every ANN query set here. */
+  private def cellQueries(corpus: DataFrame, nQueries: Int): Seq[(Long, Int, Seq[Double])] =
+    corpus.filter(col("vec_id") < nQueries).orderBy("vec_id")
+      .select(col("vec_id"), col("label"), col("emb")).collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
+
+  /** [[adcRanks]] over the cell-pruned candidates: each query's lookup
+    * table (from its `queries` vector) is broadcast and meets the codes
+    * of its own cell's other vectors. */
+  private def cellAdcRanks(corpus: DataFrame, cb: Array[Array[Seq[Double]]],
+                           subDim: Int, queries: Seq[(Long, Int, Seq[Double])],
+                           k: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val m = cb.length
+    val lutDf = queries.map { case (qid, qlbl, q) => (qid, qlbl, lookupTable(q, cb, subDim)) }
+      .toDF("q_id", "q_label", "lut")
+    adcRanks(encodeWide(corpus, cb, subDim)
+      .select(col("vec_id") +: col("label") +: (0 until m).map(s => col(s"code_$s")): _*)
+      .join(broadcast(lutDf),
+        col("label") === col("q_label") && col("vec_id") =!= col("q_id")), m, k)
+  }
+
   /** IVF-PQ: the composed 100 TB ANN layout — the corpus is
     * partitioned into cells (the `label` column, as in
     * [[SimilarityOps.ivfTopK]]), and within the query's cell the scan
@@ -247,37 +289,12 @@ object PqOps {
   def annIvfPq(embeddings: DataFrame, m: Int = 4, k: Int = 16,
                nQueries: Int = 10, topK: Int = 5): DataFrame = {
     requireGeometry(m, k)
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val corpus = embeddings.withColumn("emb", col("embedding").cast("array<double>"))
-      .select(col("vec_id"), col("label"), col("emb"))
+    val corpus = withCellEmb(embeddings)
     val subDim = 64 / m
     val cb = codebook(corpus, m, subDim, k)
-    val queries = corpus.filter(col("vec_id") < nQueries).orderBy("vec_id")
-      .select(col("vec_id"), col("label"), col("emb")).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
-    if (cb(0).isEmpty || queries.isEmpty)
-      return corpus.select(col("vec_id").as("q_id"), col("vec_id"),
-        lit(0.0).as("score"), lit(0L).as("rank")).limit(0)
-    val luts: Seq[(Long, Int, Seq[Seq[Double]])] = queries.toSeq.map { case (qid, qlbl, q) =>
-      (qid, qlbl, (0 until m).map { s =>
-        val qs = q.slice(s * subDim, (s + 1) * subDim)
-        cb(s).toSeq.map(cw => qs.zip(cw).map(p => p._1 * p._2).foldLeft(0.0)(_ + _)): Seq[Double]
-      }: Seq[Seq[Double]])
-    }
-    val lutDf = luts.toDF("q_id", "q_label", "lut")
-    val score = (0 until m).foldLeft(lit(0.0)) { (acc, s) =>
-      acc + element_at(element_at(col("lut"), s + 1), (col(s"code_$s") + 1).cast("int"))
-    }
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    encodeWide(corpus, cb, subDim)
-      .select(col("vec_id") +: col("label") +: (0 until m).map(s => col(s"code_$s")): _*)
-      .join(broadcast(lutDf),
-        col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
-      .withColumn("score", score)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
-      .select("q_id", "vec_id", "score", "rank")
+    val queries = cellQueries(corpus, nQueries)
+    if (cb(0).isEmpty || queries.isEmpty) return noRanks(corpus)
+    cellAdcRanks(corpus, cb, subDim, queries, topK)
   }
 
   /** Residual IVF-PQ — the textbook-faithful layout (Jégou et al. §IV):
@@ -296,10 +313,7 @@ object PqOps {
   def annIvfPqResidual(embeddings: DataFrame, m: Int = 4, k: Int = 16,
                        nQueries: Int = 10, topK: Int = 5): DataFrame = {
     requireGeometry(m, k)
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val base = embeddings.withColumn("emb", col("embedding").cast("array<double>"))
-      .select(col("vec_id"), col("label"), col("emb"))
+    val base = withCellEmb(embeddings)
     val subDim = 64 / m
     // anchors: |cells| rows — bounded metadata, same collect contract as
     // the probed-IVF anchors
@@ -313,38 +327,17 @@ object PqOps {
     val cb = codebook(corpus, m, subDim, k) // residual-space seed codebook
     val anchorMap = anchors.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    val queries = base.filter(col("vec_id") < nQueries).orderBy("vec_id")
-      .select(col("vec_id"), col("label"), col("emb")).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
-    if (cb(0).isEmpty || queries.isEmpty)
-      return base.select(col("vec_id").as("q_id"), col("vec_id"),
-        lit(0.0).as("score"), lit(0L).as("rank")).limit(0)
-    val luts: Seq[(Long, Int, Seq[Seq[Double]])] = queries.toSeq.map { case (qid, qlbl, q) =>
-      val qr = q.zip(anchorMap(qlbl)).map(p => p._1 - p._2)
-      (qid, qlbl, (0 until m).map { s =>
-        val qs = qr.slice(s * subDim, (s + 1) * subDim)
-        cb(s).toSeq.map(cw => qs.zip(cw).map(p => p._1 * p._2).foldLeft(0.0)(_ + _)): Seq[Double]
-      }: Seq[Seq[Double]])
-    }
-    val lutDf = luts.toDF("q_id", "q_label", "lut")
-    val score = (0 until m).foldLeft(lit(0.0)) { (acc, s) =>
-      acc + element_at(element_at(col("lut"), s + 1), (col(s"code_$s") + 1).cast("int"))
-    }
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    encodeWide(corpus, cb, subDim)
-      .select(col("vec_id") +: col("label") +: (0 until m).map(s => col(s"code_$s")): _*)
-      .join(broadcast(lutDf),
-        col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
-      .withColumn("score", score)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
-      .select("q_id", "vec_id", "score", "rank")
+    val queries = cellQueries(base, nQueries)
+    if (cb(0).isEmpty || queries.isEmpty) return noRanks(base)
+    cellAdcRanks(corpus, cb, subDim, queries.map { case (qid, qlbl, q) =>
+      (qid, qlbl, q.zip(anchorMap(qlbl)).map(p => p._1 - p._2))
+    }, topK)
   }
 
   // --------------------------------------------------------------------
-  // Persisted ANN index lifecycle (VERDICT r11 item 5): the embedding
-  // twin of the lexical signature-index family — [[annIndex]] is what a
-  // pipeline writes to parquet once per corpus slice (the
+  // Persisted ANN index lifecycle: the embedding twin of the lexical
+  // signature-index family — [[annIndex]] is what a pipeline writes to
+  // parquet once per corpus slice (the
   // [[DedupOps.signatureIndex]] analogue), [[annIndexIncremental]]
   // queries a DELTA of later-arriving vectors against it without ever
   // touching the indexed slice's raw vectors (the
@@ -411,9 +404,9 @@ object PqOps {
   }
 
   /** MULTI-PROBE [[annIndexIncremental]] — the recall lever for the
-    * persisted-index path (VERDICT r12 item 1's "if the number is low"
-    * branch — it is, see PLANS.md): each delta vector probes its own
-    * bucket PLUS every hamming-1 neighbor (the [[SimilarityOps
+    * persisted-index path, whose probe-1 recall is chance-level on the
+    * near-orthogonal corpus (see PLANS.md): each delta vector probes its
+    * own bucket PLUS every hamming-1 neighbor (the [[SimilarityOps
     * .lshTopKMultiProbe]] expansion), so the ADC candidate set grows
     * (nPlanes+1)× and a nearest index vector separated by ONE hyperplane
     * is no longer an automatic miss. Probe buckets are pairwise distinct
@@ -424,14 +417,23 @@ object PqOps {
     */
   def annIndexIncrementalMultiProbe(index: DataFrame, delta: DataFrame,
                                     cb: Array[Array[Seq[Double]]],
-                                    nPlanes: Int = 8): DataFrame = {
-    val probeArr = array((col("bucket") +: (0 until nPlanes)
-      .map(p => expr(s"bucket ^ ${1L << p}"))): _*)
-    val d = withEmb(delta)
+                                    nPlanes: Int = 8): DataFrame =
+    annIndexIncrementalProbed(index, delta, multiProbeRows(delta, nPlanes), cb)
+
+  /** The delta's hamming-1 multiprobe rows (q_id, emb, bucket): one per
+    * bucket of [[SimilarityOps.hammingProbes]] around its own. */
+  private def multiProbeRows(delta: DataFrame, nPlanes: Int): DataFrame =
+    withEmb(delta)
       .withColumn("bucket", SimilarityOps.bucketExpr(nPlanes))
       .select(col("vec_id").as("q_id"), col("emb"),
-        explode(probeArr).as("bucket"))
-    annIndexIncrementalProbed(index, delta, d, cb)
+        explode(SimilarityOps.hammingProbes(nPlanes)).as("bucket"))
+
+  /** Fail fast unless `index` is an [[annIndex]] and `cb` a codebook of
+    * the 64-dim geometry. */
+  private def requireIndex(index: DataFrame, cb: Array[Array[Seq[Double]]]): Unit = {
+    require(index.columns.sorted.sameElements(Array("bucket", "codes", "vec_id")),
+      s"index must be an annIndex (vec_id, bucket, codes); got ${index.columns.mkString(",")}")
+    requireGeometry(cb.length, math.max(cb(0).length, 1))
   }
 
   /** Shared core of the incremental path: join the delta's PROBE rows
@@ -442,9 +444,7 @@ object PqOps {
   private def annIndexIncrementalProbed(index: DataFrame, delta: DataFrame,
                                         probes: DataFrame,
                                         cb: Array[Array[Seq[Double]]]): DataFrame = {
-    require(index.columns.sorted.sameElements(Array("bucket", "codes", "vec_id")),
-      s"index must be an annIndex (vec_id, bucket, codes); got ${index.columns.mkString(",")}")
-    requireGeometry(cb.length, math.max(cb(0).length, 1))
+    requireIndex(index, cb)
     val m = cb.length
     val subDim = 64 / m
     val idx = index.select(col("vec_id").as("nn_id"), col("bucket"), col("codes"))
@@ -452,8 +452,8 @@ object PqOps {
     // min(struct(adc_dist, nn_id)) ≡ the (adc_dist ASC, nn_id ASC)
     // row_number pick, but with map-side partial aggregation: the
     // exchange after the bucket join carries one partial min per
-    // (q_id, partition) instead of every scored candidate (round 14 —
-    // the same shuffle-volume fix as the recall truth side)
+    // (q_id, partition) instead of every scored candidate (the same
+    // shuffle-volume bound as the recall truth side)
     val best = probes.join(idx, Seq("bucket"))
       .withColumn("adc_dist", dist)
       .groupBy("q_id")
@@ -488,8 +488,7 @@ object PqOps {
     * (adc_dist ASC, nn_id ASC) tiebreak — exactly the ranked-frame
     * shape [[graft.ops.RetrievalOps.rrfFuse]]'s dense slot takes, so
     * the hybrid-retrieval fusion can run over the production
-    * persisted-index ANN channel (VERDICT r14 item 5), not just the
-    * brute-force baseline. Probing is hamming-1 multiprobe (the recall
+    * persisted-index ANN channel, not just the brute-force baseline. Probing is hamming-1 multiprobe (the recall
     * recipe the knob sheet ships); probe buckets are pairwise distinct
     * and an index row has exactly one bucket, so no (q, nn) pair is
     * scored twice. `excludeSelf` drops the query's own index row when
@@ -506,26 +505,14 @@ object PqOps {
   def annIndexTopK(index: DataFrame, delta: DataFrame,
                    cb: Array[Array[Seq[Double]]], nPlanes: Int = 8,
                    k: Int = 5, excludeSelf: Boolean = true): DataFrame = {
-    require(index.columns.sorted.sameElements(Array("bucket", "codes", "vec_id")),
-      s"index must be an annIndex (vec_id, bucket, codes); got ${index.columns.mkString(",")}")
-    requireGeometry(cb.length, math.max(cb(0).length, 1))
+    requireIndex(index, cb)
     val m = cb.length
-    val subDim = 64 / m
-    val probeArr = array((col("bucket") +: (0 until nPlanes)
-      .map(p => expr(s"bucket ^ ${1L << p}"))): _*)
-    val probes = withEmb(delta)
-      .withColumn("bucket", SimilarityOps.bucketExpr(nPlanes))
-      .select(col("vec_id").as("q_id"), col("emb"),
-        explode(probeArr).as("bucket"))
     val idx = index.select(col("vec_id").as("nn_id"), col("bucket"),
       col("codes"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("adc_dist").asc, col("nn_id").asc)
-    probes.join(idx, Seq("bucket"))
-      .filter(if (excludeSelf) col("nn_id") =!= col("q_id") else lit(true))
-      .withColumn("adc_dist", adcDistExpr(cb, m, subDim))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranking.topK(multiProbeRows(delta, nPlanes).join(idx, Seq("bucket"))
+        .filter(if (excludeSelf) col("nn_id") =!= col("q_id") else lit(true))
+        .withColumn("adc_dist", adcDistExpr(cb, m, 64 / m)),
+        "q_id", Seq(col("adc_dist").asc, col("nn_id").asc), k)
       .select("q_id", "nn_id", "adc_dist", "rank")
   }
 

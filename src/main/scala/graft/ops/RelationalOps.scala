@@ -55,13 +55,10 @@ object RelationalOps {
         sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total_price"))
 
   /** Top-3 orders by price per priority class (partitioned window top-k). */
-  def topOrdersPerPriority(orders: DataFrame, k: Int = 3): DataFrame = {
-    val w = Window.partitionBy("o_orderpriority")
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    orders.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+  def topOrdersPerPriority(orders: DataFrame, k: Int = 3): DataFrame =
+    Ranking.topK(orders, "o_orderpriority",
+        Seq(col("o_totalprice").desc, col("o_orderkey").asc), k)
       .select("o_orderpriority", "o_orderkey", "o_totalprice", "rank")
-  }
 
   /** TPC-H Q5-flavored: revenue by nation for one region, customer and
     * supplier co-national. Three fact⋈fact shuffles (custkey, orderkey,
@@ -112,10 +109,7 @@ object RelationalOps {
       .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
         (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
         .cast("double").as("revenue"))
-    val w = Window.partitionBy("n_name")
-      .orderBy(col("revenue").desc, col("c_custkey").asc)
-    revenue.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranking.topK(revenue, "n_name", Seq(col("revenue").desc, col("c_custkey").asc), k)
       .select("n_name", "c_custkey", "revenue", "rank")
   }
 
@@ -513,7 +507,7 @@ object RelationalOps {
       .agg(sum(revD).cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
 
-  // ---- Catalyst decorrelation shapes (round 5) --------------------------
+  // ---- Catalyst decorrelation shapes -------------------------------------
   // The synthetic schema lacks partsupp/l_shipmode/l_commitdate, so these
   // carry the TPC-H Q21/Q2/Q11/Q12/Q20 *plan shapes* — the decorrelation
   // families a real analytics user hits weekly — re-expressed over the

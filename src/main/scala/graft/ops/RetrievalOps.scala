@@ -296,9 +296,7 @@ object RetrievalOps {
     val contrib = idf *
       ((col("tf").cast("double") * lit(2.2)) /
         (col("tf").cast("double") + (lit(1.2) * norm)))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    tf.join(broadcast(dfT), "word")
+    val scored = tf.join(broadcast(dfT), "word")
       .join(broadcast(qterms), "word")
       .filter(col("doc_id") =!= col("q_id"))
       .crossJoin(broadcast(nAvg))
@@ -308,8 +306,7 @@ object RetrievalOps {
         expr("""aggregate(transform(array_sort(collect_list(struct(word, c))),
                |  x -> x.c), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)""".stripMargin)
           .as("score"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranking.topK(scored, "q_id", Seq(col("score").desc, col("doc_id").asc), k)
       .select("q_id", "doc_id", "n_terms", "score", "rank")
   }
 
@@ -343,45 +340,54 @@ object RetrievalOps {
           .as("v"))
       .filter(col("v").isNotNull)
 
+  /** Squared norm of the integer vector column `v`: an exact integer
+    * fold through the native codegen'd kernel. The queries × corpus loop
+    * is the dense channel's hot path, and a higher-order-function fold
+    * would interpret lambdas and build an array per candidate pair. */
+  private def n2(v: String): Column =
+    graft.functions.native.dotFoldLong(col(v), col(v))
+
+  /** The dense query side: the [[denseVectors]] of the rows matching
+    * `isQuery` as (q_id, qv, n2q), then `extra`. */
+  private def denseQueries(corpus: DataFrame, isQuery: Column, dims: Int,
+                           extra: Column*): DataFrame =
+    denseVectors(corpus.filter(isQuery), dims)
+      .select(Seq(col("doc_id").as("q_id"), col("v").as("qv"),
+        n2("v").as("n2q")) ++ extra: _*)
+
+  /** The one scorer of the dense channels: each (query, document) pair
+    * of `pairs` that shares a hashed dimension (integer dot > 0 — the
+    * candidate set a sparse-entry equi-join on dim would produce, which
+    * is what the DuckDB twins express) scores cos = dot / (√n2q · √n2d),
+    * one division over two sqrt's of exact integer sums, and each query
+    * keeps its top k by (cos DESC, doc_id ASC). Output:
+    * (q_id, doc_id, cos, rank). */
+  private def denseCosineRanks(pairs: DataFrame, k: Int): DataFrame =
+    Ranking.topK(pairs
+        .withColumn("dot",
+          graft.functions.native.dotFoldLong(col("v"), col("qv")))
+        .filter(col("dot") > 0L)
+        .withColumn("cos", col("dot").cast("double") /
+          (sqrt(col("n2q").cast("double")) * sqrt(col("n2d").cast("double")))),
+        "q_id", Seq(col("cos").desc, col("doc_id").asc), k)
+      .select("q_id", "doc_id", "cos", "rank")
+
   /** Dense ranked channel: cosine top-k over the model-free
     * [[SemanticOps.hashedTf]] document vectors (feature hashing to
     * `dims` buckets). Plan shape: ONE corpus aggregation to per-doc
     * integer vectors ([[denseVectors]]), query vectors built from the
     * query slice alone and BROADCAST, dots and norms computed MAP-SIDE
     * as exact integer folds (tf is integral, so Σ a·b commutes — no
-    * float-order hazard), cosine one division over two sqrt's, top-k a
-    * per-query window (WindowGroupLimit brackets the q_id exchange).
-    * Pairs sharing no hashed dimension have dot = 0 and are dropped —
-    * exactly the candidate set a sparse-entry equi-join on dim would
-    * produce, which is what the DuckDB twin expresses. Output:
-    * (q_id, doc_id, cos, rank).
+    * float-order hazard), top-k a per-query window (WindowGroupLimit
+    * brackets the q_id exchange). Every other document is a candidate;
+    * [[denseCosineRanks]] scores them. Output: (q_id, doc_id, cos, rank).
     */
   def denseRanks(corpus: DataFrame, isQuery: Column, k: Int = 5,
-                 dims: Int = 64): DataFrame = {
-    // dots/norms through the native codegen'd integer fold: the
-    // queries × corpus loop is the channel's hot path, and a
-    // higher-order-function fold would interpret lambdas and build an
-    // array per candidate pair. Exact integer sums.
-    def n2(v: String) =
-      graft.functions.native.dotFoldLong(col(v), col(v))
-    val qvecs = denseVectors(corpus.filter(isQuery), dims)
-      .select(col("doc_id").as("q_id"), col("v").as("qv"),
-        n2("v").as("n2q"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cos").desc, col("doc_id").asc)
-    denseVectors(corpus, dims)
+                 dims: Int = 64): DataFrame =
+    denseCosineRanks(denseVectors(corpus, dims)
       .withColumn("n2d", n2("v"))
-      .crossJoin(broadcast(qvecs))
-      .filter(col("doc_id") =!= col("q_id"))
-      .withColumn("dot",
-        graft.functions.native.dotFoldLong(col("v"), col("qv")))
-      .filter(col("dot") > 0L)
-      .withColumn("cos", col("dot").cast("double") /
-        (sqrt(col("n2q").cast("double")) * sqrt(col("n2d").cast("double"))))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "doc_id", "cos", "rank")
-  }
+      .crossJoin(broadcast(denseQueries(corpus, isQuery, dims)))
+      .filter(col("doc_id") =!= col("q_id")), k)
 
   /** ±1 hyperplane coefficients for the bucket-routed dense channel:
     * parity of the house 60-bit hash (the JL-projection idiom,
@@ -408,33 +414,18 @@ object RetrievalOps {
     */
   def denseRanksLsh(corpus: DataFrame, isQuery: Column, k: Int = 5,
                     dims: Int = 64, planes: Int = 8): DataFrame = {
-    // native integer folds for norms, plane dots and pair dots, as in
-    // [[denseRanks]]; plane coefficients are array<long> literals.
-    def n2(v: String) =
-      graft.functions.native.dotFoldLong(col(v), col(v))
+    // plane coefficients are array<long> literals, so plane dots are
+    // native integer folds too
     val bucketCol = denseLshCoefs(planes, dims).zipWithIndex.map {
       case (cs, p) =>
         when(graft.functions.native.dotFoldLong(col("v"), typedlit(cs)) > 0L,
           lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
-    val qvecs = denseVectors(corpus.filter(isQuery), dims)
-      .withColumn("n2q", n2("v")).withColumn("q_bucket", bucketCol)
-      .select(col("doc_id").as("q_id"), col("v").as("qv"), col("n2q"),
-        col("q_bucket"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("cos").desc, col("doc_id").asc)
-    denseVectors(corpus, dims)
+    val qvecs = denseQueries(corpus, isQuery, dims, bucketCol.as("q_bucket"))
+    denseCosineRanks(denseVectors(corpus, dims)
       .withColumn("n2d", n2("v")).withColumn("bucket", bucketCol)
       .join(broadcast(qvecs), col("bucket") === col("q_bucket") &&
-        col("doc_id") =!= col("q_id"))
-      .withColumn("dot",
-        graft.functions.native.dotFoldLong(col("v"), col("qv")))
-      .filter(col("dot") > 0L)
-      .withColumn("cos", col("dot").cast("double") /
-        (sqrt(col("n2q").cast("double")) * sqrt(col("n2d").cast("double"))))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "doc_id", "cos", "rank")
+        col("doc_id") =!= col("q_id")), k)
   }
 
   /** Hybrid retrieval on the SCALE PATH: BM25 fused with the
@@ -454,9 +445,9 @@ object RetrievalOps {
     denseVectors(corpus, dims).select(col("doc_id").as("vec_id"),
       expr("transform(v, x -> CAST(x AS DOUBLE))").as("embedding"))
 
-  /** The dense channel the 100 TB deployment actually runs (VERDICT
-    * r14 item 5): a per-query TOP-K over a [[PqOps.annIndex]] of the
-    * document vectors — frozen seed codebook, hyperplane routing with
+  /** The dense channel the 100 TB deployment actually runs: a
+    * per-query TOP-K over a [[PqOps.annIndex]] of the document
+    * vectors — frozen seed codebook, hyperplane routing with
     * hamming-1 multiprobe, ADC scoring from the stored codes alone
     * ([[PqOps.annIndexTopK]]). Compared to [[denseRanksLsh]] (which
     * re-reads raw vectors per query batch), the index side here moves
@@ -515,14 +506,11 @@ object RetrievalOps {
               c: Double = 60.0): DataFrame = {
     val s = sparse.select(col("q_id"), col("doc_id"), col("rank").as("s_rank"))
     val d = dense.select(col("q_id"), col("doc_id"), col("rank").as("d_rank"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("rrf").desc, col("doc_id").asc)
-    s.join(d, Seq("q_id", "doc_id"), "full")
+    val fused = s.join(d, Seq("q_id", "doc_id"), "full")
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(c) + col("s_rank").cast("double")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(c) + col("d_rank").cast("double")), lit(0.0)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranking.topK(fused, "q_id", Seq(col("rrf").desc, col("doc_id").asc), k)
       .select(col("q_id"), col("doc_id"),
         coalesce(col("s_rank"), lit(-1L)).as("sparse_rank"),
         coalesce(col("d_rank"), lit(-1L)).as("dense_rank"),
@@ -566,10 +554,10 @@ object RetrievalOps {
     * estimate is exact recall of the sampled harness, and it BRACKETS
     * the exhaustive number from above in expectation: surviving
     * queries keep their truth by construction while the distractor
-    * mass shrinks, so per-query retrieval only gets easier (the
-    * Round15 spec pins sampled ≥ exhaustive per channel on the driver
-    * corpus). `sample_buckets` (of 256) is the cost-vs-fidelity knob,
-    * carried in the output like [[DedupOps.dedupRecallSampled]].
+    * mass shrinks, so per-query retrieval only gets easier (a spec pins
+    * sampled ≥ exhaustive per channel on the test corpus).
+    * `sample_buckets` (of 256) is the cost-vs-fidelity knob, carried in
+    * the output like [[DedupOps.dedupRecallSampled]].
     */
   def retrievalRecallSampled(documents: DataFrame, kChannel: Int = 10,
                              k: Int = 5, sampleBuckets: Int = 128,

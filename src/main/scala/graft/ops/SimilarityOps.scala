@@ -37,52 +37,54 @@ object SimilarityOps {
       .withColumn("emb", col("embedding").cast("array<double>"))
       .withColumn("norm", sqrt(dot("emb", "emb")))
 
+  /** The corpus side of the cosine searches: (vec_id, emb, norm). */
+  private def vectors(embeddings: DataFrame): DataFrame =
+    withNorm(embeddings).select(col("vec_id"), col("emb"), col("norm"))
+
+  /** The query side of the cosine searches: the `corpus` rows with
+    * vec_id < nQueries as (q_id, q_emb, q_norm), then `extra`. */
+  private def querySide(corpus: DataFrame, nQueries: Int, extra: Column*): DataFrame =
+    corpus.filter(col("vec_id") < nQueries)
+      .select(Seq(col("vec_id").as("q_id"), col("emb").as("q_emb"),
+        col("norm").as("q_norm")) ++ extra: _*)
+
+  /** The one scorer of the cosine searches: each (query, candidate) pair
+    * of `pairs` scores exact cosine `dot(emb, q_emb) / (norm · q_norm)`,
+    * and each query keeps its top k by (score DESC, vec_id ASC). Output:
+    * (q_id, vec_id, score, rank). */
+  private def cosineRanks(pairs: DataFrame, k: Int): DataFrame =
+    Ranking.topK(
+        pairs.withColumn("score", dot("emb", "q_emb") / (col("norm") * col("q_norm"))),
+        "q_id", Seq(col("score").desc, col("vec_id").asc), k)
+      .select("q_id", "vec_id", "score", "rank")
+
+  /** [[cosineRanks]] over the corpus rows that meet the BROADCAST query
+    * side on `candidate`: the corpus never shuffles for scoring. */
+  private def cosineScan(corpus: DataFrame, queries: DataFrame, candidate: Column,
+                         k: Int): DataFrame =
+    cosineRanks(corpus.join(broadcast(queries), candidate), k)
+
   /** B9 — brute-force cosine top-k: queries = vec_id < nQueries, scored
-    * against the whole corpus (self excluded). Query side broadcast; top-k
-    * via per-query window.
+    * against the whole corpus (self excluded).
     */
   def cosineTopK(embeddings: DataFrame, nQueries: Int = 10, k: Int = 10): DataFrame = {
-    val corpus = withNorm(embeddings).select(col("vec_id"), col("emb"), col("norm"))
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("norm").as("q_norm"))
-    val scored = corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("score", dot("emb", "q_emb") / (col("norm") * col("q_norm")))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "score", "rank")
+    val corpus = vectors(embeddings)
+    cosineScan(corpus, querySide(corpus, nQueries), col("vec_id") =!= col("q_id"), k)
   }
 
   /** B9 — IVF-style ANN: prune the corpus to the query's coarse cell
-    * (`label` = nearest-centroid assignment) before scoring. Same scoring
-    * and window machinery; the join key carries the partition pruning.
+    * (`label` = nearest-centroid assignment) before scoring; the join key
+    * carries the partition pruning.
     */
   def ivfTopK(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val corpus = withNorm(embeddings).select(col("vec_id"), col("label"), col("emb"), col("norm"))
     val queries = corpus.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("emb").as("q_emb"), col("norm").as("q_norm"))
-    val scored = corpus.join(broadcast(queries),
-        col("label") === col("q_label") && col("vec_id") =!= col("q_id"))
-      .withColumn("score", dot("emb", "q_emb") / (col("norm") * col("q_norm")))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "score", "rank")
+    cosineScan(corpus, queries,
+      col("label") === col("q_label") && col("vec_id") =!= col("q_id"), k)
   }
 
-  /** B9 — IVF with nprobe > 1: score each query against every cell's
-    * ANCHOR (the cell's min-vec_id member — deterministic, unlike a mean
-    * centroid whose float-summation order could never hash-match an
-    * oracle), probe the nProbe best cells, then scan only those cells.
-    * The standard recall knob of IVF: probing 2 cells roughly halves the
-    * missed-neighbor rate at 2× candidate cost.
-    *
-    * Scale shape: anchors are |cells| rows (broadcast); the query×cell
-    * ranking is bounded by nQueries × |cells| — metadata-sized, never
-    * data-sized — and the corpus is touched only via the probed-cell
-    * equi-join on `label`.
-    */
   /** The cell ANCHOR convention shared by the probed-IVF search and the
     * ingest composite: each cell's min-vec_id member (deterministic,
     * unlike a mean centroid whose float-summation order could never
@@ -97,25 +99,28 @@ object SimilarityOps {
         col("norm").as("a_norm"))
   }
 
+  /** B9 — IVF with nprobe > 1: score each query against every cell's
+    * ANCHOR ([[cellAnchors]]), probe the nProbe best cells, then scan
+    * only those cells. The standard recall knob of IVF: probing 2 cells
+    * roughly halves the missed-neighbor rate at 2× candidate cost.
+    *
+    * Scale shape: anchors are |cells| rows (broadcast); the query×cell
+    * ranking is bounded by nQueries × |cells| — metadata-sized, never
+    * data-sized — and the corpus is touched only via the probed-cell
+    * equi-join on `label`.
+    */
   def ivfTopKProbed(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
                     nProbe: Int = 2): DataFrame = {
     val corpus = withNorm(embeddings).select(col("vec_id"), col("label"), col("emb"), col("norm"))
     val anchors = cellAnchors(corpus)
-    val queries = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("norm").as("q_norm"))
     val wq = Window.partitionBy("q_id").orderBy(col("a_score").desc, col("a_label").asc)
-    val probed = queries.crossJoin(broadcast(anchors))
+    val probed = querySide(corpus, nQueries).crossJoin(broadcast(anchors))
       .withColumn("a_score", dot("q_emb", "a_emb") / (col("q_norm") * col("a_norm")))
       .withColumn("cell_rank", row_number().over(wq))
       .filter(col("cell_rank") <= nProbe)
       .select(col("q_id"), col("q_emb"), col("q_norm"), col("a_label").as("p_label"))
-    val scored = corpus.join(broadcast(probed),
-        col("label") === col("p_label") && col("vec_id") =!= col("q_id"))
-      .withColumn("score", dot("emb", "q_emb") / (col("norm") * col("q_norm")))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "score", "rank")
+    cosineScan(corpus, probed,
+      col("label") === col("p_label") && col("vec_id") =!= col("q_id"), k)
   }
 
   /** Deterministic random-hyperplane coefficients for LSH bucketing:
@@ -132,12 +137,6 @@ object SimilarityOps {
       graft.functions.Hashing.hash64Jvm(key).toDouble / math.pow(2, 59) - 1.0
     })
 
-  /** B9 scale path — random-hyperplane LSH ANN: bucket = sign bits of the
-    * plane dot products; candidates share the query's bucket (probe-1).
-    * 2^nPlanes buckets; at 100 TB add multi-probe (flip one bit) and/or
-    * more tables by unioning buckets. Bucketing is one map-side pass;
-    * only (bucket, vec) pairs meet in the join.
-    */
   /** Sign-bit bucket id from the [[lshPlanes]] hyperplanes (expects an
     * `emb` column; one map-side pass, codegen'd DotFold per plane).
     */
@@ -148,22 +147,24 @@ object SimilarityOps {
           lit(1L << p)).otherwise(lit(0L)) }
       .reduce(_ + _)
 
+  /** The buckets at hamming distance ≤ 1 from a `bucket` column: the
+    * bucket itself, then each of its nPlanes bits flipped. Pairwise
+    * distinct, so probing them yields no duplicate candidates. */
+  private[graft] def hammingProbes(nPlanes: Int): Column =
+    array((col("bucket") +: (0 until nPlanes)
+      .map(p => expr(s"bucket ^ ${1L << p}"))): _*)
+
+  /** B9 scale path — random-hyperplane LSH ANN: bucket = sign bits of the
+    * plane dot products; candidates share the query's bucket (probe-1).
+    * 2^nPlanes buckets; at 100 TB add multi-probe (flip one bit) and/or
+    * more tables by unioning buckets. Bucketing is one map-side pass;
+    * only (bucket, vec) pairs meet in the join.
+    */
   def lshTopK(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
               nPlanes: Int = 8): DataFrame = {
-    val bucket = bucketExpr(nPlanes)
-    val c = withNorm(embeddings)
-      .select(col("vec_id"), col("emb"), col("norm"))
-      .withColumn("bucket", bucket)
-    val queries = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm").as("q_norm"), col("bucket").as("q_bucket"))
-    val scored = c.join(broadcast(queries),
-        col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"))
-      .withColumn("score", dot("emb", "q_emb") / (col("norm") * col("q_norm")))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "score", "rank")
+    val c = vectors(embeddings).withColumn("bucket", bucketExpr(nPlanes))
+    cosineScan(c, querySide(c, nQueries, col("bucket").as("q_bucket")),
+      col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"), k)
   }
 
   /** B9 — multi-probe LSH: also probe the buckets at hamming distance 1
@@ -174,22 +175,9 @@ object SimilarityOps {
     */
   def lshTopKMultiProbe(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
                         nPlanes: Int = 8): DataFrame = {
-    val bucket = bucketExpr(nPlanes)
-    val c = withNorm(embeddings)
-      .select(col("vec_id"), col("emb"), col("norm"))
-      .withColumn("bucket", bucket)
-    val probeArr = array((col("bucket") +: (0 until nPlanes)
-      .map(p => expr(s"bucket ^ ${1L << p}"))): _*)
-    val queries = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm").as("q_norm"), explode(probeArr).as("q_probe"))
-    val scored = c.join(broadcast(queries),
-        col("bucket") === col("q_probe") && col("vec_id") =!= col("q_id"))
-      .withColumn("score", dot("emb", "q_emb") / (col("norm") * col("q_norm")))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "score", "rank")
+    val c = vectors(embeddings).withColumn("bucket", bucketExpr(nPlanes))
+    cosineScan(c, querySide(c, nQueries, explode(hammingProbes(nPlanes)).as("q_probe")),
+      col("bucket") === col("q_probe") && col("vec_id") =!= col("q_id"), k)
   }
 
   /** B9 — multi-TABLE LSH: L independent hyperplane sets (salted seeds),
@@ -204,27 +192,18 @@ object SimilarityOps {
     */
   def lshTopKMultiTable(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
                         nPlanes: Int = 8, nTables: Int = 2): DataFrame = {
-    val c = withNorm(embeddings)
-      .select(col("vec_id"), col("emb"), col("norm"))
+    val c = vectors(embeddings)
       .withColumn("buckets",
         array((0 until nTables).map(t => bucketExpr(nPlanes, t)): _*))
     val tb = c.select(col("vec_id"), col("emb"), col("norm"),
       posexplode(col("buckets")).as(Seq("t", "bucket")))
-    val queries = tb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm").as("q_norm"), col("t").as("q_t"), col("bucket").as("q_bucket"))
-    val cand = tb.join(broadcast(queries),
+    val queries = querySide(tb, nQueries, col("t").as("q_t"), col("bucket").as("q_bucket"))
+    cosineRanks(tb.join(broadcast(queries),
         col("t") === col("q_t") && col("bucket") === col("q_bucket") &&
           col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("emb"), col("norm"),
         col("q_emb"), col("q_norm"))
-      .distinct()
-    val scored = cand
-      .withColumn("score", dot("emb", "q_emb") / (col("norm") * col("q_norm")))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "score", "rank")
+      .distinct(), k)
   }
 
   /** Embeddings ∪ exact copies (vec_id+10000 for vec_id % 25 = 0) so the
@@ -264,22 +243,23 @@ object SimilarityOps {
                           maxBucket: Int = DedupOps.defaultMaxBucket,
                           cacheLevel: org.apache.spark.storage.StorageLevel =
                             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    // hot-bucket fuse (VERDICT r10 item 3 — the embedding-homogeneity
-    // hazard the r9 ladder measured): same overflow-keys-only mechanism
-    // as the lexical pair surface ([[graft.ops.BucketCap.capBuckets]]);
-    // a healthy corpus keeps this exact plan unchanged, a flooded bucket
-    // is truncated to its maxBucket smallest vec_ids (deterministic) and
-    // audited by the registered `embedding_bucket_stats` query.
-    // PERSISTED before the fuse (ADVICE r11): capBuckets's eager
-    // overflow pre-pass would otherwise recompute the full
-    // augment+norm+bucket pipeline (a corpus scan with per-plane dot
-    // products) a second time even when healthy — the minhash twin
-    // amortizes its pre-pass through the persisted `sh` cache, and this
-    // projection (vec_id, emb, norm, bucket) is the same narrow shape.
-    // CACHE LIFECYCLE (ADVICE r12) — explicitly the minhash twin's: the
-    // entry cannot be unpersisted here (the returned plan still reads
-    // it, and the eager overflow pre-pass is the only part consumed
-    // inside this call), so the CALLER owns it — Verify/Bench
+    // hot-bucket fuse against embedding homogeneity (a corpus whose
+    // vectors crowd into a few signature buckets turns the pair join
+    // quadratic): same overflow-keys-only mechanism as the lexical pair
+    // surface ([[graft.ops.BucketCap.capBuckets]]); a healthy corpus
+    // keeps this exact plan unchanged, a flooded bucket is truncated to
+    // its maxBucket smallest vec_ids (deterministic) and audited by the
+    // registered `embedding_bucket_stats` query.
+    // PERSISTED before the fuse: capBuckets's eager overflow pre-pass
+    // would otherwise recompute the full augment+norm+bucket pipeline (a
+    // corpus scan with per-plane dot products) a second time even when
+    // healthy — the minhash twin amortizes its pre-pass through the
+    // persisted `sh` cache, and this projection (vec_id, emb, norm,
+    // bucket) is the same narrow shape.
+    // CACHE LIFECYCLE — the minhash twin's: the entry cannot be
+    // unpersisted here (the returned plan still reads it, and the eager
+    // overflow pre-pass is the only part consumed inside this call), so
+    // the CALLER owns it — Verify/Bench
     // clearCache() between queries; a long-lived session passes
     // `cacheLevel = StorageLevel.NONE`-equivalent semantics by calling
     // spark.catalog.clearCache() (or unpersisting via
@@ -339,8 +319,6 @@ object SimilarityOps {
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).cast("long").as("n_pairs"),
         max("score").as("max_score"))
-
-  // ---- DuckDB oracles (lockstep with the ops above) ----
 
   /** Scalar int8-range quantization of the embedding column — the vector
     * STORAGE compression step of an ANN system (a 64-dim float vector
@@ -428,7 +406,7 @@ object SimilarityOps {
     */
   def annProjectRerank(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
                        outDims: Int = 16, shortlist: Int = 20): DataFrame = {
-    val full = withNorm(embeddings).select(col("vec_id"), col("emb"), col("norm"))
+    val full = vectors(embeddings)
     val projected = full
       .withColumn("proj", projExpr(outDims))
       .withColumn("p_norm", sqrt(graft.functions.native.dotFold(col("proj"), col("proj"))))
@@ -443,16 +421,8 @@ object SimilarityOps {
       .withColumn("c_rank", row_number().over(wc))
       .filter(col("c_rank") <= shortlist)
       .select(col("q_id"), col("vec_id"))
-    val qFull = full.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-        col("norm").as("q_norm"))
-    val w = Window.partitionBy("q_id").orderBy(col("score").desc, col("vec_id").asc)
-    full.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(qFull), Seq("q_id"))
-      .withColumn("score", dot("emb", "q_emb") / (col("norm") * col("q_norm")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "score", "rank")
+    cosineRanks(full.join(broadcast(short), Seq("vec_id"))
+      .join(broadcast(querySide(full, nQueries)), Seq("q_id")), k)
   }
 
   /** B9 FLAGSHIP composite — the vector-side ingest pipeline a 100 TB
@@ -498,7 +468,7 @@ object SimilarityOps {
     * tie-breaks) and counting hits is exact integer work; the single
     * division by the query's TRUTH-SET size — min(k, corpus−1), counted,
     * not the constant k, so a corpus smaller than k+1 vectors still
-    * reports a perfect retriever as 1.0 (review-caught) — is the one
+    * reports a perfect retriever as 1.0 — is the one
     * IEEE op, hash-matching DuckDB. The LEFT join keeps 0-recall
     * queries visible (an ANN config that strands a query must not
     * vanish from its own evaluation report).
@@ -512,10 +482,9 @@ object SimilarityOps {
     recallAtK(cosineTopK(embeddings, nQueries, k),
       lshTopK(embeddings, nQueries, k))
 
-  /** Measured recall@k of the MULTI-PROBE LSH path (VERDICT r8 item 2):
-    * same exact brute-force truth side, retrieval side =
-    * [[lshTopKMultiProbe]] (probe the query bucket plus every
-    * hamming-1 neighbor). Probing is a strict superset of probe-1's
+  /** Measured recall@k of the MULTI-PROBE LSH path: same exact
+    * brute-force truth side, retrieval side = [[lshTopKMultiProbe]]
+    * (probe the query bucket plus every hamming-1 neighbor). Probing is a strict superset of probe-1's
     * candidate set, so this recall is ≥ [[annRecall]]'s on the same
     * corpus BY CONSTRUCTION — the driver-tracked number that prices the
     * probes × candidates cost against its recall recovery. */
@@ -524,9 +493,8 @@ object SimilarityOps {
     recallAtK(cosineTopK(embeddings, nQueries, k),
       lshTopKMultiProbe(embeddings, nQueries, k))
 
-  /** Measured recall@k of the IVF-PQ path (VERDICT r8 item 2): truth =
-    * exact cosine top-k over the stored vectors; retrieval =
-    * [[PqOps.annIvfPq]] — cell-pruned ADC scan over PQ codes, the
+  /** Measured recall@k of the IVF-PQ path: truth = exact cosine top-k
+    * over the stored vectors; retrieval = [[PqOps.annIvfPq]] — cell-pruned ADC scan over PQ codes, the
     * layout the 100 TB ANN story actually ships. Unlike the LSH
     * variants this measures BOTH approximation sources at once (cell
     * pruning drops out-of-cell truth; ADC's quantized inner product
@@ -561,9 +529,9 @@ object SimilarityOps {
     recallAtK(cosineTopK(embeddings, nQueries, k),
       annProjectRerank(embeddings, nQueries, k))
 
-  /** Measured recall@1 of the PERSISTED-INDEX incremental ANN path
-    * (VERDICT r12 item 1) — the last retrieval path without a quality
-    * number: truth = the EXACT squared-L2 nearest index vector per delta
+  /** Measured recall@1 of the PERSISTED-INDEX incremental ANN path —
+    * the quality number of the retrieval path that never rereads raw
+    * vectors: truth = the EXACT squared-L2 nearest index vector per delta
     * vector (brute force over raw vectors, the same exhaustive-truth
     * contract as [[graft.ops.DedupOps.dedupRecall]] — an evaluation
     * operator, not a production query); found =
@@ -593,16 +561,16 @@ object SimilarityOps {
     * probe-1 routing (the probe-1 number is chance-level on this
     * near-orthogonal synthetic corpus — see PLANS.md). Candidate set is
     * a strict superset of probe-1's, so this recall dominates it BY
-    * CONSTRUCTION (the Round13 spec asserts it). */
+    * CONSTRUCTION (spec-asserted). */
   def annRecallIncrementalMultiProbe(embeddings: DataFrame, m: Int = 4,
                                      k: Int = 16, nPlanes: Int = 8): DataFrame =
     annRecallIncrementalWith(embeddings, m, k, nPlanes,
       PqOps.annIndexIncrementalMultiProbe(_, _, _, nPlanes))
 
   /** CLUSTERED-geometry recall@1 of the persisted-index incremental
-    * path (VERDICT r13 item 1) — the near-orthogonal synthetic corpus
-    * is the worst case for ANY quantized index (recall ≤ .156 even at
-    * 96 code bits, PLANS.md knob sheet), so this row measures the SAME
+    * path — the near-orthogonal synthetic corpus is the worst case for
+    * ANY quantized index (recall ≤ .156 even at 96 code bits, PLANS.md
+    * knob sheet), so this row measures the SAME
     * shipped pipeline — [[graft.ops.PqOps.annIndex]] + frozen seed
     * codebook + hamming-1 multiprobe routing + ADC scoring, the knob
     * sheet's recipe (multiprobe, m=8/k=64) as defaults — on the
@@ -623,12 +591,12 @@ object SimilarityOps {
     */
   def annRecallIncrementalClustered(embeddings: DataFrame, m: Int = 8,
                                     k: Int = 64, nPlanes: Int = 8): DataFrame = {
-    // Pin the derived fixture ONCE (VERDICT r14 item 3 — the widest
-    // min/median bench spread on the surface): the truth cross-join and
-    // the index/delta/codebook branches otherwise EACH re-derive the
+    // Pin the derived fixture ONCE: the truth cross-join and the
+    // index/delta/codebook branches otherwise EACH re-derive the
     // 64-expression geometry projection from the parquet scan (4+
-    // scans × 64 array exprs × the m=8/k=64 encode behind them), which
-    // is pure recompute noise on a loaded host. Same eager-materialize
+    // scans × 64 array exprs × the m=8/k=64 encode behind them), and
+    // that recompute dominates the query's time and its run-to-run
+    // spread on a loaded host. Same eager-materialize
     // + caller-owns-output lifecycle as retrievalRecall/bm25Prf.
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val geo = clusteredGeometry(embeddings).persist(lvl)
@@ -688,7 +656,7 @@ object SimilarityOps {
     // pick (lexicographic struct ordering; dist is a squared distance,
     // never NaN/-0.0) but aggregates MAP-SIDE: the exchange carries one
     // partial min per (q_id, partition) instead of every candidate pair
-    // — the round-14 shuffle-volume fix for the whole recall family
+    // — the shuffle-volume bound of the whole recall family
     val truth = idx.crossJoin(broadcast(q))
       .withColumn("dist", distT)
       .groupBy("q_id")

@@ -174,14 +174,10 @@ object TextOps {
     // ReuseExchange instead of a second explode + countDistinct expand
     val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
     val n = documents.select(count(lit(1)).as("n_docs"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("doc_id")
-      .orderBy(col("score").desc, col("word").asc)
-    tf.join(broadcast(df), "word")
-      .crossJoin(broadcast(n))
-      .withColumn("score", (col("tf") * col("n_docs")).cast("double") / col("df"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranking.topK(tf.join(broadcast(df), "word")
+        .crossJoin(broadcast(n))
+        .withColumn("score", (col("tf") * col("n_docs")).cast("double") / col("df")),
+        "doc_id", Seq(col("score").desc, col("word").asc), k)
       .select("doc_id", "word", "tf", "df", "score", "rank")
   }
 
@@ -264,7 +260,7 @@ object TextOps {
     * against — the standard percent_rank convention); route sources
     * too small to rank through the global gate instead.
     *
-    * Scale shape (VERDICT r9 "what's wrong" #1 fix): the obvious plan —
+    * Scale shape: the obvious plan —
     * `row_number() OVER (PARTITION BY source ORDER BY score)` — puts
     * EVERY row of a source through ONE task, so a dominant source (often
     * >50% of a crawl corpus) becomes a single-task sort at 100 TB: the
@@ -724,7 +720,7 @@ object TextOps {
   }
 
   /** SHARDED sequence packing — the parallelism-cap fix the 100× ladder
-    * priced (round 8): [[packSequences]] windows per `source`, so a
+    * priced: [[packSequences]] windows per `source`, so a
     * 5-source corpus runs its prefix sums through 5 tasks no matter how
     * large it grows (linear work through a constant-width pipe). Here
     * the window key is (source, shard) with shard = doc_id mod `shards`
@@ -767,7 +763,7 @@ object TextOps {
         (col("cum_excl") % capacity).as("pack_offset"))
   }
 
-  /** DENSE pack-id renumber (VERDICT r8 item 6) — the registered proof
+  /** DENSE pack-id renumber — the registered proof
     * of [[packSequencesSharded]]'s doc claim that a loader insisting on
     * dense ids renumbers with a METADATA pass, not a data pass: the
     * dense_rank input is `distinct (source, pack_id)` — O(packs) rows
@@ -817,8 +813,8 @@ object TextOps {
       if (rates.isEmpty)
         (substring(col("source"), 4, 10).cast("long") % 4 + 1) * 64
       else
-        // round-half-up to the 1/256 grid (not truncate — ADVICE r5:
-        // truncation silently floored e.g. 0.003 to zero keeps)
+        // round-half-up to the 1/256 grid, not truncate: truncation
+        // silently floors e.g. 0.003 to zero keeps
         floor(coalesce(element_at(typedLit(rates), col("source")),
           lit(defaultRate)) * 256.0 + 0.5).cast("long")
     val bucket = conv(substring(md5(col("doc_id").cast("string")), 3, 2), 16, 10)
@@ -830,7 +826,7 @@ object TextOps {
         sum(col("n_chars")).as("chars_kept"))
   }
 
-  /** Source mixing WITH UP-SAMPLING (VERDICT r5 item 5) — real data
+  /** Source mixing WITH UP-SAMPLING — real data
     * mixing replicates scarce sources (rate > 1), not just thins abundant
     * ones. A document yields `floor(rate)` whole copies plus one extra
     * copy iff its content-addressed bucket (same second-md5-byte as
@@ -923,7 +919,7 @@ object TextOps {
     // non-null filter must apply here too: a corpus of ONLY null-source
     // docs has empty `counts`, and without the filter those docs would
     // fall through sourceMix's defaultRate=1.0 and be KEPT while the
-    // oracle's rates inner join returns empty (ADVICE r6).
+    // oracle's rates inner join returns empty.
     if (counts.isEmpty)
       return sourceMix(documents.filter(col("source").isNotNull),
         Map("__none__" -> 1.0))
@@ -938,7 +934,7 @@ object TextOps {
     sourceMix(documents.filter(col("source").isNotNull), rates)
   }
 
-  /** Pack-to-loader manifest (VERDICT r5 item 8): the artifact a training
+  /** Pack-to-loader manifest: the artifact a training
     * loader actually consumes — one row per pack with its ordered
     * document span list. Built ON TOP of [[packSequences]] (same
     * straddle semantics: a document stays whole in the pack where it
@@ -1101,13 +1097,10 @@ object TextOps {
     */
   def stratifiedSample(documents: DataFrame, k: Int = 20,
                        seed: String = "42"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val key = md5(concat(col("doc_id").cast("string"), lit(":s"), lit(seed)))
-    val w = Window.partitionBy("source").orderBy("sample_key", "doc_id")
-    documents
-      .select(col("doc_id"), col("source"), col("n_chars"), key.as("sample_key"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranking.topK(documents
+        .select(col("doc_id"), col("source"), col("n_chars"), key.as("sample_key")),
+        "source", Seq(col("sample_key"), col("doc_id")), k)
       .select(col("source"), col("rank"), col("doc_id"), col("n_chars"))
   }
 

@@ -14,10 +14,9 @@ import org.apache.spark.sql.types.LongType
   */
 object Tables {
 
-  /** Explicit per-table load spec (ADVICE r15: name the partition key
-    * instead of relying on the leading-column convention — a future
-    * table whose first column is low-cardinality would silently
-    * collapse downstream parallelism):
+  /** Explicit per-table load spec. The partition key is named, never
+    * taken from the leading column: a table whose first column is
+    * low-cardinality would silently collapse downstream parallelism.
     *  - `key`: the table's (near-)unique key, the hash-partition
     *    column of [[parallelize]];
     *  - `alwaysParallel`: the table feeds HEAVY per-row operators
@@ -43,10 +42,11 @@ object Tables {
     * `spark.sql.legacy.parquet.nanosAsLong` ([[graft.GraftSession.defaults]]). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     parallelize(spark.read.parquet(s"$sfDir/$name.parquet"),
-      loadSpecs.get(name))
+      loadSpecs.get(name), parallelizeMinBytes)
 
-  /** Byte floor under which the load repartition is SKIPPED. The floor
-    * is in PLANNER-ESTIMATED bytes, not raw file length: [[parallelize]]
+  /** The loaders' byte floor under which the load repartition is
+    * SKIPPED ([[parallelize]]'s `minBytes`). The floor is in
+    * PLANNER-ESTIMATED bytes, not raw file length: [[parallelize]]
     * compares it with the analyzed plan's `sizeInBytes`, which for a
     * parquet relation is the files' length scaled by
     * `spark.sql.sources.fileCompressionFactor` (1.0 by default), so a
@@ -55,9 +55,9 @@ object Tables {
     * gains nothing from 32-way stages — the forced exchange just
     * charges every consumer ~defaultParallelism near-empty tasks per
     * stage, which at bench scale is pure scheduling overhead (181/227
-    * queries measured FASTER at 8 cores than 32 in round 15's scaling
-    * run). Parameterised for other deployments; at 100 TB the whole
-    * gate is moot — every table's scan already yields more splits than
+    * queries measured FASTER at 8 cores than 32 in a full-registry
+    * scaling run). Parameterised for other deployments; at 100 TB the
+    * whole gate is moot — every table's scan already yields more splits than
     * defaultParallelism, so [[parallelize]] is a no-op there with or
     * without this floor. Read from `SPARK_GRAFT_PARALLELIZE_MIN_BYTES`
     * once, on first use. */
@@ -78,12 +78,13 @@ object Tables {
     * single-row-group file can't be split by maxPartitionBytes).
     * Repartition to cluster parallelism, gated so it is a NO-OP at
     * real scale where the scan already yields >= defaultParallelism
-    * splits — and (round 16) gated by INPUT BYTES, not partition count
-    * alone: see [[parallelizeMinBytes]]. Filters/pruning still push
-    * through Repartition.
+    * splits — and gated by INPUT BYTES, not partition count alone: a
+    * table under `minBytes` planner-estimated bytes (the loaders pass
+    * [[parallelizeMinBytes]]) stays as scanned unless its spec is
+    * `alwaysParallel`. Filters/pruning still push through Repartition.
     *
-    * HASH on the spec'd key column, not round-robin (round 15): every
-    * keyless repartition(n) pays a local sort of its whole input first
+    * HASH on the spec'd key column, not round-robin: every keyless
+    * repartition(n) pays a local sort of its whole input first
     * (spark.sql.execution.sortBeforeRepartition, on by default since
     * SPARK-23207, so retried tasks reproduce the same row→partition
     * assignment — guide §2.5) — a per-load tax on every one of the
@@ -97,16 +98,14 @@ object Tables {
     * invariant by the repo-wide content-addressed determinism
     * discipline, so results are unchanged (oracle gate re-run green).
     */
-  def parallelize(df: DataFrame): DataFrame = parallelize(df, None)
-
-  def parallelize(df: DataFrame, spec: Option[LoadSpec]): DataFrame = {
+  def parallelize(df: DataFrame, spec: Option[LoadSpec], minBytes: Long): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= target) return df
     // planner-sized input bytes (what broadcast decisions use): for a
     // bare parquet relation this is the file length — a driver-side
     // metadata read, no scan — times fileCompressionFactor
     val bytes = df.queryExecution.analyzed.stats.sizeInBytes
-    if (!spec.exists(_.alwaysParallel) && bytes < parallelizeMinBytes) df
+    if (!spec.exists(_.alwaysParallel) && bytes < minBytes) df
     else df.repartition(target, col(spec.map(_.key).getOrElse(df.columns.head)))
   }
 

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 /** Round-3 additions: relational breadth (Q3/Q4/Q6 flavors) and the
   * native event-time window operators. Value checks on synthetic inputs
   * plus physical-plan shape assertions — the plan IS the contract at
-  * scale (semi-join must not fan out, global top-k must not global-sort,
-  * Q6 predicates must reach the scan).
+  * scale (semi-join must not fan out, global top-k must not global-sort).
   */
 class Round3AdditionsSpec extends SparkSpec {
   import spark.implicits._
@@ -175,37 +174,5 @@ class Round3AdditionsSpec extends SparkSpec {
       (1L, 0L, 0L), (1L, 1L, 2L), (1L, 2L, 1L),
       (2L, 0L, 0L), (2L, 1L, -1L), (2L, 2L, 1L),
       (3L, 0L, 0L), (3L, 1L, -1L), (3L, 2L, -1L)))
-  }
-
-  test("Q6 predicates push into the parquet scan") {
-    val p = plan(RelationalOps.revenueChange(
-      Tables.lineitem(spark, "/root/testdata/sf0.001")))
-    assert(p.contains("PushedFilters: [IsNotNull(l_shipdate)"))
-    // Column pruning: the scan reads EXACTLY the 4 referenced columns.
-    // (Round 16: sf0.001's lineitem is under the loader's size gate —
-    // Tables.parallelizeMinBytes — so the load repartition is skipped
-    // and the round-15 cost of the hash-partition key surviving
-    // pruning no longer applies at this scale; above the gate the key
-    // column still rides the scan by construction.)
-    assert(p.contains("ReadSchema: struct<l_quantity:double," +
-      "l_extendedprice:double,l_discount:double,l_shipdate:ti"))
-  }
-
-  test("loader size gate: KB-scale tables skip the repartition, tables " +
-    "above the gate (and always-parallel text/vector tables) get it") {
-    val target = spark.sparkContext.defaultParallelism
-    // region (1.9 KB) is under parallelizeMinBytes -> single scan split
-    assert(Tables.region(spark, "/root/testdata/sf0.001")
-      .rdd.getNumPartitions < target)
-    // lineitem at sf0.01 (~1 MB) is above the gate -> repartitioned on
-    // its spec'd key
-    val li = Tables.lineitem(spark, "/root/testdata/sf0.01")
-    assert(li.rdd.getNumPartitions == target)
-    assert(li.queryExecution.executedPlan.toString
-      .contains("hashpartitioning(l_orderkey"))
-    // documents is alwaysParallel (heavy per-row operators) even at KB
-    // scale
-    assert(Tables.documents(spark, "/root/testdata/sf0.001")
-      .rdd.getNumPartitions == target)
   }
 }
