@@ -1,11 +1,15 @@
 package graft
 
-/** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
-  * prints ONE JSON line. Failures are reported per query in an `errors`
-  * field (never silently folded into the total) and excluded from the
-  * timed total. A trivial warmup action absorbs
-  * session/codegen startup so the first query isn't charged ~10s of JVM
-  * warmup.
+import graft.Json.{quote => q}
+import java.nio.file.{Files, Paths, StandardCopyOption => Copy, StandardOpenOption => Open}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Batch benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
+  * through [[QueryRun]] and prints one JSON line per query, a full summary
+  * line and a compact final line. Failures are reported per query in an
+  * `errors` field (never silently folded into the total) and excluded from
+  * the timed total. [[QueryRun.warmUp]] absorbs session/codegen startup so
+  * the first query isn't charged ~10s of JVM warmup.
   */
 object Bench {
 
@@ -21,137 +25,79 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = GraftSession.sfDir
-    // MEDIAN-OF-3 per query: the bench host is co-tenant contended (2-4×
-    // single-run variance observed across runs; identical plans measured
-    // 1.7 s and 102 s) — one run measures the neighbors, the median of
-    // three measures the engine. Each rep is a full cold run (cache
-    // cleared between reps), so the median is a cold-query time, not a
-    // cache readback.
     val reps = parseReps(sys.env.get("SPARK_GRAFT_BENCH_REPS"))
     val only = parseOnly(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession.local(GraftSession.cpus)
-
-    // JVM/codegen warmup + Hadoop/parquet reader init (otherwise the first
-    // query is charged several seconds of one-time setup): exercise the
-    // hot code paths — shuffle, explode+regex split, hash agg, md5 — on
-    // tiny data before the clock starts.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.range(5000)
-      .selectExpr("explode(split(lower(concat('a b,c ', id)), '\\\\W+')) AS w")
-      .groupBy("w").count().selectExpr("max(md5(w))").collect()
-    spark.range(5000)  // JSON codec paths (Jackson init, JsonToStructs)
-      .selectExpr("id", """concat('{"a":', id, '}') AS v""")
-      .selectExpr("from_json(v, 'a BIGINT') AS s", "to_json(struct(id)) AS j")
-      .filter("s.a IS NOT NULL").count()
-    try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
-
-    import Json.{quote => q}
-
-    val timings = collection.mutable.LinkedHashMap.empty[String, Double]
-    // Per-query per-REP times: every rep is in the machine record, so a
-    // min-of-N arbitration across runs is recomputed from the record,
-    // not asserted in prose.
-    val repTimes = collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // Per-query OUTPUT rows: regressions normalize by data touched
-    // instead of re-arbitrating co-tenant noise on every run.
-    val rowCounts = collection.mutable.LinkedHashMap.empty[String, Long]
-    val errors = collection.mutable.LinkedHashMap.empty[String, String]
+    QueryRun.warmUp(spark, sfDir)
     // Sorted order: stable attribution across runs (Map iteration order
     // shifts as entries are added, moving the noise-prone early slots).
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      val ts = collection.mutable.ArrayBuffer.empty[Double]
-      try {
-        var r = 0
-        while (r < reps) {
-          val t0 = System.nanoTime()
-          rowCounts(name) = fn(spark, sfDir).count()
-          ts += (System.nanoTime() - t0) / 1e9
-          // Untimed: drop persist()ed intermediates between reps/queries so
-          // cached blocks don't accumulate and each rep is independent.
-          spark.catalog.clearCache()
-          r += 1
-        }
-        timings(name) = ts.sorted.apply(reps / 2)
-        repTimes(name) = ts.toSeq
-        // Incremental record: one JSON line per query as its median lands,
-        // so a timed-out or killed run still leaves parseable per-query
-        // timings in its output tail instead of only Spark startup noise.
-        // The final summary line below is unchanged — consumers that only
-        // read the last line still work. `reps_sec` carries every rep so
-        // min-of-N arbitration is recomputable from any surviving line.
-        println(s"""{"metric":"query","name":${q(name)},"sec":${timings(name)},"min":${ts.min},"reps_sec":${ts.mkString("[", ",", "]")},"rows":${rowCounts(name)}}""")
-      } catch {
-        case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          println(s"""{"metric":"query","name":${q(name)},"error":${q(errors(name))}}""")
-          spark.catalog.clearCache()
+    val (fullLine, compactLine) = measure(spark, sfDir, queries, reps)(println)
+    // FULL runs only, so a SPARK_GRAFT_BENCH_ONLY re-run never clobbers the
+    // full-surface record; a failed write is reported, never fatal.
+    def artifact(write: => Unit): Unit = if (only.isEmpty) try write catch { case e: Throwable =>
+      println(s"""{"metric":"artifact_error","error":${q(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}""")
+    }
+    val dir = Paths.get(sys.props.getOrElse("user.dir", "."))
+    // Cross-run HISTORY, append-only: min-of-N-runs arbitration reads
+    // BENCH_RUNS.jsonl (tools/bench_arbitrate.py renders it).
+    artifact(Files.writeString(dir.resolve("BENCH_RUNS.jsonl"), fullLine + "\n",
+      Open.CREATE, Open.APPEND))
+    // BENCH_SUMMARY.json, because a wrapper's footer can displace a stdout
+    // tail. ATOMIC_MOVE: without it Files.move may fall back to copy+delete
+    // and a concurrent reader could see a torn file.
+    artifact(Files.move(Files.writeString(dir.resolve(".BENCH_SUMMARY.json.tmp"), fullLine + "\n"),
+      dir.resolve("BENCH_SUMMARY.json"), Copy.REPLACE_EXISTING, Copy.ATOMIC_MOVE))
+    println(compactLine)
+    spark.stop()
+  }
+
+  /** Runs each query `reps` times; prints through `out` each query's line
+    * as its median lands (so a killed run still leaves parseable timings),
+    * then the full summary line; returns that and the compact final line.
+    * MEDIAN-OF-`reps`: the bench host is co-tenant contended (identical
+    * plans measured 1.7 s and 102 s), so the median measures the engine.
+    * A rep's `sec` is [[QueryRun.sec]], build + action of a cold run; the
+    * runner's cache clearing and listener drain are untimed. `reps_sec`
+    * keeps every rep for min-of-N arbitration, `rows` lets a regression
+    * normalize by data touched. A query's first failed rep is its error. */
+  def measure(spark: SparkSession, sfDir: String,
+              queries: Seq[(String, (SparkSession, String) => DataFrame)], reps: Int)(
+      out: String => Unit): (String, String) = {
+    val timings = collection.mutable.LinkedHashMap.empty[String, Double]
+    val repTimes = collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val rowCounts = collection.mutable.LinkedHashMap.empty[String, Long]
+    val errors = collection.mutable.LinkedHashMap.empty[String, String]
+    queries.foreach { case (name, fn) =>
+      val runs = collection.mutable.ArrayBuffer.empty[QueryRun[Long]]
+      while (runs.size < reps && runs.forall(_.error.isEmpty))
+        runs += QueryRun(spark, name, fn(spark, sfDir))(_.count())
+      runs.last.outcome match {
+        case Left(e) =>
+          errors(name) = e.take(200)
+          out(s"""{"metric":"query","name":${q(name)},"error":${q(errors(name))}}""")
+        case Right(rows) =>
+          val ts = runs.map(_.sec).toSeq
+          timings(name) = ts.sorted.apply(reps / 2)
+          repTimes(name) = ts
+          rowCounts(name) = rows
+          out(s"""{"metric":"query","name":${q(name)},"sec":${timings(name)},"min":${ts.min},"reps_sec":${ts.mkString("[", ",", "]")},"rows":$rows}""")
       }
     }
-    val qs = timings.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val rts = repTimes.map { case (k, v) =>
-      s"${q(k)}:${v.mkString("[", ",", "]")}" }.mkString("{", ",", "}")
-    val rs = rowCounts.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    def obj[V](m: Iterable[(String, V)])(v: V => String) =
+      m.map { case (k, x) => s"${q(k)}:${v(x)}" }.mkString("{", ",", "}")
     val total = timings.values.sum
     // surface_hash keys cross-run arbitration: runs are comparable ONLY
-    // when they timed the same query set, and a changed set changes the
-    // hash.
-    val surfaceHash = graft.functions.Hashing.md5Hex(
-      timings.keys.toSeq.sorted.mkString(","))
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","ts_ms":${System.currentTimeMillis()},"surface_hash":${q(surfaceHash)},"queries":$qs,"queries_reps":$rts,"rows":$rs,"errors":$es,"n_ok":${timings.size},"n_err":${errors.size},"reps":$reps,"sf":"$sfDir"}"""
-    println(fullLine)
-    // Cross-run HISTORY: every FULL run appends its complete record to
-    // BENCH_RUNS.jsonl, so the min-of-N-runs arbitration that justifies
-    // a perf gate is machine-readable across runs
-    // (tools/bench_arbitrate.py renders it).
-    // Append-only — a run never erases another run's evidence.
-    if (only.isEmpty) try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(
-          sys.props.getOrElse("user.dir", "."), "BENCH_RUNS.jsonl"),
-        fullLine + "\n",
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable =>
-      println(s"""{"metric":"artifact_error","error":${q(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}""")
-    }
-    // COMMITTED ARTIFACT: a stdout-tail parse reads only the final
-    // captured line, which a wrapper's footer (sbt's `[success]`, say)
-    // can displace, so the complete summary record — same JSON object as the full stdout
-    // line above, including the whole per-query map — is ALSO written to
-    // repo-root BENCH_SUMMARY.json on every run. Atomic tmp+rename so a
-    // concurrent reader never sees a torn file; failures are non-fatal
-    // (the bench numbers themselves must never be lost to an EROFS).
-    // FULL runs only: a SPARK_GRAFT_BENCH_ONLY arbitration re-run must
-    // not clobber the full-surface record with a partial one.
-    if (only.isEmpty) try {
-      val dir = new java.io.File(sys.props.getOrElse("user.dir", "."))
-      val tmp = new java.io.File(dir, ".BENCH_SUMMARY.json.tmp")
-      val out = new java.io.File(dir, "BENCH_SUMMARY.json")
-      val w = new java.io.PrintWriter(tmp, "UTF-8")
-      try w.println(fullLine) finally w.close()
-      // ATOMIC_MOVE, not just REPLACE: without it Files.move may fall
-      // back to copy+delete (cross-mount / no-rename filesystems) and a
-      // concurrent reader could see a torn file — the exact guarantee
-      // the artifact exists for. Platforms that can't rename atomically
-      // fail loudly into the catch below instead of lying.
-      java.nio.file.Files.move(tmp.toPath, out.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch { case e: Throwable =>
-      println(s"""{"metric":"artifact_error","error":${q(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}}""")
-    }
-    // FINAL line is COMPACT (<1500 chars) so a tail-window capture always
-    // ends with a parseable record (the full summary above runs to ~8 KB,
-    // past a 2000-char tail window). Same contract shape — metric/value/unit/queries/sf
-    // — but `queries` carries only the slowest 5; the full per-query map is
-    // in the line above and in the incremental per-query lines.
-    val slowest = timings.toSeq.sortBy(-_._2).take(5)
-      .map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$slowest,"queries_truncated":true,"n_ok":${timings.size},"n_err":${errors.size},"reps":$reps,"sf":"$sfDir"}""")
-    spark.stop()
+    // when they timed the same query set.
+    val surfaceHash = graft.functions.Hashing.md5Hex(timings.keys.toSeq.sorted.mkString(","))
+    val counts = s""""n_ok":${timings.size},"n_err":${errors.size},"reps":$reps,"sf":${q(sfDir)}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","ts_ms":${System.currentTimeMillis()},"surface_hash":${q(surfaceHash)},"queries":${obj(timings)(_.toString)},"queries_reps":${obj(repTimes)(_.mkString("[", ",", "]"))},"rows":${obj(rowCounts)(_.toString)},"errors":${obj(errors)(q)},$counts}"""
+    out(fullLine)
+    // The FINAL line is COMPACT (<1500 chars) so a tail-window capture
+    // always ends with a parseable record: the same shape, but `queries`
+    // carries only the slowest 5.
+    val slowest = obj(timings.toSeq.sortBy(-_._2).take(5))(_.toString)
+    (fullLine, s"""{"metric":"total","value":$total,"unit":"sec","queries":$slowest,"queries_truncated":true,$counts}""")
   }
 }

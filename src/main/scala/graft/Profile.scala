@@ -7,15 +7,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Developer profiler over the query registry: every subcommand reaches
-  * queries only through `SparkEntry.queries(name)(spark, sfDir)`. Run:
+  * queries only through `SparkEntry.queries(name)(spark, sfDir)`, and runs
+  * them only through [[QueryRun]]. Run:
   * SPARK_GRAFT_SF_DIR=... sbt "runMain graft.Profile <subcommand> ..."
   */
 object Profile {
   val usage: String =
     """usage: graft.Profile <subcommand>
       |  explain <q...>          print each query's formatted physical plan
-      |  time <q...> [reps]      time each query reps times (3), cache cleared between reps
-      |  jobstats <q...>         jobs, stages, tasks, task time and shuffle bytes of a warm run
+      |  time <q...> [reps]      each query's time, jobs, tasks, shuffle and cache, per rep (3)
       |  count-prune             flag registered queries whose plan loses joins under count()
       |  audit                   scan pruning, joins, exchanges and codegen spans per query
       |  bpe-merges [n]          bpeTrainAuto's n merges (16) on the documents, as a Scala literal
@@ -25,7 +25,7 @@ object Profile {
     val rest = args.toSeq.drop(1)
     def isCount(s: String) = s.toIntOption.exists(_ > 0)
     val valid = args.headOption.exists {
-      case "explain" | "jobstats" => rest.nonEmpty
+      case "explain" => rest.nonEmpty
       case "time" => rest.nonEmpty && !isCount(rest.head)
       case "count-prune" | "audit" => rest.isEmpty
       case "bpe-merges" => rest.forall(isCount) && rest.size <= 1
@@ -36,21 +36,33 @@ object Profile {
 
     val sfDir = GraftSession.sfDir
     val spark = GraftSession.local(GraftSession.cpus)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    QueryRun.warmUp(spark, sfDir)
+    val registry = SparkEntry.queries.keys.toSeq.sorted
     try args.head match {
-      case "explain" => rest.foreach { name =>
-        println(s"===== $name =====")
-        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
-      }
+      case "explain" => rest.foreach(name => run(spark, sfDir, name) { df =>
+        println(s"===== $name ====="); df.explain("formatted") }((_, _) => ()))
       case "time" =>
         val (names, reps) =
           if (rest.size > 1 && isCount(rest.last)) (rest.init, rest.last.toInt)
           else (rest, 3)
         time(spark, sfDir, names, reps)
-      case "jobstats" => jobstats(spark, sfDir, rest)
-      case "count-prune" => countPrune(spark, sfDir)
-      case "audit" => audit(spark, sfDir)
+      case "count-prune" =>
+        var flagged = 0
+        registry.foreach(run(spark, sfDir, _)(countJoins) { case (r, (full, cnt)) =>
+          if (cnt < full) {
+            flagged += 1
+            println(s"[count-prune] ${r.name}: joins $full -> $cnt under count()")
+          }
+        })
+        println(s"[count-prune] flagged=$flagged")
+      case "audit" => registry.foreach(run(spark, sfDir, _) { df =>
+        // Execute this queryExecution before reading its plan: under AQE the
+        // pre-execution plan has no WholeStageCodegen stages, so codegen
+        // coverage and runtime join demotions show only in the final plan
+        // (df.count() would wrap the plan in a new, un-finalized one).
+        df.queryExecution.toRdd.foreachPartition((_: Iterator[_]) => ())
+        df.queryExecution.executedPlan.toString
+      }((r, plan) => audit(r.name, plan)))
       case "bpe-merges" =>
         val n = rest.headOption.fold(16)(_.toInt)
         val merges = BpeOps.bpeTrainAuto(Tables.documents(spark, sfDir), n)
@@ -67,16 +79,28 @@ object Profile {
     } finally spark.stop()
   }
 
-  /** Times each query `reps` times against `dir`, dropping cached blocks
-    * between reps as Bench does. */
+  /** Runs query `name` against `dir` through [[QueryRun]], then hands the
+    * action's result to `show`, or prints the query's error. */
+  private def run[A](spark: SparkSession, dir: String, name: String)(action: DataFrame => A)(
+      show: (QueryRun[A], A) => Unit): Unit = {
+    val r = QueryRun(spark, name, SparkEntry.queries(name)(spark, dir))(action)
+    r.outcome.fold(e => println(s"[profile] $name error: $e"), show(r, _))
+  }
+
+  /** Runs each query `reps` times against `dir` and prints every rep's
+    * [[QueryRun]]: its wall time and build share, the jobs the build ran,
+    * the action's jobs, stages, tasks, Σ task time and shuffle write, the
+    * cached state it left, and its 8 longest stages. Wall − Σtask-time /
+    * cores is scheduling and planning overhead. */
   def time(spark: SparkSession, dir: String, names: Seq[String], reps: Int): Unit =
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = fn(spark, dir).count()
-        println(f"[profile] ${s"$name#$i"}%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
-        spark.catalog.clearCache()
+    for (name <- names; i <- 1 to reps) run(spark, dir, name)(_.count()) { (r, rows) =>
+      println(f"[profile] ${s"$name#$i"}%-28s ${r.sec}%8.2f s  rows=$rows " +
+        f"build=${r.buildNs / 1e9}%.2fs buildJobs=${r.buildJobs} jobs=${r.jobs} " +
+        f"stages=${r.stages} tasks=${r.tasks} taskSum=${r.taskMs / 1e3}%.2fs " +
+        f"shufWr=${r.shuffleWriteBytes / 1e6}%.2fMB cached=${r.persistedRdds} rdds/${r.cachedPlans} plans")
+      r.longestStages.foreach { s =>
+        println(f"[profile]   stage ${s.id}%4d run=${s.runMs / 1e3}%7.2fs " +
+          f"deser=${s.deserializeMs / 1e3}%6.2fs gc=${s.gcMs / 1e3}%5.2fs tasks=${s.tasks}%4d  ${s.name.take(70)}")
       }
     }
 
@@ -128,104 +152,29 @@ object Profile {
         .write.parquet(s"$out/$name.parquet")
     }
 
-  /** Splits each query's warm wall-clock into jobs, stages, tasks, summed
-    * task time and shuffle bytes, plus its 8 longest stages: wall −
-    * Σtask-time/cores is scheduling and planning overhead. Rep 1 warms
-    * codegen and caches; rep 2 is measured. */
-  private def jobstats(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
-    import org.apache.spark.scheduler._
-    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-    import scala.jdk.CollectionConverters._
-    val jobs = new AtomicInteger; val stages = new AtomicInteger
-    val tasks = new AtomicInteger; val taskMs = new AtomicLong
-    val shufWr = new AtomicLong
-    val stageAgg = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Int, Long, Long)]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        val m = s.stageInfo.taskMetrics
-        shufWr.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        stageAgg.put(s.stageInfo.stageId,
-          (s.stageInfo.name.takeWhile(_ != '\n').take(70),
-            m.executorRunTime, s.stageInfo.numTasks,
-            m.executorDeserializeTime, m.jvmGCTime))
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
-      }
-    }
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).count(); spark.catalog.clearCache()
-      jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); shufWr.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      // drain the listener bus so every event of the run is counted
-      org.apache.spark.sql.graftshim.ColumnBridge
-        .drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"[jobstats] $name%-34s wall=$wall%7.2fs jobs=${jobs.get}%3d " +
-        f"stages=${stages.get}%4d tasks=${tasks.get}%5d " +
-        f"taskSum=${taskMs.get / 1e3}%8.2fs shufWr=${shufWr.get / 1e6}%8.2fMB rows=$n")
-      stageAgg.asScala.toSeq.sortBy(-_._2._2).take(8).foreach {
-        case (sid, (nm, run, nt, deser, gc)) =>
-          println(f"[jobstats]   stage $sid%4d run=${run / 1e3}%7.2fs " +
-            f"deser=${deser / 1e3}%6.2fs gc=${gc / 1e3}%5.2fs tasks=$nt%4d  $nm")
-      }
-      stageAgg.clear()
-    }
-  }
-
-  /** Bench-integrity audit: flags every registered query whose optimized
-    * plan loses joins under `count()` (Bench's action). A left join
-    * against an aggregate keyed on the join key with no payload
-    * referenced is a no-op to Catalyst, so a bare count would time only
-    * the surviving prefix; a flagged query needs a no-op guard that
-    * references the join output (see SparkEntry's substring_dedup). */
-  private def countPrune(spark: SparkSession, sfDir: String): Unit = {
+  /** A query's joins in its optimized plan, and under `count()` (Bench's
+    * action). count-prune flags a query that loses joins under `count()`:
+    * a left join against an aggregate keyed on the join key with no
+    * payload referenced is a no-op to Catalyst, so a bare count would
+    * time only the surviving prefix; a flagged query needs a no-op guard
+    * that references the join output (see SparkEntry's substring_dedup). */
+  private def countJoins(df: DataFrame): (Int, Int) = {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
-    def joins(p: LogicalPlan): Int =
-      p.collectWithSubqueries { case j: Join => j }.size
-    var flagged = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df = fn(spark, sfDir)
-      val full = joins(df.queryExecution.optimizedPlan)
-      val cnt = joins(df.groupBy().count().queryExecution.optimizedPlan)
-      if (cnt < full) {
-        flagged += 1
-        println(s"[count-prune] $name: joins $full -> $cnt under count()")
-      }
-    }
-    println(s"[count-prune] flagged=$flagged")
+    def joins(p: LogicalPlan): Int = p.collectWithSubqueries { case j: Join => j }.size
+    (joins(df.queryExecution.optimizedPlan), joins(df.groupBy().count().queryExecution.optimizedPlan))
   }
 
-  /** Plan-health audit: for each registered query, its scans' read
-    * schemas, join strategies, hash exchanges and codegen spans. */
-  private def audit(spark: SparkSession, sfDir: String): Unit =
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      // Execute this queryExecution before reading its plan: under AQE the
-      // pre-execution plan has no WholeStageCodegen stages, so codegen
-      // coverage and runtime join demotions show only in the final plan
-      // (df.count() would wrap the plan in a new, un-finalized one).
-      val df = fn(spark, sfDir)
-      try df.queryExecution.toRdd.foreachPartition(_ => ())
-      catch { case _: Throwable => () }
-      val plan = df.queryExecution.executedPlan.toString
-      val schemas = plan.linesIterator
-        .flatMap(l => "ReadSchema: struct<([^>]*)".r.findFirstMatchIn(l).map(_.group(1)))
-        .map(s => s"${s.split(",").length} cols: ${s.take(70)}").toSeq
-      val joins = "(\\w*(?:Join|Cartesian)\\w*)".r.findAllIn(plan).toSeq
-      val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
-      val wsc = "\\*\\(\\d+\\)".r.findAllIn(plan).toSet.size
-      println(s"[audit] $name")
-      schemas.foreach(s => println(s"[audit]   scan  $s"))
-      if (joins.nonEmpty) println(s"[audit]   joins ${joins.groupBy(identity).view.mapValues(_.size).toMap}")
-      println(s"[audit]   exchanges=$exchanges codegenSpans=$wsc")
-    }
+  /** Plan-health audit of one executed plan: its scans' read schemas,
+    * join strategies, hash exchanges and codegen spans. */
+  private def audit(name: String, plan: String): Unit = {
+    println(s"[audit] $name")
+    plan.linesIterator
+      .flatMap(l => "ReadSchema: struct<([^>]*)".r.findFirstMatchIn(l).map(_.group(1)))
+      .foreach(s => println(s"[audit]   scan  ${s.split(",").length} cols: ${s.take(70)}"))
+    val joins = "(\\w*(?:Join|Cartesian)\\w*)".r.findAllIn(plan).toSeq
+    val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
+    val wsc = "\\*\\(\\d+\\)".r.findAllIn(plan).toSet.size
+    if (joins.nonEmpty) println(s"[audit]   joins ${joins.groupBy(identity).view.mapValues(_.size).toMap}")
+    println(s"[audit]   exchanges=$exchanges codegenSpans=$wsc")
+  }
 }

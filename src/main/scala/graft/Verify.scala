@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,39 +16,29 @@ object Verify {
     val only = parseOnly(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
     val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    // Recursive delete for FAILED queries: `mode("overwrite")` only
-    // replaces the dump when the write SUCCEEDS — a query that throws
-    // leaves the PREVIOUS run's parquet in place, and the driver compare
-    // would silently grade stale results (observed: an OOM'd query
-    // "mismatching" an updated oracle by comparing last run's rows).
-    // Failure must leave NO dump so the compare reports the query missing.
-    def rmTree(p: java.nio.file.Path): Unit = {
-      if (Files.exists(p)) {
-        val s = Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.delete(f))
-        finally s.close()
-      }
-    }
-    val selected = only match {
-      case Some(set) => SparkEntry.queries.filter { case (n, _) => set(n) }
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        rmTree(Paths.get(s"$outDir/$name"))
-      }
-      // Operators that persist() intermediates (minhashPairs,
-      // ngramJaccardPairs) leave cached blocks behind; drop them so a
-      // 46-query session doesn't accumulate until LRU eviction.
-      spark.catalog.clearCache()
-    }
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, fn) => dump(spark, sfDir, outDir, name, fn) }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes query `name`'s result to `outDir/name` through [[QueryRun]].
+    * A failed query leaves NO dump, so the compare reports it missing:
+    * `mode("overwrite")` replaces a dump only when the write succeeds, and
+    * a query that throws would otherwise leave the previous run's parquet
+    * for the compare to grade (an OOM'd query once "mismatched" an updated
+    * oracle by comparing last run's rows). */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, name: String,
+           fn: (SparkSession, String) => DataFrame): QueryRun[Unit] = {
+    val run = QueryRun(spark, name, fn(spark, sfDir))(
+      _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+    run.error.foreach { e =>
+      System.err.println(s"[verify] $name failed: $e")
+      graft.ops.FixtureDirs.rmTree(Paths.get(s"$outDir/$name"))
+    }
+    run
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * `hilbertn(array<long>) -> long` (Skilling d-D transform; AIP Conf.
   * Proc. 707, 2004).
   *
-  * Same disease as [[SimHash60]], caught by the 100× ladder (round 8):
+  * Same disease as [[SimHash60]], which the 100× ladder exposes:
   * the per-level `withColumn` chain that derived the curve declaratively
   * inlines under CollapseProject into an expression tree that grows
   * multiplicatively per level — at bits=16 the optimizer/codegen phase

@@ -236,7 +236,7 @@ case class DotFold(left: Expression, right: Expression)
   * any element is null. The HOF form interprets two lambdas and builds
   * an intermediate array PER PAIR in the channel's candidate loop
   * (queries × corpus rows); this is one primitive loop inside
-  * whole-stage codegen (round 15, guide §1.2 per-task work).
+  * whole-stage codegen, so the per-task work is one pass per pair.
   */
 case class DotFoldLong(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -470,8 +470,8 @@ object PqEncodeKernel {
   * v[d] = count of non-empty tokens with hash60(token) % dims == d —
   * exactly the dense form [[graft.ops.RetrievalOps.denseVectors]] used
   * to derive in TWO shuffles (explode → count by (doc, dim) → re-group
-  * by doc → densify). One map-side pass per row instead (round 15,
-  * guide §2.4): at 100 TB the per-document vector never shuffles at
+  * by doc → densify). One map-side pass per row instead: at 100 TB
+  * the per-document vector never shuffles at
   * all until the consumer needs it to. Returns NULL when the row has
   * no valid (non-empty, non-null) token — those docs produced no
   * hashedTf rows, so the exploded form emitted no vector for them;

@@ -67,7 +67,7 @@ object BpeOps {
     * it collects the vocabulary-sized histogram once when it fits under
     * a size bound and trains driver-side ([[bpeTrainLocalFast]] — identical
     * merges, pinned by parity specs), falling back to this loop only when the
-    * vocabulary itself is too large to collect (VERDICT r12 item 2; the
+    * vocabulary itself is too large to collect (the
     * [[graft.ops.DedupOps.sizedClusterLabels]] regime idiom).
     */
   def bpeTrain(documents: DataFrame, nMerges: Int): Seq[(String, String)] = {
@@ -75,8 +75,8 @@ object BpeOps {
     // localCheckpoint, NOT persist: a persist keeps the full Catalyst
     // plan, so each round's rewrite stacks one more mergePair fold onto
     // the lineage — planning cost grows linearly per round and the
-    // accumulated tree OOMs the driver near merge ~600 (caught by the
-    // scale-bpe price ladder, round 13). Eager localCheckpoint cuts the
+    // accumulated tree OOMs the driver near merge ~600 (the scale-bpe
+    // price ladder shows it). Eager localCheckpoint cuts the
     // plan to a constant-size LogicalRDD every round. Caveat (the
     // standard localCheckpoint contract): blocks are MEMORY_AND_DISK on
     // the executors with lineage gone, so an executor loss aborts the
@@ -155,9 +155,8 @@ object BpeOps {
       y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** INCREMENTAL-pair-maintenance training — the standard tokenizer-
-    * trainer structure (named in the round-14 PLANS price sheet, built
-    * here): instead of recounting every word's adjacent pairs each
-    * merge, maintain (pair → weighted count) and (pair → word set)
+    * trainer structure: instead of recounting every word's adjacent
+    * pairs each merge, maintain (pair → weighted count) and (pair → word set)
     * maps, rewrite ONLY the words that contain the chosen pair, and
     * apply the count deltas their rewrite implies. Per merge the work
     * is O(Σ length of touched words + log-heap), not O(corpus
@@ -257,7 +256,7 @@ object BpeOps {
     merges.toSeq
   }
 
-  /** Size-bounded REGIME-SELECTED training (VERDICT r12 item 2) — the
+  /** Size-bounded REGIME-SELECTED training — the
     * production entry point. The word histogram is vocabulary-sized
     * metadata (millions of rows at web scale, not billions of docs):
     * count it once (an eager pre-pass over the persisted histogram —
@@ -340,13 +339,12 @@ object BpeOps {
       .select(col("word"), col("freq"), size(col("syms")).cast("long").as("n_syms"),
         concat_ws("\u001f", col("syms")).as("segmented"))
 
-  /** The train->apply COMPOSITE a tokenizer pipeline actually runs
-    * (VERDICT r13 item 2): train the merge list with the
-    * regime-selected [[bpeTrainAuto]] on the corpus itself, then
-    * segment the corpus vocabulary with the TRAINED list — the two
-    * halves the frozen-list query exercises separately, proven
-    * consistent end-to-end on the corpus the driver checks every
-    * round. Training sees the full histogram (including any
+  /** The train->apply COMPOSITE a tokenizer pipeline actually runs:
+    * train the merge list with the regime-selected [[bpeTrainAuto]] on
+    * the corpus itself, then segment the corpus vocabulary with the
+    * TRAINED list — the two halves the frozen-list query exercises
+    * separately, proven consistent end-to-end on the corpus the oracle
+    * gate checks. Training sees the full histogram (including any
     * U+001F-bearing words); only the OUTPUT rows apply the
     * separator-encoding exclusion, same as [[bpeSegmentFrozen]].
     */
@@ -370,10 +368,10 @@ object BpeOps {
     } finally wf.unpersist()
   }
 
-  /** [[bpeTrainAuto]]'s nMerges=16 output on the driver's sf0.01
-    * documents corpus (`Profile bpe-merges` provenance run, round 14) —
+  /** [[bpeTrainAuto]]'s nMerges=16 output on the sf0.01
+    * documents corpus (as `Profile bpe-merges` prints it) —
     * frozen into the `bpe_train_segment` oracle so the gate re-proves
-    * every round that LIVE training reproduces this exact sequence and
+    * on every check that LIVE training reproduces this exact sequence and
     * that segmentation applied to it matches the independent
     * replace-chain formulation. A drift in either half (training
     * tie-break, histogram filter, merge fold) breaks the hash.

@@ -5,15 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Shared hot-bucket fuse for bucketed candidate-pair surfaces
   * (lexical banded-LSH [[DedupOps.minhashPairs]] and embedding LSH
-  * [[SimilarityOps.embeddingNearDupLsh]] — one implementation, both
-  * surfaces, per VERDICT r10 items 1+3).
+  * [[SimilarityOps.embeddingNearDupLsh]] — one implementation for
+  * both surfaces).
   *
   * A bucket of B rows feeds B²/2 candidate pairs into the self-join, so
   * a single degenerate bucket (homogenized corpus, constant vectors)
-  * melts an executor. The round-10 fuse ranked EVERY bucket with an
-  * unconditional `row_number` window — a full sort-shuffle paid by every
-  * healthy consumer (measured 1.6–5× on the pair family). This is the
-  * corrected shape:
+  * melts an executor. The fuse must not rank EVERY bucket with an
+  * unconditional `row_number` window — that is a full sort-shuffle paid
+  * by every healthy consumer (measured 1.6–5× on the pair family). Its
+  * shape:
   *
   *  1. A bounded EAGER pre-pass derives bucket sizes with
   *     `groupBy(keys).count` — full map-side partial aggregation, so the

@@ -179,9 +179,9 @@ object DedupOps {
     // MEMORY_AND_DISK spills rather than evicts under pressure; at 100 TB
     // the shingle arrays are O(corpus) so pass DISK_ONLY (or
     // StorageLevel.NONE semantics via recompute) and let the scan win.
-    // Caller contract: long-lived sessions must drop the cache after
-    // consuming the result (Verify/Bench call spark.catalog.clearCache()
-    // between queries).
+    // Caller contract: the caller owns the cache and drops it after
+    // consuming the result; for registry queries `graft.QueryRun` is the
+    // one place that counts and clears it after each run.
     // The cache holds exactly what the branches read — (doc_id, sig,
     // shingle_set); carrying text/toks/raw shingles through persist
     // dominates the materialization cost.
@@ -319,8 +319,9 @@ object DedupOps {
     * materialization is not wasted work), then broadcast ONLY when under
     * the bound; past it the join falls back to a plain shuffle join,
     * which is the correct plan when labels are corpus-scale. Labels are
-    * persisted here under the same caller clearCache contract as the
-    * pair surfaces' intermediates. */
+    * persisted here, and the caller owns them as it owns the pair
+    * surfaces' intermediates (`graft.QueryRun` counts and clears them
+    * after a registry query). */
   private[graft] def sizedClusterLabels(clusters: DataFrame,
                                         broadcastMaxLabels: Long): DataFrame = {
     val cl = clusters.persist(StorageLevel.MEMORY_AND_DISK)
@@ -418,7 +419,8 @@ object DedupOps {
     // df-cap via a windowed count: shares the shingle hash partitioning
     // with the self-join below (no extra shuffle beyond the sort).
     // Cached: three plan branches (both join sides + sizes) reference it;
-    // Verify/Bench clearCache() between queries per the caller contract.
+    // the caller owns it (`graft.QueryRun` counts and clears it after a
+    // registry query).
     val rare = inv
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("shingle")))
@@ -1010,8 +1012,8 @@ object DedupOps {
     * one branch-free hash probe per gram against a broadcast bitset, and
     * it runs before any shuffle. The benchmark digest set is persisted:
     * it is consumed twice (bloom build — an eager action at plan-build
-    * time — then the confirm join); Verify/Bench clearCache() between
-    * queries per the caller contract.
+    * time — then the confirm join); the caller owns it, and
+    * `graft.QueryRun` counts and clears it after a registry query.
     */
   def bloomDecontaminate(documents: DataFrame, n: Int = 8,
                          fpp: Double = 0.03): DataFrame = {
@@ -1323,8 +1325,8 @@ object DedupOps {
     */
   def dedupRecall(corpus: DataFrame, minJaccard: Double = 0.5): DataFrame = {
     // shingle ONCE for both pipelines (tokenizing and shingling is the
-    // dominant pass); cached under the same caller clearCache contract
-    // as the pipelines' own intermediates.
+    // dominant pass); cached and owned by the caller like the pipelines'
+    // own intermediates (`graft.QueryRun` counts and clears them).
     // Coalesce to cluster parallelism before pinning: the augmented
     // corpus unions 3 branches, so unpinned it materializes at 3× the
     // branch partition count and both pipelines' references pay 3× the

@@ -3,15 +3,15 @@ package graft.ops
 /** Pid-scoped on-disk FIXTURE trees for the registered queries that
   * exercise a real write→read round trip (the `multimodal_manifest`
   * binaryFile ingest; the `optimize_roundtrip` clustered rewrite).
-  * Factored out of MultimodalOps in round 9 so every roundtrip query
-  * shares ONE lifecycle contract instead of re-growing its own:
+  * Every roundtrip query shares this ONE lifecycle contract instead of
+  * growing its own:
   *
   *  - one tree per (prefix, scale-factor dir, PROCESS): sf keeps Verify
   *    (sf0.01) and Bench (sf0.1) apart; the pid keeps a solo
   *    arbitration re-run from deleting the tree a concurrently-running
-  *    full bench is mid-scan on (review-caught in round 8 — the rebuild
-  *    sweep would race the other process's file listing into a spurious
-  *    red). Within one process the rebuild is sequential and safe.
+  *    full bench is mid-scan on (a shared tree's rebuild sweep would
+  *    race the other process's file listing into a spurious red).
+  *    Within one process the rebuild is sequential and safe.
   *  - LIFECYCLE: pid-suffixed trees would otherwise accumulate one per
   *    JVM forever — this process's trees are removed by a shutdown
   *    hook, and each call sweeps any sibling `<prefix>_*_p<pid>` tree

@@ -101,7 +101,7 @@ object LayoutOps {
     require(!df.columns.contains(out),
       s"withHilbert output column collides with an input column: $out")
     // Native Catalyst expression, not a per-level withColumn chain
-    // (round 8, caught by the 100× ladder): the declarative chain inlined
+    // (the 100× ladder shows why): the declarative chain inlined
     // under CollapseProject into a multiplicatively-growing tree — at
     // bits=16 the optimizer/codegen phase ran for MINUTES whenever the
     // column was actually EVALUATED (clustered writes; guarded counts).
@@ -109,15 +109,15 @@ object LayoutOps {
     // recurrence as an O(bits) per-row loop inside whole-stage codegen;
     // outputs are bit-identical, so the generated CTE oracle and the
     // LayoutOpsSpec grid proofs are unchanged. Out-of-range coordinates
-    // still fail loudly from the kernel (ADVICE r6: silent high-bit
-    // truncation would degrade clustering locality invisibly); NULL
+    // still fail loudly from the kernel (silent high-bit truncation
+    // would degrade clustering locality invisibly); NULL
     // coordinates still yield a NULL index.
     df.withColumn(out, graft.functions.hilbert.index2(
       xCol.cast("long"), yCol.cast("long"), bits))
   }
 
-  /** d-dimensional Morton (Z-curve) interleave (VERDICT r6 item 5 —
-    * production OPTIMIZE ZORDER takes 3-4 columns): bit i of dimension j
+  /** d-dimensional Morton (Z-curve) interleave (production OPTIMIZE
+    * ZORDER takes 3-4 columns): bit i of dimension j
     * lands at position d·i + j, the direct generalization of the 2-D
     * [[mortonCode]] (which this reproduces bit-for-bit at d=2). Disjoint
     * bit targets, so the accumulation stays a plain exact-integer sum.
@@ -190,7 +190,7 @@ object LayoutOps {
   /** d-dimensional Hilbert index via Skilling's transform (John
     * Skilling, "Programming the Hilbert curve", AIP Conf. Proc. 707,
     * 2004 — the public d-dimensional algorithm behind every production
-    * multi-column Hilbert layout; VERDICT r6 item 5). Three fixed-shape
+    * multi-column Hilbert layout). Three fixed-shape
     * phases, all exact integer CASE/xor/and/shift — bitwise
     * cross-engine:
     *
@@ -329,7 +329,7 @@ object LayoutOps {
     nBins
   }
 
-  /** ONE-CALL table OPTIMIZE (VERDICT r7 item 5): compact small files
+  /** ONE-CALL table OPTIMIZE: compact small files
     * AND re-cluster on the curve key in a SINGLE rewrite — the
     * maintenance pass a lakehouse runs as `OPTIMIZE t ZORDER BY (...)`.
     * Composition of the engine's three layout tools:
@@ -366,7 +366,7 @@ object LayoutOps {
   }
 
   /** DETERMINISTIC clustered write — the exact-boundary twin of
-    * [[writeClustered]] (VERDICT r8 item 1). `repartitionByRange`
+    * [[writeClustered]]. `repartitionByRange`
     * SAMPLES the curve key to pick range bounds, so the per-file row
     * assignment varies run to run (the RangePartitioner seed folds in
     * the RDD id); that is fine for production layout but makes the
@@ -442,12 +442,12 @@ object LayoutOps {
     nBins
   }
 
-  /** WRITE-PATH ROUND TRIP (VERDICT r8 item 1) — the registered query
-    * that finally puts the engine's write side under the driver's hash
-    * gate every round (the Hilbert CollapseProject hang hid in exactly
-    * this class for four rounds because Bench's count() column-pruned
-    * the curve and no registered query ever READ an optimized tree
-    * back). End to end: curve-key the documents table (8-bit Morton
+  /** WRITE-PATH ROUND TRIP — the registered query that puts the
+    * engine's write side under the oracle hash gate (a write-path defect
+    * such as the Hilbert CollapseProject hang stays hidden otherwise:
+    * Bench's count() column-prunes the curve, and no other registered
+    * query READs an optimized tree back). End to end: curve-key the
+    * documents table (8-bit Morton
     * over (doc_id mod 256, n_chars mod 256) — exact integer, oracle
     * expression shared with [[zorderLayout]]'s), OPTIMIZE it into a
     * pid-scoped fixture tree via [[optimizeTableExact]] (planner-sized

@@ -105,8 +105,9 @@ object SemanticOps {
     // Persisted: the ranked corpus feeds BOTH sides of the within-cluster
     // self-join AND the final anti-join — without it the scan + assignment
     // + rank window re-derive 3× (8 parquet scans observed). Same caller
-    // contract as DedupOps.minhashPairs: Verify/Bench clearCache() between
-    // queries; long-lived sessions unpersist via spark.catalog.
+    // contract as DedupOps.minhashPairs: the caller owns the cache
+    // (`graft.QueryRun` counts and clears it after a registry query), and
+    // long-lived sessions unpersist via spark.catalog.
     val ranked = labeledCorpus(embeddings, k)
       .withColumn("prio", row_number().over(w))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -506,14 +507,15 @@ object SemanticOps {
     * raw distribution derives from it by a second dims-sized aggregate,
     * so the explode+hash map stage does not run twice.
     *
-    * CACHE-LIFETIME CONTRACT (ADVICE r6): this method persists an
-    * intermediate that it cannot unpersist itself (the result is lazy;
-    * dropping the cache before the caller materializes it would re-run
-    * the tokenize stage twice and defeat the persist). Callers that
-    * invoke this repeatedly in a long-lived session must either
-    * `spark.catalog.clearCache()` after materializing each result (the
-    * Verify/Bench harness contract) or use [[dsirScoresWithHandle]] and
-    * unpersist the returned handle themselves.
+    * CACHE-LIFETIME CONTRACT: this method persists an intermediate that
+    * it cannot unpersist itself (the result is lazy; dropping the cache
+    * before the caller materializes it would re-run the tokenize stage
+    * twice and defeat the persist). Callers that invoke this repeatedly
+    * in a long-lived session must either clear the cache after
+    * materializing each result (for a registry query `graft.QueryRun`,
+    * the one place that counts and clears cached state, does this) or use
+    * [[dsirScoresWithHandle]] and unpersist the returned handle
+    * themselves.
     */
   def dsirScores(raw: DataFrame, target: DataFrame, dims: Int = 4096): DataFrame =
     dsirScoresWithHandle(raw, target, dims)._1
@@ -609,7 +611,7 @@ object SemanticOps {
     * window per (anchor, positive). Output: (anchor_id, positive_id,
     * negative_id, jaccard).
     *
-    * DROP CONTRACT (review finding, round 14): a verified
+    * DROP CONTRACT: a verified
     * (anchor, positive) pair is SILENTLY ABSENT from the output when
     * the anchor's routed bucket holds no eligible negative (every
     * candidate in the bucket is the anchor, the positive, or a
@@ -628,7 +630,7 @@ object SemanticOps {
     * comparable. Size `buckets` to the corpus instead; the coverage
     * row is the guard.)
     *
-    * LIFECYCLE (ADVICE r15): this method EAGERLY EXECUTES (the pair
+    * LIFECYCLE: this method EAGERLY EXECUTES (the pair
     * surface and the returned frame are materialized with count()
     * inside the call — plan-only consumers pay full execution at call
     * time) and returns a PERSISTED DataFrame the CALLER owns and must
@@ -636,8 +638,8 @@ object SemanticOps {
     * [[DedupOps.dedupIncremental]].
     */
   def tripletMining(documents: DataFrame, buckets: Int = 64): DataFrame = {
-    // PIN the banded pair surface (round 15, guide §5 caching-when-
-    // reused): [[tripletsFromPairs]] references `pairs` THREE times
+    // PIN the banded pair surface (cached because reused):
+    // [[tripletsFromPairs]] references `pairs` THREE times
     // (anchor list + both directions of the near-dup exclusion), and
     // unpinned each reference re-ran the full candidate self-join +
     // Jaccard verify (~3× the dominant cost; 1456 tasks measured at

@@ -259,10 +259,10 @@ object SimilarityOps {
     // CACHE LIFECYCLE — the minhash twin's: the entry cannot be
     // unpersisted here (the returned plan still reads it, and the eager
     // overflow pre-pass is the only part consumed inside this call), so
-    // the CALLER owns it — Verify/Bench
-    // clearCache() between queries; a long-lived session passes
-    // `cacheLevel = StorageLevel.NONE`-equivalent semantics by calling
-    // spark.catalog.clearCache() (or unpersisting via
+    // the CALLER owns it. For a registry query `graft.QueryRun`, the one
+    // place that counts and clears cached state, drops it after the run;
+    // a long-lived session gets `StorageLevel.NONE`-equivalent semantics
+    // by calling spark.catalog.clearCache() (or unpersisting via
     // spark.sharedState.cacheManager) after materializing the pairs.
     val proj = withNorm(augmentedEmbeddings(embeddings))
       .select(col("vec_id"), col("emb"), col("norm"))

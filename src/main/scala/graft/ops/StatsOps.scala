@@ -304,7 +304,7 @@ object StatsOps {
   def chiSquareContrib(pA: Column, pB: Column): Column =
     (pA - pB) * (pA - pB) / ((pA + pB) / lit(2.0))
 
-  /** EQUI-DEPTH drift check (VERDICT r7 item 6): [[driftCheck]]'s
+  /** EQUI-DEPTH drift check: [[driftCheck]]'s
     * fixed-width buckets under-resolve heavy-tailed domains — one fat
     * bucket swallows the tail and the χ² term goes blind to movement
     * inside it. This variant derives the bucket grid from the POOLED
@@ -405,8 +405,8 @@ object StatsOps {
     * counts are near-equal rather than exactly equal — the honest
     * semantics at 100 TB. Output: per-bin count and value span.
     *
-    * REGIME SELECTION (VERDICT r7 item 1 — the
-    * `nearDupClusters(driverMaxEdges)` cutover idiom): the boundary
+    * REGIME SELECTION (the `nearDupClusters(driverMaxEdges)` cutover
+    * idiom): the boundary
     * derivation is picked at plan-build time from ONE cheap pre-pass
     * (`count` + `approx_count_distinct`, a single scan collected as a
     * bounded driver scalar — the same collect contract as the ANN query

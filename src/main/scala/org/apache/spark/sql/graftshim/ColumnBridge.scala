@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * Spark-private API: to build and register the native expressions in
   * graft.functions, to wrap already-computed Catalyst rows as a
   * DataFrame (the payments fan-out's batch pin), to drain the
-  * listener bus, and to find the active SparkContext.
+  * listener bus, to count cached plans, and to find the active
+  * SparkContext.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -36,11 +37,17 @@ object ColumnBridge {
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** Block until the async listener bus has delivered every queued event
-    * (`listenerBus` is private[spark]) — the deterministic drain the
-    * profiler's per-op shuffle-byte attribution needs; a fixed sleep can
-    * under-wait on a loaded host and bleed one op's stage metrics into
+    * (`listenerBus` is private[spark]) — the deterministic drain
+    * `graft.QueryRun` needs before it reads its counters; a fixed sleep can
+    * under-wait on a loaded host and bleed one query's stage metrics into
     * the next.
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The `CacheManager` entries of `spark`'s shared state
+    * (`numCachedEntries` is private[sql]). */
+  def cachedPlans(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }

@@ -1,82 +1,17 @@
 package graft
 
-import graft.ops.{DedupOps, RelationalOps}
+import graft.ops.RelationalOps
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-5 additions: incremental dedup-against-index guarantees and the
-  * Catalyst decorrelation plan shapes (Q21/Q2/Q20 families).
+/** Round-5 additions: text operators and the Catalyst decorrelation plan
+  * shapes (Q21/Q2/Q20 families).
   */
 class Round5AdditionsSpec extends SparkSpec {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
-
-  // Ten-token texts so every doc carries 8 three-gram shingles.
-  private val corpusRows = Seq(
-    (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-    (2L, "one two three four five six seven eight nine ten"))
-  private val freshText = "completely different words entirely novel content nothing shared here at"
-
-  test("dedupIncremental flags exact copies from index and delta, keeps fresh docs") {
-    val corpus = corpusRows.toDF("doc_id", "text")
-    val index = DedupOps.signatureIndex(corpus)
-    val delta = Seq(
-      (10L, corpusRows.head._2),  // exact copy of index doc 1
-      (11L, freshText),           // fresh: survives
-      (12L, freshText)            // exact copy of EARLIER DELTA doc 11
-    ).toDF("doc_id", "text")
-    val got = DedupOps.dedupIncremental(index, delta).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-    assert(got == Map(
-      10L -> ((1L, true)),    // matched against the index, never re-shingled
-      11L -> ((-1L, false)),  // first occurrence survives
-      12L -> ((11L, true))),  // matched against the earlier delta doc
-      s"got $got")
-  }
-
-  test("dedupIncremental labels with the smallest matching doc id across index and delta") {
-    val corpus = corpusRows.toDF("doc_id", "text")
-    val index = DedupOps.signatureIndex(corpus)
-    // 20 duplicates doc 2 (index) AND doc 15 (delta, arrives earlier by id):
-    // min(2, 15) = 2 must win.
-    val delta = Seq((15L, corpusRows(1)._2), (20L, corpusRows(1)._2))
-      .toDF("doc_id", "text")
-    val got = DedupOps.dedupIncremental(index, delta).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(15L -> 2L, 20L -> 2L), s"got $got")
-  }
-
-  test("dedupIncremental rejects an index that still carries text (re-shingling impossible)") {
-    val corpus = corpusRows.toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      DedupOps.dedupIncremental(corpus, corpus)
-    }
-    assert(e.getMessage.contains("signatureIndex"))
-  }
-
-  test("dedupIncremental reads the persisted index, not corpus text: one signature derivation, index scan is (doc_id, sig)") {
-    val dir = tempDir("sigidx").toString
-    val corpus = DedupOps.augmented(Tables.documents(spark, sfDir))
-    DedupOps.signatureIndex(corpus.filter(col("doc_id") < 100000))
-      .write.mode("overwrite").parquet(dir)
-    val index = spark.read.parquet(dir)
-    val out = DedupOps.dedupIncremental(index, corpus.filter(col("doc_id") >= 100000))
-    val n = out.count()
-    assert(n > 0)
-    val plan = out.queryExecution.executedPlan.toString
-    // The index parquet scan must read exactly (doc_id, sig) — if the
-    // corpus were being re-shingled, a text column would be read here.
-    val idxScans = plan.linesIterator.filter(l =>
-      l.contains("parquet") && l.contains(dir.split('/').last)).toList
-    assert(idxScans.nonEmpty, s"no index scan found in plan:\n$plan")
-    assert(idxScans.forall(l => !l.contains("text")),
-      s"index scan must not read text:\n${idxScans.mkString("\n")}")
-    // Signature derivation (shingle → minhash_sig) exists ONLY on the
-    // delta branch: the index branch carries none.
-    spark.catalog.clearCache()
-  }
 
   test("sourceMix honors an explicit rates map with default fallback") {
     val docs = Tables.documents(spark, sfDir)
@@ -161,39 +96,6 @@ class Round5AdditionsSpec extends SparkSpec {
         assert(last._3 + last._4 == toks.length.toLong, s"doc $id tail uncovered")
       }
     }
-  }
-
-  test("dedupIncremental property: exact copies are always flagged, distinct docs never (seeded)") {
-    val rnd = new scala.util.Random(23)
-    val corpus = (0 until 50).map { i =>
-      (i.toLong, (0 until 15).map(_ => s"tok${rnd.nextInt(100000)}").mkString(" "))
-    }
-    val index = DedupOps.signatureIndex(corpus.toDF("doc_id", "text"))
-    // delta: 20 exact copies of random corpus docs + 10 fresh random docs
-    val copies = (0 until 20).map { j =>
-      val src = corpus(rnd.nextInt(corpus.size))
-      (1000L + j, src._2, src._1)
-    }
-    val fresh = (0 until 10).map { j =>
-      (2000L + j, (0 until 15).map(_ => s"new${rnd.nextInt(100000)}").mkString(" "))
-    }
-    val delta = (copies.map(c => (c._1, c._2)) ++ fresh).toDF("doc_id", "text")
-    val got = DedupOps.dedupIncremental(index, delta).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-    copies.foreach { case (id, text, srcId) =>
-      assert(got(id)._2, s"exact copy $id of $srcId must be flagged")
-      // dup_of is the smallest matching doc — at most srcId (corpus dups exist)
-      assert(got(id)._1 <= srcId, s"dup_of must be <= source id for $id")
-      // and the matched doc must carry identical text
-      val matchedText = corpus.find(_._1 == got(id)._1).map(_._2)
-      assert(matchedText.contains(text) ||
-        copies.exists(c => c._1 == got(id)._1 && c._2 == text),
-        s"dup_of for $id must point at identical text")
-    }
-    fresh.foreach { case (id, _) =>
-      assert(!got(id)._2, s"fresh doc $id must survive")
-    }
-    spark.catalog.clearCache()
   }
 
   test("unigramScores is partitioning-invariant") {
